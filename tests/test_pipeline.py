@@ -2,8 +2,10 @@
 Spark twin of the reference's integration spec
 (UCHistoricDataImporterSpec.kt:57-238)."""
 
+import base64
 import json
 import os
+import re
 import zlib
 
 import pytest
@@ -282,6 +284,17 @@ class TestPipelineSpineReviewFixes:
         out = encrypt_body(df, data_key_b64=key_b64)
         plan = out._jdf.queryExecution().toString()
         assert key_b64 not in plan
+        # the job's path: the key rides the normalize UDF's closure
+        lines = spark.createDataFrame(
+            [("db", "c", 1, 1, '{"_id": "a"}')],
+            "db string, collection string, file_number int, line_no int, "
+            "raw_json string",
+        )
+        res = P.process_lines(
+            lines, P.PipelineConfig(encrypt=True, data_key_b64=key_b64)
+        )
+        for frame in (res.records, res.putable, res.counts):
+            assert key_b64 not in frame._jdf.queryExecution().toString()
         with pytest.raises(ValueError, match="exactly one"):
             encrypt_body(df)
         with pytest.raises(ValueError, match="exactly one"):
@@ -415,3 +428,121 @@ class TestPipelineSpineReviewFixes:
         assert len(rows) == 1
         assert rows[0]["records_total"] == 2
         assert rows[0]["parse_errors"] == 1
+
+
+KEY_B64 = base64.b64encode(bytes(range(32))).decode()
+
+
+def _cfg(**kw) -> PipelineConfig:
+    return PipelineConfig(
+        skip_earlier_than=SKIP_EARLIER_THAN, skip_later_than=SKIP_LATER_THAN, **kw
+    )
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestPythonBoundaries:
+    """The job crosses into Python once per record for normalize +
+    encrypt, the counts never re-enter Python, and the F5 report is one
+    aggregate over the normalized frame (no join-back)."""
+
+    def test_counts_plan_joins_only_the_snapshot_marker(self, spark, dump_dir, tmp_path):
+        lines = read_jsonl_lines(spark, dump_dir)
+        first = process_lines(lines, _cfg(skip_existing=False))
+        snap = str(tmp_path / "snapshot")
+        first.putable.select("table", "key_hex", "version").write.parquet(snap)
+        existing = spark.read.parquet(snap)
+        rerun = process_lines(lines, _cfg(), existing=existing)
+        assert re.findall(r"\w*Join\b", _physical_plan(first.counts)) == []
+        assert len(re.findall(r"\w*Join\b", _physical_plan(rerun.counts))) == 1
+        totals = rerun.counts.agg(
+            F.sum("put_count").alias("put"), F.sum("filtered_exists").alias("exists")
+        ).first()
+        assert (totals["put"], totals["exists"]) == (0, 3 * N_PUTABLE)
+        # encrypt + snapshot: every branch holds exactly one Python eval,
+        # the fused normalize + encrypt UDF
+        enc = process_lines(
+            lines, _cfg(encrypt=True, data_key_b64=KEY_B64), existing=existing
+        )
+        for frame in (enc.records, enc.putable, enc.manifest, enc.counts):
+            plan = _physical_plan(frame)
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "BatchEvalPython" not in plan
+
+    @pytest.mark.parametrize("arrow", ["true", "false"])
+    def test_run_counts_lineage_has_no_python_rdd(self, spark, dump_dir, tmp_path, arrow):
+        """run() hands back a driver-local counts frame; built from a
+        row list it was a Python RDD that started a worker per
+        partition on every scan. Arrow off is how a bare session (the
+        verify drive's) runs."""
+        lines = read_jsonl_lines(spark, dump_dir)
+        conf = "spark.sql.execution.arrow.pyspark.enabled"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, arrow)
+        try:
+            result = run(
+                spark, lines, _cfg(skip_existing=False),
+                kv_path=str(tmp_path / "kv"), manifest_dir=str(tmp_path / "mf"),
+            )
+        finally:
+            spark.conf.set(conf, saved)
+        lineage = result.counts._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+        expected = process_lines(lines, _cfg(skip_existing=False)).counts
+        assert sorted(result.counts.collect()) == sorted(expected.collect())
+
+    def test_kv_cells_decrypt_to_their_record_json(self, spark, dump_dir, tmp_path):
+        """Every cell run() writes decrypts, with the run key and its own
+        IV, to the normalized body of its row; IVs are per record."""
+        from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+        lines = read_jsonl_lines(spark, dump_dir)
+        kv = str(tmp_path / "kv")
+        run(
+            spark, lines,
+            _cfg(skip_existing=False, encrypt=True, data_key_b64=KEY_B64,
+                 key_encryption_key_id="kek", encrypted_encryption_key="E"),
+            kv_path=kv,
+        )
+        bodies: dict[tuple, set] = {}
+        plain = process_lines(lines, _cfg(skip_existing=False)).putable
+        for r in plain.select("table", "key_hex", "version", "record_json").collect():
+            bodies.setdefault((r["table"], r["key_hex"], r["version"]), set()).add(
+                r["record_json"]
+            )
+        cells = spark.read.parquet(kv).collect()
+        assert len(cells) == 3 * N_PUTABLE
+        key, ivs = base64.b64decode(KEY_B64), set()
+        for c in cells:
+            message = json.loads(c["body"])["message"]
+            assert message["encryption"]["keyEncryptionKeyId"] == "kek"
+            iv = base64.b64decode(message["encryption"]["initialisationVector"])
+            ivs.add(iv)
+            dec = Cipher(algorithms.AES(key), modes.CTR(iv)).decryptor()
+            text = dec.update(base64.b64decode(message["dbObject"])) + dec.finalize()
+            assert text.decode("utf-8") in bodies[(c["table"], c["key_hex"], c["version"])]
+        assert len(ivs) == len(cells)
+
+    def test_keyed_normalize_schema_and_invalid_rows(self, spark, dump_dir):
+        from uc_historic_data_importer_spark.operators.transforms import (
+            KEYED_NORMALIZED_SCHEMA,
+            NORMALIZED_SCHEMA,
+            normalize_records,
+        )
+
+        lines = read_jsonl_lines(spark, dump_dir)
+        # the catalog / streaming path: no key, the unchanged schema
+        assert normalize_records(lines).schema["norm"].dataType == NORMALIZED_SCHEMA
+        assert "db_object" not in NORMALIZED_SCHEMA.names
+        keyed = normalize_records(lines, data_key_b64=KEY_B64)
+        assert keyed.schema["norm"].dataType == KEYED_NORMALIZED_SCHEMA
+        assert KEYED_NORMALIZED_SCHEMA.names == NORMALIZED_SCHEMA.names + ["db_object", "iv"]
+        rows = keyed.select("norm.valid", "norm.db_object", "norm.iv").collect()
+        invalid = [r for r in rows if not r["valid"]]
+        assert len(invalid) == 3 * (N_VARIANTS - N_VALID)
+        assert all(r["db_object"] is None and r["iv"] is None for r in invalid)
+        valid = [r for r in rows if r["valid"]]
+        assert len(valid) == 3 * N_VALID
+        assert all(r["db_object"] and len(base64.b64decode(r["iv"])) == 16 for r in valid)

@@ -318,6 +318,76 @@ class TestCryptoSource:
             read_encrypted_jsonl(pairs, {("other", "X"): "irrelevant"}).collect()
 
 
+def _write_encrypted_dump(tree: str, stem: str, lines: list[str], key: bytes) -> None:
+    iv = os.urandom(16)
+    payload = _encrypt(gzip.compress(("\n".join(lines) + "\n").encode()), key, iv)
+    _write(os.path.join(tree, f"{stem}.json.gz.enc"), payload)
+    with open(os.path.join(tree, f"{stem}.json.encryption.json"), "w") as fh:
+        json.dump({
+            "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
+            "initialisationVector": base64.b64encode(iv).decode(),
+        }, fh)
+
+
+class TestPythonBoundaries:
+    """The source layer starts Python workers only where it decrypts:
+    the listing never does, and each decrypt task reads one file."""
+
+    @pytest.mark.parametrize("arrow", ["true", "false"])
+    def test_listing_lineage_has_no_python_rdd(self, spark, tree, arrow):
+        """A row-list listing is a Python RDD: every rescan (pairing, the
+        missing-sidecar check, counts, the sidecar join) started a Python
+        worker per partition. pandas input would only help with Arrow
+        on; the Arrow-table listing holds in both session modes."""
+        _write(os.path.join(tree, "db.c.0001.json.gz.enc"), b"abc")
+        _write(os.path.join(tree, "db.c.0001.json.encryption.json"), b"{}")
+        conf = "spark.sql.execution.arrow.pyspark.enabled"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, arrow)
+        try:
+            listing = L.list_local_objects(spark, tree)
+            empty = L.list_objects(spark, L.LocalFsLister(tree), ["absent/"])
+        finally:
+            spark.conf.set(conf, saved)
+        for df in (listing, empty):
+            lineage = df._jdf.queryExecution().toRdd().toDebugString()
+            assert "PythonRDD" not in lineage, lineage
+        assert sorted((os.path.basename(r["path"]), r["size"]) for r in listing.collect()) == [
+            ("db.c.0001.json.encryption.json", 2),
+            ("db.c.0001.json.gz.enc", 3),
+        ]
+        assert empty.collect() == [] and empty.schema == L.LISTING_SCHEMA
+
+    @pytest.mark.parametrize("n_files,n_tasks", [(3, 3), (8, 8), (3, 8)])
+    def test_one_file_per_decrypt_task(self, spark, tree, n_files, n_tasks):
+        """With no more files than partitions, every partition of the
+        lines frame holds at most one file, so no decrypt task reads
+        two, whatever the partitioning of the file rows."""
+        from pyspark.sql import functions as F
+
+        key = os.urandom(32)
+        for i in range(1, n_files + 1):
+            _write_encrypted_dump(
+                tree, f"db.c.{i:04d}", [json.dumps({"_id": str(j)}) for j in range(3)], key
+            )
+        pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
+        # spread the file rows over several input partitions, as a large
+        # listing's are: round-robin dealing collides files from different
+        # input partitions (8 files landed on 6 tasks here)
+        pairs = spark.createDataFrame(pairs.collect(), pairs.schema)
+        assert pairs.rdd.getNumPartitions() > 1
+        lines = read_encrypted_jsonl(
+            pairs, {("kek", "E"): base64.b64encode(key).decode()}, n_files=n_tasks
+        )
+        per_task = (
+            lines.groupBy(F.spark_partition_id().alias("task"))
+            .agg(F.countDistinct("data_path").alias("files"), F.count("*").alias("lines"))
+            .collect()
+        )
+        assert len(per_task) == n_files
+        assert all(r["files"] == 1 and r["lines"] == 3 for r in per_task)
+
+
 class TestSourcesReviewFixes:
     """Round-7 sources review pass: cross-prefix pairing, anchored
     filename contracts, relative-root normalization, the object-opener

@@ -68,6 +68,59 @@ class TestDates:
             kafka_date_format(f"2020-01-01T00:00:{i % 60:02d}.000Z")
         assert len(dates._ROUNDTRIP_MEMO) <= dates._ROUNDTRIP_MEMO_MAX
 
+    def test_roundtrip_memo_evicts_oldest_under_date_drift(self):
+        """The memo is FIFO: after a long run of distinct dates it holds
+        the NEWEST entries. A LIFO eviction keeps the first entries
+        forever and evicts each newcomer's predecessor, so under date
+        drift every lookup but the very last one misses."""
+        from uc_historic_data_importer_spark.functions import dates
+
+        dates._ROUNDTRIP_MEMO.clear()
+        outs = [
+            kafka_date_format(f"2020-01-{1 + i // 60:02d}T00:00:{i % 60:02d}.000Z")
+            for i in range(200)
+        ]
+        assert list(dates._ROUNDTRIP_MEMO) == outs[-dates._ROUNDTRIP_MEMO_MAX :]
+        # re-formatting a memoized date keeps its place in the queue
+        kafka_date_format(outs[-2].replace("+0000", "Z"))
+        assert list(dates._ROUNDTRIP_MEMO) == outs[-dates._ROUNDTRIP_MEMO_MAX :]
+
+    def test_roundtrip_memo_stays_bounded_under_thread_races(self):
+        """Driver threads share the memo: the eviction and insert must
+        not lose the bound, raise, or store a wrong millis."""
+        import sys
+        import threading
+
+        from uc_historic_data_importer_spark.functions import dates
+
+        errors: list[BaseException] = []
+
+        def drift(t: int) -> None:
+            try:
+                for i in range(400):
+                    s = f"20{10 + t}-03-{1 + i // 60 % 28:02d}T01:{i % 60:02d}:00.000Z"
+                    assert kafka_date_format(s) is not None
+                    assert len(dates._ROUNDTRIP_MEMO) <= dates._ROUNDTRIP_MEMO_MAX
+            except BaseException as ex:  # noqa: BLE001 — re-raised below
+                errors.append(ex)
+
+        saved = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=drift, args=(t,)) for t in range(16)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+        finally:
+            sys.setswitchinterval(saved)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        assert len(dates._ROUNDTRIP_MEMO) <= dates._ROUNDTRIP_MEMO_MAX
+        for out, millis in list(dates._ROUNDTRIP_MEMO.items()):
+            dates._ROUNDTRIP_MEMO.clear()
+            assert parse_hdi_timestamp_millis(out) == millis
+
     def test_year_range_rollover_is_record_error_not_crash(self):
         """r14 review batch 11 (probed): SimpleDateFormat-lenient zone
         offsets accept any hhmm digit pair, so these parse — but the

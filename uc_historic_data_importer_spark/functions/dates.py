@@ -18,6 +18,7 @@ Catalyst column versions are provided for SQL-expressible paths.
 from __future__ import annotations
 
 import re
+import threading
 from datetime import date
 
 from pyspark.sql import Column
@@ -43,11 +44,13 @@ _TS_RE = re.compile(
 # before the regex. Entries are only ever (millis_to_kafka(m) -> m)
 # pairs, and parse(millis_to_kafka(m)) == m for every m the formatter
 # accepts (canonical digits, +0000 zone, year pre-checked in [1, 9999]),
-# so a hit returns exactly what the full parse would. FIFO-bounded: a
-# record formats at most a handful of timestamps between format and
-# version-parse.
+# so a hit returns exactly what the full parse would. FIFO-bounded (the
+# oldest entry goes first): a record formats at most a handful of
+# timestamps between format and version-parse, so the newest entries
+# are the ones a lookup needs.
 _ROUNDTRIP_MEMO: dict[str, int] = {}
 _ROUNDTRIP_MEMO_MAX = 8
+_ROUNDTRIP_LOCK = threading.Lock()
 _EPOCH_ORDINAL = 719163  # date(1970, 1, 1).toordinal()
 _MAX_ORDINAL = 3652059  # date(9999, 12, 31).toordinal()
 # Exactly the character class Java regex \s matches: keeps the Python
@@ -130,16 +133,14 @@ def kafka_date_format(value: str) -> str | None:
     if not (1 <= days + _EPOCH_ORDINAL <= _MAX_ORDINAL):
         return None
     out = millis_to_kafka(millis)
-    if len(_ROUNDTRIP_MEMO) >= _ROUNDTRIP_MEMO_MAX:
-        # Executor UDF workers are single-threaded, but this helper is
-        # importable from driver code where concurrent threads could
-        # race iter-then-pop on the FIFO eviction; popitem() is a single
-        # atomic dict op (LIFO, but any eviction order is correct here).
-        try:
-            _ROUNDTRIP_MEMO.popitem()
-        except KeyError:
-            pass
-    _ROUNDTRIP_MEMO[out] = millis
+    # Executor UDF workers are single-threaded, but this helper is
+    # importable from driver code where concurrent threads could race
+    # the iter-then-delete of the FIFO eviction — hence the lock
+    with _ROUNDTRIP_LOCK:
+        if out not in _ROUNDTRIP_MEMO:
+            if len(_ROUNDTRIP_MEMO) >= _ROUNDTRIP_MEMO_MAX:
+                del _ROUNDTRIP_MEMO[next(iter(_ROUNDTRIP_MEMO))]
+            _ROUNDTRIP_MEMO[out] = millis
     return out
 
 

@@ -14,9 +14,11 @@ traceId, app version — MessageProducer.kt:37-39,88-90) are injectable so
 tests and oracle comparisons are deterministic (SURVEY.md §7.4.5).
 
 T8 (AESCipherService.kt:42-55): AES/CTR/NoPadding with a fresh random
-16-byte IV per record, base64 output. Implemented as an Arrow-batched
-pandas UDF over the final body JSON; a pass-through mode keeps the
-pipeline fully deterministic for correctness oracles (FIXTURES.md §4).
+16-byte IV per record, base64 output (aes_ctr_b64). The job runs it
+inside the normalize UDF (transforms.normalize_records with a data
+key); encrypt_body is the standalone Arrow-batched pandas UDF over a
+body column. A pass-through mode keeps the pipeline fully deterministic
+for correctness oracles (FIXTURES.md §4).
 """
 
 from __future__ import annotations
@@ -136,13 +138,21 @@ _CRYPTO_SCHEMA = T.StructType(
 )
 
 
+def aes_ctr_b64(text: str, key: bytes, iv: bytes) -> str:
+    """base64 AES/CTR/NoPadding ciphertext of ``text`` (UTF-8) under
+    ``key``/``iv`` — one record body (AESCipherService.kt:42-55)."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    enc = Cipher(algorithms.AES(key), modes.CTR(iv)).encryptor()
+    ct = enc.update(text.encode("utf-8")) + enc.finalize()
+    return base64.b64encode(ct).decode("ascii")
+
+
 def _encrypt_series(
     body: pd.Series, key_b64, fixed_iv: bytes | None
 ) -> pd.DataFrame:
     """``key_b64`` is a per-record Series OR a single str (one batch
     key captured in the UDF closure)."""
-    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
-
     keys = (
         [key_b64] * len(body) if isinstance(key_b64, str) else key_b64
     )
@@ -157,11 +167,8 @@ def _encrypt_series(
     ivs, cts = [], []
     for text, kb64 in zip(body, keys):
         iv = fixed_iv if fixed_iv is not None else os.urandom(16)
-        cipher = Cipher(algorithms.AES(base64.b64decode(kb64)), modes.CTR(iv))
-        enc = cipher.encryptor()
-        ct = enc.update(text.encode("utf-8")) + enc.finalize()
+        cts.append(aes_ctr_b64(text, base64.b64decode(kb64), iv))
         ivs.append(base64.b64encode(iv).decode("ascii"))
-        cts.append(base64.b64encode(ct).decode("ascii"))
     return pd.DataFrame({"iv": ivs, "ciphertext": cts})
 
 

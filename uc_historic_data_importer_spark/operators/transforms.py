@@ -7,6 +7,7 @@ per-line sequence (HBaseWriter.kt:141-213):
     reformatRemoved (T1) -> reformatArchived (T2) -> normalisedId (T3)
     -> optionalDateTime x3 (T4) -> lastModifiedDateTime hierarchy (T5)
     -> conditional in-body overwrites (T7) -> version selection input
+    [-> body encryption (T8), when given the run's data key]
 
 Why a UDF and not Catalyst: record bodies have *unbounded dynamic schema*
 (SURVEY.md §7.4.1). Every unknown key — including explicit nulls (Gson
@@ -14,7 +15,8 @@ Why a UDF and not Catalyst: record bodies have *unbounded dynamic schema*
 survive byte-for-byte. ``from_json``/``to_json`` round-trips require a
 fixed schema and would drop/reorder fields, so the rewrite itself cannot
 be expressed in Catalyst. Everything downstream of this UDF (keying,
-filtering, envelope, sinks) IS pure Catalyst.
+filtering, envelope, sinks) IS pure Catalyst; encryption rides the same
+pass because it needs Python too (a random IV per record).
 
 Scale notes: the UDF is applied once per record, Arrow-batched
 (spark.sql.execution.arrow.maxRecordsPerBatch), no shuffle, fully
@@ -24,22 +26,14 @@ JSON is parsed exactly once per record.
 
 from __future__ import annotations
 
+import base64
 import json
+import os
 from typing import Any
 
 try:  # optional fast path; environment may lack it
     import orjson
 except ImportError:  # pragma: no cover
-    orjson = None  # type: ignore[assignment]
-
-# Import-time env gate (NOT a runtime flag): the normalize UDF runs in
-# Python worker processes that re-import this module, so a driver-side
-# monkeypatch would never reach them — an env var inherited at worker
-# fork is the only switch that applies everywhere. Used by
-# tools/bench_normalize.py to measure the stdlib-vs-orjson gap.
-import os as _os
-
-if _os.environ.get("SPARK_HDI_DISABLE_ORJSON"):
     orjson = None  # type: ignore[assignment]
 
 
@@ -128,6 +122,7 @@ from uc_historic_data_importer_spark.functions.json_canonical import (
     canonical_json,
     canonicalize_id,
 )
+from uc_historic_data_importer_spark.operators.envelope import aes_ctr_b64
 
 MONGO_DELETE = "MONGO_DELETE"
 MONGO_IMPORT = "MONGO_IMPORT"
@@ -171,6 +166,16 @@ NORMALIZED_SCHEMA = T.StructType(
 )
 
 _EMPTY = {f.name: None for f in NORMALIZED_SCHEMA.fields}
+
+# Output schema of the keyed (T8-fused) UDF: every normalized field plus
+# the envelope's body ciphertext and its base64 IV, NULL on invalid rows.
+KEYED_NORMALIZED_SCHEMA = T.StructType(
+    NORMALIZED_SCHEMA.fields
+    + [
+        T.StructField("db_object", T.StringType()),
+        T.StructField("iv", T.StringType()),
+    ]
+)
 
 
 class _DateError(Exception):
@@ -426,14 +431,38 @@ def _normalize_udf(raw: pd.Series) -> pd.DataFrame:
 _normalize_udf = _normalize_udf.asNondeterministic()
 
 
+def _with_ciphertext(out: dict, key: bytes) -> dict:
+    """T8 on one normalized record: a valid body is AES-CTR encrypted
+    under the batch key with a fresh random IV; invalid rows carry
+    NULL ciphertext and IV."""
+    if out["valid"]:
+        iv = os.urandom(16)
+        out["db_object"] = aes_ctr_b64(out["record_json"], key, iv)
+        out["iv"] = base64.b64encode(iv).decode("ascii")
+    else:
+        out["db_object"] = out["iv"] = None
+    return out
+
+
 def normalize_records(
-    df: DataFrame, raw_col: str = "raw_json", min_partitions: int | None = None
+    df: DataFrame,
+    raw_col: str = "raw_json",
+    min_partitions: int | None = None,
+    data_key_b64: str | None = None,
 ) -> DataFrame:
     """Apply the full T1-T7/T10/K1/K3 normalization to a lines DataFrame.
 
     Input: any DataFrame with a `raw_col` string column (plus pass-through
     context columns such as db/collection/file_number/line_no).
     Output: input columns + `norm` struct column (NORMALIZED_SCHEMA).
+
+    `data_key_b64`: the run's batch data key (T8). With a key, the same
+    Python pass also encrypts each valid body and `norm` follows
+    KEYED_NORMALIZED_SCHEMA (`db_object`/`iv` added, NULL on invalid
+    rows), so the job crosses into Python once per record. The key
+    rides the UDF closure, never a plan literal (see encrypt_body), and
+    that UDF is non-deterministic for a second reason: its IVs are
+    random, so a re-evaluation would yield different ciphertext.
 
     `min_partitions`: the UDF's parallelism equals the input partition
     count; a compact upstream source (one small parquet file, one
@@ -444,4 +473,15 @@ def normalize_records(
     no-op."""
     if min_partitions is not None and df.rdd.getNumPartitions() < min_partitions:
         df = df.repartition(min_partitions)
-    return df.withColumn("norm", _normalize_udf(F.col(raw_col)))
+    udf = _normalize_udf
+    if data_key_b64 is not None:
+        key = base64.b64decode(data_key_b64)
+
+        @F.pandas_udf(KEYED_NORMALIZED_SCHEMA)
+        def _normalize_encrypt_udf(raw: pd.Series) -> pd.DataFrame:
+            return pd.DataFrame(
+                [_with_ciphertext(normalize_record(line), key) for line in raw]
+            )
+
+        udf = _normalize_encrypt_udf.asNondeterministic()
+    return df.withColumn("norm", udf(F.col(raw_col)))

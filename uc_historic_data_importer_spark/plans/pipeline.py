@@ -4,11 +4,16 @@ One declarative DAG per run:
 
     file pairs (S1-S4) -> metadata + keys (S6-S7)
       -> decrypt/gunzip/split (S8-S10)  [or plain JSONL]
-      -> normalize (T1-T7/T10/K1/K3, one pandas UDF pass)
+      -> normalize (T1-T7/T10/K1/K3) + body encrypt (T8), one pandas
+         UDF pass; without encryption the body passes through
       -> row key (K2) + table names (W4)
-      -> body encrypt or passthrough (T8) -> envelope (T9)
-      -> time-range filter (F3) + exists anti-join (F4)
-      -> KV sink (W2) + manifest sink (W5) + counts report (F5)
+      -> time-range status (F3) + exists status (F4) on every row
+      -> [persisted] -> envelope (T9) on the valid rows
+      -> KV sink (W2) + manifest sink (W5) + counts report (F5, one
+         aggregate over the persisted frame — no join-back)
+
+For encrypted dumps Python runs twice per record, in the same task,
+one task per input file: the decrypt stage and the normalize UDF.
 
 Run modes (W7, HBaseWriter.kt:605-606): "import", "manifest",
 "import_and_manifest".
@@ -24,7 +29,6 @@ from pyspark.sql import functions as F
 from uc_historic_data_importer_spark.operators import filters as Filt
 from uc_historic_data_importer_spark.operators.envelope import (
     RunContext,
-    encrypt_body,
     passthrough_body,
     with_envelope,
 )
@@ -55,7 +59,7 @@ class PipelineConfig:
 
 @dataclass
 class PipelineResult:
-    records: DataFrame  # normalized+enveloped, with filter_status
+    records: DataFrame  # valid rows, normalized+enveloped, with filter_status
     putable: DataFrame  # records passing F2/F3/F4 (KV-sink bound)
     manifest: DataFrame  # manifest rows (W5)
     counts: DataFrame  # F5 accounting
@@ -84,12 +88,13 @@ def process_lines(
     """Record lines -> fully processed DataFrames. `lines` must carry
     (db, collection, file_number, line_no, raw_json).
 
-    ``persist=True`` caches the normalized frame (MEMORY_AND_DISK):
-    the per-record normalization UDF is the dominant pipeline cost and
-    every downstream branch (putable, manifest, BOTH sides of the
-    counts join) derives from it — un-persisted, a run that
-    materializes all of them re-executes the UDF up to four times over
-    the full input. The cached frame rides the result as
+    ``persist=True`` caches the normalized frame (MEMORY_AND_DISK),
+    with its filter status and, under ``encrypt=True``, its ciphertext
+    and IVs: the per-record normalization UDF is the dominant pipeline
+    cost and every downstream branch (putable, manifest, counts)
+    derives from it — un-persisted, a run that materializes all of
+    them re-executes the UDF once per branch, and each re-execution
+    mints fresh IVs. The cached frame rides the result as
     ``result.persisted``; whoever drives the actions owns calling
     ``result.unpersist()`` when the last consumer has materialized
     (run() does this in a finally — a library caller looping
@@ -103,21 +108,31 @@ def process_lines(
         raise ValueError(
             f"unknown run_mode {cfg.run_mode!r}; expected one of {RUN_MODES}"
         )
-    norm = flatten_normalized(normalize_records(lines))
-    norm = with_table_names(norm)
+    if cfg.encrypt and not cfg.data_key_b64:
+        raise ValueError("encrypt=True requires data_key_b64")
+    # T8 rides the normalize pass: the batch key is closure-captured
+    # there, NOT F.lit — a plan-literal key is visible in explain()/the
+    # Spark UI/event logs (see encrypt_body)
+    norm = normalize_records(
+        lines, data_key_b64=cfg.data_key_b64 if cfg.encrypt else None
+    )
+    norm = with_table_names(flatten_normalized(norm))
+    # F3 + F4 as a status on EVERY row, so the F5 counts aggregate this
+    # one frame. Invalid rows carry no version and no key, so they read
+    # DoNotFilter and never match the snapshot; put_count also requires
+    # valid. F4 is a status, not a drop: put_count then counts exactly
+    # the rows delivered to the KV sink and filtered_exists is reported,
+    # matching the reference's accounting (HBaseWriter.kt:309-314)
+    norm = Filt.with_filter_status(norm, cfg.skip_earlier_than, cfg.skip_later_than)
+    if cfg.skip_existing and existing is not None:
+        norm = Filt.mark_existing(norm, existing)
     if persist:
         from pyspark import StorageLevel
 
         norm = norm.persist(StorageLevel.MEMORY_AND_DISK)
 
     valid = Filt.valid_records(norm)
-    if cfg.encrypt:
-        if not cfg.data_key_b64:
-            raise ValueError("encrypt=True requires data_key_b64")
-        # closure-captured batch key — NOT F.lit: a plan-literal key is
-        # visible in explain()/the Spark UI/event logs (see encrypt_body)
-        valid = encrypt_body(valid, data_key_b64=cfg.data_key_b64)
-    else:
+    if not cfg.encrypt:
         valid = passthrough_body(valid)
     valid = with_envelope(
         valid,
@@ -126,29 +141,11 @@ def process_lines(
         encrypted_encryption_key=cfg.encrypted_encryption_key,
         encrypted=cfg.encrypt,
     )
-    valid = Filt.with_filter_status(valid, cfg.skip_earlier_than, cfg.skip_later_than)
-    # F4 as a status (not a drop): put_count then counts exactly the
-    # rows delivered to the KV sink and filtered_exists is reported,
-    # matching the reference's accounting (HBaseWriter.kt:309-314)
-    if cfg.skip_existing and existing is not None:
-        valid = Filt.mark_existing(valid, existing)
-
-    putable = valid.filter(F.col("filter_status") == Filt.FILTER_NOT)
-
-    manifest = sinks.manifest_rows(valid)
-
-    # F5 accounting needs both valid and invalid rows
-    all_status = norm.join(
-        valid.select("db", "collection", "file_number", "line_no", "filter_status"),
-        ["db", "collection", "file_number", "line_no"],
-        "left",
-    )
-    counts = Filt.filter_counts(all_status)
     return PipelineResult(
         records=valid,
-        putable=putable,
-        manifest=manifest,
-        counts=counts,
+        putable=valid.filter(F.col("filter_status") == Filt.FILTER_NOT),
+        manifest=sinks.manifest_rows(valid),
+        counts=Filt.filter_counts(norm),
         persisted=norm if persist else None,
     )
 
@@ -171,19 +168,21 @@ def run(
     uploaded with the reference's W6 policy (retry x10, zero-byte skip,
     text/plain — sinks.send_manifest, StreamingManifestWriter.kt:14-49).
 
-    The normalized frame is persisted ONLY for the duration of this
-    call: the sinks plus the F5 counts report are the consumers, the
+    The normalized frame, ciphertext included, is persisted ONLY for
+    the duration of this call: the sinks plus the F5 counts report are
+    the consumers and all read the one cached copy, so the KV sink
+    writes exactly the IVs minted by the single normalize pass. The
     counts rows (one per (db, collection, file)) are materialized here
     while the cache is hot and returned as a small local frame, and the
     cache is released in a finally. Repeated run() calls therefore
     leave no cached frames behind. Consequence: ``result.records``/
     ``putable``/``manifest`` are still lazy plans — consuming them
     AFTER run() returns re-executes the pipeline, and under
-    ``encrypt=True`` that re-mints the per-record random IVs, yielding
-    ciphertext that DIFFERS from what the sinks wrote. Derive post-run
-    artifacts (e.g. an HFile bulk-load layout) from the written KV
-    store, or use process_lines(persist=True) and own
-    result.unpersist() yourself.
+    ``encrypt=True`` only that re-execution re-mints the per-record
+    random IVs, yielding ciphertext that DIFFERS from what the sinks
+    wrote. Derive post-run artifacts (e.g. an HFile bulk-load layout)
+    from the written KV store, or use process_lines(persist=True) and
+    own result.unpersist() yourself.
 
     ``collect_counts=False`` skips the counts materialization (and its
     driver round-trip) entirely for callers that never read the F5
@@ -209,9 +208,11 @@ def run(
         if collect_counts:
             # the counts report is the last consumer of the cached
             # frame: materialize it while the cache is still hot, hand
-            # back a driver-local frame
+            # back a driver-local frame. Built from an Arrow table (not a
+            # row list, not pandas, which falls back to rows when Arrow
+            # is off) it is a LocalRelation: no scan starts a Python worker
             result.counts = spark.createDataFrame(
-                result.counts.collect(), schema=result.counts.schema
+                result.counts.toArrow(), schema=result.counts.schema
             )
     finally:
         result.unpersist()

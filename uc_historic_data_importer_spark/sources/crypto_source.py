@@ -11,9 +11,10 @@ re-runs its whole file idempotently, and the sink dedups on (key,
 version).
 
 Parallelism is per-file here (like the reference's thread pool, but
-cluster-wide); the downstream record transforms repartition to per-record
-parallelism. Files are streamed in 64 KB chunks — memory stays bounded
-regardless of file size, like the reference's streaming readers.
+cluster-wide): one task per file, and the normalize UDF runs in that
+same task, so a run's Python parallelism is its file count. Files are
+streamed in 64 KB chunks — memory stays bounded regardless of file
+size, like the reference's streaming readers.
 """
 
 from __future__ import annotations
@@ -161,7 +162,12 @@ def read_encrypted_jsonl(
                 if out_rows:
                     yield pd.DataFrame(out_rows)
 
-    # one task per file: repartition the (tiny) file list so decrypt work
-    # spreads across the cluster exactly like the reference's thread pool
+    # one task per file: range-partition the (tiny) file list on its
+    # unique path so decrypt work spreads across the cluster exactly
+    # like the reference's thread pool. Round-robin repartition(n) does
+    # not hold this: each INPUT partition deals from its own random
+    # offset, so files from different inputs collide on one task
     n = max(n_files if n_files is not None else files.count(), 1)
-    return files.repartition(n).mapInPandas(_expand, schema=LINES_SCHEMA)
+    return files.repartitionByRange(n, "data_path").mapInPandas(
+        _expand, schema=LINES_SCHEMA
+    )

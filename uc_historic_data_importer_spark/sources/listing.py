@@ -17,6 +17,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Protocol
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -206,7 +207,15 @@ def list_objects(
             token = page.next_token
             if token is None:
                 break
-    return spark.createDataFrame(rows or [], LISTING_SCHEMA)
+    # an Arrow table becomes a LocalRelation whatever the Arrow conf; a
+    # row list (or pandas with Arrow off) would back the listing with a
+    # Python RDD that starts a worker on every rescan
+    paths, sizes = zip(*rows) if rows else ((), ())
+    table = pa.table(
+        [pa.array(paths, pa.string()), pa.array(sizes, pa.int64())],
+        names=LISTING_SCHEMA.names,
+    )
+    return spark.createDataFrame(table, LISTING_SCHEMA)
 
 
 def list_local_objects(spark: SparkSession, root: str, prefixes: list[str] | None = None) -> DataFrame:
