@@ -4947,8 +4947,7 @@ class TestBandSignaturePaths:
     frame via _band_signatures_of_sig instead of recomputing the
     shingle chain through minhash_band_signatures (13.7 -> ~8 s at
     sf1). The two banding expressions must stay bit-identical — this
-    pin makes drift impossible to ship silently (r13 unifies them,
-    see the __spark_entry__ handoff)."""
+    pin makes drift impossible to ship silently (r13 unifies them)."""
 
     def test_band_signature_paths_agree(self, spark):
         from uc_historic_data_importer_spark.operators import dedup
@@ -5390,8 +5389,8 @@ class TestRound13ReviewBatch7:
     returned EMPTY at target_total <= 0 and silently kept EVERYTHING at
     tau=NaN (NaN slipped the `tau < 0` check). packing.py was audited
     in the same pass with NO findings; sketches.py's scale/qs guards
-    are DEFERRED to r14 (3-slot cost vs 2 remaining window slots —
-    named in the __spark_entry__ handoff)."""
+    were DEFERRED to r14 (3-slot cost vs 2 remaining window slots) and
+    re-recorded there via the modified tuple."""
 
     def _docs(self, spark):
         return spark.createDataFrame(

@@ -1,121 +1,116 @@
 """Rotation-invariant pin (r8 verdict prescription #4).
 
 The driver records exactly the first 50 entries of queries() each round.
-__spark_entry__._ordered_queries() implements the staleness rotation;
-the handoff comments claim a window distribution and a staleness bound.
-Those claims were previously hand-computed — this test derives them from
-the _R0*_RECORDED sets + the modified block + registration order and
-fails if the ordering code and the handoff comment diverge.
+__spark_entry__._ordered_queries() derives that order from the committed
+CORRECTNESS_rNN.json records, the round number and the modified tuple.
+These tests pin the current order byte for byte and check the invariants
+the rotation exists for: every query has a driver row, modified and
+never-recorded queries re-record this round, and no query's latest
+record falls more than _MAX_STALENESS_ROUNDS behind.
 
 No SparkSession needed: ordering only imports the catalog registry.
 """
 
-from collections import Counter
+import hashlib
+import importlib.util
+import json
+import os
+import subprocess
+import sys
 
 import __spark_entry__ as entry
 
-CURRENT_ROUND = 14
 WINDOW = 50
-# Steady-state bar from the r7/r8 verdicts: after this round's window is
-# recorded, no query's latest driver record may be more than 3 rounds
-# old (>= CURRENT_ROUND - 3).
-MAX_STALENESS_ROUNDS = 3
+REPO = os.path.join(os.path.dirname(__file__), "..")
+# sha256 of "\n".join(queries() names) for round 14. Re-pin it only when
+# the round advances or the modified tuple changes.
+ORDER_SHA256 = (
+    "7a5b745bdc16001254ff08e315b8ca22a7a14f1b70617e968487482269c23ad9"
+)
 
 
-def _record_sets():
-    """(round, frozenset) pairs, newest first, discovered from the module
-    so adding _R10_RECORDED next round is picked up automatically."""
-    sets = []
-    for rnd in range(CURRENT_ROUND - 1, 0, -1):
-        name = f"_R{rnd:02d}_RECORDED"
-        if hasattr(entry, name):
-            sets.append((rnd, getattr(entry, name)))
-    return sets
+def _registered():
+    import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401
+    import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401
+    from uc_historic_data_importer_spark.plans.catalog import QUERIES
+
+    return set(QUERIES)
 
 
-def _last_recorded(name, sets):
-    for rnd, recorded in sets:
-        if name in recorded:
-            return rnd
-    return None
+def _ordered():
+    return [n for n, _ in entry._ordered_queries()]
+
+
+def test_order_is_pinned():
+    """Computed in a fresh interpreter, as the driver imports it: the
+    registration order, and with it the tie-breaks, depends on which
+    catalog module a process imports first."""
+    names = subprocess.run(
+        [sys.executable, "-c",
+         "import __spark_entry__ as e; print('\\n'.join(e.queries()))"],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout.rstrip("\n")
+    assert hashlib.sha256(names.encode()).hexdigest() == ORDER_SHA256
+
+
+def test_correctness_records_hold_50_registered_names():
+    """A renamed or deleted query would otherwise silently re-enter the
+    rotation as never recorded."""
+    registered = _registered()
+    for rnd in range(1, entry._ROTATION_ROUND):
+        path = os.path.join(REPO, f"CORRECTNESS_r{rnd:02d}.json")
+        with open(path) as fh:
+            names = set(json.load(fh))
+        assert len(names) == WINDOW, path
+        assert names <= registered, (path, sorted(names - registered))
 
 
 def test_window_is_exactly_50_and_names_are_registered():
-    ordered = [n for n, _ in entry._ordered_queries()]
+    ordered = _ordered()
     assert len(ordered) == len(set(ordered)), "duplicate query names"
     assert len(ordered) >= WINDOW
-    import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401
-    import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401
-    from uc_historic_data_importer_spark.plans.catalog import QUERIES
-
-    assert set(ordered) == set(QUERIES)
+    assert set(ordered) == _registered()
 
 
 def test_slipped_and_modified_blocks_resolve_to_real_queries():
-    import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401
-    import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401
-    from uc_historic_data_importer_spark.plans.catalog import QUERIES
-
-    for name in entry._R14_SLIPPED_R10:
-        assert name in QUERIES, f"slipped-block name not in catalog: {name}"
-    for name in entry._R14_MODIFIED_SINCE_RECORD:
-        assert name in QUERIES, f"modified-block name not in catalog: {name}"
-
-
-def test_slipped_r10_queries_sort_first():
-    """The r13 verdict pins the 26 slipped r10-latest queries to the very
-    front of the round-14 window."""
-    ordered = [n for n, _ in entry._ordered_queries()]
-    assert tuple(ordered[: len(entry._R14_SLIPPED_R10)]) == entry._R14_SLIPPED_R10
-
-
-def test_slipped_block_is_exactly_the_r10_latest_stragglers():
-    """Every slipped entry's latest record is r10, and every query whose
-    latest record is r10 is in the slipped block (nothing older exists)."""
-    sets = _record_sets()
-    ordered = [n for n, _ in entry._ordered_queries()]
-    r10_latest = {n for n in ordered if _last_recorded(n, sets) == 10}
-    older = {
-        n
-        for n in ordered
-        if (_last_recorded(n, sets) or CURRENT_ROUND) < 10
-    }
-    assert older == set(), f"queries with latest record older than r10: {older}"
-    assert r10_latest == set(entry._R14_SLIPPED_R10)
+    """The slipped block (latest record below the staleness floor) sorts
+    first, by name; every modified name is a registered query."""
+    last = entry._last_recorded()
+    floor = entry._ROTATION_ROUND - entry._MAX_STALENESS_ROUNDS
+    slipped = sorted(n for n, rnd in last.items() if rnd < floor)
+    assert _ordered()[: len(slipped)] == slipped
+    missing = set(entry._MODIFIED_SINCE_RECORD) - _registered()
+    assert missing == set(), f"modified-block names not in catalog: {missing}"
 
 
 def test_modified_block_lands_inside_the_window():
     """Re-record doctrine: a query whose call path changed this round
     must re-record this round — i.e. appear inside the first 50."""
-    ordered = [n for n, _ in entry._ordered_queries()]
-    window = set(ordered[:WINDOW])
-    missing = [n for n in entry._R14_MODIFIED_SINCE_RECORD if n not in window]
+    window = set(_ordered()[:WINDOW])
+    missing = [n for n in entry._MODIFIED_SINCE_RECORD if n not in window]
     assert missing == [], (
         f"modified-since-record queries pushed past the window: {missing}"
     )
 
 
 def test_never_recorded_queries_land_inside_the_window():
-    sets = _record_sets()
-    ordered = [n for n, _ in entry._ordered_queries()]
+    last = entry._last_recorded()
+    ordered = _ordered()
     window = set(ordered[:WINDOW])
-    fresh = [n for n in ordered if _last_recorded(n, sets) is None]
-    assert all(n in window for n in fresh), (
-        f"never-recorded queries outside window: "
-        f"{[n for n in fresh if n not in window]}"
-    )
+    outside = [n for n in ordered if n not in last and n not in window]
+    assert outside == [], f"never-recorded queries outside window: {outside}"
 
 
 def test_post_round_staleness_bound():
     """After this round's window is recorded, every query's latest
-    record is within MAX_STALENESS_ROUNDS of CURRENT_ROUND."""
-    sets = _record_sets()
-    ordered = [n for n, _ in entry._ordered_queries()]
+    record is within _MAX_STALENESS_ROUNDS of _ROTATION_ROUND."""
+    last = entry._last_recorded()
+    ordered = _ordered()
     window = set(ordered[:WINDOW])
-    floor = CURRENT_ROUND - MAX_STALENESS_ROUNDS
+    floor = entry._ROTATION_ROUND - entry._MAX_STALENESS_ROUNDS
     violations = {}
     for n in ordered:
-        latest = CURRENT_ROUND if n in window else _last_recorded(n, sets)
+        latest = entry._ROTATION_ROUND if n in window else last.get(n)
         assert latest is not None, f"query would never be recorded: {n}"
         if latest < floor:
             violations[n] = latest
@@ -124,27 +119,18 @@ def test_post_round_staleness_bound():
     )
 
 
-# The handoff comment's claimed window distribution (update BOTH when
-# the modified block changes — the test exists to catch exactly the
-# divergence between ordering code and handoff comment).
-CLAIMED_DISTRIBUTION = {10: 26, 11: 18, 12: 4, 13: 2}
-
-
-def test_handoff_comment_distribution():
-    """The handoff comment's claimed latest-record distribution of the
-    round-14 window, derived instead of hand-computed."""
-    sets = _record_sets()
-    ordered = [n for n, _ in entry._ordered_queries()]
-    dist = Counter(_last_recorded(n, sets) for n in ordered[:WINDOW])
-    assert dict(dist) == CLAIMED_DISTRIBUTION
-    assert sum(dist.values()) == WINDOW
-    # Nothing in the window should be r09-or-older (those were all
-    # cleared by r12/r13) and nothing OUTSIDE the window may be r10.
-    assert all(k is None or k >= 10 for k in dist)
-    outside = [
-        n for n in ordered[WINDOW:] if _last_recorded(n, sets) == 10
-    ]
-    assert outside == []
+def test_modified_queries_tool_follows_indirect_calls():
+    """tools/modified_queries.py produces _MODIFIED_SINCE_RECORD. A
+    change to sessions.sessionize must reach event_sessionization through
+    session_stats (the r13 precedent in the tool's docstring)."""
+    spec = importlib.util.spec_from_file_location(
+        "modified_queries", os.path.join(REPO, "tools", "modified_queries.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    calls, _qualified, queries = mod.build_graph()
+    hit = mod.reach(calls, {"sessionize"})
+    fn = queries["event_sessionization"]
+    assert hit[fn] == [fn, "session_stats", "sessionize"]
 
 
 def test_soak_tool_state_metrics_shape():

@@ -265,6 +265,9 @@ class TestPaginatedListing:
         assert got2 == {f"s3://bucket/{k}" for k, s in keys}
 
 
+_LINES_GZ = gzip.compress(b'{"_id": "1"}\n' * 2000)
+
+
 class TestCryptoSource:
     def test_decrypt_stream_roundtrip(self):
         import io
@@ -316,6 +319,32 @@ class TestCryptoSource:
         pairs = pairs.filter("file_number = 4")
         with pytest.raises(Exception, match="no resolved data key"):
             read_encrypted_jsonl(pairs, {("other", "X"): "irrelevant"}).collect()
+
+    @pytest.mark.parametrize(
+        "gz, cause",
+        [
+            pytest.param(_LINES_GZ[: len(_LINES_GZ) // 2],
+                         "EOFError", id="truncated"),
+            pytest.param(gzip.compress(b'{"_id": "1"}\n{"_id": "\xff"}\n'),
+                         "UnicodeDecodeError", id="non_utf8_line"),
+        ],
+    )
+    def test_unreadable_object_error_names_the_path(self, spark, tree, gz, cause):
+        """A truncated object used to abort the job with a bare EOFError
+        that named no file; every stream failure must name the object."""
+        key, iv = os.urandom(32), os.urandom(16)
+        path = os.path.join(tree, "mydb.coll.0005.json.gz.enc")
+        _write(path, _encrypt(gz, key, iv))
+        with open(os.path.join(tree, "mydb.coll.0005.json.encryption.json"), "w") as fh:
+            json.dump({
+                "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
+                "initialisationVector": base64.b64encode(iv).decode(),
+            }, fh)
+        pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
+        keymap = {("kek", "E"): base64.b64encode(key).decode()}
+        with pytest.raises(Exception) as err:
+            read_encrypted_jsonl(pairs, keymap, n_files=1).collect()
+        assert f"cannot read {path!r}: {cause}" in str(err.value)
 
 
 def _write_encrypted_dump(tree: str, stem: str, lines: list[str], key: bytes) -> None:

@@ -7,7 +7,8 @@ text.py precedent), over ALL catalog modules (the r13 sessions.py
 precedent: event_sessionization reaches sessionize through
 session_stats, which a narrower scan missed).
 
-This tool makes the scan reusable instead of ad-hoc per round:
+This tool makes the scan reusable instead of ad-hoc per round; its
+output is `__spark_entry__._MODIFIED_SINCE_RECORD`:
 
     python3 tools/modified_queries.py sketches.hist_counts skew.salted_agg ...
 

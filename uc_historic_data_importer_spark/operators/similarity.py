@@ -49,10 +49,6 @@ def safe_norm_col(a: Column) -> Column:
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
 def _ensure_parallel(df: DataFrame) -> DataFrame:
     """Similarity parallelism equals corpus partitions; a single-file
     corpus would serialize the dot-product stage onto one core. No-op at

@@ -22,6 +22,7 @@ from __future__ import annotations
 import base64
 import gzip
 import io
+import zlib
 from typing import Iterator
 
 import pandas as pd
@@ -40,6 +41,10 @@ LINES_SCHEMA = T.StructType(
         T.StructField("encrypted_encryption_key", T.StringType()),
     ]
 )
+
+# What decrypt -> gunzip -> UTF-8 line split raises on a truncated or
+# corrupt object.
+_STREAM_ERRORS = (EOFError, gzip.BadGzipFile, zlib.error, UnicodeDecodeError)
 
 
 def decrypt_stream(raw: io.BufferedIOBase, key_b64: str, iv_b64: str) -> io.BufferedIOBase:
@@ -140,25 +145,33 @@ def read_encrypted_jsonl(
                     )
                 key_b64 = data_keys[kpair]
                 out_rows: list[dict] = []
-                with open_fn(row.data_path) as fh:
-                    stream = decrypt_stream(fh, key_b64, row.initialisation_vector)
-                    with gzip.open(stream, "rt", encoding="utf-8") as text:
-                        for i, line in enumerate(text, start=1):
-                            out_rows.append(
-                                {
-                                    "db": row.db,
-                                    "collection": row.collection,
-                                    "file_number": int(row.file_number),
-                                    "line_no": i,
-                                    "raw_json": line.rstrip("\n"),
-                                    "data_path": row.data_path,
-                                    "key_encryption_key_id": row.key_encryption_key_id,
-                                    "encrypted_encryption_key": row.encrypted_encryption_key,
-                                }
-                            )
-                            if len(out_rows) >= 10_000:
-                                yield pd.DataFrame(out_rows)
-                                out_rows = []
+                try:
+                    with open_fn(row.data_path) as fh:
+                        stream = decrypt_stream(fh, key_b64, row.initialisation_vector)
+                        with gzip.open(stream, "rt", encoding="utf-8") as text:
+                            for i, line in enumerate(text, start=1):
+                                out_rows.append(
+                                    {
+                                        "db": row.db,
+                                        "collection": row.collection,
+                                        "file_number": int(row.file_number),
+                                        "line_no": i,
+                                        "raw_json": line.rstrip("\n"),
+                                        "data_path": row.data_path,
+                                        "key_encryption_key_id": row.key_encryption_key_id,
+                                        "encrypted_encryption_key": row.encrypted_encryption_key,
+                                    }
+                                )
+                                if len(out_rows) >= 10_000:
+                                    yield pd.DataFrame(out_rows)
+                                    out_rows = []
+                except _STREAM_ERRORS as exc:
+                    # a truncated or corrupt object otherwise surfaces as
+                    # a bare EOFError/zlib.error that names no file
+                    raise ValueError(
+                        f"cannot read {row.data_path!r}: "
+                        f"{type(exc).__name__}: {exc}"
+                    ) from exc
                 if out_rows:
                     yield pd.DataFrame(out_rows)
 
