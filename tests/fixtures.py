@@ -4,7 +4,10 @@ manifest — see FIXTURES.md §1). One row per variant per collection."""
 
 from __future__ import annotations
 
+import base64
+import gzip
 import json
+import os
 
 
 def base_record(k: int = 0, millis: int = 0) -> dict:
@@ -107,3 +110,20 @@ def write_dump_file(path: str) -> int:
     with open(path, "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines) + "\n")
     return len(lines)
+
+
+def write_encrypted_dump(directory: str, stem: str, lines: list[str], key: bytes) -> None:
+    """``<stem>.json.gz.enc`` (AES-CTR over gzipped JSONL, fresh IV) plus
+    its sidecar, wrapped-key pair ("kek", "E")."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    iv = os.urandom(16)
+    enc = Cipher(algorithms.AES(key), modes.CTR(iv)).encryptor()
+    payload = enc.update(gzip.compress(("\n".join(lines) + "\n").encode())) + enc.finalize()
+    with open(os.path.join(directory, f"{stem}.json.gz.enc"), "wb") as fh:
+        fh.write(payload)
+    with open(os.path.join(directory, f"{stem}.json.encryption.json"), "w") as fh:
+        json.dump({
+            "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
+            "initialisationVector": base64.b64encode(iv).decode(),
+        }, fh)

@@ -14,8 +14,10 @@ from pyspark.sql import functions as F
 from tests.fixtures import (
     SKIP_EARLIER_THAN,
     SKIP_LATER_THAN,
+    base_record,
     variant_lines,
     write_dump_file,
+    write_encrypted_dump,
 )
 from uc_historic_data_importer_spark.operators.envelope import RunContext
 from uc_historic_data_importer_spark.plans import pipeline as P
@@ -45,6 +47,40 @@ def result(spark, dump_dir):
         skip_existing=False,
     )
     return process_lines(lines, cfg)
+
+
+# more lines than one emit chunk of the decrypt stage (10,000)
+N_LONG = 10_050
+
+
+@pytest.fixture(scope="module")
+def enc_source(spark, tmp_path_factory):
+    """read_encrypted_jsonl over the variant matrix as three encrypted
+    dumps plus one N_LONG-line dump."""
+    from uc_historic_data_importer_spark.sources import listing as L
+    from uc_historic_data_importer_spark.sources import metadata as M
+    from uc_historic_data_importer_spark.sources.crypto_source import read_encrypted_jsonl
+
+    d = str(tmp_path_factory.mktemp("enc_dumps"))
+    key = os.urandom(32)
+    variants = [line for _, line in variant_lines()]
+    for stem in ("database-1.collection-1.0001", "database-1.collection-two.0001",
+                 "agent-core.agentToDoArchive.0002"):
+        write_encrypted_dump(d, stem, variants, key)
+    write_encrypted_dump(
+        d, "db-long.coll.0003", [json.dumps(base_record(k, k % 1000)) for k in range(N_LONG)], key
+    )
+    pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, d)))
+    return read_encrypted_jsonl(pairs, {("kek", "E"): base64.b64encode(key).decode()}, n_files=4)
+
+
+@pytest.fixture(scope="module")
+def enc_snapshot(spark, enc_source, tmp_path_factory):
+    """KV snapshot holding the putable rows of enc_source with even line_no."""
+    snap = str(tmp_path_factory.mktemp("enc_snapshot") / "kv")
+    putable = process_lines(enc_source, _cfg(skip_existing=False)).putable
+    putable.filter(F.col("line_no") % 2 == 0).select("table", "key_hex", "version").write.parquet(snap)
+    return spark.read.parquet(snap)
 
 
 N_VARIANTS = len(variant_lines())  # 13 lines/file
@@ -269,7 +305,7 @@ def test_unparseable_filter_bound_raises(spark):
 class TestPipelineSpineReviewFixes:
     """Round-7 pipeline-spine review pass regressions."""
 
-    def test_data_key_never_appears_in_query_plan(self, spark):
+    def test_data_key_never_appears_in_query_plan(self, spark, enc_source):
         """The batch AES key must ship in the UDF closure, not as a
         Catalyst literal — a plan-literal key is readable in explain()
         output, the Spark UI SQL tab, and persisted event logs."""
@@ -295,6 +331,13 @@ class TestPipelineSpineReviewFixes:
         )
         for frame in (res.records, res.putable, res.counts):
             assert key_b64 not in frame._jdf.queryExecution().toString()
+        # encrypted dumps: the key rides the fused decrypt stage's closure
+        fused = P.process_lines(
+            enc_source, P.PipelineConfig(encrypt=True, data_key_b64=key_b64)
+        )
+        for frame in (fused.records, fused.putable, fused.manifest, fused.counts):
+            plan = frame._jdf.queryExecution().toString()
+            assert "MapInArrow" in plan and key_b64 not in plan
         with pytest.raises(ValueError, match="exactly one"):
             encrypt_body(df)
         with pytest.raises(ValueError, match="exactly one"):
@@ -524,6 +567,59 @@ class TestPythonBoundaries:
             text = dec.update(base64.b64decode(message["dbObject"])) + dec.finalize()
             assert text.decode("utf-8") in bodies[(c["table"], c["key_hex"], c["version"])]
         assert len(ivs) == len(cells)
+
+    def test_source_frame_branches_hold_one_map_in_arrow(self, enc_source, enc_snapshot):
+        """Encrypted dumps cross into Python once per record: decrypt,
+        normalize and encrypt share one mapInArrow on every branch."""
+        enc = process_lines(
+            enc_source, _cfg(encrypt=True, data_key_b64=KEY_B64), existing=enc_snapshot
+        )
+        for frame in (enc.records, enc.putable, enc.manifest, enc.counts):
+            plan = _physical_plan(frame)
+            assert plan.count("MapInArrow") == 1, plan
+            for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in plan, plan
+
+    def test_fused_source_matches_the_frame_path(self, spark, enc_source, enc_snapshot, tmp_path):
+        """The source frame, normalized in its decrypt stage, and the same
+        frame behind a projection, normalized by the Arrow UDF, give the
+        same counts, manifests, KV cells and record schema."""
+        from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+        cfg = _cfg(encrypt=True, data_key_b64=KEY_B64)
+        key = base64.b64decode(KEY_B64)
+        outputs = {}
+        for name, lines in (("fused", enc_source), ("frame", enc_source.select("*"))):
+            records = process_lines(lines, cfg, existing=enc_snapshot).records
+            assert ("ArrowEvalPython" in _physical_plan(records)) == (name == "frame")
+            kv, mf = str(tmp_path / name / "kv"), str(tmp_path / name / "mf")
+            result = run(spark, lines, cfg, kv_path=kv, manifest_dir=mf, existing=enc_snapshot)
+            manifests = {}
+            for f in os.listdir(mf):
+                with open(os.path.join(mf, f), "rb") as fh:
+                    manifests[f] = fh.read()
+            cells = []
+            for c in spark.read.parquet(kv).collect():
+                message = json.loads(c["body"])["message"]
+                iv = base64.b64decode(message["encryption"]["initialisationVector"])
+                dec = Cipher(algorithms.AES(key), modes.CTR(iv)).decryptor()
+                body = dec.update(base64.b64decode(message["dbObject"])) + dec.finalize()
+                cells.append((c["table"], c["key_hex"], c["version"], body.decode("utf-8")))
+            outputs[name] = (
+                sorted(result.counts.collect()), manifests, sorted(cells), records.schema
+            )
+        counts, manifests, cells, schema = outputs["fused"]
+        assert counts == outputs["frame"][0]
+        assert manifests == outputs["frame"][1]
+        assert cells == outputs["frame"][2]
+        assert schema == outputs["frame"][3]
+        assert sum(r["put_count"] for r in counts) == len(cells) > 0
+        assert sum(r["filtered_exists"] for r in counts) > 0
+        assert len(manifests) == 4
+        # line numbers run 1..N across the file's emit chunks
+        long_rows = process_lines(enc_source, _cfg(skip_existing=False)).records
+        line_nos = [r["line_no"] for r in long_rows.filter(F.col("db") == "db-long").collect()]
+        assert sorted(line_nos) == list(range(1, N_LONG + 1))
 
     def test_keyed_normalize_schema_and_invalid_rows(self, spark, dump_dir):
         from uc_historic_data_importer_spark.operators.transforms import (

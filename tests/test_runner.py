@@ -36,6 +36,37 @@ def test_runner_plain_jsonl(spark, tmp_path, capsys):
     assert os.listdir(manifests) == ["db.database-1.collection-1-000001.csv"]
 
 
+def test_runner_report_totals_every_counter(spark, tmp_path, capsys):
+    """The totals cover every F5 counter, so a re-run over an existing-KV
+    snapshot with a bad date adds up to records_processed."""
+    first, second = tmp_path / "first", tmp_path / "second"
+    first.mkdir()
+    second.mkdir()
+    write_dump_file(str(first / "db.c.0001.json"))
+    write_dump_file(str(second / "db.c.0001.json"))
+    with open(second / "db.d.0002.json", "w", encoding="utf-8") as fh:
+        fh.write(json.dumps({"_id": "bad-date", "_lastModifiedDateTime": {"$date": "not a date"}}) + "\n")
+        fh.write(json.dumps({"_id": "new", "createdDateTime": "2018-12-01T15:01:02.000Z"}) + "\n")
+    kv = str(tmp_path / "kv")
+    assert main(["--input-dir", str(first), "--plain-jsonl", "--run-mode", "import",
+                 "--kv-path", kv, "--master", "local[4]"]) == 0
+    capsys.readouterr()
+    assert main(["--input-dir", str(second), "--plain-jsonl", "--run-mode", "import",
+                 "--kv-path", str(tmp_path / "kv2"), "--skip-existing", "--existing-kv", kv,
+                 "--master", "local[4]"]) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    per_file = report["per_file"]
+    counters = [k for k in per_file[0] if k not in ("db", "collection", "file_number")]
+    assert len(counters) == 8
+    for name in counters:
+        total = report["records_processed" if name == "records_total" else name]
+        assert total == sum(r[name] for r in per_file), name
+    assert report["date_errors"] == 1 and report["filtered_exists"] > 0 and report["put_count"] == 1
+    outcomes = ("parse_errors", "date_errors", "blank_ids", "put_count",
+                "filtered_too_early", "filtered_too_late", "filtered_exists")
+    assert sum(report[k] for k in outcomes) == report["records_processed"]
+
+
 def test_runner_manifest_only_mode(spark, tmp_path, capsys):
     inp = tmp_path / "in2"
     inp.mkdir()

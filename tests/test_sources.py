@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from tests.fixtures import write_encrypted_dump
 from uc_historic_data_importer_spark.sources import listing as L
 from uc_historic_data_importer_spark.sources import metadata as M
 from uc_historic_data_importer_spark.sources.crypto_source import (
@@ -20,6 +21,17 @@ from uc_historic_data_importer_spark.sources.crypto_source import (
 def _write(path: str, data: bytes = b"x") -> None:
     with open(path, "wb") as fh:
         fh.write(data)
+
+
+def _drain(lines, via: str) -> None:
+    """Run the decrypt stage alone, or fused with normalize under the
+    pipeline."""
+    if via == "lines":
+        lines.collect()
+    else:
+        from uc_historic_data_importer_spark.plans import pipeline as P
+
+        P.process_lines(lines, P.PipelineConfig()).counts.collect()
 
 
 def _encrypt(data: bytes, key: bytes, iv: bytes) -> bytes:
@@ -266,6 +278,8 @@ class TestPaginatedListing:
 
 
 _LINES_GZ = gzip.compress(b'{"_id": "1"}\n' * 2000)
+_TRUNCATED_GZ = _LINES_GZ[: len(_LINES_GZ) // 2]
+_NON_UTF8_GZ = gzip.compress(b'{"_id": "1"}\n{"_id": "\xff"}\n')
 
 
 class TestCryptoSource:
@@ -317,19 +331,21 @@ class TestCryptoSource:
             }, fh)
         pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
         pairs = pairs.filter("file_number = 4")
-        with pytest.raises(Exception, match="no resolved data key"):
-            read_encrypted_jsonl(pairs, {("other", "X"): "irrelevant"}).collect()
+        for via in ("lines", "pipeline"):
+            with pytest.raises(Exception, match="no resolved data key for '.*0004"):
+                _drain(read_encrypted_jsonl(pairs, {("other", "X"): "irrelevant"}), via)
 
     @pytest.mark.parametrize(
-        "gz, cause",
+        "gz, cause, via",
         [
-            pytest.param(_LINES_GZ[: len(_LINES_GZ) // 2],
-                         "EOFError", id="truncated"),
-            pytest.param(gzip.compress(b'{"_id": "1"}\n{"_id": "\xff"}\n'),
-                         "UnicodeDecodeError", id="non_utf8_line"),
+            pytest.param(_TRUNCATED_GZ, "EOFError", "lines", id="truncated"),
+            pytest.param(_NON_UTF8_GZ, "UnicodeDecodeError", "lines", id="non_utf8_line"),
+            pytest.param(_TRUNCATED_GZ, "EOFError", "pipeline", id="truncated-pipeline"),
+            pytest.param(_NON_UTF8_GZ, "UnicodeDecodeError", "pipeline",
+                         id="non_utf8_line-pipeline"),
         ],
     )
-    def test_unreadable_object_error_names_the_path(self, spark, tree, gz, cause):
+    def test_unreadable_object_error_names_the_path(self, spark, tree, gz, cause, via):
         """A truncated object used to abort the job with a bare EOFError
         that named no file; every stream failure must name the object."""
         key, iv = os.urandom(32), os.urandom(16)
@@ -343,19 +359,9 @@ class TestCryptoSource:
         pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
         keymap = {("kek", "E"): base64.b64encode(key).decode()}
         with pytest.raises(Exception) as err:
-            read_encrypted_jsonl(pairs, keymap, n_files=1).collect()
+            _drain(read_encrypted_jsonl(pairs, keymap, n_files=1), via)
         assert f"cannot read {path!r}: {cause}" in str(err.value)
-
-
-def _write_encrypted_dump(tree: str, stem: str, lines: list[str], key: bytes) -> None:
-    iv = os.urandom(16)
-    payload = _encrypt(gzip.compress(("\n".join(lines) + "\n").encode()), key, iv)
-    _write(os.path.join(tree, f"{stem}.json.gz.enc"), payload)
-    with open(os.path.join(tree, f"{stem}.json.encryption.json"), "w") as fh:
-        json.dump({
-            "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
-            "initialisationVector": base64.b64encode(iv).decode(),
-        }, fh)
+        assert not isinstance(err.value, EOFError)
 
 
 class TestPythonBoundaries:
@@ -396,7 +402,7 @@ class TestPythonBoundaries:
 
         key = os.urandom(32)
         for i in range(1, n_files + 1):
-            _write_encrypted_dump(
+            write_encrypted_dump(
                 tree, f"db.c.{i:04d}", [json.dumps({"_id": str(j)}) for j in range(3)], key
             )
         pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))

@@ -15,7 +15,7 @@ tests and oracle comparisons are deterministic (SURVEY.md §7.4.5).
 
 T8 (AESCipherService.kt:42-55): AES/CTR/NoPadding with a fresh random
 16-byte IV per record, base64 output (aes_ctr_b64). The job runs it
-inside the normalize UDF (transforms.normalize_records with a data
+inside the normalize pass (transforms.normalize_batch with a data
 key); encrypt_body is the standalone Arrow-batched pandas UDF over a
 body column. A pass-through mode keeps the pipeline fully deterministic
 for correctness oracles (FIXTURES.md §4).

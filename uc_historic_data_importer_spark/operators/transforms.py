@@ -1,8 +1,8 @@
 """Record normalization — operators T1-T7 + T10 of SURVEY.md §2.3.
 
-One Arrow-batched pandas UDF performs the full per-record rewrite in a
-single pass over the raw JSON line, exactly mirroring the reference's
-per-line sequence (HBaseWriter.kt:141-213):
+One Arrow batch function, ``normalize_batch``, performs the full
+per-record rewrite in a single pass over the raw JSON line, exactly
+mirroring the reference's per-line sequence (HBaseWriter.kt:141-213):
 
     reformatRemoved (T1) -> reformatArchived (T2) -> normalisedId (T3)
     -> optionalDateTime x3 (T4) -> lastModifiedDateTime hierarchy (T5)
@@ -18,10 +18,11 @@ be expressed in Catalyst. Everything downstream of this UDF (keying,
 filtering, envelope, sinks) IS pure Catalyst; encryption rides the same
 pass because it needs Python too (a random IV per record).
 
-Scale notes: the UDF is applied once per record, Arrow-batched
-(spark.sql.execution.arrow.maxRecordsPerBatch), no shuffle, fully
-parallel across partitions, and returns a single struct column so the
-JSON is parsed exactly once per record.
+Scale notes: the function runs once per record, Arrow-batched, no
+shuffle, fully parallel across partitions, and returns a single struct
+column so the JSON is parsed exactly once per record. The encrypted-dump
+job calls it inside its decrypt task (sources/crypto_source.py); every
+other frame reaches it through ``normalize_records``' Arrow UDF.
 """
 
 from __future__ import annotations
@@ -108,10 +109,11 @@ def _dumps_compact(obj: Any) -> str:
         obj, separators=(",", ":"), ensure_ascii=False, allow_nan=False
     )
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from uc_historic_data_importer_spark.functions.dates import (
     EPOCH_KAFKA,
@@ -417,20 +419,6 @@ def normalize_record(raw_json: str) -> dict:
         return out
 
 
-@F.pandas_udf(NORMALIZED_SCHEMA)
-def _normalize_udf(raw: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([normalize_record(line) for line in raw])
-
-
-# The UDF is pure, but letting Catalyst treat it as deterministic allows
-# filter-pushdown to DUPLICATE the (expensive) evaluation below exchanges:
-# a filter on norm.valid gets rewritten to a second ArrowEvalPython under
-# the shuffle while the flatten projection keeps the original above it —
-# the whole normalize pass runs twice. Blocking optimizer movement costs
-# nothing (nothing useful can be pushed through a dynamic-JSON rewrite).
-_normalize_udf = _normalize_udf.asNondeterministic()
-
-
 def _with_ciphertext(out: dict, key: bytes) -> dict:
     """T8 on one normalized record: a valid body is AES-CTR encrypted
     under the batch key with a fresh random IV; invalid rows carry
@@ -442,6 +430,18 @@ def _with_ciphertext(out: dict, key: bytes) -> dict:
     else:
         out["db_object"] = out["iv"] = None
     return out
+
+
+def normalize_batch(lines: list[str | None], data_key_b64: str | None = None) -> pa.StructArray:
+    """Normalize a batch of raw JSON lines (str or None) into
+    NORMALIZED_SCHEMA, or, given the run's data key,
+    KEYED_NORMALIZED_SCHEMA with each valid body encrypted."""
+    if data_key_b64 is None:
+        outs = [normalize_record(line) for line in lines]
+        return pa.array(outs, to_arrow_type(NORMALIZED_SCHEMA))
+    key = base64.b64decode(data_key_b64)
+    outs = [_with_ciphertext(normalize_record(line), key) for line in lines]
+    return pa.array(outs, to_arrow_type(KEYED_NORMALIZED_SCHEMA))
 
 
 def normalize_records(
@@ -473,15 +473,18 @@ def normalize_records(
     no-op."""
     if min_partitions is not None and df.rdd.getNumPartitions() < min_partitions:
         df = df.repartition(min_partitions)
-    udf = _normalize_udf
-    if data_key_b64 is not None:
-        key = base64.b64decode(data_key_b64)
+    schema = NORMALIZED_SCHEMA if data_key_b64 is None else KEYED_NORMALIZED_SCHEMA
 
-        @F.pandas_udf(KEYED_NORMALIZED_SCHEMA)
-        def _normalize_encrypt_udf(raw: pd.Series) -> pd.DataFrame:
-            return pd.DataFrame(
-                [_with_ciphertext(normalize_record(line), key) for line in raw]
-            )
+    @F.arrow_udf(schema)
+    def _normalize_udf(raw: pa.Array) -> pa.Array:
+        return normalize_batch(raw.to_pylist(), data_key_b64)
 
-        udf = _normalize_encrypt_udf.asNondeterministic()
+    # The UDF is pure, but letting Catalyst treat it as deterministic
+    # allows filter-pushdown to DUPLICATE the (expensive) evaluation below
+    # exchanges: a filter on norm.valid gets rewritten to a second
+    # ArrowEvalPython under the shuffle while the flatten projection keeps
+    # the original above it — the whole normalize pass runs twice.
+    # Blocking optimizer movement costs nothing (nothing useful can be
+    # pushed through a dynamic-JSON rewrite).
+    udf = _normalize_udf.asNondeterministic()
     return df.withColumn("norm", udf(F.col(raw_col)))

@@ -4,16 +4,17 @@ One declarative DAG per run:
 
     file pairs (S1-S4) -> metadata + keys (S6-S7)
       -> decrypt/gunzip/split (S8-S10)  [or plain JSONL]
-      -> normalize (T1-T7/T10/K1/K3) + body encrypt (T8), one pandas
-         UDF pass; without encryption the body passes through
+      -> normalize (T1-T7/T10/K1/K3) + body encrypt (T8), one Arrow
+         pass; without encryption the body passes through
       -> row key (K2) + table names (W4)
       -> time-range status (F3) + exists status (F4) on every row
       -> [persisted] -> envelope (T9) on the valid rows
       -> KV sink (W2) + manifest sink (W5) + counts report (F5, one
          aggregate over the persisted frame — no join-back)
 
-For encrypted dumps Python runs twice per record, in the same task,
-one task per input file: the decrypt stage and the normalize UDF.
+For encrypted dumps Python runs once per record, one task per input
+file: the decrypt stage normalizes (and encrypts) each batch it emits.
+Any other lines frame goes through the normalize Arrow UDF.
 
 Run modes (W7, HBaseWriter.kt:605-606): "import", "manifest",
 "import_and_manifest".
@@ -86,7 +87,9 @@ def process_lines(
     persist: bool = False,
 ) -> PipelineResult:
     """Record lines -> fully processed DataFrames. `lines` must carry
-    (db, collection, file_number, line_no, raw_json).
+    (db, collection, file_number, line_no, raw_json). The frame
+    read_encrypted_jsonl returns (not one derived from it) is
+    normalized inside its decrypt stage.
 
     ``persist=True`` caches the normalized frame (MEMORY_AND_DISK),
     with its filter status and, under ``encrypt=True``, its ciphertext
@@ -113,9 +116,9 @@ def process_lines(
     # T8 rides the normalize pass: the batch key is closure-captured
     # there, NOT F.lit — a plan-literal key is visible in explain()/the
     # Spark UI/event logs (see encrypt_body)
-    norm = normalize_records(
-        lines, data_key_b64=cfg.data_key_b64 if cfg.encrypt else None
-    )
+    key = cfg.data_key_b64 if cfg.encrypt else None
+    fused = getattr(lines, "_normalized", None)
+    norm = fused(key) if fused else normalize_records(lines, data_key_b64=key)
     norm = with_table_names(flatten_normalized(norm))
     # F3 + F4 as a status on EVERY row, so the F5 counts aggregate this
     # one frame. Invalid rows carry no version and no key, so they read

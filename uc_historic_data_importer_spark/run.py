@@ -208,15 +208,17 @@ def main(argv: list[str] | None = None) -> int:
         existing=existing,
     )
     per_file = [r.asDict() for r in result.counts.collect()]
+    # every F5 counter, totalled over the files
+    totals = {
+        name: int(sum(r[name] or 0 for r in per_file))
+        for name in result.counts.columns
+        if name not in ("db", "collection", "file_number")
+    }
     report = {
         "run_mode": cfg.run_mode,
         "files_processed": len(per_file),
-        "records_processed": int(sum(r["records_total"] for r in per_file)),
-        "put_count": int(sum(r["put_count"] or 0 for r in per_file)),
-        "filtered_too_early": int(sum(r["filtered_too_early"] or 0 for r in per_file)),
-        "filtered_too_late": int(sum(r["filtered_too_late"] or 0 for r in per_file)),
-        "parse_errors": int(sum(r["parse_errors"] for r in per_file)),
-        "blank_ids": int(sum(r["blank_ids"] for r in per_file)),
+        "records_processed": totals.pop("records_total"),
+        **totals,
         "per_file": per_file,
     }
     print(json.dumps(report))
