@@ -5008,19 +5008,6 @@ class TestEnvelopeNamingGuards:
         with pytest.raises(Exception, match="NULL record_json"):
             out.collect()
 
-    def test_encrypt_body_bad_iv_length_raises_at_boundary(self, spark):
-        """r14 review batch 10: a wrong-length deterministic_iv
-        otherwise failed INSIDE the executor UDF (cryptography's
-        Cipher() ValueError, mid-job)."""
-        from uc_historic_data_importer_spark.operators.envelope import (
-            encrypt_body,
-        )
-
-        df = spark.createDataFrame([("x",)], "record_json string")
-        for bad in (b"", b"short", b"0" * 17):
-            with pytest.raises(ValueError, match="16 bytes"):
-                encrypt_body(df, data_key_b64="a" * 24, deterministic_iv=bad)
-
     def test_with_envelope_output_collision_raises(self, spark):
         """r14 review batch 10 (with_table_names class): an input frame
         already carrying `envelope` means a caller bug; withColumn
@@ -5339,20 +5326,10 @@ class TestCellAssignRandomizedParity:
 
 
 class TestRound13ReviewBatch6:
-    """r13 review batch 6 (slot-free modules): filters.py empty-key
-    probes and layout.py degenerate Morton keys. range_join.py was
-    audited in the same pass with NO findings (bounds, width, reserved
-    names and suffix clashes were already guarded)."""
-
-    def test_filters_empty_keys_raise(self, spark):
-        from uc_historic_data_importer_spark.operators import filters
-
-        df = spark.createDataFrame([(1, "a")], "k long, v string")
-        # pre-guard: bare `IndexError: list index out of range`
-        with pytest.raises(ValueError, match="keys"):
-            filters.anti_join_existing(df, df, keys=())
-        with pytest.raises(ValueError, match="keys"):
-            filters.mark_existing(df, df, keys=())
+    """r13 review batch 6 (slot-free modules): layout.py degenerate
+    Morton keys. range_join.py was audited in the same pass with NO
+    findings (bounds, width, reserved names and suffix clashes were
+    already guarded)."""
 
     def test_zorder_degenerate_key_raises(self, spark):
         from uc_historic_data_importer_spark.operators import layout

@@ -338,10 +338,28 @@ class TestPipelineSpineReviewFixes:
         for frame in (fused.records, fused.putable, fused.manifest, fused.counts):
             plan = frame._jdf.queryExecution().toString()
             assert "MapInArrow" in plan and key_b64 not in plan
-        with pytest.raises(ValueError, match="exactly one"):
-            encrypt_body(df)
-        with pytest.raises(ValueError, match="exactly one"):
-            encrypt_body(df, "kcol", data_key_b64=key_b64)
+
+    def test_encrypt_body_cells_decrypt_with_their_own_iv(self, spark):
+        """encrypt_body ciphers each body under the batch key with a
+        fresh IV per row; the body comes back with that row's IV."""
+        from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+        from uc_historic_data_importer_spark.operators.envelope import (
+            encrypt_body,
+        )
+
+        bodies = ['{"_id":"a"}', '{"_id":"b","x":"\u00e9"}', '{"_id":"a"}']
+        df = spark.createDataFrame([(b,) for b in bodies], "record_json string")
+        rows = encrypt_body(df, data_key_b64=KEY_B64).collect()
+        assert [r["record_json"] for r in rows] == bodies
+        key = base64.b64decode(KEY_B64)
+        for r in rows:
+            iv = base64.b64decode(r["iv"])
+            assert len(iv) == 16
+            dec = Cipher(algorithms.AES(key), modes.CTR(iv)).decryptor()
+            text = dec.update(base64.b64decode(r["db_object"])) + dec.finalize()
+            assert text.decode("utf-8") == r["record_json"]
+        assert len({r["iv"] for r in rows}) == len(rows)
 
     def test_unknown_run_mode_fails_loudly(self, spark):
         lines = spark.createDataFrame(

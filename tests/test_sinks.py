@@ -75,25 +75,6 @@ def test_kv_put_sink_byte_bounded_batches(spark, tmp_path):
     assert all(r.startswith("t1|") for r in rows)
 
 
-def test_bucketed_latest_has_no_shuffle(spark, tmp_path):
-    from uc_historic_data_importer_spark.operators.latest import latest_per_key
-
-    df = spark.range(1000).select(
-        F.lit("t1").alias("table"),
-        F.encode(F.col("id").cast("string"), "UTF-8").alias("key"),
-        F.md5(F.col("id").cast("string")).alias("key_hex"),
-        (F.col("id") % 7).alias("version"),
-        F.concat(F.lit("body-"), F.col("id").cast("string")).alias("envelope"),
-    )
-    sinks.kv_sink_bucketed(df, "kv_bucketed_test", str(tmp_path / "bkv"), n_buckets=4)
-    tbl = spark.table("kv_bucketed_test").withColumnRenamed("body", "envelope")
-    latest = latest_per_key(tbl, key_cols=("key_hex",), payload_cols=("envelope",))
-    plan = latest._jdf.queryExecution().executedPlan().toString()
-    # bucketing makes the groupBy(key_hex) aggregation Exchange-free
-    assert "Exchange" not in plan, plan
-    assert latest.count() == 1000
-
-
 class FlakyStore(sinks.InMemoryKVStore):
     """Writes the first `fail_after` cells of an attempt, then raises —
     the half-landed-batch failure mode the retry loop must handle."""
@@ -240,33 +221,6 @@ class TestCompaction:
         )
         # both windows run off the same (table, key_hex) exchange
         assert plan.count("Exchange hashpartitioning") == 1
-
-
-class TestBackfill:
-    def test_dynamic_overwrite_touches_only_present_partitions(self, spark, tmp_path):
-        from uc_historic_data_importer_spark import sinks
-
-        path = str(tmp_path / "kv")
-
-        def mk(table, n, ver):
-            return spark.createDataFrame(
-                [(table, f"k{i}", f"{i:02x}", ver, f"body-{table}-{ver}-{i}")
-                 for i in range(n)],
-                "table string, key string, key_hex string, version long, envelope string",
-            )
-
-        sinks.kv_sink(mk("db1:collA", 5, 1), path)
-        sinks.kv_sink(mk("db1:collB", 3, 1), path)
-
-        # backfill collA only, with new versions and FEWER rows
-        sinks.kv_backfill(mk("db1:collA", 2, 2), path)
-
-        got = spark.read.parquet(path)
-        a = got.filter(F.col("table") == "db1:collA").collect()
-        b = got.filter(F.col("table") == "db1:collB").collect()
-        # collA fully replaced (old 5 v1 rows gone), collB untouched
-        assert sorted(r["version"] for r in a) == [2, 2]
-        assert len(b) == 3 and all(r["version"] == 1 for r in b)
 
 
 class TestSchemaEvolution:
@@ -481,6 +435,7 @@ class TestKeyValueWireParity:
         import random
 
         from uc_historic_data_importer_spark import sinks
+        from uc_historic_data_importer_spark.hfile import cell_order_key
 
         random.seed(13)
         # include 0x00/0xFF-leading keys to exercise unsigned compare
@@ -505,11 +460,16 @@ class TestKeyValueWireParity:
         def _partition_cells(it):
             yield [
                 (
-                    sinks.keyvalue_sort_key(
-                        bytes(r["key"]),
-                        r["family"].encode(),
-                        r["qualifier"].encode(),
-                        r["version"],
+                    # an empty value leaves the 8-byte length header
+                    # followed by exactly the KEY portion
+                    cell_order_key(
+                        sinks.keyvalue_bytes(
+                            bytes(r["key"]),
+                            r["family"].encode(),
+                            r["qualifier"].encode(),
+                            r["version"],
+                            b"",
+                        )[8:]
                     ),
                     bytes(r["key"]),
                     r["version"],
@@ -527,29 +487,6 @@ class TestKeyValueWireParity:
         for sk, key, ver in [c for cells in per_part for c in cells]:
             by_row.setdefault(key, []).append(ver)
         assert all(vs == sorted(vs, reverse=True) for vs in by_row.values())
-
-    def test_serialize_layout_cells_stream(self, spark):
-        from uc_historic_data_importer_spark import sinks
-
-        kv = spark.createDataFrame(
-            [
-                ("t1", bytearray(b"\x01k"), "01", 2, "b2"),
-                ("t1", bytearray(b"\x01k"), "01", 1, "b1"),
-                ("t1", bytearray(b"\x00k"), "00", 1, "b0"),
-            ],
-            "table string, key binary, key_hex string, version long, "
-            "envelope string",
-        )
-        layout = sinks.hbase_bulkload_layout(kv, n_regions=1)
-        cells = [
-            bytes(r["cell"])
-            for r in sinks.serialize_layout_cells(layout).collect()
-        ]
-        assert cells == [
-            sinks.keyvalue_bytes(b"\x00k", b"cf", b"record", 1, b"b0"),
-            sinks.keyvalue_bytes(b"\x01k", b"cf", b"record", 2, b"b2"),
-            sinks.keyvalue_bytes(b"\x01k", b"cf", b"record", 1, b"b1"),
-        ]
 
 
 class TestSinksReviewFixes:

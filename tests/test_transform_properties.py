@@ -5,7 +5,10 @@ idempotent). The reference has no property tests (SURVEY.md §5); these
 guard the corners its example-based suites cannot."""
 
 import json
+import re
+from datetime import datetime, timedelta
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from uc_historic_data_importer_spark.functions.json_canonical import canonical_json
@@ -136,12 +139,42 @@ def test_orjson_fast_path_equals_stdlib(body, id_obj):
 
 
 # ---------------------------------------------------------------------------
-# Catalyst/Python timestamp-parse parity (r8 verdict prescription #3):
-# parse_hdi_timestamp_col must agree with parse_hdi_timestamp_millis on
-# EVERY input — including the SimpleDateFormat-lenient 1-6-digit integer
-# millisecond fraction ('.5' = 5 ms, '.123456' rolls into seconds) and
-# every rejection mode. One Spark job per hypothesis example, a batch of
-# candidate strings per job.
+# Timestamp parse vs a datetime-based reference: parse_hdi_timestamp_millis
+# must agree with _reference_millis on EVERY input — including the
+# SimpleDateFormat-lenient 1-6-digit integer millisecond fraction ('.5' =
+# 5 ms, '.123456' rolls into seconds), any +-hhmm offset, and every
+# rejection mode.
+
+_TS_PADDING = " \t\n\x0b\f\r"  # the ASCII set Java's regex \s matches
+_TS_SHAPE = re.compile(
+    r"(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})\.(\d{1,6})(Z|[+-]\d{4})"
+)
+_UNIX_EPOCH = datetime(1970, 1, 1)
+
+
+def _reference_millis(value):
+    """Epoch millis by datetime arithmetic: strptime rejects out-of-range
+    fields (month 13, hour 24, Feb 29 of a non-leap year, year 0000), the
+    fraction digit run counts whole milliseconds, and the offset is
+    subtracted as a timedelta."""
+    if not isinstance(value, str):
+        return None
+    m = _TS_SHAPE.fullmatch(value.strip(_TS_PADDING))
+    if m is None:
+        return None
+    stem, fraction, zone = m.groups()
+    try:
+        local = datetime.strptime(stem, "%Y-%m-%dT%H:%M:%S")
+    except ValueError:
+        return None
+    offset = timedelta(0)
+    if zone != "Z":
+        offset = timedelta(hours=int(zone[1:3]), minutes=int(zone[3:5]))
+        if zone[0] == "-":
+            offset = -offset
+    delta = local - _UNIX_EPOCH - offset + timedelta(milliseconds=int(fraction))
+    return delta // timedelta(milliseconds=1)
+
 
 _ts_fraction = st.integers(min_value=1, max_value=6).flatmap(
     lambda n: st.text(alphabet="0123456789", min_size=n, max_size=n)
@@ -155,13 +188,9 @@ _ts_zone = st.one_of(
     ).map(lambda t: f"{t[0]}{t[1]:02d}{t[2]:02d}"),
 )
 # Deliberately over-wide field ranges: out-of-range months/days/hours
-# must be REJECTED identically by both engines (Python's range checks vs
-# Spark's CORRECTED parser).
+# must be REJECTED, and pre-1970 / pre-Gregorian years must parse
+# (both sides are proleptic Gregorian).
 _ts_candidate = st.tuples(
-    # full 4-digit space: year 0000 must be REJECTED identically
-    # (datetime.date vs the Catalyst pattern's (?!0000) guard), and
-    # pre-1970 / pre-Gregorian years must parse identically (both
-    # engines are proleptic Gregorian).
     st.integers(min_value=0, max_value=2100),
     st.integers(min_value=0, max_value=13),
     st.integers(min_value=0, max_value=32),
@@ -173,39 +202,42 @@ _ts_candidate = st.tuples(
 ).map(
     lambda t: f"{t[0]:04d}-{t[1]:02d}-{t[2]:02d}T{t[3]:02d}:{t[4]:02d}:{t[5]:02d}.{t[6]}{t[7]}"
 )
+# (input, expected millis or None, test id)
+_TS_CASES = [
+    ("", None, "empty"),
+    ("2018-12-01T15:01:02Z", None, "no_fraction"),
+    ("2018-12-01T15:01:02.1234567Z", None, "seven_digit_fraction"),
+    (" 2018-12-01T15:01:02.5Z ", 1543676462005, "space_padding"),
+    ("\t2018-12-01T15:01:02.5Z\n", 1543676462005, "tab_lf_padding"),
+    ("\x0b2018-12-01T15:01:02.5Z\f\r", 1543676462005, "vt_ff_cr_padding"),
+    ("\xa02018-12-01T15:01:02.5Z", None, "nbsp_is_not_padding"),
+    ("0000-01-01T00:00:00.0Z", None, "year_0000"),
+    ("2018-12-01T15:01:02.123456+0530", 1543656785456, "six_digit_fraction_offset"),
+    ("2016-02-29T00:00:00.999999Z", 1456704999999, "leap_day"),
+    ("2015-02-29T00:00:00.1Z", None, "non_leap_feb_29"),
+]
 _ts_garbage = st.one_of(
-    st.text(max_size=30),
-    st.just(""),
-    st.just("2018-12-01T15:01:02Z"),            # no fraction -> reject
-    st.just("2018-12-01T15:01:02.1234567Z"),    # 7 digits -> reject
-    st.just(" 2018-12-01T15:01:02.5Z "),        # ASCII-ws leniency -> 5 ms
-    st.just("\t2018-12-01T15:01:02.5Z\n"),      # tab/LF padding -> 5 ms
-    st.just("\x0b2018-12-01T15:01:02.5Z\f\r"),  # VT/FF/CR padding -> 5 ms
-    st.just("\xa02018-12-01T15:01:02.5Z"),      # NBSP is NOT padding -> reject
-    st.just("0000-01-01T00:00:00.0Z"),          # proleptic year 0 -> reject
-    st.just("2018-12-01T15:01:02.123456+0530"),
-    st.just("2016-02-29T00:00:00.999999Z"),     # valid leap day
-    st.just("2015-02-29T00:00:00.1Z"),          # invalid leap day -> reject
+    st.text(max_size=30), st.sampled_from([case[0] for case in _TS_CASES])
 )
 
 
-@settings(max_examples=12, deadline=None)
-@given(batch=st.lists(st.one_of(_ts_candidate, _ts_garbage), min_size=1, max_size=24))
-def test_timestamp_col_matches_python_twin(spark, batch):
-    """Catalyst twin == Python twin, value for value and NULL for None."""
-    from pyspark.sql import functions as F
-
+@settings(max_examples=500, deadline=None)
+@given(value=st.one_of(_ts_candidate, _ts_garbage))
+def test_timestamp_parse_matches_datetime_reference(value):
     from uc_historic_data_importer_spark.functions.dates import (
-        hdi_timestamp_millis_col,
         parse_hdi_timestamp_millis,
     )
 
-    expected = [parse_hdi_timestamp_millis(s) for s in batch]
-    df = spark.createDataFrame([(s,) for s in batch], "ts string")
-    got = [
-        r["millis"]
-        for r in df.select(
-            hdi_timestamp_millis_col(F.col("ts")).alias("millis")
-        ).collect()
-    ]
-    assert got == expected, list(zip(batch, expected, got))
+    assert parse_hdi_timestamp_millis(value) == _reference_millis(value)
+
+
+@pytest.mark.parametrize(
+    "value,expected", [c[:2] for c in _TS_CASES], ids=[c[2] for c in _TS_CASES]
+)
+def test_timestamp_parse_edge_cases(value, expected):
+    from uc_historic_data_importer_spark.functions.dates import (
+        parse_hdi_timestamp_millis,
+    )
+
+    assert parse_hdi_timestamp_millis(value) == expected
+    assert _reference_millis(value) == expected

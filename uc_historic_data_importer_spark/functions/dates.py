@@ -11,8 +11,8 @@ The 1980 epoch sentinel (FilterServiceImpl.kt:84, HBaseWriter.kt:593) is a
 magic version for records with no timestamps at all; it is exempt from the
 too-early filter.
 
-Python-side versions are used inside the record-normalization pandas UDF;
-Catalyst column versions are provided for SQL-expressible paths.
+These run once per record inside the record-normalization pass, and
+parse_filter_bound uses the same parser for the time-range bounds.
 """
 
 from __future__ import annotations
@@ -21,15 +21,9 @@ import re
 import threading
 from datetime import date
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 EPOCH_KAFKA = "1980-01-01T00:00:00.000+0000"
 EPOCH_MILLIS = 315532800000
 
-# Spark datetime patterns for the two accepted formats.
-SPARK_FMT_Z_LITERAL = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-SPARK_FMT_OFFSET = "yyyy-MM-dd'T'HH:mm:ss.SSSxx"  # xx matches +0000
 KAFKA_OUT_SUFFIX = "+0000"
 
 
@@ -53,10 +47,8 @@ _ROUNDTRIP_MEMO_MAX = 8
 _ROUNDTRIP_LOCK = threading.Lock()
 _EPOCH_ORDINAL = 719163  # date(1970, 1, 1).toordinal()
 _MAX_ORDINAL = 3652059  # date(9999, 12, 31).toordinal()
-# Exactly the character class Java regex \s matches: keeps the Python
-# twin's padding leniency byte-identical to the Catalyst twin's
-# regexp_replace trim (Python's bare .strip() would also strip Unicode
-# whitespace the Catalyst side cannot see).
+# Exactly the character class Java regex \s matches (Python's bare
+# .strip() would also strip Unicode whitespace such as NBSP).
 _ASCII_WS = " \t\n\x0b\f\r"
 
 
@@ -81,9 +73,10 @@ def parse_hdi_timestamp_millis(value: str | None) -> int | None:
 
     Padding leniency is pinned to the ASCII whitespace set Java's regex
     ``\\s`` matches (space, tab, LF, VT, FF, CR) — NOT Python's full
-    Unicode ``str.strip()`` — so this twin and parse_hdi_timestamp_col
-    accept and reject byte-identical input sets (Unicode whitespace
-    like NBSP is a rejection on both sides).
+    Unicode ``str.strip()``: Unicode whitespace like NBSP is a
+    rejection. Proleptic year 0000 is rejected (``datetime.date``
+    starts at year 1). tests/test_transform_properties.py pins all of
+    this against a ``datetime``-based reference.
     """
     if not value or not isinstance(value, str):
         return None
@@ -154,66 +147,3 @@ def millis_to_kafka(millis: int) -> str:
         f"{d.year:04d}-{d.month:02d}-{d.day:02d}T{h:02d}:{mi:02d}:{s:02d}.{ms:03d}"
         + KAFKA_OUT_SUFFIX
     )
-
-
-# Catalyst-side mirror of _TS_RE: group 1 = date-time stem, group 2 =
-# fraction digit run (1-6), group 3 = zone. Java regex syntax matches
-# Python's for this pattern. The (?!0000) lookahead rejects proleptic
-# year 0, which try_to_timestamp would otherwise accept but the Python
-# twin's datetime.date() rejects (ValueError -> None) — the one field
-# where the two engines' "valid date" notions differ.
-_TS_COL_PATTERN = (
-    r"^(?!0000)(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})\.(\d{1,6})(Z|[+-]\d{4})$"
-)
-
-
-def parse_hdi_timestamp_col(col: Column) -> Column:
-    """Catalyst parse of the two accepted formats -> TimestampType.
-
-    The Spark-native twin of parse_hdi_timestamp_millis, with the SAME
-    lenient fraction semantics (SimpleDateFormat 'SSS' leniency, the
-    reference's behavior — HBaseWriter.kt:598-600): the 1-6-digit
-    fraction run is an INTEGER millisecond count, so '.5' means 5 ms
-    and '.123456' rolls 123.456 s into the seconds. Implemented by
-    pre-normalization: split the string into stem/fraction/zone with
-    one regex, parse the fraction-less stem+zone with to_timestamp
-    (CORRECTED mode rejects rolled-over fields like month 13, matching
-    the Python twin's explicit range checks), and add the integer
-    millis back. Unparseable input -> NULL (the Python twin's None).
-
-    Parity with parse_hdi_timestamp_millis is hypothesis-pinned
-    (tests/test_transform_properties.py), including the two historical
-    edge divergences: padding is trimmed with the Java-\\s character
-    class (F.trim strips only spaces — a tab-padded input would parse
-    in Python but NULL here) and proleptic year 0000 is rejected by
-    the pattern (try_to_timestamp accepts it; datetime.date does not).
-    Requires a UTC session timezone (prepare_session sets it)."""
-    s = F.regexp_replace(col, r"^\s+|\s+$", "")
-    # try_to_timestamp / the when-guarded casts keep ANSI mode (Spark 4
-    # default) from throwing on unparseable input — reject means NULL
-    # here, exactly the Python twin's None. The zone offset is computed
-    # arithmetically from the digit groups rather than parsed by
-    # java.time: SimpleDateFormat (and the Python twin) accept ANY
-    # hhmm digit pair (e.g. +1801, +9959) while java.time caps
-    # ZoneOffset at +-18:00.
-    matched = s.rlike(_TS_COL_PATTERN)
-    stem = F.regexp_extract(s, _TS_COL_PATTERN, 1)
-    zone = F.regexp_extract(s, _TS_COL_PATTERN, 3)
-    base = F.try_to_timestamp(stem, F.lit("yyyy-MM-dd'T'HH:mm:ss"))
-    offset_s = F.when(zone == "Z", F.lit(0).cast("long")).otherwise(
-        (
-            F.substring(zone, 2, 2).cast("long") * 3600
-            + F.substring(zone, 4, 2).cast("long") * 60
-        )
-        * F.when(F.substring(zone, 1, 1) == "-", -1).otherwise(1)
-    )
-    frac_millis = F.regexp_extract(s, _TS_COL_PATTERN, 2).cast("long")
-    millis = F.when(
-        matched, F.unix_millis(base) - offset_s * 1000 + frac_millis
-    )
-    return F.timestamp_millis(millis)
-
-
-def hdi_timestamp_millis_col(col: Column) -> Column:
-    """Catalyst epoch-millis of an accepted timestamp string column."""
-    return F.unix_millis(parse_hdi_timestamp_col(col))

@@ -363,8 +363,8 @@ class HFileWriter:
     """Streaming HFile v3 writer with optional GZ block compression and
     a 1..N-level data index.
 
-    Cells must arrive in CellComparator order (`keyvalue_sort_key` in
-    sinks.py); ordering is asserted, not fixed up — the upstream layout
+    Cells must arrive in CellComparator order (`cell_order_key`);
+    ordering is asserted, not fixed up — the upstream layout
     owns the sort. Memory is one data block (~``block_size``) plus the
     CURRENT index chunk per level (each capped at ``max_chunk_size``,
     leaf chunks flushed inline the way HBase's BlockIndexWriter does),

@@ -2,7 +2,7 @@
 
 transforms   T1-T7, T10: record normalization (single-pass JSON rewrite)
 keying       K1-K3: canonical id, binary row key, version millis
-filters      F1-F5: parse errors, blank ids, time range, exists anti-join
+filters      F1-F5: parse errors, blank ids, time range, exists status
 envelope     T8-T9: AES-CTR body encryption, HDI message envelope
 naming       W4: table-name derivation + collection coalescing
 latest       latest-version-per-key (the core analytical operator)

@@ -3,13 +3,14 @@
 The reference checks record existence with batched HBase ``existsAll``
 RPCs (reference ``app/batch/HbaseClient.kt:43-52``, applied per put batch
 at ``app/batch/HBaseWriter.kt:549-552``). The rebuild's exact operator is
-a ``left_anti`` join (``operators/filters.py::anti_join_existing``), but
-at 100 TB the anti-join shuffles the FULL record stream on the key. This
-module adds the standard pre-shuffle accelerator: build a Bloom filter
-over the existing-key snapshot, embed it in the plan as a constant array
-(m = 2^16 bits = 8 KB), and reject definitely-new records MAP-SIDE, so
-only the maybe-existing sliver (true positives + ~2% false positives)
-pays the exact anti-join shuffle.
+a join against the sink snapshot (``operators/filters.py::mark_existing``
+in the job, a plain ``left_anti`` join in the catalog's exists-filter
+query), but at 100 TB that join shuffles the FULL record stream on the
+key. This module adds the standard pre-shuffle accelerator: build a
+Bloom filter over the existing-key snapshot, embed it in the plan as a
+constant array (m = 2^16 bits = 8 KB), and reject definitely-new records
+MAP-SIDE, so only the maybe-existing sliver (true positives + ~2% false
+positives) pays the exact anti-join shuffle.
 
 Unlike the sketches in ``operators/sketches.py`` (whose ESTIMATES must
 hash-match the DuckDB oracle, forcing the shared engine-portable md5),

@@ -14,10 +14,10 @@ traceId, app version — MessageProducer.kt:37-39,88-90) are injectable so
 tests and oracle comparisons are deterministic (SURVEY.md §7.4.5).
 
 T8 (AESCipherService.kt:42-55): AES/CTR/NoPadding with a fresh random
-16-byte IV per record, base64 output (aes_ctr_b64). The job runs it
+16-byte IV per record, base64 output (encrypt_record). The job runs it
 inside the normalize pass (transforms.normalize_batch with a data
-key); encrypt_body is the standalone Arrow-batched pandas UDF over a
-body column. A pass-through mode keeps the pipeline fully deterministic
+key); encrypt_body applies it to an already-normalized frame as an
+Arrow UDF. A pass-through mode keeps the pipeline fully deterministic
 for correctness oracles (FIXTURES.md §4).
 """
 
@@ -27,10 +27,9 @@ import base64
 import os
 from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 @dataclass(frozen=True)
@@ -130,80 +129,31 @@ def envelope_col(
 
 # --- T8: AES-CTR body encryption -------------------------------------------
 
-_CRYPTO_SCHEMA = T.StructType(
-    [
-        T.StructField("iv", T.StringType()),
-        T.StructField("ciphertext", T.StringType()),
-    ]
-)
 
-
-def aes_ctr_b64(text: str, key: bytes, iv: bytes) -> str:
-    """base64 AES/CTR/NoPadding ciphertext of ``text`` (UTF-8) under
-    ``key``/``iv`` — one record body (AESCipherService.kt:42-55)."""
+def encrypt_record(text: str, key: bytes) -> tuple[str, str]:
+    """One record body (UTF-8) under ``key`` with AES/CTR/NoPadding and a
+    fresh random 16-byte IV (AESCipherService.kt:42-55). Returns the
+    base64 ciphertext and the base64 IV."""
     from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
+    iv = os.urandom(16)
     enc = Cipher(algorithms.AES(key), modes.CTR(iv)).encryptor()
     ct = enc.update(text.encode("utf-8")) + enc.finalize()
-    return base64.b64encode(ct).decode("ascii")
-
-
-def _encrypt_series(
-    body: pd.Series, key_b64, fixed_iv: bytes | None
-) -> pd.DataFrame:
-    """``key_b64`` is a per-record Series OR a single str (one batch
-    key captured in the UDF closure)."""
-    keys = (
-        [key_b64] * len(body) if isinstance(key_b64, str) else key_b64
+    return (
+        base64.b64encode(ct).decode("ascii"),
+        base64.b64encode(iv).decode("ascii"),
     )
-    if body.isnull().any():
-        # a NULL body reaching the cipher is a pipeline bug (the valid
-        # filter runs upstream); text.encode(None) would surface as an
-        # opaque AttributeError deep in an executor — name it instead
-        raise ValueError(
-            "encrypt_body: NULL record_json in batch; filter invalid "
-            "records before encryption"
-        )
-    ivs, cts = [], []
-    for text, kb64 in zip(body, keys):
-        iv = fixed_iv if fixed_iv is not None else os.urandom(16)
-        cts.append(aes_ctr_b64(text, base64.b64decode(kb64), iv))
-        ivs.append(base64.b64encode(iv).decode("ascii"))
-    return pd.DataFrame({"iv": ivs, "ciphertext": cts})
 
 
-def encrypt_body(
-    df: DataFrame,
-    data_key_b64_col: str | None = None,
-    body_col: str = "record_json",
-    deterministic_iv: bytes | None = None,
-    data_key_b64: str | None = None,
-) -> DataFrame:
-    """Add `db_object` (base64 ciphertext) and `iv` columns.
+def encrypt_body(df: DataFrame, data_key_b64: str) -> DataFrame:
+    """Add `db_object` (base64 ciphertext of `record_json`) and `iv`
+    columns, each record under the run's batch data key with its own
+    random IV (encrypt_record).
 
-    AES/CTR/NoPadding with a per-record random 16-byte IV, exactly the
-    reference cipher (AESCipherService.kt:42-55). `deterministic_iv` is a
-    test hook (reference IVs are random, SURVEY.md §7.4.5).
-
-    The key arrives EITHER per record (``data_key_b64_col``) or as one
-    batch key (``data_key_b64``). The batch form ships the key in the
-    cloudpickled UDF closure, NEVER as a plan literal: an F.lit'd key
-    appears verbatim in explain() output, the Spark UI SQL tab, and
-    persisted event logs — handing the run's decryption key to anyone
-    with UI or history-server access."""
-    if (data_key_b64_col is None) == (data_key_b64 is None):
-        raise ValueError(
-            "pass exactly one of data_key_b64_col / data_key_b64"
-        )
-    if deterministic_iv is not None and len(deterministic_iv) != 16:
-        # r14 review batch 10: a wrong-length IV otherwise surfaces as
-        # a cryptography ValueError INSIDE the executor UDF, mid-job,
-        # with a stack trace pointing at Cipher() instead of the test
-        # hook that passed it
-        raise ValueError(
-            f"deterministic_iv must be exactly 16 bytes, got "
-            f"{len(deterministic_iv)}"
-        )
+    The key ships in the cloudpickled UDF closure, NEVER as a plan
+    literal: an F.lit'd key appears verbatim in explain() output, the
+    Spark UI SQL tab, and persisted event logs — handing the run's
+    decryption key to anyone with UI or history-server access."""
     if "_enc" in df.columns:
         # skew.py-style reserved-name guard (r12 review batch 4): the
         # withColumn below would silently REPLACE a user column named
@@ -213,32 +163,41 @@ def encrypt_body(
             "temp name; rename it first"
         )
 
-    if data_key_b64 is not None:
+    @F.arrow_udf("struct<db_object:string,iv:string>")
+    def _udf(body: pa.Array) -> pa.Array:
+        if body.null_count:
+            # a NULL body reaching the cipher is a pipeline bug (the
+            # valid filter runs upstream); text.encode(None) would
+            # surface as an opaque AttributeError deep in an executor —
+            # name it instead
+            raise ValueError(
+                "encrypt_body: NULL record_json in batch; filter invalid "
+                "records before encryption"
+            )
+        key = base64.b64decode(data_key_b64)
+        out = [encrypt_record(text, key) for text in body.to_pylist()]
+        return pa.StructArray.from_arrays(
+            [
+                pa.array([ct for ct, _ in out], pa.string()),
+                pa.array([iv for _, iv in out], pa.string()),
+            ],
+            names=["db_object", "iv"],
+        )
 
-        @F.pandas_udf(_CRYPTO_SCHEMA)
-        def _udf(body: pd.Series) -> pd.DataFrame:
-            return _encrypt_series(body, data_key_b64, deterministic_iv)
-
-        res = _udf(F.col(body_col))
-    else:
-
-        @F.pandas_udf(_CRYPTO_SCHEMA)
-        def _udf(body: pd.Series, key: pd.Series) -> pd.DataFrame:
-            return _encrypt_series(body, key, deterministic_iv)
-
-        res = _udf(F.col(body_col), F.col(data_key_b64_col))
-    return df.withColumn("_enc", res).withColumn(
-        "db_object", F.col("_enc.ciphertext")
-    ).withColumn("iv", F.col("_enc.iv")).drop("_enc")
+    return (
+        df.withColumn("_enc", _udf(F.col("record_json")))
+        .withColumns({"db_object": F.col("_enc.db_object"), "iv": F.col("_enc.iv")})
+        .drop("_enc")
+    )
 
 
-def passthrough_body(df: DataFrame, body_col: str = "record_json") -> DataFrame:
+def passthrough_body(df: DataFrame) -> DataFrame:
     """No-crypto mode: dbObject = the plaintext body, empty IV. The body
     JSON contains quotes, so the envelope's dbObject splice uses a
     JSON-escaped copy to stay valid JSON."""
     backslash = F.lit("\\")
     escaped = F.replace(
-        F.replace(F.col(body_col), backslash, F.lit("\\\\")),
+        F.replace(F.col("record_json"), backslash, F.lit("\\\\")),
         F.lit('"'),
         F.lit('\\"'),
     )

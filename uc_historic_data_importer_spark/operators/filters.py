@@ -1,11 +1,12 @@
 """F1-F5: record filtering (SURVEY.md §2.2) — pure Catalyst predicates and
-one anti-join.
+one join.
 
 The reference applies these per record / per batch with RPCs
 (FilterServiceImpl.kt:15-37, HbaseClient.kt:43-52); here they are
 declarative predicates Catalyst can push down, and the exists-check is a
-`left_anti` join — the scalable form of the batched existsAll GETs (never
-per-row RPC; at 100 TB AQE picks broadcast vs shuffle side automatically).
+left join against the deduplicated sink snapshot that marks each row's
+status — the scalable form of the batched existsAll GETs (never per-row
+RPC; at 100 TB AQE picks broadcast vs shuffle side automatically).
 """
 
 from __future__ import annotations
@@ -74,62 +75,34 @@ def with_filter_status(
     df: DataFrame,
     earlier_than: str | None = None,
     later_than: str | None = None,
-    version_col: str = "version",
 ) -> DataFrame:
     """F3: add `filter_status` column from the configured bounds."""
     return df.withColumn(
         "filter_status",
         filter_status_col(
-            F.col(version_col),
+            F.col("version"),
             parse_filter_bound(earlier_than),
             parse_filter_bound(later_than),
         ),
     )
 
 
-def anti_join_existing(
-    df: DataFrame,
-    existing: DataFrame,
-    keys: tuple[str, ...] = ("table", "key_hex", "version"),
-) -> DataFrame:
-    """F4: drop records already present in the sink snapshot.
-
-    The scalable twin of HbaseClient.nonExistent's batched existsAll GETs
-    (HbaseClient.kt:43-52): a left_anti join on (table, key, version).
-    Hash keys are uniformly distributed (CRC-prefixed), so the shuffle is
-    skew-free; when the existing snapshot is small Catalyst broadcasts it.
-    No dedup of the snapshot side: left_anti output is identical whether
-    or not the right side has duplicates, and the aggregate would cost a
-    full extra shuffle of the snapshot at scale.
-    """
-    if not keys:
-        # pre-guard (r13 review batch 6): empty keys crashed as a bare
-        # IndexError inside the join instead of naming the
-        # misconfiguration
-        raise ValueError("keys must be non-empty")
-    return df.join(existing.select(*keys), list(keys), "left_anti")
-
-
-def mark_existing(
-    df: DataFrame,
-    existing: DataFrame,
-    keys: tuple[str, ...] = ("table", "key_hex", "version"),
-) -> DataFrame:
-    """F4 as a STATUS, not a drop: rows whose (table, key, version)
+def mark_existing(df: DataFrame, existing: DataFrame) -> DataFrame:
+    """F4 as a STATUS, not a drop: rows whose (table, key_hex, version)
     already exists in the sink snapshot get filter_status=FilterExists
     (only where the time-range filter passed them — the reference's
     exists check runs after the range gate, HBaseWriter.kt:549-552), so
     the F5 accounting can report filtered_exists and put_count matches
     the rows actually delivered to the sink. The snapshot side IS
     deduplicated here: a plain left join against duplicate keys would
-    multiply the left rows."""
-    if not keys:
-        # same bare-IndexError class as anti_join_existing (r13 review)
-        raise ValueError("keys must be non-empty")
+    multiply the left rows. Hash keys are uniformly distributed
+    (CRC-prefixed), so the join's shuffle is skew-free; when the
+    snapshot is small Catalyst broadcasts it."""
+    keys = ["table", "key_hex", "version"]
     marker = (
         existing.select(*keys).distinct().withColumn("_exists", F.lit(1))
     )
-    out = df.join(marker, list(keys), "left")
+    out = df.join(marker, keys, "left")
     status = F.when(
         (F.col("filter_status") == FILTER_NOT) & F.col("_exists").isNotNull(),
         F.lit(FILTER_EXISTS),
@@ -142,12 +115,12 @@ def valid_records(df: DataFrame) -> DataFrame:
     return df.filter(F.col("valid"))
 
 
-def filter_counts(df: DataFrame, by: tuple[str, ...] = ("db", "collection", "file_number")) -> DataFrame:
+def filter_counts(df: DataFrame) -> DataFrame:
     """F5: per-file accounting of put/filtered counts
     (HBaseWriter.kt:309-314) — one aggregation over the whole run instead
     of per-file mutable counters."""
     return (
-        df.groupBy(*[F.col(c) for c in by])
+        df.groupBy("db", "collection", "file_number")
         .agg(
             F.count(F.lit(1)).alias("records_total"),
             F.count_if(F.col("skip_reason") == "parse_error").alias("parse_errors"),

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from uc_historic_data_importer_spark.functions.keys import row_key_col, row_key_hex
 
 
-def with_row_key(df: DataFrame, canonical_id_col: str = "canonical_id") -> DataFrame:
+def with_row_key(df: DataFrame) -> DataFrame:
     """Add `key` (BinaryType) and `key_hex` columns.
 
     key = 4-byte big-endian CRC32(canonical_id) || utf8(canonical_id).
@@ -32,7 +32,7 @@ def with_row_key(df: DataFrame, canonical_id_col: str = "canonical_id") -> DataF
             f"input columns {sorted(taken)} collide with with_row_key's "
             "output columns; rename them first"
         )
-    c = F.col(canonical_id_col)
+    c = F.col("canonical_id")
     return df.withColumn("key", row_key_col(c)).withColumn("key_hex", row_key_hex(c))
 
 

@@ -51,9 +51,7 @@ def table_name(db: Column, collection: Column) -> Column:
     return out
 
 
-def with_table_names(
-    df: DataFrame, db_col: str = "db", collection_col: str = "collection"
-) -> DataFrame:
+def with_table_names(df: DataFrame) -> DataFrame:
     """Add `table` and the final `collection_out` column.
 
     `collection_out` is the coalesced collection (dashes preserved) unless
@@ -74,7 +72,7 @@ def with_table_names(
             f"input columns {sorted(taken)} collide with "
             "with_table_names's output columns; rename them first"
         )
-    base = _base_table(F.col(db_col), F.col(collection_col))
+    base = _base_table(F.col("db"), F.col("collection"))
     tbl = base
     archived = F.lit(False)
     for src, dst in _ARCHIVE_MAP.items():
@@ -83,5 +81,5 @@ def with_table_names(
         archived = archived | hit
     coll_out = F.when(
         archived, F.regexp_extract(tbl, "^[^:]+:(.*)$", 1)
-    ).otherwise(coalesced_collection(F.col(collection_col)))
+    ).otherwise(coalesced_collection(F.col("collection")))
     return df.withColumn("table", tbl).withColumn("collection_out", coll_out)

@@ -573,9 +573,9 @@ def segment_clean_docs(
       precompiled frozenset: O(1) hash probe per segment instead of
       up-to-5000 codegen string compares; the list ships once per
       worker in the closure, like a broadcast. Measured round 7 at the
-      sf1 soak (5000-entry list, 50k docs, ~750k segments,
-      tools/bench_segment_clean.py): 22.9 s literal vs 1.4 s set —
-      16x. Results are IDENTICAL (membership is exact either way), so
+      sf1 soak (5000-entry list, 50k docs, ~750k segments, min-of-3;
+      HISTORY.md, round 7, "segment_cleaned_corpus: 16x"): 22.9 s
+      literal vs 1.4 s set — 16x. Results are IDENTICAL (membership is exact either way), so
       the dispatch is purely a cost choice and the DuckDB oracle
       replays both branches bit-for-bit.
 

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import base64
 import json
-import os
 from typing import Any
 
 try:  # optional fast path; environment may lack it
@@ -124,7 +123,7 @@ from uc_historic_data_importer_spark.functions.json_canonical import (
     canonical_json,
     canonicalize_id,
 )
-from uc_historic_data_importer_spark.operators.envelope import aes_ctr_b64
+from uc_historic_data_importer_spark.operators.envelope import encrypt_record
 
 MONGO_DELETE = "MONGO_DELETE"
 MONGO_IMPORT = "MONGO_IMPORT"
@@ -424,9 +423,7 @@ def _with_ciphertext(out: dict, key: bytes) -> dict:
     under the batch key with a fresh random IV; invalid rows carry
     NULL ciphertext and IV."""
     if out["valid"]:
-        iv = os.urandom(16)
-        out["db_object"] = aes_ctr_b64(out["record_json"], key, iv)
-        out["iv"] = base64.b64encode(iv).decode("ascii")
+        out["db_object"], out["iv"] = encrypt_record(out["record_json"], key)
     else:
         out["db_object"] = out["iv"] = None
     return out
@@ -446,13 +443,12 @@ def normalize_batch(lines: list[str | None], data_key_b64: str | None = None) ->
 
 def normalize_records(
     df: DataFrame,
-    raw_col: str = "raw_json",
     min_partitions: int | None = None,
     data_key_b64: str | None = None,
 ) -> DataFrame:
     """Apply the full T1-T7/T10/K1/K3 normalization to a lines DataFrame.
 
-    Input: any DataFrame with a `raw_col` string column (plus pass-through
+    Input: any DataFrame with a `raw_json` string column (plus pass-through
     context columns such as db/collection/file_number/line_no).
     Output: input columns + `norm` struct column (NORMALIZED_SCHEMA).
 
@@ -460,7 +456,8 @@ def normalize_records(
     Python pass also encrypts each valid body and `norm` follows
     KEYED_NORMALIZED_SCHEMA (`db_object`/`iv` added, NULL on invalid
     rows), so the job crosses into Python once per record. The key
-    rides the UDF closure, never a plan literal (see encrypt_body), and
+    rides the UDF closure, never a plan literal (an F.lit'd key is
+    readable in explain(), the Spark UI and event logs), and
     that UDF is non-deterministic for a second reason: its IVs are
     random, so a re-evaluation would yield different ciphertext.
 
@@ -487,4 +484,4 @@ def normalize_records(
     # Blocking optimizer movement costs nothing (nothing useful can be
     # pushed through a dynamic-JSON rewrite).
     udf = _normalize_udf.asNondeterministic()
-    return df.withColumn("norm", udf(F.col(raw_col)))
+    return df.withColumn("norm", udf(F.col("raw_json")))

@@ -115,7 +115,7 @@ def process_lines(
         raise ValueError("encrypt=True requires data_key_b64")
     # T8 rides the normalize pass: the batch key is closure-captured
     # there, NOT F.lit — a plan-literal key is visible in explain()/the
-    # Spark UI/event logs (see encrypt_body)
+    # Spark UI/event logs
     key = cfg.data_key_b64 if cfg.encrypt else None
     fused = getattr(lines, "_normalized", None)
     norm = fused(key) if fused else normalize_records(lines, data_key_b64=key)

@@ -48,32 +48,6 @@ def read_kv(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def kv_sink_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    n_buckets: int = 32,
-) -> None:
-    """W2 alternative for repeat-query workloads: the versioned-cell
-    table bucketed (and sorted) on key_hex via saveAsTable.
-
-    Bucketing pre-shuffles ONCE at write time; every subsequent
-    latest-per-key aggregation, (key, version) exists anti-join, or
-    key-equi self-join reads bucket-local data and plans WITHOUT an
-    Exchange (verified in tests/test_sinks.py::test_bucketed_latest_has_no_shuffle).
-    At 100 TB that converts the hottest recurring query from a full
-    shuffle into a scan."""
-    (
-        df.select("table", "key", "key_hex", "version", F.col("envelope").alias("body"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "key_hex")
-        .sortBy("key_hex", "version")
-        .option("path", path)
-        .saveAsTable(table_name)
-    )
-
-
 def compact_kv(
     spark,
     path: str,
@@ -656,51 +630,6 @@ def keyvalue_bytes(
     return struct.pack(">ii", len(key), len(value)) + key + value
 
 
-def keyvalue_sort_key(
-    row: bytes,
-    family: bytes,
-    qualifier: bytes,
-    timestamp: int,
-    key_type: int = KEYVALUE_TYPE_PUT,
-) -> tuple:
-    """HBase CellComparator total order: row, family, qualifier all
-    ascending unsigned-byte-lexicographic (Python bytes compare IS
-    unsigned memcmp), then timestamp DESCENDING, then type DESCENDING
-    (so deletes sort before puts at the same timestamp)."""
-    return (row, family, qualifier, -timestamp, 0xFF - key_type)
-
-
-def serialize_layout_cells(layout: DataFrame) -> DataFrame:
-    """Executable slice of the HFile write: map each
-    ``hbase_bulkload_layout`` row to its KeyValue bytes, preserving the
-    layout's partition-local order — per partition, exactly the cell
-    stream an HFile for that region would contain. Pure projection, no
-    shuffle; a connector appends the HFile block/index framing."""
-    import pandas as pd
-
-    def _ser(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "table": pdf["table"],
-                    "cell": [
-                        keyvalue_bytes(
-                            bytes(r.key),
-                            r.family.encode(),
-                            r.qualifier.encode(),
-                            int(r.version),
-                            r.body.encode()
-                            if isinstance(r.body, str)
-                            else bytes(r.body),
-                        )
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    return layout.mapInPandas(_ser, schema="table string, cell binary")
-
-
 def write_hfiles(
     layout: DataFrame,
     out_dir: str,
@@ -950,23 +879,3 @@ def upload_manifests(
         p: send_manifest(uploader, p, bucket, prefix, max_attempts)
         for p in paths
     }
-
-
-def kv_backfill(df: DataFrame, path: str) -> None:
-    """Partition-scoped re-import (W7's re-run mode done right at
-    scale): dynamic partition overwrite replaces ONLY the `table=`
-    partitions present in this batch — re-importing one collection
-    never touches (or rewrites) any other collection's cells, and a
-    crashed backfill leaves untouched partitions readable.
-
-    This is the idempotent fix-one-collection operation the reference
-    performs by re-running the whole job against a table it truncates
-    (`docs/running.md` re-run guidance); with dynamic overwrite the
-    blast radius is exactly the collections being re-imported."""
-    (
-        df.select("table", "key", "key_hex", "version", F.col("envelope").alias("body"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("table")
-        .parquet(path)
-    )
