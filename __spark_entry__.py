@@ -57,8 +57,8 @@ _MAX_STALENESS_ROUNDS = 3
 # they must re-record this round. Produced by
 #   python3 tools/modified_queries.py sketches.log_bucket \
 #     sketches.hist_counts sketches.hist_quantiles sketches.hist_quantiles_sql \
-#     multimodal.resize_images multimodal.audio_window_features \
-#     dedup.shingle_coverage_stats skew.salted_agg skew.salted_join \
+#     multimodal.audio_window_features dedup.shingle_coverage_stats \
+#     skew.salted_agg skew.salted_join \
 #     stream_pipeline.read_jsonl_stream stream_pipeline.session_counts_stream \
 #     stream_pipeline.windowed_counts keying.with_row_key
 # minus normalize_pipeline, which the staleness rule already sorts first.

@@ -154,9 +154,10 @@ class TestZorder:
         )
         plain_dir, z_dir = str(tmp_path / "plain"), str(tmp_path / "zord")
         df.repartition(files).write.parquet(plain_dir)
-        layout.zorder_layout(df, ["x", "y"], num_files=files).drop(
-            "_z"
-        ).write.parquet(z_dir)
+        z = layout.zorder_key([F.col("x"), F.col("y")])
+        df.repartitionByRange(files, z).sortWithinPartitions(z).write.parquet(
+            z_dir
+        )
 
         def _stat(md, i, col):
             rg = md.row_group(i)

@@ -305,11 +305,6 @@ class TestMultimodal:
         # empty payload -> decoder error surfaced as sentinel, row kept
         assert feats[3]["width"] == -1 and feats[3]["feature"] is None
 
-    def test_media_dedup_keys_jvm_side(self, media):
-        keys = {r["media_id"]: r for r in multimodal.media_dedup_keys(media).collect()}
-        assert keys[1]["content_sha"] == keys[2]["content_sha"]
-        assert keys[1]["n_bytes"] == 18
-
     def test_frame_sample_plan(self, media):
         frames = multimodal.frame_sample_plan(media, every_n_seconds=5).collect()
         assert sorted(r["frame_ts_s"] for r in frames) == [0, 5, 10]
@@ -324,44 +319,17 @@ class TestMultimodal:
             multimodal.frame_sample_plan(media, every_n_seconds=0)
         with pytest.raises(ValueError, match="every_n_seconds"):
             multimodal.frame_sample_plan(media, every_n_seconds=-5)
-        with pytest.raises(ValueError, match="chunk_s"):
-            multimodal.audio_chunk_plan(media, chunk_s=0, overlap_s=-1)
-        with pytest.raises(ValueError, match="overlap_s"):
-            multimodal.audio_chunk_plan(media, chunk_s=30, overlap_s=-1)
 
     def test_degenerate_media_params_raise_at_boundary(self, media):
         """r13 read-only audit, fixed r14: audio_window_features(window=0)
         was a ZeroDivisionError INSIDE the executor UDF and window<0
-        silently returned an EMPTY frame table (range(negative));
-        resize_images(width/height<1) degenerated inside the Arrow batch
-        and >65535 would OverflowError on the 2-byte dim tag. All must
-        raise ValueError at plan-build time."""
+        silently returned an EMPTY frame table (range(negative)). It
+        must raise ValueError at plan-build time."""
         import pytest
 
         for bad in (0, -80):
             with pytest.raises(ValueError, match="window"):
                 multimodal.audio_window_features(media, window=bad)
-        for w, h in ((0, 8), (8, 0), (-1, 8), (8, -1)):
-            with pytest.raises(ValueError, match="width and height"):
-                multimodal.resize_images(media, width=w, height=h)
-        for w, h in ((70000, 8), (8, 70000)):
-            with pytest.raises(ValueError, match="65535"):
-                multimodal.resize_images(media, width=w, height=h)
-
-    def test_audio_chunk_plan(self, spark):
-        rows = [
-            (10, "audio", bytearray(b"pcm"), "audio/wav",
-             {"duration_s": "70", "sample_rate": "8000"}),
-            (11, "video", bytearray(b"mp4"), "video/mp4", {"duration_s": "70"}),
-        ]
-        df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        chunks = multimodal.audio_chunk_plan(df, chunk_s=30, overlap_s=5).collect()
-        assert all(r["media_id"] == 10 for r in chunks)  # video excluded
-        assert [r["chunk_start_s"] for r in chunks] == [0, 25, 50]
-        last = chunks[-1]
-        assert last["chunk_end_s"] == 70
-        assert last["start_frame"] == 50 * 8000
-        assert last["n_frames"] == 20 * 8000
 
     def test_extract_features_real_png_decode(self, spark):
         # genuine decode: dims come from IHDR/pixels, not the md5 stub
@@ -382,17 +350,6 @@ class TestMultimodal:
         assert feats[31]["width"] == 64 + __import__("hashlib").md5(
             b"not-an-image"
         ).digest()[0]
-
-    def test_resize_real_png_payload(self, spark):
-        from uc_historic_data_importer_spark.functions import imagecodec as ic
-
-        src = ic.encode_png(4, 4, 3, bytes(range(48)))
-        rows = [(40, "image", bytearray(src), "image/png", {})]
-        df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        out = multimodal.resize_images(df, 8, 6).collect()[0]
-        w, h, ch, px = ic.decode_png(bytes(out["payload"]))
-        assert (w, h, ch) == (8, 6, 3)
-        assert px[:3] == bytes(range(3))  # top-left pixel preserved
 
     def test_degenerate_duration_assets_skipped(self, spark):
         # missing / zero / unparseable duration_s: no zero-length work
@@ -418,22 +375,6 @@ class TestMultimodal:
         frames = multimodal.frame_sample_plan(df, every_n_seconds=5).collect()
         assert {r["media_id"] for r in frames} == {23}
         assert sorted(r["frame_ts_s"] for r in frames) == [0, 5]
-        chunks = multimodal.audio_chunk_plan(df, chunk_s=30, overlap_s=5).collect()
-        assert {r["media_id"] for r in chunks} == {26}
-        assert all(r["n_frames"] > 0 for r in chunks)
-
-    def test_resize_binary_roundtrip(self, media):
-        out = {r["media_id"]: r for r in multimodal.resize_images(media, 128, 64).collect()}
-        # image rows transformed: tagged header with requested dims
-        p1 = bytes(out[1]["payload"])
-        assert p1[:4] == b"RSZ1"
-        assert int.from_bytes(p1[4:6], "big") == 128
-        assert int.from_bytes(p1[6:8], "big") == 64
-        # identical inputs -> identical resized payloads (determinism)
-        assert p1 == bytes(out[2]["payload"])
-        # non-image passes through untouched, schema stays binary
-        assert bytes(out[4]["payload"]) == b"fake-mp4"
-        assert out[4]["target_w"] == 128
 
 
 class TestSkew:
@@ -872,7 +813,7 @@ class TestBloom:
         assert probe.filter(~F.col("maybe")).count() == 0
 
     def test_build_cache_bounded(self, spark):
-        bloom.bloom_cache_clear()
+        bloom._BUILD_CACHE.clear()
         df = spark.range(0, 10).select(F.col("id").alias("k"))
         for i in range(bloom._BUILD_CACHE_MAX + 5):
             bloom.bloom_build_cached(df, "k", cache_key=f"snap-{i}")
@@ -3164,109 +3105,6 @@ class TestCellDispatch:
         assert out[0] == 0 and out[1] == -1 and out[2] == -1
 
 
-class TestKmeansSampledFit:
-    """Parity pins for the bounded-k sample-trained quantizer fit
-    (r10 verdict item 2: kmeans_fit's k*dim driver/broadcast ceiling
-    and its declared scale route)."""
-
-    @pytest.fixture()
-    def clustered(self, spark):
-        # 4 well-separated orthogonal clusters x 32 members each, ids
-        # interleaved across clusters so any hash-sample covers all 4;
-        # tiny deterministic jitter keeps members distinct.
-        dirs = [
-            (1.0, 0.0, 0.0, 0.0),
-            (0.0, 1.0, 0.0, 0.0),
-            (0.0, 0.0, 1.0, 0.0),
-            (0.0, 0.0, 0.0, 1.0),
-        ]
-        rows = []
-        vid = 0
-        for _ in range(32):
-            for c, d in enumerate(dirs):
-                eps = ((vid * 37) % 7 - 3) / 1000.0
-                v = [
-                    x + (eps if i == (c + 1) % 4 else 0.0)
-                    for i, x in enumerate(d)
-                ]
-                rows.append((vid, v))
-                vid += 1
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    def test_mod1_is_exactly_the_full_fit(self, clustered):
-        import uc_historic_data_importer_spark.operators.similarity as sim
-
-        assert sim.kmeans_fit_sampled(
-            clustered, k=4, iters=2, sample_mod=1
-        ) == sim.kmeans_fit(clustered, k=4, iters=2)
-
-    def test_sampled_fit_assigns_identical_partitions(self, clustered):
-        """On cluster-structured data (the regime the quantizer exists
-        for) a 1/4 hash-sample reproduces the full fit's partition of
-        the corpus exactly — cells may be relabeled (init order differs
-        between the sample and the full corpus), the grouping may not.
-        Unclustered/random corpora are deliberately NOT pinned: k-means
-        on noise is unstable under ANY perturbation, sampling included —
-        there the quantizer is balancing load, not finding structure."""
-        import uc_historic_data_importer_spark.operators.similarity as sim
-
-        full = sim.kmeans_fit(clustered, k=4, iters=2)
-        samp = sim.kmeans_fit_sampled(clustered, k=4, iters=2, sample_mod=4)
-        fa = {r["vec_id"]: r["cell"]
-              for r in sim.assign_cells(clustered, full).collect()}
-        sa = {r["vec_id"]: r["cell"]
-              for r in sim.assign_cells(clustered, samp).collect()}
-
-        def partition(assign):
-            cells = {}
-            for vid, cell in assign.items():
-                cells.setdefault(cell, set()).add(vid)
-            return sorted(
-                (frozenset(s) for s in cells.values()),
-                key=lambda s: min(s),
-            )
-
-        assert partition(fa) == partition(sa)
-
-    def test_budget_ceiling_raises_and_cap_applies(self, clustered):
-        import uc_historic_data_importer_spark.operators.similarity as sim
-
-        # full fit past the budget: fail loud, name the route
-        with pytest.raises(ValueError, match="kmeans_fit_sampled"):
-            sim.kmeans_fit(clustered, k=4, iters=1, max_driver_floats=8)
-        # sampled fit CAPS k to budget // dim (8 // 4 = 2 cells)
-        cents = sim.kmeans_fit_sampled(
-            clustered, k=4, iters=1, sample_mod=1, max_driver_floats=8
-        )
-        assert len(cents) == 2
-
-    def test_sample_smaller_than_k_raises(self, clustered):
-        import uc_historic_data_importer_spark.operators.similarity as sim
-
-        with pytest.raises(ValueError, match="lower sample_mod"):
-            sim.kmeans_fit_sampled(
-                clustered, k=4, iters=1, sample_mod=10**6
-            )
-
-    def test_sampled_fit_is_deterministic(self, spark):
-        # xxhash64 sampling has no RNG: same corpus, same sample, same
-        # centroids — retry/rerun-stable like the full fit.
-        import uc_historic_data_importer_spark.operators.similarity as sim
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        )
-        a = sim.kmeans_fit_sampled(emb, k=4, iters=2, sample_mod=2)
-        b = sim.kmeans_fit_sampled(emb, k=4, iters=2, sample_mod=2)
-        assert a == b
-        assert all(
-            sum(x * x for x in c) == pytest.approx(1.0, abs=1e-9)
-            for c in a
-        )
-
-
 class TestIvf2:
     """Two-level IVF: distributed fine centroids (no k*dim broadcast),
     r10 extension past the kmeans_fit driver-budget ceiling."""
@@ -3568,10 +3406,6 @@ class TestLshBucketCap:
         assert dedup.minhash_lsh_pairs(df).count() == 66
         # capped: the over-cap buckets never materialize
         assert dedup.minhash_lsh_pairs(df, max_bucket_docs=8).count() == 0
-        stats = dedup.lsh_bucket_stats(df, max_bucket_docs=8).first()
-        assert stats["dropped_buckets"] == 4  # one per band
-        assert stats["max_bucket_docs"] == 12
-        assert stats["dropped_pair_fanout"] == 4 * 66
 
     def test_cap_no_op_on_normal_corpus(self, spark, docs):
         base = sorted(
@@ -3992,8 +3826,6 @@ class TestReviewFixesRound6:
         keys = {r["media_id"]: r["ahash"]
                 for r in mm.perceptual_keys(media).collect()}
         assert keys[1] != -1 and keys[3] == -1
-        resized = mm.resize_images(media, 8, 8).collect()
-        assert len(resized) == 3  # corrupt rows pass through, no crash
 
     def test_perceptual_keys_hash_jpegs_too(self, spark):
         from uc_historic_data_importer_spark.operators import multimodal as mm
@@ -4031,8 +3863,6 @@ class TestReviewFixesRound6:
         got = {r["media_id"]: r["count"] for r in frames.collect()}
         # 12.5 floors to 12 -> frames at 0,5,10; 0.4 floors to 0 -> skip
         assert got == {1: 3}
-        chunks = mm.audio_chunk_plan(media, chunk_s=5, overlap_s=1)
-        assert chunks.count() == 2  # 7.9 -> dur 7 -> starts 0, 4
 
 
 class TestTokenizerSeam:
@@ -4109,34 +3939,6 @@ class TestTokenizerSeam:
             docs, budget=4, encode=self._ws_encode()
         ).orderBy("doc_id").collect()
         assert [r.asDict() for r in seam] == [r.asDict() for r in default]
-
-    def test_with_token_counts_feeds_shard_assign(self, spark):
-        from uc_historic_data_importer_spark.operators import packing
-        from uc_historic_data_importer_spark.operators import text as T
-
-        docs = self._docs(spark)
-        counted = T.with_token_counts(
-            docs, encode=self._ws_encode()
-        )
-        via_seam = packing.shard_assign_by_tokens(
-            counted, target_tokens=5
-        ).orderBy("doc_id").collect()
-        counted_default = T.with_token_counts(docs)
-        # whitespace fake == tokens_col rule, but with_token_counts'
-        # default is the BPE-ish count — so compare against an explicit
-        # tokens_col recount instead
-        from pyspark.sql import functions as F
-
-        explicit = docs.withColumn(
-            "n_tokens", F.size(T.tokens_col(F.col("text")))
-        )
-        via_explicit = packing.shard_assign_by_tokens(
-            explicit, target_tokens=5
-        ).orderBy("doc_id").collect()
-        assert [r.asDict() for r in via_seam] == [
-            r.asDict() for r in via_explicit
-        ]
-        assert counted_default.columns == counted.columns
 
     def test_null_text_maps_to_null_ids(self, spark):
         from uc_historic_data_importer_spark.operators import text as T
@@ -4357,7 +4159,7 @@ class TestRound8Guards:
     def test_cdc_layout_diff_reserved_and_dotted_names(self, spark):
         """r10 review batch 2 (cdc/layout/diff/audit modules): the same
         reserved-name / dotted-name classes as latest.py."""
-        from uc_historic_data_importer_spark.operators import cdc, diff, layout
+        from uc_historic_data_importer_spark.operators import cdc, diff
 
         # cdc: dotted payload/key names resolve as FLAT columns end to end
         ch = spark.createDataFrame(
@@ -4376,14 +4178,6 @@ class TestRound8Guards:
         with pytest.raises(ValueError, match="_w"):
             cdc.latest_changes(
                 ch.withColumnRenamed("k", "_w"), ["_w"]
-            )
-        # layout: input column named like the key output must not be
-        # silently replaced
-        with pytest.raises(ValueError, match="_z"):
-            layout.zorder_layout(
-                spark.createDataFrame([(1, 2, 3)], ["a", "b", "_z"]),
-                ["a", "b"],
-                num_files=2,
             )
         # diff: a KEY named status would emit two status columns
         d = spark.createDataFrame([(1, "s", "x")], ["k", "status", "v"])
@@ -4418,9 +4212,8 @@ class TestRound8Guards:
 
 class TestRound11Advice:
     """Pins for the round-11 ADVICE fixes: kmeans_fit's pre-take(k)
-    budget probe, kmeans_fit_sampled's NULL-probe contract error,
-    ivf2_assign's unmatched-cell sentinel, and the streaming
-    _duration_ms non-positive rejection."""
+    budget probe, ivf2_assign's unmatched-cell sentinel, and the
+    streaming _duration_ms non-positive rejection."""
 
     def _corpus(self, spark, rows):
         return spark.createDataFrame(
@@ -4433,7 +4226,8 @@ class TestRound11Advice:
         corpus = self._corpus(
             spark, [(i, [float(i), 1.0]) for i in range(10)]
         )
-        with pytest.raises(ValueError, match="driver/broadcast"):
+        # the budget error names the route past it
+        with pytest.raises(ValueError, match="driver/broadcast.*ivf2_fit"):
             similarity.kmeans_fit(corpus, k=4, max_driver_floats=7)
         # under the budget the fit is unchanged
         cents = similarity.kmeans_fit(
@@ -4447,13 +4241,6 @@ class TestRound11Advice:
         corpus = self._corpus(spark, [(1, None), (2, [1.0, 0.0])])
         with pytest.raises(ValueError, match="NULL"):
             similarity.kmeans_fit(corpus, k=1)
-
-    def test_kmeans_fit_sampled_null_first_embedding_raises(self, spark):
-        from uc_historic_data_importer_spark.operators import similarity
-
-        corpus = self._corpus(spark, [(1, None), (2, [1.0, 0.0])])
-        with pytest.raises(ValueError, match="NULL"):
-            similarity.kmeans_fit_sampled(corpus, k=1, sample_mod=1)
 
     def test_ivf2_assign_unmatched_cell_keeps_row_with_sentinel(self, spark):
         """A vector (outside the fit corpus) landing in a coarse cell
@@ -5118,8 +4905,6 @@ class TestRound13Guards:
             dedup.jaccard_bucket_stats(docs, max_shingle_freq=0)
         with pytest.raises(ValueError, match="max_bucket_docs"):
             dedup.minhash_lsh_pairs(docs, max_bucket_docs=0)
-        with pytest.raises(ValueError, match="max_bucket_docs"):
-            dedup.lsh_bucket_stats(docs, max_bucket_docs=0)
         # pre-guard: threshold > 1 silently returned zero pairs
         with pytest.raises(ValueError, match="threshold"):
             dedup.jaccard_pairs(docs, threshold=1.5)
@@ -5338,9 +5123,9 @@ class TestRound13ReviewBatch6:
         # pre-guard: bits=0 / no columns made the key the CONSTANT 0 —
         # one range partition, data skipping silently defeated (probed)
         with pytest.raises(ValueError, match="bits"):
-            layout.zorder_layout(df, ["a"], num_files=2, bits=0)
+            layout.zorder_key([F.col("a")], bits=0)
         with pytest.raises(ValueError, match="1 column"):
-            layout.zorder_layout(df, [], num_files=2)
+            layout.zorder_key([])
         # oracle builder rejects the same configs (engine parity)
         with pytest.raises(ValueError, match="bits"):
             layout.zorder_key_sql(["a"], bits=0)
@@ -5351,8 +5136,10 @@ class TestRound13ReviewBatch6:
         from uc_historic_data_importer_spark.operators import layout
 
         df = spark.createDataFrame([(1, 2), (3, 1)], "a long, b long")
-        out = layout.zorder_layout(df, ["a", "b"], num_files=1, bits=4)
-        keys = {r["a"]: r["_z"] for r in out.collect()}
+        out = df.select(
+            "a", layout.zorder_key([F.col("a"), F.col("b")], bits=4).alias("z")
+        )
+        keys = {r["a"]: r["z"] for r in out.collect()}
         # interleave: a bits at even positions, b at odd
         assert keys[1] == (1 << 0) + (1 << 3)  # a=0b01, b=0b10
         assert keys[3] == (1 << 0) + (1 << 2) + (1 << 1)

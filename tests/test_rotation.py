@@ -122,7 +122,10 @@ def test_post_round_staleness_bound():
 def test_modified_queries_tool_follows_indirect_calls():
     """tools/modified_queries.py produces _MODIFIED_SINCE_RECORD. A
     change to sessions.sessionize must reach event_sessionization through
-    session_stats (the r13 precedent in the tool's docstring)."""
+    session_stats (the r13 precedent in the tool's docstring), and a
+    function called through an import alias in a query's oracle SQL must
+    reach that query: diff.encoded_value_sql (imported as _enc_sql) and
+    layout.zorder_key_sql (imported as _zsql)."""
     spec = importlib.util.spec_from_file_location(
         "modified_queries", os.path.join(REPO, "tools", "modified_queries.py"))
     mod = importlib.util.module_from_spec(spec)
@@ -131,6 +134,12 @@ def test_modified_queries_tool_follows_indirect_calls():
     hit = mod.reach(calls, {"sessionize"})
     fn = queries["event_sessionization"]
     assert hit[fn] == [fn, "session_stats", "sessionize"]
+    for changed, query in (
+        ("encoded_value_sql", "snapshot_diff_orders"),
+        ("zorder_key_sql", "zorder_stats_lineitem"),
+    ):
+        fn = queries[query]
+        assert mod.reach(calls, {changed}).get(fn) == [fn, changed], query
 
 
 def test_soak_tool_state_metrics_shape():

@@ -3,9 +3,18 @@ variant fixture, plus filter/run-mode flags."""
 
 import json
 import os
+from datetime import datetime, timezone
 
-from tests.fixtures import SKIP_EARLIER_THAN, SKIP_LATER_THAN, write_dump_file
+import pytest
+
+from tests.fixtures import (
+    SKIP_EARLIER_THAN,
+    SKIP_LATER_THAN,
+    write_dump_file,
+    write_encrypted_dump,
+)
 from uc_historic_data_importer_spark.run import main
+from uc_historic_data_importer_spark.sources.metadata import MetadataValidationError
 
 
 def test_runner_plain_jsonl(spark, tmp_path, capsys):
@@ -139,3 +148,58 @@ def test_apply_changelog_mode(spark, tmp_path):
     final = {r["id"]: r["score"]
              for r in spark.read.parquet(f"{base}/v=1").collect()}
     assert final == {1: 10.0, 3: 30.0}
+
+
+class _Stop(Exception):
+    pass
+
+
+def test_runner_stamps_one_clock_reading(spark, tmp_path, monkeypatch):
+    """RunContext.timestamp comes from ONE clock reading: a clock that
+    ticks from x.999 to x+1.000 between two reads must not stamp the
+    first read's seconds with the second read's milliseconds."""
+    from uc_historic_data_importer_spark import run as runner
+    from uc_historic_data_importer_spark.plans import pipeline
+
+    ticks = iter([
+        datetime(2024, 1, 1, 12, 0, 0, 999_000, tzinfo=timezone.utc),
+        datetime(2024, 1, 1, 12, 0, 1, 0, tzinfo=timezone.utc),
+    ])
+
+    class Clock(datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return next(ticks)
+
+    stamped = []
+
+    def capture(_spark, _lines, cfg, **_kw):
+        stamped.append(cfg.run_context.timestamp)
+        raise _Stop
+
+    monkeypatch.setattr(runner, "datetime", Clock)
+    monkeypatch.setattr(pipeline, "run", capture)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    write_dump_file(str(inp / "db.c.0001.json"))
+    with pytest.raises(_Stop):
+        main(["--input-dir", str(inp), "--plain-jsonl",
+              "--kv-path", str(tmp_path / "kv"), "--master", "local[4]"])
+    assert stamped == ["2024-01-01T12:00:00.999"]
+
+
+def test_runner_sidecar_without_plaintext_key_fails_on_driver(spark, tmp_path):
+    """Without --dks-url the sidecar's plaintextDatakey is the data key.
+    Sidecars lacking it fail on the driver with MetadataValidationError
+    naming them, not with an anonymous error inside a decrypt task."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    key = os.urandom(32)
+    for i in (1, 2):
+        write_encrypted_dump(str(inp), f"db.coll.{i:04d}", ['{"_id": "a"}'], key)
+    with pytest.raises(MetadataValidationError, match="plaintextDatakey") as ei:
+        main(["--input-dir", str(inp), "--kv-path", str(tmp_path / "kv"),
+              "--manifest-dir", str(tmp_path / "manifests"),
+              "--master", "local[4]"])
+    for i in (1, 2):
+        assert f"db.coll.{i:04d}.json.encryption.json" in str(ei.value)

@@ -19,8 +19,6 @@ def stream_dirs(tmp_path_factory):
     write_dump_file(str(inp / "database-1.collection-1.0002.json"))
     return {
         "input": str(inp),
-        "kv": str(d / "kv"),
-        "chk": str(d / "chk"),
         "chk2": str(d / "chk2"),
         "chk3": str(d / "chk3"),
     }
@@ -29,23 +27,6 @@ def stream_dirs(tmp_path_factory):
 def _run(query, timeout=120):
     query.awaitTermination(timeout)
     query.stop()
-
-
-def test_stream_to_kv_sink(spark, stream_dirs):
-    lines = sp.read_jsonl_stream(spark, stream_dirs["input"])
-    norm = sp.normalized_stream(lines)
-    q = sp.run_to_kv_sink(norm, stream_dirs["kv"], stream_dirs["chk"])
-    _run(q)
-    kv = spark.read.parquet(stream_dirs["kv"])
-    # 11 valid records per file x 2 files (same content -> same keys, both
-    # cells land because versions repeat across files: (key, version) pairs
-    # are duplicated rows in the KV log, collapsed by the latest view)
-    assert kv.count() == 22
-    assert set(kv.select("table").distinct().toPandas()["table"]) == {
-        "database_1:collection_1"
-    }
-    body = json.loads(kv.limit(1).collect()[0]["body"])
-    assert body["@type"] == "HDI"
 
 
 def test_windowed_counts(spark, stream_dirs):
@@ -479,46 +460,9 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     assert len(got) == 3
 
 
-def test_snapshot_version_pruning(spark, tmp_path):
-    import os
-
-    base = tmp_path / "snap"
-    for v in (0, 1, 2, 3, 4):
-        d = base / f"v={v}"
-        d.mkdir(parents=True)
-        (d / "part-0.parquet").write_bytes(b"x")
-        (d / "_SUCCESS").write_bytes(b"")  # committed marker
-    pruned = sp.prune_snapshot_versions(spark, str(base), keep_n=2)
-    assert pruned == [0, 1, 2]
-    assert sorted(os.listdir(base)) == ["v=3", "v=4"]
-    assert sp.latest_snapshot_version(spark, str(base)) == 4
-    assert sp.prune_snapshot_versions(spark, str(base), keep_n=5) == []
-
-
-def test_prune_keeps_replay_predecessor(spark, tmp_path):
-    """keep_n=1 would delete the newest snapshot's PREDECESSOR — the
-    fold input if the last batch replays after a torn checkpoint
-    commit — so it must be rejected, and keep_n=2 must always leave
-    that predecessor on disk."""
-    import os
-
-    import pytest
-
-    base = tmp_path / "snap"
-    for v in (6, 7):
-        d = base / f"v={v}"
-        d.mkdir(parents=True)
-        (d / "part-0.parquet").write_bytes(b"x")
-        (d / "_SUCCESS").write_bytes(b"")
-    with pytest.raises(ValueError, match="keep_n must be >= 2"):
-        sp.prune_snapshot_versions(spark, str(base), keep_n=1)
-    assert sp.prune_snapshot_versions(spark, str(base), keep_n=2) == []
-    assert sorted(os.listdir(base)) == ["v=6", "v=7"]
-
-
 def test_incomplete_snapshot_version_is_invisible(spark, tmp_path):
     # a v=N directory without _SUCCESS is an in-flight (or crashed)
-    # write: readers must not pick it, pruning must not touch it
+    # write: readers must not pick it
     base = tmp_path / "snap"
     for v, complete in ((0, True), (1, True), (2, False)):
         d = base / f"v={v}"
@@ -527,8 +471,6 @@ def test_incomplete_snapshot_version_is_invisible(spark, tmp_path):
         if complete:
             (d / "_SUCCESS").write_bytes(b"")
     assert sp.latest_snapshot_version(spark, str(base)) == 1
-    assert sp.prune_snapshot_versions(spark, str(base), keep_n=2) == []
-    assert (base / "v=2").exists()  # in-flight dir untouched
 
 
 def test_changelog_batch_replay_is_idempotent(spark, tmp_path):
@@ -635,62 +577,10 @@ def test_segment_clean_is_stream_safe(spark, tmp_path):
     assert streamed == batch
 
 
-def test_deduped_stream_survives_unordered_historic_files(spark, tmp_path):
-    """The dedup watermark rides ARRIVAL time: a batch of recent
-    versions must not make a later file of much older versions 'late'
-    (a version-time watermark silently discarded such files wholesale).
-    Two micro-batch runs, business timestamps years apart, newest
-    first — every distinct (key, version) must come through."""
-    import json
-
-    in_dir = tmp_path / "in"
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    in_dir.mkdir()
-
-    def write_file(name, rows):
-        (in_dir / name).write_text(
-            "\n".join(json.dumps(r) for r in rows) + "\n", encoding="utf-8"
-        )
-
-    def run_once():
-        lines = sp.read_jsonl_stream(spark, str(in_dir))
-        dd = sp.deduped_stream(sp.normalized_stream(lines))
-        q = (
-            dd.select("table", "key_hex", "version")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    write_file("db1.coll.0001.json", [
-        {"_id": {"id": "a"}, "lastModifiedDateTime":
-         {"$date": "2023-11-14T22:13:20.000+0000"}},
-    ])
-    run_once()
-    # second run: same collection, ANCIENT business timestamps (2011 —
-    # far beyond any 1h watermark if it rode the version clock)
-    write_file("db1.coll.0002.json", [
-        {"_id": {"id": "b"}, "lastModifiedDateTime":
-         {"$date": "2011-03-13T07:06:40.000+0000"}},
-        {"_id": {"id": "b"}, "lastModifiedDateTime":
-         {"$date": "2011-03-13T07:06:40.000+0000"}},  # dup to drop
-    ])
-    run_once()
-    rows = spark.read.parquet(out_dir).collect()
-    got = {(r["key_hex"], r["version"]) for r in rows}
-    # both records present (nothing dropped as 'late'), dup collapsed
-    assert len(got) == 2 and len(rows) == 2
-
-
 class TestStreamingReviewFixes:
-    """Round-7 streaming review pass: checkpoint/output mismatch guards,
-    torn-batch reader gate, deterministic state tie-breaks, batch/stream
-    guard parity, schema hygiene."""
+    """Round-7 streaming review pass: checkpoint/snapshot mismatch
+    guard, deterministic state tie-breaks, batch/stream guard parity,
+    schema hygiene."""
 
     def test_cdc_sink_refuses_foreign_newer_snapshots(self, spark, tmp_path):
         """A fresh checkpoint restarting batch ids at 0 against an old
@@ -705,77 +595,6 @@ class TestStreamingReviewFixes:
         b0 = spark.createDataFrame([(9, 1, "P", 9.0)], schema)
         with pytest.raises(ValueError, match="checkpoint/snapshot mismatch"):
             sp.apply_changelog_batch(b0, 0, str(base), ("id",))
-
-    def test_kv_sink_refuses_foreign_newer_batches(self, spark, tmp_path):
-        """Same guard for the KV stream sink: an output dir holding
-        batch ids newer than the current batch is foreign history."""
-        src = tmp_path / "in"
-        src.mkdir()
-        (src / "db.c.0001.json").write_text(
-            '{"_id": {"someId": "a"}, "_lastModifiedDateTime":'
-            ' {"$date": "2018-12-01T15:01:02.000Z"}}\n'
-        )
-        kv_path = tmp_path / "kv"
-        stale = kv_path / "batch_id=7"
-        stale.mkdir(parents=True)
-        (stale / "_SUCCESS").write_bytes(b"")
-        norm = sp.normalized_stream(
-            sp.read_jsonl_stream(spark, str(src))
-        )
-        q = sp.run_to_kv_sink(
-            norm, str(kv_path), str(tmp_path / "chk")
-        )
-        with pytest.raises(Exception, match="foreign history"):
-            q.awaitTermination()
-
-    def test_read_kv_stream_output_excludes_torn_batches(self, spark, tmp_path):
-        src = tmp_path / "in"
-        src.mkdir()
-        (src / "db.c.0001.json").write_text(
-            '{"_id": {"someId": "a"}, "_lastModifiedDateTime":'
-            ' {"$date": "2018-12-01T15:01:02.000Z"}}\n'
-        )
-        kv_path = str(tmp_path / "kv")
-        norm = sp.normalized_stream(sp.read_jsonl_stream(spark, str(src)))
-        q = sp.run_to_kv_sink(norm, kv_path, str(tmp_path / "chk"))
-        q.awaitTermination()
-        committed = sp.read_kv_stream_output(spark, kv_path)
-        complete_rows = committed.count()
-        assert complete_rows >= 1
-        # the no-committed-batches empty frame promises exactly this
-        # shape — pin the constant against a REAL written output so the
-        # two can never drift
-        assert [(f.name, f.dataType) for f in committed.schema.fields] == [
-            (f.name, f.dataType) for f in sp.KV_STREAM_SCHEMA.fields
-        ]
-        # simulate a torn batch: parquet data present, no _SUCCESS
-        import os
-        import shutil
-
-        torn = os.path.join(kv_path, "batch_id=99")
-        src_dir = os.path.join(kv_path, "batch_id=0")
-        shutil.copytree(src_dir, torn)
-        os.remove(os.path.join(torn, "_SUCCESS"))
-        raw = spark.read.parquet(kv_path).count()
-        gated = sp.read_kv_stream_output(spark, kv_path).count()
-        assert raw == 2 * complete_rows  # raw read sees the torn copy
-        assert gated == complete_rows  # the gate excludes it
-
-    def test_read_kv_stream_output_empty_or_missing_path(self, spark, tmp_path):
-        """A missing path, or one holding only torn batch dirs with no
-        readable footers, reads as an EMPTY frame of the KV stream
-        schema — not an AnalysisException from schema inference."""
-        out = sp.read_kv_stream_output(spark, str(tmp_path / "nope"))
-        assert out.count() == 0
-        assert [(f.name, f.dataType) for f in out.schema.fields] == [
-            (f.name, f.dataType) for f in sp.KV_STREAM_SCHEMA.fields
-        ]
-        # only a torn batch present: no _SUCCESS, torn bytes, no footer
-        torn = tmp_path / "kv" / "batch_id=0"
-        torn.mkdir(parents=True)
-        (torn / "part-00000.parquet").write_bytes(b"torn write, no footer")
-        out2 = sp.read_kv_stream_output(spark, str(tmp_path / "kv"))
-        assert out2.count() == 0
 
     def test_latest_state_fn_version_ties_break_deterministically(self):
         """Same (key, version) with different bodies: the max body wins
@@ -842,18 +661,6 @@ class TestStreamingReviewFixes:
             sp.read_jsonl_stream(spark, "/tmp/nowhere", max_files_per_trigger=0)
         with pytest.raises(ValueError, match="max_files_per_trigger"):
             sp.read_jsonl_stream(spark, "/tmp/nowhere", max_files_per_trigger=-4)
-
-    def test_deduped_stream_does_not_leak_arrival_time(self, spark, tmp_path):
-        src = tmp_path / "in"
-        src.mkdir()
-        (src / "db.c.0001.json").write_text(
-            '{"_id": {"someId": "a"}, "_lastModifiedDateTime":'
-            ' {"$date": "2018-12-01T15:01:02.000Z"}}\n'
-        )
-        norm = sp.normalized_stream(sp.read_jsonl_stream(spark, str(src)))
-        deduped = sp.deduped_stream(norm)
-        assert "arrival_time" not in deduped.columns
-        assert deduped.columns == norm.columns
 
     def test_batch_and_stream_filename_projection_share_one_definition(
         self, spark, tmp_path

@@ -19,7 +19,10 @@ function, plus the reaching path.
 
 Resolution is by SIMPLE NAME (an over-approximation: two functions
 sharing a name both count as reached) — safe for this purpose, since
-over-approximating only re-records a query early. Names are collected
+over-approximating only re-records a query early. A call through an
+import alias (`from m import f as _g`; `_g(...)`) counts as a call of
+`f`, wherever it sits in the function, its decorators included (an
+oracle SQL f-string in `@register(...)`). Names are collected
 from every FunctionDef in the package, so locally-defined closures
 shadowing a public name are indistinguishable from it; review the
 printed paths before committing the block.
@@ -42,13 +45,13 @@ def _py_files():
                 yield os.path.join(root, f)
 
 
-def _called_names(fn_node: ast.AST) -> set[str]:
+def _called_names(fn_node: ast.AST, aliases: dict[str, str]) -> set[str]:
     out = set()
     for node in ast.walk(fn_node):
         if isinstance(node, ast.Call):
             f = node.func
             if isinstance(f, ast.Name):
-                out.add(f.id)
+                out.add(aliases.get(f.id, f.id))
             elif isinstance(f, ast.Attribute):
                 out.add(f.attr)
     return out
@@ -64,9 +67,19 @@ def build_graph():
         mod = os.path.splitext(os.path.basename(path))[0]
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
+        # `from m import f as _g` -> calls of _g in this module call f
+        aliases = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
         for node in ast.walk(tree):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                calls.setdefault(node.name, set()).update(_called_names(node))
+                calls.setdefault(node.name, set()).update(
+                    _called_names(node, aliases)
+                )
                 qualified.setdefault(node.name, set()).add(mod)
                 for dec in node.decorator_list:
                     if (

@@ -1009,12 +1009,6 @@ class _HuffTable:
         return br.read_code(self)
 
 
-def _extend(v: int, cat: int) -> int:
-    if cat == 0:
-        return 0
-    return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
-
-
 def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     """Decode a baseline JPEG -> (width, height, channels, raw pixels).
 
@@ -1161,7 +1155,7 @@ def _decode_scan(
             for ci, (_cid, dc_t, ac_t, qt) in enumerate(scan):
                 coef = [0.0] * 64
                 try:
-                    # read_code called directly and _extend inlined:
+                    # read_code called directly and EXTEND inlined:
                     # this loop runs twice per coefficient and the
                     # wrapper/call overhead measurably dominates
                     cat = br.read_code(dc_t)
@@ -1291,7 +1285,7 @@ def _decode_scan_np(
         for ci, (_cid, dc_t, ac_t, qt) in enumerate(scan):
             row = coefs[ci, fill]
             try:
-                # read_code direct + _extend inlined (see scalar twin)
+                # read_code direct + EXTEND inlined (see scalar twin)
                 cat = br.read_code(dc_t)
                 if cat:
                     v = br.bits(cat)

@@ -5,7 +5,7 @@ Scope: REAL container parsing (the public ISO/IEC 14496-12 box
 structure): walk the box tree, read mvhd (timescale + duration) and
 tkhd (track dims, 16.16 fixed point). Frame DECODE is codec territory
 (H.264 et al.) and stays out of scope — at pipeline level the metadata
-parse is what drives planning (frame_sample_plan, audio_chunk_plan);
+parse is what drives planning (frame_sample_plan);
 the pixel work happens in GPU-adjacent services, not the shuffle tier.
 
 Everything raises UnsupportedVideoError on malformed/foreign payloads

@@ -217,16 +217,6 @@ class _BlockIndexEntry:
     first_key: bytes
 
 
-def _non_root_size(entries: list[_BlockIndexEntry]) -> int:
-    """BlockIndexChunk#getNonRootSize: numEntries int + secondary index
-    (n+1 ints) + per-entry (12 + keylen)."""
-    return (
-        4
-        + 4 * (len(entries) + 1)
-        + sum(_NONROOT_ENTRY_OVERHEAD + len(e.first_key) for e in entries)
-    )
-
-
 def _root_size(entries: list[_BlockIndexEntry]) -> int:
     """BlockIndexChunk#getRootSize: per-entry long + int + vint keylen +
     key bytes."""
@@ -422,7 +412,7 @@ class HFileWriter:
         self._inline_chunk: list[_BlockIndexEntry] = []
         # running non-root entry bytes (12 + keylen per entry) — the
         # BlockIndexChunk curTotalNonRootEntrySize counter; recomputing
-        # _non_root_size per flush would be quadratic per chunk
+        # the non-root size per flush would be quadratic per chunk
         self._inline_entry_bytes = 0
         self._root_chunk: list[_BlockIndexEntry] = []
         self._num_levels = 1
@@ -545,7 +535,7 @@ class HFileWriter:
         # BlockIndexWriter#shouldWriteBlock(closing=false): flush a leaf
         # once the chunk would exceed max_chunk_size AND has enough
         # entries to be worth a block. Running-counter form of
-        # _non_root_size: 4 + 4*(n+1) + entry_bytes.
+        # BlockIndexChunk#getNonRootSize: 4 + 4*(n+1) + entry_bytes.
         n = len(self._inline_chunk)
         if (
             8 + 4 * n + self._inline_entry_bytes >= self._max_chunk_size

@@ -221,12 +221,6 @@ def bloom_build_cached(
     return _BUILD_CACHE[kk]
 
 
-def bloom_cache_clear() -> None:
-    """Explicit invalidation hook for callers that mutate snapshots
-    in-place (discouraged; prefer immutable snapshot paths)."""
-    _BUILD_CACHE.clear()
-
-
 def bloom_anti_join(
     records: DataFrame,
     existing: DataFrame,

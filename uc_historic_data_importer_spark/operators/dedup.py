@@ -27,10 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.hashes import (
-    MERSENNE_61,  # noqa: F401 — re-exported for callers/tests
     md5_i64,
     perm_constants,
-    perm_hash,  # noqa: F401 — re-exported for callers/tests
     perm_hash_sql,
 )
 from uc_historic_data_importer_spark.operators.text import tokens_col
@@ -133,7 +131,7 @@ def shingle_coverage_stats(
     invisibly. One row (n_docs, n_unshingled_docs, coverage) so a
     pipeline can observe what fraction of the corpus the n-gram dedup
     family actually covered (the short-doc twin of
-    jaccard_bucket_stats / lsh_bucket_stats; route sub-n documents
+    jaccard_bucket_stats; route sub-n documents
     through exact_dup_groups, which hashes whole content and covers
     every doc).
 
@@ -163,8 +161,8 @@ def _validate_freq_cap(name: str, value: int | None) -> None:
     """df-cut / bucket caps are >= 1 or None: a cap of 0 drops EVERY
     bucket (all dfs are >= 1), so the pair/candidate result was silently
     EMPTY — the same degenerate-param class as max_iters=0 (probed r13).
-    Shared by jaccard_pairs / jaccard_bucket_stats / _bucket_pairs /
-    _cap_stats so the pairs path and its accounting twin cannot drift."""
+    Shared by jaccard_pairs / _bucket_pairs / _cap_stats so the pairs
+    path and its accounting twin cannot drift."""
     if value is not None and value < 1:
         raise ValueError(f"{name} must be >= 1 or None (got {value})")
 
@@ -212,8 +210,7 @@ def _bucket_pairs(
     bands: every-doc-identical puts the whole corpus in ONE band
     bucket — C(n,2) pairs AND an n-element aggregation buffer). Like
     jaccard_pairs' df-cut it filters rows by a count window BEFORE the
-    list aggregation, so an over-cap bucket never materializes; use
-    lsh_bucket_stats to make the drop observable (no silent caps)."""
+    list aggregation, so an over-cap bucket never materializes."""
     _validate_freq_cap("max_bucket_docs", max_bucket_docs)
     if max_bucket_docs is not None:
         from pyspark.sql.window import Window
@@ -343,10 +340,9 @@ def jaccard_bucket_stats(
 def _cap_stats(
     bs: DataFrame, cap_value: int | None, cap_name: str = "cap"
 ) -> DataFrame:
-    """Shared no-silent-caps aggregate over a (bucket -> df) frame:
+    """No-silent-caps aggregate over a (bucket -> df) frame:
     (kept_buckets, dropped_buckets, dropped_pair_fanout,
-    max_bucket_docs) — used by both the shingle and the LSH-band
-    accounting so the cap semantics cannot drift between them."""
+    max_bucket_docs)."""
     _validate_freq_cap(cap_name, cap_value)
     cap = F.lit(cap_value if cap_value is not None else (1 << 62))
     dropped = F.col("df") > cap
@@ -408,35 +404,14 @@ def minhash_lsh_pairs(
     — PROBABILISTICALLY: a pathological corpus (mass-identical docs)
     collapses a band bucket to the whole corpus. ``max_bucket_docs``
     drops over-cap buckets before any array materializes (see
-    _bucket_pairs); pair it with lsh_bucket_stats so the drop is
-    observable. Default None preserves the exact candidate contract."""
+    _bucket_pairs). Default None preserves the exact candidate
+    contract."""
     banded = minhash_band_signatures(df, num_perms, bands, text_col, id_col, n)
     # bucket-local pair expansion (one pass) instead of a banded self-join
     # (two passes over the signature computation + a shuffle join)
     return _bucket_pairs(
         banded, "band_idx", "band_sig", max_bucket_docs=max_bucket_docs
     ).distinct()
-
-
-def lsh_bucket_stats(
-    df: DataFrame,
-    num_perms: int = 16,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_bucket_docs: int | None = None,
-) -> DataFrame:
-    """No-silent-caps accounting for minhash_lsh_pairs'
-    ``max_bucket_docs``: one row (kept_buckets, dropped_buckets,
-    dropped_pair_fanout, max_bucket_docs) — the LSH twin of
-    jaccard_bucket_stats (shared _cap_stats aggregate)."""
-    bs = (
-        minhash_band_signatures(df, num_perms, bands, text_col, id_col, n)
-        .groupBy("band_idx", "band_sig")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    return _cap_stats(bs, max_bucket_docs, "max_bucket_docs")
 
 
 def minhash_band_signatures(

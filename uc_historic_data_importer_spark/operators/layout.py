@@ -11,8 +11,8 @@ works for predicates on any interleaved dimension (the Delta/Iceberg
 ``OPTIMIZE ZORDER BY`` layout, public technique from Morton 1966 /
 Databricks docs).
 
-Everything here is a pure Catalyst bit expression (whole-stage codegen,
-map-only); the layout write is ``repartitionByRange`` on the key (range
+The key is a pure Catalyst bit expression (whole-stage codegen,
+map-only); a clustered write is ``repartitionByRange`` on it (range
 exchange with sampled bounds — the only shuffle) + an in-partition sort.
 """
 
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -78,47 +78,3 @@ def zorder_key_sql(exprs: Sequence[str], bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_layout(
-    df: DataFrame,
-    cols: Sequence[str],
-    num_files: int,
-    bits: int = 16,
-    key_name: str = "_z",
-) -> DataFrame:
-    """Cluster ``df`` for a data-skipping write: compute the Morton key
-    over ``cols`` (each taken mod 2^bits — callers with non-uniform
-    domains should rank/bucketize first), range-partition into
-    ``num_files`` key ranges and sort within each. Writing the result
-    yields one tight hyper-rectangle of min-max stats per file; the key
-    column is kept so tests/audits can assert the clustering, and is
-    cheap to drop before the write.
-
-    NULLs cluster at bucket 0 of their dimension (coalesce-to-0): an
-    un-coalesced NULL would null the ENTIRE interleaved key — one NULL
-    in any single z-column and the row falls out of the layout into
-    the first range partition, unsorted on the other k-1 dimensions.
-    At a 20%-NULL column that is 20% of the table in one skewed
-    unclustered file, silently defeating the data skipping this write
-    exists for."""
-    # reserved-name guard (r10 review, the skew.py class): withColumn
-    # would silently REPLACE an input column named like the key output
-    if key_name in df.columns:
-        raise ValueError(
-            f"input column {key_name!r} collides with zorder_layout's "
-            "key output; pass a different key_name or rename the column"
-        )
-    mask = (1 << bits) - 1
-    key = zorder_key(
-        [
-            F.coalesce(F.col(c).cast("long"), F.lit(0).cast("long")).bitwiseAND(
-                F.lit(mask).cast("long")
-            )
-            for c in cols
-        ],
-        bits,
-    )
-    return (
-        df.withColumn(key_name, key)
-        .repartitionByRange(num_files, F.col(key_name))
-        .sortWithinPartitions(key_name)
-    )

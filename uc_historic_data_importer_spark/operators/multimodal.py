@@ -326,175 +326,6 @@ def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
     )
 
 
-def media_dedup_keys(media: DataFrame) -> DataFrame:
-    """Exact media dedup key: sha256 of payload, computed JVM-side
-    (F.sha2 over BinaryType — no Python needed for pure dedup)."""
-    return media.select(
-        "media_id",
-        "kind",
-        F.sha2(F.col("payload"), 256).alias("content_sha"),
-        F.octet_length(F.col("payload")).alias("n_bytes"),
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("target_w", T.IntegerType()),
-        T.StructField("target_h", T.IntegerType()),
-    ]
-)
-
-
-def _resize_image_stub(payload: bytes, w: int, h: int) -> bytes:
-    """STUB resize: deterministic fake (production: PIL resize + re-encode).
-
-    Emits a payload whose size scales with the target area so batch-size
-    behavior downstream is realistic; prefixed with a tag + dims so tests
-    can assert the transform ran per-row."""
-    if not payload:
-        raise ValueError("empty media payload")
-    tag = b"RSZ1" + w.to_bytes(2, "big") + h.to_bytes(2, "big")
-    body = hashlib.sha256(payload).digest()
-    reps = max(1, (w * h) // (64 * len(body)))
-    return tag + body * reps
-
-
-def _resize_image(payload: bytes, w: int, h: int) -> bytes:
-    """Resize dispatcher: PNG payloads get a REAL nearest-neighbor
-    resample (decode -> resample -> re-encode, still a valid PNG);
-    everything else keeps the deterministic stub."""
-    if imagecodec.sniff(payload) == "png":
-        try:
-            sw, sh, ch, px = imagecodec.decode_png(payload)
-            return imagecodec.encode_png(
-                w, h, ch, imagecodec.resize_nearest(sw, sh, ch, px, w, h)
-            )
-        except _DECODE_ERRORS:
-            pass
-    return _resize_image_stub(payload, w, h)
-
-
-def resize_images(media: DataFrame, width: int = 256, height: int = 256) -> DataFrame:
-    """Binary-in/binary-out resize via mapInPandas.
-
-    The output payload column stays BinaryType so further media stages
-    (feature extraction, re-encode, sink) chain without schema changes.
-    Non-image rows pass through untouched (payload unchanged) — the
-    filter happens inside the batch to keep one streaming pass; at scale,
-    partition by `kind` upstream and this op reads only image files."""
-    # r13 audit, fixed r14: a degenerate target must raise HERE, not
-    # inside the Arrow batch — width/height < 1 would otherwise fail
-    # (or emit zero-pixel payloads) per-executor-task with a stack
-    # trace pointing at pandas internals instead of the caller's bug
-    if width < 1 or height < 1:
-        raise ValueError(
-            f"resize_images: width and height must be >= 1, got "
-            f"{width}x{height}"
-        )
-    # the resize payload tag encodes dims in 2 bytes each
-    # (_resize_image_stub / encode_png's IHDR practical bound here), so
-    # an oversized target would OverflowError mid-batch on an executor
-    if width > 0xFFFF or height > 0xFFFF:
-        raise ValueError(
-            f"resize_images: width and height must be <= 65535, got "
-            f"{width}x{height}"
-        )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                if row.kind == "image" and payload:
-                    payload = _resize_image(payload, width, height)
-                out.append(
-                    {
-                        "media_id": row.media_id,
-                        "kind": row.kind,
-                        "payload": payload,
-                        "mime": row.mime,
-                        "target_w": width,
-                        "target_h": height,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "kind", "payload", "mime").mapInPandas(
-        _resize, schema=RESIZED_SCHEMA
-    )
-
-
-def audio_chunk_plan(
-    media: DataFrame, chunk_s: int = 30, overlap_s: int = 5
-) -> DataFrame:
-    """Audio chunking plan: one row per (possibly overlapping) window to
-    decode — the audio twin of frame_sample_plan.
-
-    Chunk boundaries come from typed metadata (`meta['duration_s']`,
-    `meta['sample_rate']`), so the plan is pure JVM-side arithmetic; only
-    the decode of selected chunks (same stubbed hook) would touch Python.
-    Overlap is the standard trick for transcription/window models so no
-    utterance is cut at a boundary.
-
-    Assets with missing or non-positive duration metadata are SKIPPED
-    (no rows emitted) rather than planned as zero-length chunks
-    (ADVICE r1).
-
-    Known shape: when the last start falls within ``overlap_s`` of the
-    end (e.g. chunk 30 s / overlap 5 s over 55 s audio -> starts 0, 25,
-    50), the final chunk is fully contained in its predecessor — the
-    same trailing seconds decode twice. Harmless for dedup-downstream
-    consumers (and the oracle replays the identical rule); a consumer
-    that must not double-process should drop chunks whose
-    ``chunk_start_s >= duration_s - overlap_s`` when ``chunk_start_s >
-    0``."""
-    if chunk_s < 1:
-        raise ValueError("chunk_s must be >= 1")
-    if overlap_s < 0:
-        raise ValueError("overlap_s must be >= 0")
-    if overlap_s >= chunk_s:
-        raise ValueError("overlap_s must be < chunk_s")
-    # floor(double), not int-cast: see frame_sample_plan — a fractional
-    # duration string must not NULL out and skip the asset; the outer
-    # narrowing is try_cast so an out-of-int-range duration skips
-    # instead of raising CAST_OVERFLOW under ANSI mode
-    dur = F.coalesce(
-        F.floor(
-            F.element_at(F.col("meta"), "duration_s").try_cast("double")
-        ).try_cast("int"),
-        F.lit(0),
-    )
-    rate = F.coalesce(
-        F.element_at(F.col("meta"), "sample_rate").try_cast("int"), F.lit(16000)
-    )
-    step = chunk_s - overlap_s
-    starts = F.sequence(F.lit(0), dur - 1, F.lit(step))
-    return (
-        media.filter((F.col("kind") == "audio") & (dur > 0))
-        .select(
-            "media_id",
-            rate.alias("sample_rate"),
-            dur.alias("duration_s"),
-            F.explode(starts).alias("chunk_start_s"),
-        )
-        .withColumn(
-            "chunk_end_s",
-            F.least(F.col("chunk_start_s") + chunk_s, F.col("duration_s")),
-        )
-        .withColumn(
-            "start_frame", F.col("chunk_start_s") * F.col("sample_rate")
-        )
-        .withColumn(
-            "n_frames",
-            (F.col("chunk_end_s") - F.col("chunk_start_s")) * F.col("sample_rate"),
-        )
-    )
-
-
 AUDIO_FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -677,8 +508,8 @@ PERCEPTUAL_KEY_SCHEMA = T.StructType(
 
 def perceptual_keys(media: DataFrame) -> DataFrame:
     """64-bit average-hash per image payload via mapInPandas — the
-    perceptual near-dup key that survives re-encoding (byte-level md5
-    keys in media_dedup_keys catch only exact copies). Undecodable
+    perceptual near-dup key that survives re-encoding (the byte-level
+    content_sha of extract_features catches only exact copies). Undecodable
     payloads yield -1; grouping on the hash (or on hamming bands of it,
     as with SimHash) clusters visually-identical media without any
     pairwise comparison.

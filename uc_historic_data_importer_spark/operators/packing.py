@@ -216,8 +216,8 @@ def shard_assign_by_tokens(
 
     ``n_tokens_col`` is count-agnostic: feed it whitespace counts,
     BPE-ish counts, or REAL-tokenizer counts via
-    ``text.with_token_counts(df, encode=...)`` (the encoded_ids_udf
-    seam) — the shard arithmetic below is unchanged.
+    ``text.token_count_col(text, encode)`` (the encoded_ids_udf seam) —
+    the shard arithmetic below is unchanged.
 
     The spec is a global running sum — but a single unbounded window
     would serialize the corpus through one reducer. The scalable plan is

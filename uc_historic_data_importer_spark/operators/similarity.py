@@ -587,9 +587,9 @@ def assign_cells(
 # corpus size — fine at thousands of cells, prohibitive at millions
 # (billions of vectors want k ~ sqrt(N)). 4M doubles = ~32 MB of
 # centroid payload, comfortably under Spark's broadcast/codegen
-# thresholds; past it, use kmeans_fit_sampled (k capped to the budget,
-# trained on a deterministic hash-sample) and past THAT a two-level /
-# coarse quantizer — the declared extreme-scale route (r9 verdict).
+# thresholds; past it, use ivf2_fit — a two-level quantizer whose fine
+# centroids stay distributed, the declared extreme-scale route (r9
+# verdict).
 KMEANS_MAX_DRIVER_FLOATS = 4_000_000
 
 # kmeans_fit runs its dim-probe job (budget check BEFORE the take(k)
@@ -695,8 +695,9 @@ def kmeans_fit(
     k CEILING: the driver fold and the assignment's broadcast-literal
     dispatch are k*dim-sized; requesting k*dim beyond
     ``max_driver_floats`` raises rather than silently building an
-    OOM-scale plan — use kmeans_fit_sampled (bounded k, sample-trained)
-    for corpora that want more cells than the budget allows."""
+    OOM-scale plan — use ivf2_fit (a small coarse kmeans_fit plus
+    distributed fine centroids) for corpora that want more cells than
+    the budget allows."""
     # probe dim with a single take(1) and enforce the budget BEFORE
     # take(k) executes (ADVICE r10): in the exact regime the guard
     # targets (k*dim >> budget) the k-row collect itself is the OOM,
@@ -721,14 +722,13 @@ def kmeans_fit(
         if k * len(pv) > max_driver_floats:
             raise ValueError(
                 f"k*dim = {k}*{len(pv)} exceeds the driver/broadcast "
-                f"budget of {max_driver_floats} floats; use "
-                "kmeans_fit_sampled (k capped to the budget) or a "
-                "two-level quantizer"
+                f"budget of {max_driver_floats} floats; use ivf2_fit "
+                "(two-level quantizer, distributed fine centroids)"
             )
     init_rows = corpus.select(vec_col, id_col).orderBy(id_col).take(k)
     if not init_rows:
-        # mirror kmeans_fit_sampled's clear contract error instead of
-        # an opaque IndexError on centroids[0] (ADVICE r11)
+        # a clear contract error instead of an opaque IndexError on
+        # centroids[0] (ADVICE r11)
         raise ValueError("kmeans_fit: empty corpus")
     if any(r[vec_col] is None for r in init_rows):
         raise ValueError(
@@ -741,9 +741,8 @@ def kmeans_fit(
         # probed row; re-check on the materialized init vectors too
         raise ValueError(
             f"k*dim = {k}*{len(first[0])} exceeds the driver/broadcast "
-            f"budget of {max_driver_floats} floats; use "
-            "kmeans_fit_sampled (k capped to the budget) or a two-level "
-            "quantizer"
+            f"budget of {max_driver_floats} floats; use ivf2_fit "
+            "(two-level quantizer, distributed fine centroids)"
         )
     centroids = [_unit(c) for c in first]
     # a single-file corpus scans as ONE partition; the per-iteration
@@ -796,91 +795,6 @@ def kmeans_fit(
             for j in range(k)
         ]
     return centroids
-
-
-def kmeans_fit_sampled(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-    centroid_dp: int = 12,
-    sample_mod: int = 16,
-    max_driver_floats: int = KMEANS_MAX_DRIVER_FLOATS,
-) -> list[list[float]]:
-    """Bounded-k, sample-trained quantizer fit — the declared scale
-    route past kmeans_fit's k*dim driver/broadcast ceiling (r9 verdict
-    caveat #1).
-
-    Trains kmeans_fit on a DETERMINISTIC hash-sample of the corpus:
-    xxhash64(id) % sample_mod == 0 — reproducible across runs/retries
-    (no RNG, no sampleBy state), uniform because the hash is, and a
-    pure narrow filter pushed into the scan. k is CAPPED at
-    max_driver_floats // dim so the driver fold and the centroid
-    broadcast stay inside the stated budget no matter what the caller
-    asks for. Assignment is UNCHANGED — the returned centroids feed the
-    same ivf_assign/_cell_column path, so downstream plans (partition
-    pruning on cell, within-cell search) are identical to a full fit's.
-
-    Statistical contract: a uniform 1/sample_mod sample preserves
-    cluster geometry for any cluster that keeps >> k members in-sample
-    (k-means centroids are means — sampling noise is O(1/sqrt(cell
-    size))). At billions of vectors even sample_mod=1024 leaves
-    millions per cell; the parity pin (TestKmeansSampledFit) shows the
-    sampled fit reproduces the full fit's assignment exactly on
-    cluster-structured fixtures and degrades only when cells approach
-    emptiness — at which point k, not the sample, is the problem.
-
-    sample_mod=1 is exactly kmeans_fit (pinned). Raises if the sample
-    holds fewer than the (capped) k vectors — lower sample_mod rather
-    than silently fitting fewer cells than requested."""
-    if sample_mod < 1:
-        raise ValueError("sample_mod must be >= 1")
-    probe = corpus.select(vec_col).first()
-    if probe is None:
-        raise ValueError("kmeans_fit_sampled: empty corpus")
-    if probe[vec_col] is None:
-        # mirror the pq_fit/hyperplane_lsh_buckets r9 fix: a NULL first
-        # embedding must raise a clear contract error, not len(None)
-        raise ValueError(
-            "kmeans_fit_sampled: first embedding is NULL; filter null "
-            f"{vec_col} rows before fitting"
-        )
-    dim = len(probe[vec_col])
-    if dim == 0 or dim > max_driver_floats:
-        raise ValueError(
-            f"vector dim {dim} incompatible with a {max_driver_floats}-"
-            "float driver budget"
-        )
-    k_eff = min(k, max_driver_floats // dim)
-    sample = (
-        corpus
-        if sample_mod == 1
-        else corpus.filter(
-            F.pmod(
-                F.xxhash64(F.col(id_col).cast("string")), F.lit(sample_mod)
-            )
-            == 0
-        )
-    )
-    n_sample = sample.count()
-    if n_sample < k_eff:
-        raise ValueError(
-            f"hash-sample (mod={sample_mod}) holds {n_sample} vectors "
-            f"< k={k_eff}; lower sample_mod"
-        )
-    return kmeans_fit(
-        sample,
-        k=k_eff,
-        iters=iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_dp=round_dp,
-        centroid_dp=centroid_dp,
-        max_driver_floats=max_driver_floats,
-        n_rows=n_sample,
-    )
 
 
 def _fine_members_arrow(
@@ -989,15 +903,14 @@ def ivf2_fit(
 ) -> DataFrame:
     """Two-level IVF fine-quantizer fit with DISTRIBUTED centroids —
     the declared route past kmeans_fit's k*dim driver/broadcast
-    ceiling (r9 verdict caveat #1, beyond what kmeans_fit_sampled's
-    k cap covers).
+    ceiling (r9 verdict caveat #1).
 
-    Level 1 (caller-provided ``coarse_centroids``, from kmeans_fit or
-    kmeans_fit_sampled) stays a broadcast literal — k1 is small by
-    design. Level 2 trains k1*k2 sub-centroids WITHOUT ever collecting
-    them: centroids live in the returned DataFrame (cell, fine,
-    centroid array<double>), each iteration is one distributed job for
-    ALL cells at once (members join their cell's fine centroids →
+    Level 1 (caller-provided ``coarse_centroids``, from kmeans_fit)
+    stays a broadcast literal — k1 is small by design. Level 2 trains
+    k1*k2 sub-centroids WITHOUT ever collecting them: centroids live in
+    the returned DataFrame (cell, fine, centroid array<double>), each
+    iteration is one distributed job for ALL cells at once (members
+    join their cell's fine centroids →
     argmax → posexplode → per-(cell, fine, dim) means), and lineage is
     localCheckpoint-truncated per round. Total quantizer size k1*k2
     can exceed any driver budget because nothing k1*k2-sized ever

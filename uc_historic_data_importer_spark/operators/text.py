@@ -354,19 +354,6 @@ def token_count_col(text: Column, encode=None) -> Column:
     return F.size(encoded_ids_udf(encode)(text))
 
 
-def with_token_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "n_tokens",
-    encode=None,
-) -> DataFrame:
-    """Attach ``out_col`` token counts — the upstream step for
-    count-consuming operators (packing.shard_assign_by_tokens,
-    token-budget sampling) when counts must come from a REAL tokenizer
-    instead of the whitespace/BPE-ish proxies."""
-    return df.withColumn(out_col, token_count_col(F.col(text_col), encode))
-
-
 def bpe_token_stats(
     df: DataFrame, text_col: str = "text", by: str = "source", encode=None
 ) -> DataFrame:

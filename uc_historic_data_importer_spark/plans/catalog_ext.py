@@ -2260,7 +2260,7 @@ _Z_EXPRS_SQL = ["(l_partkey & 65535)", "(l_suppkey & 65535)"]
     "— a pure codegen bit expression, map-only — and aggregate per "
     "high-order key range the row count and the min-max span of BOTH "
     "dimensions. Each z_bucket is the min-max envelope one output file "
-    "would carry after zorder_layout's range-partitioned write: tight "
+    "would carry after a range-partitioned write on the key: tight "
     "in every interleaved dimension at once, which is what makes "
     "parquet min-max pruning fire for predicates on either column at "
     "100 TB.",

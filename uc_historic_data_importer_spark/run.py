@@ -33,8 +33,6 @@ import sys
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import functions as F
-
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
@@ -169,16 +167,31 @@ def main(argv: list[str] | None = None) -> int:
 
             key_service: M.KeyService = HttpKeyService(args.dks_url)
         else:
-            plain = {
+            sidecars = pairs.select(
+                "meta_path", "encrypted_encryption_key", "plaintext_datakey"
+            ).collect()
+            # without a key service the sidecar's plaintextDatakey IS the
+            # data key: a sidecar lacking it fails here, naming the file,
+            # not as a TypeError inside a decrypt task
+            keyless = sorted(
+                r["meta_path"]
+                for r in sidecars
+                if not (r["plaintext_datakey"] or "").strip()
+            )
+            if keyless:
+                raise M.MetadataValidationError(
+                    "no plaintextDatakey and no --dks-url to resolve the "
+                    "data key: " + "; ".join(keyless[:5])
+                )
+            key_service = M.DummyKeyService({
                 r["encrypted_encryption_key"]: r["plaintext_datakey"]
-                for r in pairs.select(
-                    "encrypted_encryption_key", "plaintext_datakey"
-                ).collect()
-            }
-            key_service = M.DummyKeyService(plain)
+                for r in sidecars
+            })
         keys = M.resolve_data_keys(pairs, key_service)
         lines = read_encrypted_jsonl(pairs, keys, n_files=n_files)
 
+    # one clock reading: seconds and milliseconds of the same instant
+    now = datetime.now(timezone.utc)
     cfg = PipelineConfig(
         run_mode=args.run_mode,
         skip_earlier_than=args.skip_earlier_than,
@@ -190,8 +203,8 @@ def main(argv: list[str] | None = None) -> int:
         encrypted_encryption_key=args.encrypted_data_key,
         run_context=RunContext(
             unit_of_work_id=str(uuid.uuid4()),
-            timestamp=datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.")
-            + f"{datetime.now(timezone.utc).microsecond // 1000:03d}",
+            timestamp=now.strftime("%Y-%m-%dT%H:%M:%S.")
+            + f"{now.microsecond // 1000:03d}",
             trace_id=str(uuid.uuid4()),
         ),
     )

@@ -6,10 +6,9 @@ partitioned by `table` — the direct analogue of the reference's versioned
 HBase cells (HbaseClient.kt:25-41, maxVersions unbounded). A "latest-wins"
 current-state view is a query over it (operators/latest.py).
 
-Byte-bounded batching (W1, HBaseWriter.kt:214-233) has no Spark
-equivalent/need: `df.write` sizes files via partitioning; for a real HBase
-cluster the `foreachPartition` putter below applies the same size-bounded
-flush inside each task.
+Byte-bounded batching (W1, HBaseWriter.kt:214-233) is moot here: the job
+writes cells as parquet (`df.write` sizes files via partitioning) and as
+HFile bulk-load files (`write_hfiles`), never as put RPCs.
 
 Manifest CSV (W5): pipe-separated, commons-text `escapeCsv` semantics
 (quote only when the value contains a quote or comma; embedded quotes
@@ -91,178 +90,6 @@ def compact_kv(
         .partitionBy("table")
         .parquet(out_path)
     )
-
-
-def kv_put_sink(
-    df: DataFrame,
-    putter_factory,
-    max_batch_bytes: int = 100_000_000,
-) -> None:
-    """W1+W2 for a real KV cluster (HBase & co.): per-partition putter
-    with the reference's byte-bounded flush (HBaseWriter.kt:105-107,
-    214-233: accumulate until adding the next record would reach
-    max.batch.size.bytes, flush, plus a trailing under-size flush).
-
-    `putter_factory()` runs once per partition ON THE EXECUTOR and must
-    return an object with `put_batch(table, records)` (records =
-    list of (key: bytes, version: int, body: str)) and `close()`.
-    Retries/backoff (HBaseWriter.putBatch :543-573) belong inside the
-    putter, where the client owns connection state; Spark task retry
-    covers whole-partition failure (sink must be idempotent on
-    (key, version) — HBase puts are).
-    """
-    if max_batch_bytes < 1:
-        # pre-guard (r13 review): 0/negative made the flush condition
-        # true before EVERY record — one-record RPC batches, silently
-        # defeating the byte-bounded batching this sink exists for
-        raise ValueError(f"max_batch_bytes must be >= 1 (got {max_batch_bytes})")
-    cols = df.select("table", "key", "version", F.col("envelope").alias("body"))
-
-    def _write_partition(rows):
-        putter = putter_factory()
-        try:
-            batch: list[tuple[bytes, int, str]] = []
-            batch_table: str | None = None
-            batch_bytes = 0
-            for r in rows:
-                body = r["body"]
-                # UTF-8 bytes, not characters: multi-byte text (CJK,
-                # emoji) accounted at 1/char would let a flush exceed
-                # the byte budget ~4x — the reference's limit exists to
-                # keep put RPCs under the server's size cap
-                n_bytes = len(body.encode("utf-8"))
-                if batch and (
-                    batch_table != r["table"]
-                    or batch_bytes + n_bytes >= max_batch_bytes
-                ):
-                    putter.put_batch(batch_table, batch)
-                    batch, batch_bytes = [], 0
-                batch_table = r["table"]
-                batch.append((bytes(r["key"]), int(r["version"]), body))
-                batch_bytes += n_bytes
-            if batch:
-                putter.put_batch(batch_table, batch)
-        finally:
-            putter.close()
-
-    cols.foreachPartition(_write_partition)
-
-
-# HBaseWriter.kt:543-573 putBatch policy (SURVEY W2: retry x5,
-# backoff 10 s x2 — a 1 s schedule would exhaust all attempts in ~15 s
-# and hammer a struggling store 10x faster than the reference)
-PUT_MAX_ATTEMPTS = 5
-PUT_INITIAL_BACKOFF_S = 10.0
-PUT_BACKOFF_MULTIPLIER = 2.0
-
-
-class RetryingPutter:
-    """Concrete putter for ``kv_put_sink`` wrapping any KV store client.
-
-    Reproduces the reference's putBatch retry loop
-    (HBaseWriter.kt:543-573) including its load-bearing detail: the
-    exists-filter (F4) runs INSIDE the retry loop, so a batch that
-    failed halfway re-filters against the store before the next attempt
-    and never re-puts the cells that landed. Backoff matches the
-    reference: ``initial`` on the first retry, then
-    ``initial * attempts * multiplier``.
-
-    ``store`` needs ``put_batch(table, records)``, ``close()``, and an
-    exists check: ``exists_batch(table, pairs) -> list[bool]`` when the
-    backend supports it (HBase existsAll — ONE round trip per batch,
-    the reference's F4 shape) with ``exists(table, key, version) ->
-    bool`` as the per-row fallback for minimal adapters; a batch of a
-    million cells against a per-row-only store would otherwise issue a
-    million sequential RPCs per attempt. ``InMemoryKVStore`` below is
-    the reference implementation used by the tests."""
-
-    def __init__(
-        self,
-        store,
-        max_attempts: int = PUT_MAX_ATTEMPTS,
-        initial_backoff_s: float = PUT_INITIAL_BACKOFF_S,
-        backoff_multiplier: float = PUT_BACKOFF_MULTIPLIER,
-        sleep=None,
-    ):
-        import time
-
-        if max_attempts < 1:
-            # pre-guard (r13 review): 0 made put_batch's retry loop
-            # never run and crash on the terminal `assert last is not
-            # None` — a bare AssertionError instead of naming the
-            # misconfiguration
-            raise ValueError(f"max_attempts must be >= 1 (got {max_attempts})")
-        self.store = store
-        self.max_attempts = max_attempts
-        self.initial_backoff_s = initial_backoff_s
-        self.backoff_multiplier = backoff_multiplier
-        self.sleep = sleep if sleep is not None else time.sleep
-
-    def put_batch(self, table: str, records) -> None:
-        attempts = 0
-        last: Exception | None = None
-        while attempts < self.max_attempts:
-            try:
-                # F4 inside the loop: drop cells that already exist
-                # (including ones a previous failed attempt wrote) —
-                # batched when the store supports it (existsAll parity)
-                exists_batch = getattr(self.store, "exists_batch", None)
-                if exists_batch is not None:
-                    flags = exists_batch(
-                        table, [(r[0], r[1]) for r in records]
-                    )
-                    filtered = [
-                        r for r, ex in zip(records, flags) if not ex
-                    ]
-                else:
-                    filtered = [
-                        r
-                        for r in records
-                        if not self.store.exists(table, r[0], r[1])
-                    ]
-                self.store.put_batch(table, filtered)
-                return
-            except Exception as ex:  # noqa: BLE001 - client errors vary
-                last = ex
-                attempts += 1
-                if attempts >= self.max_attempts:
-                    break  # terminal: raise immediately, don't sleep
-                delay = (
-                    self.initial_backoff_s
-                    if attempts == 1
-                    else self.initial_backoff_s
-                    * (attempts - 1)
-                    * self.backoff_multiplier
-                )
-                self.sleep(delay)
-        assert last is not None
-        raise last
-
-    def close(self) -> None:
-        self.store.close()
-
-
-class InMemoryKVStore:
-    """Dict-backed versioned-cell store: the minimal store contract for
-    RetryingPutter (and a template for real client adapters)."""
-
-    def __init__(self):
-        self.cells: dict[tuple[str, bytes, int], str] = {}
-        self.put_log: list[tuple[str, bytes, int]] = []
-
-    def exists(self, table: str, key: bytes, version: int) -> bool:
-        return (table, key, version) in self.cells
-
-    def exists_batch(self, table: str, pairs) -> list[bool]:
-        return [(table, k, v) in self.cells for k, v in pairs]
-
-    def put_batch(self, table: str, records) -> None:
-        for key, version, body in records:
-            self.cells[(table, key, version)] = body
-            self.put_log.append((table, key, version))
-
-    def close(self) -> None:
-        pass
 
 
 def csv_escape(col: Column) -> Column:

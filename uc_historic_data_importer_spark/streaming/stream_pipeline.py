@@ -4,15 +4,13 @@ The reference is a one-shot batch job; its natural streaming twin (and
 the engine-extension surface of SURVEY.md §2.6 / §7.4.7) treats arriving
 dump files as a stream:
 
-    file source (JSONL) -> normalize (same UDF) -> watermarked
-    dedup on (table, key_hex, version) -> sinks via foreachBatch
-    + stateful latest-per-key via applyInPandasWithState
+    file source (JSONL) -> normalize (same UDF) -> windowed counts,
+    stateful latest-per-key via applyInPandasWithState, sessions,
+    interval joins, and the CDC merge sink via foreachBatch
 
-Semantics parity: the batch pipeline's exists-filter (F4) becomes
-`dropDuplicatesWithinWatermark`; the latest-per-key view becomes a
-stateful operator whose state is exactly one (version, body) per key —
-the streaming materialization of the HBase versioned-cell "current
-state" query.
+The latest-per-key view becomes a stateful operator whose state is
+exactly one (version, body) per key — the streaming materialization of
+the HBase versioned-cell "current state" query.
 """
 
 from __future__ import annotations
@@ -30,21 +28,6 @@ from uc_historic_data_importer_spark.operators.keying import flatten_normalized
 from uc_historic_data_importer_spark.operators.naming import with_table_names
 from uc_historic_data_importer_spark.operators.transforms import normalize_records
 
-# schema of the streaming KV sink read back through the partitioned
-# parquet layout (kv_sink's data columns, then the discovered partition
-# columns in path order: batch_id=N/table=X). read_kv_stream_output
-# returns an empty frame of exactly this shape when no batch has
-# committed yet; test_streaming pins it against a real written output.
-KV_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.BinaryType()),
-        T.StructField("key_hex", T.StringType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("body", T.StringType()),
-        T.StructField("batch_id", T.LongType()),
-        T.StructField("table", T.StringType()),
-    ]
-)
 
 def read_jsonl_stream(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int = 16
@@ -93,32 +76,6 @@ def normalized_stream(lines: DataFrame) -> DataFrame:
     is streaming-agnostic because it is stateless per record."""
     return with_table_names(flatten_normalized(normalize_records(lines))).filter(
         F.col("valid")
-    )
-
-
-def deduped_stream(norm: DataFrame, watermark_delay: str = "1 hour") -> DataFrame:
-    """F4 under streaming: drop (table, key, version) duplicates with a
-    watermark bounding the dedup state — re-deliveries within the delay
-    are the task-retry idempotence window.
-
-    The watermark rides ARRIVAL time (processing time), NOT the record
-    version: the version is the record's BUSINESS timestamp, and
-    historic dump files arrive in an order unrelated to it — a
-    version-time watermark advanced by one recent file would make every
-    subsequent file with older versions "late" and
-    dropDuplicatesWithinWatermark would discard those never-before-seen
-    records WHOLESALE (silent data loss, far beyond dedup). Redelivery
-    lateness is bounded in wall-clock terms (task retry, file
-    re-ingest), so arrival time is the semantically correct clock for
-    this state — and it makes the operator safe on arbitrarily
-    unordered historic corpora. The arrival_time column is dedup
-    plumbing and is dropped from the output — downstream consumers see
-    the input schema unchanged."""
-    with_arrival = norm.withColumn("arrival_time", F.current_timestamp())
-    return (
-        with_arrival.withWatermark("arrival_time", watermark_delay)
-        .dropDuplicatesWithinWatermark(["table", "key_hex", "version"])
-        .drop("arrival_time")
     )
 
 
@@ -431,133 +388,6 @@ def normalized_stream_batch_keys(spark: SparkSession, input_dir: str) -> DataFra
     return norm.groupBy("table", "key_hex").agg(F.max("version").alias("version"))
 
 
-def _existing_batch_ids(spark: SparkSession, kv_path: str) -> list[int]:
-    """batch_id=N partition directories already present under a KV
-    stream output path (empty list if the path does not exist yet)."""
-    fs, hpath = _snapshot_fs(spark, kv_path)
-    if not fs.exists(hpath):
-        return []
-    ids = []
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if name.startswith("batch_id="):
-            try:
-                ids.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(ids)
-
-
-def read_kv_stream_output(spark: SparkSession, kv_path: str) -> DataFrame:
-    """Read the streaming KV sink output including ONLY complete
-    batches: a crash between a batch's write and its checkpoint commit
-    leaves a torn ``batch_id=N`` directory without ``_SUCCESS``, and a
-    raw ``spark.read.parquet(kv_path)`` would happily include its
-    partial cells until the restart replays the batch. Same
-    completeness gate as the CDC snapshot reader (_snapshot_versions'
-    _SUCCESS check); the filter prunes at the partition level, so torn
-    files are never opened."""
-    fs, jpath = _snapshot_fs(spark, kv_path)
-    jpath_cls = spark._jvm.org.apache.hadoop.fs.Path
-    complete = []
-    if fs.exists(jpath):
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            tail = name.split("=", 1)[-1]
-            if name.startswith("batch_id=") and tail.isdigit():
-                if fs.exists(jpath_cls(st.getPath(), "_SUCCESS")):
-                    complete.append(int(tail))
-    if not complete:
-        # a missing/empty path, or one holding only torn batch dirs
-        # (no _SUCCESS, possibly no readable footers at all), must read
-        # as "no committed cells yet" — not an AnalysisException from
-        # schema inference over nothing, and not an isin([]) over
-        # whatever partial files a crash left behind
-        return spark.createDataFrame([], schema=KV_STREAM_SCHEMA)
-    df = spark.read.option("basePath", kv_path).parquet(kv_path)
-    # pin the discovered partition column to LongType: partition-value
-    # inference yields IntegerType until some batch_id exceeds int range
-    # and LongType after, so a very long-lived stream's read-back schema
-    # would otherwise drift from KV_STREAM_SCHEMA (and from its own
-    # earlier reads). The filter stays on the raw column (partition
-    # pruning), the cast applies after.
-    return df.filter(F.col("batch_id").isin(complete)).withColumn(
-        "batch_id", F.col("batch_id").cast("long")
-    )
-
-
-def run_to_kv_sink(
-    norm: DataFrame,
-    kv_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    ctx=None,
-):
-    """Materialize the stream into the same versioned-KV parquet layout as
-    the batch sink via foreachBatch — idempotent per batch id because
-    each batch overwrites its own `batch_id=N` partition directory (a
-    plain append would duplicate every cell of a replayed batch).
-
-    ``ctx`` is the envelope RunContext; production callers should pass
-    the real per-run context (uuid unitOfWorkId/traceId, wall-clock
-    timestamp, as run.py stamps batch runs) — the default is a
-    deterministic placeholder suitable only for tests and oracles.
-
-    Reusing a ``kv_path`` with a FRESH checkpoint is refused: batch ids
-    would restart at 0 and silently overwrite the previous run's
-    partitions (Structured Streaming never commits batch N+1 before N,
-    so an existing directory with a HIGHER id than the current batch
-    can only be foreign history). Read the output through
-    ``read_kv_stream_output`` — it excludes torn batches a crash may
-    have left behind."""
-    from uc_historic_data_importer_spark import sinks
-    from uc_historic_data_importer_spark.operators.envelope import (
-        RunContext,
-        passthrough_body,
-        with_envelope,
-    )
-
-    if ctx is None:
-        ctx = RunContext(
-            unit_of_work_id="stream",
-            timestamp="1970-01-01T00:00:00.000",
-            trace_id="stream",
-        )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        newer = [
-            b
-            for b in _existing_batch_ids(batch_df.sparkSession, kv_path)
-            if b > batch_id
-        ]
-        if newer:
-            raise ValueError(
-                f"kv_path {kv_path!r} already holds batch ids {newer} newer "
-                f"than current batch {batch_id}: the checkpoint does not "
-                "match this output directory (fresh checkpoint against an "
-                "old run's output?) — refusing to overwrite foreign history"
-            )
-        enveloped = with_envelope(passthrough_body(batch_df), ctx)
-        # idempotence: each micro-batch owns its own partition
-        # directory and OVERWRITES it — a batch replayed after a crash
-        # between write and checkpoint commit rewrites its previous
-        # (possibly partial) output instead of appending duplicate
-        # cells. Readers see batch_id as one more partition column of
-        # the same KV layout.
-        sinks.kv_sink(
-            enveloped, f"{kv_path}/batch_id={batch_id}", mode="overwrite"
-        )
-
-    writer = (
-        norm.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_changelog_merge_sink(
     changes: DataFrame,
     snapshot_base: str,
@@ -697,42 +527,6 @@ def interval_join_stream(
         )
     )
     return lw.alias("l").join(rw.alias("r"), cond, "inner")
-
-
-def prune_snapshot_versions(
-    spark: SparkSession, snapshot_base: str, keep_n: int = 3
-) -> list[int]:
-    """Retention for the CDC merge sink's version history: delete all
-    but the newest ``keep_n`` ``v=N`` snapshot directories, returning
-    the pruned version numbers. Driver-side directory operations only
-    (O(versions), no data read) — via the Hadoop FS API, so the store
-    works on HDFS/S3A URIs too.
-
-    ``keep_n`` must be >= 2, and the reason is REPLAY, not concurrent
-    reads: if a crash lands after batch N wrote ``v=N`` but before the
-    streaming checkpoint committed, the restart REPLAYS batch N —
-    apply_changelog_batch folds it onto the newest ``v < N`` snapshot.
-    With keep_n=1 that predecessor was just pruned, the replay folds
-    batch N onto an EMPTY snapshot, and the rewritten ``v=N`` (the
-    version every reader picks) silently loses every key the batch
-    didn't touch. The second-newest version must always survive
-    pruning (pinned in
-    tests/test_streaming.py::test_prune_keeps_replay_predecessor)."""
-    if keep_n < 2:
-        raise ValueError(
-            "keep_n must be >= 2: the newest snapshot's PREDECESSOR is "
-            "the replay input if the last batch's checkpoint commit was "
-            "torn — pruning it makes a crash-replay fold into an empty "
-            "snapshot and silently drop every untouched key"
-        )
-    versions = sorted(_snapshot_versions(spark, snapshot_base))
-    doomed = versions[:-keep_n] if len(versions) > keep_n else []
-    if doomed:
-        fs, _ = _snapshot_fs(spark, snapshot_base)
-        jpath_cls = spark._jvm.org.apache.hadoop.fs.Path
-        for v in doomed:
-            fs.delete(jpath_cls(f"{snapshot_base}/v={v}"), True)
-    return doomed
 
 
 def apply_changelog_batch(
