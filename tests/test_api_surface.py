@@ -15,7 +15,12 @@ string — and reaches every top-level package definition of that name;
 definition's own body is followed in turn. Every top-level definition
 (function, class or assignment, private names included; only dunders are
 exempt) that no root reaches fails the audit unless ``ALLOWED`` names it,
-with its reason."""
+with its reason.
+
+A second scan fails on any name a package module imports and never loads
+(the image has no pyflakes or ruff). ``__init__.py`` re-exports,
+``__future__`` imports and lines marked ``# noqa: F401`` (availability
+probes) are exempt."""
 
 from __future__ import annotations
 
@@ -153,3 +158,36 @@ def test_allowlist_names_still_exist_and_stay_unreferenced():
     """An ALLOWED entry whose name was deleted, or which non-test code
     now reaches, is stale."""
     assert set(ALLOWED) <= unreached_definitions()
+
+
+def unused_imports() -> list[str]:
+    """``module:line name`` for every imported name its package module
+    never loads (a name load anywhere in the module counts)."""
+    out = []
+    for path in _py_files(PKG):
+        if os.path.basename(path) == "__init__.py":
+            continue
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        tree, lines = ast.parse(src, path), src.splitlines()
+        loaded = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+        }
+        for n in ast.walk(tree):
+            if (
+                not isinstance(n, (ast.Import, ast.ImportFrom))
+                or getattr(n, "module", None) == "__future__"
+                or "noqa: F401" in lines[n.lineno - 1]
+            ):
+                continue
+            for a in n.names:
+                name = a.asname or a.name.split(".")[0]
+                if name not in loaded:
+                    out.append(f"{os.path.relpath(path, PKG)}:{n.lineno} {name}")
+    return out
+
+
+def test_package_imports_only_loaded_names():
+    assert not unused_imports()

@@ -2418,8 +2418,6 @@ class TestInDocSegmentDedup:
         assert r["n_segments"] == 0 and r["cleaned_text"] == ""
 
     def test_streaming_convergence(self, spark, tmp_path):
-        import os
-
         docs = [(i, "dup seg here dup seg here tail %d" % i, "en", "s")
                 for i in range(6)]
         bdf = spark.createDataFrame(docs, ["doc_id", "text", "lang", "source"])
@@ -3394,29 +3392,6 @@ class TestSemdedupDispatch:
                 for r in sim.semdedup(emb, cents, threshold=0.4,
                                       exact_max_rows=0).collect()}
         assert exact == fast
-
-
-class TestLshBucketCap:
-    def test_pathological_identical_corpus_bounded(self, spark):
-        body = "all documents carry exactly this same text body here"
-        df = spark.createDataFrame(
-            [(i, body) for i in range(12)], ["doc_id", "text"]
-        )
-        # uncapped: one band bucket holds everything -> all C(12,2) pairs
-        assert dedup.minhash_lsh_pairs(df).count() == 66
-        # capped: the over-cap buckets never materialize
-        assert dedup.minhash_lsh_pairs(df, max_bucket_docs=8).count() == 0
-
-    def test_cap_no_op_on_normal_corpus(self, spark, docs):
-        base = sorted(
-            (r["doc_a"], r["doc_b"])
-            for r in dedup.minhash_lsh_pairs(docs).collect()
-        )
-        capped = sorted(
-            (r["doc_a"], r["doc_b"])
-            for r in dedup.minhash_lsh_pairs(docs, max_bucket_docs=50).collect()
-        )
-        assert base == capped
 
 
 class TestReviewFixes:
@@ -4903,8 +4878,6 @@ class TestRound13Guards:
             dedup.jaccard_pairs(docs, max_shingle_freq=0)
         with pytest.raises(ValueError, match="max_shingle_freq"):
             dedup.jaccard_bucket_stats(docs, max_shingle_freq=0)
-        with pytest.raises(ValueError, match="max_bucket_docs"):
-            dedup.minhash_lsh_pairs(docs, max_bucket_docs=0)
         # pre-guard: threshold > 1 silently returned zero pairs
         with pytest.raises(ValueError, match="threshold"):
             dedup.jaccard_pairs(docs, threshold=1.5)
@@ -4941,7 +4914,6 @@ class TestRound13Guards:
         # valid configs behave exactly as before the guards
         pairs = dedup.jaccard_pairs(docs, threshold=0.0, n=2).collect()
         assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
-        assert dedup.minhash_lsh_pairs(docs, max_bucket_docs=5).count() >= 0
         assert dedup.jaccard_bucket_stats(docs, n=2).collect()[0][
             "dropped_buckets"
         ] == 0

@@ -6,6 +6,7 @@ import base64
 import gzip
 import json
 import os
+import uuid
 
 import pytest
 
@@ -90,9 +91,9 @@ class TestListingAndPairing:
 
 
 class TestMetadata:
-    def _mk(self, tree, meta: dict):
-        _write(os.path.join(tree, "db.c.0001.json.gz.enc"), b"payload")
-        with open(os.path.join(tree, "db.c.0001.json.encryption.json"), "w") as fh:
+    def _mk(self, tree, meta: dict, stem: str = "db.c.0001"):
+        _write(os.path.join(tree, f"{stem}.json.gz.enc"), b"payload")
+        with open(os.path.join(tree, f"{stem}.json.encryption.json"), "w") as fh:
             json.dump(meta, fh)
 
     def test_parse_ok(self, spark, tree):
@@ -103,22 +104,31 @@ class TestMetadata:
         out = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree))).collect()
         assert out[0]["key_encryption_key_id"] == "kek"
 
-    @pytest.mark.parametrize("missing", M.REQUIRED_FIELDS)
-    def test_blank_required_field_raises(self, spark, tree, missing):
+    @pytest.mark.parametrize(
+        "missing,how",
+        [pytest.param(f, "blank", id=f) for f in M.REQUIRED_FIELDS]
+        + [pytest.param(f, "omitted", id=f"{f}-omitted") for f in M.REQUIRED_FIELDS],
+    )
+    def test_blank_required_field_raises(self, spark, tree, missing, how):
         meta = {
             "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
             "initialisationVector": "IV",
         }
-        meta[missing] = "  "
+        if how == "blank":
+            meta[missing] = "  "
+        else:
+            del meta[missing]
         self._mk(tree, meta)
-        with pytest.raises(M.MetadataValidationError):
+        with pytest.raises(M.MetadataValidationError, match=f"blank \\['{missing}'\\]"):
             M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
 
     def test_key_resolution_deduplicates(self, spark, tree):
-        self._mk(tree, {
-            "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
-            "initialisationVector": "IV",
-        })
+        # two files wrapped under one key pair: one key-service call
+        for i in (1, 2):
+            self._mk(tree, {
+                "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
+                "initialisationVector": f"IV{i}",
+            }, stem=f"db.c.{i:04d}")
         calls = []
 
         class Svc:
@@ -131,25 +141,49 @@ class TestMetadata:
         assert keymap == {("kek", "E"): "PLAIN"}
         assert calls == [("kek", "E")]
 
-    def test_sidecar_read_is_distributed(self, spark, tree):
-        # round-5: the sidecar parse must be a distributed FileScan, not
-        # a sequential driver loop (the only O(n_files) serial driver
-        # stage left after round 4) — pin the plan shape
-        for i in range(1, 4):
-            _write(os.path.join(tree, f"db.c.{i:04d}.json.gz.enc"), b"payload")
-            with open(
-                os.path.join(tree, f"db.c.{i:04d}.json.encryption.json"), "w"
-            ) as fh:
-                json.dump({
-                    "keyEncryptionKeyId": f"kek{i}",
-                    "encryptedEncryptionKey": f"E{i}",
-                    "initialisationVector": "IV",
-                }, fh)
-        out = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "FileScan text" in plan  # executor-side sidecar read
-        rows = {r["encrypted_encryption_key"] for r in out.collect()}
-        assert rows == {"E1", "E2", "E3"}
+    def test_sources_stage_scans_sidecars_once(self, spark, tree):
+        """Metadata plus key resolution run one Spark job beyond the
+        collect of their input pair rows: the sidecar scan. Validation,
+        key resolution and the returned frame all read its result."""
+        key = os.urandom(32)
+        for i in range(1, 9):
+            write_encrypted_dump(tree, f"db.c.{i:04d}", ["{}"], key)
+        sc = spark.sparkContext
+        tag = uuid.uuid4().hex
+
+        def jobs(name, fn):
+            group = f"{name}-{tag}"
+            sc.setJobGroup(group, name)
+            try:
+                return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setJobGroup("", "")
+
+        # two equal frames: a Dataset that has run keeps its broadcasts
+        baseline = L.pair_files(L.list_local_objects(spark, tree))
+        pairs = L.pair_files(L.list_local_objects(spark, tree))
+        _, pair_jobs = jobs("pairs", baseline.toArrow)
+        keys, source_jobs = jobs(
+            "sources",
+            lambda: M.resolve_data_keys(M.parse_metadata(pairs), M.DummyKeyService({"E": "P"})),
+        )
+        assert pair_jobs >= 1 and source_jobs == pair_jobs + 1
+        assert keys == {("kek", "E"): "P"}
+
+    def test_decrypt_stage_plan_reads_no_sidecar(self, spark, tree):
+        """The decrypt stage's input is parse_metadata's local frame: its
+        plan rescans no sidecar and rejoins nothing."""
+        key = os.urandom(32)
+        for i in range(1, 9):
+            write_encrypted_dump(tree, f"db.c.{i:04d}", ['{"_id": "x"}'], key)
+        pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
+        lines = read_encrypted_jsonl(
+            pairs, {("kek", "E"): base64.b64encode(key).decode()}, n_files=8
+        )
+        norm = lines._normalized()
+        plan = norm._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan and "Join" not in plan, plan
+        assert norm.count() == 8
 
     def test_plus_in_path_survives_uri_decode(self, spark, tree):
         # review regression: url_decode form-decodes '+' to space; a
@@ -170,11 +204,17 @@ class TestMetadata:
         assert out[0]["encrypted_encryption_key"] == "E"
 
     def test_malformed_sidecar_json_raises(self, spark, tree):
+        # malformed, or valid JSON that is not an object (array, scalar)
         _write(os.path.join(tree, "db.c.0001.json.gz.enc"), b"payload")
-        with open(os.path.join(tree, "db.c.0001.json.encryption.json"), "w") as fh:
-            fh.write("NOT JSON {")
-        with pytest.raises(M.MetadataValidationError):
-            M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
+        ok = {
+            "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
+            "initialisationVector": "IV",
+        }
+        for body in ("NOT JSON {", json.dumps([ok]), "42"):
+            with open(os.path.join(tree, "db.c.0001.json.encryption.json"), "w") as fh:
+                fh.write(body)
+            with pytest.raises(M.MetadataValidationError):
+                M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
 
 
 class FakePaginatedLister:
@@ -536,9 +576,9 @@ class TestSourcesReviewFixes:
 
 
 class TestMetadataProbeBounded:
-    """r10 verdict hardening #1: the sidecar validation probe must not
-    collect a row per file on the happy path; the error paths stay
-    byte-equivalent in shape (blank-field detail, missing-content list)."""
+    """The validation error paths keep their shape: the blank-field
+    detail names up to 5 offenders in path order, and an empty sidecar
+    is reported as missing content."""
 
     def _mk(self, tree, stem, meta):
         _write(os.path.join(tree, f"{stem}.json.gz.enc"), b"payload")

@@ -161,8 +161,8 @@ def _validate_freq_cap(name: str, value: int | None) -> None:
     """df-cut / bucket caps are >= 1 or None: a cap of 0 drops EVERY
     bucket (all dfs are >= 1), so the pair/candidate result was silently
     EMPTY — the same degenerate-param class as max_iters=0 (probed r13).
-    Shared by jaccard_pairs / _bucket_pairs / _cap_stats so the pairs
-    path and its accounting twin cannot drift."""
+    Shared by jaccard_pairs / _cap_stats so the pairs path and its
+    accounting twin cannot drift."""
     if value is not None and value < 1:
         raise ValueError(f"{name} must be >= 1 or None (got {value})")
 
@@ -197,30 +197,11 @@ def _expand_sorted_pairs(buckets: DataFrame) -> DataFrame:
     ).filter(F.col("doc_a") < F.col("doc_b"))
 
 
-def _bucket_pairs(
-    df: DataFrame, *bucket_cols: str, max_bucket_docs: int | None = None
-) -> DataFrame:
+def _bucket_pairs(df: DataFrame, *bucket_cols: str) -> DataFrame:
     """(doc_a, doc_b) pairs of docs sharing a bucket, generated JVM-side:
     groupBy bucket -> sorted id array -> all (i < j) combinations via
     nested array transforms. One shuffle of the bucketed rows; fan-out is
-    bounded by bucket sizes (callers df-cut hot buckets).
-
-    ``max_bucket_docs`` is the pathological-corpus guard for bucketing
-    schemes whose bucket sizes are only probabilistically bounded (LSH
-    bands: every-doc-identical puts the whole corpus in ONE band
-    bucket — C(n,2) pairs AND an n-element aggregation buffer). Like
-    jaccard_pairs' df-cut it filters rows by a count window BEFORE the
-    list aggregation, so an over-cap bucket never materializes."""
-    _validate_freq_cap("max_bucket_docs", max_bucket_docs)
-    if max_bucket_docs is not None:
-        from pyspark.sql.window import Window
-
-        bdf = F.count(F.lit(1)).over(Window.partitionBy(*bucket_cols))
-        df = (
-            df.withColumn("_bdf", bdf)
-            .filter(F.col("_bdf") <= max_bucket_docs)
-            .drop("_bdf")
-        )
+    bounded by bucket sizes alone (no cap: see minhash_lsh_pairs)."""
     ids = F.array_sort(F.collect_list("doc_id"))
     return _expand_sorted_pairs(
         df.groupBy(*bucket_cols)
@@ -394,7 +375,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    max_bucket_docs: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs (a < b): docs sharing at least one band.
 
@@ -402,16 +382,11 @@ def minhash_lsh_pairs(
     Self-join per (band_idx, band_sig) bucket; distinct pairs across
     bands. Cost is linear in docs + bucket collisions, never all-pairs
     — PROBABILISTICALLY: a pathological corpus (mass-identical docs)
-    collapses a band bucket to the whole corpus. ``max_bucket_docs``
-    drops over-cap buckets before any array materializes (see
-    _bucket_pairs). Default None preserves the exact candidate
-    contract."""
+    collapses a band bucket to the whole corpus."""
     banded = minhash_band_signatures(df, num_perms, bands, text_col, id_col, n)
     # bucket-local pair expansion (one pass) instead of a banded self-join
     # (two passes over the signature computation + a shuffle join)
-    return _bucket_pairs(
-        banded, "band_idx", "band_sig", max_bucket_docs=max_bucket_docs
-    ).distinct()
+    return _bucket_pairs(banded, "band_idx", "band_sig").distinct()
 
 
 def minhash_band_signatures(

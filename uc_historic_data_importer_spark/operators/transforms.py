@@ -109,7 +109,7 @@ def _dumps_compact(obj: Any) -> str:
     )
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type

@@ -154,11 +154,6 @@ def main(argv: list[str] | None = None) -> int:
         pairs = L.drop_zero_byte_pairs(L.pair_files(objects))
         if args.max_object_size:
             pairs = L.filter_oversized(pairs, args.max_object_size)
-        # count the pairs BEFORE the metadata join: here the lineage is
-        # only the driver-resident listing + the tiny pair self-join, so
-        # the decrypt stage's repartition sizing never re-executes the
-        # whole-file sidecar scan
-        n_files = pairs.count()
         pairs = M.parse_metadata(pairs)
         if args.dks_url:
             from uc_historic_data_importer_spark.sources.key_service import (
@@ -188,7 +183,7 @@ def main(argv: list[str] | None = None) -> int:
                 for r in sidecars
             })
         keys = M.resolve_data_keys(pairs, key_service)
-        lines = read_encrypted_jsonl(pairs, keys, n_files=n_files)
+        lines = read_encrypted_jsonl(pairs, keys)
 
     # one clock reading: seconds and milliseconds of the same instant
     now = datetime.now(timezone.utc)

@@ -152,10 +152,7 @@ def read_encrypted_jsonl(
     the executors; the default opens local paths and REFUSES
     scheme-qualified ones with a clear message. ``n_files``
     short-circuits the repartition count (same contract as the
-    similarity operators' n_rows): the caller usually knows the file
-    count from the driver-resident listing, and the default
-    ``files.count()`` re-executes the upstream lineage — including the
-    whole-file sidecar scan — once more just to size partitions.
+    similarity operators' n_rows) for a caller that already knows it.
 
     The frame carries ``_normalized(data_key_b64)``, this stage plus a
     ``norm`` column (transforms.normalize_batch), for process_lines."""

@@ -12,8 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from uc_historic_data_importer_spark.sources.listing import FILENAME_GROUPS
-
 # capture groups of a PLAIN dump filename `<db>.<collection>.<NNNN>.json`
 # (FILENAME_GROUPS in listing.py is the encrypted `.json.gz.enc` twin).
 # ONE definition shared by the batch source and the streaming source —

@@ -12,9 +12,8 @@ metadata work exactly as in the reference.
 from __future__ import annotations
 
 import os
-import re
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Protocol
 
 import pyarrow as pa

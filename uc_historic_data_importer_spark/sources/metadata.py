@@ -1,14 +1,17 @@
 """S6-S7: encryption-metadata parsing and data-key resolution.
 
 S6 (EncryptionMetadataProcessor.kt:20-47): parse the sidecar JSON, assert
-the three required fields are non-blank.
+the three required fields are non-blank. The sidecars are read in one
+distributed scan, collected once as Arrow: validation, key resolution
+and the decrypt stage all read that one driver-side table.
 
 S7 (HttpKeyService.kt:35-81 + DataKeyProcessor.kt:16-28): decrypt the
 per-file data key via the DKS HTTP service, memoized per
 (keyId, encryptedKey). In Spark this is driver-side work: the distinct
 key pairs per run are few (one per input file at most), so we resolve
-them once on the driver and broadcast the plaintext map — the broadcast
-twin of the reference's in-process cache (SURVEY.md §2.6 "broadcast join").
+them once on the driver from the local sidecar frame and broadcast the
+plaintext map — the broadcast twin of the reference's in-process cache
+(SURVEY.md §2.6 "broadcast join").
 
 The KeyService is pluggable: tests use DummyKeyService (the sidecar's
 plaintextDatakey field, present in the reference's own test fixtures —
@@ -21,7 +24,8 @@ from __future__ import annotations
 
 from typing import Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,31 +75,27 @@ _META_COLS = (
 
 
 def parse_metadata(pairs: DataFrame) -> DataFrame:
-    """S6: parse every sidecar JSON in a DISTRIBUTED stage and attach the
-    fields to the pair rows.
+    """S6: parse every sidecar in one distributed scan, collected once as
+    Arrow, and return the pair rows with the sidecar fields attached as a
+    LocalRelation.
 
     The sidecar bodies are read with a whole-file text scan + from_json
     (executor-side, one task per file split) instead of a sequential
     driver loop: at 100 TB / 2.2 GB-max files that loop is ~50k+ serial
     file opens — minutes of driver time the reference itself spends on
     pool threads (EncryptionMetadataProcessor.kt:20-47), so Spark must
-    not be MORE serial than Spring Batch. Only the path list (already
-    driver-resident from the listing) and the bounded validation sample
-    stay on the driver.
+    not be MORE serial than Spring Batch. One small row per file reaches
+    the driver, the same order of memory as the listing it already
+    holds; the pair rows are joined to it there, so key resolution and
+    the decrypt stage read a local frame and never rescan a sidecar.
 
     Validation (blank/missing required field, malformed JSON -> null
-    struct) raises MetadataValidationError with up to 5 offending
-    sidecar paths — same bounded-error-collect contract as the pairing
-    stage (listing.py)."""
+    struct, empty sidecar -> no row) raises MetadataValidationError with
+    up to 5 offending sidecar paths — same bounded-error contract as the
+    pairing stage (listing.py)."""
     spark = pairs.sparkSession
-    meta_paths = [
-        r["meta_path"] for r in pairs.select("meta_path").distinct().collect()
-    ]
-    if not meta_paths:
-        out = pairs
-        for _, alias in _META_COLS:
-            out = out.withColumn(alias, F.lit(None).cast("string"))
-        return out
+    rows = pairs.toArrow()
+    meta_paths = pc.unique(rows["meta_path"]).to_pylist()
     # input_file_name() is a URI: percent-escapes need decoding, but a
     # LITERAL '+' in a filename is legal URI-path syntax and must NOT
     # become a space (url_decode applies form-encoding rules) — protect
@@ -108,7 +108,7 @@ def parse_metadata(pairs: DataFrame) -> DataFrame:
         F.try_url_decode(F.regexp_replace(stripped, r"\+", "%2B")),
         stripped,
     )
-    raw = (
+    sidecars = (
         spark.read.format("text")
         .option("wholetext", "true")
         .load(meta_paths)
@@ -120,63 +120,31 @@ def parse_metadata(pairs: DataFrame) -> DataFrame:
             "meta_path",
             *[F.col(f"_m.{src}").alias(alias) for src, alias in _META_COLS],
         )
+        .toArrow()
+        .sort_by("meta_path")
     )
-    # validation is ONE job over the sidecar frame alone — the blank
-    # probe collects (path, blank fields) for every sidecar (bounded:
-    # one tiny row per file, the same order as the already-collected
-    # path list), and "sidecar produced no row" (empty file) falls out
-    # driver-side by set difference. The pairs join is never recomputed
-    # just to probe for errors.
-    blank = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    F.trim(F.coalesce(F.col(alias), F.lit(""))) == "",
-                    F.lit(src),
-                )
-                for src, alias in _META_COLS
-                if src in REQUIRED_FIELDS
-            ]
-        )
-    )
-    # the probe is ONE aggregate row on the happy path (r10 verdict
-    # hardening #1): counting violations + distinct parsed paths never
-    # materializes a row per sidecar on the driver; the bounded
-    # limit(5) example collects run only on the error paths
-    flagged = raw.select("meta_path", blank.alias("_blank"))
-    stats = flagged.agg(
-        F.sum((F.size("_blank") > 0).cast("long")).alias("n_bad"),
-        F.count_distinct("meta_path").alias("n_paths"),
-    ).first()
-    if stats["n_bad"]:
-        bad = (
-            flagged.filter(F.size("_blank") > 0)
-            .orderBy("meta_path")
-            .limit(5)
-            .collect()
-        )
-        detail = "; ".join(
-            f"blank {list(r['_blank'])} in {r['meta_path']}" for r in bad
-        )
+    # blank = null or spaces only (Spark's trim(): a tab is not blank)
+    required = [(src, alias) for src, alias in _META_COLS if src in REQUIRED_FIELDS]
+    bad = []
+    for r in sidecars.to_pylist():
+        blank = [src for src, alias in required if not (r[alias] or "").strip(" ")]
+        if blank:
+            bad.append(f"blank {blank} in {r['meta_path']}")
+    if bad:
         raise MetadataValidationError(
-            f"Failed to parse encryption metadata: {detail}"
+            "Failed to parse encryption metadata: " + "; ".join(bad[:5])
         )
-    if stats["n_paths"] != len(set(meta_paths)):
-        # error path only: name up to 5 sidecars that produced no
-        # parseable row (empty files); the full-path set is the same
-        # order of driver memory as the meta_paths argument itself
-        present = {
-            r["meta_path"]
-            for r in raw.select("meta_path").distinct().collect()
-        }
-        missing = sorted(set(meta_paths) - present)[:5]
+    # an empty sidecar yields no row at all
+    missing = sorted(set(meta_paths) - set(sidecars["meta_path"].to_pylist()))
+    if missing:
         raise MetadataValidationError(
             "Failed to parse encryption metadata: no parseable sidecar "
-            "content in " + "; ".join(missing)
+            "content in " + "; ".join(missing[:5])
         )
-    return pairs.join(raw, "meta_path", "left").select(
-        *pairs.columns, *[alias for _, alias in _META_COLS]
-    )
+    at = pc.index_in(rows["meta_path"], value_set=sidecars["meta_path"])
+    for _, alias in _META_COLS:
+        rows = rows.append_column(alias, sidecars[alias].take(at))
+    return spark.createDataFrame(rows)
 
 
 def resolve_data_keys(pairs_with_meta: DataFrame, key_service: KeyService) -> dict[tuple[str, str], str]:
@@ -184,15 +152,12 @@ def resolve_data_keys(pairs_with_meta: DataFrame, key_service: KeyService) -> di
 
     Returns the plaintext-key map to broadcast into the decrypt stage —
     identical dedup semantics to the reference's memoized cache
-    (HttpKeyService.kt:39-41,127)."""
-    distinct = (
-        pairs_with_meta.select("key_encryption_key_id", "encrypted_encryption_key")
-        .distinct()
-        .collect()
-    )
-    return {
-        (r["key_encryption_key_id"], r["encrypted_encryption_key"]): key_service.decrypt_key(
-            r["key_encryption_key_id"], r["encrypted_encryption_key"]
-        )
-        for r in distinct
-    }
+    (HttpKeyService.kt:39-41,127). On parse_metadata's local frame the
+    key columns are read without a Spark job."""
+    keys: dict[tuple[str, str], str] = {}
+    for kid, ek in pairs_with_meta.select(
+        "key_encryption_key_id", "encrypted_encryption_key"
+    ).collect():
+        if (kid, ek) not in keys:
+            keys[kid, ek] = key_service.decrypt_key(kid, ek)
+    return keys
