@@ -17,10 +17,23 @@ definition's own body is followed in turn. Every top-level definition
 exempt) that no root reaches fails the audit unless ``ALLOWED`` names it,
 with its reason.
 
-A second scan fails on any name a package module imports and never loads
-(the image has no pyflakes or ruff). ``__init__.py`` re-exports,
-``__future__`` imports and lines marked ``# noqa: F401`` (availability
-probes) are exempt."""
+A second scan fails on any name a package or test module imports and
+never loads (the image has no pyflakes or ruff). ``__init__.py``
+re-exports, ``__future__`` imports and lines marked ``# noqa: F401``
+(availability probes, registry imports) are exempt.
+
+The third audit checks options. Every defaulted parameter of a
+top-level package function or method (keyword-only ones included, and
+dataclass fields with defaults, as parameters of their class) must be
+set, by position or by keyword, at some call site in the same roots.
+Call sites match by simple name; a class name matches its ``__init__``
+and its dataclass fields; a ``*``/``**`` splat sets every parameter;
+``functools.partial(f, k=...)`` sets ``k``. A function that is also
+referenced as a value (a name load outside a call, not shadowed by a
+local) has unknown callers and is skipped. Anything else fails unless
+``ALLOWED_PARAMS`` names it, with one of three reasons: a deployment
+setting or seam, a fake a test substitutes, or a size threshold that
+tests lower to reach a branch production only reaches at scale."""
 
 from __future__ import annotations
 
@@ -161,11 +174,13 @@ def test_allowlist_names_still_exist_and_stay_unreferenced():
 
 
 def unused_imports() -> list[str]:
-    """``module:line name`` for every imported name its package module
-    never loads (a name load anywhere in the module counts)."""
+    """``module:line name`` for every imported name its package or test
+    module never loads (a name load anywhere in the module counts)."""
     out = []
-    for path in _py_files(PKG):
-        if os.path.basename(path) == "__init__.py":
+    tests = os.path.join(REPO, "tests")
+    test_files = [os.path.join(tests, f) for f in sorted(os.listdir(tests))]
+    for path in [*_py_files(PKG), *test_files]:
+        if not path.endswith(".py") or os.path.basename(path) == "__init__.py":
             continue
         with open(path, encoding="utf-8") as fh:
             src = fh.read()
@@ -185,9 +200,249 @@ def unused_imports() -> list[str]:
             for a in n.names:
                 name = a.asname or a.name.split(".")[0]
                 if name not in loaded:
-                    out.append(f"{os.path.relpath(path, PKG)}:{n.lineno} {name}")
+                    out.append(f"{os.path.relpath(path, REPO)}:{n.lineno} {name}")
     return out
 
 
 def test_package_imports_only_loaded_names():
     assert not unused_imports()
+
+
+# (module, function or Class.method, parameter) -> why no non-test caller
+# sets it
+_SEAM = "deployment setting or seam: "
+_FAKE = "fake a test substitutes: "
+_SIZE = "size threshold tests lower to reach the at-scale branch: "
+ALLOWED_PARAMS = {
+    ("sources/crypto_source.py", "read_encrypted_jsonl", "opener"): _SEAM
+    + "object-store reader for s3a/HDFS listing paths",
+    ("sources/key_service.py", "HttpKeyService.__init__", "ssl_context"):
+    _SEAM + "the DKS mutual-TLS context (mtls_context)",
+    ("sources/key_service.py", "HttpKeyService.__init__", "timeout_s"):
+    _SEAM + "DKS request timeout",
+    ("sources/key_service.py", "mtls_context", "key_password"): _SEAM
+    + "password of an encrypted client key",
+    ("plans/pipeline.py", "run", "manifest_uploader"): _SEAM
+    + "S3 client the W6 manifest upload uses",
+    ("plans/pipeline.py", "run", "manifest_bucket"): _SEAM
+    + "manifest bucket of the W6 upload",
+    ("plans/pipeline.py", "run", "manifest_prefix"): _SEAM
+    + "manifest key prefix of the W6 upload",
+    ("sources/listing.py", "Boto3Lister", "client"): _SEAM
+    + "S3 client; boto3's default when unset",
+    ("sources/listing.py", "Boto3Lister", "uri_prefix"): _SEAM
+    + "scheme the listed keys resolve under (s3a:// by default)",
+    ("sources/listing.py", "list_objects", "sleep"): _FAKE
+    + "retry backoff clock",
+    ("sinks.py", "send_manifest", "sleep"): _FAKE + "retry backoff clock",
+    ("sources/key_service.py", "HttpKeyService.__init__", "sleep"): _FAKE
+    + "retry backoff clock",
+    ("run.py", "main", "argv"): _FAKE + "command line",
+    ("operators/multimodal.py", "extract_features", "decoder"): _FAKE
+    + "the PIL/torchvision decode seam, parity-pinned against the "
+    "stdlib decoder",
+    ("operators/packing.py", "pack_concat_chunks", "encode"): _FAKE
+    + "tokenizer (a real BPE encoder in production)",
+    ("operators/similarity.py", "_cell_column", "exact_max_rows"): _SIZE
+    + "Arrow matmul cell assignment",
+    ("operators/similarity.py", "cosine_neardup_pairs", "exact_max_rows"):
+    _SIZE + "per-cell numpy pair scan",
+    ("operators/similarity.py", "ivf_topk", "exact_max_rows"): _SIZE
+    + "per-cell numpy top-k",
+    ("operators/similarity.py", "kmeans_fit", "exact_max_rows"): _SIZE
+    + "Arrow matmul assignment",
+    ("operators/similarity.py", "kmeans_fit", "max_driver_floats"): _SIZE
+    + "distributed centroid path",
+    ("operators/similarity.py", "semdedup", "exact_max_rows"): _SIZE
+    + "per-cell numpy pair scan",
+    ("hfile.py", "HFileWriter.__init__", "block_size"): _SIZE
+    + "multi-block files",
+    ("hfile.py", "HFileWriter.__init__", "max_chunk_size"): _SIZE
+    + "multi-level data index",
+    ("hfile.py", "HFileWriter.__init__", "min_index_entries"): _SIZE
+    + "multi-level data index",
+    ("hfile.py", "HFileWriter.__init__", "bloom_block_size"): _SIZE
+    + "multi-chunk bloom",
+    ("operators/bloom.py", "bloom_anti_join", "broadcast_max_existing"):
+    _SIZE + "two-branch Bloom route",
+    ("streaming/stream_pipeline.py", "read_jsonl_stream",
+     "max_files_per_trigger"): _SIZE + "multi-batch streams",
+}
+
+
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    return any(
+        (isinstance(d, ast.Name) and d.id == "dataclass")
+        or (
+            isinstance(d, ast.Call)
+            and isinstance(d.func, ast.Name)
+            and d.func.id == "dataclass"
+        )
+        for d in cls.decorator_list
+    )
+
+
+def _signature(fn: ast.FunctionDef, method: bool) -> tuple[list, list]:
+    """(positional names a call fills, defaulted names) — ``self``/``cls``
+    dropped for methods."""
+    pos = fn.args.posonlyargs + fn.args.args
+    static = any(
+        isinstance(d, ast.Name) and d.id == "staticmethod"
+        for d in fn.decorator_list
+    )
+    if method and not static:
+        pos = pos[1:]
+    names = [a.arg for a in pos]
+    n_def = len(fn.args.defaults)
+    defaulted = names[len(names) - n_def:] if n_def else []
+    defaulted += [
+        a.arg
+        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return names, defaulted
+
+
+def defaulted_parameters() -> dict[tuple[str, str], tuple[str, list, list]]:
+    """(module, function) -> (name call sites use, positional names,
+    defaulted names) for every top-level function, method and
+    dataclass."""
+    out = {}
+    for path in _py_files(PKG):
+        mod = os.path.relpath(path, PKG)
+        for stmt in _parse(path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[(mod, stmt.name)] = (stmt.name, *_signature(stmt, False))
+            elif isinstance(stmt, ast.ClassDef):
+                if _is_dataclass(stmt):
+                    fields = [
+                        s
+                        for s in stmt.body
+                        if isinstance(s, ast.AnnAssign)
+                        and isinstance(s.target, ast.Name)
+                    ]
+                    out[(mod, stmt.name)] = (
+                        stmt.name,
+                        [f.target.id for f in fields],
+                        [f.target.id for f in fields if f.value is not None],
+                    )
+                for fn in stmt.body:
+                    if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        called_as = stmt.name if fn.name == "__init__" else fn.name
+                        out[(mod, f"{stmt.name}.{fn.name}")] = (
+                            called_as, *_signature(fn, True)
+                        )
+    return out
+
+
+def _root_files():
+    yield from _py_files(PKG)
+    for root in ("tools", "perfbench"):
+        yield from _py_files(os.path.join(REPO, root))
+    for f in ("bench.py", "__spark_entry__.py"):
+        yield os.path.join(REPO, f)
+
+
+def _callee(node: ast.AST, aliases: dict[str, str]) -> str | None:
+    if isinstance(node, ast.Name):
+        return aliases.get(node.id, node.id)
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _local_names(fn) -> set[str]:
+    a = fn.args
+    out = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+    out |= {x.arg for x in (a.vararg, a.kwarg) if x}
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        elif n is not fn and isinstance(
+            n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            out.add(n.name)
+    return out
+
+
+def _value_refs(node, local, skip, aliases, out) -> None:
+    """Names loaded outside a call's callee position, an annotation or
+    a local binding."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+        local = local | _local_names(node)
+    if id(node) not in skip:
+        if (
+            isinstance(node, ast.Name)
+            and isinstance(node.ctx, ast.Load)
+            and node.id not in local
+        ):
+            out.add(aliases.get(node.id, node.id))
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            out.add(node.attr)
+    for child in ast.iter_child_nodes(node):
+        _value_refs(child, local, skip, aliases, out)
+
+
+def call_sites() -> tuple[dict[str, list], set[str]]:
+    """name -> [(positional count, keywords, splat)] over every call in
+    the roots, and the names those roots reference as values."""
+    calls: dict[str, list] = {}
+    values: set[str] = set()
+    for path in _root_files():
+        tree = _parse(path)
+        aliases = _aliases(tree)
+        skip = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                skip.add(id(n.func))
+                name, args = _callee(n.func, aliases), n.args
+                if name == "partial" and args:
+                    skip.add(id(args[0]))
+                    name, args = _callee(args[0], aliases), args[1:]
+                splat = any(isinstance(a, ast.Starred) for a in args) or any(
+                    k.arg is None for k in n.keywords
+                )
+                calls.setdefault(name, []).append(
+                    (len(args), {k.arg for k in n.keywords}, splat)
+                )
+            for field in ("annotation", "returns"):
+                ann = getattr(n, field, None)
+                if ann is not None:
+                    skip |= {id(m) for m in ast.walk(ann)}
+        _value_refs(tree, frozenset(), skip, aliases, values)
+    return calls, values
+
+
+def unset_parameters() -> set[tuple[str, str, str]]:
+    """(module, function, parameter) for every defaulted parameter no
+    call site in the roots sets."""
+    calls, values = call_sites()
+    out = set()
+    for (mod, fn), (called_as, names, defaulted) in defaulted_parameters().items():
+        if called_as in values:
+            continue
+        sites = calls.get(called_as, [])
+        for p in defaulted:
+            idx = names.index(p) if p in names else None
+            if not any(
+                splat or p in kws or (idx is not None and n_pos > idx)
+                for n_pos, kws, splat in sites
+            ):
+                out.add((mod, fn, p))
+    return out
+
+
+def test_package_parameters_are_set_by_a_caller():
+    unset = unset_parameters()
+    missing = unset - set(ALLOWED_PARAMS)
+    assert not missing, (
+        f"{len(missing)} defaulted parameters no query, job mode, tool or "
+        f"benchmark sets (inline the default and delete the parameter, or "
+        f"add it to ALLOWED_PARAMS with a reason): {sorted(missing)}"
+    )
+
+
+def test_allowed_params_stay_unset():
+    """An ALLOWED_PARAMS entry a non-test caller now sets, or whose
+    parameter was deleted, is stale."""
+    assert set(ALLOWED_PARAMS) <= unset_parameters()

@@ -7,8 +7,8 @@ queries that rebuild their file fixture from scratch each call."""
 
 import pytest
 
-import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401
-import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401
+import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401 - registers queries
+import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401 - registers queries
 from uc_historic_data_importer_spark.plans.catalog import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -629,26 +629,20 @@ class TestCompression:
         with pytest.raises(ValueError, match="compression"):
             read_hfile(str(p))
 
-    def test_write_hfiles_gz_default_and_none_option(self, spark, tmp_path):
+    def test_write_hfiles_writes_gz(self, spark, tmp_path):
         kv = spark.createDataFrame(
             [("t1", bytearray(bytes([i])), f"{i:02x}", 1, f"body-{i}" * 10)
              for i in range(30)],
             "table string, key binary, key_hex string, version long, "
             "envelope string",
         )
-        out_gz = str(tmp_path / "gz")
-        out_none = str(tmp_path / "none")
         gz_paths = sinks.write_hfiles(
-            sinks.hbase_bulkload_layout(kv, n_regions=1), out_gz
-        )
-        none_paths = sinks.write_hfiles(
-            sinks.hbase_bulkload_layout(kv, n_regions=1), out_none,
-            compression="none",
+            sinks.hbase_bulkload_layout(kv, n_regions=1), str(tmp_path / "gz")
         )
         assert {read_hfile(p).compression_codec for p in gz_paths} == {1}
-        assert {read_hfile(p).compression_codec for p in none_paths} == {2}
-        assert sorted(c for p in gz_paths for c in read_hfile(p).cells) == \
-            sorted(c for p in none_paths for c in read_hfile(p).cells)
+        assert sorted(
+            v for p in gz_paths for _k, v in read_hfile(p).cells
+        ) == sorted(f"body-{i}".encode() * 10 for i in range(30))
 
 
 class TestMultiLevelIndex:
@@ -1056,14 +1050,11 @@ class TestRowBloom:
         assert all(hfile.bloom_maybe_contains(p, r) for r in rows)
 
     def test_bloom_none_and_empty_file(self, tmp_path):
-        p = read_hfile(self._write_rows(tmp_path / "n.hfile",
-                                        self._rows(10), bloom="none"))
-        assert p.bloom is None
+        p = read_hfile(_write(tmp_path / "e.hfile", []))
+        assert p.bloom is None  # no keys -> no bloom meta written
         assert b"BLOOM_FILTER_TYPE" not in p.file_info
         with pytest.raises(ValueError, match="no general bloom"):
             hfile.bloom_maybe_contains(p, b"x")
-        p2 = read_hfile(_write(tmp_path / "e.hfile", []))
-        assert p2.bloom is None  # no keys -> no bloom meta written
 
     def test_meta_block_golden_layout(self, tmp_path):
         """Byte-offset pin of the MetaWriter layout: version(4),
@@ -1155,8 +1146,7 @@ class TestWriterGuards:
         rows = [bytes([65 + i]) * 300 for i in range(24)]
         cells = [(_key(r), b"v") for r in rows]
         p = _write(tmp_path / "g.hfile", cells, block_size=64,
-                   max_chunk_size=128, min_index_entries=2,
-                   bloom="none")
+                   max_chunk_size=128, min_index_entries=2)
         parsed = read_hfile(p)
         assert parsed.cells == cells
         assert parsed.num_data_index_levels >= 2
@@ -1169,7 +1159,7 @@ class TestAdversarialCraftedInputs:
 
     def _file(self, tmp_path):
         cells = [(_key(b"row-%03d" % i), b"v" * 20) for i in range(30)]
-        return _write(tmp_path / "a.hfile", cells, bloom="none")
+        return _write(tmp_path / "a.hfile", cells)
 
     def test_negative_cell_length_rejected_not_looped(self, tmp_path):
         p = self._file(tmp_path)
@@ -1210,18 +1200,6 @@ class TestAdversarialCraftedInputs:
         open(p, "wb").write(bytes(buf))
         with pytest.raises(ValueError, match="root index"):
             read_hfile(str(p))
-
-    def test_write_hfiles_rejects_bad_options_driver_side(self, spark, tmp_path):
-        kv = spark.createDataFrame(
-            [("t1", bytearray(b"\x01"), "01", 1, "b")],
-            "table string, key binary, key_hex string, version long, "
-            "envelope string",
-        )
-        layout = sinks.hbase_bulkload_layout(kv, n_regions=1)
-        with pytest.raises(ValueError, match="compression"):
-            sinks.write_hfiles(layout, str(tmp_path / "x"), compression="snappy")
-        with pytest.raises(ValueError, match="bloom"):
-            sinks.write_hfiles(layout, str(tmp_path / "y"), bloom="rowcol")
 
 
 class TestRegionIdBinarySearch:
@@ -1272,9 +1250,7 @@ class TestRegionIdBinarySearch:
 
 class TestRound13WriterGuards:
     """r13 review batch 8 continuation: HFileWriter degenerate params
-    (probed: bloom_error_rate=0 crashed as a bare `math domain error`,
-    >1 silently produced an absurd bloom — max_keys clamped to 1 with
-    hash_count in the thousands; block_size=0 was silently accepted)."""
+    (probed: block_size=0 was silently accepted)."""
 
     def test_degenerate_writer_params_raise(self):
         import io
@@ -1285,7 +1261,3 @@ class TestRound13WriterGuards:
             hfile.HFileWriter(io.BytesIO(), block_size=0)
         with pytest.raises(ValueError, match="bloom_block_size"):
             hfile.HFileWriter(io.BytesIO(), bloom_block_size=0)
-        with pytest.raises(ValueError, match="bloom_error_rate"):
-            hfile.HFileWriter(io.BytesIO(), bloom_error_rate=0.0)
-        with pytest.raises(ValueError, match="bloom_error_rate"):
-            hfile.HFileWriter(io.BytesIO(), bloom_error_rate=1.5)

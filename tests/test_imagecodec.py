@@ -190,8 +190,6 @@ class TestWavCodec:
         from uc_historic_data_importer_spark.functions import audiocodec as ac
         from uc_historic_data_importer_spark.operators import multimodal
 
-        from pyspark.sql import functions as F  # noqa: F811
-
         good = ac.encode_wav(8000, [10, -10] * 50)
         media = spark.createDataFrame(
             [(1, "audio", bytearray(good)), (2, "audio", bytearray(b"junk"))],
@@ -391,13 +389,15 @@ class TestJpegCodec:
         err = max(abs(a - b) for a, b in zip(img, px))
         assert err <= 8, err  # standard quant table, smooth-ish content
 
-    def test_noise_unit_quant_near_lossless(self):
+    def test_noise_unit_quant_near_lossless(self, monkeypatch):
         import random
+
+        monkeypatch.setattr(ic, "STD_LUM_QT", (1,) * 64)
 
         rng = random.Random(11)
         w, h = 16, 8
         img = bytes(rng.randrange(256) for _ in range(w * h))
-        p = ic.encode_jpeg_gray(w, h, img, qt=tuple([1] * 64))
+        p = ic.encode_jpeg_gray(w, h, img)
         _, _, _, px = ic.decode_jpeg(p)
         # quantization error <= 0.5 per coefficient; IDCT concentrates
         # it to ~1 lsb for unit tables
@@ -508,26 +508,21 @@ class TestJpegCodec:
         ref = ic.decode_jpeg(p)
         assert (w, h, ch, px) == ref
 
-    def test_tiny_quant_dc_overflow_raises_valueerror(self):
-        # a quant table too fine for the sample range must fail with a
-        # clear ValueError, never a raw KeyError from the DC code table
-        import pytest as _pytest
-
-        # alternate extreme blocks so the DPCM DC difference is maximal;
-        # a fractional-equivalent qt[0] below 1 is modeled by the
-        # smallest legal value with a huge block swing and a tiny table
+    def test_tiny_quant_dc_overflow_raises_valueerror(self, monkeypatch):
+        # the finest legal quant table with maximal DC swings must
+        # encode and round-trip, never fail with a raw KeyError from the
+        # DC code table (|diff| <= 2040 stays in the 12 baseline DC
+        # categories)
+        monkeypatch.setattr(ic, "STD_LUM_QT", (1,) * 64)
+        # alternate extreme blocks so the DPCM DC difference is maximal
         img = bytes(
             (255 if ((x // 8) + (y // 8)) % 2 == 0 else 0)
             for y in range(16)
             for x in range(16)
         )
-        try:
-            ic.encode_jpeg_gray(16, 16, img, qt=(1,) * 64)
-        except ValueError as e:  # acceptable: guard fired with message
-            assert "categor" in str(e)
-        except KeyError:  # the old failure mode — must not happen
-            _pytest.fail("DC overflow surfaced as KeyError")
-
+        w, h, ch, px = ic.decode_jpeg(ic.encode_jpeg_gray(16, 16, img))
+        assert (w, h, ch) == (16, 16, 1)
+        assert max(abs(a - b) for a, b in zip(img, px)) <= 2
 
 class TestDctVectorParity:
     """The numpy DCT fast path must be BIT-identical to the scalar
@@ -587,17 +582,18 @@ class TestDctVectorParity:
         a, b = self._both_paths(run)
         assert a == b
 
-    def test_unit_qt_dense_coefficients_parity(self):
+    def test_unit_qt_dense_coefficients_parity(self, monkeypatch):
         # unit quant tables keep nearly every AC coefficient nonzero, so
         # the zero-skip branch is mostly NOT taken — exercises the dense
         # accumulation order
         import random
 
+        monkeypatch.setattr(ic, "STD_LUM_QT", (1,) * 64)
         rng = random.Random(29)
         img = bytes(rng.randrange(256) for _ in range(16 * 16))
 
         def run():
-            p = ic.encode_jpeg_gray(16, 16, img, qt=(1,) * 64)
+            p = ic.encode_jpeg_gray(16, 16, img)
             return p, ic.decode_jpeg(p)
 
         a, b = self._both_paths(run)

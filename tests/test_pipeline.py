@@ -19,7 +19,6 @@ from tests.fixtures import (
     write_dump_file,
     write_encrypted_dump,
 )
-from uc_historic_data_importer_spark.operators.envelope import RunContext
 from uc_historic_data_importer_spark.plans import pipeline as P
 from uc_historic_data_importer_spark.plans.pipeline import (
     PipelineConfig,
@@ -457,38 +456,6 @@ class TestPipelineSpineReviewFixes:
             assert rows[0]["parse_errors"] == 1
         after = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert after == before  # nothing leaked across the two runs
-
-    def test_run_collect_counts_false_skips_driver_roundtrip(self, spark, tmp_path):
-        """collect_counts=False (the 100 TB path: one counts row per
-        input FILE, so a multi-million-file run must not pull them all
-        through the driver on every run() call) leaves result.counts a
-        lazy plan, still releases the cache, and the lazy counts remain
-        correct when the caller later aggregates them (re-execution —
-        counts are IV-independent)."""
-        lines = spark.createDataFrame(
-            [("db", "c", 1, 1,
-              '{"_id": {"someId": "a"}, "_lastModifiedDateTime":'
-              ' {"$date": "2018-12-01T15:01:02.000Z"}}'),
-             ("db", "c", 1, 2, "not json")],
-            "db string, collection string, file_number int, line_no int, "
-            "raw_json string",
-        )
-        before = spark.sparkContext._jsc.getPersistentRDDs().size()
-        result = P.run(
-            spark, lines, P.PipelineConfig(),
-            kv_path=str(tmp_path / "kv"),
-            manifest_dir=str(tmp_path / "mf"),
-            collect_counts=False,
-        )
-        after = spark.sparkContext._jsc.getPersistentRDDs().size()
-        assert after == before  # cache released even without the counts barrier
-        # counts is still the lazy distributed plan, not a LocalRelation
-        plan = result.counts._jdf.queryExecution().optimizedPlan().toString()
-        assert "LocalRelation" not in plan.splitlines()[0]
-        rows = result.counts.collect()  # re-executes once; still correct
-        assert len(rows) == 1
-        assert rows[0]["records_total"] == 2
-        assert rows[0]["parse_errors"] == 1
 
 
 KEY_B64 = base64.b64encode(bytes(range(32))).decode()

@@ -2,10 +2,8 @@
 survive future changes. Each assertion is a scale property — losing it
 would be invisible at test scale and disastrous at 100 TB."""
 
-import pytest
-
-import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401
-import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401
+import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401 - registers queries
+import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401 - registers queries
 from uc_historic_data_importer_spark.plans.catalog import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"

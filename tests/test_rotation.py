@@ -30,8 +30,8 @@ ORDER_SHA256 = (
 
 
 def _registered():
-    import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401
-    import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401
+    import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401 - registers queries
+    import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401 - registers queries
     from uc_historic_data_importer_spark.plans.catalog import QUERIES
 
     return set(QUERIES)
@@ -125,7 +125,10 @@ def test_modified_queries_tool_follows_indirect_calls():
     session_stats (the r13 precedent in the tool's docstring), and a
     function called through an import alias in a query's oracle SQL must
     reach that query: diff.encoded_value_sql (imported as _enc_sql) and
-    layout.zorder_key_sql (imported as _zsql)."""
+    layout.zorder_key_sql (imported as _zsql). A module-level function
+    passed as a value must reach the queries of the function that
+    passes it: _latest_state_fn (applyInPandasWithState's state
+    function) and _float_orjson_semantics (json.loads' parse_float)."""
     spec = importlib.util.spec_from_file_location(
         "modified_queries", os.path.join(REPO, "tools", "modified_queries.py"))
     mod = importlib.util.module_from_spec(spec)
@@ -140,6 +143,12 @@ def test_modified_queries_tool_follows_indirect_calls():
     ):
         fn = queries[query]
         assert mod.reach(calls, {changed}).get(fn) == [fn, changed], query
+    for changed, query in (
+        ("_latest_state_fn", "streaming_latest_per_key"),
+        ("_float_orjson_semantics", "entry_counts"),
+    ):
+        path = mod.reach(calls, {changed}).get(queries[query])
+        assert path and path[-1] == changed, query
 
 
 def test_soak_tool_state_metrics_shape():

@@ -180,7 +180,7 @@ class TestManifestUpload:
 
         path = self._manifest(tmp_path)
         up = _CountingUploader(fail_first=10_000)
-        ok = sinks.send_manifest(up, path, "bkt", "m", max_attempts=10)
+        ok = sinks.send_manifest(up, path, "bkt", "m")
         assert not ok and up.calls == 10  # exactly the reference's x10
         assert os.path.exists(path)  # file kept for a manual re-run
 
@@ -442,7 +442,6 @@ class TestSinksReviewFixes:
         assert parsed["message"]["_lastModifiedDateTime"] == hostile_lm
 
     def test_manifest_rerun_leaves_no_stale_final_csvs(self, spark, tmp_path):
-        from tests.fixtures import write_dump_file  # noqa: F401 - layout only
         import os
 
         out = str(tmp_path / "m")
@@ -553,10 +552,10 @@ class TestSinksReviewFixes:
 
         up = BrokenClient()
         ok = sinks.send_manifest(
-            up, str(p), "b", "p", max_attempts=3, sleep=lambda _s: None
+            up, str(p), "b", "p", sleep=lambda _s: None
         )
         assert ok is False  # exhausted, reported as failure
-        assert up.calls == 3  # it retried like any client error
+        assert up.calls == 10  # it retried like any client error
         assert p.exists()  # the local manifest was never deleted
 
     def test_send_manifest_local_read_errors_retry_not_raise(self, tmp_path):
@@ -579,9 +578,9 @@ class TestSinksReviewFixes:
         up = CountingUploader()
         delays = []
         ok = sinks.send_manifest(
-            up, str(p), "b", "p", max_attempts=3, sleep=delays.append
+            up, str(p), "b", "p", sleep=delays.append
         )
         assert ok is False  # degraded, not fatal
         assert up.calls == 0  # never reached the uploader
-        assert delays == [1.0, 2.0]  # counted as backed-off attempts
+        assert delays == [float(i) for i in range(1, 10)]  # backed off
         assert p.exists()  # path untouched for the manifest-only re-run

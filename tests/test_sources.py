@@ -170,6 +170,29 @@ class TestMetadata:
         assert pair_jobs >= 1 and source_jobs == pair_jobs + 1
         assert keys == {("kek", "E"): "P"}
 
+    def test_decrypt_stage_counts_files_without_a_job(self, spark, tree):
+        """Building the decrypt stage without ``n_files`` (as run.py
+        does) runs no more Spark jobs than passing it: the file count
+        of parse_metadata's local frame needs none."""
+        key = os.urandom(32)
+        for i in range(1, 9):
+            write_encrypted_dump(tree, f"db.c.{i:04d}", ["{}"], key)
+        pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
+        keys = {("kek", "E"): base64.b64encode(key).decode()}
+        sc = spark.sparkContext
+        tag = uuid.uuid4().hex
+
+        def jobs(name, **kw):
+            group = f"{name}-{tag}"
+            sc.setJobGroup(group, name)
+            try:
+                read_encrypted_jsonl(pairs, keys, **kw)
+                return len(sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setJobGroup("", "")
+
+        assert jobs("counted") <= jobs("given", n_files=8)
+
     def test_decrypt_stage_plan_reads_no_sidecar(self, spark, tree):
         """The decrypt stage's input is parse_metadata's local frame: its
         plan rescans no sidecar and rejoins nothing."""
@@ -185,12 +208,14 @@ class TestMetadata:
         assert "FileScan" not in plan and "Join" not in plan, plan
         assert norm.count() == 8
 
-    def test_plus_in_path_survives_uri_decode(self, spark, tree):
+    @pytest.mark.parametrize("batch_dir", ["batch+1", "batch[1]", "batch{a}"])
+    def test_plus_in_path_survives_uri_decode(self, spark, tree, batch_dir):
         # review regression: url_decode form-decodes '+' to space; a
         # literal '+' in the directory path must round-trip (the
         # filename itself can't contain '+' per the pairing regex, but
-        # batch directories like "batch+1" can)
-        sub = os.path.join(tree, "batch+1")
+        # batch directories like "batch+1" can). '[', ']', '{' and '}'
+        # are Hadoop glob syntax, which the sidecar load must escape
+        sub = os.path.join(tree, batch_dir)
         os.makedirs(sub)
         _write(os.path.join(sub, "db.c.0001.json.gz.enc"), b"payload")
         with open(os.path.join(sub, "db.c.0001.json.encryption.json"), "w") as fh:

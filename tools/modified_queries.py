@@ -22,7 +22,11 @@ sharing a name both count as reached) — safe for this purpose, since
 over-approximating only re-records a query early. A call through an
 import alias (`from m import f as _g`; `_g(...)`) counts as a call of
 `f`, wherever it sits in the function, its decorators included (an
-oracle SQL f-string in `@register(...)`). Names are collected
+oracle SQL f-string in `@register(...)`). A top-level package function
+referenced as a value (`applyInPandasWithState(_latest_state_fn, ...)`,
+`parse_float=_float_orjson_semantics`) counts as called by the function
+that references it, unless that function binds the name locally (a
+local `run` counter is not `pipeline.run`). Names are collected
 from every FunctionDef in the package, so locally-defined closures
 shadowing a public name are indistinguishable from it; review the
 printed paths before committing the block.
@@ -45,8 +49,27 @@ def _py_files():
                 yield os.path.join(root, f)
 
 
-def _called_names(fn_node: ast.AST, aliases: dict[str, str]) -> set[str]:
+def _local_names(fn_node: ast.AST) -> set[str]:
+    a = fn_node.args
+    out = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+    out |= {x.arg for x in (a.vararg, a.kwarg) if x}
+    for node in ast.walk(fn_node):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            out.add(node.id)
+        elif node is not fn_node and isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            out.add(node.name)
+    return out
+
+
+def _called_names(
+    fn_node: ast.AST, aliases: dict[str, str], top_level: set[str]
+) -> set[str]:
+    """Names fn_node calls, plus the top-level package functions it
+    passes around as values."""
     out = set()
+    local = _local_names(fn_node)
     for node in ast.walk(fn_node):
         if isinstance(node, ast.Call):
             f = node.func
@@ -54,6 +77,13 @@ def _called_names(fn_node: ast.AST, aliases: dict[str, str]) -> set[str]:
                 out.add(aliases.get(f.id, f.id))
             elif isinstance(f, ast.Attribute):
                 out.add(f.attr)
+        elif (
+            isinstance(node, ast.Name)
+            and isinstance(node.ctx, ast.Load)
+            and node.id not in local
+            and aliases.get(node.id, node.id) in top_level
+        ):
+            out.add(aliases.get(node.id, node.id))
     return out
 
 
@@ -63,10 +93,18 @@ def build_graph():
     calls: dict[str, set[str]] = {}
     qualified: dict[str, set[str]] = {}  # simple name -> {modules defining it}
     queries: dict[str, str] = {}  # query name -> decorated function simple name
+    trees = {}
     for path in _py_files():
-        mod = os.path.splitext(os.path.basename(path))[0]
         with open(path) as fh:
-            tree = ast.parse(fh.read(), path)
+            trees[path] = ast.parse(fh.read(), path)
+    top_level = {
+        node.name
+        for tree in trees.values()
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    for path, tree in trees.items():
+        mod = os.path.splitext(os.path.basename(path))[0]
         # `from m import f as _g` -> calls of _g in this module call f
         aliases = {
             a.asname: a.name
@@ -78,7 +116,7 @@ def build_graph():
         for node in ast.walk(tree):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 calls.setdefault(node.name, set()).update(
-                    _called_names(node, aliases)
+                    _called_names(node, aliases, top_level)
                 )
                 qualified.setdefault(node.name, set()).add(mod)
                 for dec in node.decorator_list:

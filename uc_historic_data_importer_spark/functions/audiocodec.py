@@ -18,16 +18,12 @@ class UnsupportedAudioError(ValueError):
     """Payload is not canonical 16-bit PCM WAV."""
 
 
-def encode_wav(sample_rate: int, samples: list[int], n_channels: int = 1) -> bytes:
-    """Minimal canonical WAV: RIFF header + fmt (PCM16) + data."""
+def encode_wav(sample_rate: int, samples: list[int]) -> bytes:
+    """Minimal canonical mono WAV: RIFF header + fmt (PCM16) + data."""
     if any(not -32768 <= s <= 32767 for s in samples):
         raise ValueError("samples must fit int16")
     data = struct.pack(f"<{len(samples)}h", *samples)
-    byte_rate = sample_rate * n_channels * 2
-    block_align = n_channels * 2
-    fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, sample_rate, byte_rate, block_align, 16
-    )
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body

@@ -542,21 +542,6 @@ def _category(v: int) -> int:
     return abs(v).bit_length()
 
 
-def _dc_category(diff: int) -> int:
-    """DC size category with a clear failure instead of a KeyError:
-    baseline JPEG declares 12 DC categories (0..11); a caller-supplied
-    quant table with tiny qt[0] can push the DPCM difference past
-    category 11, which is unencodable in this table."""
-    cat = _category(diff)
-    if cat >= len(_ENC_DC_VALS):
-        raise ValueError(
-            f"DC difference {diff} needs size category {cat}, beyond the "
-            f"{len(_ENC_DC_VALS)} baseline DC categories — quant table "
-            "qt[0] is too small for the sample range"
-        )
-    return cat
-
-
 def _seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
@@ -619,7 +604,7 @@ def _encode_block(
     """Entropy-encode one quantized block (DC DPCM + AC run-length in
     zigzag order); returns the new DC predictor."""
     diff = q[0] - pred
-    cat = _dc_category(diff)
+    cat = _category(diff)
     code, ln = dc_codes[cat]
     bw.write(code, ln)
     if cat:
@@ -681,27 +666,21 @@ def _wrap_gray_scan(
     return bytes(out)
 
 
-def encode_jpeg_gray(
-    width: int,
-    height: int,
-    pixels: bytes,
-    qt: tuple[int, ...] = STD_LUM_QT,
-) -> bytes:
+def encode_jpeg_gray(width: int, height: int, pixels: bytes) -> bytes:
     """Encode 8-bit grayscale pixels as a baseline JPEG (one scan, one
     component, declared quant + Huffman tables, byte stuffing). Edge
     blocks replicate the last row/column (a uniform image therefore
     stays uniform per block, which the SQL oracle exploits)."""
     if width <= 0 or height <= 0 or len(pixels) != width * height:
         raise ValueError("bad grayscale buffer")
+    qt = STD_LUM_QT
     qt_zz = bytes(qt[_ZIGZAG[i]] for i in range(64))
     return _wrap_gray_scan(
         width, height, _quantized_blocks(width, height, pixels, qt), qt_zz
     )
 
 
-def encode_jpeg_gray_batch(
-    items, qt: tuple[int, ...] = STD_LUM_QT
-) -> list[bytes]:
+def encode_jpeg_gray_batch(items) -> list[bytes]:
     """encode_jpeg_gray over many (width, height, pixels) images in one
     call, with ONE FDCT + quantize pass over the concatenated blocks of
     the whole batch (r15 opt round): at the media fixtures' tiny dims
@@ -720,6 +699,7 @@ def encode_jpeg_gray_batch(
     for width, height, pixels in items:
         if width <= 0 or height <= 0 or len(pixels) != width * height:
             raise ValueError("bad grayscale buffer")
+    qt = STD_LUM_QT
     qt_zz = bytes(qt[_ZIGZAG[i]] for i in range(64))
     if _np is None or not items:
         return [
@@ -1329,12 +1309,7 @@ def _decode_scan_np(
     return width, height, 3, rgb.astype(_np.uint8).tobytes()
 
 
-def encode_jpeg_rgb(
-    width: int,
-    height: int,
-    pixels: bytes,
-    qt: tuple[int, ...] = STD_LUM_QT,
-) -> bytes:
+def encode_jpeg_rgb(width: int, height: int, pixels: bytes) -> bytes:
     """Encode interleaved 8-bit RGB as a baseline 4:4:4 YCbCr JPEG (one
     interleaved scan, shared quant/Huffman tables across components) —
     exercises the decoder's multi-component MCU + color-convert path."""
@@ -1365,6 +1340,7 @@ def encode_jpeg_rgb(
             planes[0][i] = min(255, max(0, y))
             planes[1][i] = min(255, max(0, cb))
             planes[2][i] = min(255, max(0, cr))
+    qt = STD_LUM_QT
     qt_zz = bytes(qt[_ZIGZAG[i]] for i in range(64))
     dc_codes = _ENC_DC_CODES
     ac_codes = _ENC_AC_CODES

@@ -370,18 +370,13 @@ class HFileWriter:
         self,
         fh,
         block_size: int = DEFAULT_BLOCK_SIZE,
-        create_time_ms: int = 0,
         compression: int = COMPRESSION_NONE,
         max_chunk_size: int = MAX_CHUNK_SIZE,
         min_index_entries: int = MIN_INDEX_NUM_ENTRIES,
-        bloom: str = "row",
         bloom_block_size: int = DEFAULT_BLOOM_BLOCK_SIZE,
-        bloom_error_rate: float = DEFAULT_BLOOM_ERROR_RATE,
     ):
         if compression not in (COMPRESSION_GZ, COMPRESSION_NONE):
             raise ValueError(f"unsupported compression codec {compression}")
-        if bloom not in ("row", "none"):
-            raise ValueError(f"unsupported bloom type {bloom!r}")
         if block_size < 1 or bloom_block_size < 1:
             # r13 review: 0 was silently accepted (one block per cell —
             # an index as large as the data)
@@ -389,16 +384,8 @@ class HFileWriter:
                 f"block sizes must be >= 1 (got block_size={block_size}, "
                 f"bloom_block_size={bloom_block_size})"
             )
-        if not 0.0 < bloom_error_rate < 1.0:
-            # r13 review: 0 crashed as a bare `math domain error`, 1.0
-            # as ZeroDivisionError, and >1 silently produced an absurd
-            # bloom (max_keys clamped to 1, hash_count in the thousands)
-            raise ValueError(
-                f"bloom_error_rate must be in (0, 1) (got {bloom_error_rate})"
-            )
         self._fh = fh
         self._block_size = block_size
-        self._create_time_ms = create_time_ms
         self._compression = compression
         self._max_chunk_size = max_chunk_size
         self._min_index_entries = min_index_entries
@@ -432,12 +419,11 @@ class HFileWriter:
         # per DISTINCT row (cells arrive row-sorted, so consecutive
         # dedup is exact — StoreFileWriter's appendGeneralBloomfilter
         # rule).
-        self._bloom = bloom
         self._bloom_byte_size = bloom_block_size
         self._bloom_max_keys, self._bloom_hash_count = _bloom_size_by_bytes(
-            bloom_block_size, bloom_error_rate
+            bloom_block_size, DEFAULT_BLOOM_ERROR_RATE
         )
-        self._bloom_bits = bytearray(bloom_block_size) if bloom == "row" else None
+        self._bloom_bits = bytearray(bloom_block_size)
         self._bloom_chunk_keys = 0
         self._bloom_chunk_first_row: bytes | None = None
         self._bloom_last_row: bytes | None = None
@@ -463,12 +449,11 @@ class HFileWriter:
         self._total_key_len += len(key)
         self._total_value_len += len(value)
         self._last_key = key
-        if self._bloom == "row":
-            row_len = struct.unpack_from(">H", key, 0)[0]
-            row = key[2 : 2 + row_len]
-            if row != self._bloom_last_row:
-                self._bloom_add_row(row)
-                self._bloom_last_row = row
+        row_len = struct.unpack_from(">H", key, 0)[0]
+        row = key[2 : 2 + row_len]
+        if row != self._bloom_last_row:
+            self._bloom_add_row(row)
+            self._bloom_last_row = row
         if len(self._buf) >= self._block_size:
             self._flush_data_block()
 
@@ -647,10 +632,10 @@ class HFileWriter:
         entries = [
             (b"hfile.AVG_KEY_LEN", struct.pack(">i", avg_key)),
             (b"hfile.AVG_VALUE_LEN", struct.pack(">i", avg_value)),
-            (b"hfile.CREATE_TIME_TS", struct.pack(">q", self._create_time_ms)),
+            (b"hfile.CREATE_TIME_TS", struct.pack(">q", 0)),
             (b"hfile.LASTKEY", self._last_key or b""),
         ]
-        if self._bloom == "row" and self._bloom_index:
+        if self._bloom_index:
             # StoreFileWriter publishes the bloom type in FileInfo
             entries.append((b"BLOOM_FILTER_TYPE", b"ROW"))
         proto = b"".join(
@@ -695,8 +680,7 @@ class HFileWriter:
             return
         self._closed = True
         self._flush_data_block()
-        if self._bloom == "row":
-            self._flush_bloom_chunk()
+        self._flush_bloom_chunk()
         # BlockIndexWriter#shouldWriteBlock(closing=true): with no leaf
         # ever flushed, the single inline chunk IS the root (one-level
         # index); otherwise the remainder becomes one more leaf.
@@ -735,7 +719,7 @@ class HFileWriter:
         # general bloom meta follows FileInfo in load-on-open; readers
         # find it by walking remaining blocks and matching the magic
         # (HFileReaderImpl's load-on-open block iteration)
-        if self._bloom == "row" and self._bloom_index:
+        if self._bloom_index:
             self._write_block(
                 GENERAL_BLOOM_META_MAGIC, self._bloom_meta_bytes()
             )

@@ -42,8 +42,12 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-HASH_BITS = 64
 WORD_BITS = 32
+# k hash probes into an m-bit table; k * log2(m) = 48 bits of the
+# 64-bit hash, and m / WORD_BITS = 2048 words
+BLOOM_K = 3
+BLOOM_M = 1 << 16
+_BLOOM_BITS = (BLOOM_M - 1).bit_length()
 
 
 def _hash64(value: Column) -> Column:
@@ -57,38 +61,14 @@ def _hash64(value: Column) -> Column:
     return F.xxhash64(value.cast("string"))
 
 
-def _check_params(k: int, m: int) -> int:
-    if k < 1:
-        # k = 0 probes an empty conjunction: maybe_contains returns
-        # None and BOTH bloom_anti_join branch filters drop every row —
-        # silent total data loss (the m-mismatch failure mode)
-        raise ValueError(f"bloom k (hash count) must be >= 1: {k}")
-    bits = (m - 1).bit_length()
-    if m != 1 << bits:
-        raise ValueError("bloom m (bits) must be a power of two")
-    if m < WORD_BITS:
-        # m below one word makes the dense table EMPTY (m // WORD_BITS
-        # == 0): the probe of an empty bitmap literal evaluates NULL, so
-        # BOTH branch filters drop every row — silent total data loss,
-        # the exact mode the residual-join guard exists to prevent (and
-        # bloom_build would IndexError on any non-empty snapshot first)
-        raise ValueError(f"bloom m must be >= {WORD_BITS} (one word)")
-    if k * bits > HASH_BITS:
-        raise ValueError("k * log2(m) exceeds the 64-bit hash")
-    return bits
-
-
-def _positions(h: Column, k: int, m: int) -> list[Column]:
-    bits = _check_params(k, m)
+def _positions(h: Column) -> list[Column]:
     return [
-        F.shiftrightunsigned(h, j * bits).bitwiseAND(F.lit(m - 1))
-        for j in range(k)
+        F.shiftrightunsigned(h, j * _BLOOM_BITS).bitwiseAND(F.lit(BLOOM_M - 1))
+        for j in range(BLOOM_K)
     ]
 
 
-def bloom_build(
-    existing: DataFrame, value_col: str, k: int = 3, m: int = 1 << 16
-) -> list[int]:
+def bloom_build(existing: DataFrame, value_col: str) -> list[int]:
     """Build the filter driver-side: a dense list of m/32 words.
 
     One scan of the existing snapshot, one map-side-combined shuffle of
@@ -97,9 +77,8 @@ def bloom_build(
     plan as a literal — the probe stage then needs no join at all. Word
     tables MERGE across snapshots with elementwise OR.
     """
-    _check_params(k, m)
     h = _hash64(F.col(value_col))
-    pos = F.explode(F.array(*_positions(h, k, m))).alias("pos")
+    pos = F.explode(F.array(*_positions(h))).alias("pos")
     words = (
         existing.select(pos)
         .select(
@@ -118,7 +97,7 @@ def bloom_build(
         .agg(F.bit_or("bit").alias("word"))
         .collect()
     )
-    dense = [0] * (m // WORD_BITS)
+    dense = [0] * (BLOOM_M // WORD_BITS)
     for r in words:
         dense[r["word_idx"]] = r["word"]
     return dense
@@ -134,9 +113,7 @@ def pack_bitmap(words: list[int]) -> bytes:
     )
 
 
-def maybe_contains(
-    value: Column, words: list[int], k: int = 3, m: int = 1 << 16
-) -> Column:
+def maybe_contains(value: Column, words: list[int]) -> Column:
     """Boolean column: value possibly in the set (never a false negative).
 
     Pure whole-stage-codegen expression over a SINGLE binary literal —
@@ -145,20 +122,19 @@ def maybe_contains(
     seconds of analysis + codegen per query; one 8 KB BinaryType literal
     is one plan node.)
     """
-    _check_params(k, m)
-    if len(words) != m // WORD_BITS:
-        # an m/words mismatch indexes past the bitmap: substring
+    if len(words) != BLOOM_M // WORD_BITS:
+        # a short word list indexes past the bitmap: substring
         # returns empty binary, conv('') is NULL, and the NULL
         # conjunction silently drops rows from BOTH bloom_anti_join
         # branches — data loss with no exception
         raise ValueError(
-            f"bitmap has {len(words)} words but m={m} needs "
-            f"{m // WORD_BITS}: build and probe must share m"
+            f"bitmap has {len(words)} words but m={BLOOM_M} needs "
+            f"{BLOOM_M // WORD_BITS}: build and probe must share m"
         )
     bitmap = F.lit(bytearray(pack_bitmap(words)))
     h = _hash64(value)
     cond = None
-    for p in _positions(h, k, m):
+    for p in _positions(h):
         byte = F.conv(
             F.hex(F.substring(bitmap, (F.shiftright(p, 3) + 1).cast("int"), 1)),
             16,
@@ -198,8 +174,6 @@ def bloom_build_cached(
     existing: DataFrame,
     value_col: str,
     cache_key: str,
-    k: int = 3,
-    m: int = 1 << 16,
 ) -> list[int]:
     """bloom_build memoized by snapshot key + backing-file fingerprint.
 
@@ -213,11 +187,11 @@ def bloom_build_cached(
     of serving a stale filter that would pass new keys as definitely-new.
     The cache is FIFO-bounded so long-lived drivers cannot leak filters.
     """
-    kk = f"{cache_key}|{_snapshot_fingerprint(existing)}|{value_col}|{k}|{m}"
+    kk = f"{cache_key}|{_snapshot_fingerprint(existing)}|{value_col}"
     if kk not in _BUILD_CACHE:
         if len(_BUILD_CACHE) >= _BUILD_CACHE_MAX:
             _BUILD_CACHE.pop(next(iter(_BUILD_CACHE)))
-        _BUILD_CACHE[kk] = bloom_build(existing, value_col, k, m)
+        _BUILD_CACHE[kk] = bloom_build(existing, value_col)
     return _BUILD_CACHE[kk]
 
 
@@ -226,8 +200,6 @@ def bloom_anti_join(
     existing: DataFrame,
     record_key: str,
     existing_key: str | None = None,
-    k: int = 3,
-    m: int = 1 << 16,
     cache_key: str | None = None,
     n_existing: int | None = None,
     broadcast_max_existing: int = 4_000_000,
@@ -237,7 +209,8 @@ def bloom_anti_join(
     Result is IDENTICAL to ``records.join(existing, ..., "left_anti")``
     (Bloom filters have no false negatives): definitely-new rows pass
     map-side; only maybe-existing rows (true hits + ~(1-e^{-kn/m})^k
-    false positives) reach the shuffle for the exact check.
+    false positives, k = BLOOM_K, m = BLOOM_M) reach the shuffle for the
+    exact check.
 
     DETERMINISM PRECONDITION: the two output branches are independent
     scans of ``records`` — a NON-deterministic records plan (sample(),
@@ -289,10 +262,10 @@ def bloom_anti_join(
             how="left_anti",
         )
     if cache_key is not None:
-        words = bloom_build_cached(existing, ek, cache_key, k, m)
+        words = bloom_build_cached(existing, ek, cache_key)
     else:
-        words = bloom_build(existing, ek, k, m)
-    maybe = maybe_contains(F.col(record_key), words, k, m)
+        words = bloom_build(existing, ek)
+    maybe = maybe_contains(F.col(record_key), words)
     definite_new = records.filter(~maybe)
     needs_check = records.filter(maybe).join(
         existing.select(F.col(ek).alias(record_key)).distinct(),

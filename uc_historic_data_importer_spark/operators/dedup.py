@@ -34,17 +34,17 @@ from uc_historic_data_importer_spark.functions.hashes import (
 from uc_historic_data_importer_spark.operators.text import tokens_col
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: md5(content) groups with >1 member.
 
     Returns (text_hash, dup_count, keep_id) where keep_id is the smallest
     id — the deterministic survivor."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
         .agg(
             F.count(F.lit(1)).alias("dup_count"),
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
         )
         .filter(F.col("dup_count") > 1)
     )
@@ -123,7 +123,7 @@ def doc_shingle_hashes(
 
 
 def shingle_coverage_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+    df: DataFrame, n: int = 3
 ) -> DataFrame:
     """No-silent-drops accounting for the shingle family: documents
     shorter than ``n`` tokens produce an EMPTY shingle set and appear
@@ -147,8 +147,8 @@ def shingle_coverage_stats(
         # is no longer built here: n=0 would otherwise silently report
         # full coverage for the degenerate single-""-shingle corpus
         raise ValueError(f"n must be >= 1 (got {n})")
-    empty = (F.size(tokens_col(F.col(text_col))) < n).cast("long")
-    return df.select(F.col(id_col), empty.alias("_e")).agg(
+    empty = (F.size(tokens_col(F.col("text"))) < n).cast("long")
+    return df.select(F.col("doc_id"), empty.alias("_e")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_e").alias("n_unshingled_docs"),
         F.round(
@@ -213,9 +213,6 @@ def _bucket_pairs(df: DataFrame, *bucket_cols: str) -> DataFrame:
 def jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs (a < b, jaccard >= threshold).
@@ -248,7 +245,7 @@ def jaccard_pairs(
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1] (got {threshold})")
     _validate_freq_cap("max_shingle_freq", max_shingle_freq)
-    sh = doc_shingle_hashes(df, text_col, id_col, n)
+    sh = doc_shingle_hashes(df, "text", "doc_id", 3)
     if max_shingle_freq is not None:
         from pyspark.sql.window import Window
 
@@ -294,9 +291,6 @@ def jaccard_pairs(
 
 def jaccard_bucket_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """No-silent-caps accounting for `jaccard_pairs`'s df-cut: one row
@@ -311,7 +305,7 @@ def jaccard_bucket_stats(
     denominator — surviving-shingle Jaccard stays exact) and this frame
     makes the drop observable instead of silent."""
     bs = (
-        doc_shingle_hashes(df, text_col, id_col, n)
+        doc_shingle_hashes(df, "text", "doc_id", 3)
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
     )
@@ -372,9 +366,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     num_perms: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """LSH candidate pairs (a < b): docs sharing at least one band.
 
@@ -383,7 +374,7 @@ def minhash_lsh_pairs(
     bands. Cost is linear in docs + bucket collisions, never all-pairs
     — PROBABILISTICALLY: a pathological corpus (mass-identical docs)
     collapses a band bucket to the whole corpus."""
-    banded = minhash_band_signatures(df, num_perms, bands, text_col, id_col, n)
+    banded = minhash_band_signatures(df, num_perms, bands, "text", "doc_id", 3)
     # bucket-local pair expansion (one pass) instead of a banded self-join
     # (two passes over the signature computation + a shuffle join)
     return _bucket_pairs(banded, "band_idx", "band_sig").distinct()
@@ -421,9 +412,6 @@ def lsh_join_incremental(
     corpus_df: DataFrame,
     num_perms: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """(new_id, corpus_id) near-dup candidates of an INCOMING batch
     against an EXISTING corpus — the incremental form of
@@ -434,9 +422,9 @@ def lsh_join_incremental(
     matches; the corpus text is never re-read (its bands are the
     persisted index), and a batch-side broadcast applies when the daily
     increment is small."""
-    nb = minhash_band_signatures(new_df, num_perms, bands, text_col, id_col, n)
+    nb = minhash_band_signatures(new_df, num_perms, bands, "text", "doc_id", 3)
     cb = minhash_band_signatures(
-        corpus_df, num_perms, bands, text_col, id_col, n
+        corpus_df, num_perms, bands, "text", "doc_id", 3
     )
     return (
         nb.alias("n")
@@ -496,13 +484,13 @@ def simhash(
 
 
 def simhash_buckets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
+    df: DataFrame, bits: int = 32
 ) -> DataFrame:
     """(simhash, dup_count, keep_id) for buckets with >1 member — exact
     SimHash-collision dedup; hamming-distance banding layers on top the
     same way MinHash-LSH bands do."""
     return (
-        simhash(df, text_col, id_col, bits)
+        simhash(df, "text", "doc_id", bits)
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("dup_count"), F.min("doc_id").alias("keep_id"))
         .filter(F.col("dup_count") > 1)
@@ -511,9 +499,6 @@ def simhash_buckets(
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """Collapse near-dup pairs into clusters: (doc_id, component) where
     component = the smallest doc_id reachable through the pair graph —
@@ -529,14 +514,9 @@ def connected_components(
     truncates the per-round lineage so the plan does not grow
     quadratically with rounds.
     """
-    if max_iters < 1:
-        # the for-else failure path interpolates the last round's
-        # `changed` count; with zero rounds that name is unbound and
-        # the misconfiguration would surface as a NameError
-        raise ValueError("max_iters must be >= 1")
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -563,7 +543,7 @@ def connected_components(
     )
     changed = labels.filter("_changed").count()
     labels = labels.drop("_changed")
-    for _ in range(max_iters - 1):
+    for _ in range(19):
         if changed == 0:
             break
         nbr_min = (
@@ -588,10 +568,10 @@ def connected_components(
         labels = new_labels.drop("_changed")
     if changed != 0:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
+            f"connected_components did not converge in 20 rounds "
             f"({changed} labels still changing): the pair graph's diameter "
-            "exceeds the round budget. Raise max_iters or use "
-            "connected_components_star (O(log n) rounds on any graph shape)."
+            "exceeds the round budget. Use connected_components_star "
+            "(O(log n) rounds on any graph shape)."
         )
     return labels.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("component")
@@ -600,9 +580,6 @@ def connected_components(
 
 def connected_components_star(
     pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iters: int = 50,
 ) -> DataFrame:
     """(doc_id, component) via alternating large-star/small-star edge
     contraction — O(log n) rounds on ANY graph shape, vs. O(diameter)
@@ -623,8 +600,8 @@ def connected_components_star(
     # canonical (high, low) edge list, self-loop-free
     edges = (
         pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-            F.least(F.col(id_a), F.col(id_b)).alias("v"),
+            F.greatest(F.col("doc_a"), F.col("doc_b")).alias("u"),
+            F.least(F.col("doc_a"), F.col("doc_b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -686,7 +663,7 @@ def connected_components_star(
         )
 
     n_edges = edges.count()
-    for _ in range(max_iters):
+    for _ in range(50):
         contracted = _small_star(_large_star(edges))
         contracted = contracted.localCheckpoint(eager=True)
         # Set-equality test for two DISTINCT edge sets, one anti-join
@@ -709,7 +686,7 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} "
+            "connected_components_star did not converge in 50 "
             "rounds — this should not happen (round count is logarithmic "
             "in component size); inspect the edge list for pathologies."
         )
@@ -727,8 +704,6 @@ def connected_components_star(
 def ngram_contamination(
     train: DataFrame,
     test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 4,
 ) -> DataFrame:
     """Benchmark-decontamination sweep: train documents sharing any word
@@ -745,8 +720,8 @@ def ngram_contamination(
 
     Returns (doc_id, n_contaminated_grams) for flagged train docs only.
     """
-    test_grams = doc_shingle_hashes(test, text_col, id_col, n).select("h").distinct()
-    train_grams = doc_shingle_hashes(train, text_col, id_col, n)
+    test_grams = doc_shingle_hashes(test, "text", "doc_id", n).select("h").distinct()
+    train_grams = doc_shingle_hashes(train, "text", "doc_id", n)
     return (
         train_grams.join(F.broadcast(test_grams), "h", "inner")
         .groupBy("doc_id")
@@ -757,9 +732,6 @@ def ngram_contamination(
 def source_minhash_overlap(
     df: DataFrame,
     num_perms: int = 16,
-    text_col: str = "text",
-    group_col: str = "source",
-    n: int = 3,
 ) -> DataFrame:
     """Cross-source overlap matrix: estimated shingle-set Jaccard
     between every pair of sources, from per-source MinHash signatures.
@@ -789,8 +761,8 @@ def source_minhash_overlap(
     if 10000 % num_perms:
         raise ValueError("num_perms must divide 10000 for exact jaccard_e4")
     sh = _ensure_parallel(df).select(
-        F.col(group_col).alias("grp"),
-        F.explode(shingles_col(F.col(text_col), n)).alias("shingle"),
+        F.col("source").alias("grp"),
+        F.explode(shingles_col(F.col("text"), 3)).alias("shingle"),
     ).select("grp", md5_i64(F.col("shingle")).alias("h"))
     # F.expr per permutation — see minhash_signatures for why
     aggs = [
@@ -835,14 +807,11 @@ def source_minhash_overlap(
 
 def best_representative(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    quality_col: str = "n_chars",
 ) -> DataFrame:
     """Quality-aware canonical-document selection: group documents by
     canonical fingerprint (sorted distinct token set) and, for every
     cluster with >1 member, pick the highest-quality member (max
-    quality_col, ties to the smallest id) as the keeper. Production
+    n_chars, ties to the smallest doc_id) as the keeper. Production
     dedup keeps the BEST duplicate, not an arbitrary one — min-id
     selection (dedup_apply) discards longer/cleaner variants.
 
@@ -854,30 +823,14 @@ def best_representative(
 
     from uc_historic_data_importer_spark.operators.text import tokens_col
 
-    # fingerprint/rn/cluster_size are computed INTERNALLY before the
-    # final select: a caller parameter naming one of them reads the
-    # computed column instead of the user's data (probed r13:
-    # quality_col="rn" ranked clusters by the row_number itself and
-    # silently returned wrong representatives) — the segment_clean_docs
-    # collision class from review batch 4.
-    reserved = {"fingerprint", "rn", "cluster_size"}
-    for pname, v in (("text_col", text_col), ("id_col", id_col),
-                     ("quality_col", quality_col)):
-        if v in reserved:
-            raise ValueError(
-                f"{pname}={v!r} collides with an internal column of "
-                f"best_representative ({sorted(reserved)}); rename the "
-                "input column"
-            )
-
     fp = F.md5(
         F.concat_ws(
-            " ", F.array_sort(F.array_distinct(tokens_col(F.col(text_col))))
+            " ", F.array_sort(F.array_distinct(tokens_col(F.col("text"))))
         )
     )
     d = df.withColumn("fingerprint", fp)
     w = Window.partitionBy("fingerprint").orderBy(
-        F.col(quality_col).desc(), F.col(id_col).asc()
+        F.col("n_chars").desc(), F.col("doc_id").asc()
     )
     wc = Window.partitionBy("fingerprint")
     return (
@@ -886,9 +839,9 @@ def best_representative(
         .filter((F.col("rn") == 1) & (F.col("cluster_size") > 1))
         .select(
             "fingerprint",
-            F.col(id_col).alias("rep_doc_id"),
+            F.col("doc_id").alias("rep_doc_id"),
             "cluster_size",
-            F.col(quality_col).alias("rep_quality"),
+            F.col("n_chars").alias("rep_quality"),
         )
     )
 
@@ -937,9 +890,6 @@ def minhash_jaccard_estimates(
     df: DataFrame,
     num_perms: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """LSH candidate pairs WITH their MinHash Jaccard estimate —
     matching signature components / num_perms (the Broder estimator,
@@ -962,7 +912,7 @@ def minhash_jaccard_estimates(
     # chain was ~2x5.8 s at sf1). At 100 TB the signature table is the
     # persisted LSH index anyway (minhash_band_signatures doc).
     sig = minhash_signatures(
-        df, num_perms, text_col, id_col, n
+        df, num_perms, "text", "doc_id", 3
     ).localCheckpoint(eager=False)
     pairs = _bucket_pairs(
         _band_signatures_of_sig(sig, num_perms, bands),

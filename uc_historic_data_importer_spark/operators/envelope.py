@@ -39,7 +39,6 @@ class RunContext:
     unit_of_work_id: str
     timestamp: str  # yyyy-MM-dd'T'HH:mm:ss.SSS wall clock
     trace_id: str
-    hdi_version: str = "0.1.0"
 
 
 def _b(col: Column) -> Column:
@@ -96,7 +95,7 @@ def envelope_col(
         F.lit('"timestamp":"' + ctx.timestamp + '",'),
         F.lit('"traceId":"' + ctx.trace_id + '",'),
         F.lit('"@type":"HDI",'),
-        F.lit('"version":"' + ctx.hdi_version + '",'),
+        F.lit('"version":"0.1.0",'),
         F.lit('"message":{'),
         F.lit('"@type":"'), inner_type, F.lit('",'),
         F.lit('"_id":'), message_id, F.lit(","),

@@ -41,7 +41,6 @@ def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
 def latest_per_key(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("table", "key_hex"),
-    version_col: str = "version",
     payload_cols: tuple[str, ...] = ("envelope",),
 ) -> DataFrame:
     """max_by aggregation: one shuffle, map-side partial aggregation.
@@ -58,25 +57,25 @@ def latest_per_key(
     names containing '.' or '`' — which a bare F.col would parse as
     nested-field access — work end to end."""
     # only the grouping columns collide: the agg output is
-    # key_cols + version_col + the internal "_picked" struct, so a key
-    # or version column literally named _picked would alias-clash;
+    # key_cols + "version" + the internal "_picked" struct, so a key
+    # column literally named _picked would alias-clash;
     # a PAYLOAD column named _picked is fine (it lives inside the
     # struct and is re-aliased on the way out).
-    if "_picked" in key_cols or version_col == "_picked":
+    if "_picked" in key_cols:
         raise ValueError(
-            "key/version column '_picked' collides with latest_per_key's "
+            "key column '_picked' collides with latest_per_key's "
             "internal aggregate name; rename it first"
         )
     picked = F.max_by(
         F.struct(*[_qcol(c).alias(c) for c in payload_cols]),
-        _qcol(version_col),
+        _qcol("version"),
     ).alias("_picked")
     agg = df.groupBy(*[_qcol(c) for c in key_cols]).agg(
-        F.max(_qcol(version_col)).alias(version_col), picked
+        F.max(_qcol("version")).alias("version"), picked
     )
     return agg.select(
         *[_qcol(c) for c in key_cols],
-        _qcol(version_col),
+        _qcol("version"),
         *[F.col("_picked").getField(c).alias(c) for c in payload_cols],
     )
 
@@ -84,18 +83,17 @@ def latest_per_key(
 def latest_per_key_window(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("table", "key_hex"),
-    version_col: str = "version",
-    tiebreak_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """row_number() formulation returning entire rows.
 
-    Deterministic when tiebreak_cols are provided; AQE handles key skew
+    Ties on version pick an arbitrary row; AQE handles key skew
     (not expected here thanks to the CRC prefix). Column references are
     backtick-quoted (_qcol) like latest_per_key's: a bare F.col would
     parse a name containing '.' as nested-field access."""
     _check_reserved(df, {"_rn"}, "latest_per_key_window")
-    order = [_qcol(version_col).desc()] + [_qcol(c).desc() for c in tiebreak_cols]
-    w = Window.partitionBy(*[_qcol(c) for c in key_cols]).orderBy(*order)
+    w = Window.partitionBy(*[_qcol(c) for c in key_cols]).orderBy(
+        _qcol("version").desc()
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -106,8 +104,6 @@ def latest_per_key_window(
 def scd2_intervals(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("table", "key_hex"),
-    version_col: str = "version",
-    open_end: int | None = None,
 ) -> DataFrame:
     """Versioned cells -> SCD-2 validity intervals.
 
@@ -115,7 +111,7 @@ def scd2_intervals(
     maxVersions=MAX_INT model, SURVEY.md §1.4); this derives the
     temporal-table view: each version is valid from its own timestamp
     until the next version's (`valid_to`), the current version staying
-    open (`open_end`, default NULL). `is_current` marks the row the
+    open (NULL). `is_current` marks the row the
     latest-per-key operator would pick — making latest_per_key a
     degenerate read of this view.
 
@@ -134,11 +130,11 @@ def scd2_intervals(
     # either name (e.g. re-running scd2 over its own output) would be
     # silently overwritten, not extended
     _check_reserved(df, {"_dup", "valid_to", "is_current"}, "scd2_intervals")
-    payload = [c for c in df.columns if c not in key_cols and c != version_col]
+    payload = [c for c in df.columns if c not in key_cols and c != "version"]
     # _qcol throughout: dotted/backticked column names must resolve as
     # flat columns here exactly as they do in latest_per_key
     dup_w = Window.partitionBy(
-        *[_qcol(c) for c in key_cols], _qcol(version_col)
+        *[_qcol(c) for c in key_cols], _qcol("version")
     ).orderBy(*([_qcol(c).desc() for c in payload] or [F.lit(1)]))
     d = (
         df.withColumn("_dup", F.row_number().over(dup_w))
@@ -146,10 +142,10 @@ def scd2_intervals(
         .drop("_dup")
     )
     w = Window.partitionBy(*[_qcol(c) for c in key_cols]).orderBy(
-        _qcol(version_col).asc()
+        _qcol("version").asc()
     )
-    nxt = F.lead(_qcol(version_col)).over(w)
+    nxt = F.lead(_qcol("version")).over(w)
     return d.withColumn(
         "valid_to",
-        F.coalesce(nxt, F.lit(open_end).cast("long")),
+        F.coalesce(nxt, F.lit(None).cast("long")),
     ).withColumn("is_current", nxt.isNull())

@@ -171,11 +171,7 @@ def _decode_image(payload: bytes) -> tuple[int, int, list[float]]:
     return w, h, feat
 
 
-def extract_features(
-    media: DataFrame,
-    batch_size_hint: int = 1024,
-    decoder=None,
-) -> DataFrame:
+def extract_features(media: DataFrame, decoder=None) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow record batches).
 
     Partition count is preserved; payloads never cross back to the JVM —
@@ -230,7 +226,7 @@ HEALTH_SCHEMA = T.StructType(
 )
 
 
-def decode_health(media: DataFrame, decoder=None) -> DataFrame:
+def decode_health(media: DataFrame) -> DataFrame:
     """Per-asset decode-status audit: which payloads decode for real,
     which only yield header dims, which are unrecognized stubs, and —
     the degradation signal — which carry a VALID container signature
@@ -241,14 +237,7 @@ def decode_health(media: DataFrame, decoder=None) -> DataFrame:
     rising fallback share flags corrupt shards or codec regressions.
 
     Same Arrow/mapInPandas shape as extract_features (payloads never
-    return to the JVM; only 4 tiny columns do). With a custom
-    ``decoder`` (the PIL/torchvision seam) statuses collapse to
-    'real'/'fallback' — a 3-tuple decoder has no header/stub notion."""
-    decode_status = (
-        _decode_image_with_status
-        if decoder is None
-        else _wrap_custom_decoder_status(decoder)
-    )
+    return to the JVM; only 4 tiny columns do)."""
 
     def _audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -256,7 +245,7 @@ def decode_health(media: DataFrame, decoder=None) -> DataFrame:
             for row in pdf.itertuples(index=False):
                 payload = bytes(row.payload) if row.payload is not None else b""
                 try:
-                    status = decode_status(payload)[3]
+                    status = _decode_image_with_status(payload)[3]
                 except _DECODE_ERRORS:
                     # undecodable by contract (e.g. empty payload) —
                     # extract_features maps this to width=-1, not stub
@@ -272,20 +261,6 @@ def decode_health(media: DataFrame, decoder=None) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(_audit, schema=HEALTH_SCHEMA)
-
-
-def _wrap_custom_decoder_status(decoder):
-    def decode_status(payload: bytes):
-        try:
-            w, h, feat = decoder(payload)
-        except _DECODE_ERRORS as exc:
-            if not payload:
-                raise
-            _log_fallback(exc)
-            return -1, -1, None, _STATUS_FALLBACK
-        return w, h, feat, _STATUS_REAL
-
-    return decode_status
 
 
 def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:

@@ -31,8 +31,6 @@ from uc_historic_data_importer_spark.operators.text import tokens_col
 
 def pack_concat_chunks(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     budget: int = 512,
     n_shards: int = 8,
     encode=None,
@@ -55,20 +53,20 @@ def pack_concat_chunks(
         # window would fold the whole corpus into one partition
         raise ValueError(f"n_shards must be >= 1: {n_shards}")
     if encode is None:
-        toks = F.size(tokens_col(F.col(text_col)))
+        toks = F.size(tokens_col(F.col("text")))
     else:
         from uc_historic_data_importer_spark.operators.text import (
             encoded_ids_udf,
         )
 
-        toks = F.size(encoded_ids_udf(encode)(F.col(text_col)))
+        toks = F.size(encoded_ids_udf(encode)(F.col("text")))
     # NULL text occupies zero tokens exactly like the empty string:
     # size(NULL) is NULL in Spark, and an un-coalesced NULL n_tokens
     # would dodge the `n_tokens == 0` branch below and report
     # n_chunks = 1 for a document that occupies nothing
     toks = F.coalesce(toks, F.lit(0))
-    shard = (md5_i64(F.col(id_col).cast("string")) % F.lit(n_shards)).alias("shard")
-    base = df.select(F.col(id_col).alias("doc_id"), shard, toks.alias("n_tokens"))
+    shard = (md5_i64(F.col("doc_id").cast("string")) % F.lit(n_shards)).alias("shard")
+    base = df.select(F.col("doc_id").alias("doc_id"), shard, toks.alias("n_tokens"))
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")
@@ -134,8 +132,6 @@ def pack_sql(tokens_sql: str, budget: int, n_shards: int) -> str:
 
 def chunk_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     size: int = 64,
     stride: int = 32,
 ) -> DataFrame:
@@ -150,9 +146,9 @@ def chunk_spans(
     """
     if size <= 0 or stride <= 0:
         raise ValueError("size and stride must be positive")
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         toks.alias("_toks"),
         F.size(toks).alias("n_tokens"),
     )
@@ -203,8 +199,6 @@ def chunk_sql(tokens_sql: str, size: int, stride: int) -> str:
 def shard_assign_by_tokens(
     df: DataFrame,
     target_tokens: int,
-    n_tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
     n_buckets: int = 256,
 ) -> DataFrame:
     """Token-balanced GLOBAL shard assignment: lay all documents on one
@@ -214,7 +208,7 @@ def shard_assign_by_tokens(
     shard can overshoot by at most one document (the standard shard-
     writer closing rule).
 
-    ``n_tokens_col`` is count-agnostic: feed it whitespace counts,
+    The ``n_tokens`` column is count-agnostic: feed it whitespace counts,
     BPE-ish counts, or REAL-tokenizer counts via
     ``text.token_count_col(text, encode)`` (the encoded_ids_udf seam) —
     the shard arithmetic below is unchanged.
@@ -252,9 +246,9 @@ def shard_assign_by_tokens(
             "first"
         )
     d = df.withColumn(
-        "_hkey", md5_i64(F.col(id_col).cast("string"))
+        "_hkey", md5_i64(F.col("doc_id").cast("string"))
     ).withColumn("_bucket", F.pmod(F.col("_hkey"), F.lit(n_buckets)))
-    totals = d.groupBy("_bucket").agg(F.sum(n_tokens_col).alias("_btot"))
+    totals = d.groupBy("_bucket").agg(F.sum("n_tokens").alias("_btot"))
     wb = Window.orderBy("_bucket").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -263,16 +257,16 @@ def shard_assign_by_tokens(
     ).select("_bucket", "_boff")
     wi = (
         Window.partitionBy("_bucket")
-        .orderBy("_hkey", id_col)
+        .orderBy("_hkey", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     j = d.join(F.broadcast(offsets), "_bucket")
     out = j.withColumn(
-        "_cum", F.sum(n_tokens_col).over(wi) + F.col("_boff")
-    ).withColumn("global_start", F.col("_cum") - F.col(n_tokens_col))
+        "_cum", F.sum("n_tokens").over(wi) + F.col("_boff")
+    ).withColumn("global_start", F.col("_cum") - F.col("n_tokens"))
     return out.select(
-        id_col,
-        F.col(n_tokens_col).cast("long").alias("n_tokens"),
+        "doc_id",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
         "global_start",
         F.expr(f"global_start div {target_tokens}").alias("shard_id"),
     )
@@ -280,8 +274,6 @@ def shard_assign_by_tokens(
 
 def content_defined_chunks(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     divisor: int = 8,
 ) -> DataFrame:
@@ -302,9 +294,9 @@ def content_defined_chunks(
     Structured Streaming."""
     if k <= 0 or divisor <= 0:
         raise ValueError("k and divisor must be positive")
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         toks.alias("_toks"),
         F.size(toks).alias("n_tokens"),
     )
@@ -362,8 +354,6 @@ def content_defined_chunks(
 
 def chunk_dup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     divisor: int = 8,
 ) -> DataFrame:
@@ -389,7 +379,7 @@ def chunk_dup_stats(
     from pyspark.sql import Window
 
     chunks = content_defined_chunks(
-        df, id_col=id_col, text_col=text_col, k=k, divisor=divisor
+        df, k=k, divisor=divisor
     )
     per_pair = chunks.groupBy("chunk_hash", "doc_id").agg(
         F.count(F.lit(1)).alias("_n_occ")

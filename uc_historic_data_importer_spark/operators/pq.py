@@ -147,10 +147,6 @@ def pq_fit(
     m: int = 4,
     k: int = 4,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-    centroid_dp: int = 12,
 ) -> list[list[list[float]]]:
     """Deterministic per-subspace L2 k-means: returns codebooks[m][k][d/m].
 
@@ -160,14 +156,14 @@ def pq_fit(
     k * sub_dim partials per map partition. Codes that capture no
     vectors keep their previous centroid (mirrored in the oracle with a
     coalesce join)."""
-    dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = corpus.select(F.size(F.col("embedding")).alias("d")).first()
     if dim_row is None or dim_row["d"] is None or dim_row["d"] < 0:
         # r9 review: an empty corpus (first() -> None) or a NULL first
         # embedding (d NULL; size() of NULL is -1 under legacy conf)
         # crashed with TypeError int(None) — a fit over nothing is a
         # caller error, fail naming it
         raise ValueError(
-            f"pq_fit: cannot infer embedding dim from {vec_col!r} "
+            "pq_fit: cannot infer embedding dim from 'embedding' "
             "(empty corpus or NULL first embedding)"
         )
     dim = int(dim_row["d"])
@@ -176,8 +172,8 @@ def pq_fit(
     sub_dim = dim // m
 
     first = [
-        [float(x) for x in r[vec_col]]
-        for r in corpus.select(vec_col, id_col).orderBy(id_col).take(k)
+        [float(x) for x in r["embedding"]]
+        for r in corpus.select("embedding", "vec_id").orderBy("vec_id").take(k)
     ]
     books = [
         [v[j * sub_dim : (j + 1) * sub_dim] for v in first] for j in range(m)
@@ -193,12 +189,12 @@ def pq_fit(
         # sub_dim — driver state stays one codebook.
         codes = F.array(
             *[
-                F.expr(_code_expr_sql("_E", j, sub_dim, books[j], round_dp))
+                F.expr(_code_expr_sql("_E", j, sub_dim, books[j], 6))
                 for j in range(m)
             ]
         )
         sums = (
-            _with_vec_ref(corpus, vec_col).select(
+            _with_vec_ref(corpus, "embedding").select(
                 codes.alias("_codes"),
                 F.posexplode(F.col("_E")).alias("pos", "x"),
             )
@@ -220,7 +216,7 @@ def pq_fit(
             j = int(r["j"])
             accs[j].setdefault(int(r["code"]), [0.0] * sub_dim)[
                 int(r["dim"])
-            ] = _round_away(float(r["sx"]) / int(r["n"]), centroid_dp)
+            ] = _round_away(float(r["sx"]) / int(r["n"]), 12)
         books = [
             [accs[j].get(c, books[j][c]) for c in range(k)] for j in range(m)
         ]
@@ -256,9 +252,6 @@ def pq_topk(
     codebooks: list[list[list[float]]],
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     exclude_id: int | None = None,
 ) -> DataFrame:
     """ADC top-k: (neighbor_id, approx_dist, rank), nearest first.
@@ -287,14 +280,14 @@ def pq_topk(
             row.append((qq + cc) - 2.0 * qc)
         luts.append(row)
 
-    codes = pq_encode(corpus, codebooks, id_col, vec_col, round_dp)
+    codes = pq_encode(corpus, codebooks, "vec_id", "embedding", 6)
     score: Column = F.lit(0.0)
     for j in range(m):
         lut = F.array(*[F.lit(float(d)) for d in luts[j]])
         score = score + F.element_at(lut, F.col(f"code_{j}") + 1)
     scored = codes.select(
         F.col("vec_id").alias("neighbor_id"),
-        F.round(score, round_dp).alias("approx_dist"),
+        F.round(score, 6).alias("approx_dist"),
     )
     if exclude_id is not None:
         scored = scored.filter(F.col("neighbor_id") != exclude_id)

@@ -1,26 +1,23 @@
 """Range (interval) join — the band-join companion to the as-of join.
 
 Semantics: pair (l, r) where r.ts is inside [l.ts + lower_ms, l.ts +
-upper_ms] (bounds inclusive; set lower_ms=1 for strictly-after), plus
-optional equi keys.
+upper_ms] (bounds inclusive; set lower_ms=1 for strictly-after).
 
 Scale shape: Spark's default plan for a pure inequality join is a
 broadcast-nested-loop (or cartesian) — O(|L| x |R|) and undistributable.
 This operator turns it into an equi-join by time binning: each left row
 is exploded to the (at most ceil(window/width) + 1) buckets its window
 overlaps, the right side gets floor(ts/width), and the join runs on
-(equi_keys..., bucket) followed by the exact range filter. Cost is one
+the bucket followed by the exact range filter. Cost is one
 shuffle of each side on a uniform bucket key plus output-proportional
 work — the standard interval-bucketing band join (as used by interval
 joins in stream processors and range-join optimizations in warehouse
 engines).
 
-Choosing `bucket_width_ms`: >= the window span means <= 2 buckets per
-left row (the default); smaller widths trade explode fan-out for finer
-candidate pruning when the window is much wider than the typical match
-distance. Bucket keys are uniform by construction (time is), so the
-shuffle is skew-free; a hot wall-clock burst localizes to one bucket and
-AQE's skew-join split handles it.
+The bucket width is the window span (at least 1 ms), so each left row
+explodes to at most 2 buckets. Bucket keys are uniform by construction
+(time is), so the shuffle is skew-free; a hot wall-clock burst
+localizes to one bucket and AQE's skew-join split handles it.
 """
 
 from __future__ import annotations
@@ -36,15 +33,12 @@ def interval_join(
     right_ts: str,
     lower_ms: int,
     upper_ms: int,
-    equi_keys: list[str] | None = None,
-    bucket_width_ms: int | None = None,
 ) -> DataFrame:
     """All (left, right) pairs with unix_millis(right.ts) within
     [unix_millis(left.ts) + lower_ms, unix_millis(left.ts) + upper_ms].
 
     Output columns: left columns, then right columns; ambiguous names on
-    the right are suffixed `_r`. `equi_keys` must exist on both sides and
-    join by equality (they keep their unsuffixed name once).
+    the right are suffixed `_r`.
 
     Reserved names: inputs may not carry the internal temp columns
     (`_ms_l`, `_ms_r`, `_bucket`) — withColumn would overwrite them and
@@ -62,23 +56,12 @@ def interval_join(
             f"input columns {sorted(taken)} collide with interval_join's "
             "internal temp names; rename them first"
         )
-    # explicit validation, not a falsy `or`: bucket_width_ms=0 would
-    # silently fall back to the default width (coarser pruning than the
-    # caller asked for) and a negative width would explode descending
-    # bucket sequences instead of erroring
-    if bucket_width_ms is not None and bucket_width_ms < 1:
-        raise ValueError("bucket_width_ms must be >= 1")
-    width = (
-        bucket_width_ms
-        if bucket_width_ms is not None
-        else max(upper_ms - lower_ms, 1)
-    )
-    keys = list(equi_keys or [])
+    width = max(upper_ms - lower_ms, 1)
 
     l_ms = F.unix_millis(F.col(left_ts))
     r_ms = F.unix_millis(F.col(right_ts))
 
-    overlap = [c for c in right.columns if c in left.columns and c not in keys]
+    overlap = [c for c in right.columns if c in left.columns]
     suffix_clash = [c for c in overlap if f"{c}_r" in left.columns]
     if suffix_clash:
         raise ValueError(
@@ -99,7 +82,7 @@ def interval_join(
         "_bucket", F.floor(F.col("_ms_r") / F.lit(width))
     )
 
-    joined = lb.join(rb, keys + ["_bucket"]).filter(
+    joined = lb.join(rb, ["_bucket"]).filter(
         (F.col("_ms_r") >= F.col("_ms_l") + F.lit(lower_ms))
         & (F.col("_ms_r") <= F.col("_ms_l") + F.lit(upper_ms))
     )

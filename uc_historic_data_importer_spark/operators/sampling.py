@@ -36,6 +36,12 @@ from uc_historic_data_importer_spark.functions.hashes import md5_i64
 
 # hash buckets for fraction selection: p is quantized to 1/DENOM steps
 DENOM = 1_000_000
+# decimals shared by the samplers and their DuckDB oracles: the weight a
+# domain missing from a mixture's weights gets, the decimals the
+# temperature rates and the A-ES keys round at before they are compared
+MIXTURE_DEFAULT_WEIGHT = 1.0
+TEMPERATURE_RATE_DP = 9
+WEIGHTED_KEY_DP = 8
 
 
 def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
@@ -76,7 +82,6 @@ def split_assign(
     id_col: str,
     val_fraction: float = 0.01,
     test_fraction: float = 0.01,
-    out_col: str = "split",
 ) -> DataFrame:
     """Label each row train/val/test by disjoint hash ranges of its id.
 
@@ -88,12 +93,12 @@ def split_assign(
         raise ValueError("val/test fractions must be >= 0")
     if val_fraction + test_fraction >= 1.0:
         raise ValueError("val + test fractions must leave room for train")
-    _check_reserved(df, {out_col}, "split_assign")
+    _check_reserved(df, {"split"}, "split_assign")
     b = _bucket(id_col)
     val_hi = int(val_fraction * DENOM)
     test_hi = val_hi + int(test_fraction * DENOM)
     return df.withColumn(
-        out_col,
+        "split",
         F.when(b < val_hi, F.lit("val"))
         .when(b < test_hi, F.lit("test"))
         .otherwise(F.lit("train")),
@@ -149,9 +154,6 @@ def split_sql(id_expr: str, val_fraction: float, test_fraction: float) -> str:
 def mixture_sample(
     df: DataFrame,
     weights: dict[str, float],
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    default_weight: float = 1.0,
 ) -> DataFrame:
     """Domain-mixture construction (DoReMi-style reweighting): emit each
     row round(weight) times deterministically — weight 2.5 yields 2 full
@@ -166,23 +168,21 @@ def mixture_sample(
     thresholds at plan build — no float comparison at runtime (float to
     int casts round in some engines and truncate in others).
     """
-    if any(
-        not math.isfinite(w) for w in list(weights.values()) + [default_weight]
-    ):
+    if any(not math.isfinite(w) for w in weights.values()):
         # floor(nan/inf) raises deep inside _mixture_levels otherwise —
         # surface the configuration error at the API boundary
         raise ValueError("mixture weights must be finite")
-    if any(w < 0 for w in weights.values()) or default_weight < 0:
+    if any(w < 0 for w in weights.values()):
         raise ValueError("mixture weights must be >= 0")
     _check_reserved(df, {"_n_full", "_thresh", "copy_idx"}, "mixture_sample")
 
     levels = _mixture_levels
 
-    n_full_col = F.lit(levels(default_weight)[0])
-    thresh_col = F.lit(levels(default_weight)[1])
+    n_full_col = F.lit(levels(MIXTURE_DEFAULT_WEIGHT)[0])
+    thresh_col = F.lit(levels(MIXTURE_DEFAULT_WEIGHT)[1])
     for dom, w in sorted(weights.items()):
         nf, th = levels(w)
-        cond = F.col(domain_col) == dom
+        cond = F.col("source") == dom
         n_full_col = F.when(cond, F.lit(nf)).otherwise(n_full_col)
         thresh_col = F.when(cond, F.lit(th)).otherwise(thresh_col)
 
@@ -206,7 +206,7 @@ def mixture_sample(
     )
     frac_key = (
         md5_i64(
-            F.concat_ws(":", F.col(id_col).cast("string"), F.col("copy_idx"))
+            F.concat_ws(":", F.col("doc_id").cast("string"), F.col("copy_idx"))
         )
         % F.lit(DENOM)
     )
@@ -220,9 +220,6 @@ def mixture_sample(
 
 def mixture_sql(
     weights: dict[str, float],
-    domain_col: str = "source",
-    id_expr: str = "doc_id",
-    default_weight: float = 1.0,
 ) -> str:
     """DuckDB fragment reproducing mixture_sample over `documents`:
     returns (CTE body, WHERE predicate) as a single SELECT."""
@@ -230,10 +227,10 @@ def mixture_sql(
 
     levels = _mixture_levels
 
-    dnf, dth = levels(default_weight)
+    dnf, dth = levels(MIXTURE_DEFAULT_WEIGHT)
     if weights:
-        nf_case = f"CASE {domain_col} "
-        th_case = f"CASE {domain_col} "
+        nf_case = "CASE source "
+        th_case = "CASE source "
         for dom, w in sorted(weights.items()):
             nf, th = levels(w)
             # '' doubling: a domain name containing a quote must stay a
@@ -247,7 +244,9 @@ def mixture_sql(
         # zero-branch CASE is invalid SQL; an empty weights dict means
         # every domain takes the default (mirrors mixture_sample)
         nf_case, th_case = str(dnf), str(dth)
-    h = md5_i64_sql(f"(CAST({id_expr} AS VARCHAR) || ':' || CAST(copy_idx AS VARCHAR))")
+    h = md5_i64_sql(
+        "(CAST(doc_id AS VARCHAR) || ':' || CAST(copy_idx AS VARCHAR))"
+    )
     # range() upper bound mirrors mixture_sample's explode: n_full
     # copies plus one fractional candidate only when _thresh > 0
     # (range(0, 0) is empty in DuckDB, so weight-0 rows vanish here the
@@ -270,7 +269,6 @@ def weighted_sample(
     weight_col: str,
     n_per_group: int,
     group_col: str | None = None,
-    key_dp: int = 8,
 ) -> DataFrame:
     """Weighted sample without replacement, deterministic (A-ES scheme,
     Efraimidis & Spirakis 2006): each row gets key = ln(u) / w with u a
@@ -278,7 +276,7 @@ def weighted_sample(
     probability proportional to weight, no RNG, rerun- and
     partitioning-stable.
 
-    The key is rounded at ``key_dp`` BEFORE ranking (libm ``ln`` may
+    The key is rounded at ``WEIGHTED_KEY_DP`` BEFORE ranking (libm ``ln`` may
     differ in the last ulp across engines; the round + id tiebreak make
     the pick order total and oracle-reproducible). Non-positive weights
     are excluded — a zero-weight row must never be sampled and ln(u)/0
@@ -306,7 +304,7 @@ def weighted_sample(
     _check_reserved(df, {"_wkey", "_rk"}, "weighted_sample")
     u = (_bucket(id_col) + 1).cast("double") / F.lit(float(DENOM + 1))
     wcol = F.col(weight_col).cast("double")
-    key = F.round(F.log(u) / wcol, key_dp)
+    key = F.round(F.log(u) / wcol, WEIGHTED_KEY_DP)
     cand = df.filter((wcol > 0) & ~F.isnan(wcol)).withColumn("_wkey", key)
     if group_col is None:
         # an un-partitioned row_number window would funnel every
@@ -326,7 +324,7 @@ def weighted_sample(
     )
 
 
-def weighted_key_sql(id_expr: str, weight_expr: str, key_dp: int = 8) -> str:
+def weighted_key_sql(id_expr: str, weight_expr: str) -> str:
     """DuckDB expression matching weighted_sample's ranking key
     (including its strictly-interior u: denominator DENOM + 1)."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
@@ -334,7 +332,7 @@ def weighted_key_sql(id_expr: str, weight_expr: str, key_dp: int = 8) -> str:
     h = md5_i64_sql(f"CAST({id_expr} AS VARCHAR)")
     return (
         f"round(ln((({h} % {DENOM}) + 1)::DOUBLE / {DENOM + 1}) / "
-        f"({weight_expr})::DOUBLE, {key_dp})"
+        f"({weight_expr})::DOUBLE, {WEIGHTED_KEY_DP})"
     )
 
 
@@ -342,9 +340,6 @@ def token_budget_sample(
     df: DataFrame,
     budget_tokens: int,
     n_tokens_col: str,
-    by: str = "source",
-    id_col: str = "doc_id",
-    cum_tokens_col: str = "cum_tokens",
 ) -> DataFrame:
     """Deterministic per-group token quota: walk each group's documents
     in hash order and keep the prefix whose cumulative token count stays
@@ -359,19 +354,19 @@ def token_budget_sample(
 
     The running total is part of the sampler's contract (callers report
     'how many tokens did each domain actually get'), so it is exposed
-    under the documented ``cum_tokens_col`` name — unlike the sibling
+    under the documented ``cum_tokens`` name — unlike the sibling
     samplers' `_wkey`/`_rk`, which are internal ranks and are dropped."""
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
-    _check_reserved(df, {cum_tokens_col}, "token_budget_sample")
+    _check_reserved(df, {"cum_tokens"}, "token_budget_sample")
     w = (
-        Window.partitionBy(by)
-        .orderBy(md5_i64(F.col(id_col).cast("string")), F.col(id_col))
+        Window.partitionBy("source")
+        .orderBy(md5_i64(F.col("doc_id").cast("string")), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        df.withColumn(cum_tokens_col, F.sum(n_tokens_col).over(w))
-        .filter(F.col(cum_tokens_col) <= budget_tokens)
+        df.withColumn("cum_tokens", F.sum(n_tokens_col).over(w))
+        .filter(F.col("cum_tokens") <= budget_tokens)
     )
 
 
@@ -379,9 +374,6 @@ def temperature_mixture_sample(
     df: DataFrame,
     target_total: int,
     tau: float = 0.5,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    rate_dp: int = 9,
 ) -> DataFrame:
     """Temperature-scaled domain mixture (the multilingual-LM sampling
     rule, Conneau & Lample style): domain s gets probability mass
@@ -391,12 +383,12 @@ def temperature_mixture_sample(
     / n_s), hash-thresholded like every sampler here (rerun-stable,
     map-only after one tiny per-domain aggregate).
 
-    The rate is rounded to ``rate_dp`` before quantization to the
+    The rate is rounded to ``TEMPERATURE_RATE_DP`` before quantization to the
     1/DENOM integer threshold so libm pow() ulp noise can never flip a
     row across engines. The per-domain frame is bounded by the domain
     count (broadcast side). Two passes over the input by construction
     (the counts aggregate, then the filter probe) — but the aggregate
-    scan is column-pruned to ``domain_col`` alone, so at 100 TB the
+    scan is column-pruned to ``source`` alone, so at 100 TB the
     extra pass reads one column, not the corpus. A NULL domain is a
     domain like any other: it is counted, gets a rate, and its rows
     are kept at that rate (null-safe join — a plain equi-join would
@@ -424,12 +416,12 @@ def temperature_mixture_sample(
             "temperature_mixture_sample's internal temp names; rename "
             "them first"
         )
-    counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("_n"))
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("_n"))
     denom = F.sum(F.pow(F.col("_n").cast("double"), F.lit(tau))).over(
         Window.partitionBy()
     )
     rates = counts.select(
-        domain_col,
+        "source",
         F.floor(
             F.round(
                 F.least(
@@ -439,18 +431,18 @@ def temperature_mixture_sample(
                     / denom
                     / F.col("_n").cast("double"),
                 ),
-                rate_dp,
+                TEMPERATURE_RATE_DP,
             )
             * DENOM
         ).cast("long").alias("_thresh"),
     )
     return (
         df.join(
-            F.broadcast(rates.withColumnRenamed(domain_col, "_dom")),
-            F.col(domain_col).eqNullSafe(F.col("_dom")),
+            F.broadcast(rates.withColumnRenamed("source", "_dom")),
+            F.col("source").eqNullSafe(F.col("_dom")),
         )
         .drop("_dom")
-        .filter(_bucket(id_col) < F.col("_thresh"))
+        .filter(_bucket("doc_id") < F.col("_thresh"))
         .drop("_thresh")
     )
 
@@ -458,29 +450,26 @@ def temperature_mixture_sample(
 def temperature_mixture_sql(
     target_total: int,
     tau: float = 0.5,
-    domain_col: str = "source",
-    id_expr: str = "doc_id",
-    rate_dp: int = 9,
-    table: str = "documents",
 ) -> str:
-    """DuckDB query reproducing temperature_mixture_sample over `table`."""
+    """DuckDB query reproducing temperature_mixture_sample over
+    `documents`."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
 
-    h = md5_i64_sql(f"CAST({id_expr} AS VARCHAR)")
+    h = md5_i64_sql("CAST(doc_id AS VARCHAR)")
     return f"""
       WITH counts AS (
-        SELECT {domain_col}, count(*) AS n FROM {table} GROUP BY {domain_col}
+        SELECT source, count(*) AS n FROM documents GROUP BY source
       ),
       rates AS (
-        SELECT {domain_col},
+        SELECT source,
                CAST(floor(round(least(1.0,
                  {float(target_total)} * pow(n::DOUBLE, {tau})
                  / (sum(pow(n::DOUBLE, {tau})) OVER ())
-                 / n::DOUBLE), {rate_dp}) * {DENOM}) AS BIGINT) AS thresh
+                 / n::DOUBLE), {TEMPERATURE_RATE_DP}) * {DENOM}) AS BIGINT) AS thresh
         FROM counts
       )
-      SELECT t.* FROM {table} t
-      JOIN rates r ON t.{domain_col} IS NOT DISTINCT FROM r.{domain_col}
+      SELECT t.* FROM documents t
+      JOIN rates r ON t.source IS NOT DISTINCT FROM r.source
       WHERE ({h} % {DENOM}) < r.thresh
     """
 
@@ -488,9 +477,6 @@ def temperature_mixture_sql(
 def kfold_assign(
     df: DataFrame,
     n_folds: int = 5,
-    id_col: str = "doc_id",
-    stratum_col: str | None = "source",
-    out_col: str = "fold",
 ) -> DataFrame:
     """Stratified k-fold cross-validation assignment: within each
     stratum, rows are ranked by id hash (deterministic shuffle) and
@@ -499,22 +485,14 @@ def kfold_assign(
     binomial wobble). One shuffle partitioned by stratum; the fold of a
     row depends on the stratum's membership (by construction — balance
     requires it), so use split_assign when growth-stability matters
-    more than balance.
-
-    ``stratum_col=None`` ranks the WHOLE input through one reducer (a
-    global row_number with no rank-limit to push down) — fine for
-    modest frames, a single-task sort at corpus scale. For unstratified
-    folds on a big corpus pass a synthetic stratum (e.g. a
-    hash(id) % 1024 column): per-shard round-robin keeps fold sizes
-    balanced within +-n_shards while the window parallelizes."""
+    more than balance. The stratum is ``source``, the id ``doc_id``."""
     if n_folds < 2:
         raise ValueError("n_folds must be >= 2")
-    _check_reserved(df, {out_col}, "kfold_assign")
-    part = [stratum_col] if stratum_col else []
-    w = Window.partitionBy(*part).orderBy(
-        md5_i64(F.col(id_col).cast("string")), F.col(id_col)
+    _check_reserved(df, {"fold"}, "kfold_assign")
+    w = Window.partitionBy("source").orderBy(
+        md5_i64(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return df.withColumn(
-        out_col,
+        "fold",
         ((F.row_number().over(w) - 1) % n_folds).cast("int"),
     )

@@ -81,34 +81,25 @@ def sessionize(
 
 def session_stats(
     events: DataFrame,
-    gap_ms: int = DEFAULT_GAP_MS,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    value_col: str = "value",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Per-session rollup: bounds, event count, value total.
 
     The groupBy reuses the sessionize shuffle's (key, session) grouping;
     AQE coalesces the tiny post-window aggregation. `total_value` is
     rounded after the sum (float add order is engine-dependent)."""
-    sess = sessionize(events, gap_ms, key_col, ts_col, order_col)
-    ts_ms = F.unix_millis(F.col(ts_col))
-    return sess.groupBy(key_col, "session_idx").agg(
+    sess = sessionize(events, DEFAULT_GAP_MS, "user_id", "ts", "event_id")
+    ts_ms = F.unix_millis(F.col("ts"))
+    return sess.groupBy("user_id", "session_idx").agg(
         F.min(ts_ms).alias("session_start_ms"),
         F.max(ts_ms).alias("session_end_ms"),
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(value_col), round_dp).alias("total_value"),
+        F.round(F.sum("value"), 6).alias("total_value"),
     )
 
 
 def funnel_counts(
     events: DataFrame,
     steps: tuple[str, ...],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered-funnel conversion: users whose FIRST qualifying occurrence
     of each step strictly follows the previous step's.
@@ -136,11 +127,11 @@ def funnel_counts(
         {"_ts"} | {f"_t{i}" for i in range(len(steps))},
         "funnel_counts",
     )
-    w = Window.partitionBy(key_col)
-    df = events.withColumn("_ts", F.unix_millis(F.col(ts_col)))
+    w = Window.partitionBy("user_id")
+    df = events.withColumn("_ts", F.unix_millis(F.col("ts")))
     prev = None
     for i, s in enumerate(steps):
-        cond = F.col(type_col) == s
+        cond = F.col("event_type") == s
         if prev is not None:
             cond = cond & (F.col("_ts") > F.col(prev))
         cur = f"_t{i}"
@@ -148,7 +139,7 @@ def funnel_counts(
             cur, F.min(F.when(cond, F.col("_ts"))).over(w)
         )
         prev = cur
-    per_user = df.groupBy(key_col).agg(
+    per_user = df.groupBy("user_id").agg(
         *[F.min(f"_t{i}").alias(f"_t{i}") for i in range(len(steps))]
     )
     return per_user.agg(

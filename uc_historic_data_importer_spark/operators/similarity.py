@@ -63,9 +63,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Exact brute-force top-k: (query_id, neighbor_id, cos_sim, rank).
 
@@ -75,15 +72,15 @@ def cosine_topk(
     cannot flip ranks; ties break on neighbor id ascending."""
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm_col(F.col(vec_col)).alias("q_norm"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
+            norm_col(F.col("embedding")).alias("q_norm"),
         )
     )
     c = _ensure_parallel(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_col(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm_col(F.col("embedding")).alias("c_norm"),
     )
     sims = (
         q.crossJoin(c)
@@ -94,7 +91,7 @@ def cosine_topk(
             F.round(
                 dot_col(F.col("q_vec"), F.col("c_vec"))
                 / (F.col("q_norm") * F.col("c_norm")),
-                round_dp,
+                6,
             ).alias("cos_sim"),
         )
     )
@@ -242,10 +239,7 @@ def _ivf_topk_arrow(
 def ivf_topk(
     corpus: DataFrame,
     k: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cell_col: str = "label",
-    round_dp: int = 6,
     exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -271,18 +265,18 @@ def ivf_topk(
         else int(n_rows)
     )
     if n > exact_max_rows:
-        return _ivf_topk_arrow(corpus, k, id_col, vec_col, cell_col, round_dp)
+        return _ivf_topk_arrow(corpus, k, "vec_id", "embedding", cell_col, 6)
     corpus = _ensure_parallel(corpus)
     a = corpus.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_col(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm_col(F.col("embedding")).alias("q_norm"),
         F.col(cell_col).alias("cell"),
     )
     b = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_col(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm_col(F.col("embedding")).alias("c_norm"),
         F.col(cell_col).alias("cell"),
     )
     sims = (
@@ -295,7 +289,7 @@ def ivf_topk(
             F.round(
                 dot_col(F.col("q_vec"), F.col("c_vec"))
                 / (F.col("q_norm") * F.col("c_norm")),
-                round_dp,
+                6,
             ).alias("cos_sim"),
         )
     )
@@ -303,13 +297,14 @@ def ivf_topk(
     return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def hyperplane_lsh_buckets(
-    corpus: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-LSH bucket id per vector: bit p = (dot(v, plane_p) > 0).
+# hyperplanes of the sign-LSH bucket; the embedding_lsh_buckets oracle
+# unrolls the same count
+LSH_PLANES = 8
+
+
+def hyperplane_lsh_buckets(corpus: DataFrame) -> DataFrame:
+    """Sign-LSH bucket id per vector: bit p = (dot(v, plane_p) > 0) for
+    LSH_PLANES planes.
 
     Pseudo-random plane coefficients are deterministic integer-derived
     values in [-0.5, 0.5): coeff(p, i) = ((md5_i64 of "p:i") % 1000)/1000
@@ -317,19 +312,19 @@ def hyperplane_lsh_buckets(
     the same bucket are near-duplicate candidates (cos-LSH property)."""
     import hashlib
 
-    dim_probe = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_probe = corpus.select(F.size(F.col("embedding")).alias("d")).first()
     if dim_probe is None:
         # r9 review: an empty corpus crashed with TypeError int(None);
         # bucketing nothing is well-defined — return the empty
         # (vec_id, bucket) frame with the normal schema
         return corpus.select(
-            F.col(id_col).alias("vec_id"),
+            F.col("vec_id").alias("vec_id"),
             F.lit(0).cast("long").alias("bucket"),
         ).limit(0)
     if dim_probe["d"] is None or dim_probe["d"] < 0:
         raise ValueError(
-            f"hyperplane_lsh_buckets: cannot infer embedding dim from "
-            f"{vec_col!r} (NULL first embedding)"
+            "hyperplane_lsh_buckets: cannot infer embedding dim from "
+            "'embedding' (NULL first embedding)"
         )
     dim = int(dim_probe["d"])
 
@@ -337,12 +332,12 @@ def hyperplane_lsh_buckets(
         h = int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:15], 16)
         return (h % 1000) / 1000.0 - 0.5
 
-    planes = [[coeff(p, i) for i in range(dim)] for p in range(n_planes)]
+    planes = [[coeff(p, i) for i in range(dim)] for p in range(LSH_PLANES)]
     # SQL-text bucket expression over a pre-cast alias — one parse
-    # instead of n_planes * dim Column operators (see _plane_dot_sql)
+    # instead of LSH_PLANES * dim Column operators (see _plane_dot_sql)
     return corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("_E"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("_E"),
     ).select("vec_id", _lsh_bucket_expr("_E", planes).alias("bucket"))
 
 
@@ -671,10 +666,6 @@ def kmeans_fit(
     corpus: DataFrame,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-    centroid_dp: int = 12,
     max_driver_floats: int = KMEANS_MAX_DRIVER_FLOATS,
     n_rows: int | None = None,
     exact_max_rows: int = 1000,
@@ -685,7 +676,7 @@ def kmeans_fit(
     round is one narrow map (cell argmax inline — no self-join) feeding
     one shuffle of (cell, dim, partial sums) via posexplode + groupBy —
     driver state is K x dim regardless of corpus size. Per-dim means are
-    rounded half-away-from-zero at `centroid_dp` so an external oracle
+    rounded half-away-from-zero at 12 dp so an external oracle
     can reproduce the exact centroid doubles (Spark partial-agg sum
     order is nondeterministic at the last bits; the round collapses it).
     Empty / all-zero cells keep their previous centroid. `iters` is
@@ -710,14 +701,14 @@ def kmeans_fit(
     # oracle-scale k1=10 coarse fits) an extra Spark job. The
     # post-take(k) re-check below still enforces the budget exactly.
     if k > _PROBE_FREE_K:
-        probe = corpus.select(vec_col).first()
+        probe = corpus.select("embedding").first()
         if probe is None:
             raise ValueError("kmeans_fit: empty corpus")
-        pv = probe[vec_col]
+        pv = probe["embedding"]
         if pv is None:
             raise ValueError(
                 "kmeans_fit: first embedding is NULL; filter null "
-                f"{vec_col} rows before fitting"
+                "embedding rows before fitting"
             )
         if k * len(pv) > max_driver_floats:
             raise ValueError(
@@ -725,17 +716,17 @@ def kmeans_fit(
                 f"budget of {max_driver_floats} floats; use ivf2_fit "
                 "(two-level quantizer, distributed fine centroids)"
             )
-    init_rows = corpus.select(vec_col, id_col).orderBy(id_col).take(k)
+    init_rows = corpus.select("embedding", "vec_id").orderBy("vec_id").take(k)
     if not init_rows:
         # a clear contract error instead of an opaque IndexError on
         # centroids[0] (ADVICE r11)
         raise ValueError("kmeans_fit: empty corpus")
-    if any(r[vec_col] is None for r in init_rows):
+    if any(r["embedding"] is None for r in init_rows):
         raise ValueError(
             "kmeans_fit: NULL embedding among the k lowest-id init "
-            f"vectors; filter null {vec_col} rows before fitting"
+            "vectors; filter null embedding rows before fitting"
         )
-    first = [[float(x) for x in r[vec_col]] for r in init_rows]
+    first = [[float(x) for x in r["embedding"]] for r in init_rows]
     if first and k * len(first[0]) > max_driver_floats:
         # mixed-dim corpora: the lowest-id row may be wider than the
         # probed row; re-check on the materialized init vectors too
@@ -755,7 +746,7 @@ def kmeans_fit(
     # ANALYSIS cost (k=400 x dim=64 = 25,600 terms, re-analyzed every
     # iteration because the centroid literals change) dominated the
     # sf1 fit. Value-parity modulo float sum order, which the
-    # round-half-away at round_dp/centroid_dp collapses exactly as it
+    # round-half-away at 6/12 dp collapses exactly as it
     # already must for Spark's own nondeterministic partial-agg order
     # (TestKmeansNpSeam pins centroid equality on the fixtures).
     use_np = False
@@ -769,7 +760,7 @@ def kmeans_fit(
     for _ in range(iters):
         if use_np:
             sums = (
-                _fit_partials_np(corpus, centroids, vec_col, round_dp)
+                _fit_partials_np(corpus, centroids, "embedding", 6)
                 .groupBy("cell", "dim")
                 .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
                 .collect()
@@ -777,8 +768,8 @@ def kmeans_fit(
         else:
             sums = (
                 corpus.select(
-                    _cell_column(centroids, vec_col, round_dp).alias("cell"),
-                    F.posexplode(F.col(vec_col)).alias("dim", "x"),
+                    _cell_column(centroids, "embedding", 6).alias("cell"),
+                    F.posexplode(F.col("embedding")).alias("dim", "x"),
                 )
                 .groupBy("cell", "dim")
                 .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n"))
@@ -788,7 +779,7 @@ def kmeans_fit(
         acc: dict[int, list[float]] = {}
         for r in sums:
             acc.setdefault(int(r["cell"]), [0.0] * dim)[int(r["dim"])] = (
-                _round_away(float(r["sx"]) / int(r["n"]), centroid_dp)
+                _round_away(float(r["sx"]) / int(r["n"]), 12)
             )
         centroids = [
             _unit(acc[j]) if j in acc and any(acc[j]) else centroids[j]
@@ -894,10 +885,6 @@ def ivf2_fit(
     coarse_centroids: list[list[float]],
     k2: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-    centroid_dp: int = 12,
     assigned: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -918,9 +905,9 @@ def ivf2_fit(
 
     Math is BIT-IDENTICAL to kmeans_fit run per cell: init = the k2
     lowest-id member vectors of each cell (unit-normalized), the
-    assignment key is round(dot(v, c) / |c|, round_dp) with ties to
+    assignment key is round(dot(v, c) / |c|, 6) with ties to
     the lowest fine id (the _cell_expr rule), means round
-    half-away-from-zero at centroid_dp (F.round == DuckDB round ==
+    half-away-from-zero at 12 dp (F.round == DuckDB round ==
     _round_away), and empty / all-zero sub-cells keep their previous
     centroid. With k1=1 the fine fit IS kmeans_fit of the whole corpus
     — pinned against the same unrolled-SQL oracle as ann_ivf_build
@@ -933,8 +920,8 @@ def ivf2_fit(
     literal. iters is small and fixed, like kmeans_fit's.
 
     ``assigned`` (optional) is a precomputed coarse assignment —
-    columns (vec_id, cell, vec_col) from assign_cells with
-    keep_cols=(vec_col,) — so a caller that also runs ivf2_assign
+    columns (vec_id, cell, embedding) from assign_cells with
+    keep_cols=("embedding",) — so a caller that also runs ivf2_assign
     computes (and can persist / localCheckpoint) the corpus-sized
     coarse pass ONCE instead of once per stage (r11 verdict item 2:
     at 100 TB the coarse assignment is the expensive scan; in the
@@ -945,8 +932,7 @@ def ivf2_fit(
         raise ValueError("k2 must be >= 1 and iters >= 0")
     if assigned is None:
         assigned = assign_cells(
-            corpus, coarse_centroids, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp, keep_cols=(vec_col,), n_rows=n_rows,
+            corpus, coarse_centroids, keep_cols=("embedding",), n_rows=n_rows,
         )
     assigned = _ensure_parallel(assigned)
 
@@ -962,7 +948,7 @@ def ivf2_fit(
         .select(
             "cell",
             (F.col("_rn") - 1).cast("int").alias("fine"),
-            unit_arr(F.col(vec_col)).alias("centroid"),
+            unit_arr(F.col("embedding")).alias("centroid"),
         )
         .localCheckpoint(eager=False)
     )
@@ -975,11 +961,11 @@ def ivf2_fit(
             "vec_id",
             "cell",
             "fine",
-            F.col(vec_col),
+            F.col("embedding"),
             F.round(
-                dot_col(F.col(vec_col), F.col("centroid"))
+                dot_col(F.col("embedding"), F.col("centroid"))
                 / F.when(c_norm == 0.0, F.lit(1.0)).otherwise(c_norm),
-                round_dp,
+                6,
             ).alias("_score"),
         )
         w = Window.partitionBy("vec_id").orderBy(
@@ -988,7 +974,7 @@ def ivf2_fit(
         return (
             scored.withColumn("_best", F.row_number().over(w))
             .filter(F.col("_best") == 1)
-            .select("vec_id", "cell", "fine", vec_col)
+            .select("vec_id", "cell", "fine", "embedding")
         )
 
     # Past-oracle-scale dispatch (r14 opt round, the ivf_topk seam
@@ -1007,18 +993,18 @@ def ivf2_fit(
             # winners from the matmul seam, vectors rejoined JVM-side
             # (never routed through Arrow — see _fine_members_arrow)
             members = _fine_members_arrow(
-                assigned, fine, vec_col, round_dp
-            ).join(assigned.select("vec_id", vec_col), "vec_id")
+                assigned, fine, "embedding", 6
+            ).join(assigned.select("vec_id", "embedding"), "vec_id")
         else:
             members = assign_fine(fine)
         sums = (
             members.select(
-                "cell", "fine", F.posexplode(F.col(vec_col)).alias("dim", "x")
+                "cell", "fine", F.posexplode(F.col("embedding")).alias("dim", "x")
             )
             .groupBy("cell", "fine", "dim")
             .agg(
                 F.round(
-                    F.sum("x") / F.count(F.lit(1)), centroid_dp
+                    F.sum("x") / F.count(F.lit(1)), 12
                 ).alias("mx")
             )
             .groupBy("cell", "fine")
@@ -1051,9 +1037,6 @@ def ivf2_assign(
     corpus: DataFrame,
     coarse_centroids: list[list[float]],
     fine: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     keep_cols: tuple[str, ...] = (),
     assigned: DataFrame | None = None,
     n_rows: int | None = None,
@@ -1068,13 +1051,12 @@ def ivf2_assign(
     rule.
 
     ``assigned``/``n_rows``: same contract as ivf2_fit — pass the one
-    shared coarse assignment (it must carry vec_col plus every
+    shared coarse assignment (it must carry ``embedding`` plus every
     keep_cols column) so fit + assign pay the corpus-sized coarse pass
     once."""
     if assigned is None:
         assigned = assign_cells(
-            corpus, coarse_centroids, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp, keep_cols=(vec_col,) + tuple(keep_cols),
+            corpus, coarse_centroids, keep_cols=("embedding",) + tuple(keep_cols),
             n_rows=n_rows,
         )
     # bucket stride = max fine id + 1, a broadcast one-row aggregate
@@ -1089,7 +1071,7 @@ def ivf2_assign(
     # incl. the empty-cell sentinel is pinned by
     # TestIvf2::test_assign_arrow_seam_parity.
     if n_rows is not None and int(n_rows) > 1000:
-        winners = _fine_members_arrow(assigned, fine, vec_col, round_dp)
+        winners = _fine_members_arrow(assigned, fine, "embedding", 6)
         return (
             assigned.join(winners.select("vec_id", "fine"), "vec_id", "left")
             .crossJoin(k2n)
@@ -1119,9 +1101,9 @@ def ivf2_assign(
         "fine",
         *[F.col(c) for c in keep_cols],
         F.round(
-            dot_col(F.col(vec_col), F.col("centroid"))
+            dot_col(F.col("embedding"), F.col("centroid"))
             / F.when(c_norm == 0.0, F.lit(1.0)).otherwise(c_norm),
-            round_dp,
+            6,
         ).alias("_score"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("_score"), F.asc("fine"))
@@ -1158,9 +1140,6 @@ def _unit(v: list[float]) -> list[float]:
 
 def group_centroids(
     df: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Element-wise centroid per group, long format (group, dim, centroid).
 
@@ -1172,10 +1151,10 @@ def group_centroids(
     (array columns would hash float formatting, not math).
     """
     return (
-        df.select(group_col, F.posexplode(F.col(vec_col)).alias("dim", "x"))
-        .groupBy(group_col, "dim")
+        df.select("label", F.posexplode(F.col("embedding")).alias("dim", "x"))
+        .groupBy("label", "dim")
         .agg(
-            F.round(F.avg("x"), round_dp).alias("centroid"),
+            F.round(F.avg("x"), 6).alias("centroid"),
             F.count(F.lit(1)).alias("n_vectors"),
         )
     )
@@ -1183,8 +1162,6 @@ def group_centroids(
 
 def quantize_int8(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization, long format
     (vec_id, dim, q_val, scale_r).
@@ -1198,11 +1175,11 @@ def quantize_int8(
     result hashable (int codes, not float-array formatting).
     Degenerate all-zero vectors quantize to 0 with scale 0.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     max_abs = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = max_abs / F.lit(127.0)
     ex = df.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id").alias("vec_id"),
         scale.alias("scale"),
         F.posexplode(v).alias("dim", "x"),
     )
@@ -1222,9 +1199,6 @@ def semantic_decontamination(
     train: DataFrame,
     test: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Embedding-space decontamination: flag every train vector whose
     cosine similarity to ANY held-out/eval vector reaches `threshold` —
@@ -1247,40 +1221,40 @@ def semantic_decontamination(
         # whole corpus. (Cheap: isEmpty is a limit-1 probe on the
         # benchmark-sized eval side, not the train scan.)
         return _ensure_parallel(train).select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.lit(None).cast("double").alias("max_test_sim"),
             F.lit(0).alias("contaminated"),
         )
     q = F.broadcast(
         test.select(
-            F.col(vec_col).alias("t_vec"),
-            norm_col(F.col(vec_col)).alias("t_norm"),
+            F.col("embedding").alias("t_vec"),
+            norm_col(F.col("embedding")).alias("t_norm"),
         )
     )
     c = _ensure_parallel(train).select(
-        F.col(id_col),
-        F.col(vec_col).alias("c_vec"),
-        norm_col(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id"),
+        F.col("embedding").alias("c_vec"),
+        norm_col(F.col("embedding")).alias("c_norm"),
     )
     # coalesce: a zero-norm vector on either side yields a null cosine
     # (0/0); treat it as similarity 0 so the per-id max — and therefore
     # the contaminated flag — is never null.
     sims = c.crossJoin(q).select(
-        id_col,
+        "vec_id",
         F.coalesce(
             F.round(
                 dot_col(F.col("c_vec"), F.col("t_vec"))
                 / (F.col("c_norm") * F.col("t_norm")),
-                round_dp,
+                6,
             ),
             F.lit(0.0),
         ).alias("sim"),
     )
     return (
-        sims.groupBy(id_col)
+        sims.groupBy("vec_id")
         .agg(F.max("sim").alias("max_test_sim"))
         .select(
-            id_col,
+            "vec_id",
             "max_test_sim",
             (F.col("max_test_sim") >= threshold).cast("int").alias(
                 "contaminated"
@@ -1351,9 +1325,6 @@ def semantic_decontamination_lsh(
     threshold: float = 0.3,
     n_planes: int = 4,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """LSH-bucketed semantic decontamination — the LARGE-eval-set route
     promised by semantic_decontamination's docstring: when the eval set
@@ -1378,12 +1349,12 @@ def semantic_decontamination_lsh(
     this route. Duplicate candidate pairs across tables are NOT deduped:
     the per-train-id max absorbs them, saving a shuffle. The final
     left-join restores never-candidate train rows."""
-    first = train.select(F.size(F.col(vec_col)).alias("d")).first()
+    first = train.select(F.size(F.col("embedding")).alias("d")).first()
     if first is None:  # empty train frame — nothing to flag
         # same dtypes as the normal path (contaminated is INT 0/1, not
         # boolean) so unions/appends across the two branches line up
         return train.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.lit(None).cast("double").alias("max_cand_sim"),
             F.lit(0).cast("int").alias("contaminated"),
         )
@@ -1395,9 +1366,9 @@ def semantic_decontamination_lsh(
 
     def side(df, prefix):
         pre = df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(vec_col).alias(f"{prefix}_vec"),
-            F.col(vec_col).cast("array<double>").alias("_E"),
+            F.col("vec_id").alias(f"{prefix}_id"),
+            F.col("embedding").alias(f"{prefix}_vec"),
+            F.col("embedding").cast("array<double>").alias("_E"),
         )
         # the bucket array materializes in a Project BEFORE the
         # explode (expressions inside a Generate never whole-stage-
@@ -1431,22 +1402,22 @@ def semantic_decontamination_lsh(
         q,
         (F.col("tbl") == F.col("t_tbl")) & (F.col("bucket") == F.col("t_bucket")),
     ).select(
-        F.col("c_id").alias(id_col),
+        F.col("c_id").alias("vec_id"),
         F.coalesce(
             F.round(
                 dot_col(F.col("c_vec"), F.col("t_vec"))
                 / (F.col("c_norm") * F.col("t_norm")),
-                round_dp,
+                6,
             ),
             F.lit(0.0),
         ).alias("sim"),
     )
-    agg = sims.groupBy(id_col).agg(F.max("sim").alias("max_cand_sim"))
+    agg = sims.groupBy("vec_id").agg(F.max("sim").alias("max_cand_sim"))
     return (
-        train.select(id_col)
-        .join(agg, id_col, "left")
+        train.select("vec_id")
+        .join(agg, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "max_cand_sim",
             (
                 F.coalesce(F.col("max_cand_sim"), F.lit(-1.0)) >= threshold
@@ -1459,9 +1430,6 @@ def semdedup(
     df: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -1510,8 +1478,8 @@ def semdedup(
         import pandas as pd
 
         thr = float(threshold)
-        dp = int(round_dp)
-        vcc = vec_col  # assign_cells renames the id column to vec_id
+        dp = 6
+        vcc = "embedding"  # assign_cells renames the id column to vec_id
 
         def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
             ids = pdf["vec_id"].to_numpy()
@@ -1539,8 +1507,8 @@ def semdedup(
                 }
             )
 
-        assigned = assign_cells(df, centroids, id_col, vec_col, round_dp,
-                                keep_cols=(vec_col,))
+        assigned = assign_cells(df, centroids, "vec_id", "embedding", 6,
+                                keep_cols=("embedding",))
         return assigned.groupBy("cell").applyInPandas(
             per_cell, schema="vec_id long, cell int, kept int"
         )
@@ -1553,11 +1521,11 @@ def semdedup(
     # branch evaluates the argmax interpreted at every size (see
     # _cell_expr) — bounded by exact_max_rows, where it's milliseconds
     v = _ensure_parallel(df).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        safe_norm_col(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").alias("vec"),
+        safe_norm_col(F.col("embedding")).alias("nrm"),
         F.explode(
-            F.array(_cell_column(centroids, vec_col, round_dp))
+            F.array(_cell_column(centroids, "embedding", 6))
         ).alias("cell"),
     )
     cells = v.select("vec_id", "cell")
@@ -1581,7 +1549,7 @@ def semdedup(
     sim = F.round(
         dot_col(F.col("a_vec"), F.col("b_vec"))
         / (F.col("a_nrm") * F.col("b_nrm")),
-        round_dp,
+        6,
     )
     dropped = (
         a.join(
@@ -1608,10 +1576,6 @@ def semdedup(
 def cosine_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    round_dp: int = 6,
     exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -1632,7 +1596,7 @@ def cosine_neardup_pairs(
       HOF dot was the sf1 soak's worst constant (162 s for ~4M pairs);
       the matmul computes the same pairs in one BLAS call per cell.
       BLAS summation order differs from sequential in the last ulp;
-      outputs are rounded at ``round_dp`` like the exact path (an
+      outputs are rounded at 6 dp like the exact path (an
       exact half-boundary at 6 dp is measure-zero), and path parity is
       pinned in tests. Cell size must fit one task (c x dim floats +
       c x c scores) — the quantizer occupancy bounds it by design.
@@ -1656,16 +1620,16 @@ def cosine_neardup_pairs(
     n = df.count() if n_rows is None else int(n_rows)
     if n <= exact_max_rows:
         a = df.select(
-            F.col(id_col).alias("vec_a"),
-            F.col(cell_col).alias("_cell"),
-            F.col(vec_col).alias("va"),
-            safe_norm_col(F.col(vec_col)).alias("na"),
+            F.col("vec_id").alias("vec_a"),
+            F.col("label").alias("_cell"),
+            F.col("embedding").alias("va"),
+            safe_norm_col(F.col("embedding")).alias("na"),
         )
         b = df.select(
-            F.col(id_col).alias("vec_b"),
-            F.col(cell_col).alias("_cell"),
-            F.col(vec_col).alias("vb"),
-            safe_norm_col(F.col(vec_col)).alias("nb"),
+            F.col("vec_id").alias("vec_b"),
+            F.col("label").alias("_cell"),
+            F.col("embedding").alias("vb"),
+            safe_norm_col(F.col("embedding")).alias("nb"),
         )
         cos = dot_col(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
         return (
@@ -1674,7 +1638,7 @@ def cosine_neardup_pairs(
             .select("vec_a", "vec_b", F.explode(F.array(cos)).alias("_cos"))
             .filter(F.col("_cos") >= threshold)
             .select(
-                "vec_a", "vec_b", F.round(F.col("_cos"), round_dp).alias("cos_sim")
+                "vec_a", "vec_b", F.round(F.col("_cos"), 6).alias("cos_sim")
             )
         )
 
@@ -1682,13 +1646,13 @@ def cosine_neardup_pairs(
     import pandas as pd
 
     thr = float(threshold)
-    dp = int(round_dp)
+    dp = 6
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        vals = list(pdf[vec_col].iloc[order])
+        vals = list(pdf["embedding"].iloc[order])
         # one matmul per equal-length subgroup: cross-length pairs have
         # a null dot on the Catalyst path (zip_with null padding), so
         # only same-length pairs can ever match — null vectors produce
@@ -1725,8 +1689,8 @@ def cosine_neardup_pairs(
         return pd.concat(outs, ignore_index=True)
 
     return (
-        df.select(id_col, cell_col, vec_col)
-        .filter(F.col(cell_col).isNotNull())  # equi-join null semantics
-        .groupBy(cell_col)
+        df.select("vec_id", "label", "embedding")
+        .filter(F.col("label").isNotNull())  # equi-join null semantics
+        .groupBy("label")
         .applyInPandas(per_cell, schema="vec_a long, vec_b long, cos_sim double")
     )

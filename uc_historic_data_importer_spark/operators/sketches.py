@@ -30,6 +30,19 @@ from pyspark.sql import functions as F
 from uc_historic_data_importer_spark.functions.hashes import md5_i64, md5_i64_sql
 
 HASH_BITS = 60
+# HLL: 2^HLL_P registers, estimates rounded at HLL_ROUND_DP decimals.
+# Count-min: CMS_D rows of CMS_W counters, each row a disjoint
+# log2(CMS_W)-bit window of the hash. The operators and their DuckDB
+# oracles read the same constants.
+HLL_P = 8
+HLL_ROUND_DP = 4
+CMS_D = 4
+CMS_W = 256
+_CMS_BITS = (CMS_W - 1).bit_length()
+# log-bucket histograms: bucket = floor(ln(1 + value) * HIST_SCALE),
+# quantiles rounded at HIST_ROUND_DP decimals
+HIST_SCALE = 100
+HIST_ROUND_DP = 4
 
 
 def _check_reserved(cols, reserved: set[str], op: str) -> None:
@@ -53,13 +66,6 @@ def _check_reserved(cols, reserved: set[str], op: str) -> None:
             f"input columns {sorted(taken)} collide with {op}'s internal "
             "temp names; rename them first"
         )
-
-
-def _check_p(p: int) -> None:
-    """2 <= m and >= 1 remainder bit: outside this the bit-slicing
-    produces negative shifts / empty remainders silently."""
-    if not 1 <= p <= HASH_BITS - 1:
-        raise ValueError(f"hll p must be in [1, {HASH_BITS - 1}]: {p}")
 
 
 def _alpha(m: int) -> float:
@@ -91,16 +97,14 @@ def hll_registers(
     df: DataFrame,
     value_col: str,
     group_cols: tuple[str, ...] = (),
-    p: int = 8,
 ) -> DataFrame:
     """Mergeable HLL state: one row per (group, bucket) with the max rho.
 
     This is the sketch you persist / union / re-aggregate: merging two
     register tables is groupBy(bucket).max(rho) again."""
-    _check_p(p)
     _check_reserved(group_cols, {"_h", "bucket", "rho", "max_rho"},
                     "hll_registers")
-    rem_bits = HASH_BITS - p
+    rem_bits = HASH_BITS - HLL_P
     # NULL values must not sketch: md5_i64(NULL) is NULL, and the
     # (bucket=NULL, rho=rem_bits+1) phantom register it would create
     # counts toward _nonempty — inflating past m corrupts both the
@@ -131,8 +135,6 @@ def hll_registers(
 def hll_estimate(
     regs: DataFrame,
     group_cols: tuple[str, ...] = (),
-    p: int = 8,
-    round_dp: int = 4,
 ) -> DataFrame:
     """Estimate from a register table (as built by hll_registers, or the
     max-merge of several) — the read side of incremental maintenance.
@@ -141,10 +143,9 @@ def hll_estimate(
     correction: raw = alpha * m^2 / sum(2^-M_j) (empty registers
     contribute 2^0 = 1); if raw <= 2.5m and V empty registers remain,
     estimate = m * ln(m / V)."""
-    _check_p(p)
     _check_reserved(group_cols, {"_present_pow", "_nonempty", "hll_distinct"},
                     "hll_estimate")
-    m = 1 << p
+    m = 1 << HLL_P
     agg = regs.groupBy(*group_cols).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("_present_pow"),
         F.count(F.lit(1)).alias("_nonempty"),
@@ -157,7 +158,7 @@ def hll_estimate(
         F.lit(float(m)) * F.log(F.lit(float(m)) / v_zero),
     ).otherwise(raw)
     return agg.select(
-        *group_cols, F.round(est, round_dp).alias("hll_distinct")
+        *group_cols, F.round(est, HLL_ROUND_DP).alias("hll_distinct")
     )
 
 
@@ -165,13 +166,11 @@ def hll_distinct(
     df: DataFrame,
     value_col: str,
     group_cols: tuple[str, ...] = (),
-    p: int = 8,
-    round_dp: int = 4,
 ) -> DataFrame:
     """Per-group HLL cardinality estimate (column `hll_distinct`):
     register build + estimator in one plan."""
     return hll_estimate(
-        hll_registers(df, value_col, group_cols, p), group_cols, p, round_dp
+        hll_registers(df, value_col, group_cols), group_cols
     )
 
 
@@ -179,13 +178,11 @@ def hll_sql(
     value_expr: str,
     table: str,
     group_cols: tuple[str, ...] = (),
-    p: int = 8,
-    round_dp: int = 4,
 ) -> str:
     """DuckDB SQL reproducing hll_distinct exactly (shared constants,
     same integer slicing, same double arithmetic)."""
-    m = 1 << p
-    rem_bits = HASH_BITS - p
+    m = 1 << HLL_P
+    rem_bits = HASH_BITS - HLL_P
     mask = (1 << rem_bits) - 1
     cases = " ".join(
         f"WHEN w >= {1 << (rem_bits - r)} THEN {r}"
@@ -225,7 +222,7 @@ def hll_sql(
                   ln({float(m)!r}::DOUBLE / ({m} - nonempty))
            ELSE {_alpha(m)!r}::DOUBLE * {float(m * m)!r}::DOUBLE /
                   (present_pow + ({m} - nonempty))
-      END, {round_dp}) AS hll_distinct
+      END, {HLL_ROUND_DP}) AS hll_distinct
     FROM agg
     """
 
@@ -234,35 +231,20 @@ def hll_sql(
 # Count-min sketch (heavy hitters)
 # ---------------------------------------------------------------------------
 
-def _cms_bits(d: int, w: int) -> int:
-    if d < 1:
-        # d = 0 builds an EMPTY cell array: every row explodes to
-        # nothing, the counter table is empty, and cms_estimate's min
-        # aggregates nothing — silent zero estimates for everything
-        raise ValueError(f"cms depth d must be >= 1: {d}")
-    bits = (w - 1).bit_length()
-    if w != 1 << bits:
-        raise ValueError("cms width must be a power of two")
-    if d * bits > HASH_BITS:
-        raise ValueError("d * log2(w) exceeds the 60-bit hash")
-    return bits
-
-
-def _cms_bucket_structs(h: Column, d: int, w: int) -> list[Column]:
-    bits = _cms_bits(d, w)
+def _cms_bucket_structs(h: Column) -> list[Column]:
     return [
         F.struct(
             F.lit(j).alias("row_idx"),
-            F.shiftright(h, j * bits)
-            .bitwiseAND(F.lit(w - 1))
+            F.shiftright(h, j * _CMS_BITS)
+            .bitwiseAND(F.lit(CMS_W - 1))
             .alias("bucket"),
         )
-        for j in range(d)
+        for j in range(CMS_D)
     ]
 
 
 def cms_counters(
-    df: DataFrame, value_col: str, d: int = 4, w: int = 256
+    df: DataFrame, value_col: str
 ) -> DataFrame:
     """Count-min counter table: (row_idx, bucket, cnt), d*w cells total.
 
@@ -280,7 +262,7 @@ def cms_counters(
     hashed = df.select(
         md5_i64(F.col(value_col).cast("string")).alias("_h")
     ).filter(F.col("_h").isNotNull())  # NULLs don't sketch (HLL rule)
-    entries = F.array(*_cms_bucket_structs(F.col("_h"), d, w))
+    entries = F.array(*_cms_bucket_structs(F.col("_h")))
     return (
         hashed.select(F.explode(entries).alias("e"))
         .select("e.row_idx", "e.bucket")
@@ -293,8 +275,6 @@ def cms_estimate(
     counters: DataFrame,
     candidates: DataFrame,
     value_col: str,
-    d: int = 4,
-    w: int = 256,
 ) -> DataFrame:
     """Point-query the sketch: min over the d counters a value hashes to.
 
@@ -307,7 +287,7 @@ def cms_estimate(
     hashed = candidates.withColumn(
         "_h", md5_i64(F.col(value_col).cast("string"))
     )
-    entries = F.array(*_cms_bucket_structs(F.col("_h"), d, w))
+    entries = F.array(*_cms_bucket_structs(F.col("_h")))
     keep = [c for c in candidates.columns]
     cells = hashed.select(*keep, F.explode(entries).alias("e")).select(
         *keep, "e.row_idx", "e.bucket"
@@ -329,25 +309,25 @@ def cms_estimate(
 
 
 def cms_sql(
-    value_expr: str, table: str, d: int = 4, w: int = 256, top_k: int = 10
+    value_expr: str, table: str, top_k: int = 10
 ) -> str:
     """DuckDB SQL reproducing the heavy-hitter query: exact top-k values
     with their CMS estimates (same hash windows, same counters)."""
-    bits = _cms_bits(d, w)
+    bits = _CMS_BITS
     h = md5_i64_sql(f"CAST({value_expr} AS VARCHAR)")
     # LEFT JOIN + coalesce below mirrors cms_estimate's documented rule:
     # a candidate whose cells are absent from every counter (a NULL
     # heavy hitter — NULL never sketches, its hash is NULL) estimates
     # cms_n = 0 instead of silently vanishing from the inner join
     counter_rows = " UNION ALL ".join(
-        f"SELECT {j} AS row_idx, ((h >> {j * bits}) & {w - 1}) AS bucket "
+        f"SELECT {j} AS row_idx, ((h >> {j * bits}) & {CMS_W - 1}) AS bucket "
         f"FROM hashed"
-        for j in range(d)
+        for j in range(CMS_D)
     )
     cand_rows = " UNION ALL ".join(
         f"SELECT user_val, exact_n, {j} AS row_idx, "
-        f"((h >> {j * bits}) & {w - 1}) AS bucket FROM cand"
-        for j in range(d)
+        f"((h >> {j * bits}) & {CMS_W - 1}) AS bucket FROM cand"
+        for j in range(CMS_D)
     )
     return f"""
     WITH hashed AS (
@@ -375,16 +355,6 @@ def cms_sql(
 # Log-histogram quantile sketch (mergeable percentiles)
 # ---------------------------------------------------------------------------
 
-def _check_scale(scale: int, op: str) -> None:
-    """scale >= 1 (r13 read-only audit, fixed r14): scale=0 makes the
-    bucket rule floor(ln(1+x) * 0) = 0 for EVERY value, so the whole
-    distribution collapses into one bucket and every quantile silently
-    reads the same edge (0.0) — the drop_frac silent-corruption class.
-    Negative scale additionally inverts the bucket ordering the
-    cumulative window depends on."""
-    if scale < 1:
-        raise ValueError(f"{op}: scale must be >= 1, got {scale}")
-
 
 def _check_qs(qs, op: str) -> None:
     """Each q must lie in (0, 1] (r13 read-only audit, fixed r14):
@@ -405,19 +375,18 @@ def _check_qs(qs, op: str) -> None:
         )
 
 
-def log_bucket(value: Column, scale: int = 100) -> Column:
-    """THE sketch bucket rule — floor(ln(1 + value) * scale) — as one
+def log_bucket(value: Column) -> Column:
+    """THE sketch bucket rule — floor(ln(1 + value) * HIST_SCALE) — as one
     shared expression. hist_counts builds its state with it and
     consumers that compare a row against a sketch bucket (e.g.
     text.length_outliers' degenerate-MAD rule) MUST derive the row's
     bucket through this same function: a drifted inline copy of the
     rule would silently break bucket-equality comparisons. The DuckDB
-    twin lives in hist_quantiles_sql's `floor(ln(1.0 + x) * scale)`
+    twin lives in hist_quantiles_sql's `floor(ln(1.0 + x) * HIST_SCALE)`
     string — oracle SQL is textual by nature, so that copy is pinned
     by the oracle gate instead."""
-    _check_scale(scale, "log_bucket")
     return F.floor(
-        F.log(F.lit(1.0) + value.cast("double")) * F.lit(scale)
+        F.log(F.lit(1.0) + value.cast("double")) * F.lit(HIST_SCALE)
     )
 
 
@@ -425,13 +394,12 @@ def hist_counts(
     df: DataFrame,
     value_col: str,
     group_cols: tuple[str, ...] = (),
-    scale: int = 100,
 ) -> DataFrame:
     """Mergeable quantile state: log-bucket counts per group.
 
-    bucket = floor(ln(1 + value) * scale) for value >= 0 — relative
-    bucket width e^(1/scale) - 1 (scale=100 -> ~1% relative error),
-    ~scale * ln(max_value) buckets total. Exact percentiles need a
+    bucket = floor(ln(1 + value) * HIST_SCALE) for value >= 0 — relative
+    bucket width e^(1/100) - 1 (~1% relative error),
+    ~100 * ln(max_value) buckets total. Exact percentiles need a
     global sort (operators surface `percentile_prices`); this is the
     100 TB path: one map-side-combined shuffle into tiny fixed state
     that MERGES (union + groupBy.sum) across partitions, days, or
@@ -439,8 +407,7 @@ def hist_counts(
     ln/floor so any engine reproduces it bit-for-bit.
     """
     _check_reserved(group_cols, {"bucket", "cnt"}, "hist_counts")
-    _check_scale(scale, "hist_counts")
-    bucket = log_bucket(F.col(value_col), scale).alias("bucket")
+    bucket = log_bucket(F.col(value_col)).alias("bucket")
     # a NULL bucket (NULL value, or value <= -1 outside ln's domain)
     # must not become sketch state: Spark's cumulative window sorts
     # NULL buckets FIRST while DuckDB's sorts them LAST, so a NULL
@@ -458,8 +425,6 @@ def hist_quantiles(
     counts: DataFrame,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
     group_cols: tuple[str, ...] = (),
-    scale: int = 100,
-    round_dp: int = 4,
     emit_buckets: bool = False,
 ) -> DataFrame:
     """Quantile estimates from the bucket table: for each q, the lower
@@ -479,7 +444,7 @@ def hist_quantiles(
         | {f"_b{i}" for i in range(len(qs))},
         "hist_quantiles",
     )
-    _check_scale(scale, "hist_quantiles")
+
     _check_qs(qs, "hist_quantiles")
     w_cum = (
         Window.partitionBy(*[F.col(c) for c in group_cols])
@@ -506,7 +471,7 @@ def hist_quantiles(
     ]
     agg = cum.groupBy(*group_cols).agg(*picks)
     edge = lambda b: F.round(  # noqa: E731 — bucket lower edge, inverse of the rule
-        F.exp(b.cast("double") / F.lit(scale)) - F.lit(1.0), round_dp
+        F.exp(b.cast("double") / F.lit(HIST_SCALE)) - F.lit(1.0), HIST_ROUND_DP
     )
     qcols = [
         edge(F.col(f"_b{i}")).alias(f"p{str(q).replace('0.', '')}")
@@ -525,11 +490,9 @@ def hist_quantiles_sql(
     table: str,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
     group_cols: tuple[str, ...] = (),
-    scale: int = 100,
-    round_dp: int = 4,
 ) -> str:
     """DuckDB SQL reproducing hist_counts + hist_quantiles exactly."""
-    _check_scale(scale, "hist_quantiles_sql")
+
     _check_qs(qs, "hist_quantiles_sql")
     gsel = "".join(f"{c}, " for c in group_cols)
     gby_b = ", ".join(list(group_cols) + ["bucket"])
@@ -541,13 +504,13 @@ def hist_quantiles_sql(
         for i, q in enumerate(qs)
     )
     outs = ", ".join(
-        f"round(exp(b{i}::DOUBLE / {scale}) - 1.0, {round_dp}) "
+        f"round(exp(b{i}::DOUBLE / {HIST_SCALE}) - 1.0, {HIST_ROUND_DP}) "
         f"AS p{str(q).replace('0.', '')}"
         for i, q in enumerate(qs)
     )
     return f"""
     WITH counts AS (
-      SELECT {gsel}floor(ln(1.0 + ({value_expr})::DOUBLE) * {scale}) AS bucket,
+      SELECT {gsel}floor(ln(1.0 + ({value_expr})::DOUBLE) * {HIST_SCALE}) AS bucket,
              count(*) AS cnt
       FROM {table}
       WHERE ({value_expr}) IS NOT NULL AND (1.0 + ({value_expr})::DOUBLE) > 0
@@ -569,8 +532,6 @@ def hll_pairwise_intersection(
     df: DataFrame,
     value_col: str,
     set_col: str,
-    p: int = 8,
-    round_dp: int = 4,
 ) -> DataFrame:
     """Sketch-algebra distinct intersection: for every pair of sets
     (set_col values a < b), estimate |A ∩ B| by inclusion–exclusion
@@ -597,7 +558,7 @@ def hll_pairwise_intersection(
             "hll_pairwise_intersection's output/internal names; rename "
             "it first"
         )
-    regs = hll_registers(df, value_col, (set_col,), p)
+    regs = hll_registers(df, value_col, (set_col,))
     # Distinct set keys come from the REGISTER table (2^p rows per set),
     # not from df — a df.select(set_col).distinct() here would be a
     # second full scan of the raw input. Deriving from regs keeps the
@@ -618,9 +579,9 @@ def hll_pairwise_intersection(
         .agg(F.max("max_rho").alias("max_rho"))
     )
     est_union = hll_estimate(
-        pair_regs, ("type_a", "type_b"), p, round_dp
+        pair_regs, ("type_a", "type_b")
     ).withColumnRenamed("hll_distinct", "est_union")
-    singles = hll_estimate(regs, (set_col,), p, round_dp)
+    singles = hll_estimate(regs, (set_col,))
     a = F.broadcast(
         singles.select(
             F.col(set_col).alias("type_a"),
@@ -647,7 +608,7 @@ def hll_pairwise_intersection(
                     F.col("est_a") + F.col("est_b") - F.col("est_union"),
                     F.lit(0.0),
                 ),
-                round_dp,
+                HLL_ROUND_DP,
             ).alias("est_intersection"),
         )
     )
@@ -657,14 +618,12 @@ def hll_intersection_sql(
     value_expr: str,
     table: str,
     set_col: str,
-    p: int = 8,
-    round_dp: int = 4,
 ) -> str:
     """DuckDB SQL reproducing hll_pairwise_intersection exactly (same
     register build as hll_sql, same inclusion–exclusion double
     arithmetic, rounded at the same points)."""
-    m = 1 << p
-    rem_bits = HASH_BITS - p
+    m = 1 << HLL_P
+    rem_bits = HASH_BITS - HLL_P
     mask = (1 << rem_bits) - 1
     cases = " ".join(
         f"WHEN w >= {1 << (rem_bits - r)} THEN {r}"
@@ -681,7 +640,7 @@ def hll_intersection_sql(
             f"AND ({m} - {prefix}nonempty) > 0 "
             f"THEN {float(m)!r}::DOUBLE * "
             f"ln({float(m)!r}::DOUBLE / ({m} - {prefix}nonempty)) "
-            f"ELSE {raw} END, {round_dp})"
+            f"ELSE {raw} END, {HLL_ROUND_DP})"
         )
 
     return f"""
@@ -727,7 +686,7 @@ def hll_intersection_sql(
     SELECT u.type_a, u.type_b, a.hll_distinct AS est_a,
            b.hll_distinct AS est_b, u.est_union,
            round(greatest(a.hll_distinct + b.hll_distinct - u.est_union,
-                          0.0), {round_dp}) AS est_intersection
+                          0.0), {HLL_ROUND_DP}) AS est_intersection
     FROM unions u
     JOIN singles a ON a.{set_col} = u.type_a
     JOIN singles b ON b.{set_col} = u.type_b

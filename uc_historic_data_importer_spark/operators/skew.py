@@ -183,7 +183,6 @@ def salted_join(
     dim: DataFrame,
     key: str,
     n_salts: int = 8,
-    salt_col: str | None = None,
 ) -> DataFrame:
     """Big-big equi-join with a salted hot-key side.
 
@@ -194,10 +193,9 @@ def salted_join(
     the smaller side). Result is EXACTLY the plain join (the catalog
     oracle-checks it against one).
 
-    The fact salt derives from ``salt_col`` (any well-distributed column
-    NOT equal to the join key; hashing the key itself would put one hot
-    key entirely in one bucket again); default is the whole-row hash
-    MIXED with the partition id — without the mix, a hot key whose rows
+    The fact salt is the whole-row hash (hashing the key itself would
+    put one hot key entirely in one bucket again) MIXED with the
+    partition id — without the mix, a hot key whose rows
     are exact duplicates (an undeduplicated record stream) hashes every
     replica to ONE salt bucket, recreating the single-reducer skew
     while still paying the dim side's n_salts-fold replication. With
@@ -212,23 +210,9 @@ def salted_join(
         # can never match and the result is silently EMPTY — total data
         # loss from a configuration typo
         raise ValueError(f"n_salts must be >= 1: {n_salts}")
-    if salt_col == key:
-        # documented-but-unenforced before r14: hashing the join key
-        # puts every row of a hot key in ONE salt bucket (probed: 1 of
-        # 8 buckets used), silently recreating the single-reducer skew
-        # while still paying the dim side's n_salts-fold replication
-        raise ValueError(
-            "salted_join: salt_col must not equal the join key — the "
-            "salt must vary WITHIN a key to spread it; use another "
-            "well-distributed column or leave salt_col=None for the "
-            "row-hash default"
-        )
     _check_reserved(fact, {"_salt"}, "salted_join")
     _check_reserved(dim, {"_salt"}, "salted_join")
-    salt_src = (
-        F.hash(F.col(salt_col)) if salt_col else _row_salt_hash(fact)
-    )
-    f = fact.withColumn("_salt", F.pmod(salt_src, F.lit(n_salts)))
+    f = fact.withColumn("_salt", F.pmod(_row_salt_hash(fact), F.lit(n_salts)))
     d = dim.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )

@@ -99,23 +99,23 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_counts(df: DataFrame, text_col: str = "text", by: str = "source") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace/regex token counting rolled up per group — the unit-economics
     query of a training-data pipeline (tokens per source/shard)."""
-    toks = with_tokens(df, text_col)
-    return toks.groupBy(by).agg(
+    toks = with_tokens(df, "text")
+    return toks.groupBy("source").agg(
         F.sum("n_tokens").alias("total_tokens"),
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Heuristic document-quality features: length, mean token length,
     stopword ratio, non-alphanumeric (punct/space) ratio. Deterministic,
     SQL-expressible; the composite score is a simple monotone blend."""
-    d = with_tokens(df, text_col)
-    text = F.col(text_col)
+    d = with_tokens(df, "text")
+    text = F.col("text")
     n_chars = F.length(text)
     alnum_chars = F.length(F.regexp_replace(F.lower(text), TOKEN_SPLIT_RE, ""))
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -135,11 +135,11 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Marker-word language ID: score = count of language-marker tokens;
     argmax with deterministic tiebreak (higher score, then language code
     ascending); all-zero -> 'und'."""
-    d = with_tokens(df, text_col)
+    d = with_tokens(df, "text")
     scores = []
     for lang, markers in sorted(LANG_MARKERS.items()):
         arr = F.array(*[F.lit(m) for m in markers])
@@ -155,8 +155,6 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def tf_idf_top_terms(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     top_n: int = 3,
 ) -> DataFrame:
     """Top-n characteristic terms per document by smoothed TF-IDF.
@@ -176,10 +174,10 @@ def tf_idf_top_terms(
 
     if top_n < 1:
         raise ValueError(f"tf_idf_top_terms: top_n must be >= 1, got {top_n}")
-    toks = with_tokens(_ensure_parallel(df), text_col)
+    toks = with_tokens(_ensure_parallel(df), "text")
     tf = (
-        toks.select(id_col, F.explode("tokens").alias("token"))
-        .groupBy(id_col, "token")
+        toks.select("doc_id", F.explode("tokens").alias("token"))
+        .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -188,7 +186,7 @@ def tf_idf_top_terms(
         tf.withColumn("df", dfreq)
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "token",
             F.round(
                 F.col("tf")
@@ -203,13 +201,13 @@ def tf_idf_top_terms(
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("tfidf"), F.asc("token")
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= top_n)
-        .select(id_col, "token", "tfidf", F.col("rk").alias("term_rank"))
+        .select("doc_id", "token", "tfidf", F.col("rk").alias("term_rank"))
     )
 
 
@@ -228,7 +226,7 @@ PII_PATTERNS: dict[str, str] = {
 PII_ORDER = ("email", "ipv4", "phone")
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Count and redact PII spans (email / IPv4 / NANP phone) — the
     mandatory scrub pass of a training-data pipeline.
 
@@ -241,17 +239,17 @@ def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
         df, {f"n_{k}" for k in PII_ORDER} | {"redacted"}, "pii_scrub"
     )
     out = df
-    red = F.col(text_col)
+    red = F.col("text")
     for kind in PII_ORDER:
         pat = PII_PATTERNS[kind]
         out = out.withColumn(
-            f"n_{kind}", F.regexp_count(F.col(text_col), F.lit(pat))
+            f"n_{kind}", F.regexp_count(F.col("text"), F.lit(pat))
         )
         red = F.regexp_replace(red, pat, f"<{kind.upper()}>")
     return out.withColumn("redacted", red)
 
 
-def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_scores(df: DataFrame) -> DataFrame:
     """Within-document repetition metrics: distinct-token ratio and
     duplicate-bigram ratio (Gopher-style repetition signals).
 
@@ -261,7 +259,7 @@ def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     (doc, ngram) blow-up row count. The size(w) >= 2 guard matters:
     Spark's sequence(1, 0) DESCENDS ([1, 0]) rather than returning
     empty, so short documents must bypass the bigram build."""
-    d = with_tokens(df, text_col)
+    d = with_tokens(df, "text")
     w = F.col("tokens")
     n = F.col("n_tokens")
     bigrams = F.when(
@@ -291,10 +289,10 @@ def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over the sorted distinct token set — the
     canonical-form dedup key (word-order- and repetition-insensitive)."""
-    d = with_tokens(df, text_col)
+    d = with_tokens(df, "text")
     fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(F.col("tokens")))))
     return d.select("doc_id", fp.alias("fingerprint"))
 
@@ -355,7 +353,7 @@ def token_count_col(text: Column, encode=None) -> Column:
 
 
 def bpe_token_stats(
-    df: DataFrame, text_col: str = "text", by: str = "source", encode=None
+    df: DataFrame, encode=None
 ) -> DataFrame:
     """Per-group BPE-piece vs whitespace-token unit economics: total
     pieces, total whitespace tokens, and the mean per-doc pieces/word
@@ -363,13 +361,13 @@ def bpe_token_stats(
     Map-only tokenization + one groupBy on the (low-cardinality) group
     key. ``encode`` injects a real tokenizer (encoded_ids_udf seam);
     the default stays the codegen BPE-ish pretokenizer."""
-    ws = tokens_col(F.col(text_col))
+    ws = tokens_col(F.col("text"))
     base = df.select(
-        F.col(by),
-        token_count_col(F.col(text_col), encode).alias("n_bpe"),
+        F.col("source"),
+        token_count_col(F.col("text"), encode).alias("n_bpe"),
         F.size(ws).alias("n_ws"),
     )
-    return base.groupBy(by).agg(
+    return base.groupBy("source").agg(
         F.sum("n_bpe").alias("total_bpe_tokens"),
         F.sum("n_ws").alias("total_ws_tokens"),
         # Fertility is reported as an integer-scaled value (mean * 1e4,
@@ -391,7 +389,7 @@ def bpe_token_stats(
 
 
 def word_segments(
-    df: DataFrame, k: int = 10, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, k: int = 10
 ) -> DataFrame:
     """(id, seg_no, segment): consecutive non-overlapping k-token windows
     of the normalized token stream — the corpus's "line" analogue for
@@ -402,7 +400,7 @@ def word_segments(
     one posexplode; output rows ≈ tokens/k, so the blow-up is bounded
     and linear in corpus size."""
     _check_k(k, "word_segments")
-    toks = with_tokens(df, text_col)
+    toks = with_tokens(df, "text")
     nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
     # guard: sequence(0, -1) DESCENDS in Spark rather than returning
     # empty, so zero-token documents must bypass the window build
@@ -414,12 +412,12 @@ def word_segments(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return toks.select(
-        id_col, F.posexplode(segs).alias("seg_no", "segment")
+        "doc_id", F.posexplode(segs).alias("seg_no", "segment")
     )
 
 
 def segment_dup_stats(
-    df: DataFrame, k: int = 10, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, k: int = 10
 ) -> DataFrame:
     """Per-document cross-document segment duplication: n_segments,
     dup_segments (positions whose k-token segment also appears in at
@@ -431,18 +429,18 @@ def segment_dup_stats(
     -> groupBy(id). Every key is content-hash-uniform; nothing is
     all-pairs. This is the standard two-pass line-dedup shape used on
     web-scale corpora."""
-    segs = word_segments(df, k=k, text_col=text_col, id_col=id_col)
+    segs = word_segments(df, k=k)
     per_seg = segs.groupBy("segment").agg(
-        F.countDistinct(id_col).alias("n_docs")
+        F.countDistinct("doc_id").alias("n_docs")
     )
     joined = segs.join(per_seg, "segment")
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_segments"),
         F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0)).alias(
             "dup_segments"
         ),
     ).select(
-        id_col,
+        "doc_id",
         "n_segments",
         "dup_segments",
         F.floor(
@@ -455,8 +453,6 @@ def boilerplate_segments(
     df: DataFrame,
     k: int = 10,
     min_docs: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     top_n: int | None = None,
 ) -> DataFrame:
     """Boilerplate mining: k-token segments appearing in >= min_docs
@@ -477,11 +473,11 @@ def boilerplate_segments(
     _check_k(min_docs, "boilerplate_segments", "min_docs")
     if top_n is not None:
         _check_k(top_n, "boilerplate_segments", "top_n")
-    segs = word_segments(df, k=k, text_col=text_col, id_col=id_col)
+    segs = word_segments(df, k=k)
     out = (
         segs.groupBy("segment")
         .agg(
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
         .filter(F.col("n_docs") >= min_docs)
@@ -496,10 +492,6 @@ def boilerplate_segments(
 def relative_quality_filter(
     df: DataFrame,
     drop_frac: float = 0.25,
-    by: str = "source",
-    score_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-source RELATIVE quality gate (Gopher-style): within each
     source, drop the bottom drop_frac of documents by score (default:
@@ -521,11 +513,11 @@ def relative_quality_filter(
             f"got {drop_frac}"
         )
     _check_reserved(df, {"pr"}, "relative_quality_filter")
-    d = with_tokens(df, text_col)
-    w = Window.partitionBy(by).orderBy(F.col(score_col), F.col(id_col))
+    d = with_tokens(df, "text")
+    w = Window.partitionBy("source").orderBy(F.col("n_tokens"), F.col("doc_id"))
     ranked = d.withColumn("pr", F.percent_rank().over(w))
     kept = F.when(F.col("pr") >= drop_frac, 1).otherwise(0)
-    return ranked.groupBy(by).agg(
+    return ranked.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(kept).alias("n_kept"),
         (F.count(F.lit(1)) - F.sum(kept)).alias("n_dropped"),
@@ -536,9 +528,6 @@ def segment_clean_docs(
     df: DataFrame,
     boilerplate: list[str],
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    membership: str = "auto",
 ) -> DataFrame:
     """Remove boilerplate k-token segments from each document and
     reassemble the cleaned text — MAP-ONLY, so it runs unchanged under
@@ -552,7 +541,7 @@ def segment_clean_docs(
     Adds n_segments / n_removed / cleaned_text; empty cleaned docs get
     ''.
 
-    Membership dispatch (``membership="auto"`` default):
+    Membership dispatch:
 
     - small lists (<= 64) stay a PLAIN array_contains over the string
       literal array — pure codegen, no Python round trip to amortize.
@@ -562,7 +551,8 @@ def segment_clean_docs(
       worker in the closure, like a broadcast. Measured round 7 at the
       sf1 soak (5000-entry list, 50k docs, ~750k segments, min-of-3;
       HISTORY.md, round 7, "segment_cleaned_corpus: 16x"): 22.9 s
-      literal vs 1.4 s set — 16x. Results are IDENTICAL (membership is exact either way), so
+      literal vs 1.4 s set — 16x. Results are IDENTICAL (membership is
+      exact either way), so
       the dispatch is purely a cost choice and the DuckDB oracle
       replays both branches bit-for-bit.
 
@@ -571,15 +561,11 @@ def segment_clean_docs(
     literal, F.aggregate-folded binary search 1.3x slower — don't
     re-litigate those; for removal lists past ~10^5 the broadcast
     anti-join above remains the real upgrade."""
-    if membership == "auto":
-        membership = "literal" if len(set(boilerplate)) <= 64 else "set_udf"
-    if membership not in ("literal", "set_udf"):
-        raise ValueError(f"unknown membership mode {membership!r}")
     _check_k(k, "segment_clean_docs")
     # the output re-selects *df.columns, so a collision here EMITS the
     # internal temp under the user's column name (probed r12)
     _check_reserved(df, {"_segs", "_kept"}, "segment_clean_docs")
-    toks = with_tokens(df, text_col)
+    toks = with_tokens(df, "text")
     nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
     segs = F.when(
         nseg > 0,
@@ -588,7 +574,7 @@ def segment_clean_docs(
             lambda i: F.concat_ws(" ", F.slice("tokens", i * k + 1, F.lit(k))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    if membership == "set_udf":
+    if len(set(boilerplate)) > 64:
         bset = frozenset(boilerplate)
 
         @F.pandas_udf("array<string>")
@@ -612,13 +598,7 @@ def segment_clean_docs(
     )
 
 
-def sliding_windows(
-    df: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_grams: bool = False,
-) -> DataFrame:
+def sliding_windows(df: DataFrame, k: int = 8) -> DataFrame:
     """(id, pos, gram): every stride-1 k-token sliding window of the
     normalized token stream (pos = 0-based start token index). The
     substring-dedup analogue of `word_segments` (which strides by k):
@@ -626,51 +606,29 @@ def sliding_windows(
     granularity rather than alignment-dependent.
 
     Output rows ~= n_tokens per document (linear blow-up); each gram is
-    k joined tokens. ``hash_grams=True`` replaces the gram string with
-    its xxhash64 (gram: bigint — native codegen, no Python): the 100 TB
-    switch that bounds NETWORK shuffle bytes per window at 8 instead of
-    ~8 tokens of text, with identical plan shape and collision rate
-    ~ n^2/2^64 (a collision can only merge two spans, never drop one).
-    The default stays the string form so external oracles can replay
-    exact semantics. Measurement history: the r7 note 'strings beat
-    hashed grams locally' was taken when the gram hash was md5_i64
-    (16.3 vs 15.2 s at sf1); with xxhash64 it INVERTED — r10 measured
-    14.1 s hashed vs 17.2 s strings under the old join plan and 9.35
-    vs 9.61 s under duplicate_spans' current window plan (sf1,
-    local[32]) — so the hashed form now wins everywhere and is the
-    unambiguous cluster default. Parity between the two forms is
-    pinned by tests/test_extensions.py::
-    test_duplicate_spans_hash_gram_parity."""
+    k joined tokens, kept as text so external oracles replay exact
+    semantics."""
     _check_k(k, "sliding_windows")
-    toks = with_tokens(_ensure_parallel(df), text_col)
+    toks = with_tokens(_ensure_parallel(df), "text")
     nwin = F.col("n_tokens") - F.lit(k) + 1
 
     def gram_of(i):
-        g = F.concat_ws(" ", F.slice("tokens", i + 1, F.lit(k)))
-        return F.xxhash64(g) if hash_grams else g
+        return F.concat_ws(" ", F.slice("tokens", i + 1, F.lit(k)))
 
     # guard: sequence(0, -1) DESCENDS in Spark rather than returning
     # empty, so short documents must bypass the window build
-    empty_t = "array<bigint>" if hash_grams else "array<string>"
     wins = F.when(
         nwin > 0,
         F.transform(F.sequence(F.lit(0), nwin - 1), gram_of),
-    ).otherwise(F.array().cast(empty_t))
-    return toks.select(id_col, F.posexplode(wins).alias("pos", "gram"))
+    ).otherwise(F.array().cast("array<string>"))
+    return toks.select("doc_id", F.posexplode(wins).alias("pos", "gram"))
 
 
-def duplicate_spans(
-    df: DataFrame,
-    k: int = 8,
-    min_occurrences: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_grams: bool = False,
-) -> DataFrame:
+def duplicate_spans(df: DataFrame, k: int = 8) -> DataFrame:
     """Exact substring-level duplicate spans (the ExactSubstr dedup of
     Lee et al., "Deduplicating Training Data Makes Language Models
     Better"): every MAXIMAL token run whose stride-1 k-token windows
-    each occur >= min_occurrences times corpus-wide (counting all
+    each occur at least twice corpus-wide (counting all
     occurrences, including within the same document). Returns one row
     per maximal span: (id, span_start, span_end, span_len) with
     span_end exclusive; overlapping duplicated windows are merged by a
@@ -691,30 +649,17 @@ def duplicate_spans(
     sorts/spills inside one partition — the same key-locality the old
     join had. This is the suffix-array dedup's distributed
     approximation — at k-token window resolution the detected spans
-    are exactly the suffix-array duplicates of length >= k.
-
-    ``hash_grams=True`` runs the gram shuffle on xxhash64 gram keys
-    (8 shuffle bytes per window instead of the gram text) — the
-    cluster switch; re-measured r10 under the window plan: 9.35 s
-    hashed vs 9.61 s strings at sf1 local[32] (and the old join shape:
-    14.1 s hashed vs 17.2 s strings — the r7 md5-era 'strings win
-    locally' note inverted when the gram hash became xxhash64).
-    Strings stay the default for oracle replayability; the hashed form
-    is value-identical (parity-pinned) and strictly fewer shuffle
-    bytes for a real network."""
+    are exactly the suffix-array duplicates of length >= k."""
     from pyspark.sql import Window
 
-    _check_k(min_occurrences, "duplicate_spans", "min_occurrences")
-    wins = sliding_windows(
-        df, k=k, text_col=text_col, id_col=id_col, hash_grams=hash_grams
-    )
+    wins = sliding_windows(df, k=k)
     n_occ = F.count(F.lit(1)).over(Window.partitionBy("gram"))
     dwin = (
         wins.withColumn("_n_occ", n_occ)
-        .filter(F.col("_n_occ") >= min_occurrences)
-        .select(id_col, "pos")
+        .filter(F.col("_n_occ") >= 2)
+        .select("doc_id", "pos")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     # stride-1 windows sorted by pos: the covered prefix ends at
     # lag(pos)+k, so a new span starts exactly when pos > lag(pos)+k
     # (NULL lag -> otherwise(0): the first window opens island 0)
@@ -723,13 +668,13 @@ def duplicate_spans(
     ).over(w)
     return (
         dwin.withColumn("_island", isl)
-        .groupBy(id_col, "_island")
+        .groupBy("doc_id", "_island")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + F.lit(k)).alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_len"),
@@ -740,10 +685,6 @@ def duplicate_spans(
 def remove_duplicate_spans(
     df: DataFrame,
     k: int = 8,
-    min_occurrences: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Apply side of exact substring dedup: cut every duplicated span
     (from `duplicate_spans`) out of every document and reassemble the
@@ -762,16 +703,13 @@ def remove_duplicate_spans(
     _check_reserved(
         df, {"_spans", "_dup", "_kept_idx"}, "remove_duplicate_spans"
     )
-    spans = duplicate_spans(
-        df, k=k, min_occurrences=min_occurrences, text_col=text_col,
-        id_col=id_col, hash_grams=hash_grams,
-    )
-    agg = spans.groupBy(id_col).agg(
+    spans = duplicate_spans(df, k=k)
+    agg = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans"),
         F.sum("span_len").alias("_dup"),
     )
-    toks = with_tokens(df, text_col)
-    j = toks.join(agg, id_col, "left")
+    toks = with_tokens(df, "text")
+    j = toks.join(agg, "doc_id", "left")
     idx = F.when(
         F.col("n_tokens") > 0,
         F.sequence(F.lit(0), F.col("n_tokens") - 1),
@@ -787,7 +725,7 @@ def remove_duplicate_spans(
     )
     d = j.withColumn("_kept_idx", kept_idx)
     return d.select(
-        id_col,
+        "doc_id",
         F.col("n_tokens"),
         F.coalesce(F.col("_dup"), F.lit(0)).alias("dup_tokens"),
         F.size("_kept_idx").alias("kept_tokens"),
@@ -804,8 +742,6 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     topk: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25 ranked keyword retrieval (Robertson/Sparck Jones; the Lucene
     scoring shape): score(d) = sum_t idf(t) * tf*(k1+1) / (tf + k1*((1-b)
@@ -831,7 +767,7 @@ def bm25_topk(
         raise ValueError(
             f"query terms must match [a-z0-9]+ (tokenizer output form): {bad}"
         )
-    toks = with_tokens(_ensure_parallel(df), text_col)
+    toks = with_tokens(_ensure_parallel(df), "text")
     aggs = [
         F.count(F.lit(1)).cast("double").alias("_N"),
         F.avg("n_tokens").alias("_avgdl"),
@@ -858,10 +794,10 @@ def bm25_topk(
         )
         s = idf * tf * F.lit(k1 + 1.0) / denom
         score = s if score is None else score + s
-    out = j.select(id_col, F.round(score, 6).alias("bm25"))
+    out = j.select("doc_id", F.round(score, 6).alias("bm25"))
     return (
         out.filter(F.col("bm25") > 0)
-        .orderBy(F.desc("bm25"), F.col(id_col))
+        .orderBy(F.desc("bm25"), F.col("doc_id"))
         .limit(topk)
     )
 
@@ -869,8 +805,6 @@ def bm25_topk(
 def dedup_segments_within_doc(
     df: DataFrame,
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """WITHIN-document repeated-segment removal (the CCNet/RefinedWeb
     in-doc cleaning step — scraped pages repeat nav blocks and list
@@ -886,7 +820,7 @@ def dedup_segments_within_doc(
     Per-doc cost is O(n_segments²) comparisons inside codegen — bounded
     by (tokens/k)², negligible against the scan."""
     _check_k(k, "dedup_segments_within_doc")
-    toks = with_tokens(df, text_col)
+    toks = with_tokens(df, "text")
     nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
     segs = F.when(
         nseg > 0,
@@ -903,7 +837,7 @@ def dedup_segments_within_doc(
         ),
     )
     return d.select(
-        id_col,
+        "doc_id",
         F.size("_segs").alias("n_segments"),
         (F.size("_segs") - F.size("_kept")).alias("n_removed"),
         F.concat_ws(" ", F.col("_kept")).alias("cleaned_text"),
@@ -914,8 +848,6 @@ def winnowing_fingerprints(
     df: DataFrame,
     k: int = 4,
     w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every k-token gram, slide a
@@ -935,7 +867,7 @@ def winnowing_fingerprints(
     groupBy(fingerprint) is the plagiarism/overlap join key."""
     if k <= 0 or w <= 0:
         raise ValueError("k and w must be positive")
-    toks = with_tokens(_ensure_parallel(df), text_col)
+    toks = with_tokens(_ensure_parallel(df), "text")
     m = F.col("n_tokens") - F.lit(k) + 1  # gram count
     grams = F.when(
         m > 0,
@@ -1004,9 +936,9 @@ def winnowing_fingerprints(
             p.alias("pos"), F.element_at("_h", p + 1).alias("fp")
         ),
     )
-    ex = st.select(id_col, F.explode(fps).alias("_s"))
+    ex = st.select("doc_id", F.explode(fps).alias("_s"))
     return ex.select(
-        id_col,
+        "doc_id",
         F.col("_s.pos").alias("pos"),
         F.col("_s.fp").alias("fingerprint"),
     )
@@ -1145,9 +1077,6 @@ def fuzzy_match_pairs(
 
 def unigram_logprob_scores(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Corpus-unigram language-model quality score per document — the
     classic perplexity-proxy filter (CCNet/Gopher style, with the
@@ -1166,8 +1095,8 @@ def unigram_logprob_scores(
 
     Output: (doc_id, n_tokens, avg_logprob)."""
     toks = _ensure_parallel(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens_col(F.col(text_col))).alias("tok"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(tokens_col(F.col("text"))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_c"))
     total = vocab.select(F.sum("_c").alias("_t"))
@@ -1175,11 +1104,11 @@ def unigram_logprob_scores(
         "tok",
         F.round(
             F.log10(F.col("_c").cast("double") / F.col("_t").cast("double"))
-            * F.lit(float(10 ** (round_dp + 3))),
+            * F.lit(1e9),
             0,
         ).cast("long").alias("_lp_nano"),
     )
-    scale = float(10 ** (round_dp + 3))
+    scale = 1e9
     return (
         toks.join(F.broadcast(lp), "tok")
         .groupBy("doc_id")
@@ -1189,7 +1118,7 @@ def unigram_logprob_scores(
                 F.sum("_lp_nano").cast("double")
                 / F.lit(scale)
                 / F.count(F.lit(1)),
-                round_dp,
+                6,
             ).alias("avg_logprob"),
         )
     )
@@ -1199,7 +1128,6 @@ def token_ngram_topk(
     df: DataFrame,
     n: int = 2,
     topk: int = 20,
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus-wide top-k word n-grams WITH multiplicity (unlike the
     dedup shingles, which are distinct-per-doc): the exact
@@ -1231,7 +1159,7 @@ def token_ngram_topk(
     from pyspark.sql import Window
 
     counted = (
-        df.select(tokens_col(F.col(text_col)).alias("_toks"))
+        df.select(tokens_col(F.col("text")).alias("_toks"))
         .select(F.explode(grams).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -1245,13 +1173,8 @@ def token_ngram_topk(
 
 def length_outliers(
     df: DataFrame,
-    value_col: str = "n_chars",
-    id_col: str = "doc_id",
-    group_col: str = "source",
     z_cut: float = 3.0,
-    round_dp: int = 4,
     exact: bool = True,
-    sketch_scale: int = 100,
 ) -> DataFrame:
     """Robust (median/MAD) length-outlier detection per group — the
     truncation/concatenation-artifact screen a pretraining corpus runs
@@ -1290,43 +1213,39 @@ def length_outliers(
         {"_med", "_mad", "_adev", "robust_z", "_med_bucket"},
         "length_outliers",
     )
-    x = F.col(value_col).cast("double")
+    x = F.col("n_chars").cast("double")
     if exact:
-        med = df.groupBy(group_col).agg(
+        med = df.groupBy("source").agg(
             F.percentile(x, F.lit(0.5)).alias("_med")
         )
     else:
         med = sketches.hist_quantiles(
             sketches.hist_counts(
-                df, value_col, group_cols=(group_col,), scale=sketch_scale
+                df, "n_chars", group_cols=("source",)
             ),
             qs=(0.5,),
-            group_cols=(group_col,),
-            scale=sketch_scale,
-            round_dp=round_dp,
+            group_cols=("source",),
             emit_buckets=True,
         ).select(
-            group_col,
+            "source",
             F.col("p5").alias("_med"),
             F.col("b5").alias("_med_bucket"),
         )
-    dev = df.join(med, group_col).withColumn("_adev", F.abs(x - F.col("_med")))
+    dev = df.join(med, "source").withColumn("_adev", F.abs(x - F.col("_med")))
     if exact:
-        mad = dev.groupBy(group_col).agg(
+        mad = dev.groupBy("source").agg(
             F.percentile(F.col("_adev"), F.lit(0.5)).alias("_mad")
         )
     else:
         mad = sketches.hist_quantiles(
             sketches.hist_counts(
-                dev, "_adev", group_cols=(group_col,), scale=sketch_scale
+                dev, "_adev", group_cols=("source",)
             ),
             qs=(0.5,),
-            group_cols=(group_col,),
-            scale=sketch_scale,
-            round_dp=round_dp,
-        ).select(group_col, F.col("p5").alias("_mad"))
+            group_cols=("source",),
+        ).select("source", F.col("p5").alias("_mad"))
     scale = F.lit(1.4826) * F.col("_mad")
-    z = F.when(F.col("_mad") > 0, F.round((x - F.col("_med")) / scale, round_dp))
+    z = F.when(F.col("_mad") > 0, F.round((x - F.col("_med")) / scale, 4))
     if exact:
         degenerate = x != F.col("_med")
     else:
@@ -1334,19 +1253,19 @@ def length_outliers(
         # built the sketch state (sketches.log_bucket) — an inline copy
         # could drift and silently break the bucket-equality comparison
         degenerate = (
-            sketches.log_bucket(x, sketch_scale) != F.col("_med_bucket")
+            sketches.log_bucket(x) != F.col("_med_bucket")
         )
     flagged = F.when(
         F.col("_mad") > 0, F.abs(F.col("robust_z")) > z_cut
     ).otherwise(degenerate)
     return (
-        dev.join(F.broadcast(mad), group_col)
+        dev.join(F.broadcast(mad), "source")
         .withColumn("robust_z", z)
         .filter(flagged)
         .select(
-            F.col(id_col),
-            F.col(group_col),
-            F.col(value_col),
+            F.col("doc_id"),
+            F.col("source"),
+            F.col("n_chars"),
             "robust_z",
         )
     )

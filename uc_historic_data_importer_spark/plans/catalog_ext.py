@@ -2039,7 +2039,7 @@ def embedding_quantize_int8_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.quantize_int8(t(spark, sf_dir, "embeddings"))
 
 
-def _lsh_oracle(n_planes: int = 8, dim: int = 64) -> str:
+def _lsh_oracle() -> str:
     import hashlib
 
     def coeff(p: int, i: int) -> float:
@@ -2047,9 +2047,10 @@ def _lsh_oracle(n_planes: int = 8, dim: int = 64) -> str:
         return (h % 1000) / 1000.0 - 0.5
 
     bits = []
-    for p in range(n_planes):
+    for p in range(similarity.LSH_PLANES):
+        # the embeddings fixture carries 64-dim vectors
         terms = " + ".join(
-            f"e[{i + 1}] * {coeff(p, i)!r}" for i in range(dim)
+            f"e[{i + 1}] * {coeff(p, i)!r}" for i in range(64)
         )
         bits.append(f"(CASE WHEN ({terms}) > 0 THEN {1 << p} ELSE 0 END)")
     bucket = " + ".join(bits)
@@ -3616,12 +3617,8 @@ spans AS (
     "explode -> ONE gram-key shuffle with a partition-count window "
     "(r10 rework: the old groupBy+join-back computed the exploded "
     "relation twice; sf1 wall clock halved, 17.2 -> 9.6 s) -> one "
-    "doc_id window+agg; at 100 TB pass hash_grams=True to shuffle "
-    "8-byte xxhash64 gram keys instead of gram text (value-identical, "
-    "parity-pinned, and since the xxhash64 switch it wins locally too "
-    "— see sliding_windows' measurement history; strings stay the "
-    "default for oracle replayability). The distributed approximation "
-    "of suffix-array dedup at k-token resolution.",
+    "doc_id window+agg. The distributed approximation of suffix-array "
+    "dedup at k-token resolution.",
 )
 def substring_dup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.duplicate_spans(t(spark, sf_dir, "documents"), k=_SUBSTR_K)

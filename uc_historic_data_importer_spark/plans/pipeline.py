@@ -163,7 +163,6 @@ def run(
     manifest_uploader=None,
     manifest_bucket: str = "",
     manifest_prefix: str = "",
-    collect_counts: bool = True,
 ) -> PipelineResult:
     """Materialize the sinks according to the run mode (W7).
 
@@ -185,17 +184,7 @@ def run(
     random IVs, yielding ciphertext that DIFFERS from what the sinks
     wrote. Derive post-run artifacts (e.g. an HFile bulk-load layout)
     from the written KV store, or use process_lines(persist=True) and
-    own result.unpersist() yourself.
-
-    ``collect_counts=False`` skips the counts materialization (and its
-    driver round-trip) entirely for callers that never read the F5
-    report — e.g. benchmark or pure-import paths. Counts scale with the
-    FILE count, not the row count, but a 100 TB run over millions of
-    input files would still pull millions of rows through the driver on
-    every run() call; such callers should pass False and, if they later
-    need counts, aggregate ``result.counts`` themselves (it re-executes
-    the pipeline once — counts are IV-independent, so re-execution is
-    safe even under encrypt=True)."""
+    own result.unpersist() yourself."""
     # persist the normalized frame across the sink fan-out: run_mode
     # validation happens inside process_lines (fail-loud on typos)
     result = process_lines(lines, cfg, existing=existing, persist=True)
@@ -208,15 +197,14 @@ def run(
                 sinks.upload_manifests(
                     written, manifest_uploader, manifest_bucket, manifest_prefix
                 )
-        if collect_counts:
-            # the counts report is the last consumer of the cached
-            # frame: materialize it while the cache is still hot, hand
-            # back a driver-local frame. Built from an Arrow table (not a
-            # row list, not pandas, which falls back to rows when Arrow
-            # is off) it is a LocalRelation: no scan starts a Python worker
-            result.counts = spark.createDataFrame(
-                result.counts.toArrow(), schema=result.counts.schema
-            )
+        # the counts report is the last consumer of the cached frame:
+        # materialize it while the cache is still hot, hand back a
+        # driver-local frame. Built from an Arrow table (not a row list,
+        # not pandas, which falls back to rows when Arrow is off) it is a
+        # LocalRelation: no scan starts a Python worker
+        result.counts = spark.createDataFrame(
+            result.counts.toArrow(), schema=result.counts.schema
+        )
     finally:
         result.unpersist()
     return result

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def kv_sink(df: DataFrame, path: str, mode: str = "append") -> None:
+def kv_sink(df: DataFrame, path: str) -> None:
     """W2/W3 analogue: versioned-cell parquet table partitioned by `table`.
 
     Partitioning by table = the namespace/DDL step (W3); parquet row
@@ -37,7 +37,7 @@ def kv_sink(df: DataFrame, path: str, mode: str = "append") -> None:
     the local test hermetic."""
     (
         df.select("table", "key", "key_hex", "version", F.col("envelope").alias("body"))
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("table")
         .parquet(path)
     )
@@ -440,9 +440,8 @@ def keyvalue_bytes(
     qualifier: bytes,
     timestamp: int,
     value: bytes,
-    key_type: int = KEYVALUE_TYPE_PUT,
 ) -> bytes:
-    """Serialize one cell in the HBase KeyValue wire layout:
+    """Serialize one Put cell in the HBase KeyValue wire layout:
     keyLen(i32) valueLen(i32) | rowLen(i16) row famLen(u8) family
     qualifier ts(i64) type(u8) | value."""
     key = (
@@ -452,7 +451,7 @@ def keyvalue_bytes(
         + family
         + qualifier
         + struct.pack(">q", timestamp)
-        + struct.pack(">B", key_type)
+        + struct.pack(">B", KEYVALUE_TYPE_PUT)
     )
     return struct.pack(">ii", len(key), len(value)) + key + value
 
@@ -460,10 +459,6 @@ def keyvalue_bytes(
 def write_hfiles(
     layout: DataFrame,
     out_dir: str,
-    block_size: int = 64 * 1024,
-    create_time_ms: int = 0,
-    compression: str = "gz",
-    bloom: str = "row",
 ) -> list[str]:
     """Write ``hbase_bulkload_layout`` output as REAL HFile v3 files —
     one per (table, region) per partition, under
@@ -492,25 +487,15 @@ def write_hfiles(
     files visible in the returned listing and in the bulk load.
     On a jar-equipped cluster HFileOutputFormat2 remains the
     alternative; this writer removes that classpath dependency.
-    ``compression`` is ``"gz"`` (default — the reference table's column
-    family is GZ for both flush and compaction, HbaseClient.kt:88-89,
-    so bulk-loaded files match the table codec and skip the 3-5x
-    rewrite IO a compaction re-compress would cost at 100 TB) or
-    ``"none"``. ``bloom`` is ``"row"`` (default — the reference table
-    inherits HColumnDescriptor's BloomType.ROW default, so cluster
-    files carry one) or ``"none"``. Returns the written file paths."""
-    from uc_historic_data_importer_spark.hfile import (
-        COMPRESSION_GZ,
-        COMPRESSION_NONE,
-        HFileWriter,
-    )
+    Blocks are GZ-compressed (the reference table's column family is GZ
+    for both flush and compaction, HbaseClient.kt:88-89, so bulk-loaded
+    files match the table codec and skip the 3-5x rewrite IO a
+    compaction re-compress would cost at 100 TB) and every file carries
+    a ROW bloom (the reference table inherits HColumnDescriptor's
+    BloomType.ROW default, so cluster files carry one). Returns the
+    written file paths."""
+    from uc_historic_data_importer_spark.hfile import COMPRESSION_GZ, HFileWriter
 
-    codecs = {"gz": COMPRESSION_GZ, "none": COMPRESSION_NONE}
-    if compression not in codecs:
-        raise ValueError(f"unsupported compression {compression!r}")
-    if bloom not in ("row", "none"):
-        raise ValueError(f"unsupported bloom type {bloom!r}")
-    codec = codecs[compression]
     if os.path.isdir(out_dir):
         for dirpath, _dirs, files in os.walk(out_dir):
             for f in files:
@@ -554,10 +539,7 @@ def write_hfiles(
                     tmp = f"{final}.tmp-{attempt}"
                     fh = open(tmp, "wb")
                     ent = (tmp, final, fh, HFileWriter(
-                        fh, block_size=block_size,
-                        create_time_ms=create_time_ms,
-                        compression=codec,
-                        bloom=bloom,
+                        fh, compression=COMPRESSION_GZ
                     ))
                     writers[(tbl, fam, region)] = ent
                 ent[3].append_keyvalue(
@@ -614,14 +596,12 @@ def send_manifest(
     manifest_path: str,
     bucket: str,
     prefix: str,
-    max_attempts: int = MANIFEST_MAX_ATTEMPTS,
-    backoff_s: float = 1.0,
     sleep=None,
 ) -> bool:
     """W6: upload one manifest file with the reference's exact policy
-    (StreamingManifestWriter.kt:14-49): retry up to ``max_attempts``
-    (default 10, HBaseWriter.kt:54-55), skip zero-byte manifests
-    entirely (no upload, no delete), content-type text/plain with an
+    (StreamingManifestWriter.kt:14-49): retry up to
+    ``MANIFEST_MAX_ATTEMPTS`` (10, HBaseWriter.kt:54-55), skip zero-byte
+    manifests entirely (no upload, no delete), content-type text/plain with an
     x-amz-meta-title user-metadata entry, and delete the local file
     only after a successful put. Exhausting attempts logs-and-gives-up
     rather than raising — the reference treats a lost manifest as
@@ -638,7 +618,7 @@ def send_manifest(
     a previous call — the post-upload delete — or removed out of band):
     it returns True immediately instead of burning all ten attempts and
     mislabeling the outcome as an exhausted upload. Transient failures
-    back off ``backoff_s * attempt`` between tries (``sleep``
+    back off ``attempt`` seconds between tries (``sleep``
     injectable) rather than hammering the store back-to-back."""
     import time
 
@@ -651,10 +631,10 @@ def send_manifest(
         # upload): count it, then back off linearly if tries remain
         nonlocal attempts
         attempts += 1
-        if attempts < max_attempts:
-            sleep(backoff_s * attempts)
+        if attempts < MANIFEST_MAX_ATTEMPTS:
+            sleep(1.0 * attempts)
 
-    while attempts < max_attempts:
+    while attempts < MANIFEST_MAX_ATTEMPTS:
         # the missing-LOCAL-file check wraps only the local reads: a
         # FileNotFoundError raised by uploader.put_object itself (a
         # missing cert/config file on the client) must NOT be
@@ -697,12 +677,11 @@ def upload_manifests(
     uploader,
     bucket: str,
     prefix: str,
-    max_attempts: int = MANIFEST_MAX_ATTEMPTS,
 ) -> dict[str, bool]:
     """Upload every manifest written by ``manifest_sink`` (driver-side:
     manifests are per-input-file and small — the reference uploads them
     sequentially from its writer thread too). Returns path -> outcome."""
     return {
-        p: send_manifest(uploader, p, bucket, prefix, max_attempts)
+        p: send_manifest(uploader, p, bucket, prefix)
         for p in paths
     }

@@ -172,7 +172,11 @@ def read_encrypted_jsonl(
     # like the reference's thread pool. Round-robin repartition(n) does
     # not hold this: each INPUT partition deals from its own random
     # offset, so files from different inputs collide on one task
-    n = max(n_files if n_files is not None else files.count(), 1)
+    # collect, not count(): on parse_metadata's local frame a collect
+    # runs no Spark job where count() runs two
+    if n_files is None:
+        n_files = len(files.select("data_path").collect())
+    n = max(n_files, 1)
     files = files.repartitionByRange(n, "data_path")
 
     def stage(normalize: bool, data_key_b64: str | None = None) -> DataFrame:

@@ -78,21 +78,10 @@ class ListingError(Exception):
 
 @dataclass
 class LocalFsLister:
-    """Local directory walk exposed through the paginated interface.
-
-    ``page_size`` exists so pagination handling is exercised even in
-    local tests (one giant page would never follow a token)."""
+    """Local directory walk exposed through the paginated interface,
+    1000 keys a page (the ListObjectsV2 page size)."""
 
     root: str
-    page_size: int = 1000
-
-    def __post_init__(self):
-        if self.page_size < 1:
-            # pre-guard (r13 review): page_size = 0 returned an EMPTY
-            # page whose continuation token never advanced, so
-            # list_objects looped forever on the driver (probed) — a
-            # hang, not an error
-            raise ValueError(f"page_size must be >= 1 (got {self.page_size})")
 
     def list_page(self, prefix: str, continuation_token: str | None) -> ListPage:
         base = os.path.join(self.root, prefix) if prefix else self.root
@@ -108,8 +97,8 @@ class LocalFsLister:
                 keys.append((p, os.path.getsize(p)))
         keys.sort()
         start = int(continuation_token) if continuation_token else 0
-        page = keys[start : start + self.page_size]
-        nxt = start + self.page_size
+        page = keys[start : start + 1000]
+        nxt = start + 1000
         return ListPage(page, str(nxt) if nxt < len(keys) else None)
 
 
@@ -170,7 +159,6 @@ def list_objects(
     spark: SparkSession,
     lister: ObjectLister,
     prefixes: list[str] | None = None,
-    max_attempts: int = LIST_MAX_ATTEMPTS,
     sleep=time.sleep,
 ) -> DataFrame:
     """S1: enumerate all objects via a pluggable paginated lister.
@@ -180,10 +168,6 @@ def list_objects(
     backoff (S3Helper.kt:33-49: 5 attempts, 1 s initial, x2). Listing is
     driver-side metadata work exactly as in the reference; the result is
     a small descriptor DataFrame that everything downstream consumes."""
-    if max_attempts < 1:
-        # pre-guard (r13 review): 0 still performed one attempt and then
-        # reported "failed after 0 attempts" — a lie in the error path
-        raise ValueError(f"max_attempts must be >= 1 (got {max_attempts})")
     rows: list[tuple[str, int]] = []
     for prefix in prefixes if prefixes else [""]:
         token: str | None = None
@@ -195,10 +179,10 @@ def list_objects(
                     break
                 except Exception as ex:
                     attempt += 1
-                    if attempt >= max_attempts:
+                    if attempt >= LIST_MAX_ATTEMPTS:
                         raise ListingError(
                             f"listing prefix {prefix!r} failed after "
-                            f"{max_attempts} attempts: {ex}"
+                            f"{LIST_MAX_ATTEMPTS} attempts: {ex}"
                         ) from ex
                     sleep(delay)
                     delay *= LIST_BACKOFF_MULTIPLIER
@@ -223,7 +207,7 @@ def list_local_objects(spark: SparkSession, root: str, prefixes: list[str] | Non
     return list_objects(spark, LocalFsLister(root), prefixes)
 
 
-def pair_files(listing: DataFrame, strict: bool = True) -> DataFrame:
+def pair_files(listing: DataFrame) -> DataFrame:
     """S2: group keys into (data, metadata) pairs.
 
     - a file classifies ONLY on an anchored whole-filename match
@@ -240,7 +224,7 @@ def pair_files(listing: DataFrame, strict: bool = True) -> DataFrame:
     - stem (the `<db>.<collection>.<NNNN>.json` core,
       KeyPairGenerator.kt:23) is kept as a display column;
     - metadata-without-data is dropped (:47-50);
-    - data-without-metadata raises (:40-46) when strict.
+    - data-without-metadata raises (:40-46).
 
     Returns (pair_stem, stem, data_path, data_size, meta_path,
     meta_size, db, collection, file_number)."""
@@ -280,14 +264,12 @@ def pair_files(listing: DataFrame, strict: bool = True) -> DataFrame:
         F.col("path").alias("meta_path"),
         F.col("size").alias("meta_size"),
     )
-    if strict:
-        missing = data.join(meta, "pair_stem", "left_anti")
-        bad = [
-            r["pair_stem"]
-            for r in missing.select("pair_stem").limit(5).collect()
-        ]
-        if bad:
-            raise MissingMetadataError(f"data objects without metadata: {bad}")
+    missing = data.join(meta, "pair_stem", "left_anti")
+    bad = [
+        r["pair_stem"] for r in missing.select("pair_stem").limit(5).collect()
+    ]
+    if bad:
+        raise MissingMetadataError(f"data objects without metadata: {bad}")
     paired = data.join(meta, "pair_stem", "inner")
     return paired.select(
         "*",

@@ -22,6 +22,7 @@ retryable (HttpKeyService.kt:58-76).
 
 from __future__ import annotations
 
+import re
 from typing import Protocol
 
 import pyarrow.compute as pc
@@ -108,10 +109,13 @@ def parse_metadata(pairs: DataFrame) -> DataFrame:
         F.try_url_decode(F.regexp_replace(stripped, r"\+", "%2B")),
         stripped,
     )
+    # load() expands its paths as Hadoop globs: escape the metacharacters
+    # so a directory like "batch[1]" or "batch{a}" names itself
+    globbed = [re.sub(r"([\\\[\]{}*?])", r"\\\1", p) for p in meta_paths]
     sidecars = (
         spark.read.format("text")
         .option("wholetext", "true")
-        .load(meta_paths)
+        .load(globbed)
         .select(
             local_path.alias("meta_path"),
             F.from_json(F.col("value"), METADATA_SCHEMA).alias("_m"),

@@ -79,30 +79,24 @@ def normalized_stream(lines: DataFrame) -> DataFrame:
     )
 
 
-def windowed_counts(
-    norm: DataFrame, window: str = "1 hour", watermark_delay: str = "1 hour"
-) -> DataFrame:
-    """Per-table tumbling-window put counts — the streaming F5 report.
+def windowed_counts(norm: DataFrame) -> DataFrame:
+    """Per-table one-hour tumbling-window put counts — the streaming F5
+    report.
 
     The window is BUSINESS time (the record version) by design — that
     is what the report counts. CAVEAT for unordered historic imports:
     the watermark also advances in business time, so a file whose
-    versions lag the max seen so far by more than ``watermark_delay``
-    is dropped from the aggregation as late. When ingesting dump files
-    whose business-time disorder exceeds the delay, either raise
-    ``watermark_delay`` to cover the disorder (state grows
-    accordingly) or run the batch F5 report (filter_status_counts /
-    manifest accounting) over the landed data instead — the batch path
-    has no lateness concept."""
-    # a zero/negative window raises in Spark only as an AnalysisException
-    # deep in window(...) resolution; name the caller's parameter instead
-    _duration_ms(window)
+    versions lag the max seen so far by more than the one-hour watermark
+    delay is dropped from the aggregation as late. When ingesting dump
+    files whose business-time disorder exceeds the delay, run the batch
+    F5 report (filter_status_counts / manifest accounting) over the
+    landed data instead — the batch path has no lateness concept."""
     with_event_time = norm.withColumn(
         "event_time", F.timestamp_millis(F.col("version"))
     )
     return (
-        with_event_time.withWatermark("event_time", watermark_delay)
-        .groupBy("table", F.window("event_time", window).alias("w"))
+        with_event_time.withWatermark("event_time", "1 hour")
+        .groupBy("table", F.window("event_time", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select("table", F.col("w.start").alias("window_start"), "n")
     )
@@ -395,7 +389,6 @@ def run_changelog_merge_sink(
     key_cols: Sequence[str],
     seq_col: str = "seq",
     op_col: str = "op",
-    available_now: bool = True,
 ):
     """Streaming CDC apply: maintain a compacted current-state snapshot
     under ``snapshot_base/v=N`` by folding each micro-batch of put/delete
@@ -418,7 +411,9 @@ def run_changelog_merge_sink(
     Scale: each fold is the batch merge plan — map-side log compaction +
     one co-partitioned join against the snapshot (see PLANS.md). State
     lives in parquet, not executor memory; a day's changelog against a
-    10^11-key snapshot is one merge job, not 10^11 stateful keys.
+    10^11-key snapshot is one merge job, not 10^11 stateful keys. The
+    stream runs with an available-now trigger: it drains the changes
+    present at start, then stops.
     """
     keys = list(key_cols)
 
@@ -427,14 +422,13 @@ def run_changelog_merge_sink(
             batch_df, batch_id, snapshot_base, keys, seq_col, op_col
         )
 
-    writer = (
+    return (
         changes.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _snapshot_fs(spark: SparkSession, path_str: str):
@@ -466,17 +460,12 @@ def _snapshot_versions(spark: SparkSession, snapshot_base: str) -> list[int]:
     return versions
 
 
-def latest_snapshot_version(
-    spark: SparkSession, snapshot_base: str, below: int | None = None
-) -> int | None:
-    """Newest complete ``v=N`` under ``snapshot_base`` (N < ``below`` if
-    given); None when no snapshot exists yet. Driver-side listing is
-    O(versions) — directory names only, never data — via the Hadoop FS
-    API, so any Spark-supported filesystem URI works."""
-    versions = _snapshot_versions(spark, snapshot_base)
-    if below is not None:
-        versions = [v for v in versions if v < below]
-    return max(versions, default=None)
+def latest_snapshot_version(spark: SparkSession, snapshot_base: str) -> int | None:
+    """Newest complete ``v=N`` under ``snapshot_base``; None when no
+    snapshot exists yet. Driver-side listing is O(versions) — directory
+    names only, never data — via the Hadoop FS API, so any
+    Spark-supported filesystem URI works."""
+    return max(_snapshot_versions(spark, snapshot_base), default=None)
 
 
 def interval_join_stream(
