@@ -203,3 +203,28 @@ def test_runner_sidecar_without_plaintext_key_fails_on_driver(spark, tmp_path):
               "--master", "local[4]"])
     for i in (1, 2):
         assert f"db.coll.{i:04d}.json.encryption.json" in str(ei.value)
+
+
+def test_runner_overlapping_prefixes_import_each_record_once(spark, tmp_path, capsys):
+    """--prefix a --prefix a/b lists the dump under a/b twice; each object
+    must still pair once, so its 3 records are imported once."""
+    import base64
+
+    inp = tmp_path / "in"
+    dump_dir = inp / "a" / "b"
+    dump_dir.mkdir(parents=True)
+    key = os.urandom(32)
+    lines = [json.dumps({"_id": f"id-{k}", "createdDateTime": "2018-12-01T15:01:02.000Z"}) for k in range(3)]
+    write_encrypted_dump(str(dump_dir), "db.coll.0001", lines, key)
+    sidecar = dump_dir / "db.coll.0001.json.encryption.json"
+    meta = json.loads(sidecar.read_text())
+    meta["plaintextDatakey"] = base64.b64encode(key).decode()
+    sidecar.write_text(json.dumps(meta))
+    kv = str(tmp_path / "kv")
+    assert main(["--input-dir", str(inp), "--prefix", "a", "--prefix", "a/b",
+                 "--kv-path", kv, "--manifest-dir", str(tmp_path / "manifests"),
+                 "--master", "local[4]"]) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["files_processed"] == 1
+    assert report["records_processed"] == 3
+    assert spark.read.parquet(kv).count() == 3

@@ -35,6 +35,17 @@ def _drain(lines, via: str) -> None:
         P.process_lines(lines, P.PipelineConfig()).counts.collect()
 
 
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+
+
 def _encrypt(data: bytes, key: bytes, iv: bytes) -> bytes:
     from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
@@ -71,7 +82,21 @@ class TestListingAndPairing:
     def test_unmatched_names_dropped(self, spark, tree):
         _write(os.path.join(tree, "README.txt"))
         _write(os.path.join(tree, "db.c.x.json.gz.enc"))  # non-numeric number
+        # \w is ASCII-only, as in Java's regex: a pair with a non-ASCII
+        # name is dropped, not paired
+        _write(os.path.join(tree, "dé.c.0001.json.gz.enc"))
+        _write(os.path.join(tree, "dé.c.0001.json.encryption.json"))
         assert L.pair_files(L.list_local_objects(spark, tree)).count() == 0
+
+    def test_pair_files_runs_no_spark_job(self, spark, tree):
+        for i in range(1, 4):
+            _write(os.path.join(tree, f"db.c.{i:04d}.json.gz.enc"))
+            _write(os.path.join(tree, f"db.c.{i:04d}.json.encryption.json"))
+        listing = L.list_local_objects(spark, tree)
+        pairs, n_jobs = _jobs(spark, lambda: L.pair_files(listing))
+        assert n_jobs == 0
+        assert pairs.schema == L.PAIRS_SCHEMA
+        assert [r["file_number"] for r in pairs.collect()] == [1, 2, 3]
 
     def test_zero_byte_pair_dropped_but_half_empty_kept(self, spark, tree):
         _write(os.path.join(tree, "db.c.0001.json.gz.enc"), b"")
@@ -142,56 +167,36 @@ class TestMetadata:
         assert calls == [("kek", "E")]
 
     def test_sources_stage_scans_sidecars_once(self, spark, tree):
-        """Metadata plus key resolution run one Spark job beyond the
-        collect of their input pair rows: the sidecar scan. Validation,
-        key resolution and the returned frame all read its result."""
+        """Listing, pairing, the size filters, metadata and key resolution
+        run one Spark job: the sidecar scan. Validation, key resolution
+        and the returned frame all read its result."""
         key = os.urandom(32)
         for i in range(1, 9):
             write_encrypted_dump(tree, f"db.c.{i:04d}", ["{}"], key)
-        sc = spark.sparkContext
-        tag = uuid.uuid4().hex
 
-        def jobs(name, fn):
-            group = f"{name}-{tag}"
-            sc.setJobGroup(group, name)
-            try:
-                return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
-            finally:
-                sc.setJobGroup("", "")
+        def sources():
+            pairs = L.pair_files(L.list_local_objects(spark, tree))
+            pairs = M.parse_metadata(L.filter_oversized(L.drop_zero_byte_pairs(pairs)))
+            return M.resolve_data_keys(pairs, M.DummyKeyService({"E": "P"}))
 
-        # two equal frames: a Dataset that has run keeps its broadcasts
-        baseline = L.pair_files(L.list_local_objects(spark, tree))
-        pairs = L.pair_files(L.list_local_objects(spark, tree))
-        _, pair_jobs = jobs("pairs", baseline.toArrow)
-        keys, source_jobs = jobs(
-            "sources",
-            lambda: M.resolve_data_keys(M.parse_metadata(pairs), M.DummyKeyService({"E": "P"})),
-        )
-        assert pair_jobs >= 1 and source_jobs == pair_jobs + 1
+        keys, n_jobs = _jobs(spark, sources)
+        assert n_jobs == 1
         assert keys == {("kek", "E"): "P"}
 
     def test_decrypt_stage_counts_files_without_a_job(self, spark, tree):
-        """Building the decrypt stage without ``n_files`` (as run.py
-        does) runs no more Spark jobs than passing it: the file count
-        of parse_metadata's local frame needs none."""
+        """Building the decrypt stage runs no Spark job: the file rows of
+        parse_metadata's local frame are read without one, and a given
+        ``n_files`` must match them."""
         key = os.urandom(32)
         for i in range(1, 9):
             write_encrypted_dump(tree, f"db.c.{i:04d}", ["{}"], key)
         pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
         keys = {("kek", "E"): base64.b64encode(key).decode()}
-        sc = spark.sparkContext
-        tag = uuid.uuid4().hex
-
-        def jobs(name, **kw):
-            group = f"{name}-{tag}"
-            sc.setJobGroup(group, name)
-            try:
-                read_encrypted_jsonl(pairs, keys, **kw)
-                return len(sc.statusTracker().getJobIdsForGroup(group))
-            finally:
-                sc.setJobGroup("", "")
-
-        assert jobs("counted") <= jobs("given", n_files=8)
+        for kw in ({}, {"n_files": 8}):
+            _, n_jobs = _jobs(spark, lambda: read_encrypted_jsonl(pairs, keys, **kw))
+            assert n_jobs == 0, kw
+        with pytest.raises(ValueError, match="n_files=7 but the pairs frame holds 8 files"):
+            read_encrypted_jsonl(pairs, keys, n_files=7)
 
     def test_decrypt_stage_plan_reads_no_sidecar(self, spark, tree):
         """The decrypt stage's input is parse_metadata's local frame: its
@@ -431,7 +436,8 @@ class TestCryptoSource:
 
 class TestPythonBoundaries:
     """The source layer starts Python workers only where it decrypts:
-    the listing never does, and each decrypt task reads one file."""
+    the listing never does, and the decrypt tasks are as few as Spark's
+    rule for packing non-splittable files allows."""
 
     @pytest.mark.parametrize("arrow", ["true", "false"])
     def test_listing_lineage_has_no_python_rdd(self, spark, tree, arrow):
@@ -458,34 +464,88 @@ class TestPythonBoundaries:
         ]
         assert empty.collect() == [] and empty.schema == L.LISTING_SCHEMA
 
-    @pytest.mark.parametrize("n_files,n_tasks", [(3, 3), (8, 8), (3, 8)])
-    def test_one_file_per_decrypt_task(self, spark, tree, n_files, n_tasks):
-        """With no more files than partitions, every partition of the
-        lines frame holds at most one file, so no decrypt task reads
-        two, whatever the partitioning of the file rows."""
+    @staticmethod
+    def _tasks(lines):
+        """The data_path sets of the decrypt tasks, plus lines per file."""
         from pyspark.sql import functions as F
 
+        rows = lines.select(F.spark_partition_id().alias("task"), "data_path").collect()
+        tasks: dict[int, set] = {}
+        per_file: dict[str, int] = {}
+        for r in rows:
+            tasks.setdefault(r["task"], set()).add(os.path.basename(r["data_path"]))
+            per_file[r["data_path"]] = per_file.get(r["data_path"], 0) + 1
+        return sorted(map(sorted, tasks.values())), per_file
+
+    def _dumps(self, spark, tree, n_lines):
         key = os.urandom(32)
-        for i in range(1, n_files + 1):
-            write_encrypted_dump(
-                tree, f"db.c.{i:04d}", [json.dumps({"_id": str(j)}) for j in range(3)], key
-            )
+        for i, n in enumerate(n_lines, 1):
+            lines = [json.dumps({"_id": uuid.uuid4().hex}) for _ in range(n)]
+            write_encrypted_dump(tree, f"db.c.{i:04d}", lines, key)
         pairs = M.parse_metadata(L.pair_files(L.list_local_objects(spark, tree)))
-        # spread the file rows over several input partitions, as a large
-        # listing's are: round-robin dealing collides files from different
-        # input partitions (8 files landed on 6 tasks here)
-        pairs = spark.createDataFrame(pairs.collect(), pairs.schema)
-        assert pairs.rdd.getNumPartitions() > 1
-        lines = read_encrypted_jsonl(
-            pairs, {("kek", "E"): base64.b64encode(key).decode()}, n_files=n_tasks
+        return pairs, {("kek", "E"): base64.b64encode(key).decode()}
+
+    def test_small_dumps_share_decrypt_tasks(self, spark, tree):
+        """Eight dumps far below the 4 MB open cost, on local[4]: each
+        split holds two of them (Spark's rule for non-splittable files),
+        so the decrypt stage runs 4 tasks, not 8."""
+        pairs, keys = self._dumps(spark, tree, [200] * 8)
+        lines = read_encrypted_jsonl(pairs, keys)
+        assert lines.rdd.getNumPartitions() == 4
+        tasks, per_file = self._tasks(lines)
+        assert [len(t) for t in tasks] == [2, 2, 2, 2]
+        assert sorted(per_file.values()) == [200] * 8
+
+    def test_dump_of_a_full_split_runs_alone(self, spark, tree):
+        """A dump at least one split in size gets a task of its own while
+        the small ones share one. The split is forced below the big
+        dump's size by lowering the session's file confs at runtime."""
+        pairs, keys = self._dumps(spark, tree, [2000] + [5] * 6)
+        sizes = {os.path.basename(r["data_path"]): r["data_size"] for r in pairs.collect()}
+        big = sizes["db.c.0001.json.gz.enc"]
+        confs = {"spark.sql.files.maxPartitionBytes": str(big), "spark.sql.files.openCostInBytes": "1024"}
+        saved = {k: spark.conf.get(k) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            lines = read_encrypted_jsonl(pairs, keys)
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        tasks, per_file = self._tasks(lines)
+        assert tasks == [["db.c.0001.json.gz.enc"], sorted(set(sizes) - {"db.c.0001.json.gz.enc"})]
+        assert sorted(per_file.values()) == [5] * 6 + [2000]
+
+    @pytest.mark.parametrize("layout", ["local", "rows", "shuffled", "one_partition"])
+    def test_every_file_lands_in_one_task(self, spark, tree, layout):
+        """However the file rows are partitioned (a large listing's are
+        spread over several partitions, where round-robin dealing once
+        collided files), each file is read by exactly one task, and the
+        tasks are the ones the packing rule makes."""
+        from uc_historic_data_importer_spark.sources.crypto_source import _pack_files
+
+        pairs, keys = self._dumps(spark, tree, [40, 3, 3, 3, 3, 3, 3, 3, 3, 3, 3])
+        if layout == "rows":
+            pairs = spark.createDataFrame(pairs.collect(), pairs.schema)
+            assert pairs.rdd.getNumPartitions() > 1
+        elif layout == "shuffled":
+            pairs = pairs.repartition(3)
+        elif layout == "one_partition":
+            pairs = pairs.coalesce(1)
+        lines = read_encrypted_jsonl(pairs, keys)
+        tasks, per_file = self._tasks(lines)
+        names = [os.path.basename(r["data_path"]) for r in pairs.collect()]
+        assert sorted(n for t in tasks for n in t) == sorted(names)
+        assert sorted(per_file.values()) == [3] * 10 + [40]
+        files = pairs.select("data_path", "data_size").collect()
+        expected = _pack_files(
+            [r["data_size"] for r in files],
+            128 * 1024 * 1024,
+            4 * 1024 * 1024,
+            spark.sparkContext.defaultParallelism,
         )
-        per_task = (
-            lines.groupBy(F.spark_partition_id().alias("task"))
-            .agg(F.countDistinct("data_path").alias("files"), F.count("*").alias("lines"))
-            .collect()
-        )
-        assert len(per_task) == n_files
-        assert all(r["files"] == 1 and r["lines"] == 3 for r in per_task)
+        assert len(tasks) == len(expected) == 4
+        assert sorted(map(len, tasks)) == sorted(map(len, expected))
 
 
 class TestSourcesReviewFixes:
@@ -532,6 +592,14 @@ class TestSourcesReviewFixes:
         assert len(pairs) == 1
         assert pairs[0]["file_number"] == 2
 
+    def test_file_number_beyond_int_raises_naming_the_object(self, spark, tmp_path):
+        """A file number that overflows int fails on the driver naming
+        the object, not as an anonymous cast error in a task."""
+        (tmp_path / "db.c.99999999999.json.gz.enc").write_bytes(b"x")
+        (tmp_path / "db.c.99999999999.json.encryption.json").write_bytes(b"{}")
+        with pytest.raises(ValueError, match="db.c.99999999999.json.gz.enc"):
+            L.pair_files(L.list_local_objects(spark, str(tmp_path)))
+
     def test_relative_root_listing_is_absolute(self, spark, tmp_path, monkeypatch):
         """A relative --input-dir must still produce paths that match
         input_file_name()'s absolute URIs (and that executor-side
@@ -571,10 +639,10 @@ class TestSourcesReviewFixes:
         store = {"s3a://bkt/db.c.0001.json.gz.enc": payload}
         pairs = spark.createDataFrame(
             [(
-                "s3a://bkt/db.c.0001.json.gz.enc", "db", "c", 1,
+                "s3a://bkt/db.c.0001.json.gz.enc", len(payload), "db", "c", 1,
                 "kek", "eek", base64.b64encode(iv).decode(),
             )],
-            "data_path string, db string, collection string, "
+            "data_path string, data_size bigint, db string, collection string, "
             "file_number int, key_encryption_key_id string, "
             "encrypted_encryption_key string, initialisation_vector string",
         )

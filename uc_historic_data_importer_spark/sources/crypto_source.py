@@ -10,11 +10,13 @@ retry makes the reference's line-resume machinery (S10) unnecessary — a
 failed task re-runs its whole file idempotently, and the sink dedups on
 (key, version).
 
-Parallelism is per-file here (like the reference's thread pool, but
-cluster-wide): one task per file, and under the pipeline that task also
-normalizes each batch, so a run's Python parallelism is its file count.
-Files are streamed in 64 KB chunks and emitted in batches of at most
-_EMIT_CHUNK lines — memory stays bounded regardless of file size.
+Files are packed into tasks the way Spark packs non-splittable files
+(FilePartition): a dump at least one split in size gets a task of its
+own, and small dumps share one, since every Python task pays a fixed
+start-up cost whatever it reads. Under the pipeline each task also
+normalizes its batches. Files are streamed in 64 KB chunks and emitted
+in batches of at most _EMIT_CHUNK lines — memory stays bounded
+regardless of file size.
 """
 
 from __future__ import annotations
@@ -103,11 +105,35 @@ def _local_opener(path: str):
     return open(path, "rb")
 
 
+def _pack_files(sizes: list[int], max_partition_bytes: int, open_cost: int, parallelism: int) -> list[list[int]]:
+    """Group file indexes into tasks by Spark's rule for non-splittable
+    files (FilePartition.maxSplitBytes + getFilePartitions): a split of
+    ``min(maxPartitionBytes, max(openCost, sum(size + openCost) /
+    parallelism))`` bytes, filled next-fit in decreasing size order,
+    each file costing its size plus the open cost."""
+    total = sum(size + open_cost for size in sizes)
+    max_split = min(max_partition_bytes, max(open_cost, total // parallelism))
+    tasks: list[list[int]] = []
+    current: list[int] = []
+    filled = 0
+    # a stable sort: equal sizes keep their input (data_path) order
+    for i in sorted(range(len(sizes)), key=lambda i: -sizes[i]):
+        if current and filled + sizes[i] > max_split:
+            tasks.append(current)
+            current, filled = [], 0
+        current.append(i)
+        filled += sizes[i] + open_cost
+    if current:
+        tasks.append(current)
+    return tasks
+
+
 def _line_chunks(file_batches: Iterator[pa.RecordBatch], data_keys: dict, open_fn) -> Iterator:
-    """Decrypt -> gunzip -> split each file row's object, streamed as
-    (file row, line_no of the first line, up to _EMIT_CHUNK lines)."""
+    """Decrypt -> gunzip -> split the object of each file row in the
+    batches' task rows, streamed as (file row, line_no of the first
+    line, up to _EMIT_CHUNK lines)."""
     for batch in file_batches:
-        for row in batch.to_pylist():
+        for row in batch.column("files").flatten().to_pylist():
             path = row["data_path"]
             kpair = (row["key_encryption_key_id"], row["encrypted_encryption_key"])
             if kpair not in data_keys:
@@ -150,13 +176,21 @@ def read_encrypted_jsonl(
     ``opener`` is the pluggable object-fetch seam (S5 for non-local
     stores): a callable ``path -> binary file-like`` cloudpickled to
     the executors; the default opens local paths and REFUSES
-    scheme-qualified ones with a clear message. ``n_files``
-    short-circuits the repartition count (same contract as the
-    similarity operators' n_rows) for a caller that already knows it.
+    scheme-qualified ones with a clear message. ``n_files``, when
+    given, must equal the number of file rows.
+
+    The file rows are read on the driver (no Spark job on
+    parse_metadata's local frame) and packed into tasks by their
+    ``data_size`` under the session's ``spark.sql.files.maxPartitionBytes``
+    and ``openCostInBytes`` (_pack_files). One row per task, holding
+    its files, goes through a range exchange on the task id, which
+    gives each task a partition of its own whatever the partitioning
+    of the file rows.
 
     The frame carries ``_normalized(data_key_b64)``, this stage plus a
     ``norm`` column (transforms.normalize_batch), for process_lines."""
     open_fn = opener if opener is not None else _local_opener
+    spark = pairs_with_meta.sparkSession
     cols = [
         "data_path",
         "db",
@@ -166,18 +200,31 @@ def read_encrypted_jsonl(
         "encrypted_encryption_key",
         "initialisation_vector",
     ]
-    files = pairs_with_meta.select(*cols)
-    # one task per file: range-partition the (tiny) file list on its
-    # unique path so decrypt work spreads across the cluster exactly
-    # like the reference's thread pool. Round-robin repartition(n) does
-    # not hold this: each INPUT partition deals from its own random
-    # offset, so files from different inputs collide on one task
-    # collect, not count(): on parse_metadata's local frame a collect
-    # runs no Spark job where count() runs two
-    if n_files is None:
-        n_files = len(files.select("data_path").collect())
-    n = max(n_files, 1)
-    files = files.repartitionByRange(n, "data_path")
+    selected = pairs_with_meta.select(*cols, "data_size")
+    rows = selected.collect()
+    if n_files is not None and n_files != len(rows):
+        raise ValueError(f"n_files={n_files} but the pairs frame holds {len(rows)} files")
+    conf = spark._jsparkSession.sessionState().conf()
+    tasks = _pack_files(
+        [r["data_size"] for r in rows],
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+        spark.sparkContext.defaultParallelism,
+    )
+    task_schema = T.StructType(
+        [
+            T.StructField("task", T.IntegerType()),
+            T.StructField("files", T.ArrayType(T.StructType(selected.schema.fields[:-1]))),
+        ]
+    )
+    table = pa.Table.from_pylist(
+        [
+            {"task": t, "files": [rows[i].asDict() for i in members]}
+            for t, members in enumerate(tasks)
+        ],
+        schema=to_arrow_schema(task_schema),
+    )
+    packed = spark.createDataFrame(table, task_schema).repartitionByRange(max(len(tasks), 1), "task")
 
     def stage(normalize: bool, data_key_b64: str | None = None) -> DataFrame:
         schema = LINES_SCHEMA
@@ -202,7 +249,7 @@ def read_encrypted_jsonl(
                     arrays.append(normalize_batch(chunk, data_key_b64))
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-        return files.mapInArrow(_expand, schema=schema)
+        return packed.mapInArrow(_expand, schema=schema)
 
     lines = stage(normalize=False)
     lines._normalized = lambda data_key_b64=None: stage(True, data_key_b64)

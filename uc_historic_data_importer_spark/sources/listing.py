@@ -2,9 +2,10 @@
 
 Reference: S3Reader.kt:30-37,62-125 (paginated listing, suffix fan-out,
 zero-byte pair skip) and KeyPairGenerator.kt:10-51 (regex pairing +
-validation). Here listing yields a DataFrame of object descriptors; the
-pairing/validation is Catalyst (regexp_extract + pivot-style self-join +
-left_anti missing-metadata check). Works against any Hadoop-visible FS
+validation). Here listing yields a DataFrame of object descriptors backed
+by a driver-side Arrow table; pairing reads those rows back without a
+Spark job and classifies, pairs and validates them in one Python loop,
+as the reference does in-process. Works against any Hadoop-visible FS
 (file://, s3a://, ...) — at scale the listing itself is driver-side
 metadata work exactly as in the reference.
 """
@@ -12,6 +13,7 @@ metadata work exactly as in the reference.
 from __future__ import annotations
 
 import os
+import re
 import time
 from dataclasses import dataclass
 from typing import Protocol
@@ -20,6 +22,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # S3Reader.kt:30-37 defaults
 FILENAME_FORMAT = r"[\w-]+\.[\w-]+\.[0-9]+\.json"
@@ -43,6 +46,30 @@ LISTING_SCHEMA = T.StructType(
         T.StructField("size", T.LongType()),
     ]
 )
+
+PAIRS_SCHEMA = T.StructType(
+    [
+        T.StructField("pair_stem", T.StringType()),
+        T.StructField("stem", T.StringType()),
+        T.StructField("data_path", T.StringType()),
+        T.StructField("data_size", T.LongType()),
+        T.StructField("meta_path", T.StringType()),
+        T.StructField("meta_size", T.LongType()),
+        T.StructField("db", T.StringType()),
+        T.StructField("collection", T.StringType()),
+        T.StructField("file_number", T.IntegerType()),
+    ]
+)
+
+# The patterns above are Java regexes; Java's \w is ASCII-only, so the
+# Python twins are compiled with re.ASCII to classify the same names
+_DATA_NAME = re.compile(DATA_FULL_RE, re.ASCII)
+_META_NAME = re.compile(META_FULL_RE, re.ASCII)
+_STEM = re.compile(FILENAME_FORMAT, re.ASCII)
+_DATA_SUFFIX = re.compile(DATA_SUFFIX)
+_META_SUFFIX = re.compile(METADATA_SUFFIX)
+_NAME_GROUPS = re.compile(FILENAME_GROUPS, re.ASCII)
+_INT_MAX = 2**31 - 1
 
 
 class MissingMetadataError(Exception):
@@ -167,8 +194,9 @@ def list_objects(
     (S3Reader.kt:90-97) and retries each page fetch with exponential
     backoff (S3Helper.kt:33-49: 5 attempts, 1 s initial, x2). Listing is
     driver-side metadata work exactly as in the reference; the result is
-    a small descriptor DataFrame that everything downstream consumes."""
-    rows: list[tuple[str, int]] = []
+    a small descriptor DataFrame that everything downstream consumes.
+    Each key appears once, even under overlapping prefixes."""
+    rows: dict[str, int] = {}
     for prefix in prefixes if prefixes else [""]:
         token: str | None = None
         while True:
@@ -186,16 +214,16 @@ def list_objects(
                         ) from ex
                     sleep(delay)
                     delay *= LIST_BACKOFF_MULTIPLIER
-            rows.extend(page.objects)
+            for key, size in page.objects:
+                rows.setdefault(key, size)
             token = page.next_token
             if token is None:
                 break
     # an Arrow table becomes a LocalRelation whatever the Arrow conf; a
     # row list (or pandas with Arrow off) would back the listing with a
     # Python RDD that starts a worker on every rescan
-    paths, sizes = zip(*rows) if rows else ((), ())
     table = pa.table(
-        [pa.array(paths, pa.string()), pa.array(sizes, pa.int64())],
+        [pa.array(rows.keys(), pa.string()), pa.array(rows.values(), pa.int64())],
         names=LISTING_SCHEMA.names,
     )
     return spark.createDataFrame(table, LISTING_SCHEMA)
@@ -212,8 +240,8 @@ def pair_files(listing: DataFrame) -> DataFrame:
 
     - a file classifies ONLY on an anchored whole-filename match
       (DATA_FULL_RE / META_FULL_RE): names with extra components (e.g.
-      `db.c.0001.json.old.gz.enc`) are `neither` and dropped, exactly
-      as the reference drops unmatched names with a warning
+      `db.c.0001.json.old.gz.enc`) are dropped, exactly as the
+      reference drops unmatched names with a warning
       (KeyPairGenerator.kt:29-37) — a suffix-only check would pass them
       through with NULL file_number and crash the decrypt stage;
     - the pair key is the DIRECTORY-QUALIFIED path stem (full path with
@@ -224,61 +252,38 @@ def pair_files(listing: DataFrame) -> DataFrame:
     - stem (the `<db>.<collection>.<NNNN>.json` core,
       KeyPairGenerator.kt:23) is kept as a display column;
     - metadata-without-data is dropped (:47-50);
-    - data-without-metadata raises (:40-46).
+    - data-without-metadata raises (:40-46), naming up to 5 stems;
+    - a file number beyond the int range raises, naming the object.
 
-    Returns (pair_stem, stem, data_path, data_size, meta_path,
-    meta_size, db, collection, file_number)."""
-    base = listing.withColumn("filename", F.element_at(F.split(F.col("path"), "/"), -1))
-    stem = F.regexp_extract(F.col("filename"), f"({FILENAME_FORMAT})", 1)
-    kind = (
-        F.when(F.col("filename").rlike(DATA_FULL_RE), F.lit("data"))
-        .when(F.col("filename").rlike(META_FULL_RE), F.lit("metadata"))
-        .otherwise(F.lit("neither"))
-    )
-    # dir-qualified pair key: strip the kind suffix from the FULL path
-    pair_stem = (
-        F.when(
-            F.col("kind") == "data",
-            F.regexp_replace(F.col("path"), DATA_SUFFIX, ""),
-        )
-        .when(
-            F.col("kind") == "metadata",
-            F.regexp_replace(F.col("path"), METADATA_SUFFIX, ""),
-        )
-        .otherwise(F.lit(""))
-    )
-    tagged = (
-        base.withColumn("kind", kind)
-        .withColumn("stem", stem)
-        .withColumn("pair_stem", pair_stem)
-        .filter(F.col("kind") != "neither")
-    )
-    data = tagged.filter(F.col("kind") == "data").select(
-        "pair_stem",
-        "stem",
-        F.col("path").alias("data_path"),
-        F.col("size").alias("data_size"),
-    )
-    meta = tagged.filter(F.col("kind") == "metadata").select(
-        "pair_stem",
-        F.col("path").alias("meta_path"),
-        F.col("size").alias("meta_size"),
-    )
-    missing = data.join(meta, "pair_stem", "left_anti")
-    bad = [
-        r["pair_stem"] for r in missing.select("pair_stem").limit(5).collect()
-    ]
+    The listing rows are collected (no Spark job on list_objects'
+    local frame) and paired in one driver loop. Returns (pair_stem,
+    stem, data_path, data_size, meta_path, meta_size, db, collection,
+    file_number) as a local frame sorted by data_path."""
+    data: dict[str, tuple[str, int]] = {}
+    meta: dict[str, tuple[str, int]] = {}
+    for path, size in listing.select("path", "size").collect():
+        name = path.rsplit("/", 1)[-1]
+        if _DATA_NAME.search(name):
+            data.setdefault(_DATA_SUFFIX.sub("", path), (path, size))
+        elif _META_NAME.search(name):
+            meta.setdefault(_META_SUFFIX.sub("", path), (path, size))
+    bad = sorted(stem for stem in data if stem not in meta)
     if bad:
-        raise MissingMetadataError(f"data objects without metadata: {bad}")
-    paired = data.join(meta, "pair_stem", "inner")
-    return paired.select(
-        "*",
-        F.regexp_extract(F.col("data_path"), FILENAME_GROUPS, 1).alias("db"),
-        F.regexp_extract(F.col("data_path"), FILENAME_GROUPS, 2).alias("collection"),
-        F.regexp_extract(F.col("data_path"), FILENAME_GROUPS, 3)
-        .cast("int")
-        .alias("file_number"),
-    )
+        raise MissingMetadataError(f"data objects without metadata: {bad[:5]}")
+    rows = []
+    for pair_stem, (data_path, data_size) in sorted(data.items(), key=lambda kv: kv[1][0]):
+        meta_path, meta_size = meta[pair_stem]
+        db, collection, number = _NAME_GROUPS.search(data_path).groups()
+        file_number = int(number)
+        if file_number > _INT_MAX:
+            raise ValueError(f"file number {number} of {data_path!r} overflows int")
+        stem = _STEM.search(data_path.rsplit("/", 1)[-1]).group()
+        rows.append(
+            (pair_stem, stem, data_path, data_size, meta_path, meta_size, db, collection, file_number)
+        )
+    columns = list(zip(*rows)) if rows else [[]] * len(PAIRS_SCHEMA)
+    table = pa.table(columns, schema=to_arrow_schema(PAIRS_SCHEMA))
+    return listing.sparkSession.createDataFrame(table, PAIRS_SCHEMA)
 
 
 def drop_zero_byte_pairs(pairs: DataFrame) -> DataFrame:

@@ -3,7 +3,9 @@
 S6 (EncryptionMetadataProcessor.kt:20-47): parse the sidecar JSON, assert
 the three required fields are non-blank. The sidecars are read in one
 distributed scan, collected once as Arrow: validation, key resolution
-and the decrypt stage all read that one driver-side table.
+and the decrypt stage all read that one driver-side table. That scan is
+the only Spark job of the sources stage: the pair rows arrive as a local
+frame and are read back without one.
 
 S7 (HttpKeyService.kt:35-81 + DataKeyProcessor.kt:16-28): decrypt the
 per-file data key via the DKS HTTP service, memoized per
@@ -25,10 +27,12 @@ from __future__ import annotations
 import re
 from typing import Protocol
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 METADATA_SCHEMA = T.StructType(
     [
@@ -95,7 +99,11 @@ def parse_metadata(pairs: DataFrame) -> DataFrame:
     up to 5 offending sidecar paths — same bounded-error contract as the
     pairing stage (listing.py)."""
     spark = pairs.sparkSession
-    rows = pairs.toArrow()
+    # collect, not toArrow(): on pair_files' local frame a collect runs
+    # no Spark job where toArrow() runs one
+    rows = pa.Table.from_pylist(
+        [r.asDict() for r in pairs.collect()], schema=to_arrow_schema(pairs.schema)
+    )
     meta_paths = pc.unique(rows["meta_path"]).to_pylist()
     # input_file_name() is a URI: percent-escapes need decoding, but a
     # LITERAL '+' in a filename is legal URI-path syntax and must NOT
