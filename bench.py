@@ -220,8 +220,6 @@ def main() -> None:
         )
         return latest_per_key(
             norm.filter(F.col("valid")),
-            key_cols=("table", "key_hex"),
-            payload_cols=("record_json",),
         )
 
     force(pipeline_e2e(warm_dir))

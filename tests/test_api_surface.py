@@ -22,18 +22,24 @@ never loads (the image has no pyflakes or ruff). ``__init__.py``
 re-exports, ``__future__`` imports and lines marked ``# noqa: F401``
 (availability probes, registry imports) are exempt.
 
-The third audit checks options. Every defaulted parameter of a
-top-level package function or method (keyword-only ones included, and
-dataclass fields with defaults, as parameters of their class) must be
-set, by position or by keyword, at some call site in the same roots.
-Call sites match by simple name; a class name matches its ``__init__``
-and its dataclass fields; a ``*``/``**`` splat sets every parameter;
-``functools.partial(f, k=...)`` sets ``k``. A function that is also
-referenced as a value (a name load outside a call, not shadowed by a
-local) has unknown callers and is skipped. Anything else fails unless
-``ALLOWED_PARAMS`` names it, with one of three reasons: a deployment
-setting or seam, a fake a test substitutes, or a size threshold that
-tests lower to reach a branch production only reaches at scale."""
+The third audit checks options: a parameter must take more than one
+value. Every parameter of a top-level package function or method
+(keyword-only ones included, and dataclass fields, as parameters of
+their class) fails when no call site in the same roots sets it (a
+defaulted one), or when every call site leaves it at its default or
+passes the same literal. A literal is a constant, a tuple, list or dict
+of constants, or a module-level name bound to one (in the package or in
+the calling file, unless a local shadows it). Call sites match by
+simple name; a class name matches its ``__init__`` and its dataclass
+fields; a ``*``/``**`` splat sets every parameter to unknown values;
+``functools.partial(f, k=...)`` sets ``k`` (the rest are filled
+later). A function that is also referenced as a value (a name load
+outside a call, not shadowed by a local) has unknown callers and is
+skipped. Anything else fails unless ``ALLOWED_PARAMS`` names it, with
+one of three reasons: a deployment setting or seam, a fake a test
+substitutes, or a size threshold that tests lower to reach a branch
+production only reaches at scale — or it is set by the benchmark
+harness, which changes only with the benchmark."""
 
 from __future__ import annotations
 
@@ -267,6 +273,11 @@ ALLOWED_PARAMS = {
     _SIZE + "two-branch Bloom route",
     ("streaming/stream_pipeline.py", "read_jsonl_stream",
      "max_files_per_trigger"): _SIZE + "multi-batch streams",
+    ("hfile.py", "HFileWriter.__init__", "compression"): _SEAM
+    + "the column family's COMPRESSION attribute (GZ for the reference "
+    "table; a family without one writes NONE, which the reader also reads)",
+    ("plans/pipeline.py", "process_lines", "persist"): "set by "
+    "perfbench/workloads.py, whose files change only with the benchmark",
 }
 
 
@@ -282,9 +293,66 @@ def _is_dataclass(cls: ast.ClassDef) -> bool:
     )
 
 
-def _signature(fn: ast.FunctionDef, method: bool) -> tuple[list, list]:
-    """(positional names a call fills, defaulted names) — ``self``/``cls``
-    dropped for methods."""
+_VARIED = object()  # a value the audit cannot pin to one literal
+
+
+def _literal(node, consts: dict, local=frozenset()):
+    """The ``repr`` of a constant, a tuple/list/dict of constants or a
+    module-level name bound to one; ``_VARIED`` for anything else."""
+    def value(n):
+        if isinstance(n, ast.Constant):
+            return n.value
+        if isinstance(n, ast.UnaryOp) and isinstance(n.op, (ast.USub, ast.UAdd)):
+            return ast.literal_eval(ast.unparse(n))
+        if isinstance(n, (ast.Tuple, ast.List)):
+            return type(n) is ast.Tuple and tuple(map(value, n.elts)) or [
+                *map(value, n.elts)
+            ]
+        if isinstance(n, ast.Dict) and None not in n.keys:
+            return dict(zip(map(value, n.keys), map(value, n.values)))
+        if isinstance(n, ast.Name) and n.id not in local and n.id in consts:
+            if consts[n.id] is not _VARIED:
+                return ast.literal_eval(consts[n.id])
+        raise ValueError(ast.dump(n))
+
+    try:
+        return repr(value(node))
+    except (ValueError, TypeError, SyntaxError):
+        return _VARIED
+
+
+def _module_consts(tree: ast.Module, consts: dict | None = None) -> dict:
+    """name -> literal repr (or ``_VARIED``) for every module-level
+    binding; a name bound twice to different values is ``_VARIED``."""
+    out = {}
+    for stmt in tree.body:
+        if isinstance(stmt, ast.Assign):
+            targets, value = stmt.targets, stmt.value
+        elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+            targets, value = [stmt.target], stmt.value
+        else:
+            continue
+        for t in targets:
+            lit = _literal(value, consts or {}) if isinstance(t, ast.Name) else _VARIED
+            for n in ast.walk(t):
+                if isinstance(n, ast.Name):
+                    out[n.id] = lit if out.get(n.id, lit) == lit else _VARIED
+    return out
+
+
+def package_consts() -> dict:
+    """Module-level literal bindings across the package, by simple name."""
+    out = {}
+    for path in _py_files(PKG):
+        for name, lit in _module_consts(_parse(path)).items():
+            out[name] = lit if out.get(name, lit) == lit else _VARIED
+    return out
+
+
+def _signature(fn: ast.FunctionDef, method: bool, consts: dict) -> tuple:
+    """(positional names a call fills, name -> default's literal repr or
+    ``_VARIED``, required names) — ``self``/``cls`` dropped for
+    methods."""
     pos = fn.args.posonlyargs + fn.args.args
     static = any(
         isinstance(d, ast.Name) and d.id == "staticmethod"
@@ -293,26 +361,33 @@ def _signature(fn: ast.FunctionDef, method: bool) -> tuple[list, list]:
     if method and not static:
         pos = pos[1:]
     names = [a.arg for a in pos]
-    n_def = len(fn.args.defaults)
-    defaulted = names[len(names) - n_def:] if n_def else []
-    defaulted += [
-        a.arg
-        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
-        if d is not None
-    ]
-    return names, defaulted
+    defaults = dict(
+        zip(
+            reversed(names),
+            [_literal(d, consts) for d in reversed(fn.args.defaults)],
+        )
+    )
+    for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+        if d is not None:
+            defaults[a.arg] = _literal(d, consts)
+    required = [n for n in names + [a.arg for a in fn.args.kwonlyargs]
+                if n not in defaults]
+    return names, defaults, required
 
 
-def defaulted_parameters() -> dict[tuple[str, str], tuple[str, list, list]]:
+def package_parameters() -> dict[tuple[str, str], tuple]:
     """(module, function) -> (name call sites use, positional names,
-    defaulted names) for every top-level function, method and
-    dataclass."""
+    name -> default, required names) for every top-level function,
+    method and dataclass."""
+    pkg = package_consts()
     out = {}
     for path in _py_files(PKG):
         mod = os.path.relpath(path, PKG)
-        for stmt in _parse(path).body:
+        tree = _parse(path)
+        consts = {**pkg, **_module_consts(tree, pkg)}
+        for stmt in tree.body:
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                out[(mod, stmt.name)] = (stmt.name, *_signature(stmt, False))
+                out[(mod, stmt.name)] = (stmt.name, *_signature(stmt, False, consts))
             elif isinstance(stmt, ast.ClassDef):
                 if _is_dataclass(stmt):
                     fields = [
@@ -324,13 +399,18 @@ def defaulted_parameters() -> dict[tuple[str, str], tuple[str, list, list]]:
                     out[(mod, stmt.name)] = (
                         stmt.name,
                         [f.target.id for f in fields],
-                        [f.target.id for f in fields if f.value is not None],
+                        {
+                            f.target.id: _literal(f.value, consts)
+                            for f in fields
+                            if f.value is not None
+                        },
+                        [f.target.id for f in fields if f.value is None],
                     )
                 for fn in stmt.body:
                     if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                         called_as = stmt.name if fn.name == "__init__" else fn.name
                         out[(mod, f"{stmt.name}.{fn.name}")] = (
-                            called_as, *_signature(fn, True)
+                            called_as, *_signature(fn, True, consts)
                         )
     return out
 
@@ -365,84 +445,116 @@ def _local_names(fn) -> set[str]:
     return out
 
 
-def _value_refs(node, local, skip, aliases, out) -> None:
-    """Names loaded outside a call's callee position, an annotation or
-    a local binding."""
-    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
-        local = local | _local_names(node)
-    if id(node) not in skip:
-        if (
-            isinstance(node, ast.Name)
-            and isinstance(node.ctx, ast.Load)
-            and node.id not in local
-        ):
-            out.add(aliases.get(node.id, node.id))
-        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
-            out.add(node.attr)
-    for child in ast.iter_child_nodes(node):
-        _value_refs(child, local, skip, aliases, out)
+class _Site:
+    """One call: the literal (or ``_VARIED``) each argument passes."""
+
+    def __init__(self, call: ast.Call, args, consts, local, partial):
+        self.args = [_literal(a, consts, local) for a in args]
+        self.keywords = {
+            k.arg: _literal(k.value, consts, local) for k in call.keywords
+        }
+        self.splat = any(isinstance(a, ast.Starred) for a in args) or (
+            None in self.keywords
+        )
+        self.partial = partial
+
+    def sets(self, names: list, p: str) -> bool:
+        idx = names.index(p) if p in names else len(self.args)
+        return self.splat or p in self.keywords or idx < len(self.args)
+
+    def value(self, names: list, defaults: dict, p: str):
+        """What this call leaves ``p`` at."""
+        if self.sets(names, p):
+            if self.splat:
+                return _VARIED
+            return self.keywords.get(p) or self.args[names.index(p)]
+        if self.partial or p not in defaults:  # filled later, or another callee
+            return _VARIED
+        return defaults[p]
 
 
 def call_sites() -> tuple[dict[str, list], set[str]]:
-    """name -> [(positional count, keywords, splat)] over every call in
-    the roots, and the names those roots reference as values."""
+    """name -> [_Site] over every call in the roots, and the names those
+    roots reference as values (loads outside a call's callee position,
+    an annotation or a local binding)."""
+    pkg = package_consts()
     calls: dict[str, list] = {}
     values: set[str] = set()
     for path in _root_files():
         tree = _parse(path)
-        aliases = _aliases(tree)
+        aliases, consts = _aliases(tree), {**pkg, **_module_consts(tree, pkg)}
         skip = set()
         for n in ast.walk(tree):
-            if isinstance(n, ast.Call):
-                skip.add(id(n.func))
-                name, args = _callee(n.func, aliases), n.args
-                if name == "partial" and args:
-                    skip.add(id(args[0]))
-                    name, args = _callee(args[0], aliases), args[1:]
-                splat = any(isinstance(a, ast.Starred) for a in args) or any(
-                    k.arg is None for k in n.keywords
-                )
-                calls.setdefault(name, []).append(
-                    (len(args), {k.arg for k in n.keywords}, splat)
-                )
             for field in ("annotation", "returns"):
                 ann = getattr(n, field, None)
                 if ann is not None:
                     skip |= {id(m) for m in ast.walk(ann)}
-        _value_refs(tree, frozenset(), skip, aliases, values)
+
+        def visit(node, local):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                local = local | _local_names(node)
+            if isinstance(node, ast.Call):
+                skip.add(id(node.func))
+                name, args = _callee(node.func, aliases), node.args
+                partial = name == "partial" and bool(args)
+                if partial:
+                    skip.add(id(args[0]))
+                    name, args = _callee(args[0], aliases), args[1:]
+                calls.setdefault(name, []).append(
+                    _Site(node, args, consts, local, partial)
+                )
+            if id(node) not in skip:
+                if (
+                    isinstance(node, ast.Name)
+                    and isinstance(node.ctx, ast.Load)
+                    and node.id not in local
+                ):
+                    values.add(aliases.get(node.id, node.id))
+                elif isinstance(node, ast.Attribute) and isinstance(
+                    node.ctx, ast.Load
+                ):
+                    values.add(node.attr)
+            for child in ast.iter_child_nodes(node):
+                visit(child, local)
+
+        visit(tree, frozenset())
     return calls, values
 
 
-def unset_parameters() -> set[tuple[str, str, str]]:
-    """(module, function, parameter) for every defaulted parameter no
-    call site in the roots sets."""
+def fixed_parameters() -> dict[tuple[str, str, str], str]:
+    """(module, function, parameter) -> the one value it takes, for every
+    parameter no call site in the roots sets (defaulted ones), or that
+    every call site leaves at its default or sets to the same literal."""
     calls, values = call_sites()
-    out = set()
-    for (mod, fn), (called_as, names, defaulted) in defaulted_parameters().items():
+    out = {}
+    for (mod, fn), (called_as, names, defaults, required) in (
+        package_parameters().items()
+    ):
         if called_as in values:
             continue
         sites = calls.get(called_as, [])
-        for p in defaulted:
-            idx = names.index(p) if p in names else None
-            if not any(
-                splat or p in kws or (idx is not None and n_pos > idx)
-                for n_pos, kws, splat in sites
-            ):
-                out.add((mod, fn, p))
+        for p in [*defaults, *required]:
+            if p in defaults and not any(s.sets(names, p) for s in sites):
+                out[(mod, fn, p)] = "unset"
+                continue
+            seen = {s.value(names, defaults, p) for s in sites}
+            if len(seen) == 1 and _VARIED not in seen:
+                out[(mod, fn, p)] = seen.pop()
     return out
 
 
 def test_package_parameters_are_set_by_a_caller():
-    unset = unset_parameters()
-    missing = unset - set(ALLOWED_PARAMS)
+    fixed = fixed_parameters()
+    missing = {k: v for k, v in fixed.items() if k not in ALLOWED_PARAMS}
     assert not missing, (
-        f"{len(missing)} defaulted parameters no query, job mode, tool or "
-        f"benchmark sets (inline the default and delete the parameter, or "
-        f"add it to ALLOWED_PARAMS with a reason): {sorted(missing)}"
+        f"{len(missing)} parameters no query, job mode, tool or benchmark "
+        f"sets, or sets to anything but one literal (inline the value and "
+        f"delete the parameter, or add it to ALLOWED_PARAMS with a "
+        f"reason): {sorted(missing.items())}"
     )
 
 
 def test_allowed_params_stay_unset():
-    """An ALLOWED_PARAMS entry a non-test caller now sets, or whose
-    parameter was deleted, is stale."""
-    assert set(ALLOWED_PARAMS) <= unset_parameters()
+    """An ALLOWED_PARAMS entry whose parameter was deleted, or which a
+    non-test caller now sets to more than one value, is stale."""
+    assert set(ALLOWED_PARAMS) <= set(fixed_parameters())

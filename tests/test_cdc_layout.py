@@ -132,16 +132,17 @@ class TestZorder:
             ).collect()
         }
         con = duckdb.connect()
-        zsql = layout.zorder_key_sql(["a", "b"])
+        zsql = layout.zorder_key_sql()  # over (l_partkey, l_suppkey)
         for (a, b), z in got.items():
             (zd,) = con.execute(
-                f"SELECT {zsql} FROM (SELECT {a}::BIGINT a, {b}::BIGINT b)"
+                f"SELECT {zsql} FROM "
+                f"(SELECT {a}::BIGINT l_partkey, {b}::BIGINT l_suppkey)"
             ).fetchone()
             assert zd == z
 
     def test_overflow_guard(self):
         with pytest.raises(ValueError):
-            layout.zorder_key([F.lit(1)] * 4, bits=16)
+            layout.zorder_key([F.lit(1)] * 4)
 
     def test_layout_write_tightens_minmax_spans(self, spark, tmp_path):
         # the point of the layout: per-file min-max spans shrink in BOTH
@@ -248,8 +249,6 @@ class TestMergeChangelogProperty:
 
 class TestZorder3Col:
     def test_three_column_interleave_parity(self, spark):
-        import duckdb
-
         from uc_historic_data_importer_spark.operators import layout
 
         vals = [(i * 37 % 1024, i * 101 % 1024, i * 211 % 1024)
@@ -259,18 +258,16 @@ class TestZorder3Col:
             (r["a"], r["b"], r["c"]): r["z"]
             for r in df.select(
                 "a", "b", "c",
-                layout.zorder_key(
-                    [F.col("a"), F.col("b"), F.col("c")], bits=10
-                ).alias("z"),
+                layout.zorder_key([F.col("a"), F.col("b"), F.col("c")]).alias("z"),
             ).collect()
         }
-        con = duckdb.connect()
-        zsql = layout.zorder_key_sql(["a", "b", "c"], bits=10)
-        for (a, b, c), z in got.items():
-            (zd,) = con.execute(
-                f"SELECT {zsql} FROM (SELECT {a}::BIGINT a, {b}::BIGINT b, "
-                f"{c}::BIGINT c)"
-            ).fetchone()
-            assert zd == z
+        # reference: bit j of column i lands at position 3j + i
+        for vs, z in got.items():
+            want = sum(
+                ((v >> j) & 1) << (3 * j + i)
+                for j in range(16)
+                for i, v in enumerate(vs)
+            )
+            assert z == want
         # interleave is a bijection on the masked domain
         assert len(set(got.values())) == len(got)

@@ -237,7 +237,9 @@ class TestSparkWriteHFiles:
             "envelope string",
         )
         splits = [b"\x20", b"\x40", b"\x80", b"\xc0", b"\xe0"]  # 6 regions
-        layout = sinks.hbase_bulkload_layout(kv, region_split_keys=splits)
+        layout = sinks.hbase_bulkload_layout(
+            kv, region_split_keys=splits, table="t1"
+        )
         out = str(tmp_path / "bulk")
         paths = sinks.write_hfiles(layout, out)
 
@@ -262,18 +264,6 @@ class TestSparkWriteHFiles:
             key0, _ = read_hfile(p).cells[0]
             rlen = struct.unpack_from(">H", key0, 0)[0]
             assert rid == region_of(key0[2 : 2 + rlen])
-
-    def test_empty_split_dict_raises_explicitly(self, spark):
-        """An empty region_split_keys dict has no CASE branches and
-        would pass repartition(0) — it must fail naming the misuse, not
-        crash with AttributeError on region_id.otherwise."""
-        kv = spark.createDataFrame(
-            [("t1", b"\x01", "01", 1, "b")],
-            "table string, key binary, key_hex string, version long, "
-            "envelope string",
-        )
-        with pytest.raises(ValueError, match="non-empty"):
-            sinks.hbase_bulkload_layout(kv, region_split_keys={})
 
     def test_bare_splits_with_declared_table_validates_lazily(self, spark):
         """With ``table=`` the bare-list single-table check is a plan-
@@ -306,10 +296,10 @@ class TestSparkWriteHFiles:
         assert ok[0]["_region_id"] == 0  # key below the single split
 
     def test_declared_table_guards_dict_and_sampled_modes_too(self, spark):
-        """``table=`` was silently IGNORED when region_split_keys was a
-        dict or None (r8 advice): a caller passing table= for validation
-        got no single-table check at all. The guard now applies in every
-        mode as a lazy raise_error on the table column."""
+        """``table=`` was silently IGNORED when region_split_keys was
+        None (r8 advice): a caller passing table= for validation got no
+        single-table check at all. The guard applies in the sampled mode
+        too, as a lazy raise_error on the table column."""
         from pyspark.sql import functions as F
 
         kv = spark.createDataFrame(
@@ -321,24 +311,10 @@ class TestSparkWriteHFiles:
         layout = sinks.hbase_bulkload_layout(kv, n_regions=2, table="t1")
         with pytest.raises(Exception, match="holds table"):
             layout.collect()
-        # dict mode: same
-        layout2 = sinks.hbase_bulkload_layout(
-            kv,
-            region_split_keys={"t1": [b"\x80"], "t2": [b"\x80"]},
-            table="t1",
-        )
-        with pytest.raises(Exception, match="holds table"):
-            layout2.collect()
-        # single-table frames flow through both modes
+        # single-table frames flow through
         single = kv.filter(F.col("table") == "t1")
         assert (
             sinks.hbase_bulkload_layout(single, n_regions=1, table="t1").count()
-            == 1
-        )
-        assert (
-            sinks.hbase_bulkload_layout(
-                single, region_split_keys={"t1": [b"\x80"]}, table="t1"
-            ).count()
             == 1
         )
 
@@ -1136,7 +1112,7 @@ class TestRowBloom:
 
 class TestWriterGuards:
     def test_tiny_bloom_chunk_never_divides_by_zero(self):
-        mk, hc = hfile._bloom_size_by_bytes(1, 0.01)
+        mk, hc = hfile._bloom_size_by_bytes(1)
         assert mk >= 1 and hc >= 1
 
     def test_giant_keys_terminate_index_shrink(self, tmp_path):

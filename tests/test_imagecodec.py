@@ -115,23 +115,24 @@ class TestHeaderDims:
 class TestFeaturesAndResize:
     def test_luminance_histogram_black_white(self):
         px = b"\x00" * 3 * 6 + b"\xff" * 3 * 2  # 6 black + 2 white RGB px
-        hist = ic.luminance_histogram(3, px, bins=8)
+        hist = ic.luminance_histogram(3, px)
         assert hist[0] == 0.75 and hist[7] == 0.25
         assert sum(hist) == pytest.approx(1.0, abs=1e-5)
 
     def test_resize_nearest_identity_and_upscale(self):
+        px8 = gradient(8, 8, 3)
+        assert ic.resize_nearest(8, 8, 3, px8) == px8  # already 8x8
         px = gradient(4, 4, 3)
-        assert ic.resize_nearest(4, 4, 3, px, 4, 4) == px
-        up = ic.resize_nearest(4, 4, 3, px, 8, 8)
+        up = ic.resize_nearest(4, 4, 3, px)
         assert len(up) == 8 * 8 * 3
         # corner pixels survive nearest-neighbor
         assert up[:3] == px[:3]
 
     def test_resize_downscale_picks_source_pixels(self):
-        px = gradient(8, 8, 1)
-        down = ic.resize_nearest(8, 8, 1, px, 2, 2)
+        px = gradient(16, 16, 1)
+        down = ic.resize_nearest(16, 16, 1, px)
         assert down == bytes(
-            [px[0 * 8 + 0], px[0 * 8 + 4], px[4 * 8 + 0], px[4 * 8 + 4]]
+            px[(2 * y) * 16 + 2 * x] for y in range(8) for x in range(8)
         )
 
 
@@ -140,9 +141,9 @@ class TestWavCodec:
         from uc_historic_data_importer_spark.functions import audiocodec as ac
 
         samples = [0, 1000, -1000, 32767, -32768, 5]
-        wav = ac.encode_wav(44100, samples)
+        wav = ac.encode_wav(samples)
         rate, ch, got = ac.decode_wav(wav)
-        assert (rate, ch, got) == (44100, 1, samples)
+        assert (rate, ch, got) == (8000, 1, samples)
         dur, rms, peak = ac.audio_features(rate, got)
         assert peak == 32768 and dur == 0
         assert abs(rms - (sum(s * s for s in samples) / 6) ** 0.5) < 1e-9
@@ -152,7 +153,7 @@ class TestWavCodec:
 
         from uc_historic_data_importer_spark.functions import audiocodec as ac
 
-        wav = bytearray(ac.encode_wav(8000, [1, 2, 3]))
+        wav = bytearray(ac.encode_wav([1, 2, 3]))
         # splice a LIST chunk with odd size (forces pad-byte handling)
         # between fmt and data
         fmt_end = 12 + 8 + 16
@@ -169,7 +170,7 @@ class TestWavCodec:
 
         with _pytest.raises(ac.UnsupportedAudioError):
             ac.decode_wav(b"\x89PNG\r\n\x1a\nnot audio")
-        wav = ac.encode_wav(8000, [1, 2, 3, 4])
+        wav = ac.encode_wav([1, 2, 3, 4])
         with _pytest.raises(ac.UnsupportedAudioError):
             ac.decode_wav(wav[:-3])  # truncated data chunk
 
@@ -180,7 +181,7 @@ class TestWavCodec:
 
         from uc_historic_data_importer_spark.functions import audiocodec as ac
 
-        wav = bytearray(ac.encode_wav(8000, [1, 2]))
+        wav = bytearray(ac.encode_wav([1, 2]))
         # flip bits-per-sample to 8 inside the fmt chunk
         struct.pack_into("<H", wav, 12 + 8 + 14, 8)
         with _pytest.raises(ac.UnsupportedAudioError):
@@ -190,7 +191,7 @@ class TestWavCodec:
         from uc_historic_data_importer_spark.functions import audiocodec as ac
         from uc_historic_data_importer_spark.operators import multimodal
 
-        good = ac.encode_wav(8000, [10, -10] * 50)
+        good = ac.encode_wav([10, -10] * 50)
         media = spark.createDataFrame(
             [(1, "audio", bytearray(good)), (2, "audio", bytearray(b"junk"))],
             "media_id long, kind string, payload binary",
@@ -205,7 +206,7 @@ class TestMp4Codec:
     def test_roundtrip(self):
         from uc_historic_data_importer_spark.functions import videocodec as vc
 
-        mp4 = vc.encode_mp4_meta(1920, 1080, 125_500, timescale=600)
+        mp4 = vc.encode_mp4_meta(1920, 1080, 125_500)
         assert vc.parse_mp4_meta(mp4) == (1920, 1080, 125_500)
 
     def test_rejects_foreign_and_malformed(self):
@@ -256,7 +257,7 @@ class TestCodecFuzzHardening:
         from uc_historic_data_importer_spark.functions import audiocodec as ac
 
         for offset in (2, 4):  # channels field / sample-rate field
-            wav = bytearray(ac.encode_wav(8000, [1, 2]))
+            wav = bytearray(ac.encode_wav([1, 2]))
             width = "<H" if offset == 2 else "<I"
             struct.pack_into(width, wav, 12 + 8 + offset, 0)
             with _pytest.raises(ac.UnsupportedAudioError):

@@ -245,7 +245,7 @@ def test_latest_per_key(result):
         latest_per_key_window,
     )
 
-    latest = latest_per_key(result.records, payload_cols=("envelope",))
+    latest = latest_per_key(result.records)
     latest_w = latest_per_key_window(result.records)
     n_keys = result.records.select("table", "key_hex").distinct().count()
     assert latest.count() == n_keys
@@ -385,12 +385,13 @@ class TestPipelineSpineReviewFixes:
             latest_per_key,
         )
 
+        # extra columns (a dotted name included) do not disturb the pick
         df = spark.createDataFrame(
-            [("t", "k", 1, "old"), ("t", "k", 2, "new")],
-            ["table", "key_hex", "version", "payload.v1"],
+            [("t", "k", 1, "old", "x"), ("t", "k", 2, "new", "y")],
+            ["table", "key_hex", "version", "record_json", "payload.v1"],
         )
-        out = latest_per_key(df, payload_cols=("payload.v1",)).collect()
-        assert len(out) == 1 and out[0]["payload.v1"] == "new"
+        out = latest_per_key(df).collect()
+        assert len(out) == 1 and out[0]["record_json"] == "new"
 
     def test_scd2_duplicate_versions_collapse_deterministically(self, spark):
         from uc_historic_data_importer_spark.operators.latest import (
@@ -398,9 +399,8 @@ class TestPipelineSpineReviewFixes:
         )
 
         df = spark.createDataFrame(
-            [("t", "k", 100, "bodyA"), ("t", "k", 100, "bodyB"),
-             ("t", "k", 200, "bodyC")],
-            "table string, key_hex string, version long, body string",
+            [("k", 100, "bodyA"), ("k", 100, "bodyB"), ("k", 200, "bodyC")],
+            "user_id string, version long, body string",
         )
         rows = sorted(
             (r["version"], r["body"], r["valid_to"], r["is_current"])

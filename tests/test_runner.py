@@ -61,7 +61,7 @@ def test_runner_report_totals_every_counter(spark, tmp_path, capsys):
                  "--kv-path", kv, "--master", "local[4]"]) == 0
     capsys.readouterr()
     assert main(["--input-dir", str(second), "--plain-jsonl", "--run-mode", "import",
-                 "--kv-path", str(tmp_path / "kv2"), "--skip-existing", "--existing-kv", kv,
+                 "--kv-path", str(tmp_path / "kv2"), "--existing-kv", kv,
                  "--master", "local[4]"]) == 0
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     per_file = report["per_file"]
@@ -74,6 +74,39 @@ def test_runner_report_totals_every_counter(spark, tmp_path, capsys):
     outcomes = ("parse_errors", "date_errors", "blank_ids", "put_count",
                 "filtered_too_early", "filtered_too_late", "filtered_exists")
     assert sum(report[k] for k in outcomes) == report["records_processed"]
+
+
+def test_runner_data_key_encrypts_every_cell(spark, tmp_path, capsys):
+    """--data-key alone turns on T8: every KV cell's dbObject decrypts
+    with that key (AES-CTR, the cell's own IV) to the record a run
+    without the key stores in plain text."""
+    import base64
+
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    inp = tmp_path / "in"
+    inp.mkdir()
+    write_dump_file(str(inp / "database-1.collection-1.0001.json"))
+    key = os.urandom(32)
+
+    def cells(name, *extra):
+        kv = str(tmp_path / name)
+        assert main(["--input-dir", str(inp), "--plain-jsonl", "--run-mode", "import",
+                     "--kv-path", kv, "--master", "local[4]", *extra]) == 0
+        capsys.readouterr()
+        return {
+            (r["key_hex"], r["version"]): json.loads(r["body"])["message"]
+            for r in spark.read.parquet(kv).collect()
+        }
+
+    plain = cells("kv_plain")
+    enc = cells("kv_enc", "--data-key", base64.b64encode(key).decode())
+    assert enc.keys() == plain.keys() and enc
+    for k, msg in enc.items():
+        iv = base64.b64decode(msg["encryption"]["initialisationVector"])
+        dec = Cipher(algorithms.AES(key), modes.CTR(iv)).decryptor()
+        text = dec.update(base64.b64decode(msg["dbObject"])) + dec.finalize()
+        assert text.decode() == plain[k]["dbObject"], k
 
 
 def test_runner_manifest_only_mode(spark, tmp_path, capsys):

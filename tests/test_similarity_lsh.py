@@ -3,7 +3,8 @@ vs the exact (broadcast crossJoin) path, plus the empty-eval guard.
 
 Parity contract: LSH candidate similarities are EXACT cosines, so
   - max_cand_sim <= max_test_sim for every train row (lower bound), and
-  - every LSH-contaminated id is exact-contaminated (no false positives);
+  - every LSH-contaminated id reaches the same threshold on its exact
+    max_test_sim (no false positives);
 recall is the standard sign-LSH tradeoff and is pinned loosely so a
 plane/bucket regression (e.g. a seed change) fails loudly.
 """
@@ -30,9 +31,7 @@ def test_lsh_is_exact_lower_bound_and_no_false_positives(spark):
     train, test = _split(spark)
     exact = {
         r["vec_id"]: r
-        for r in semantic_decontamination(
-            train, test, threshold=THRESHOLD
-        ).collect()
+        for r in semantic_decontamination(train, test).collect()
     }
     lsh = {
         r["vec_id"]: r
@@ -41,7 +40,16 @@ def test_lsh_is_exact_lower_bound_and_no_false_positives(spark):
         ).collect()
     }
     assert set(lsh) == set(exact)  # every train row present on both paths
-    flagged_exact = {i for i, r in exact.items() if r["contaminated"] == 1}
+    # the exact path flags at its fixed 0.5; its max_test_sim is
+    # threshold-free, so the LSH threshold applies to it directly
+    assert all(
+        r["contaminated"] == int((r["max_test_sim"] or -1.0) >= 0.5)
+        for r in exact.values()
+    )
+    flagged_exact = {
+        i for i, r in exact.items()
+        if r["max_test_sim"] is not None and r["max_test_sim"] >= THRESHOLD
+    }
     flagged_lsh = {i for i, r in lsh.items() if r["contaminated"] == 1}
     assert flagged_lsh <= flagged_exact  # no false positives
     for i, r in lsh.items():
@@ -71,7 +79,7 @@ def test_lsh_never_candidate_rows_survive(spark):
 def test_exact_empty_eval_guard(spark):
     train, test = _split(spark)
     empty = test.filter(F.lit(False))
-    out = semantic_decontamination(train, empty, threshold=THRESHOLD)
+    out = semantic_decontamination(train, empty)
     rows = out.collect()
     assert len(rows) == train.count()  # whole corpus kept, not dropped
     assert all(r["contaminated"] == 0 for r in rows)

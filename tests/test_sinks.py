@@ -121,10 +121,12 @@ class TestSchemaEvolution:
         old_row = kv.filter(F.col("version") == 1).first()
         assert old_row["region"] is None
         latest = latest_per_key(
-            kv, key_cols=("table", "key_hex"), payload_cols=("body", "region")
+            kv.withColumn("record_json", F.to_json(F.struct("body", "region")))
         ).collect()
         assert len(latest) == 1
-        assert latest[0]["body"] == "body-v2" and latest[0]["region"] == "eu-west-1"
+        assert latest[0]["record_json"] == (
+            '{"body":"body-v2","region":"eu-west-1"}'
+        )
 
 
 class _CountingUploader:
@@ -464,41 +466,17 @@ class TestSinksReviewFixes:
         assert os.path.basename(stale) not in on_disk
         assert on_disk == sorted(os.path.basename(p) for p in written)
 
-    def test_multi_table_split_keys_require_dict(self, spark):
+    def test_split_keys_require_table(self, spark):
+        # split keys are one table's region boundaries: without table=
+        # the layout refuses at plan build, before any Spark job
         kv = spark.createDataFrame(
             [("a", bytearray(b"\x01"), "01", 1, "b"),
              ("b", bytearray(b"\x02"), "02", 1, "b")],
             "table string, key binary, key_hex string, version long, "
             "envelope string",
         )
-        with pytest.raises(ValueError, match="per table"):
+        with pytest.raises(ValueError, match="table="):
             sinks.hbase_bulkload_layout(kv, region_split_keys=[b"\x80"])
-
-    def test_per_table_split_key_dict_aligns_each_table(self, spark, tmp_path):
-        import bisect
-        import struct as st
-
-        kv = spark.createDataFrame(
-            [("a", bytearray(bytes([i])), f"{i:02x}", 1, f"a{i}")
-             for i in range(8)]
-            + [("b", bytearray(bytes([i])), f"{i:02x}", 1, f"b{i}")
-               for i in range(8)],
-            "table string, key binary, key_hex string, version long, "
-            "envelope string",
-        )
-        splits = {"a": [b"\x04"], "b": [b"\x02", b"\x06"]}
-        layout = sinks.hbase_bulkload_layout(kv, region_split_keys=splits)
-        paths = sinks.write_hfiles(layout, str(tmp_path / "bulk"))
-        from uc_historic_data_importer_spark.hfile import read_hfile
-
-        for p in paths:
-            table = p.split("/")[-3]
-            regions = set()
-            for key, _v in read_hfile(p).cells:
-                rlen = st.unpack_from(">H", key, 0)[0]
-                row = key[2 : 2 + rlen]
-                regions.add(bisect.bisect_right(splits[table], row))
-            assert len(regions) == 1, (p, regions)
 
     def test_send_manifest_missing_file_is_permanent_skip(self, tmp_path):
         class Uploader:

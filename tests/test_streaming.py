@@ -88,8 +88,8 @@ def test_latest_per_key_ttl_evicts_idle_keys_and_converges(spark, tmp_path):
     inp.mkdir()
     # key A lives only in file 1 (Jan 1); key B advances through Jan 10
     # across four files -> four micro-batches with maxFilesPerTrigger=1,
-    # so the watermark (max event time - 1 minute) passes A's horizon
-    # (Jan 1 + 1 hour) while data is still flowing.
+    # so the watermark (max event time - 1 hour) passes A's horizon
+    # (Jan 1 + the 6-hour TTL) while data is still flowing.
     days = ["2020-01-01", "2020-01-04", "2020-01-07", "2020-01-10"]
     for i, day in enumerate(days, start=1):
         lines = [_ttl_record("B", f"{day}T00:00:00.000Z")]
@@ -105,10 +105,7 @@ def test_latest_per_key_ttl_evicts_idle_keys_and_converges(spark, tmp_path):
         # fire: the disorder case the docstring routes to batch/CDC)
         os.utime(p, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
     lines_df = sp.read_jsonl_stream(spark, str(inp), max_files_per_trigger=1)
-    latest = sp.latest_per_key_stream_ttl(
-        sp.normalized_stream(lines_df), ttl="1 hour",
-        watermark_delay="1 minute",
-    )
+    latest = sp.latest_per_key_stream_ttl(sp.normalized_stream(lines_df))
     q = (
         latest.writeStream.format("memory")
         .queryName("latest_ttl")
@@ -143,15 +140,6 @@ def test_latest_per_key_ttl_evicts_idle_keys_and_converges(spark, tmp_path):
         assert max(r["version"] for r in by_key[k]) == v
 
 
-def test_latest_per_key_ttl_duration_parse_rejects_garbage():
-    with pytest.raises(ValueError, match="duration"):
-        sp._duration_ms("soon")
-    with pytest.raises(ValueError, match="unit"):
-        sp._duration_ms("3 fortnights")
-    assert sp._duration_ms("90 seconds") == 90_000
-    assert sp._duration_ms("1 hour") == 3_600_000
-    assert sp._duration_ms(250) == 250
-
 
 def test_session_window_stream_matches_batch(spark, tmp_path):
     from uc_historic_data_importer_spark.operators import sessions
@@ -178,7 +166,7 @@ def test_session_window_stream_matches_batch(spark, tmp_path):
         .json(str(inp))
         .withColumn("event_time", F.to_timestamp("ts"))
     )
-    out = sp.session_counts_stream(stream, gap="30 minutes")
+    out = sp.session_counts_stream(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("sess_stream")
@@ -223,7 +211,7 @@ def test_streaming_hll_registers_converge_to_batch(spark, tmp_path):
     ).json(str(inp))
     # the batch register builder IS the streaming one: groupBy + max is
     # a supported streaming aggregation; state = 2^p registers
-    regs = sketches.hll_registers(stream, "user_id")
+    regs = sketches.hll_registers(stream)
     q = (
         regs.writeStream.format("memory")
         .queryName("hll_regs")
@@ -235,7 +223,9 @@ def test_streaming_hll_registers_converge_to_batch(spark, tmp_path):
     _run(q)
     streamed = sketches.hll_estimate(spark.table("hll_regs")).collect()[0]
     batch_df = spark.read.schema(schema).json(str(inp))
-    direct = sketches.hll_distinct(batch_df, "user_id").collect()[0]
+    direct = sketches.hll_distinct(
+        batch_df.withColumn("event_type", F.lit("t"))
+    ).collect()[0]
     assert streamed["hll_distinct"] == direct["hll_distinct"]
 
 
@@ -401,10 +391,9 @@ def test_changelog_sink_kill_and_resume_replays_idempotently(spark, tmp_path):
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join (clicks -> errors within
-    (0, 10 min]) must produce exactly the batch interval_join pairs."""
-    from uc_historic_data_importer_spark.operators.range_join import interval_join
-
+    """Watermarked stream-stream interval join (clicks -> errors of the
+    same user within [1 ms, 24 h]) must produce exactly the pairs a
+    batch join with the same predicate finds."""
     base = 1_700_000_000_000  # ms
     clicks = [
         (1, base + 0),
@@ -412,9 +401,9 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
         (2, base + 0),
     ]
     errors = [
-        (1, base + 60_000),    # within 10min of click@0
+        (1, base + 60_000),    # within 24 h of click@0
         (1, base + 540_000),   # within of click@0 AND click@300k
-        (2, base + 660_000),   # 11min after click@0 -> no match
+        (2, base + 90_000_000),  # 25 h after click@0 -> no match
         (3, base + 60_000),    # no click for user 3
     ]
     cdir, edir = tmp_path / "clicks", tmp_path / "errors"
@@ -427,9 +416,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
 
     ls = spark.readStream.schema("user_id BIGINT, l_ts TIMESTAMP").parquet(str(cdir))
     rs = spark.readStream.schema("user_id BIGINT, r_ts TIMESTAMP").parquet(str(edir))
-    joined = sp.interval_join_stream(
-        ls, rs, lower_ms=1, upper_ms=600_000, equi_keys=("user_id",)
-    ).select(
+    joined = sp.interval_join_stream(ls, rs).select(
         F.col("l.user_id").alias("user_id"), "l.l_ts", "r.r_ts"
     )
     out_dir, chk = str(tmp_path / "out"), str(tmp_path / "chk")
@@ -449,10 +436,8 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
 
     lb = spark.read.parquet(str(cdir))
     rb = spark.read.parquet(str(edir))
-    want_df = interval_join(
-        lb, rb, lower_ms=1, upper_ms=600_000,
-        left_ts="l_ts", right_ts="r_ts",
-    ).filter(F.col("user_id") == F.col("user_id_r"))
+    lag = F.unix_millis("r_ts") - F.unix_millis("l_ts")
+    want_df = lb.join(rb, "user_id").filter(lag.between(1, 86_400_000))
     want = {
         (r["user_id"], r["l_ts"], r["r_ts"]) for r in want_df.collect()
     }
@@ -540,18 +525,18 @@ def test_segment_clean_is_stream_safe(spark, tmp_path):
     src = tmp_path / "docs"
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa extra words here"),
-        (2, "alpha beta gamma delta epsilon unique tail of second doc"),
+        (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa unique tail"),
         (3, "entirely different content with no shared segments at all"),
     ]
     spark.createDataFrame(rows, "doc_id long, text string").coalesce(
         1
     ).write.parquet(str(src))
-    bp = ["alpha beta gamma delta epsilon"]
+    bp = ["alpha beta gamma delta epsilon zeta eta theta iota kappa"]
 
     batch = {
         r["doc_id"]: (r["n_segments"], r["n_removed"], r["cleaned_text"])
         for r in segment_clean_docs(
-            spark.read.parquet(str(src)), bp, k=5
+            spark.read.parquet(str(src)), bp
         ).collect()
     }
     assert batch[1][1] == 1 and batch[2][1] == 1 and batch[3][1] == 0
@@ -562,7 +547,7 @@ def test_segment_clean_is_stream_safe(spark, tmp_path):
     )
     out_dir, chk = str(tmp_path / "out"), str(tmp_path / "chk")
     q = (
-        segment_clean_docs(stream, bp, k=5)
+        segment_clean_docs(stream, bp)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", chk)
@@ -632,25 +617,10 @@ class TestStreamingReviewFixes:
         state_abc, _ = run([a, b, c])
         assert state_abc == (5, "zzz")
 
-    def test_interval_join_stream_rejects_inverted_bounds(self, spark):
-        df = spark.readStream.format("rate").load()
-        with pytest.raises(ValueError, match="upper_ms"):
-            sp.interval_join_stream(
-                df, df, lower_ms=600_000, upper_ms=1
-            )
-
     def test_degenerate_stream_params_raise_at_plan_build(self, spark):
-        """r14 review batch 9: session_window with a zero/negative gap
-        SILENTLY dropped every event (probed: 0 sessions, no error);
-        maxFilesPerTrigger<1 failed only asynchronously at stream start.
-        Both must raise ValueError naming the parameter at plan-build."""
-        ev = spark.readStream.format("rate").load().select(
-            F.col("value").cast("string").alias("user_id"),
-            F.col("timestamp").alias("event_time"),
-        )
-        for gap in ("0 minutes", "-5 minutes"):
-            with pytest.raises(ValueError, match="duration"):
-                sp.session_counts_stream(ev, gap=gap)
+        """r14 review batch 9: maxFilesPerTrigger<1 failed only
+        asynchronously at stream start; it must raise ValueError naming
+        the parameter at plan-build."""
         with pytest.raises(ValueError, match="max_files_per_trigger"):
             sp.read_jsonl_stream(spark, "/tmp/nowhere", max_files_per_trigger=0)
         with pytest.raises(ValueError, match="max_files_per_trigger"):
@@ -708,7 +678,7 @@ def test_latest_per_key_ttl_reappearance_semantics(spark, tmp_path):
         [_ttl_record("A", "2020-01-01T00:00:00.000Z"),
          _ttl_record("C", "2020-01-01T00:00:00.000Z"),
          _ttl_record("B", "2020-01-01T00:00:00.000Z")],
-        # watermark -> ~Jan 7: A's and C's horizons (Jan 1 + 1h) pass
+        # watermark -> ~Jan 7: A's and C's horizons (Jan 1 + 6h) pass
         [_ttl_record("B", "2020-01-07T00:00:00.000Z")],
         [_ttl_record("B", "2020-01-08T00:00:00.000Z")],
         # (a) A reappears at Jan 3: newer than its evicted Jan 1 state,
@@ -724,10 +694,7 @@ def test_latest_per_key_ttl_reappearance_semantics(spark, tmp_path):
         p.write_text("\n".join(lines) + "\n")
         os.utime(p, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
     lines_df = sp.read_jsonl_stream(spark, str(inp), max_files_per_trigger=1)
-    latest = sp.latest_per_key_stream_ttl(
-        sp.normalized_stream(lines_df), ttl="1 hour",
-        watermark_delay="1 minute",
-    )
+    latest = sp.latest_per_key_stream_ttl(sp.normalized_stream(lines_df))
     q = (
         latest.writeStream.format("memory")
         .queryName("latest_ttl_reappear")

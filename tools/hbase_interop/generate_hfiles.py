@@ -93,7 +93,6 @@ def main(argv=None) -> int:
 
     layout = sinks.hbase_bulkload_layout(
         kv, region_split_keys=SPLITS, table=TABLE,
-        family=FAMILY, qualifier=QUALIFIER,
     )
     os.makedirs(args.out, exist_ok=True)
     paths = sinks.write_hfiles(layout, args.out)  # GZ + ROW bloom defaults

@@ -81,8 +81,7 @@ def main() -> None:
     work, in_dir = _stream_events_fixture(spark, SF_DIR, None, "sessions")
     works.append(work)
     stream = sp.session_counts_stream(
-        _parsed_event_stream(spark, in_dir), gap="30 minutes",
-        watermark_delay="1 hour",
+        _parsed_event_stream(spark, in_dir),
     )
     q = (
         stream.writeStream.format("noop")
@@ -152,8 +151,6 @@ def main() -> None:
     t0 = time.time()
     stream2b = sp.latest_per_key_stream_ttl(
         sp.normalized_stream(sp.read_jsonl_stream(spark, in_dir2)),
-        ttl="6 hours",
-        watermark_delay="1 hour",
     )
     q2b = (
         stream2b.writeStream.format("noop")
@@ -212,7 +209,7 @@ def main() -> None:
     snap_base = os.path.join(work3, "snap")
     q3 = sp.run_changelog_merge_sink(
         ch_stream, snap_base, os.path.join(work3, "chk_cdc"),
-        key_cols=["k"], seq_col="seq", op_col="op",
+        key_cols=["k"],
     )
     q3.awaitTermination(900)
     q3.stop()

@@ -84,8 +84,7 @@ assert body["payload"].startswith("data-"), body
 print("cell decrypt round-trip OK:", body["payload"])
 
 # latest_per_key collapses the two versions of GUID-1
-latest = latest_per_key_window(kv.withColumnRenamed("body", "envelope"),
-                               key_cols=("table", "key_hex"))
+latest = latest_per_key_window(kv.withColumnRenamed("body", "envelope"))
 assert latest.count() == 3, latest.count()
 print("latest_per_key collapsed to", 3)
 

@@ -18,12 +18,13 @@ class UnsupportedAudioError(ValueError):
     """Payload is not canonical 16-bit PCM WAV."""
 
 
-def encode_wav(sample_rate: int, samples: list[int]) -> bytes:
-    """Minimal canonical mono WAV: RIFF header + fmt (PCM16) + data."""
+def encode_wav(samples: list[int]) -> bytes:
+    """Minimal canonical mono WAV at 8 kHz: RIFF header + fmt (PCM16) +
+    data."""
     if any(not -32768 <= s <= 32767 for s in samples):
         raise ValueError("samples must fit int16")
     data = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * 2, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body

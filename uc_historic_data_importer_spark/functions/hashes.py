@@ -50,9 +50,9 @@ def md5_i64_sql(expr: str) -> str:
     return f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT)"
 
 
-def perm_hash_sql(expr_h: str, a: int, b: int) -> str:
-    """h_j = (a * h + b) mod (2^61 - 1) over a precomputed md5_i64 value,
+def perm_hash_sql(a: int, b: int) -> str:
+    """h_j = (a * h + b) mod (2^61 - 1) over a precomputed md5_i64 column h,
     as SQL text valid in BOTH DuckDB and Spark SQL (the r14 opt round
     routes minhash builders through F.expr of this text: one parse
     instead of a py4j call per Column operator)."""
-    return f"(({expr_h} * {a} + {b}) % {MERSENNE_61})"
+    return f"((h * {a} + {b}) % {MERSENNE_61})"

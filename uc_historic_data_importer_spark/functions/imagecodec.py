@@ -229,16 +229,14 @@ def gif_dims(payload: bytes) -> tuple[int, int]:
     return width, height
 
 
-def luminance_histogram(
-    channels: int, pixels: bytes, bins: int = 8
-) -> list[float]:
+def luminance_histogram(channels: int, pixels: bytes) -> list[float]:
     """Normalized luminance histogram — the codec-backed feature vector.
 
     Gray uses the sample directly; RGB(A) uses integer Rec.601 luma.
-    Returns ``bins`` fractions summing to ~1, each rounded to 6 places
+    Returns 8 bin fractions summing to ~1, each rounded to 6 places
     (deterministic across platforms: pure integer math until the final
     division)."""
-    counts = [0] * bins
+    counts = [0] * 8
     n = len(pixels) // channels
     if n == 0:
         raise ValueError("empty pixel buffer")
@@ -250,28 +248,19 @@ def luminance_histogram(
             luma = (
                 299 * pixels[p] + 587 * pixels[p + 1] + 114 * pixels[p + 2]
             ) // 1000
-        counts[min(luma * bins // 256, bins - 1)] += 1
+        counts[luma * 8 // 256] += 1
     return [round(c / n, 6) for c in counts]
 
 
-def resize_nearest(
-    width: int,
-    height: int,
-    channels: int,
-    pixels: bytes,
-    new_w: int,
-    new_h: int,
-) -> bytes:
-    """Nearest-neighbor resample of raw interleaved pixels."""
-    if new_w <= 0 or new_h <= 0:
-        raise ValueError("target dimensions must be positive")
-    out = bytearray(new_w * new_h * channels)
-    for y in range(new_h):
-        sy = y * height // new_h
+def resize_nearest(width: int, height: int, channels: int, pixels: bytes) -> bytes:
+    """Nearest-neighbor resample of raw interleaved pixels to 8x8."""
+    out = bytearray(64 * channels)
+    for y in range(8):
+        sy = y * height // 8
         srow = sy * width * channels
-        orow = y * new_w * channels
-        for x in range(new_w):
-            sx = x * width // new_w
+        orow = y * 8 * channels
+        for x in range(8):
+            sx = x * width // 8
             s = srow + sx * channels
             o = orow + x * channels
             out[o : o + channels] = pixels[s : s + channels]
@@ -292,7 +281,7 @@ def ahash(width: int, height: int, channels: int, pixels: bytes) -> int:
     whenever the bottom-right thumbnail pixel is brighter than the
     mean, and an unfolded value >= 2^63 does not fit Spark's LongType
     (Arrow's uint64->int64 cast raises and kills the whole job)."""
-    small = resize_nearest(width, height, channels, pixels, 8, 8)
+    small = resize_nearest(width, height, channels, pixels)
     if channels == 1:
         lum = list(small)
     else:

@@ -24,19 +24,17 @@ def _box(btype: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", 8 + len(payload)) + btype + payload
 
 
-def encode_mp4_meta(
-    width: int, height: int, duration_ms: int, timescale: int = 1000
-) -> bytes:
+def encode_mp4_meta(width: int, height: int, duration_ms: int) -> bytes:
     """Minimal valid-box-structure MP4: ftyp + moov(mvhd + trak(tkhd)).
     Carries no media data (mdat) — a metadata shell, which is exactly
     what the parser consumes and what tests need deterministic copies
-    of."""
-    duration = (duration_ms * timescale) // 1000
+    of. The movie timescale is 600 units per second."""
+    duration = (duration_ms * 600) // 1000
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
     mvhd = _box(
         b"mvhd",
         struct.pack(">B3x", 0)  # version 0 + flags
-        + struct.pack(">IIII", 0, 0, timescale, duration)
+        + struct.pack(">IIII", 0, 0, 600, duration)
         + struct.pack(">i", 0x00010000)  # rate 1.0
         + struct.pack(">hxx", 0x0100)  # volume 1.0 + reserved
         + b"\x00" * 8  # reserved

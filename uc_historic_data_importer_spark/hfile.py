@@ -318,15 +318,15 @@ def _bloom_bit_positions(key: bytes, hash_count: int, bit_size: int):
         yield abs(_java_mod(_i32(h1 + i * h2), bit_size))
 
 
-def _bloom_size_by_bytes(byte_size: int, error_rate: float) -> tuple[int, int]:
+def _bloom_size_by_bytes(byte_size: int) -> tuple[int, int]:
     """ByteBloomFilter.createBySize: (max_keys, hash_count) for a chunk
-    of ``byte_size`` bytes at ``error_rate`` — idealMaxKeys = bits *
-    ln2^2 / -ln(err); optimal k = ceil(ln2 * bits / maxKeys)."""
+    of ``byte_size`` bytes at DEFAULT_BLOOM_ERROR_RATE — idealMaxKeys =
+    bits * ln2^2 / -ln(err); optimal k = ceil(ln2 * bits / maxKeys)."""
     import math
 
     bit_size = byte_size * 8
     max_keys = max(
-        1, int(bit_size * (math.log(2) ** 2) / -math.log(error_rate))
+        1, int(bit_size * (math.log(2) ** 2) / -math.log(DEFAULT_BLOOM_ERROR_RATE))
     )
     hash_count = math.ceil(math.log(2) * bit_size / max_keys)
     return max_keys, hash_count
@@ -421,7 +421,7 @@ class HFileWriter:
         # rule).
         self._bloom_byte_size = bloom_block_size
         self._bloom_max_keys, self._bloom_hash_count = _bloom_size_by_bytes(
-            bloom_block_size, DEFAULT_BLOOM_ERROR_RATE
+            bloom_block_size
         )
         self._bloom_bits = bytearray(bloom_block_size)
         self._bloom_chunk_keys = 0

@@ -91,10 +91,9 @@ def column_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     return wide.select(F.explode(F.array(*pairs)).alias("p")).select("p.*")
 
 
-def referential_orphans(
-    child: DataFrame, parent: DataFrame, child_key: str, parent_key: str
-) -> DataFrame:
-    """Child rows whose NON-NULL key has no parent — foreign-key audit
+def referential_orphans(child: DataFrame, parent: DataFrame) -> DataFrame:
+    """Child rows whose NON-NULL ``l_orderkey`` has no parent
+    ``o_orderkey`` — foreign-key audit
     as a left_anti join (same scale shape as the F4 exists filter;
     bloom-prefilter via operators/bloom.py when the parent side is
     huge). SQL FK semantics: a NULL foreign key SATISFIES the
@@ -103,17 +102,19 @@ def referential_orphans(
     every one of them, failing the audit gate on legitimately nullable
     FKs. Audit NULL keys separately with constraint_audit
     (`col.isNotNull()`) when the column is supposed to be mandatory."""
-    return child.filter(F.col(child_key).isNotNull()).join(
-        parent.select(F.col(parent_key).alias(child_key)).distinct(),
-        on=child_key,
+    return child.filter(F.col("l_orderkey").isNotNull()).join(
+        parent.select(F.col("o_orderkey").alias("l_orderkey")).distinct(),
+        on="l_orderkey",
         how="left_anti",
     )
 
 
-def k_anonymity_audit(
-    df: DataFrame, quasi_cols: list[str], k: int
-) -> DataFrame:
-    """Groups of quasi-identifier combinations smaller than ``k`` — the
+# quasi-identifiers of the customer audits: nation and market segment
+QUASI_COLS = ["c_nationkey", "c_mktsegment"]
+
+
+def k_anonymity_audit(df: DataFrame) -> DataFrame:
+    """QUASI_COLS combinations with fewer than 8 rows — the
     re-identification risk audit run before releasing or training on
     user-adjacent data (public k-anonymity notion, Sweeney 2002).
 
@@ -122,28 +123,16 @@ def k_anonymity_audit(
     the quasi columns; NULLs form their own group (a null quasi value is
     still a linkable value). Pair with text.pii_scrub for the content
     side of the same governance gate."""
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    if not quasi_cols:
-        # pre-guard (r13 review): groupBy() silently produced one
-        # keyless "is the whole table smaller than k" row — not a
-        # quasi-identifier audit
-        raise ValueError("quasi_cols must be non-empty")
     return (
-        df.groupBy(*quasi_cols)
+        df.groupBy(*QUASI_COLS)
         .agg(F.count(F.lit(1)).alias("group_size"))
-        .filter(F.col("group_size") < k)
+        .filter(F.col("group_size") < 8)
     )
 
 
-def l_diversity_audit(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str,
-    l: int,
-) -> DataFrame:
-    """Groups of quasi-identifier combinations whose SENSITIVE attribute
-    takes fewer than ``l`` distinct values — the homogeneity-attack
+def l_diversity_audit(df: DataFrame) -> DataFrame:
+    """QUASI_COLS combinations whose SENSITIVE attribute ``bal_band``
+    takes fewer than 8 distinct values — the homogeneity-attack
     audit that k-anonymity misses (Machanavasjhala et al. 2007:
     a group can be k-large yet reveal everyone's salary if all k share
     it). Returns (quasi columns..., group_size, distinct_sensitive) for
@@ -158,12 +147,7 @@ def l_diversity_audit(
     any legitimate value, and the paired oracle mirrors the rule as
     count(DISTINCT x) + (1 if any NULL) — see l_diversity_customers.
     Complements k_anonymity_audit on the same governance gate."""
-    if l < 2:
-        raise ValueError("l must be >= 2")
-    if not quasi_cols:
-        # same keyless-groupBy degenerate as k_anonymity_audit
-        raise ValueError("quasi_cols must be non-empty")
-    s = F.col(sensitive_col)
+    s = F.col("bal_band")
     # countDistinct over the struct, NOT size(collect_set(...)): the
     # struct itself is never NULL (only its fields are), so countDistinct
     # counts the NULL-carrying entry identically — but plans as bounded
@@ -171,7 +155,7 @@ def l_diversity_audit(
     # full distinct set in memory (a high-diversity group, exactly the
     # kind that PASSES the audit, could hold millions of values)
     return (
-        df.groupBy(*quasi_cols)
+        df.groupBy(*QUASI_COLS)
         .agg(
             F.count(F.lit(1)).alias("group_size"),
             F.countDistinct(
@@ -180,14 +164,16 @@ def l_diversity_audit(
                 )
             ).cast("long").alias("distinct_sensitive"),
         )
-        .filter(F.col("distinct_sensitive") < l)
+        .filter(F.col("distinct_sensitive") < 8)
     )
 
 
-def profile_drift(
-    old: DataFrame, new: DataFrame, cols: list[str]
-) -> DataFrame:
-    """Column-profile drift between two snapshots of the same table —
+# the orders columns profile_drift compares (its oracle reads them too)
+DRIFT_COLS = ["o_orderstatus", "o_custkey", "o_totalprice"]
+
+
+def profile_drift(old: DataFrame, new: DataFrame) -> DataFrame:
+    """DRIFT_COLS profile drift between two snapshots of orders —
     the monitoring primitive that catches silent upstream changes
     (null-rate spikes, cardinality collapse, range shifts) before they
     poison a training run.
@@ -197,7 +183,7 @@ def profile_drift(
     broadcast and the whole report costs two scans regardless of table
     size. Deltas are integer-rendered (basis points / counts) for
     engine-portable comparison."""
-    po = column_profile(old, cols).select(
+    po = column_profile(old, DRIFT_COLS).select(
         F.col("column"),
         F.col("row_count").alias("old_rows"),
         F.col("n_nulls").alias("old_nulls"),
@@ -205,7 +191,7 @@ def profile_drift(
         F.col("min_str").alias("old_min"),
         F.col("max_str").alias("old_max"),
     )
-    pn = column_profile(new, cols).select(
+    pn = column_profile(new, DRIFT_COLS).select(
         F.col("column"),
         F.col("row_count").alias("new_rows"),
         F.col("n_nulls").alias("new_nulls"),

@@ -68,8 +68,9 @@ def _positions(h: Column) -> list[Column]:
     ]
 
 
-def bloom_build(existing: DataFrame, value_col: str) -> list[int]:
-    """Build the filter driver-side: a dense list of m/32 words.
+def bloom_build(existing: DataFrame) -> list[int]:
+    """Build the filter of existing.o_orderkey driver-side: a dense list of
+    m/32 words.
 
     One scan of the existing snapshot, one map-side-combined shuffle of
     at most m/32 = 2048 (word_idx, partial-or) groups, then a 2048-row
@@ -77,7 +78,7 @@ def bloom_build(existing: DataFrame, value_col: str) -> list[int]:
     plan as a literal — the probe stage then needs no join at all. Word
     tables MERGE across snapshots with elementwise OR.
     """
-    h = _hash64(F.col(value_col))
+    h = _hash64(F.col("o_orderkey"))
     pos = F.explode(F.array(*_positions(h))).alias("pos")
     words = (
         existing.select(pos)
@@ -172,7 +173,6 @@ def _snapshot_fingerprint(df: DataFrame) -> str:
 
 def bloom_build_cached(
     existing: DataFrame,
-    value_col: str,
     cache_key: str,
 ) -> list[int]:
     """bloom_build memoized by snapshot key + backing-file fingerprint.
@@ -187,24 +187,23 @@ def bloom_build_cached(
     of serving a stale filter that would pass new keys as definitely-new.
     The cache is FIFO-bounded so long-lived drivers cannot leak filters.
     """
-    kk = f"{cache_key}|{_snapshot_fingerprint(existing)}|{value_col}"
+    kk = f"{cache_key}|{_snapshot_fingerprint(existing)}|o_orderkey"
     if kk not in _BUILD_CACHE:
         if len(_BUILD_CACHE) >= _BUILD_CACHE_MAX:
             _BUILD_CACHE.pop(next(iter(_BUILD_CACHE)))
-        _BUILD_CACHE[kk] = bloom_build(existing, value_col)
+        _BUILD_CACHE[kk] = bloom_build(existing)
     return _BUILD_CACHE[kk]
 
 
 def bloom_anti_join(
     records: DataFrame,
     existing: DataFrame,
-    record_key: str,
-    existing_key: str | None = None,
     cache_key: str | None = None,
     n_existing: int | None = None,
     broadcast_max_existing: int = 4_000_000,
 ) -> DataFrame:
-    """Exact anti-join with a Bloom pre-filter on the records side.
+    """Exact anti-join of ``records.l_orderkey`` against
+    ``existing.o_orderkey`` with a Bloom pre-filter on the records side.
 
     Result is IDENTICAL to ``records.join(existing, ..., "left_anti")``
     (Bloom filters have no false negatives): definitely-new rows pass
@@ -241,13 +240,12 @@ def bloom_anti_join(
     filters have no false negatives and the branch union IS the
     anti-join); pinned by the dispatch-equality test.
     """
-    ek = existing_key or record_key
-    rt = records.schema[record_key].dataType
-    et = existing.schema[ek].dataType
+    rt = records.schema["l_orderkey"].dataType
+    et = existing.schema["o_orderkey"].dataType
     if rt != et:
         raise ValueError(
-            f"bloom_anti_join key types must match: records.{record_key} "
-            f"is {rt.simpleString()}, existing.{ek} is {et.simpleString()} "
+            "bloom_anti_join key types must match: records.l_orderkey "
+            f"is {rt.simpleString()}, existing.o_orderkey is {et.simpleString()} "
             "— different types can string-render the same value "
             "differently and turn a Bloom hit into a false negative"
         )
@@ -256,20 +254,20 @@ def bloom_anti_join(
     ):
         return records.join(
             F.broadcast(
-                existing.select(F.col(ek).alias(record_key)).distinct()
+                existing.select(F.col("o_orderkey").alias("l_orderkey")).distinct()
             ),
-            on=record_key,
+            on="l_orderkey",
             how="left_anti",
         )
     if cache_key is not None:
-        words = bloom_build_cached(existing, ek, cache_key)
+        words = bloom_build_cached(existing, cache_key)
     else:
-        words = bloom_build(existing, ek)
-    maybe = maybe_contains(F.col(record_key), words)
+        words = bloom_build(existing)
+    maybe = maybe_contains(F.col("l_orderkey"), words)
     definite_new = records.filter(~maybe)
     needs_check = records.filter(maybe).join(
-        existing.select(F.col(ek).alias(record_key)).distinct(),
-        on=record_key,
+        existing.select(F.col("o_orderkey").alias("l_orderkey")).distinct(),
+        on="l_orderkey",
         how="left_anti",
     )
     return definite_new.unionByName(needs_check)

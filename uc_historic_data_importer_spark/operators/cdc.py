@@ -47,8 +47,6 @@ def _qcol(name: str) -> Column:
 def latest_changes(
     changes: DataFrame,
     key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """Compact the changelog to one winning row per key.
 
@@ -65,7 +63,7 @@ def latest_changes(
         # misconfiguration (and a keyless "merge" has no meaning —
         # every change would target the same single row)
         raise ValueError("key_cols must be non-empty")
-    payload = [c for c in changes.columns if c not in (*keys, seq_col, op_col)]
+    payload = [c for c in changes.columns if c not in (*keys, "seq", "op")]
     # _qcol/getField throughout (r10 review — the latest_per_key rule):
     # dotted/backticked column names must resolve as FLAT columns, not
     # nested-field paths, both when packing the struct and when
@@ -78,16 +76,16 @@ def latest_changes(
         )
     packed = F.max(
         F.struct(
-            _qcol(seq_col).alias(seq_col),
-            _qcol(op_col).alias(op_col),
+            _qcol("seq").alias("seq"),
+            _qcol("op").alias("op"),
             *[_qcol(c).alias(c) for c in payload],
         )
     ).alias("_w")
     w = F.col("_w")
     return changes.groupBy(*[_qcol(k) for k in keys]).agg(packed).select(
         *[_qcol(k) for k in keys],
-        w.getField(seq_col).alias(seq_col),
-        w.getField(op_col).alias(op_col),
+        w.getField("seq").alias("seq"),
+        w.getField("op").alias("op"),
         *[w.getField(c).alias(c) for c in payload],
     )
 
@@ -96,8 +94,6 @@ def merge_changelog(
     snapshot: DataFrame,
     changes: DataFrame,
     key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply the changelog to the snapshot (MERGE INTO semantics).
 
@@ -119,7 +115,7 @@ def merge_changelog(
        / migration note.
     """
     keys = list(key_cols)
-    latest = latest_changes(changes, keys, seq_col, op_col)
+    latest = latest_changes(changes, keys)
     # op-vocabulary assertion on the COMPACTED log (r13 review): after
     # the full-outer join a NULL op legitimately means "no change for
     # this key", so a NULL (or unknown) op IN THE LOG is
@@ -129,22 +125,22 @@ def merge_changelog(
     # check is one CASE expression over the compacted winners (cheap;
     # never touches the raw log) and raises at execution time like the
     # envelope NULL-body guard.
-    op_ok = _qcol(op_col).isin(OP_PUT, OP_DELETE)  # NULL -> NULL -> raise
+    op_ok = _qcol("op").isin(OP_PUT, OP_DELETE)  # NULL -> NULL -> raise
     latest = latest.withColumn(
-        op_col,
-        F.when(op_ok, _qcol(op_col)).otherwise(
+        "op",
+        F.when(op_ok, _qcol("op")).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(
-                        f"merge_changelog: {op_col} must be "
+                        "merge_changelog: op must be "
                         f"'{OP_PUT}' or '{OP_DELETE}', got "
                     ),
-                    F.coalesce(_qcol(op_col), F.lit("NULL")),
+                    F.coalesce(_qcol("op"), F.lit("NULL")),
                 )
             )
         ),
     )
-    change_payload = {c for c in latest.columns if c not in (*keys, seq_col, op_col)}
+    change_payload = {c for c in latest.columns if c not in (*keys, "seq", "op")}
 
     def side(alias: str, name: str) -> Column:
         # alias-qualified EXACT reference: "c.`a.b`" resolves the flat
@@ -152,16 +148,14 @@ def merge_changelog(
         return F.col(f"{alias}.`" + name.replace("`", "``") + "`")
 
     joined = snapshot.alias("s").join(latest.alias("c"), on=keys, how="full_outer")
-    live = joined.filter(
-        side("c", op_col).isNull() | (side("c", op_col) != OP_DELETE)
-    )
+    live = joined.filter(side("c", "op").isNull() | (side("c", "op") != OP_DELETE))
     out = []
     for c in snapshot.columns:
         if c in keys:
             out.append(_qcol(c))
         elif c in change_payload:
             out.append(
-                F.when(side("c", op_col).isNotNull(), side("c", c))
+                F.when(side("c", "op").isNotNull(), side("c", c))
                 .otherwise(side("s", c))
                 .alias(c)
             )

@@ -17,8 +17,8 @@ oracles reproduce them bit-for-bit) and all JVM-side Catalyst expressions
 Scale notes: every join key here (content hash, shingle hash, band
 signature) is uniformly distributed by construction, so shuffles are
 skew-free; AQE coalesces the small side. For corpora where single hot
-shingles explode (stop-shingles), `jaccard_pairs` takes a
-`max_shingle_freq` cut — the standard df-cut that bounds join fan-out.
+shingles explode (stop-shingles), `jaccard_pairs` applies the
+MAX_SHINGLE_FREQ cut — the standard df-cut that bounds join fan-out.
 """
 
 from __future__ import annotations
@@ -32,6 +32,12 @@ from uc_historic_data_importer_spark.functions.hashes import (
     perm_hash_sql,
 )
 from uc_historic_data_importer_spark.operators.text import tokens_col
+
+# MinHash permutations and LSH bands (rows per band = 16 / 4)
+NUM_PERMS, BANDS = 16, 4
+# jaccard_pairs' df-cut: shingles shared by more docs are dropped
+MAX_SHINGLE_FREQ = 64
+SIMHASH_BITS = 32
 
 
 def exact_dup_groups(df: DataFrame) -> DataFrame:
@@ -113,20 +119,18 @@ def _ensure_parallel(df: DataFrame) -> DataFrame:
 
 
 def doc_shingle_hashes(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+    df: DataFrame, n: int = 3
 ) -> DataFrame:
-    """(id, shingle_hash) exploded pairs, distinct per doc."""
+    """(doc_id, shingle_hash) exploded pairs, distinct per doc."""
     return _ensure_parallel(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(F.col(text_col), n)).alias("shingle"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(shingles_col(F.col("text"), n)).alias("shingle"),
     ).select("doc_id", md5_i64(F.col("shingle")).alias("h"))
 
 
-def shingle_coverage_stats(
-    df: DataFrame, n: int = 3
-) -> DataFrame:
+def shingle_coverage_stats(df: DataFrame) -> DataFrame:
     """No-silent-drops accounting for the shingle family: documents
-    shorter than ``n`` tokens produce an EMPTY shingle set and appear
+    shorter than 3 tokens produce an EMPTY shingle set and appear
     in NO signature / LSH bucket / jaccard pair — by construction, but
     invisibly. One row (n_docs, n_unshingled_docs, coverage) so a
     pipeline can observe what fraction of the corpus the n-gram dedup
@@ -142,12 +146,7 @@ def shingle_coverage_stats(
     array just to test emptiness cost ~11 s at sf0.1 vs ~0.4 s for the
     token-size probe — identical one-row output, 25x cheaper, and the
     DuckDB oracle (`len(w) < 3`) already used the token-count form."""
-    if n < 1:
-        # keep shingles_col's family guard even though the gram array
-        # is no longer built here: n=0 would otherwise silently report
-        # full coverage for the degenerate single-""-shingle corpus
-        raise ValueError(f"n must be >= 1 (got {n})")
-    empty = (F.size(tokens_col(F.col("text"))) < n).cast("long")
+    empty = (F.size(tokens_col(F.col("text"))) < 3).cast("long")
     return df.select(F.col("doc_id"), empty.alias("_e")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_e").alias("n_unshingled_docs"),
@@ -155,16 +154,6 @@ def shingle_coverage_stats(
             1.0 - F.sum("_e") / F.count(F.lit(1)), 6
         ).alias("coverage"),
     )
-
-
-def _validate_freq_cap(name: str, value: int | None) -> None:
-    """df-cut / bucket caps are >= 1 or None: a cap of 0 drops EVERY
-    bucket (all dfs are >= 1), so the pair/candidate result was silently
-    EMPTY — the same degenerate-param class as max_iters=0 (probed r13).
-    Shared by jaccard_pairs / _cap_stats so the pairs path and its
-    accounting twin cannot drift."""
-    if value is not None and value < 1:
-        raise ValueError(f"{name} must be >= 1 or None (got {value})")
 
 
 def _expand_sorted_pairs(buckets: DataFrame) -> DataFrame:
@@ -210,20 +199,11 @@ def _bucket_pairs(df: DataFrame, *bucket_cols: str) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs (a < b, jaccard >= threshold).
-
-    threshold must lie in [0, 1] (jaccard's range — a threshold above 1
-    silently returned an EMPTY pair set, probed r13) and
-    max_shingle_freq, when given, must be >= 1 (0 drops EVERY shingle —
-    every document has df >= 1 — so the result was silently empty).
+def jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Exact 3-gram Jaccard similarity pairs (a < b, jaccard >= 0.5).
 
     |A ∩ B| via shared-shingle buckets; |A|,|B| via per-doc counts over the
-    kept shingles; jaccard = common / (na + nb - common). `max_shingle_freq`
+    kept shingles; jaccard = common / (na + nb - common). MAX_SHINGLE_FREQ
     drops ultra-common shingles (df-cut, from numerator AND denominator) —
     at corpus scale a shingle shared by k docs costs k^2 pair rows.
 
@@ -242,24 +222,20 @@ def jaccard_pairs(
     threshold may therefore land on either side — but it lands on the
     SAME side in Spark and the oracle, which is the property that
     matters."""
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1] (got {threshold})")
-    _validate_freq_cap("max_shingle_freq", max_shingle_freq)
-    sh = doc_shingle_hashes(df, "text", "doc_id", 3)
-    if max_shingle_freq is not None:
-        from pyspark.sql.window import Window
+    from pyspark.sql.window import Window
 
-        # df-cut BEFORE the list aggregation: a hot shingle's doc list
-        # must never materialize (a shingle shared by 10M docs would be
-        # a 10M-element aggregation buffer — the OOM the cap exists to
-        # prevent). The window and the groupBy share the hash partition
-        # on h, so this adds no extra Exchange.
-        gram_df = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        sh = (
-            sh.withColumn("_df", gram_df)
-            .filter(F.col("_df") <= max_shingle_freq)
-            .drop("_df")
-        )
+    # df-cut BEFORE the list aggregation: a hot shingle's doc list
+    # must never materialize (a shingle shared by 10M docs would be
+    # a 10M-element aggregation buffer — the OOM the cap exists to
+    # prevent). The window and the groupBy share the hash partition
+    # on h, so this adds no extra Exchange.
+    gram_df = F.count(F.lit(1)).over(Window.partitionBy("h"))
+    sh = (
+        doc_shingle_hashes(df)
+        .withColumn("_df", gram_df)
+        .filter(F.col("_df") <= MAX_SHINGLE_FREQ)
+        .drop("_df")
+    )
     buckets = sh.groupBy("h").agg(F.array_sort(F.collect_list("doc_id")).alias("_ids"))
     # post-cut per-doc shingle counts, computed from the bucket aggregate
     # (cheap: re-runs only the agg over the reused shuffle, not the scan)
@@ -284,15 +260,12 @@ def jaccard_pairs(
                 F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def jaccard_bucket_stats(
-    df: DataFrame,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
+def jaccard_bucket_stats(df: DataFrame) -> DataFrame:
     """No-silent-caps accounting for `jaccard_pairs`'s df-cut: one row
     (kept_buckets, dropped_buckets, dropped_pair_fanout, max_bucket_docs)
     where dropped_pair_fanout = sum over dropped buckets of C(df, 2) —
@@ -304,23 +277,8 @@ def jaccard_bucket_stats(
     shingle. With the cap those buckets are dropped (from numerator AND
     denominator — surviving-shingle Jaccard stays exact) and this frame
     makes the drop observable instead of silent."""
-    bs = (
-        doc_shingle_hashes(df, "text", "doc_id", 3)
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    return _cap_stats(bs, max_shingle_freq, "max_shingle_freq")
-
-
-def _cap_stats(
-    bs: DataFrame, cap_value: int | None, cap_name: str = "cap"
-) -> DataFrame:
-    """No-silent-caps aggregate over a (bucket -> df) frame:
-    (kept_buckets, dropped_buckets, dropped_pair_fanout,
-    max_bucket_docs)."""
-    _validate_freq_cap(cap_name, cap_value)
-    cap = F.lit(cap_value if cap_value is not None else (1 << 62))
-    dropped = F.col("df") > cap
+    bs = doc_shingle_hashes(df).groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+    dropped = F.col("df") > F.lit(MAX_SHINGLE_FREQ)
     return bs.agg(
         F.count_if(~dropped).alias("kept_buckets"),
         F.count_if(dropped).alias("dropped_buckets"),
@@ -332,23 +290,13 @@ def _cap_stats(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_perms: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """MinHash signature per doc: sig_j = min over shingles of
-    (a_j * h + b_j) mod (2^61 - 1). One groupBy over the exploded
-    shingle hashes; all num_perms mins computed in the same aggregation
-    (map-side partial agg keeps shuffle payload = num_perms longs/doc)."""
-    if num_perms < 1:
-        # 0 permutations -> zero aggregate exprs; pre-guard this crashed
-        # as a bare `AssertionError: exprs should not be empty` deep in
-        # GroupedData.agg instead of naming the misconfiguration
-        raise ValueError(f"num_perms must be >= 1 (got {num_perms})")
-    sh = doc_shingle_hashes(df, text_col, id_col, n)
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """MinHash signature per doc over its 3-gram shingles: sig_j = min
+    over shingles of (a_j * h + b_j) mod (2^61 - 1). One groupBy over
+    the exploded shingle hashes; all NUM_PERMS mins computed in the same
+    aggregation (map-side partial agg keeps shuffle payload = NUM_PERMS
+    longs/doc)."""
+    sh = doc_shingle_hashes(df)
     # one F.expr per permutation instead of a Column-operator fold:
     # each Column op is a py4j round-trip and the fold dominated the
     # minhash queries' driver-side build time at bench scale (r14 opt
@@ -356,17 +304,13 @@ def minhash_signatures(
     # Spark expression and the DuckDB oracle share one formatter; the
     # parsed AST is node-for-node the old (h*a+b)%p tree.
     aggs = [
-        F.expr(f"min({perm_hash_sql('h', a, b)})").alias(f"mh{j}")
-        for j, (a, b) in enumerate(perm_constants(num_perms))
+        F.expr(f"min({perm_hash_sql(a, b)})").alias(f"mh{j}")
+        for j, (a, b) in enumerate(perm_constants(NUM_PERMS))
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    num_perms: int = 16,
-    bands: int = 4,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """LSH candidate pairs (a < b): docs sharing at least one band.
 
     band signature = md5 of the band's rows joined — uniform join key.
@@ -374,20 +318,13 @@ def minhash_lsh_pairs(
     bands. Cost is linear in docs + bucket collisions, never all-pairs
     — PROBABILISTICALLY: a pathological corpus (mass-identical docs)
     collapses a band bucket to the whole corpus."""
-    banded = minhash_band_signatures(df, num_perms, bands, "text", "doc_id", 3)
+    banded = minhash_band_signatures(df)
     # bucket-local pair expansion (one pass) instead of a banded self-join
     # (two passes over the signature computation + a shuffle join)
     return _bucket_pairs(banded, "band_idx", "band_sig").distinct()
 
 
-def minhash_band_signatures(
-    df: DataFrame,
-    num_perms: int = 16,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def minhash_band_signatures(df: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_sig): the persistable LSH index rows.
 
     This is what a production corpus stores (PARTITIONED BY band_idx,
@@ -397,22 +334,11 @@ def minhash_band_signatures(
     # The banding expression lives in ONE place (_band_signatures_of_sig,
     # r13 unification of the r12 TODO; the former twin implementations
     # were equality-pinned by test_band_signature_paths_agree, which
-    # still pins the contract). Its guard rejects bands < 1 and
-    # non-divisors before any Spark job runs (signature construction is
-    # lazy): a non-divisor silently discards trailing permutations, and
-    # bands > num_perms makes rows_per_band 0 — every band signature
-    # becomes md5('') and EVERY doc shares one bucket per band (C(n,2)
-    # pair fan-out, silently wrong candidates).
-    sig = minhash_signatures(df, num_perms, text_col, id_col, n)
-    return _band_signatures_of_sig(sig, num_perms, bands)
+    # still pins the contract).
+    return _band_signatures_of_sig(minhash_signatures(df))
 
 
-def lsh_join_incremental(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    num_perms: int = 16,
-    bands: int = 4,
-) -> DataFrame:
+def lsh_join_incremental(new_df: DataFrame, corpus_df: DataFrame) -> DataFrame:
     """(new_id, corpus_id) near-dup candidates of an INCOMING batch
     against an EXISTING corpus — the incremental form of
     minhash_lsh_pairs, and the dedup operation a growing training corpus
@@ -422,10 +348,8 @@ def lsh_join_incremental(
     matches; the corpus text is never re-read (its bands are the
     persisted index), and a batch-side broadcast applies when the daily
     increment is small."""
-    nb = minhash_band_signatures(new_df, num_perms, bands, "text", "doc_id", 3)
-    cb = minhash_band_signatures(
-        corpus_df, num_perms, bands, "text", "doc_id", 3
-    )
+    nb = minhash_band_signatures(new_df)
+    cb = minhash_band_signatures(corpus_df)
     return (
         nb.alias("n")
         .join(cb.alias("c"), ["band_idx", "band_sig"])
@@ -437,23 +361,18 @@ def lsh_join_incremental(
     )
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash per doc: for each bit position, sum ±1 votes of the
     distinct-token hashes; bit set iff the vote is positive.
 
-    One explode + one groupBy computing all `bits` votes in the same
-    aggregation (map-side partial agg; shuffle payload = bits ints/doc).
-    The token hash is the shared md5_i64 (60 usable bits), so bits <= 60.
+    One explode + one groupBy computing all SIMHASH_BITS votes in the
+    same aggregation (map-side partial agg; shuffle payload = 32
+    ints/doc). The token hash is the shared md5_i64 (60 usable bits).
     Returns (doc_id, simhash)."""
-    if not 1 <= bits <= 60:
-        # bits = 0 crashed as a bare AssertionError in GroupedData.agg
-        # (zero vote exprs); the upper bound is md5_i64's usable width
-        raise ValueError(f"bits must be in [1, 60] (got {bits}): md5_i64 provides 60 usable bits")
+    bits = SIMHASH_BITS
     tok = _ensure_parallel(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens_col(F.col(text_col)))).alias("w"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("w"),
     ).select("doc_id", md5_i64(F.col("w")).alias("h"))
     # The ±1 vote is aggregated as a plain BIT-COUNT: with c = number of
     # set bits and t = token count, vote = c - (t - c) = 2c - t, so
@@ -483,14 +402,12 @@ def simhash(
     return sig.select("doc_id", F.expr(acc_sql).alias("simhash"))
 
 
-def simhash_buckets(
-    df: DataFrame, bits: int = 32
-) -> DataFrame:
+def simhash_buckets(df: DataFrame) -> DataFrame:
     """(simhash, dup_count, keep_id) for buckets with >1 member — exact
     SimHash-collision dedup; hamming-distance banding layers on top the
     same way MinHash-LSH bands do."""
     return (
-        simhash(df, "text", "doc_id", bits)
+        simhash(df)
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("dup_count"), F.min("doc_id").alias("keep_id"))
         .filter(F.col("dup_count") > 1)
@@ -701,13 +618,9 @@ def connected_components_star(
     )
 
 
-def ngram_contamination(
-    train: DataFrame,
-    test: DataFrame,
-    n: int = 4,
-) -> DataFrame:
+def ngram_contamination(train: DataFrame, test: DataFrame) -> DataFrame:
     """Benchmark-decontamination sweep: train documents sharing any word
-    n-gram with the held-out set, with the shared-gram count.
+    4-gram with the held-out set, with the shared-gram count.
 
     The canonical eval-leakage check (PaLM/GPT-style n-gram overlap),
     complementing the exact-fingerprint audit in split_decontamination:
@@ -720,8 +633,8 @@ def ngram_contamination(
 
     Returns (doc_id, n_contaminated_grams) for flagged train docs only.
     """
-    test_grams = doc_shingle_hashes(test, "text", "doc_id", n).select("h").distinct()
-    train_grams = doc_shingle_hashes(train, "text", "doc_id", n)
+    test_grams = doc_shingle_hashes(test, 4).select("h").distinct()
+    train_grams = doc_shingle_hashes(train, 4)
     return (
         train_grams.join(F.broadcast(test_grams), "h", "inner")
         .groupBy("doc_id")
@@ -729,10 +642,7 @@ def ngram_contamination(
     )
 
 
-def source_minhash_overlap(
-    df: DataFrame,
-    num_perms: int = 16,
-) -> DataFrame:
+def source_minhash_overlap(df: DataFrame) -> DataFrame:
     """Cross-source overlap matrix: estimated shingle-set Jaccard
     between every pair of sources, from per-source MinHash signatures.
 
@@ -742,31 +652,26 @@ def source_minhash_overlap(
     above, using the same engine-portable perm constants.
 
     Scale shape: ONE scan of the corpus feeding a (source x perm)
-    aggregation whose state is num_perms longs per source — min() is
+    aggregation whose state is NUM_PERMS longs per source — min() is
     duplicate-insensitive, so no DISTINCT materialization of the
     shingle sets is needed. Pair expansion then runs over the LONG
     signature layout (source, perm, min-hash) as an equi-join keyed on
     (perm, min-hash): only agreeing perms ever join (never an
     all-pairs product over sources), and the estimate is
-    agreements/num_perms. Pairs agreeing on zero perms are omitted —
+    agreements/NUM_PERMS. Pairs agreeing on zero perms are omitted —
     their estimate is 0.
 
     Returns (source_a, source_b, agreeing_perms, jaccard_e4) with
     source_a < source_b; jaccard_e4 is the integer-scaled estimate
-    (exact when num_perms divides 10000, as 16 does)."""
-    if num_perms < 1:
-        # pre-guard: num_perms = 0 crashed as ZeroDivisionError on the
-        # modulus below instead of naming the misconfiguration
-        raise ValueError(f"num_perms must be >= 1 (got {num_perms})")
-    if 10000 % num_perms:
-        raise ValueError("num_perms must divide 10000 for exact jaccard_e4")
+    (exact, as NUM_PERMS divides 10000)."""
+    num_perms = NUM_PERMS
     sh = _ensure_parallel(df).select(
         F.col("source").alias("grp"),
         F.explode(shingles_col(F.col("text"), 3)).alias("shingle"),
     ).select("grp", md5_i64(F.col("shingle")).alias("h"))
     # F.expr per permutation — see minhash_signatures for why
     aggs = [
-        F.expr(f"min({perm_hash_sql('h', a, b)})").alias(f"mh{j}")
+        F.expr(f"min({perm_hash_sql(a, b)})").alias(f"mh{j}")
         for j, (a, b) in enumerate(perm_constants(num_perms))
     ]
     sig = sh.groupBy("grp").agg(*aggs)
@@ -846,9 +751,7 @@ def best_representative(
     )
 
 
-def _band_signatures_of_sig(
-    sig: DataFrame, num_perms: int, bands: int
-) -> DataFrame:
+def _band_signatures_of_sig(sig: DataFrame) -> DataFrame:
     """Band an EXISTING signature frame (doc_id, mh0..mh{n-1}) into
     (doc_id, band_idx, band_sig) rows — the banding half of
     minhash_band_signatures, for callers that already hold (and may
@@ -860,12 +763,8 @@ def _band_signatures_of_sig(
     the comma-joined decimal strings) lives in exactly one place;
     test_band_signature_paths_agree still pins the two entry points
     equal on a fixture."""
-    if bands < 1 or num_perms % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_perms={num_perms} "
-            "(rows_per_band = num_perms / bands must be a positive int)"
-        )
-    rows_per_band = num_perms // bands
+    bands = BANDS
+    rows_per_band = NUM_PERMS // BANDS
     # one parsed expression per band (py4j-chatter economy, r14 opt
     # round) — the AST matches the former struct(lit, md5(concat_ws))
     # Column fold exactly
@@ -886,11 +785,7 @@ def _band_signatures_of_sig(
     ).select("doc_id", "band.band_idx", "band.band_sig")
 
 
-def minhash_jaccard_estimates(
-    df: DataFrame,
-    num_perms: int = 16,
-    bands: int = 4,
-) -> DataFrame:
+def minhash_jaccard_estimates(df: DataFrame) -> DataFrame:
     """LSH candidate pairs WITH their MinHash Jaccard estimate —
     matching signature components / num_perms (the Broder estimator,
     what production LSH dedup thresholds on before any text re-read).
@@ -911,11 +806,10 @@ def minhash_jaccard_estimates(
     # computed the signature chain three times, 13.7 s of which the
     # chain was ~2x5.8 s at sf1). At 100 TB the signature table is the
     # persisted LSH index anyway (minhash_band_signatures doc).
-    sig = minhash_signatures(
-        df, num_perms, "text", "doc_id", 3
-    ).localCheckpoint(eager=False)
+    num_perms = NUM_PERMS
+    sig = minhash_signatures(df).localCheckpoint(eager=False)
     pairs = _bucket_pairs(
-        _band_signatures_of_sig(sig, num_perms, bands),
+        _band_signatures_of_sig(sig),
         "band_idx",
         "band_sig",
     ).distinct()

@@ -14,8 +14,6 @@ without any exchange at all.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,87 +42,59 @@ def encoded_value_sql(expr: str) -> str:
     )
 
 
-def _keyed_hash(
-    df: DataFrame, key_cols: tuple[str, ...], side: str, value_cols: list[str]
-) -> DataFrame:
+def _keyed_hash(df: DataFrame, side: str, value_cols: list[str]) -> DataFrame:
     # md5 over the length-prefixed value encodings: engine-portable (the
     # oracle mirrors encoded_value_sql). value_cols comes from the
     # CALLER in one fixed order — deriving it from each side's own
     # df.columns would flag every key 'changed' after a harmless column
     # reorder
     payload = F.concat_ws("\x1f", *[_encoded_value(c) for c in value_cols])
-    return df.select(*key_cols, F.md5(payload).alias(f"hash_{side}"))
+    return df.select("o_orderkey", F.md5(payload).alias(f"hash_{side}"))
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Per-key diff status between two snapshots with identical schemas.
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Per-``o_orderkey`` diff status between two orders snapshots with
+    identical schemas.
 
-    Returns (key_cols..., status) with status in
+    Returns (o_orderkey, status) with status in
     {'added', 'removed', 'changed', 'unchanged'}.
 
     Value columns are hashed in OLD's column order on both sides (a
     column reorder between snapshots is a no-op, not a 100%-changed
     report); a genuine schema difference raises instead of silently
-    mis-hashing. The key join is null-safe: a NULL key component is a
-    key like any other — a plain equi-join would double-report the same
+    mis-hashing. The key join is null-safe: a NULL key is a key like
+    any other — a plain equi-join would double-report the same
     (NULL-keyed) row as added AND removed, a false reconciliation
     failure on byte-identical snapshots."""
-    # reserved-name guard (r10 review): a KEY named 'status' would emit
-    # TWO status columns (silent downstream ambiguity); keys named
-    # hash_old/hash_new or _new_<key> collide with the internal
-    # hash/rename columns (analysis errors at best)
-    if not key_cols:
-        # pre-guard (r13 review): the join-condition reduce crashed as a
-        # bare `TypeError: reduce() of empty iterable` instead of naming
-        # the misconfiguration
-        raise ValueError("key_cols must be non-empty")
-    reserved = {"status", "hash_old", "hash_new"} | {
-        f"_new_{k}" for k in key_cols
-    }
-    taken = reserved & set(key_cols)
-    if taken:
-        raise ValueError(
-            f"key columns {sorted(taken)} collide with snapshot_diff's "
-            "output/internal names; rename them first"
-        )
-    value_cols = [c for c in old.columns if c not in key_cols]
+    value_cols = [c for c in old.columns if c != "o_orderkey"]
     if set(new.columns) != set(old.columns):
         raise ValueError(
             "snapshot schemas differ: "
             f"old-only={sorted(set(old.columns) - set(new.columns))}, "
             f"new-only={sorted(set(new.columns) - set(old.columns))}"
         )
-    o = _keyed_hash(old, key_cols, "old", value_cols)
-    n = _keyed_hash(new, key_cols, "new", value_cols)
-    for k in key_cols:
-        n = n.withColumnRenamed(k, f"_new_{k}")
-    cond = reduce(
-        lambda a, b: a & b,
-        [o[k].eqNullSafe(n[f"_new_{k}"]) for k in key_cols],
+    o = _keyed_hash(old, "old", value_cols)
+    n = _keyed_hash(new, "new", value_cols).withColumnRenamed(
+        "o_orderkey", "_new_o_orderkey"
     )
-    joined = o.join(n, cond, "full_outer")
+    joined = o.join(n, o["o_orderkey"].eqNullSafe(n["_new_o_orderkey"]), "full_outer")
     status = (
         F.when(F.col("hash_old").isNull(), F.lit("added"))
         .when(F.col("hash_new").isNull(), F.lit("removed"))
         .when(F.col("hash_old") == F.col("hash_new"), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    keys_out = [
-        F.coalesce(o[k], n[f"_new_{k}"]).alias(k) for k in key_cols
-    ]
-    return joined.select(*keys_out, status.alias("status"))
+    return joined.select(
+        F.coalesce(o["o_orderkey"], n["_new_o_orderkey"]).alias("o_orderkey"),
+        status.alias("status"),
+    )
 
 
-def snapshot_diff_summary(
-    old: DataFrame, new: DataFrame, key_cols: tuple[str, ...]
-) -> DataFrame:
-    """Reconciliation report: row counts per diff status."""
+def snapshot_diff_summary(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Reconciliation report over two orders snapshots: row counts per
+    diff status, keyed by ``o_orderkey``."""
     return (
-        snapshot_diff(old, new, key_cols)
+        snapshot_diff(old, new)
         .groupBy("status")
         .agg(F.count(F.lit(1)).alias("n_keys"))
     )

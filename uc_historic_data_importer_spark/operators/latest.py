@@ -38,60 +38,37 @@ def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
         )
 
 
-def latest_per_key(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = ("table", "key_hex"),
-    payload_cols: tuple[str, ...] = ("envelope",),
-) -> DataFrame:
+# the row key of a normalized record: (table, key_hex)
+KEY_COLS = ("table", "key_hex")
+
+
+def latest_per_key(df: DataFrame) -> DataFrame:
     """max_by aggregation: one shuffle, map-side partial aggregation.
 
-    Ties on version resolve to an arbitrary-but-SINGLE row (HBase cells
-    at the same timestamp overwrite each other — same semantics). The
-    payload columns ride ONE max_by over a combined struct, not one
-    max_by per column: independent max_by calls give no cross-aggregate
-    consistency under ties, so a key with two rows at the same max
-    version could return a TORN row mixing column values from different
-    source rows — a row that never existed. One struct aggregate
-    guarantees atomicity. Column references are backtick-quoted and the
-    payload is extracted with getField (literal name resolution), so
-    names containing '.' or '`' — which a bare F.col would parse as
-    nested-field access — work end to end."""
-    # only the grouping columns collide: the agg output is
-    # key_cols + "version" + the internal "_picked" struct, so a key
-    # column literally named _picked would alias-clash;
-    # a PAYLOAD column named _picked is fine (it lives inside the
-    # struct and is re-aliased on the way out).
-    if "_picked" in key_cols:
-        raise ValueError(
-            "key column '_picked' collides with latest_per_key's "
-            "internal aggregate name; rename it first"
-        )
+    Returns the latest ``version`` and its ``record_json`` per
+    KEY_COLS. Ties on version resolve to an arbitrary-but-SINGLE row
+    (HBase cells at the same timestamp overwrite each other — same
+    semantics)."""
     picked = F.max_by(
-        F.struct(*[_qcol(c).alias(c) for c in payload_cols]),
-        _qcol("version"),
+        F.struct(_qcol("record_json").alias("record_json")), _qcol("version")
     ).alias("_picked")
-    agg = df.groupBy(*[_qcol(c) for c in key_cols]).agg(
+    agg = df.groupBy(*[_qcol(c) for c in KEY_COLS]).agg(
         F.max(_qcol("version")).alias("version"), picked
     )
     return agg.select(
-        *[_qcol(c) for c in key_cols],
+        *[_qcol(c) for c in KEY_COLS],
         _qcol("version"),
-        *[F.col("_picked").getField(c).alias(c) for c in payload_cols],
+        F.col("_picked").getField("record_json").alias("record_json"),
     )
 
 
-def latest_per_key_window(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = ("table", "key_hex"),
-) -> DataFrame:
-    """row_number() formulation returning entire rows.
+def latest_per_key_window(df: DataFrame) -> DataFrame:
+    """row_number() formulation returning entire rows, one per KEY_COLS.
 
     Ties on version pick an arbitrary row; AQE handles key skew
-    (not expected here thanks to the CRC prefix). Column references are
-    backtick-quoted (_qcol) like latest_per_key's: a bare F.col would
-    parse a name containing '.' as nested-field access."""
+    (not expected here thanks to the CRC prefix)."""
     _check_reserved(df, {"_rn"}, "latest_per_key_window")
-    w = Window.partitionBy(*[_qcol(c) for c in key_cols]).orderBy(
+    w = Window.partitionBy(*[_qcol(c) for c in KEY_COLS]).orderBy(
         _qcol("version").desc()
     )
     return (
@@ -101,11 +78,8 @@ def latest_per_key_window(
     )
 
 
-def scd2_intervals(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = ("table", "key_hex"),
-) -> DataFrame:
-    """Versioned cells -> SCD-2 validity intervals.
+def scd2_intervals(df: DataFrame) -> DataFrame:
+    """Versioned cells keyed by ``user_id`` -> SCD-2 validity intervals.
 
     The KV sink keeps every version of a key (the reference's HBase
     maxVersions=MAX_INT model, SURVEY.md §1.4); this derives the
@@ -130,18 +104,18 @@ def scd2_intervals(
     # either name (e.g. re-running scd2 over its own output) would be
     # silently overwritten, not extended
     _check_reserved(df, {"_dup", "valid_to", "is_current"}, "scd2_intervals")
-    payload = [c for c in df.columns if c not in key_cols and c != "version"]
+    payload = [c for c in df.columns if c not in ("user_id", "version")]
     # _qcol throughout: dotted/backticked column names must resolve as
     # flat columns here exactly as they do in latest_per_key
-    dup_w = Window.partitionBy(
-        *[_qcol(c) for c in key_cols], _qcol("version")
-    ).orderBy(*([_qcol(c).desc() for c in payload] or [F.lit(1)]))
+    dup_w = Window.partitionBy(_qcol("user_id"), _qcol("version")).orderBy(
+        *([_qcol(c).desc() for c in payload] or [F.lit(1)])
+    )
     d = (
         df.withColumn("_dup", F.row_number().over(dup_w))
         .filter(F.col("_dup") == 1)
         .drop("_dup")
     )
-    w = Window.partitionBy(*[_qcol(c) for c in key_cols]).orderBy(
+    w = Window.partitionBy(_qcol("user_id")).orderBy(
         _qcol("version").asc()
     )
     nxt = F.lead(_qcol("version")).over(w)

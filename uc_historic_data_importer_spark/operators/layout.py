@@ -24,57 +24,41 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def zorder_key(cols: Sequence[Column], bits: int = 16) -> Column:
-    """Morton key: interleave the low ``bits`` bits of each column.
+def zorder_key(cols: Sequence[Column]) -> Column:
+    """Morton key: interleave the low 16 bits of each column.
 
-    Callers pre-scale values into [0, 2^bits) — ranks, bucketized
-    floats, or ``x % 2^bits`` for already-uniform ids. k * bits must fit
-    a signed long (k=2, bits=16 -> 32-bit keys; k=4, bits=15 -> 60).
-    Bit j of column i lands at position j*k + i, so high bits of every
-    dimension dominate equally — locality in the key implies locality in
-    every dimension."""
+    Callers pre-scale values into [0, 2^16) — ranks, bucketized
+    floats, or ``x % 2^16`` for already-uniform ids. k * 16 must fit
+    a signed long (k <= 3; k=2 -> 32-bit keys). Bit j of column i lands
+    at position j*k + i, so high bits of every dimension dominate
+    equally — locality in the key implies locality in every
+    dimension."""
     k = len(cols)
-    if k < 1 or bits < 1:
-        # pre-guard (r13 review batch 6): bits=0 or zero columns made
-        # the key the CONSTANT 0 for every row (probed) — the range
-        # partitioner then puts the whole table in one partition,
-        # silently defeating the data-skipping layout this key exists
-        # for
-        raise ValueError(
-            f"need >= 1 column and bits >= 1 (got {k} cols, bits={bits})"
-        )
-    if k * bits > 62:
-        raise ValueError(f"{k} cols x {bits} bits overflows a signed long")
+    if not 1 <= k <= 3:
+        # zero columns made the key the CONSTANT 0 for every row — the
+        # range partitioner then puts the whole table in one partition,
+        # silently defeating the data-skipping layout this key exists for
+        raise ValueError(f"need 1 to 3 columns for 16-bit lanes, got {k}")
     z = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(16):
         for i, c in enumerate(cols):
             bit = F.shiftright(c.cast("long"), j).bitwiseAND(F.lit(1).cast("long"))
             z = z + F.shiftleft(bit, j * k + i)
     return z
 
 
-def zorder_key_sql(exprs: Sequence[str], bits: int = 16) -> str:
-    """DuckDB SQL computing the same Morton key (oracle parity)."""
-    k = len(exprs)
-    # parity guards: the oracle builder must reject exactly what
-    # zorder_key rejects, or a misconfigured query would raise on one
-    # engine and silently compute on the other
-    if k < 1 or bits < 1:
-        raise ValueError(
-            f"need >= 1 expr and bits >= 1 (got {k} exprs, bits={bits})"
-        )
-    if k * bits > 62:
-        raise ValueError(f"{k} exprs x {bits} bits overflows a signed long")
+def zorder_key_sql() -> str:
+    """DuckDB SQL computing the same Morton key over the low 16 bits of
+    (l_partkey, l_suppkey) — oracle parity for zorder_stats_lineitem."""
+    exprs = ["(l_partkey & 65535)", "(l_suppkey & 65535)"]
     # every term fully parenthesized: SQL `<<` binds looser than `+`,
     # so an unparenthesized `a << 3 + b << 5` re-associates the shifts.
     # Each expr is CAST to BIGINT to match the Spark side's .cast
     # ("long"): an INTEGER-typed expr would make DuckDB raise
     # 'Overflow in left shift' at bit positions >= 31 (verified live)
     terms = [
-        f"((((CAST(({e}) AS BIGINT)) >> {j}) & 1) << {j * k + i})"
-        for j in range(bits)
+        f"((((CAST(({e}) AS BIGINT)) >> {j}) & 1) << {j * 2 + i})"
+        for j in range(16)
         for i, e in enumerate(exprs)
     ]
     return "(" + " + ".join(terms) + ")"
-
-

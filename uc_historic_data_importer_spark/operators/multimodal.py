@@ -138,7 +138,7 @@ def _decode_image_with_status(
             w, h, ch, px = imagecodec.decode_png(payload)
             return (
                 w, h,
-                imagecodec.luminance_histogram(ch, px, bins=8),
+                imagecodec.luminance_histogram(ch, px),
                 _STATUS_REAL,
             )
         if container == "jpeg":
@@ -146,7 +146,7 @@ def _decode_image_with_status(
                 w, h, ch, px = imagecodec.decode_jpeg(payload)
                 return (
                     w, h,
-                    imagecodec.luminance_histogram(ch, px, bins=8),
+                    imagecodec.luminance_histogram(ch, px),
                     _STATUS_REAL,
                 )
             except imagecodec.UnsupportedImageError:
@@ -263,8 +263,9 @@ def decode_health(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_audit, schema=HEALTH_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
-    """Video frame-sampling plan: one output row per frame to decode.
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Video frame-sampling plan: one output row per frame to decode,
+    every 5 seconds.
 
     Uses the typed `meta['duration_s']` column — the plan (which frames,
     from which byte ranges) is computed entirely JVM-side; only the
@@ -275,11 +276,6 @@ def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
     (no rows emitted) rather than planned as zero-length work items
     (ADVICE r1); route them through a metadata-repair pass if they must
     not be dropped silently."""
-    # validate at plan-build time: step 0 would raise inside F.sequence
-    # MID-JOB (after upstream stages already ran), a negative step would
-    # plan descending sequences instead of erroring
-    if every_n_seconds < 1:
-        raise ValueError("every_n_seconds must be >= 1")
     # try_cast DOUBLE then floor, not try_cast INT: an int cast turns a
     # FRACTIONAL duration string ('12.5') into NULL and silently skips
     # media with valid positive duration — the documented skip rule
@@ -294,7 +290,7 @@ def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
         ).try_cast("int"),
         F.lit(0),
     )
-    frames = F.sequence(F.lit(0), dur - 1, F.lit(every_n_seconds))
+    frames = F.sequence(F.lit(0), dur - 1, F.lit(5))
     return (
         media.filter((F.col("kind") == "video") & (dur > 0))
         .select("media_id", F.explode(frames).alias("frame_ts_s"))
@@ -366,9 +362,9 @@ AUDIO_WINDOW_SCHEMA = T.StructType(
 )
 
 
-def audio_window_features(media: DataFrame, window: int = 80) -> DataFrame:
+def audio_window_features(media: DataFrame) -> DataFrame:
     """Windowed audio features from REAL PCM16 WAV decode: one row per
-    full ``window``-sample frame with its RMS energy and zero-crossing
+    full 80-sample frame with its RMS energy and zero-crossing
     count (the classic VAD/energy-gating front end). The trailing
     partial frame is dropped (fixed-size frames keep the schema dense).
 
@@ -381,15 +377,6 @@ def audio_window_features(media: DataFrame, window: int = 80) -> DataFrame:
     bit-for-bit; callers round with F.round (half-away, the engine-
     portable convention) before hashing. Zero crossings are counted as
     strict sign flips (negative <-> non-negative) within the frame."""
-    # r13 audit, fixed r14: window=0 is a ZeroDivisionError INSIDE the
-    # executor UDF (len(samples) // 0), and window < 0 silently returns
-    # an EMPTY frame table (n_full < 0 -> range() empty) — the
-    # silent-data-loss class; raise at the API boundary instead
-    if window < 1:
-        raise ValueError(
-            f"audio_window_features: window must be >= 1 sample, got "
-            f"{window}"
-        )
     from uc_historic_data_importer_spark.functions import audiocodec
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -403,9 +390,8 @@ def audio_window_features(media: DataFrame, window: int = 80) -> DataFrame:
                     _rate, _ch, samples = audiocodec.decode_wav(payload)
                 except _DECODE_ERRORS:
                     continue
-                n_full = len(samples) // window
-                for w in range(n_full):
-                    seg = samples[w * window : (w + 1) * window]
+                for w in range(len(samples) // 80):
+                    seg = samples[w * 80 : (w + 1) * 80]
                     sq = 0
                     zc = 0
                     prev_neg = seg[0] < 0
@@ -419,7 +405,7 @@ def audio_window_features(media: DataFrame, window: int = 80) -> DataFrame:
                         {
                             "media_id": row.media_id,
                             "win_idx": w,
-                            "win_rms": _math.sqrt(sq / window),
+                            "win_rms": _math.sqrt(sq / 80),
                             "zero_crossings": zc,
                         }
                     )

@@ -8,9 +8,9 @@ window aggregation and needs NO Python and NO driver state.
 
 Scale design: a single global ordering would be one unbounded window =
 one reducer. Instead documents are sharded by an engine-portable hash of
-their id (md5_i64 % n_shards) and packed independently per shard; each
+their id (md5_i64 % PACK_SHARDS) and packed independently per shard; each
 shard is its own chunk namespace ((shard, chunk) is the window id). At
-100 TB, n_shards is sized to executor count and each shard's prefix sum
+100 TB, PACK_SHARDS is sized to executor count and each shard's prefix sum
 is an independent partition of ONE window shuffle — no serialization
 point. Membership is rerun-stable: a document's shard depends only on
 its own id, and within a shard the order is (doc_id) — deterministic.
@@ -26,17 +26,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.hashes import md5_i64, md5_i64_sql
-from uc_historic_data_importer_spark.operators.text import tokens_col
+from uc_historic_data_importer_spark.operators.text import TOKENS_SQL, tokens_col
+
+# each operator and its DuckDB oracle read the same constants:
+# packing context window (tokens) and shard count,
+PACK_BUDGET, PACK_SHARDS = 128, 8
+# RAG chunk window and stride (tokens),
+CHUNK_SIZE, CHUNK_STRIDE = 48, 24
+# and the training-shard size (tokens) and prefix-sum bucket count
+SHARD_TARGET, SHARD_BUCKETS = 2000, 256
 
 
-def pack_concat_chunks(
-    df: DataFrame,
-    budget: int = 512,
-    n_shards: int = 8,
-    encode=None,
-) -> DataFrame:
+def pack_concat_chunks(df: DataFrame, encode=None) -> DataFrame:
     """Assign each document its [start, end) token span in the packed
-    stream of its shard, plus the chunk ids that span covers.
+    stream of its shard (PACK_SHARDS shards), plus the PACK_BUDGET-token
+    context-window chunk ids that span covers.
 
     Returns (doc_id, shard, n_tokens, start_off, first_chunk,
     last_chunk, n_chunks): ``first_chunk == last_chunk`` means the
@@ -46,12 +50,6 @@ def pack_concat_chunks(
     (text.encoded_ids_udf seam — counts then come from actual token
     ids); the default stays the whitespace proxy, which is the oracle.
     """
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    if n_shards < 1:
-        # % 0 is NULL in Spark: every shard would be NULL and the
-        # window would fold the whole corpus into one partition
-        raise ValueError(f"n_shards must be >= 1: {n_shards}")
     if encode is None:
         toks = F.size(tokens_col(F.col("text")))
     else:
@@ -65,7 +63,7 @@ def pack_concat_chunks(
     # would dodge the `n_tokens == 0` branch below and report
     # n_chunks = 1 for a document that occupies nothing
     toks = F.coalesce(toks, F.lit(0))
-    shard = (md5_i64(F.col("doc_id").cast("string")) % F.lit(n_shards)).alias("shard")
+    shard = (md5_i64(F.col("doc_id").cast("string")) % F.lit(PACK_SHARDS)).alias("shard")
     base = df.select(F.col("doc_id").alias("doc_id"), shard, toks.alias("n_tokens"))
     w = (
         Window.partitionBy("shard")
@@ -78,15 +76,13 @@ def pack_concat_chunks(
     # ints and the sibling shard_assign_by_tokens already uses div — a
     # double quotient could in principle misround at extreme offsets,
     # and the exact form is engine-portable by construction
-    first_chunk = F.expr(f"start_off div {budget}")
+    first_chunk = F.expr(f"start_off div {PACK_BUDGET}")
     # empty documents occupy zero tokens: they sit at their offset with
     # first_chunk == last_chunk (the greatest(n,1) pins last to the
     # same chunk as first) and n_chunks = 0 — n_chunks, NOT
     # first==last, is the "fits one window" signal, since a zero-token
     # doc shares first==last with genuine one-window docs
-    last_chunk = F.expr(
-        f"(start_off + greatest(n_tokens, 1) - 1) div {budget}"
-    )
+    last_chunk = F.expr(f"(start_off + greatest(n_tokens, 1) - 1) div {PACK_BUDGET}")
     n_chunks = F.when(F.col("n_tokens") == 0, F.lit(0)).otherwise(
         last_chunk - first_chunk + 1
     )
@@ -101,13 +97,14 @@ def pack_concat_chunks(
     )
 
 
-def pack_sql(tokens_sql: str, budget: int, n_shards: int) -> str:
+def pack_sql() -> str:
     """DuckDB SQL reproducing pack_concat_chunks over `documents`."""
     h = md5_i64_sql("CAST(doc_id AS VARCHAR)")
+    budget = PACK_BUDGET
     return f"""
     WITH base AS (
-      SELECT doc_id, ({h} % {n_shards}) AS shard,
-             COALESCE(len({tokens_sql}), 0) AS n_tokens
+      SELECT doc_id, ({h} % {PACK_SHARDS}) AS shard,
+             COALESCE(len({TOKENS_SQL}), 0) AS n_tokens
       FROM documents
     ),
     offs AS (
@@ -130,22 +127,16 @@ def pack_sql(tokens_sql: str, budget: int, n_shards: int) -> str:
     """
 
 
-def chunk_spans(
-    df: DataFrame,
-    size: int = 64,
-    stride: int = 32,
-) -> DataFrame:
+def chunk_spans(df: DataFrame) -> DataFrame:
     """Overlapping token-window chunking (RAG / embedding ingestion):
     one row per (doc, chunk) with token offsets and the chunk text.
 
-    stride < size gives the standard sliding overlap; stride == size is
-    disjoint chunking. Map-only — the sequence/posexplode fan-out is
+    CHUNK_SIZE-token windows every CHUNK_STRIDE tokens: the standard
+    sliding overlap. Map-only — the sequence/posexplode fan-out is
     ceil(n_tokens / stride) per document, bounded and local, never a
     shuffle. Empty documents produce no chunks (the n > 0 guard, not a
     degenerate zero-width row).
     """
-    if size <= 0 or stride <= 0:
-        raise ValueError("size and stride must be positive")
     toks = tokens_col(F.col("text"))
     base = df.select(
         F.col("doc_id").alias("doc_id"),
@@ -154,7 +145,7 @@ def chunk_spans(
     )
     starts = F.when(
         F.col("n_tokens") > 0,
-        F.sequence(F.lit(0), F.col("n_tokens") - 1, F.lit(stride)),
+        F.sequence(F.lit(0), F.col("n_tokens") - 1, F.lit(CHUNK_STRIDE)),
     ).otherwise(F.expr("CAST(array() AS ARRAY<INT>)"))
     ex = base.select(
         "doc_id",
@@ -162,7 +153,7 @@ def chunk_spans(
         "_toks",
         F.posexplode(starts).alias("chunk_idx", "start_tok"),
     )
-    end = F.least(F.col("start_tok") + size, F.col("n_tokens"))
+    end = F.least(F.col("start_tok") + CHUNK_SIZE, F.col("n_tokens"))
     return ex.select(
         "doc_id",
         "chunk_idx",
@@ -175,10 +166,11 @@ def chunk_spans(
     )
 
 
-def chunk_sql(tokens_sql: str, size: int, stride: int) -> str:
+def chunk_sql() -> str:
     """DuckDB SQL reproducing chunk_spans over `documents`."""
+    size, stride = CHUNK_SIZE, CHUNK_STRIDE
     return f"""
-    WITH tok AS (SELECT doc_id, {tokens_sql} AS w FROM documents),
+    WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS w FROM documents),
     c AS (
       SELECT doc_id, w,
              unnest([{{'chunk_idx': CAST(i // {stride} AS INT),
@@ -196,14 +188,10 @@ def chunk_sql(tokens_sql: str, size: int, stride: int) -> str:
     """
 
 
-def shard_assign_by_tokens(
-    df: DataFrame,
-    target_tokens: int,
-    n_buckets: int = 256,
-) -> DataFrame:
+def shard_assign_by_tokens(df: DataFrame) -> DataFrame:
     """Token-balanced GLOBAL shard assignment: lay all documents on one
     deterministic line (ordered by (hash-bucket, hash, id)) and cut it
-    every ``target_tokens`` tokens — the "write N-token training shards"
+    every SHARD_TARGET tokens — the "write N-token training shards"
     primitive. A document is assigned to the shard where it STARTS, so a
     shard can overshoot by at most one document (the standard shard-
     writer closing rule).
@@ -218,8 +206,8 @@ def shard_assign_by_tokens(
     the classic two-level distributed prefix sum:
 
       1. per-bucket token totals (one partial-agg groupBy on the
-         hash-uniform bucket key — n_buckets rows),
-      2. exclusive bucket offsets (a window over those n_buckets rows —
+         hash-uniform bucket key — SHARD_BUCKETS rows),
+      2. exclusive bucket offsets (a window over those SHARD_BUCKETS rows —
          bounded artifact, like a codebook: NOT a data-scale window),
       3. broadcast offsets back, then an inclusive running sum WITHIN
          each bucket (one window partitioned by bucket).
@@ -227,12 +215,8 @@ def shard_assign_by_tokens(
     Global position = bucket offset + within-bucket cumsum; identical to
     the single-ordering spec (the oracle replays it as one flat ORDER BY
     cumsum), while every data-scale stage stays hash-partitioned. At
-    100 TB, size n_buckets ~ executor count.
+    100 TB, size SHARD_BUCKETS ~ executor count.
     """
-    if target_tokens <= 0:
-        raise ValueError("target_tokens must be positive")
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1: {n_buckets}")
     reserved = {"_hkey", "_bucket", "_btot", "_boff", "_cum",
                 "global_start", "shard_id"}
     taken = reserved & set(df.columns)
@@ -247,7 +231,7 @@ def shard_assign_by_tokens(
         )
     d = df.withColumn(
         "_hkey", md5_i64(F.col("doc_id").cast("string"))
-    ).withColumn("_bucket", F.pmod(F.col("_hkey"), F.lit(n_buckets)))
+    ).withColumn("_bucket", F.pmod(F.col("_hkey"), F.lit(SHARD_BUCKETS)))
     totals = d.groupBy("_bucket").agg(F.sum("n_tokens").alias("_btot"))
     wb = Window.orderBy("_bucket").rowsBetween(
         Window.unboundedPreceding, -1
@@ -268,7 +252,7 @@ def shard_assign_by_tokens(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
         "global_start",
-        F.expr(f"global_start div {target_tokens}").alias("shard_id"),
+        F.expr(f"global_start div {SHARD_TARGET}").alias("shard_id"),
     )
 
 

@@ -23,8 +23,8 @@ Spark shape:
   Scoring shuffles nothing and reads only the codes.
 
 Determinism discipline (shared with similarity.kmeans_fit): distances
-are rounded at ``round_dp`` BEFORE every argmin with ties to the lowest
-code; centroid means are rounded half-away-from-zero at ``centroid_dp``;
+are rounded at 6 dp BEFORE every argmin with ties to the lowest
+code; centroid means are rounded half-away-from-zero at 12 dp;
 init is the k lowest-id subvectors. Every float the oracle must
 reproduce passes through an explicit round, so DuckDB replays the fit,
 the codes, and the ADC ranking bit-for-bit.
@@ -41,6 +41,12 @@ from uc_historic_data_importer_spark.operators.similarity import (
     _ensure_parallel,
     _round_away,
 )
+
+# m subspaces, k codes per subspace, k-means rounds; the DuckDB oracle
+# replays the fit with the same values
+PQ_M, PQ_K, PQ_ITERS = 4, 4, 1
+# the query vector's id, excluded from its own neighbours
+QUERY_ID = 0
 
 
 def _fmt_d(x: float) -> str:
@@ -59,10 +65,10 @@ def _fmt_d(x: float) -> str:
     return repr(x) + "D"
 
 
-def _dot_lit_sql(vec_ref: str, base: int, cent: list[float]) -> str:
+def _dot_lit_sql(base: int, cent: list[float]) -> str:
     """sub · literal centroid, UNROLLED into element_at multiply-adds —
     as SQL TEXT over absolute positions ``base+1..base+len`` of the
-    cast vector column ``vec_ref``.
+    cast vector column ``_E``.
 
     The higher-order-function dot (aggregate over zip_with) re-enters
     the interpreter per ELEMENT — hoisting the centroid to literals
@@ -90,16 +96,14 @@ def _dot_lit_sql(vec_ref: str, base: int, cent: list[float]) -> str:
     if not cent:
         return "0.0D"
     return " + ".join(
-        f"(try_element_at({vec_ref}, {base + i + 1}) * {_fmt_d(x)})"
+        f"(try_element_at(_E, {base + i + 1}) * {_fmt_d(x)})"
         for i, x in enumerate(cent)
     )
 
 
-def _code_expr_sql(
-    vec_ref: str, j: int, sub_dim: int, codebook: list[list[float]], round_dp: int
-) -> str:
+def _code_expr_sql(j: int, sub_dim: int, codebook: list[list[float]]) -> str:
     """argmin code for one subspace as SQL text: comparison keys
-    rounded before the argmin, ties to the LOWEST code.
+    rounded to 6 dp before the argmin, ties to the LOWEST code.
 
     The key is (cent.cent - 2*sub.cent), NOT the full ||sub-cent||^2:
     sub.sub is constant across codes, so dropping it changes no argmin
@@ -122,8 +126,8 @@ def _code_expr_sql(
         cc = 0.0
         for x in cent:
             cc += float(x) * float(x)
-        dot = _dot_lit_sql(vec_ref, j * sub_dim, cent)
-        keys.append(f"round({_fmt_d(cc)} - (2.0D * ({dot})), {round_dp})")
+        dot = _dot_lit_sql(j * sub_dim, cent)
+        keys.append(f"round({_fmt_d(cc)} - (2.0D * ({dot})), 6)")
     arr = "array(" + ", ".join(keys) + ")"
     return (
         f"coalesce(CAST(array_position({arr}, array_min({arr})) - 1 AS INT),"
@@ -131,24 +135,16 @@ def _code_expr_sql(
     )
 
 
-def _with_vec_ref(
-    corpus: DataFrame, vec_col: str, *keep: Column
-) -> DataFrame:
-    """Project the cast vector under the short internal name ``_E`` the
-    SQL text references (keeps the generated text small — the parse
-    cost of the unrolled expressions scales with string length)."""
-    return corpus.select(
-        *keep, F.col(vec_col).cast("array<double>").alias("_E")
-    )
+def _with_vec_ref(corpus: DataFrame, *keep: Column) -> DataFrame:
+    """Project the cast ``embedding`` under the short internal name
+    ``_E`` the SQL text references (keeps the generated text small — the
+    parse cost of the unrolled expressions scales with string length)."""
+    return corpus.select(*keep, F.col("embedding").cast("array<double>").alias("_E"))
 
 
-def pq_fit(
-    corpus: DataFrame,
-    m: int = 4,
-    k: int = 4,
-    iters: int = 1,
-) -> list[list[list[float]]]:
-    """Deterministic per-subspace L2 k-means: returns codebooks[m][k][d/m].
+def pq_fit(corpus: DataFrame) -> list[list[list[float]]]:
+    """Deterministic per-subspace L2 k-means: returns
+    codebooks[PQ_M][PQ_K][d/PQ_M] after PQ_ITERS rounds.
 
     Init = subvectors of the k lowest-id vectors. Each round runs m
     small aggregation jobs (one per subspace): inline argmin assignment
@@ -166,6 +162,7 @@ def pq_fit(
             "pq_fit: cannot infer embedding dim from 'embedding' "
             "(empty corpus or NULL first embedding)"
         )
+    m, k = PQ_M, PQ_K
     dim = int(dim_row["d"])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -181,7 +178,7 @@ def pq_fit(
     # single-file corpora scan as ONE partition; the iteration's
     # explode+aggregate is CPU-bound and must parallelize
     corpus = _ensure_parallel(corpus)
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         # ONE corpus scan + ONE shuffle per iteration for all m
         # subspaces: the per-subspace argmin codes ride along as an
         # array column; posexplode of the full vector recovers
@@ -189,12 +186,12 @@ def pq_fit(
         # sub_dim — driver state stays one codebook.
         codes = F.array(
             *[
-                F.expr(_code_expr_sql("_E", j, sub_dim, books[j], 6))
+                F.expr(_code_expr_sql(j, sub_dim, books[j]))
                 for j in range(m)
             ]
         )
         sums = (
-            _with_vec_ref(corpus, "embedding").select(
+            _with_vec_ref(corpus).select(
                 codes.alias("_codes"),
                 F.posexplode(F.col("_E")).alias("pos", "x"),
             )
@@ -216,32 +213,22 @@ def pq_fit(
             j = int(r["j"])
             accs[j].setdefault(int(r["code"]), [0.0] * sub_dim)[
                 int(r["dim"])
-            ] = _round_away(float(r["sx"]) / int(r["n"]), 12)
+            ] = _round_away(float(r["sx"]) / int(r["n"]))
         books = [
             [accs[j].get(c, books[j][c]) for c in range(k)] for j in range(m)
         ]
     return books
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """(vec_id, code_0..code_{m-1}): the persisted compact index — pure
     map over the corpus, no shuffle."""
     sub_dim = len(codebooks[0][0])
-    base = _with_vec_ref(
-        _ensure_parallel(corpus), vec_col, F.col(id_col).alias("vec_id")
-    )
+    base = _with_vec_ref(_ensure_parallel(corpus), F.col("vec_id").alias("vec_id"))
     return base.select(
         "vec_id",
         *[
-            F.expr(
-                _code_expr_sql("_E", j, sub_dim, codebooks[j], round_dp)
-            ).alias(f"code_{j}")
+            F.expr(_code_expr_sql(j, sub_dim, codebooks[j])).alias(f"code_{j}")
             for j in range(len(codebooks))
         ],
     )
@@ -252,9 +239,9 @@ def pq_topk(
     codebooks: list[list[list[float]]],
     query_vec: list[float],
     k: int = 10,
-    exclude_id: int | None = None,
 ) -> DataFrame:
-    """ADC top-k: (neighbor_id, approx_dist, rank), nearest first.
+    """ADC top-k: (neighbor_id, approx_dist, rank), nearest first, the
+    query vector itself (QUERY_ID) excluded.
 
     The LUTs (m arrays of k exact query-to-centroid distances) are
     computed driver-side — m*k doubles — and shipped as literals; the
@@ -280,7 +267,7 @@ def pq_topk(
             row.append((qq + cc) - 2.0 * qc)
         luts.append(row)
 
-    codes = pq_encode(corpus, codebooks, "vec_id", "embedding", 6)
+    codes = pq_encode(corpus, codebooks)
     score: Column = F.lit(0.0)
     for j in range(m):
         lut = F.array(*[F.lit(float(d)) for d in luts[j]])
@@ -289,8 +276,7 @@ def pq_topk(
         F.col("vec_id").alias("neighbor_id"),
         F.round(score, 6).alias("approx_dist"),
     )
-    if exclude_id is not None:
-        scored = scored.filter(F.col("neighbor_id") != exclude_id)
+    scored = scored.filter(F.col("neighbor_id") != QUERY_ID)
     from pyspark.sql import Window
 
     # orderBy + limit compiles to TakeOrderedAndProject (no global sort,

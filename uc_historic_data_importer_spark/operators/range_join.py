@@ -1,7 +1,7 @@
 """Range (interval) join — the band-join companion to the as-of join.
 
-Semantics: pair (l, r) where r.ts is inside [l.ts + lower_ms, l.ts +
-upper_ms] (bounds inclusive; set lower_ms=1 for strictly-after).
+Semantics: pair (l, r) where r.ts is inside [l.ts + LOWER_MS, l.ts +
+UPPER_MS] (bounds inclusive; LOWER_MS = 1 makes it strictly-after).
 
 Scale shape: Spark's default plan for a pure inequality join is a
 broadcast-nested-loop (or cartesian) — O(|L| x |R|) and undistributable.
@@ -26,19 +26,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_ts: str,
-    lower_ms: int,
-    upper_ms: int,
-) -> DataFrame:
+# the band: right.ts within [left.ts + 1 ms, left.ts + 60 s]
+LOWER_MS = 1
+UPPER_MS = 60_000
+
+
+def interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """All (left, right) pairs with unix_millis(right.ts) within
-    [unix_millis(left.ts) + lower_ms, unix_millis(left.ts) + upper_ms].
+    [unix_millis(left.ts) + LOWER_MS, unix_millis(left.ts) + UPPER_MS].
 
     Output columns: left columns, then right columns; ambiguous names on
-    the right are suffixed `_r`.
+    the right are suffixed `_r` (so the right side's ``ts`` reads
+    ``ts_r``).
 
     Reserved names: inputs may not carry the internal temp columns
     (`_ms_l`, `_ms_r`, `_bucket`) — withColumn would overwrite them and
@@ -47,8 +46,6 @@ def interval_join(
     (the rename would create the same name on both sides and any later
     select of it would be ambiguous). Both collisions raise up front.
     """
-    if upper_ms < lower_ms:
-        raise ValueError("upper_ms must be >= lower_ms")
     reserved = {"_ms_l", "_ms_r", "_bucket"}
     taken = reserved & (set(left.columns) | set(right.columns))
     if taken:
@@ -56,10 +53,8 @@ def interval_join(
             f"input columns {sorted(taken)} collide with interval_join's "
             "internal temp names; rename them first"
         )
-    width = max(upper_ms - lower_ms, 1)
-
-    l_ms = F.unix_millis(F.col(left_ts))
-    r_ms = F.unix_millis(F.col(right_ts))
+    width = UPPER_MS - LOWER_MS
+    l_ms = F.unix_millis(F.col("ts"))
 
     overlap = [c for c in right.columns if c in left.columns]
     suffix_clash = [c for c in overlap if f"{c}_r" in left.columns]
@@ -71,19 +66,18 @@ def interval_join(
     r = right
     for c in overlap:
         r = r.withColumnRenamed(c, f"{c}_r")
-    right_ts_out = f"{right_ts}_r" if right_ts in overlap else right_ts
 
-    lo_bucket = F.floor((l_ms + F.lit(lower_ms)) / F.lit(width))
-    hi_bucket = F.floor((l_ms + F.lit(upper_ms)) / F.lit(width))
+    lo_bucket = F.floor((l_ms + F.lit(LOWER_MS)) / F.lit(width))
+    hi_bucket = F.floor((l_ms + F.lit(UPPER_MS)) / F.lit(width))
     lb = left.withColumn("_ms_l", l_ms).withColumn(
         "_bucket", F.explode(F.sequence(lo_bucket, hi_bucket))
     )
-    rb = r.withColumn("_ms_r", F.unix_millis(F.col(right_ts_out))).withColumn(
+    rb = r.withColumn("_ms_r", F.unix_millis(F.col("ts_r"))).withColumn(
         "_bucket", F.floor(F.col("_ms_r") / F.lit(width))
     )
 
     joined = lb.join(rb, ["_bucket"]).filter(
-        (F.col("_ms_r") >= F.col("_ms_l") + F.lit(lower_ms))
-        & (F.col("_ms_r") <= F.col("_ms_l") + F.lit(upper_ms))
+        (F.col("_ms_r") >= F.col("_ms_l") + F.lit(LOWER_MS))
+        & (F.col("_ms_r") <= F.col("_ms_l") + F.lit(UPPER_MS))
     )
     return joined.drop("_bucket", "_ms_l", "_ms_r")

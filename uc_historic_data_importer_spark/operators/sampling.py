@@ -42,6 +42,18 @@ DENOM = 1_000_000
 MIXTURE_DEFAULT_WEIGHT = 1.0
 TEMPERATURE_RATE_DP = 9
 WEIGHTED_KEY_DP = 8
+# the catalog's sampling settings, read by each sampler and its oracle:
+# hash_sample's fraction, split_assign's val/test fractions, the domain
+# weights of mixture_sample, per-group picks of stratified_sample (per
+# lang) and weighted_sample (per source), token_budget_sample's budget
+# per source and kfold_assign's fold count
+SAMPLE_FRACTION = 0.1
+VAL_FRACTION = TEST_FRACTION = 0.05
+MIXTURE_WEIGHTS = {"src0": 2.5, "src1": 0.25, "src2": 0.0}
+STRATUM_N = 20
+WEIGHTED_N = 5
+TOKEN_BUDGET = 900
+N_FOLDS = 5
 
 
 def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
@@ -56,8 +68,8 @@ def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
         )
 
 
-def _bucket(id_col: str):
-    return md5_i64(F.col(id_col).cast("string")) % F.lit(DENOM)
+def _bucket():
+    return md5_i64(F.col("doc_id").cast("string")) % F.lit(DENOM)
 
 
 def _mixture_levels(w: float) -> tuple[int, int]:
@@ -70,33 +82,24 @@ def _mixture_levels(w: float) -> tuple[int, int]:
     return n_full, int(round((w - n_full) * DENOM))
 
 
-def hash_sample(df: DataFrame, id_col: str, fraction: float) -> DataFrame:
-    """Keep ~fraction of rows, chosen by id hash — map-only, rerun-stable."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError("fraction must be in [0, 1]")
-    return df.filter(_bucket(id_col) < F.lit(int(fraction * DENOM)))
+def hash_sample(df: DataFrame) -> DataFrame:
+    """Keep ~SAMPLE_FRACTION of rows, chosen by doc_id hash — map-only,
+    rerun-stable."""
+    return df.filter(_bucket() < F.lit(int(SAMPLE_FRACTION * DENOM)))
 
 
-def split_assign(
-    df: DataFrame,
-    id_col: str,
-    val_fraction: float = 0.01,
-    test_fraction: float = 0.01,
-) -> DataFrame:
-    """Label each row train/val/test by disjoint hash ranges of its id.
+def split_assign(df: DataFrame) -> DataFrame:
+    """Label each row train/val/test by disjoint hash ranges of its
+    doc_id (VAL_FRACTION val, TEST_FRACTION test).
 
     Membership is a pure function of the id: adding or removing other
     rows never moves a document across the val/test boundary (the
     train-test contamination guarantee a growing corpus needs).
     """
-    if val_fraction < 0 or test_fraction < 0:
-        raise ValueError("val/test fractions must be >= 0")
-    if val_fraction + test_fraction >= 1.0:
-        raise ValueError("val + test fractions must leave room for train")
     _check_reserved(df, {"split"}, "split_assign")
-    b = _bucket(id_col)
-    val_hi = int(val_fraction * DENOM)
-    test_hi = val_hi + int(test_fraction * DENOM)
+    b = _bucket()
+    val_hi = int(VAL_FRACTION * DENOM)
+    test_hi = val_hi + int(TEST_FRACTION * DENOM)
     return df.withColumn(
         "split",
         F.when(b < val_hi, F.lit("val"))
@@ -105,10 +108,9 @@ def split_assign(
     )
 
 
-def stratified_sample(
-    df: DataFrame, id_col: str, stratum_col: str, n_per_stratum: int
-) -> DataFrame:
-    """Exactly min(n, stratum size) rows per stratum, picked by hash rank.
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Exactly min(STRATUM_N, stratum size) rows per ``lang`` stratum,
+    picked by doc_id hash rank.
 
     The hash is the sort key, so the picked set is a deterministic
     pseudo-random subset; the id tiebreak makes rank total even on the
@@ -116,34 +118,32 @@ def stratified_sample(
     skewed strata are bounded by the same salting approach as
     operators/skew.py if a stratum outgrows an executor.
     """
-    if n_per_stratum < 1:
-        raise ValueError(f"n_per_stratum must be >= 1: {n_per_stratum}")
     _check_reserved(df, {"_rk"}, "stratified_sample")
-    w = Window.partitionBy(stratum_col).orderBy(
-        md5_i64(F.col(id_col).cast("string")), F.col(id_col)
+    w = Window.partitionBy("lang").orderBy(
+        md5_i64(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_per_stratum)
+        .filter(F.col("_rk") <= STRATUM_N)
         .drop("_rk")
     )
 
 
-def sample_sql(id_expr: str, fraction: float) -> str:
+def sample_sql() -> str:
     """DuckDB predicate matching hash_sample's selection."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
 
-    h = md5_i64_sql(f"CAST({id_expr} AS VARCHAR)")
-    return f"({h} % {DENOM}) < {int(fraction * DENOM)}"
+    h = md5_i64_sql("CAST(doc_id AS VARCHAR)")
+    return f"({h} % {DENOM}) < {int(SAMPLE_FRACTION * DENOM)}"
 
 
-def split_sql(id_expr: str, val_fraction: float, test_fraction: float) -> str:
+def split_sql() -> str:
     """DuckDB CASE expression matching split_assign's labels."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
 
-    h = md5_i64_sql(f"CAST({id_expr} AS VARCHAR)")
-    val_hi = int(val_fraction * DENOM)
-    test_hi = val_hi + int(test_fraction * DENOM)
+    h = md5_i64_sql("CAST(doc_id AS VARCHAR)")
+    val_hi = int(VAL_FRACTION * DENOM)
+    test_hi = val_hi + int(TEST_FRACTION * DENOM)
     return (
         f"CASE WHEN ({h} % {DENOM}) < {val_hi} THEN 'val' "
         f"WHEN ({h} % {DENOM}) < {test_hi} THEN 'test' "
@@ -151,12 +151,10 @@ def split_sql(id_expr: str, val_fraction: float, test_fraction: float) -> str:
     )
 
 
-def mixture_sample(
-    df: DataFrame,
-    weights: dict[str, float],
-) -> DataFrame:
+def mixture_sample(df: DataFrame) -> DataFrame:
     """Domain-mixture construction (DoReMi-style reweighting): emit each
-    row round(weight) times deterministically — weight 2.5 yields 2 full
+    row round(weight) times deterministically, weights per ``source``
+    from MIXTURE_WEIGHTS — weight 2.5 yields 2 full
     copies plus a third kept for half the ids; weight 0.25 keeps a
     quarter of the domain; weight 0 drops it.
 
@@ -168,19 +166,13 @@ def mixture_sample(
     thresholds at plan build — no float comparison at runtime (float to
     int casts round in some engines and truncate in others).
     """
-    if any(not math.isfinite(w) for w in weights.values()):
-        # floor(nan/inf) raises deep inside _mixture_levels otherwise —
-        # surface the configuration error at the API boundary
-        raise ValueError("mixture weights must be finite")
-    if any(w < 0 for w in weights.values()):
-        raise ValueError("mixture weights must be >= 0")
     _check_reserved(df, {"_n_full", "_thresh", "copy_idx"}, "mixture_sample")
 
     levels = _mixture_levels
 
     n_full_col = F.lit(levels(MIXTURE_DEFAULT_WEIGHT)[0])
     thresh_col = F.lit(levels(MIXTURE_DEFAULT_WEIGHT)[1])
-    for dom, w in sorted(weights.items()):
+    for dom, w in sorted(MIXTURE_WEIGHTS.items()):
         nf, th = levels(w)
         cond = F.col("source") == dom
         n_full_col = F.when(cond, F.lit(nf)).otherwise(n_full_col)
@@ -218,9 +210,7 @@ def mixture_sample(
     )
 
 
-def mixture_sql(
-    weights: dict[str, float],
-) -> str:
+def mixture_sql() -> str:
     """DuckDB fragment reproducing mixture_sample over `documents`:
     returns (CTE body, WHERE predicate) as a single SELECT."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
@@ -228,22 +218,14 @@ def mixture_sql(
     levels = _mixture_levels
 
     dnf, dth = levels(MIXTURE_DEFAULT_WEIGHT)
-    if weights:
-        nf_case = "CASE source "
-        th_case = "CASE source "
-        for dom, w in sorted(weights.items()):
-            nf, th = levels(w)
-            # '' doubling: a domain name containing a quote must stay a
-            # literal, not become a syntax error (or injected SQL)
-            lit = dom.replace("'", "''")
-            nf_case += f"WHEN '{lit}' THEN {nf} "
-            th_case += f"WHEN '{lit}' THEN {th} "
-        nf_case += f"ELSE {dnf} END"
-        th_case += f"ELSE {dth} END"
-    else:
-        # zero-branch CASE is invalid SQL; an empty weights dict means
-        # every domain takes the default (mirrors mixture_sample)
-        nf_case, th_case = str(dnf), str(dth)
+    nf_case = "CASE source "
+    th_case = "CASE source "
+    for dom, w in sorted(MIXTURE_WEIGHTS.items()):
+        nf, th = levels(w)
+        nf_case += f"WHEN '{dom}' THEN {nf} "
+        th_case += f"WHEN '{dom}' THEN {th} "
+    nf_case += f"ELSE {dnf} END"
+    th_case += f"ELSE {dth} END"
     h = md5_i64_sql(
         "(CAST(doc_id AS VARCHAR) || ':' || CAST(copy_idx AS VARCHAR))"
     )
@@ -263,16 +245,11 @@ def mixture_sql(
     """
 
 
-def weighted_sample(
-    df: DataFrame,
-    id_col: str,
-    weight_col: str,
-    n_per_group: int,
-    group_col: str | None = None,
-) -> DataFrame:
+def weighted_sample(df: DataFrame) -> DataFrame:
     """Weighted sample without replacement, deterministic (A-ES scheme,
-    Efraimidis & Spirakis 2006): each row gets key = ln(u) / w with u a
-    hash-derived uniform in (0, 1], and the top-n keys win — selection
+    Efraimidis & Spirakis 2006): each row gets key = ln(u) / w with w its
+    ``n_chars`` and u a hash-derived uniform in (0, 1], and the
+    WEIGHTED_N top keys per ``source`` win — selection
     probability proportional to weight, no RNG, rerun- and
     partitioning-stable.
 
@@ -280,10 +257,7 @@ def weighted_sample(
     differ in the last ulp across engines; the round + id tiebreak make
     the pick order total and oracle-reproducible). Non-positive weights
     are excluded — a zero-weight row must never be sampled and ln(u)/0
-    is undefined. One shuffle, partitioned by group; when ``group_col``
-    is None the global top-n goes through orderBy().limit(n)
-    (TakeOrderedAndProject — per-partition top-n, n-way driver merge),
-    never a single-reducer window.
+    is undefined. One shuffle, partitioned by source.
 
     u must be strictly INSIDE (0, 1): at u = 1.0 the key is ln(1)/w = 0
     — the global maximum REGARDLESS of weight — so the ~1/DENOM of rows
@@ -299,51 +273,35 @@ def weighted_sample(
     legitimate top of the all-negative key range (P proportional to
     an infinite weight SHOULD always win).
     """
-    if n_per_group < 1:
-        raise ValueError(f"n_per_group must be >= 1: {n_per_group}")
     _check_reserved(df, {"_wkey", "_rk"}, "weighted_sample")
-    u = (_bucket(id_col) + 1).cast("double") / F.lit(float(DENOM + 1))
-    wcol = F.col(weight_col).cast("double")
+    u = (_bucket() + 1).cast("double") / F.lit(float(DENOM + 1))
+    wcol = F.col("n_chars").cast("double")
     key = F.round(F.log(u) / wcol, WEIGHTED_KEY_DP)
     cand = df.filter((wcol > 0) & ~F.isnan(wcol)).withColumn("_wkey", key)
-    if group_col is None:
-        # an un-partitioned row_number window would funnel every
-        # candidate through ONE task (the kmv_distinct pitfall);
-        # orderBy().limit(n) plans as TakeOrderedAndProject —
-        # per-partition top-n then an n-way driver merge
-        return (
-            cand.orderBy(F.desc("_wkey"), F.col(id_col))
-            .limit(n_per_group)
-            .drop("_wkey")
-        )
-    w = Window.partitionBy(group_col).orderBy(F.desc("_wkey"), F.col(id_col))
+    w = Window.partitionBy("source").orderBy(F.desc("_wkey"), F.col("doc_id"))
     return (
         cand.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_per_group)
+        .filter(F.col("_rk") <= WEIGHTED_N)
         .drop("_wkey", "_rk")
     )
 
 
-def weighted_key_sql(id_expr: str, weight_expr: str) -> str:
+def weighted_key_sql() -> str:
     """DuckDB expression matching weighted_sample's ranking key
     (including its strictly-interior u: denominator DENOM + 1)."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
 
-    h = md5_i64_sql(f"CAST({id_expr} AS VARCHAR)")
+    h = md5_i64_sql("CAST(doc_id AS VARCHAR)")
     return (
         f"round(ln((({h} % {DENOM}) + 1)::DOUBLE / {DENOM + 1}) / "
-        f"({weight_expr})::DOUBLE, {WEIGHTED_KEY_DP})"
+        f"(n_chars)::DOUBLE, {WEIGHTED_KEY_DP})"
     )
 
 
-def token_budget_sample(
-    df: DataFrame,
-    budget_tokens: int,
-    n_tokens_col: str,
-) -> DataFrame:
-    """Deterministic per-group token quota: walk each group's documents
-    in hash order and keep the prefix whose cumulative token count stays
-    within ``budget_tokens`` — the 'take N tokens per domain' primitive
+def token_budget_sample(df: DataFrame) -> DataFrame:
+    """Deterministic per-source token quota: walk each source's documents
+    in hash order and keep the prefix whose cumulative ``n_tokens`` stays
+    within TOKEN_BUDGET — the 'take N tokens per domain' primitive
     of training-mix construction, with no RNG (rerun- and cluster-size-
     stable order, same property as the other samplers here).
 
@@ -356,8 +314,6 @@ def token_budget_sample(
     'how many tokens did each domain actually get'), so it is exposed
     under the documented ``cum_tokens`` name — unlike the sibling
     samplers' `_wkey`/`_rk`, which are internal ranks and are dropped."""
-    if budget_tokens <= 0:
-        raise ValueError("budget_tokens must be positive")
     _check_reserved(df, {"cum_tokens"}, "token_budget_sample")
     w = (
         Window.partitionBy("source")
@@ -365,8 +321,8 @@ def token_budget_sample(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        df.withColumn("cum_tokens", F.sum(n_tokens_col).over(w))
-        .filter(F.col("cum_tokens") <= budget_tokens)
+        df.withColumn("cum_tokens", F.sum("n_tokens").over(w))
+        .filter(F.col("cum_tokens") <= TOKEN_BUDGET)
     )
 
 
@@ -442,7 +398,7 @@ def temperature_mixture_sample(
             F.col("source").eqNullSafe(F.col("_dom")),
         )
         .drop("_dom")
-        .filter(_bucket("doc_id") < F.col("_thresh"))
+        .filter(_bucket() < F.col("_thresh"))
         .drop("_thresh")
     )
 
@@ -474,11 +430,8 @@ def temperature_mixture_sql(
     """
 
 
-def kfold_assign(
-    df: DataFrame,
-    n_folds: int = 5,
-) -> DataFrame:
-    """Stratified k-fold cross-validation assignment: within each
+def kfold_assign(df: DataFrame) -> DataFrame:
+    """Stratified N_FOLDS-fold cross-validation assignment: within each
     stratum, rows are ranked by id hash (deterministic shuffle) and
     dealt round-robin into folds — every stratum contributes to every
     fold within +-1 row (exact balance, unlike independent hashing's
@@ -486,13 +439,11 @@ def kfold_assign(
     row depends on the stratum's membership (by construction — balance
     requires it), so use split_assign when growth-stability matters
     more than balance. The stratum is ``source``, the id ``doc_id``."""
-    if n_folds < 2:
-        raise ValueError("n_folds must be >= 2")
     _check_reserved(df, {"fold"}, "kfold_assign")
     w = Window.partitionBy("source").orderBy(
         md5_i64(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return df.withColumn(
         "fold",
-        ((F.row_number().over(w) - 1) % n_folds).cast("int"),
+        ((F.row_number().over(w) - 1) % N_FOLDS).cast("int"),
     )

@@ -39,17 +39,11 @@ def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
         )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_ms: int = DEFAULT_GAP_MS,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Append `session_idx` (1-based per key) to each event.
+def sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
+    """Append `session_idx` (1-based per `user_id`) to each event.
 
-    A session starts at the first event of a key and whenever
-    ts - prev_ts > gap_ms. Ordering ties break on `order_col` so the
+    A session starts at the first event of a user and whenever
+    ts - prev_ts > gap_ms. Ordering ties break on `event_id` so the
     assignment is deterministic.
 
     NULL-timestamp events are EXCLUDED (dropped from the output): a
@@ -67,14 +61,14 @@ def sessionize(
         # stays legal: "split on any strictly positive gap".
         raise ValueError(f"gap_ms must be >= 0 (got {gap_ms})")
     _check_reserved(events, {"session_idx"}, "sessionize")
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
-    ts_ms = F.unix_millis(F.col(ts_col))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ts_ms = F.unix_millis(F.col("ts"))
     prev = F.lag(ts_ms).over(w)
     new_flag = F.when(
         prev.isNull() | ((ts_ms - prev) > F.lit(gap_ms)), F.lit(1)
     ).otherwise(F.lit(0))
     running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return events.filter(F.col(ts_col).isNotNull()).withColumn(
+    return events.filter(F.col("ts").isNotNull()).withColumn(
         "session_idx", F.sum(new_flag).over(running).cast("int")
     )
 
@@ -87,7 +81,7 @@ def session_stats(
     The groupBy reuses the sessionize shuffle's (key, session) grouping;
     AQE coalesces the tiny post-window aggregation. `total_value` is
     rounded after the sum (float add order is engine-dependent)."""
-    sess = sessionize(events, DEFAULT_GAP_MS, "user_id", "ts", "event_id")
+    sess = sessionize(events, DEFAULT_GAP_MS)
     ts_ms = F.unix_millis(F.col("ts"))
     return sess.groupBy("user_id", "session_idx").agg(
         F.min(ts_ms).alias("session_start_ms"),
@@ -97,12 +91,13 @@ def session_stats(
     )
 
 
-def funnel_counts(
-    events: DataFrame,
-    steps: tuple[str, ...],
-) -> DataFrame:
-    """Ordered-funnel conversion: users whose FIRST qualifying occurrence
-    of each step strictly follows the previous step's.
+FUNNEL_STEPS = ("view", "click", "purchase")
+
+
+def funnel_counts(events: DataFrame) -> DataFrame:
+    """Ordered-funnel conversion over FUNNEL_STEPS: users whose FIRST
+    qualifying occurrence of each step strictly follows the previous
+    step's.
 
     t_1 = min ts of step 1; t_i = min ts of step i with ts > t_{i-1}
     (the first step-i event after the funnel got there — NOT
@@ -112,16 +107,8 @@ def funnel_counts(
 
     Plan shape: partitionBy-only windows need a hash exchange but NO
     sort, and all i levels share the one exchange on the key; the final
-    count is a scalar agg. Per-key state is i timestamps — skew-proof.
-
-    ``steps`` must be non-empty and name each step once: a repeated
-    name would alias two output columns identically (the later count
-    unreadable through row[name]); model a revisit funnel with distinct
-    labels mapped to the same event type upstream."""
-    if not steps:
-        raise ValueError("steps must be non-empty")
-    if len(set(steps)) != len(steps):
-        raise ValueError(f"duplicate step names in {steps!r}")
+    count is a scalar agg. Per-key state is i timestamps — skew-proof."""
+    steps = FUNNEL_STEPS
     _check_reserved(
         events,
         {"_ts"} | {f"_t{i}" for i in range(len(steps))},

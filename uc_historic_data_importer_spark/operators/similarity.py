@@ -106,11 +106,7 @@ def cosine_topk(
 
 def _ivf_topk_arrow(
     corpus: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
     cell_col: str,
-    round_dp: int,
 ) -> DataFrame:
     """Per-cell numpy top-k — ivf_topk's past-oracle-scale branch (the
     cosine_neardup_pairs matmul seam applied to search): one
@@ -132,13 +128,15 @@ def _ivf_topk_arrow(
     import numpy as np
     import pandas as pd
 
-    kk, dp = int(k), int(round_dp)
+    kk, dp = 1, 6
     sel = (
         _ensure_parallel(corpus)
         .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            F.col(cell_col).alias("cell"),
+            F.col("vec_id").alias("vec_id"),
+            F.col("embedding").cast("array<double>").alias("_v"),
+            F.col(cell_col).alias(
+            "cell"
+        ),
         )
         # the exact path's inner equi-join on cell drops NULL-cell rows;
         # groupBy would form a NULL group and emit pairs among them
@@ -238,12 +236,11 @@ def _ivf_topk_arrow(
 
 def ivf_topk(
     corpus: DataFrame,
-    k: int = 1,
     cell_col: str = "label",
     exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """IVF search: nearest neighbors within the same quantizer cell.
+    """IVF search: each vector's nearest neighbor within its quantizer cell.
 
     The equi-join on cell id replaces the cross join — each cell's
     candidate set is independent, so the shuffle is on the (uniform)
@@ -265,7 +262,7 @@ def ivf_topk(
         else int(n_rows)
     )
     if n > exact_max_rows:
-        return _ivf_topk_arrow(corpus, k, "vec_id", "embedding", cell_col, 6)
+        return _ivf_topk_arrow(corpus, cell_col)
     corpus = _ensure_parallel(corpus)
     a = corpus.select(
         F.col("vec_id").alias("query_id"),
@@ -294,7 +291,7 @@ def ivf_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 1)
 
 
 # hyperplanes of the sign-LSH bucket; the embedding_lsh_buckets oracle
@@ -338,12 +335,10 @@ def hyperplane_lsh_buckets(corpus: DataFrame) -> DataFrame:
     return corpus.select(
         F.col("vec_id").alias("vec_id"),
         F.col("embedding").cast("array<double>").alias("_E"),
-    ).select("vec_id", _lsh_bucket_expr("_E", planes).alias("bucket"))
+    ).select("vec_id", _lsh_bucket_expr(planes).alias("bucket"))
 
 
-def _cell_expr(
-    centroids: list[list[float]], vec_col: str, round_dp: int
-) -> Column:
+def _cell_expr(centroids: list[list[float]]) -> Column:
     """Nearest-centroid argmax as a pure column expression (no join).
 
     The comparison key is dot(v, c) / |c| — NOT the full cosine: |v| is
@@ -398,7 +393,7 @@ def _cell_expr(
     stage to interpreted mode (observed: ann_ivf_topk 1 s -> 12 s at
     sf0.01 with the wrapper). The seed form adds k two-node whens and
     keeps the flat Add chains splittable."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     dim = len(centroids[0])
     size_guard = F.when(F.size(v) == dim, F.lit(0.0))
     scores: list[Column] = []
@@ -411,7 +406,7 @@ def _cell_expr(
             # ArrayIndexOutOfBounds that kills the stage (same contract
             # as pq._dot_lit)
             dot = dot + F.try_element_at(v, F.lit(i + 1)) * F.lit(float(x))
-        scores.append(F.round(dot / F.lit(cn), round_dp))
+        scores.append(F.round(dot / F.lit(cn), 6))
     arr = F.array(*scores)
     return (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
 
@@ -462,9 +457,7 @@ def _unit_rows(V):
     return V / norms[:, None]
 
 
-def _cell_udf_column(
-    centroids: list[list[float]], vec_col: str, round_dp: int
-) -> Column:
+def _cell_udf_column(centroids: list[list[float]]) -> Column:
     """Nearest-centroid assignment as an Arrow-batched numpy matmul —
     the LARGE-k scale path (FAISS's shape: scores = V @ C.T / |c|,
     argmax per row). One broadcast k x dim float64 matrix rides the
@@ -491,17 +484,15 @@ def _cell_udf_column(
         out = np.full(len(vecs), -1, dtype=np.int32)
         ok, V = _stack_valid(list(vecs), dim)
         if ok:
-            keys = np.round((V @ C.T) / norms, round_dp)
+            keys = np.round((V @ C.T) / norms, 6)
             out[ok] = keys.argmax(axis=1)  # first max — same tie rule
         return pd.Series(out)
 
-    return assign(F.col(vec_col).cast("array<double>"))
+    return assign(F.col("embedding").cast("array<double>"))
 
 
 def _cell_column(
     centroids: list[list[float]],
-    vec_col: str,
-    round_dp: int,
     n_rows: int | None = None,
     exact_max_rows: int = 1000,
 ) -> Column:
@@ -525,18 +516,13 @@ def _cell_column(
     terms = len(centroids) * len(centroids[0])
     past_oracle = n_rows is not None and n_rows > exact_max_rows
     if terms <= _CELL_EXPR_MAX_TERMS and not past_oracle:
-        return F.coalesce(_cell_expr(centroids, vec_col, round_dp), F.lit(-1))
-    return F.coalesce(
-        _cell_udf_column(centroids, vec_col, round_dp), F.lit(-1)
-    )
+        return F.coalesce(_cell_expr(centroids), F.lit(-1))
+    return F.coalesce(_cell_udf_column(centroids), F.lit(-1))
 
 
 def assign_cells(
     corpus: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     keep_cols: tuple[str, ...] = (),
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -567,10 +553,8 @@ def assign_cells(
     by the caller) routes past-oracle-scale corpora to the Arrow
     matmul even under the codegen term budget — see _cell_column."""
     return corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _cell_column(centroids, vec_col, round_dp, n_rows=n_rows).alias(
-            "cell"
-        ),
+        F.col("vec_id").alias("vec_id"),
+        _cell_column(centroids, n_rows=n_rows).alias("cell"),
         *[F.col(c) for c in keep_cols],
     )
 
@@ -599,8 +583,6 @@ _PROBE_FREE_K = 64
 def _fit_partials_np(
     corpus: DataFrame,
     centroids: list[list[float]],
-    vec_col: str,
-    round_dp: int,
 ) -> DataFrame:
     """One fit iteration's (cell, dim, sx, n) partials via an
     Arrow-batched mapInPandas matmul — the past-oracle-scale twin of
@@ -621,13 +603,13 @@ def _fit_partials_np(
     k_n, dim = C.shape
     cn = np.sqrt((C * C).sum(axis=1))
     cn[cn == 0.0] = 1.0
-    m = 10.0**round_dp
+    m = 10.0**6
 
     def fn(batches):
         import pandas as pd
 
         for pdf in batches:
-            ok, V = _stack_valid(pdf[vec_col].tolist(), dim=dim)
+            ok, V = _stack_valid(pdf["embedding"].tolist(), dim=dim)
             if V is None:
                 continue
             scores = (V @ C.T) / cn
@@ -657,7 +639,7 @@ def _fit_partials_np(
                 }
             )
 
-    return corpus.select(vec_col).mapInPandas(
+    return corpus.select("embedding").mapInPandas(
         fn, schema="cell int, dim int, sx double, n long"
     )
 
@@ -760,7 +742,7 @@ def kmeans_fit(
     for _ in range(iters):
         if use_np:
             sums = (
-                _fit_partials_np(corpus, centroids, "embedding", 6)
+                _fit_partials_np(corpus, centroids)
                 .groupBy("cell", "dim")
                 .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
                 .collect()
@@ -768,7 +750,7 @@ def kmeans_fit(
         else:
             sums = (
                 corpus.select(
-                    _cell_column(centroids, "embedding", 6).alias("cell"),
+                    _cell_column(centroids).alias("cell"),
                     F.posexplode(F.col("embedding")).alias("dim", "x"),
                 )
                 .groupBy("cell", "dim")
@@ -779,7 +761,7 @@ def kmeans_fit(
         acc: dict[int, list[float]] = {}
         for r in sums:
             acc.setdefault(int(r["cell"]), [0.0] * dim)[int(r["dim"])] = (
-                _round_away(float(r["sx"]) / int(r["n"]), 12)
+                _round_away(float(r["sx"]) / int(r["n"]))
             )
         centroids = [
             _unit(acc[j]) if j in acc and any(acc[j]) else centroids[j]
@@ -788,9 +770,7 @@ def kmeans_fit(
     return centroids
 
 
-def _fine_members_arrow(
-    assigned: DataFrame, cents: DataFrame, vec_col: str, round_dp: int
-) -> DataFrame:
+def _fine_members_arrow(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     """assign_fine's winner selection as a per-cell cogrouped numpy
     matmul — ivf2_fit's past-oracle-scale branch (r14 opt round; the
     cosine_neardup_pairs/_ivf_topk_arrow seam applied to the fine
@@ -816,9 +796,9 @@ def _fine_members_arrow(
     import numpy as np
     import pandas as pd
 
-    dp = int(round_dp)
+    dp = 6
     mem = assigned.select(
-        "vec_id", "cell", F.col(vec_col).cast("array<double>").alias("_v")
+        "vec_id", "cell", F.col("embedding").cast("array<double>").alias("_v")
     )
     cen = cents.select(
         "cell", "fine", F.col("centroid").cast("array<double>").alias("_c")
@@ -993,7 +973,7 @@ def ivf2_fit(
             # winners from the matmul seam, vectors rejoined JVM-side
             # (never routed through Arrow — see _fine_members_arrow)
             members = _fine_members_arrow(
-                assigned, fine, "embedding", 6
+                assigned, fine
             ).join(assigned.select("vec_id", "embedding"), "vec_id")
         else:
             members = assign_fine(fine)
@@ -1071,7 +1051,7 @@ def ivf2_assign(
     # incl. the empty-cell sentinel is pinned by
     # TestIvf2::test_assign_arrow_seam_parity.
     if n_rows is not None and int(n_rows) > 1000:
-        winners = _fine_members_arrow(assigned, fine, "embedding", 6)
+        winners = _fine_members_arrow(assigned, fine)
         return (
             assigned.join(winners.select("vec_id", "fine"), "vec_id", "left")
             .crossJoin(k2n)
@@ -1125,11 +1105,11 @@ def ivf2_assign(
     )
 
 
-def _round_away(x: float, dp: int) -> float:
+def _round_away(x: float) -> float:
     """round-half-away-from-zero — matches Spark/DuckDB `round()`;
     Python's builtin rounds half-even and would diverge from the
     oracle on exact-half values."""
-    m = 10.0**dp
+    m = 10.0**12
     return math.copysign(math.floor(abs(x) * m + 0.5), x) / m
 
 
@@ -1198,10 +1178,9 @@ def quantize_int8(
 def semantic_decontamination(
     train: DataFrame,
     test: DataFrame,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Embedding-space decontamination: flag every train vector whose
-    cosine similarity to ANY held-out/eval vector reaches `threshold` —
+    cosine similarity to ANY held-out/eval vector reaches 0.5 —
     the semantic complement of n-gram decontamination (paraphrased or
     re-tokenized benchmark leakage that exact n-grams miss).
 
@@ -1256,9 +1235,7 @@ def semantic_decontamination(
         .select(
             "vec_id",
             "max_test_sim",
-            (F.col("max_test_sim") >= threshold).cast("int").alias(
-                "contaminated"
-            ),
+            (F.col("max_test_sim") >= 0.5).cast("int").alias("contaminated"),
         )
     )
 
@@ -1280,7 +1257,7 @@ def lsh_plane_coeffs(
     return [[coeff(p, i) for i in range(dim)] for p in range(n_planes)]
 
 
-def _plane_dot_sql(vec_ref: str, plane: list[float]) -> str:
+def _plane_dot_sql(plane: list[float]) -> str:
     """dot(vector, literal plane) as SQL text over a pre-cast
     ARRAY<DOUBLE> reference — flat try_element_at multiply-adds with
     the zip_with length contract preserved: the former HOF dot
@@ -1299,20 +1276,20 @@ def _plane_dot_sql(vec_ref: str, plane: list[float]) -> str:
     codegen compiles where the HOF lambda re-entered the interpreter
     per element."""
     dim = len(plane)
-    seed = f"CASE WHEN size({vec_ref}) <= {dim} THEN 0.0D END"
+    seed = f"CASE WHEN size(_E) <= {dim} THEN 0.0D END"
     terms = "".join(
-        f" + (try_element_at({vec_ref}, {i + 1}) * {repr(float(c))}D)"
+        f" + (try_element_at(_E, {i + 1}) * {repr(float(c))}D)"
         for i, c in enumerate(plane)
     )
     return f"(({seed}){terms})"
 
 
-def _lsh_bucket_expr(vec_ref: str, planes: list[list[float]]) -> Column:
+def _lsh_bucket_expr(planes: list[list[float]]) -> Column:
     """Sign-LSH bucket id from literal plane coefficients: bit p set iff
     dot(v, plane_p) > 0. ``vec_ref`` must name a pre-cast ARRAY<DOUBLE>
     column (see _plane_dot_sql for the SQL-text rationale)."""
     bits = "".join(
-        f" + (CASE WHEN {_plane_dot_sql(vec_ref, plane)} > 0"
+        f" + (CASE WHEN {_plane_dot_sql(plane)} > 0"
         f" THEN CAST({1 << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         for p, plane in enumerate(planes)
     )
@@ -1362,7 +1339,7 @@ def semantic_decontamination_lsh(
     tables = [lsh_plane_coeffs(n_planes, dim, l) for l in range(n_tables)]
     # bucket expressions reference a short pre-cast alias so the
     # generated SQL text stays small (parse cost scales with length)
-    buckets = F.array(*[_lsh_bucket_expr("_E", pl) for pl in tables])
+    buckets = F.array(*[_lsh_bucket_expr(pl) for pl in tables])
 
     def side(df, prefix):
         pre = df.select(
@@ -1429,7 +1406,6 @@ def semantic_decontamination_lsh(
 def semdedup(
     df: DataFrame,
     centroids: list[list[float]],
-    threshold: float = 0.4,
     exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -1439,7 +1415,7 @@ def semdedup(
     (map-only against literal centroids), pairwise similarity runs ONLY
     inside a cell, and of any near-duplicate pair the LOWEST id is kept
     — so a vector is dropped iff some same-cell vector with a smaller
-    id is >= threshold similar (deterministic keep-first rule; the
+    id is >= 0.4 cosine-similar (deterministic keep-first rule; the
     paper keeps one representative per duplicate group, rule choice is
     an implementation detail).
 
@@ -1477,7 +1453,7 @@ def semdedup(
         import numpy as np
         import pandas as pd
 
-        thr = float(threshold)
+        thr = 0.4
         dp = 6
         vcc = "embedding"  # assign_cells renames the id column to vec_id
 
@@ -1507,7 +1483,7 @@ def semdedup(
                 }
             )
 
-        assigned = assign_cells(df, centroids, "vec_id", "embedding", 6,
+        assigned = assign_cells(df, centroids,
                                 keep_cols=("embedding",))
         return assigned.groupBy("cell").applyInPandas(
             per_cell, schema="vec_id long, cell int, kept int"
@@ -1524,9 +1500,7 @@ def semdedup(
         F.col("vec_id").alias("vec_id"),
         F.col("embedding").alias("vec"),
         safe_norm_col(F.col("embedding")).alias("nrm"),
-        F.explode(
-            F.array(_cell_column(centroids, "embedding", 6))
-        ).alias("cell"),
+        F.explode(F.array(_cell_column(centroids))).alias("cell"),
     )
     cells = v.select("vec_id", "cell")
     # the -1 sentinel cell holds malformed vectors — they are never
@@ -1557,7 +1531,7 @@ def semdedup(
             (F.col("cell") == F.col("b_cell"))
             & (F.col("a_id") < F.col("b_id")),
         )
-        .filter(sim >= threshold)
+        .filter(sim >= 0.4)
         .select(F.col("b_id").alias("vec_id"))
         .distinct()
     )
@@ -1575,12 +1549,11 @@ def semdedup(
 
 def cosine_neardup_pairs(
     df: DataFrame,
-    threshold: float = 0.4,
     exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Exact within-cell cosine near-duplicate pairs
-    (vec_a < vec_b, cos >= threshold) — the audit-path baseline whose
+    (vec_a < vec_b, cos >= 0.4) — the audit-path baseline whose
     scale companions are semdedup / LSH buckets / MinHash.
 
     Size-dispatched like _cell_column:
@@ -1636,7 +1609,7 @@ def cosine_neardup_pairs(
             a.join(b, "_cell")
             .filter(F.col("vec_a") < F.col("vec_b"))
             .select("vec_a", "vec_b", F.explode(F.array(cos)).alias("_cos"))
-            .filter(F.col("_cos") >= threshold)
+            .filter(F.col("_cos") >= 0.4)
             .select(
                 "vec_a", "vec_b", F.round(F.col("_cos"), 6).alias("cos_sim")
             )
@@ -1645,7 +1618,7 @@ def cosine_neardup_pairs(
     import numpy as np
     import pandas as pd
 
-    thr = float(threshold)
+    thr = 0.4
     dp = 6
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:

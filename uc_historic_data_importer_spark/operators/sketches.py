@@ -95,7 +95,6 @@ def _rho_sql(w_sql: str, rem_bits: int) -> str:
 
 def hll_registers(
     df: DataFrame,
-    value_col: str,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Mergeable HLL state: one row per (group, bucket) with the max rho.
@@ -114,9 +113,8 @@ def hll_registers(
     # md5_i64 / shiftright / & emitted as SQL text alongside the rho
     # chain — parsed ASTs node-for-node the old Column-built trees
     # (plan-identity pinned by test_hll_registers_sql_matches_column)
-    vq = "`" + value_col.replace("`", "``") + "`"
     h_sql = (
-        f"CAST(conv(substring(md5(CAST({vq} AS STRING)), 1, 15), 16, 10) "
+        "CAST(conv(substring(md5(CAST(`user_id` AS STRING)), 1, 15), 16, 10) "
         "AS BIGINT)"
     )
     hashed = df.select(
@@ -162,25 +160,15 @@ def hll_estimate(
     )
 
 
-def hll_distinct(
-    df: DataFrame,
-    value_col: str,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-group HLL cardinality estimate (column `hll_distinct`):
-    register build + estimator in one plan."""
-    return hll_estimate(
-        hll_registers(df, value_col, group_cols), group_cols
-    )
+def hll_distinct(df: DataFrame) -> DataFrame:
+    """Per-event_type HLL estimate of distinct user_id (column
+    `hll_distinct`): register build + estimator in one plan."""
+    return hll_estimate(hll_registers(df, ("event_type",)), ("event_type",))
 
 
-def hll_sql(
-    value_expr: str,
-    table: str,
-    group_cols: tuple[str, ...] = (),
-) -> str:
-    """DuckDB SQL reproducing hll_distinct exactly (shared constants,
-    same integer slicing, same double arithmetic)."""
+def hll_sql() -> str:
+    """DuckDB SQL reproducing hll_distinct over `events` exactly (shared
+    constants, same integer slicing, same double arithmetic)."""
     m = 1 << HLL_P
     rem_bits = HASH_BITS - HLL_P
     mask = (1 << rem_bits) - 1
@@ -188,14 +176,13 @@ def hll_sql(
         f"WHEN w >= {1 << (rem_bits - r)} THEN {r}"
         for r in range(1, rem_bits + 1)
     )
-    gsel = "".join(f"{c}, " for c in group_cols)
-    gby_regs = ", ".join(list(group_cols) + ["bucket"])
-    gby = ", ".join(group_cols)
-    gby_clause = f"GROUP BY {gby}" if group_cols else ""
+    gsel = "event_type, "
+    gby_regs = "event_type, bucket"
+    gby_clause = "GROUP BY event_type"
     return f"""
     WITH hashed AS (
-      SELECT {gsel}{md5_i64_sql(value_expr)} AS full_h FROM {table}
-      WHERE ({value_expr}) IS NOT NULL
+      SELECT {gsel}{md5_i64_sql('CAST(user_id AS VARCHAR)')} AS full_h FROM events
+      WHERE (CAST(user_id AS VARCHAR)) IS NOT NULL
     ),
     sliced AS (
       SELECT {gsel}(full_h >> {rem_bits}) AS bucket,
@@ -243,10 +230,9 @@ def _cms_bucket_structs(h: Column) -> list[Column]:
     ]
 
 
-def cms_counters(
-    df: DataFrame, value_col: str
-) -> DataFrame:
-    """Count-min counter table: (row_idx, bucket, cnt), d*w cells total.
+def cms_counters(df: DataFrame) -> DataFrame:
+    """Count-min counter table of user_id: (row_idx, bucket, cnt), d*w
+    cells total.
 
     One scan: each value explodes into its d (row, bucket) cells — a
     single shuffle of (row_idx, bucket) partial counts, state d*w
@@ -260,7 +246,7 @@ def cms_counters(
     could never shake the collision out. Disjoint md5 windows make
     all-row collisions ~w^-d."""
     hashed = df.select(
-        md5_i64(F.col(value_col).cast("string")).alias("_h")
+        md5_i64(F.col("user_id").cast("string")).alias("_h")
     ).filter(F.col("_h").isNotNull())  # NULLs don't sketch (HLL rule)
     entries = F.array(*_cms_bucket_structs(F.col("_h")))
     return (
@@ -271,12 +257,9 @@ def cms_counters(
     )
 
 
-def cms_estimate(
-    counters: DataFrame,
-    candidates: DataFrame,
-    value_col: str,
-) -> DataFrame:
-    """Point-query the sketch: min over the d counters a value hashes to.
+def cms_estimate(counters: DataFrame, candidates: DataFrame) -> DataFrame:
+    """Point-query the sketch: min over the d counters each candidate
+    ``user_val`` hashes to.
 
     `candidates` is small by construction (the values you suspect are
     heavy), so the join broadcasts it against the d*w counter table.
@@ -284,9 +267,7 @@ def cms_estimate(
     _check_reserved(candidates.columns,
                     {"_h", "e", "row_idx", "bucket", "cnt", "cms_n"},
                     "cms_estimate")
-    hashed = candidates.withColumn(
-        "_h", md5_i64(F.col(value_col).cast("string"))
-    )
+    hashed = candidates.withColumn("_h", md5_i64(F.col("user_val").cast("string")))
     entries = F.array(*_cms_bucket_structs(F.col("_h")))
     keep = [c for c in candidates.columns]
     cells = hashed.select(*keep, F.explode(entries).alias("e")).select(
@@ -308,13 +289,12 @@ def cms_estimate(
     )
 
 
-def cms_sql(
-    value_expr: str, table: str, top_k: int = 10
-) -> str:
-    """DuckDB SQL reproducing the heavy-hitter query: exact top-k values
-    with their CMS estimates (same hash windows, same counters)."""
+def cms_sql() -> str:
+    """DuckDB SQL reproducing the heavy-hitter query over `events`: the
+    exact top-10 user_id values with their CMS estimates (same hash
+    windows, same counters)."""
     bits = _CMS_BITS
-    h = md5_i64_sql(f"CAST({value_expr} AS VARCHAR)")
+    h = md5_i64_sql("CAST(user_id AS VARCHAR)")
     # LEFT JOIN + coalesce below mirrors cms_estimate's documented rule:
     # a candidate whose cells are absent from every counter (a NULL
     # heavy hitter — NULL never sketches, its hash is NULL) estimates
@@ -331,16 +311,16 @@ def cms_sql(
     )
     return f"""
     WITH hashed AS (
-      SELECT {h} AS h FROM {table} WHERE ({value_expr}) IS NOT NULL
+      SELECT {h} AS h FROM events WHERE (user_id) IS NOT NULL
     ),
     counters AS (
       SELECT row_idx, bucket, count(*) AS cnt
       FROM ({counter_rows}) GROUP BY row_idx, bucket
     ),
     exact AS (
-      SELECT {value_expr} AS user_val, count(*) AS exact_n
-      FROM {table} GROUP BY 1
-      ORDER BY exact_n DESC, user_val LIMIT {top_k}
+      SELECT user_id AS user_val, count(*) AS exact_n
+      FROM events GROUP BY 1
+      ORDER BY exact_n DESC, user_val LIMIT 10
     ),
     cand AS (SELECT user_val, exact_n,
                     {md5_i64_sql("CAST(user_val AS VARCHAR)")} AS h
@@ -487,18 +467,15 @@ def hist_quantiles(
 
 def hist_quantiles_sql(
     value_expr: str,
-    table: str,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    group_cols: tuple[str, ...] = (),
 ) -> str:
     """DuckDB SQL reproducing hist_counts + hist_quantiles exactly."""
 
     _check_qs(qs, "hist_quantiles_sql")
-    gsel = "".join(f"{c}, " for c in group_cols)
-    gby_b = ", ".join(list(group_cols) + ["bucket"])
-    gby = ", ".join(group_cols)
-    gby_clause = f"GROUP BY {gby}" if group_cols else ""
-    part = f"PARTITION BY {gby}" if group_cols else ""
+    gsel = "l_returnflag, "
+    gby_b = "l_returnflag, bucket"
+    gby_clause = "GROUP BY l_returnflag"
+    part = "PARTITION BY l_returnflag"
     picks = ", ".join(
         f"min(CASE WHEN cum >= {q!r} * total THEN bucket END) AS b{i}"
         for i, q in enumerate(qs)
@@ -512,7 +489,7 @@ def hist_quantiles_sql(
     WITH counts AS (
       SELECT {gsel}floor(ln(1.0 + ({value_expr})::DOUBLE) * {HIST_SCALE}) AS bucket,
              count(*) AS cnt
-      FROM {table}
+      FROM lineitem
       WHERE ({value_expr}) IS NOT NULL AND (1.0 + ({value_expr})::DOUBLE) > 0
       GROUP BY {gby_b}
     ),
@@ -528,13 +505,9 @@ def hist_quantiles_sql(
     """
 
 
-def hll_pairwise_intersection(
-    df: DataFrame,
-    value_col: str,
-    set_col: str,
-) -> DataFrame:
-    """Sketch-algebra distinct intersection: for every pair of sets
-    (set_col values a < b), estimate |A ∩ B| by inclusion–exclusion
+def hll_pairwise_intersection(df: DataFrame) -> DataFrame:
+    """Sketch-algebra distinct-user_id intersection: for every pair of
+    event types (a < b), estimate |A ∩ B| by inclusion–exclusion
     over HLL registers — est(A) + est(B) − est(A ∪ B), where the union
     estimate comes from MAX-MERGING the two sets' register tables
     (registers are mergeable; intersections are not, so this is THE way
@@ -551,27 +524,18 @@ def hll_pairwise_intersection(
     days); the per-set estimate sides broadcast. At 100 TB the same
     register tables answer membership-overlap questions all quarter —
     persist them, re-merge at will."""
-    if set_col in {"_other", "type_a", "type_b", "est_a", "est_b",
-                   "est_union", "est_intersection"}:
-        raise ValueError(
-            f"set_col {set_col!r} collides with "
-            "hll_pairwise_intersection's output/internal names; rename "
-            "it first"
-        )
-    regs = hll_registers(df, value_col, (set_col,))
+    regs = hll_registers(df, ("event_type",))
     # Distinct set keys come from the REGISTER table (2^p rows per set),
-    # not from df — a df.select(set_col).distinct() here would be a
+    # not from df — a df.select("event_type").distinct() here would be a
     # second full scan of the raw input. Deriving from regs keeps the
     # one-scan claim true: this branch shares the regs aggregate's
     # exchange (ReusedExchange) with the pair/singles branches.
-    others = F.broadcast(
-        regs.select(F.col(set_col).alias("_other")).distinct()
-    )
+    others = F.broadcast(regs.select(F.col("event_type").alias("_other")).distinct())
     pair_regs = (
-        regs.join(others, F.col(set_col) != F.col("_other"))
+        regs.join(others, F.col("event_type") != F.col("_other"))
         .select(
-            F.least(F.col(set_col), F.col("_other")).alias("type_a"),
-            F.greatest(F.col(set_col), F.col("_other")).alias("type_b"),
+            F.least(F.col("event_type"), F.col("_other")).alias("type_a"),
+            F.greatest(F.col("event_type"), F.col("_other")).alias("type_b"),
             "bucket",
             "max_rho",
         )
@@ -581,16 +545,16 @@ def hll_pairwise_intersection(
     est_union = hll_estimate(
         pair_regs, ("type_a", "type_b")
     ).withColumnRenamed("hll_distinct", "est_union")
-    singles = hll_estimate(regs, (set_col,))
+    singles = hll_estimate(regs, ("event_type",))
     a = F.broadcast(
         singles.select(
-            F.col(set_col).alias("type_a"),
+            F.col("event_type").alias("type_a"),
             F.col("hll_distinct").alias("est_a"),
         )
     )
     b = F.broadcast(
         singles.select(
-            F.col(set_col).alias("type_b"),
+            F.col("event_type").alias("type_b"),
             F.col("hll_distinct").alias("est_b"),
         )
     )
@@ -614,11 +578,7 @@ def hll_pairwise_intersection(
     )
 
 
-def hll_intersection_sql(
-    value_expr: str,
-    table: str,
-    set_col: str,
-) -> str:
+def hll_intersection_sql() -> str:
     """DuckDB SQL reproducing hll_pairwise_intersection exactly (same
     register build as hll_sql, same inclusion–exclusion double
     arithmetic, rounded at the same points)."""
@@ -645,24 +605,24 @@ def hll_intersection_sql(
 
     return f"""
     WITH hashed AS (
-      SELECT {set_col}, {md5_i64_sql(value_expr)} AS full_h FROM {table}
-      WHERE ({value_expr}) IS NOT NULL
+      SELECT event_type, {md5_i64_sql('CAST(user_id AS VARCHAR)')} AS full_h FROM events
+      WHERE (CAST(user_id AS VARCHAR)) IS NOT NULL
     ),
     h AS (
-      SELECT {set_col}, (full_h >> {rem_bits}) AS bucket,
+      SELECT event_type, (full_h >> {rem_bits}) AS bucket,
              CASE {cases} ELSE {rem_bits + 1} END AS rho
-      FROM (SELECT {set_col}, full_h, (full_h & {mask}) AS w FROM hashed)
+      FROM (SELECT event_type, full_h, (full_h & {mask}) AS w FROM hashed)
     ),
     regs AS (
-      SELECT {set_col}, bucket, max(rho) AS max_rho
-      FROM h GROUP BY {set_col}, bucket
+      SELECT event_type, bucket, max(rho) AS max_rho
+      FROM h GROUP BY event_type, bucket
     ),
-    types AS (SELECT DISTINCT {set_col} FROM regs),
+    types AS (SELECT DISTINCT event_type FROM regs),
     pair_regs AS (
-      SELECT least(r.{set_col}, t.{set_col}) AS type_a,
-             greatest(r.{set_col}, t.{set_col}) AS type_b,
+      SELECT least(r.event_type, t.event_type) AS type_a,
+             greatest(r.event_type, t.event_type) AS type_b,
              r.bucket, max(r.max_rho) AS max_rho
-      FROM regs r JOIN types t ON t.{set_col} != r.{set_col}
+      FROM regs r JOIN types t ON t.event_type != r.event_type
       GROUP BY 1, 2, r.bucket
     ),
     pair_agg AS (
@@ -672,13 +632,13 @@ def hll_intersection_sql(
       FROM pair_regs GROUP BY type_a, type_b
     ),
     single_agg AS (
-      SELECT {set_col},
+      SELECT event_type,
              sum(power(2.0, -max_rho)) AS present_pow,
              count(*) AS nonempty
-      FROM regs GROUP BY {set_col}
+      FROM regs GROUP BY event_type
     ),
     singles AS (
-      SELECT {set_col}, {est("")} AS hll_distinct FROM single_agg
+      SELECT event_type, {est("")} AS hll_distinct FROM single_agg
     ),
     unions AS (
       SELECT type_a, type_b, {est("")} AS est_union FROM pair_agg
@@ -688,19 +648,19 @@ def hll_intersection_sql(
            round(greatest(a.hll_distinct + b.hll_distinct - u.est_union,
                           0.0), {HLL_ROUND_DP}) AS est_intersection
     FROM unions u
-    JOIN singles a ON a.{set_col} = u.type_a
-    JOIN singles b ON b.{set_col} = u.type_b
+    JOIN singles a ON a.event_type = u.type_a
+    JOIN singles b ON b.event_type = u.type_b
     """
 
 
-def kmv_distinct(
-    df: DataFrame,
-    value_col: str,
-    group_cols: tuple[str, ...] = (),
-    k: int = 64,
-) -> DataFrame:
+# bottom-k size of kmv_distinct (its oracle reads it too)
+KMV_K = 64
+
+
+def kmv_distinct(df: DataFrame) -> DataFrame:
     """KMV (k-minimum-values / bottom-k, the theta-sketch core) distinct
-    estimate per group: keep the k smallest distinct md5_i64 hashes; if
+    user_id estimate per event_type: keep the KMV_K smallest distinct
+    md5_i64 hashes; if
     the sketch is not full the count IS exact, else estimate
     (k-1) / R where R = kth_min / 2^60 (Bar-Yossef et al. 2002).
 
@@ -718,45 +678,32 @@ def kmv_distinct(
     buffer per group.
 
     The estimate divides two exact integers inside one double division
-    + floor, so DuckDB replays it bit-for-bit. Output: group cols +
-    (n_kept, kth_min_hash, kmv_estimate)."""
+    + floor, so DuckDB replays it bit-for-bit. Output: (event_type,
+    n_kept, kth_min_hash, kmv_estimate)."""
     from pyspark.sql.window import Window
 
-    if k < 1:
-        raise ValueError(f"kmv k must be >= 1: {k}")
-    _check_reserved(group_cols,
-                    {"_h", "_rn", "n_kept", "kth_min_hash", "kmv_estimate"},
-                    "kmv_distinct")
-    g = list(group_cols)
     # NULL values don't sketch (HLL rule), and NULL would also break
     # engine parity: Spark's window sorts NULLS FIRST (consuming a
     # bottom-k slot), DuckDB's ORDER BY defaults NULLS LAST
     hashed = (
-        df.select(*g, md5_i64(F.col(value_col).cast("string")).alias("_h"))
+        df.select("event_type", md5_i64(F.col("user_id").cast("string")).alias("_h"))
         .filter(F.col("_h").isNotNull())
-        .dropDuplicates(g + ["_h"])
+        .dropDuplicates(["event_type", "_h"])
     )
-    if g:
-        w = Window.partitionBy(*g).orderBy("_h")
-        kept = hashed.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= k
-        )
-    else:
-        # an un-partitioned row_number window funnels every distinct
-        # hash through ONE task; orderBy().limit(k) plans as
-        # TakeOrderedAndProject — per-partition bottom-k then a k-way
-        # driver merge, the scalable global shape
-        kept = hashed.orderBy("_h").limit(k)
-    agg = kept.groupBy(*g).agg(
+    w = Window.partitionBy("event_type").orderBy("_h")
+    kept = hashed.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= KMV_K
+    )
+    agg = kept.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.max("_h").alias("kth_min_hash"),
     )
-    full = F.col("n_kept") >= k
+    full = F.col("n_kept") >= KMV_K
     est = F.floor(
-        F.lit(float(k - 1)) * F.lit(float(1 << HASH_BITS)) / F.col("kth_min_hash")
+        F.lit(float(KMV_K - 1)) * F.lit(float(1 << HASH_BITS)) / F.col("kth_min_hash")
     ).cast("long")
     return agg.select(
-        *g,
+        "event_type",
         "n_kept",
         "kth_min_hash",
         F.when(full, est).otherwise(F.col("n_kept")).alias("kmv_estimate"),

@@ -3,7 +3,7 @@
 AQE's skew-join splitting (enabled in session.py) covers joins; these
 cover the aggregation side: a handful of hot keys (one giant collection,
 one pathological document id) can pin a single reducer. Salting splits
-each hot key across `n_salts` reducers with a two-phase aggregation —
+each hot key across several reducers with a two-phase aggregation —
 results are EXACTLY those of the direct aggregation (the salted query is
 oracle-checked against a plain GROUP BY in the catalog).
 """
@@ -53,42 +53,16 @@ def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
         )
 
 
-# phase1 -> required phase2 combiner. Two-phase salting is only exact
-# for DECOMPOSABLE aggregates; avg/stddev/percentile/count_distinct over
-# salt-bucket partials are the textbook silent-corruption case (probed
-# r14: avg/avg over a skewed group returned 25.75 vs exact 13.375).
-# Non-decomposable needs: avg -> salted sum + count then divide;
-# count distinct -> salted_distinct_count; percentiles -> sketches.py.
-_COMBINER = {
-    "count": "sum",
-    "sum": "sum",
-    "min": "min",
-    "max": "max",
-    "bit_and": "bit_and",
-    "bit_or": "bit_or",
-    "bit_xor": "bit_xor",
-    "bool_and": "bool_and",
-    "bool_or": "bool_or",
-}
+def salted_agg(df: DataFrame) -> DataFrame:
+    """Two-phase salted aggregation per ``event_type``: ``n`` (rows),
+    ``total_value`` (sum of value) and ``max_value`` (max of value) —
+    each a DECOMPOSABLE aggregate whose phase-2 combiner (sum, sum, max)
+    merges the salt-bucket partials exactly (avg or a distinct count
+    over the partials would silently mis-merge; see
+    salted_distinct_count for the latter).
 
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str, str | None]],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation.
-
-    aggs: output_name -> (phase1_fn, phase2_fn, source_col), e.g.
-        {"n":     ("count", "sum", None),
-         "total": ("sum",   "sum", "value"),
-         "mx":    ("max",   "max", "value")}
-    phase2 must be phase1's combiner (count -> sum; sum/min/max ->
-    themselves). source_col None means count over the rows.
-
-    Phase 1 groups on (keys..., salt) so a hot key spreads over n_salts
-    reducers; phase 2 combines the n_salts partials per key. Spark's own
+    Phase 1 groups on (event_type, salt) so a hot key spreads over 16
+    reducers; phase 2 combines the 16 partials per key. Spark's own
     map-side partial aggregation already covers simple cases; explicit
     salting is for the ones it can't — high-cardinality intermediate
     state, collect-like aggregates, or single-key skew where one
@@ -103,93 +77,52 @@ def salted_agg(
     keeps identical duplicate rows spread across (at worst) their map
     partitions, so an undeduplicated hot key still fans out.
     """
-    if n_salts < 1:
-        # pmod(h, 0) is NULL: every row lands in one NULL salt bucket —
-        # silently un-salted (and salted_join with the same input is
-        # outright data loss, see below)
-        raise ValueError(f"n_salts must be >= 1: {n_salts}")
-    if not aggs:
-        # Spark's groupBy().agg() raises a bare internal AssertionError
-        # ("exprs should not be empty") — name the caller's bug instead
-        raise ValueError("salted_agg: aggs must be non-empty")
-    # r14 review batch 9: the decomposability contract was documented
-    # but unenforced — a non-combinable pair (avg/avg, stddev, ...)
-    # returned silently WRONG numbers whenever group sizes differed
-    # across salt buckets; a wrong-but-combinable pair (count -> max)
-    # is the same class
-    for out, (fn1, fn2, _src) in aggs.items():
-        want = _COMBINER.get(fn1)
-        if want is None:
-            raise ValueError(
-                f"salted_agg: phase-1 aggregate {fn1!r} (output {out!r}) "
-                "is not decomposable over salt buckets; supported: "
-                f"{sorted(_COMBINER)} (avg = salted sum+count then "
-                "divide; distinct counts -> salted_distinct_count)"
-            )
-        if fn2 != want:
-            raise ValueError(
-                f"salted_agg: phase-2 for {fn1!r} must be {want!r}, got "
-                f"{fn2!r} (output {out!r}) — any other combiner "
-                "mis-merges the salt-bucket partials"
-            )
     _check_reserved(
-        df, {"_salt", *(f"_p_{out}" for out in aggs)}, "salted_agg"
+        df, {"_salt", "_p_n", "_p_total_value", "_p_max_value"}, "salted_agg"
     )
-    salt = F.pmod(_row_salt_hash(df), F.lit(n_salts))
-    phase1 = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(
-        *[
-            getattr(F, fn1)(F.col(src) if src else F.lit(1)).alias(f"_p_{out}")
-            for out, (fn1, _fn2, src) in aggs.items()
-        ]
+    salt = F.pmod(_row_salt_hash(df), F.lit(16))
+    phase1 = df.withColumn("_salt", salt).groupBy("event_type", "_salt").agg(
+        F.count(F.lit(1)).alias("_p_n"),
+        F.sum(F.col("value")).alias("_p_total_value"),
+        F.max(F.col("value")).alias("_p_max_value"),
     )
-    return phase1.groupBy(*keys).agg(
-        *[
-            getattr(F, fn2)(F.col(f"_p_{out}")).alias(out)
-            for out, (_fn1, fn2, _src) in aggs.items()
-        ]
+    return phase1.groupBy("event_type").agg(
+        F.sum(F.col("_p_n")).alias("n"),
+        F.sum(F.col("_p_total_value")).alias("total_value"),
+        F.max(F.col("_p_max_value")).alias("max_value"),
     )
 
 
-def salted_distinct_count(
-    df: DataFrame, keys: list[str], value_col: str, n_salts: int = 16
-) -> DataFrame:
-    """Exact distinct count per key under skew: salt by the VALUE hash so
-    each distinct value lands in exactly one salt bucket (no double
-    counting), dedup within buckets, then sum bucket cardinalities.
+def salted_distinct_count(df: DataFrame) -> DataFrame:
+    """Exact distinct ``user_id`` count per ``event_type`` under skew:
+    salt by the VALUE hash so each distinct value lands in exactly one
+    of 16 salt buckets (no double counting), dedup within buckets, then
+    sum bucket cardinalities.
 
     NULL values are excluded BEFORE the dedup — count(DISTINCT x)
     semantics (and the paired SQL oracle) ignore NULLs, but the
     (key, salt, NULL) group would otherwise survive dropDuplicates and
     count(lit(1)) would count it as a distinct value."""
-    if n_salts < 1:
-        raise ValueError(f"n_salts must be >= 1: {n_salts}")
     _check_reserved(df, {"_salt", "_n"}, "salted_distinct_count")
-    salt = F.pmod(F.hash(F.col(value_col)), F.lit(n_salts))
+    salt = F.pmod(F.hash(F.col("user_id")), F.lit(16))
     per_bucket = (
-        df.filter(F.col(value_col).isNotNull())
+        df.filter(F.col("user_id").isNotNull())
         .withColumn("_salt", salt)
-        .select(*keys, "_salt", value_col)
-        .dropDuplicates([*keys, "_salt", value_col])
-        .groupBy(*keys, "_salt")
+        .select("event_type", "_salt", "user_id")
+        .dropDuplicates(["event_type", "_salt", "user_id"])
+        .groupBy("event_type", "_salt")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    return per_bucket.groupBy(*keys).agg(
-        F.sum("_n").alias(f"n_distinct_{value_col}")
-    )
+    return per_bucket.groupBy("event_type").agg(F.sum("_n").alias("n_distinct_user_id"))
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Big-big equi-join with a salted hot-key side.
+def salted_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
+    """Big-big equi-join on ``k`` with a salted hot-key side.
 
     When the dim side is too large to broadcast AND fact keys are
     skewed, a plain shuffle join pins the hot key's reducer. Salting
-    spreads each fact key over n_salts reducers and replicates the dim
-    rows n_salts-fold (dim pays n_salts x its size in shuffle — use on
+    spreads each fact key over 8 reducers and replicates the dim
+    rows 8-fold (dim pays 8 x its size in shuffle — use on
     the smaller side). Result is EXACTLY the plain join (the catalog
     oracle-checks it against one).
 
@@ -198,22 +131,14 @@ def salted_join(
     partition id — without the mix, a hot key whose rows
     are exact duplicates (an undeduplicated record stream) hashes every
     replica to ONE salt bucket, recreating the single-reducer skew
-    while still paying the dim side's n_salts-fold replication. With
+    while still paying the dim side's 8-fold replication. With
     the mix, identical rows spread across their map partitions.
     AQE's skew-join splitting covers sort-merge joins adaptively — this
     explicit form is for when you must pin the strategy (e.g. a skewed
     key feeding a downstream co-partitioned stage).
     """
-    if n_salts < 1:
-        # fact pmod(h, 0) is NULL while the dim side's sequence(0, -1)
-        # DESCENDS to [0, -1] (it does not return empty): the join keys
-        # can never match and the result is silently EMPTY — total data
-        # loss from a configuration typo
-        raise ValueError(f"n_salts must be >= 1: {n_salts}")
     _check_reserved(fact, {"_salt"}, "salted_join")
     _check_reserved(dim, {"_salt"}, "salted_join")
-    f = fact.withColumn("_salt", F.pmod(_row_salt_hash(fact), F.lit(n_salts)))
-    d = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return f.join(d, [key, "_salt"]).drop("_salt")
+    f = fact.withColumn("_salt", F.pmod(_row_salt_hash(fact), F.lit(8)))
+    d = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(7))))
+    return f.join(d, ["k", "_salt"]).drop("_salt")

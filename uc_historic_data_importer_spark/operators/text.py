@@ -48,16 +48,6 @@ def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
         )
 
 
-def _check_k(k: int, op: str, name: str = "k") -> None:
-    """Degenerate window/segment widths corrupt silently rather than
-    failing loudly: k=0 segment math divides by zero deep inside a
-    distributed job (word_segments) or emits empty-string grams with
-    real-looking counts (token_ngram_topk n=0, probed r12). Raise at
-    the API boundary instead."""
-    if k < 1:
-        raise ValueError(f"{op}: {name} must be >= 1, got {k}")
-
-
 def _ensure_parallel(df: DataFrame) -> DataFrame:
     """dedup.py's single-file-corpus guard, applied to the CPU-heavy
     text operators whose plans already shuffle downstream (r12: the
@@ -80,12 +70,24 @@ def tokens_col(text: Column) -> Column:
     return F.array_remove(F.split(F.lower(text), TOKEN_SPLIT_RE), "")
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append ``tokens`` / ``n_tokens`` derived from ``text_col``.
+# tokens_col over `text` as DuckDB SQL (the catalog oracles' tokenizer)
+TOKENS_SQL = (
+    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')"
+)
+
+
+# word-segment width (tokens) of the segment dedup operators, and the
+# stride-1 window width of exact substring dedup
+SEGMENT_K = 10
+SPAN_K = 8
+
+
+def with_tokens(df: DataFrame) -> DataFrame:
+    """Append ``tokens`` / ``n_tokens`` derived from ``text``.
 
     HARD-ERROR CONTRACT (r12 guard, disposition recorded per ADVICE
     r12): an input that ALREADY has tokens/n_tokens columns raises,
-    even though recomputing from text_col would be value-identical for
+    even though recomputing from text would be value-identical for
     frames this function itself produced. Chained callers (e.g. feeding
     a with_tokens-derived frame into token_counts/quality_scores, which
     call with_tokens internally) must drop tokens/n_tokens first. The
@@ -94,7 +96,7 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     text operators, and a caller whose tokens column came from ANOTHER
     tokenizer would be silently re-tokenized instead of told."""
     _check_reserved(df, {"tokens", "n_tokens"}, "with_tokens")
-    return df.withColumn("tokens", tokens_col(F.col(text_col))).withColumn(
+    return df.withColumn("tokens", tokens_col(F.col("text"))).withColumn(
         "n_tokens", F.size("tokens")
     )
 
@@ -102,7 +104,7 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
 def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace/regex token counting rolled up per group — the unit-economics
     query of a training-data pipeline (tokens per source/shard)."""
-    toks = with_tokens(df, "text")
+    toks = with_tokens(df)
     return toks.groupBy("source").agg(
         F.sum("n_tokens").alias("total_tokens"),
         F.count(F.lit(1)).alias("n_docs"),
@@ -114,7 +116,7 @@ def quality_scores(df: DataFrame) -> DataFrame:
     """Heuristic document-quality features: length, mean token length,
     stopword ratio, non-alphanumeric (punct/space) ratio. Deterministic,
     SQL-expressible; the composite score is a simple monotone blend."""
-    d = with_tokens(df, "text")
+    d = with_tokens(df)
     text = F.col("text")
     n_chars = F.length(text)
     alnum_chars = F.length(F.regexp_replace(F.lower(text), TOKEN_SPLIT_RE, ""))
@@ -139,7 +141,7 @@ def language_id(df: DataFrame) -> DataFrame:
     """Marker-word language ID: score = count of language-marker tokens;
     argmax with deterministic tiebreak (higher score, then language code
     ascending); all-zero -> 'und'."""
-    d = with_tokens(df, "text")
+    d = with_tokens(df)
     scores = []
     for lang, markers in sorted(LANG_MARKERS.items()):
         arr = F.array(*[F.lit(m) for m in markers])
@@ -153,15 +155,12 @@ def language_id(df: DataFrame) -> DataFrame:
     return d.select("doc_id", pred.alias("predicted_lang"))
 
 
-def tf_idf_top_terms(
-    df: DataFrame,
-    top_n: int = 3,
-) -> DataFrame:
-    """Top-n characteristic terms per document by smoothed TF-IDF.
+def tf_idf_top_terms(df: DataFrame) -> DataFrame:
+    """Top-3 characteristic terms per document by smoothed TF-IDF.
 
     idf = ln((N+1)/(df+1)) + 1 (sklearn-style smoothing: never zero,
     never divides by zero). Ranking uses the ROUNDED score plus a token
-    tiebreak so the cut at top_n is deterministic across engines.
+    tiebreak so the cut at 3 is deterministic across engines.
 
     Plan shape at scale: one explode + (doc,token) partial-agg shuffle;
     document frequency is a count-over-token WINDOW on that same
@@ -172,9 +171,7 @@ def tf_idf_top_terms(
     """
     from pyspark.sql import Window
 
-    if top_n < 1:
-        raise ValueError(f"tf_idf_top_terms: top_n must be >= 1, got {top_n}")
-    toks = with_tokens(_ensure_parallel(df), "text")
+    toks = with_tokens(_ensure_parallel(df))
     tf = (
         toks.select("doc_id", F.explode("tokens").alias("token"))
         .groupBy("doc_id", "token")
@@ -206,7 +203,7 @@ def tf_idf_top_terms(
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= top_n)
+        .filter(F.col("rk") <= 3)
         .select("doc_id", "token", "tfidf", F.col("rk").alias("term_rank"))
     )
 
@@ -259,7 +256,7 @@ def repetition_scores(df: DataFrame) -> DataFrame:
     (doc, ngram) blow-up row count. The size(w) >= 2 guard matters:
     Spark's sequence(1, 0) DESCENDS ([1, 0]) rather than returning
     empty, so short documents must bypass the bigram build."""
-    d = with_tokens(df, "text")
+    d = with_tokens(df)
     w = F.col("tokens")
     n = F.col("n_tokens")
     bigrams = F.when(
@@ -292,7 +289,7 @@ def repetition_scores(df: DataFrame) -> DataFrame:
 def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over the sorted distinct token set — the
     canonical-form dedup key (word-order- and repetition-insensitive)."""
-    d = with_tokens(df, "text")
+    d = with_tokens(df)
     fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(F.col("tokens")))))
     return d.select("doc_id", fp.alias("fingerprint"))
 
@@ -388,10 +385,25 @@ def bpe_token_stats(
     )
 
 
-def word_segments(
-    df: DataFrame, k: int = 10
-) -> DataFrame:
-    """(id, seg_no, segment): consecutive non-overlapping k-token windows
+def _segments() -> Column:
+    """The consecutive non-overlapping SEGMENT_K-token windows of the
+    ``tokens`` column (``n_tokens`` long), each joined by spaces; the
+    trailing short window is kept."""
+    k = SEGMENT_K
+    nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
+    # guard: sequence(0, -1) DESCENDS in Spark rather than returning
+    # empty, so zero-token documents must bypass the window build
+    return F.when(
+        nseg > 0,
+        F.transform(
+            F.sequence(F.lit(0), nseg - 1),
+            lambda i: F.concat_ws(" ", F.slice("tokens", i * k + 1, F.lit(k))),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def word_segments(df: DataFrame) -> DataFrame:
+    """(id, seg_no, segment): consecutive non-overlapping SEGMENT_K-token windows
     of the normalized token stream — the corpus's "line" analogue for
     line/paragraph-level dedup (RefinedWeb/CCNet-style) when documents
     carry no newline structure. The trailing short window is kept.
@@ -399,28 +411,14 @@ def word_segments(
     Pure codegen segmentation (sequence + transform + slice) followed by
     one posexplode; output rows ≈ tokens/k, so the blow-up is bounded
     and linear in corpus size."""
-    _check_k(k, "word_segments")
-    toks = with_tokens(df, "text")
-    nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
-    # guard: sequence(0, -1) DESCENDS in Spark rather than returning
-    # empty, so zero-token documents must bypass the window build
-    segs = F.when(
-        nseg > 0,
-        F.transform(
-            F.sequence(F.lit(0), nseg - 1),
-            lambda i: F.concat_ws(" ", F.slice("tokens", i * k + 1, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks.select(
-        "doc_id", F.posexplode(segs).alias("seg_no", "segment")
+    return with_tokens(df).select(
+        "doc_id", F.posexplode(_segments()).alias("seg_no", "segment")
     )
 
 
-def segment_dup_stats(
-    df: DataFrame, k: int = 10
-) -> DataFrame:
+def segment_dup_stats(df: DataFrame) -> DataFrame:
     """Per-document cross-document segment duplication: n_segments,
-    dup_segments (positions whose k-token segment also appears in at
+    dup_segments (positions whose SEGMENT_K-token segment also appears in at
     least one OTHER document), and dup_ratio in basis points (floor of
     10000*dup/n — integer-rendered, engine-portable).
 
@@ -429,7 +427,7 @@ def segment_dup_stats(
     -> groupBy(id). Every key is content-hash-uniform; nothing is
     all-pairs. This is the standard two-pass line-dedup shape used on
     web-scale corpora."""
-    segs = word_segments(df, k=k)
+    segs = word_segments(df)
     per_seg = segs.groupBy("segment").agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
@@ -449,13 +447,8 @@ def segment_dup_stats(
     )
 
 
-def boilerplate_segments(
-    df: DataFrame,
-    k: int = 10,
-    min_docs: int = 3,
-    top_n: int | None = None,
-) -> DataFrame:
-    """Boilerplate mining: k-token segments appearing in >= min_docs
+def boilerplate_segments(df: DataFrame, top_n: int | None = None) -> DataFrame:
+    """Boilerplate mining: SEGMENT_K-token segments appearing in >= 3
     distinct documents (headers/footers/nav chrome in a real corpus),
     with distinct-doc and total-occurrence counts. The output is the
     removal list a cleaning pass anti-joins against — tiny relative to
@@ -465,22 +458,21 @@ def boilerplate_segments(
     (n_docs DESC, n_occurrences DESC, segment ASC — deterministic), via
     TakeOrdered, no global sort. Callers that COLLECT the list (to
     inline it as a literal, Bloom-words style) must pass it: an
-    absolute min_docs threshold is unbounded on a high-duplication
+    absolute distinct-document threshold is unbounded on a high-duplication
     corpus (a 90%-duplicate corpus makes nearly every segment
     'boilerplate'), and the sf1 soak showed exactly that blow-up.
 
     Single groupBy on the content-uniform segment key; no joins."""
-    _check_k(min_docs, "boilerplate_segments", "min_docs")
-    if top_n is not None:
-        _check_k(top_n, "boilerplate_segments", "top_n")
-    segs = word_segments(df, k=k)
+    if top_n is not None and top_n < 1:
+        raise ValueError(f"boilerplate_segments: top_n must be >= 1, got {top_n}")
+    segs = word_segments(df)
     out = (
         segs.groupBy("segment")
         .agg(
             F.countDistinct("doc_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 3)
     )
     if top_n is not None:
         out = out.orderBy(
@@ -489,13 +481,9 @@ def boilerplate_segments(
     return out
 
 
-def relative_quality_filter(
-    df: DataFrame,
-    drop_frac: float = 0.25,
-) -> DataFrame:
+def relative_quality_filter(df: DataFrame) -> DataFrame:
     """Per-source RELATIVE quality gate (Gopher-style): within each
-    source, drop the bottom drop_frac of documents by score (default:
-    token count), reporting kept/dropped counts per source. Absolute
+    source, drop the bottom quarter of documents by token count, reporting kept/dropped counts per source. Absolute
     thresholds misfire when sources have different length profiles;
     ranking within the source is the standard fix.
 
@@ -506,17 +494,11 @@ def relative_quality_filter(
     source shard, not the document."""
     from pyspark.sql import Window
 
-    if not (0.0 <= drop_frac <= 1.0):
-        # drop_frac=1.5 silently dropped EVERY document (probed r12)
-        raise ValueError(
-            f"relative_quality_filter: drop_frac must be in [0, 1], "
-            f"got {drop_frac}"
-        )
     _check_reserved(df, {"pr"}, "relative_quality_filter")
-    d = with_tokens(df, "text")
+    d = with_tokens(df)
     w = Window.partitionBy("source").orderBy(F.col("n_tokens"), F.col("doc_id"))
     ranked = d.withColumn("pr", F.percent_rank().over(w))
-    kept = F.when(F.col("pr") >= drop_frac, 1).otherwise(0)
+    kept = F.when(F.col("pr") >= 0.25, 1).otherwise(0)
     return ranked.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(kept).alias("n_kept"),
@@ -524,12 +506,8 @@ def relative_quality_filter(
     )
 
 
-def segment_clean_docs(
-    df: DataFrame,
-    boilerplate: list[str],
-    k: int = 10,
-) -> DataFrame:
-    """Remove boilerplate k-token segments from each document and
+def segment_clean_docs(df: DataFrame, boilerplate: list[str]) -> DataFrame:
+    """Remove boilerplate SEGMENT_K-token segments from each document and
     reassemble the cleaned text — MAP-ONLY, so it runs unchanged under
     Structured Streaming (no stateful agg, no watermark: the removal
     list is a build-time artifact like a Bloom filter or PQ codebook,
@@ -561,19 +539,10 @@ def segment_clean_docs(
     literal, F.aggregate-folded binary search 1.3x slower — don't
     re-litigate those; for removal lists past ~10^5 the broadcast
     anti-join above remains the real upgrade."""
-    _check_k(k, "segment_clean_docs")
     # the output re-selects *df.columns, so a collision here EMITS the
     # internal temp under the user's column name (probed r12)
     _check_reserved(df, {"_segs", "_kept"}, "segment_clean_docs")
-    toks = with_tokens(df, "text")
-    nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
-    segs = F.when(
-        nseg > 0,
-        F.transform(
-            F.sequence(F.lit(0), nseg - 1),
-            lambda i: F.concat_ws(" ", F.slice("tokens", i * k + 1, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    toks = with_tokens(df)
     if len(set(boilerplate)) > 64:
         bset = frozenset(boilerplate)
 
@@ -589,7 +558,7 @@ def segment_clean_docs(
     else:
         bp = F.array(*[F.lit(s) for s in sorted(set(boilerplate))])
         kept = F.filter("_segs", lambda s: ~F.array_contains(bp, s))
-    d = toks.withColumn("_segs", segs).withColumn("_kept", kept)
+    d = toks.withColumn("_segs", _segments()).withColumn("_kept", kept)
     return d.select(
         *df.columns,
         F.size("_segs").alias("n_segments"),
@@ -598,18 +567,18 @@ def segment_clean_docs(
     )
 
 
-def sliding_windows(df: DataFrame, k: int = 8) -> DataFrame:
-    """(id, pos, gram): every stride-1 k-token sliding window of the
+def sliding_windows(df: DataFrame) -> DataFrame:
+    """(id, pos, gram): every stride-1 SPAN_K-token sliding window of the
     normalized token stream (pos = 0-based start token index). The
-    substring-dedup analogue of `word_segments` (which strides by k):
-    stride 1 is what makes duplicate detection EXACT at k-token
+    substring-dedup analogue of `word_segments` (which strides by its
+    width): stride 1 is what makes duplicate detection EXACT at k-token
     granularity rather than alignment-dependent.
 
     Output rows ~= n_tokens per document (linear blow-up); each gram is
     k joined tokens, kept as text so external oracles replay exact
     semantics."""
-    _check_k(k, "sliding_windows")
-    toks = with_tokens(_ensure_parallel(df), "text")
+    k = SPAN_K
+    toks = with_tokens(_ensure_parallel(df))
     nwin = F.col("n_tokens") - F.lit(k) + 1
 
     def gram_of(i):
@@ -624,7 +593,7 @@ def sliding_windows(df: DataFrame, k: int = 8) -> DataFrame:
     return toks.select("doc_id", F.posexplode(wins).alias("pos", "gram"))
 
 
-def duplicate_spans(df: DataFrame, k: int = 8) -> DataFrame:
+def duplicate_spans(df: DataFrame) -> DataFrame:
     """Exact substring-level duplicate spans (the ExactSubstr dedup of
     Lee et al., "Deduplicating Training Data Makes Language Models
     Better"): every MAXIMAL token run whose stride-1 k-token windows
@@ -652,7 +621,8 @@ def duplicate_spans(df: DataFrame, k: int = 8) -> DataFrame:
     are exactly the suffix-array duplicates of length >= k."""
     from pyspark.sql import Window
 
-    wins = sliding_windows(df, k=k)
+    k = SPAN_K
+    wins = sliding_windows(df)
     n_occ = F.count(F.lit(1)).over(Window.partitionBy("gram"))
     dwin = (
         wins.withColumn("_n_occ", n_occ)
@@ -682,10 +652,7 @@ def duplicate_spans(df: DataFrame, k: int = 8) -> DataFrame:
     )
 
 
-def remove_duplicate_spans(
-    df: DataFrame,
-    k: int = 8,
-) -> DataFrame:
+def remove_duplicate_spans(df: DataFrame) -> DataFrame:
     """Apply side of exact substring dedup: cut every duplicated span
     (from `duplicate_spans`) out of every document and reassemble the
     kept text. Policy: ALL occurrences are removed (conservative
@@ -703,12 +670,12 @@ def remove_duplicate_spans(
     _check_reserved(
         df, {"_spans", "_dup", "_kept_idx"}, "remove_duplicate_spans"
     )
-    spans = duplicate_spans(df, k=k)
+    spans = duplicate_spans(df)
     agg = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans"),
         F.sum("span_len").alias("_dup"),
     )
-    toks = with_tokens(df, "text")
+    toks = with_tokens(df)
     j = toks.join(agg, "doc_id", "left")
     idx = F.when(
         F.col("n_tokens") > 0,
@@ -767,7 +734,7 @@ def bm25_topk(
         raise ValueError(
             f"query terms must match [a-z0-9]+ (tokenizer output form): {bad}"
         )
-    toks = with_tokens(_ensure_parallel(df), "text")
+    toks = with_tokens(_ensure_parallel(df))
     aggs = [
         F.count(F.lit(1)).cast("double").alias("_N"),
         F.avg("n_tokens").alias("_avgdl"),
@@ -802,14 +769,11 @@ def bm25_topk(
     )
 
 
-def dedup_segments_within_doc(
-    df: DataFrame,
-    k: int = 10,
-) -> DataFrame:
+def dedup_segments_within_doc(df: DataFrame) -> DataFrame:
     """WITHIN-document repeated-segment removal (the CCNet/RefinedWeb
     in-doc cleaning step — scraped pages repeat nav blocks and list
     items inside one document): keep the FIRST occurrence of each
-    k-token segment, drop later repeats, reassemble the cleaned text.
+    SEGMENT_K-token segment, drop later repeats, reassemble the cleaned text.
 
     Entirely map-only — segmentation, first-occurrence filter
     (array_position == own index), and reassembly are array HOFs on the
@@ -818,18 +782,8 @@ def dedup_segments_within_doc(
     whose removal list is corpus-mined instead of intra-doc). The
     cross-document complement is segment_dup_stats / boilerplate.
     Per-doc cost is O(n_segments²) comparisons inside codegen — bounded
-    by (tokens/k)², negligible against the scan."""
-    _check_k(k, "dedup_segments_within_doc")
-    toks = with_tokens(df, "text")
-    nseg = F.ceil(F.col("n_tokens") / F.lit(float(k))).cast("int")
-    segs = F.when(
-        nseg > 0,
-        F.transform(
-            F.sequence(F.lit(0), nseg - 1),
-            lambda i: F.concat_ws(" ", F.slice("tokens", i * k + 1, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    d = toks.withColumn("_segs", segs).withColumn(
+    by (tokens/SEGMENT_K)², negligible against the scan."""
+    d = with_tokens(df).withColumn("_segs", _segments()).withColumn(
         "_kept",
         F.filter(
             "_segs",
@@ -867,7 +821,7 @@ def winnowing_fingerprints(
     groupBy(fingerprint) is the plagiarism/overlap join key."""
     if k <= 0 or w <= 0:
         raise ValueError("k and w must be positive")
-    toks = with_tokens(_ensure_parallel(df), "text")
+    toks = with_tokens(_ensure_parallel(df))
     m = F.col("n_tokens") - F.lit(k) + 1  # gram count
     grams = F.when(
         m > 0,
@@ -946,14 +900,13 @@ def winnowing_fingerprints(
 
 def fuzzy_match_pairs(
     df: DataFrame,
-    key_col: str = "text",
-    id_col: str = "doc_id",
     max_dist: int = 3,
     q: int = 3,
     max_gram_df: int | None = None,
 ) -> DataFrame:
-    """String-similarity (fuzzy entity-matching) self-join: all id pairs
-    whose keys are within Levenshtein distance ``max_dist``, via q-gram
+    """String-similarity (fuzzy entity-matching) self-join: all
+    ``doc_id`` pairs whose ``head`` keys are within Levenshtein distance
+    ``max_dist``, via q-gram
     blocking — the classic ED-Join/PassJoin-family shape, composed from
     DataFrame ops:
 
@@ -986,9 +939,9 @@ def fuzzy_match_pairs(
     if max_dist < 0 or q <= 0:
         raise ValueError("max_dist must be >= 0 and q positive")
     keys = _ensure_parallel(df).select(
-        F.col(id_col).alias("_id"),
-        F.col(key_col).alias("_k"),
-        F.length(key_col).alias("_len"),
+        F.col("doc_id").alias("_id"),
+        F.col("head").alias("_k"),
+        F.length("head").alias("_len"),
     )
     n_grams = F.greatest(F.col("_len") - q + 1, F.lit(1))
     grams_all = F.transform(
@@ -1124,12 +1077,8 @@ def unigram_logprob_scores(
     )
 
 
-def token_ngram_topk(
-    df: DataFrame,
-    n: int = 2,
-    topk: int = 20,
-) -> DataFrame:
-    """Corpus-wide top-k word n-grams WITH multiplicity (unlike the
+def token_ngram_topk(df: DataFrame) -> DataFrame:
+    """Corpus-wide top-20 word bigrams WITH multiplicity (unlike the
     dedup shingles, which are distinct-per-doc): the exact
     heavy-hitters answer the CMS sketch approximates, used for
     boilerplate phrase mining and contamination probes. One explode +
@@ -1141,10 +1090,7 @@ def token_ngram_topk(
     re-tokenize the document once per (gram, position) — O(n_tokens^2)
     regex work per doc that profiled at 7 s where the materialized
     form runs in well under 1 s at bench scale."""
-    # n=0 emitted empty-string grams with REAL-looking occurrence
-    # counts (probed r12) — silent garbage, not an error
-    _check_k(n, "token_ngram_topk", "n")
-    _check_k(topk, "token_ngram_topk", "topk")
+    n = 2
     df = _ensure_parallel(df)
     toks = F.col("_toks")
     idx = F.when(
@@ -1167,20 +1113,16 @@ def token_ngram_topk(
     w = Window.orderBy(F.desc("n_occurrences"), F.asc("gram"))
     return (
         counted.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 20)
     )
 
 
-def length_outliers(
-    df: DataFrame,
-    z_cut: float = 3.0,
-    exact: bool = True,
-) -> DataFrame:
+def length_outliers(df: DataFrame, exact: bool = True) -> DataFrame:
     """Robust (median/MAD) length-outlier detection per group — the
     truncation/concatenation-artifact screen a pretraining corpus runs
     before length-based filtering, immune to the outliers it hunts
     (unlike mean/stddev z-scores). robust_z = (x - median) /
-    (1.4826 * MAD); rows beyond +-z_cut are flagged.
+    (1.4826 * MAD); rows beyond +-1.5 are flagged.
 
     ``exact=True`` (default, the oracle path) uses two grouped
     exact-percentile aggregates (median, then MAD) — these BUFFER each
@@ -1204,10 +1146,6 @@ def length_outliers(
     preserved, NULL in degenerate groups."""
     from uc_historic_data_importer_spark.operators import sketches
 
-    if z_cut < 0:
-        # abs(z) > negative is TRUE everywhere: a negative cut silently
-        # flags the whole corpus (probed r12)
-        raise ValueError(f"length_outliers: z_cut must be >= 0, got {z_cut}")
     _check_reserved(
         df,
         {"_med", "_mad", "_adev", "robust_z", "_med_bucket"},
@@ -1256,7 +1194,7 @@ def length_outliers(
             sketches.log_bucket(x) != F.col("_med_bucket")
         )
     flagged = F.when(
-        F.col("_mad") > 0, F.abs(F.col("robust_z")) > z_cut
+        F.col("_mad") > 0, F.abs(F.col("robust_z")) > 1.5
     ).otherwise(degenerate)
     return (
         dev.join(F.broadcast(mad), "source")

@@ -810,9 +810,7 @@ def range_join_error_after_click_q(spark: SparkSession, sf_dir: str) -> DataFram
     errors = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"), "ts"
     )
-    joined = interval_join(
-        clicks, errors, left_ts="ts", right_ts="ts", lower_ms=1, upper_ms=60000
-    )
+    joined = interval_join(clicks, errors)
     return joined.select(
         "click_id",
         "error_id",

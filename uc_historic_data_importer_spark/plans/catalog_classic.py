@@ -158,13 +158,6 @@ def salted_agg_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     out = salted_agg(
         ev,
-        ["event_type"],
-        {
-            "n": ("count", "sum", None),
-            "total_value": ("sum", "sum", "value"),
-            "max_value": ("max", "max", "value"),
-        },
-        n_salts=16,
     )
     return out.select(
         "event_type",
@@ -190,7 +183,7 @@ def salted_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = t(spark, sf_dir, "events")
-    return salted_distinct_count(ev, ["event_type"], "user_id", n_salts=16)
+    return salted_distinct_count(ev)
 
 
 @register(
@@ -271,9 +264,7 @@ def percentile_prices_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hist_q_subquery(value_expr: str, qs: tuple[float, ...]) -> str:
     from uc_historic_data_importer_spark.operators import sketches
 
-    return sketches.hist_quantiles_sql(
-        value_expr, "lineitem", qs=qs, group_cols=("l_returnflag",)
-    )
+    return sketches.hist_quantiles_sql(value_expr, qs=qs)
 
 
 @register(

@@ -33,9 +33,7 @@ from uc_historic_data_importer_spark.plans.catalog import register, t
 
 # shared DuckDB fragments ----------------------------------------------------
 
-_TOKENS_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')"
-)
+_TOKENS_SQL = text.TOKENS_SQL
 
 _SHINGLE_CTE = f"""
 tok AS (SELECT doc_id, {_TOKENS_SQL} AS w FROM documents),
@@ -183,7 +181,7 @@ def dedup_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JACCARD_DF_CAP = 64
+_JACCARD_DF_CAP = dedup.MAX_SHINGLE_FREQ
 
 
 @register(
@@ -219,8 +217,6 @@ _JACCARD_DF_CAP = 64
 def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.jaccard_pairs(
         t(spark, sf_dir, "documents"),
-        threshold=0.5,
-        max_shingle_freq=_JACCARD_DF_CAP,
     )
 
 
@@ -242,13 +238,10 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fan-out those buckets would have cost (dedup.jaccard_bucket_stats).",
 )
 def jaccard_dropped_shingles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.jaccard_bucket_stats(
-        t(spark, sf_dir, "documents"), max_shingle_freq=_JACCARD_DF_CAP
-    )
+    return dedup.jaccard_bucket_stats(t(spark, sf_dir, "documents"))
 
 
-_NUM_PERMS = 16
-_BANDS = 4
+_NUM_PERMS, _BANDS = dedup.NUM_PERMS, dedup.BANDS
 
 # ANN index artifacts (k-means centroids, PQ codebooks, query rows) are
 # build-time products, not per-query work: at 100 TB the codebooks are
@@ -306,30 +299,24 @@ def _minhash_oracle() -> str:
     "linear-cost near-dup path at corpus scale.",
 )
 def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), num_perms=_NUM_PERMS, bands=_BANDS
-    )
+    return dedup.minhash_lsh_pairs(t(spark, sf_dir, "documents"))
 
 
 @register(
     "hll_distinct_users",
-    sketches.hll_sql(
-        "CAST(user_id AS VARCHAR)", "events", group_cols=("event_type",)
-    ),
+    sketches.hll_sql(),
     doc="deterministic HyperLogLog (p=8, shared md5 hash): per-type "
     "distinct-user estimate that hash-matches the oracle — the "
     "mergeable-register cardinality path that replaces count(distinct) "
     "at 100 TB.",
 )
 def hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sketches.hll_distinct(
-        t(spark, sf_dir, "events"), "user_id", group_cols=("event_type",)
-    )
+    return sketches.hll_distinct(t(spark, sf_dir, "events"))
 
 
 @register(
     "cms_heavy_hitters",
-    sketches.cms_sql("user_id", "events", top_k=10),
+    sketches.cms_sql(),
     doc="deterministic count-min sketch (d=4 x w=256, shared portable "
     "hashes): the exact top-10 users with their CMS point estimates — "
     "cms_n >= exact_n by construction; the mergeable-counter frequency "
@@ -344,8 +331,8 @@ def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select(F.col("user_id").alias("user_val"), "exact_n")
     )
-    counters = sketches.cms_counters(ev, "user_id")
-    return sketches.cms_estimate(counters, exact, "user_val")
+    counters = sketches.cms_counters(ev)
+    return sketches.cms_estimate(counters, exact)
 
 
 @register(
@@ -376,8 +363,6 @@ def bloom_anti_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_rows = bloom.bloom_anti_join(
         li,
         existing,
-        "l_orderkey",
-        "o_orderkey",
         # one filter per existing-keys snapshot, reused across runs —
         # production cost model (the build scan amortizes over imports)
         cache_key=f"{sf_dir}/orders:o_orderstatus=F",
@@ -396,7 +381,7 @@ def bloom_anti_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash_sample_documents",
     f"""
     SELECT doc_id, source FROM documents
-    WHERE {sampling.sample_sql("doc_id", 0.1)}
+    WHERE {sampling.sample_sql()}
     """,
     doc="deterministic 10% Bernoulli sample by id hash: map-only (no "
     "shuffle, no RNG), identical row set on any cluster size or rerun — "
@@ -404,13 +389,13 @@ def bloom_anti_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def hash_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    return sampling.hash_sample(docs, "doc_id", 0.1).select("doc_id", "source")
+    return sampling.hash_sample(docs).select("doc_id", "source")
 
 
 @register(
     "split_assign_documents",
     f"""
-    SELECT {sampling.split_sql("doc_id", 0.05, 0.05)} AS split,
+    SELECT {sampling.split_sql()} AS split,
            source, count(*) AS n_docs
     FROM documents GROUP BY 1, 2
     """,
@@ -421,7 +406,7 @@ def hash_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def split_assign_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     return (
-        sampling.split_assign(docs, "doc_id", 0.05, 0.05)
+        sampling.split_assign(docs)
         .groupBy("split", "source")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -447,7 +432,7 @@ def stratified_sample_documents_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    return sampling.stratified_sample(docs, "doc_id", "lang", 20).select(
+    return sampling.stratified_sample(docs).select(
         "doc_id", "lang"
     )
 
@@ -482,14 +467,12 @@ def stratified_sample_documents_q(
     "rounded score + token tiebreak so the top-n is deterministic.",
 )
 def text_tfidf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.tf_idf_top_terms(t(spark, sf_dir, "documents"), top_n=3)
+    return text.tf_idf_top_terms(t(spark, sf_dir, "documents"))
 
 
 @register(
     "hist_quantile_prices",
-    sketches.hist_quantiles_sql(
-        "l_extendedprice", "lineitem", group_cols=("l_returnflag",)
-    ),
+    sketches.hist_quantiles_sql("l_extendedprice"),
     doc="mergeable log-histogram quantile sketch (DDSketch bucket rule, "
     "scale=100 -> ~1% relative error): p50/p90/p99 extended price per "
     "return flag from fixed-size bucket state — the 100 TB percentile "
@@ -527,7 +510,7 @@ def hist_quantile_prices_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) AS rk FROM kept
       ) WHERE rk = 1
     )
-    SELECT {sampling.split_sql("doc_id", 0.05, 0.05)} AS split,
+    SELECT {sampling.split_sql()} AS split,
            source, count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS total_tokens
     FROM dedup GROUP BY 1, 2
@@ -560,7 +543,7 @@ def corpus_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rk") == 1)
         .drop("_rk")
     )
-    labeled = sampling.split_assign(deduped, "doc_id", 0.05, 0.05)
+    labeled = sampling.split_assign(deduped)
     return labeled.groupBy("split", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
@@ -600,7 +583,7 @@ def funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import sessions as sess
 
     ev = t(spark, sf_dir, "events")
-    return sess.funnel_counts(ev, ("view", "click", "purchase"))
+    return sess.funnel_counts(ev)
 
 
 @register(
@@ -610,7 +593,7 @@ def funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, source,
              md5(array_to_string(list_sort(list_distinct({_TOKENS_SQL})), ' '))
                AS fp,
-             {sampling.split_sql("doc_id", 0.05, 0.05)} AS split
+             {sampling.split_sql()} AS split
       FROM documents
     ),
     flagged AS (
@@ -639,7 +622,7 @@ def split_decontamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(" ", F.array_sort(F.array_distinct(F.col("tokens"))))
         ),
     )
-    d = sampling.split_assign(d, "doc_id", 0.05, 0.05)
+    d = sampling.split_assign(d)
     has_train = F.max(
         F.when(F.col("split") == "train", F.lit(1)).otherwise(F.lit(0))
     ).over(Window.partitionBy("fp"))
@@ -692,7 +675,7 @@ def salted_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"), "o_orderpriority"
     )
-    joined = skew.salted_join(li, orders, "k", n_salts=8)
+    joined = skew.salted_join(li, orders)
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
         F.round(
@@ -770,7 +753,7 @@ def scd2_user_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = ev.groupBy("user_id", "version").agg(
         F.max("event_id").alias("event_id")
     )
-    return scd2_intervals(dedup, key_cols=("user_id",))
+    return scd2_intervals(dedup)
 
 
 @register(
@@ -924,9 +907,7 @@ def customer_spend_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_incremental_daily",
-    sketches.hll_sql(
-        "CAST(user_id AS VARCHAR)", "events", group_cols=("event_type",)
-    ),
+    sketches.hll_sql(),
     doc="incremental sketch maintenance, end to end: per-DAY register "
     "tables (the nightly job's persisted state) max-merged across days, "
     "then estimated. The oracle is the DIRECT whole-table HLL — the "
@@ -938,9 +919,7 @@ def hll_incremental_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts"))
     )
-    daily = sketches.hll_registers(
-        ev, "user_id", group_cols=("event_type", "day")
-    )
+    daily = sketches.hll_registers(ev, group_cols=("event_type", "day"))
     merged = daily.groupBy("event_type", "bucket").agg(
         F.max("max_rho").alias("max_rho")
     )
@@ -1038,7 +1017,7 @@ def snapshot_diff_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus")
         ),
     )
-    return diff.snapshot_diff_summary(old, new, ("o_orderkey",))
+    return diff.snapshot_diff_summary(old, new)
 
 
 @register(
@@ -1125,7 +1104,7 @@ def media_frame_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string"),
         ).alias("meta"),
     )
-    return multimodal.frame_sample_plan(media, every_n_seconds=5)
+    return multimodal.frame_sample_plan(media)
 
 
 def _components_oracle() -> str:
@@ -1157,13 +1136,11 @@ def _components_oracle() -> str:
     "rounds).",
 )
 def dedup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), num_perms=_NUM_PERMS, bands=_BANDS
-    )
+    pairs = dedup.minhash_lsh_pairs(t(spark, sf_dir, "documents"))
     return dedup.connected_components(pairs)
 
 
-_SIMHASH_BITS = 32
+_SIMHASH_BITS = dedup.SIMHASH_BITS
 
 
 def _simhash_oracle() -> str:
@@ -1193,9 +1170,7 @@ def _simhash_oracle() -> str:
     doc="SimHash(32-bit) exact-collision dedup buckets.",
 )
 def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash_buckets(
-        t(spark, sf_dir, "documents"), bits=_SIMHASH_BITS
-    )
+    return dedup.simhash_buckets(t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1446,9 +1421,7 @@ def _ivf2_k1_for(n: int) -> int:
     return max(2, -(-n // (_IVF_OCC * _IVF2_TOPK_K2)))
 
 
-def _ivf2_topk_oracle(
-    k1: int | str, k2: int, coarse_iters: int, fine_iters: int
-) -> str:
+def _ivf2_topk_oracle() -> str:
     """Unrolled two-level IVF fit + composite-bucket search as pure
     DuckDB SQL: the coarse level is _ivf_build_oracle's k-means; the
     fine level replays similarity.ivf2_fit bit-for-bit (per-cell
@@ -1456,7 +1429,9 @@ def _ivf2_topk_oracle(
     ties at round_dp=6, per-dim means rounded half-away at dp=12,
     empty/all-zero sub-cells keep their previous centroid); the search
     replays ivf2_assign's composite bucket (cell * (max fine + 1) +
-    fine) and ivf_topk's within-bucket rank."""
+    fine) and ivf_topk's within-bucket rank. One k-means round per
+    level, as ann_ivf2_topk fits them."""
+    k1, k2, coarse_iters, fine_iters = _IVF2_K1_SQL, _IVF2_TOPK_K2, 1, 1
     ip = "list_inner_product"
 
     def unit(e: str) -> str:
@@ -1548,9 +1523,7 @@ def _ivf2_topk_oracle(
 
 @register(
     "ann_ivf2_topk",
-    _ivf2_topk_oracle(
-        k1=_IVF2_K1_SQL, k2=_IVF2_TOPK_K2, coarse_iters=1, fine_iters=1
-    ),
+    _ivf2_topk_oracle(),
     doc="two-level IVF SEARCH at k1>1 (r10 verdict residual #1): coarse "
     "k-means (k1 scaled to corpus size so composite buckets keep "
     f"~{_IVF_OCC} occupancy, 1 round) -> distributed fine fit "
@@ -1600,7 +1573,7 @@ def ann_ivf2_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpoint each branch would recompute the whole fit+assign
     # chain. At 100 TB this is the real workflow anyway: the assignment
     # is a persisted index table, the search reads it twice.
-    return similarity.ivf_topk(assigned, k=1, cell_col="bucket", n_rows=n)
+    return similarity.ivf_topk(assigned, cell_col="bucket", n_rows=n)
 
 
 @register(
@@ -1640,7 +1613,7 @@ def ann_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment stays on its unrolled exact path — its k*dim fits the
     # codegen budget and its plan shape is lint-pinned
     return similarity.ivf_topk(
-        assigned, k=1, cell_col="cell",
+        assigned, cell_col="cell",
         n_rows=_table_n_rows(sf_dir, "embeddings"),
     )
 
@@ -1680,7 +1653,6 @@ def embedding_cosine_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pair dots) collapses to one BLAS call per cell
     return similarity.cosine_neardup_pairs(
         t(spark, sf_dir, "embeddings"),
-        threshold=0.4,
         n_rows=_table_n_rows(sf_dir, "embeddings"),
     )
 
@@ -1859,8 +1831,6 @@ def streaming_latest_per_key_ttl_q(spark: SparkSession, sf_dir: str) -> DataFram
     try:
         stream = latest_per_key_stream_ttl(
             normalized_stream(read_jsonl_stream(spark, in_dir)),
-            ttl="6 hours",
-            watermark_delay="1 hour",
         )
         qn = _run_stream_to_memory(
             spark, stream, "latest_ttl_stream_", sf_dir, work, "update"
@@ -1884,7 +1854,7 @@ from uc_historic_data_importer_spark.operators import packing  # noqa: E402
 
 @register(
     "pack_sequences",
-    packing.pack_sql(_TOKENS_SQL, budget=128, n_shards=8),
+    packing.pack_sql(),
     doc="concat-and-chunk sequence packing plan: each document's token "
     "span and context-window ids in its shard's packed stream. Sharded "
     "prefix sum (md5_i64(doc_id) % 8) — ONE window shuffle whose "
@@ -1892,9 +1862,7 @@ from uc_historic_data_importer_spark.operators import packing  # noqa: E402
     "shard count scales with the cluster at 100 TB.",
 )
 def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return packing.pack_concat_chunks(
-        t(spark, sf_dir, "documents"), budget=128, n_shards=8
-    )
+    return packing.pack_concat_chunks(t(spark, sf_dir, "documents"))
 
 
 def _pii_aug_sql() -> str:
@@ -2096,7 +2064,7 @@ sh4 AS (
     f"""
     WITH {_4GRAM_CTE},
     split AS (
-      SELECT doc_id, {sampling.split_sql("doc_id", 0.05, 0.05)} AS split
+      SELECT doc_id, {sampling.split_sql()} AS split
       FROM documents
     ),
     te AS (
@@ -2117,22 +2085,17 @@ sh4 AS (
     "gram exchange (operators/dedup.py::ngram_contamination).",
 )
 def ngram_decontamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = sampling.split_assign(
-        t(spark, sf_dir, "documents"), "doc_id", 0.05, 0.05
-    )
+    docs = sampling.split_assign(t(spark, sf_dir, "documents"))
     train = docs.filter(F.col("split") == "train")
     test = docs.filter(F.col("split") == "test")
-    return dedup.ngram_contamination(train, test, n=4)
-
-
-_MIXTURE_WEIGHTS = {"src0": 2.5, "src1": 0.25, "src2": 0.0}
+    return dedup.ngram_contamination(train, test)
 
 
 @register(
     "mixture_sample_documents",
     f"""
     SELECT doc_id, source, CAST(copy_idx AS INT) AS copy_idx
-    FROM ({sampling.mixture_sql(_MIXTURE_WEIGHTS)})
+    FROM ({sampling.mixture_sql()})
     """,
     doc="domain-mixture construction (DoReMi-style reweighting): "
     "deterministic per-domain up/down-sampling with an epoch index — "
@@ -2143,15 +2106,13 @@ _MIXTURE_WEIGHTS = {"src0": 2.5, "src1": 0.25, "src2": 0.0}
     "(operators/sampling.py::mixture_sample).",
 )
 def mixture_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = sampling.mixture_sample(
-        t(spark, sf_dir, "documents"), _MIXTURE_WEIGHTS
-    )
+    out = sampling.mixture_sample(t(spark, sf_dir, "documents"))
     return out.select("doc_id", "source", F.col("copy_idx").cast("int"))
 
 
 @register(
     "chunk_spans_documents",
-    packing.chunk_sql(_TOKENS_SQL, size=48, stride=24),
+    packing.chunk_sql(),
     doc="overlapping token-window chunking for RAG/embedding ingestion "
     "(size 48, stride 24): per-(doc, chunk) offsets + chunk text, "
     "map-only posexplode with ceil(n_tokens/stride) local fan-out — "
@@ -2159,9 +2120,7 @@ def mixture_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "zero-width row (operators/packing.py::chunk_spans).",
 )
 def chunk_spans_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return packing.chunk_spans(
-        t(spark, sf_dir, "documents"), size=48, stride=24
-    )
+    return packing.chunk_spans(t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -2243,13 +2202,11 @@ def cdc_merge_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from uc_historic_data_importer_spark.operators.layout import zorder_key_sql as _zsql  # noqa: E402
 
-_Z_EXPRS_SQL = ["(l_partkey & 65535)", "(l_suppkey & 65535)"]
-
 
 @register(
     "zorder_stats_lineitem",
     f"""
-    SELECT ({_zsql(_Z_EXPRS_SQL, bits=16)} >> 12) AS z_bucket,
+    SELECT ({_zsql()} >> 12) AS z_bucket,
            count(*) AS n_rows,
            min(l_partkey) AS min_part, max(l_partkey) AS max_part,
            min(l_suppkey) AS min_supp, max(l_suppkey) AS max_supp
@@ -2276,7 +2233,6 @@ def zorder_stats_lineitem_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").cast("long").bitwiseAND(mask),
             F.col("l_suppkey").cast("long").bitwiseAND(mask),
         ],
-        bits=16,
     )
     return (
         li.select(
@@ -2330,18 +2286,18 @@ def bpe_token_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.bpe_token_stats(t(spark, sf_dir, "documents"))
 
 
-def _pq_oracle(
-    m: int = 4, k: int = 4, iters: int = 1, dim: int = 64,
-    query_id: int = 0, topk: int = 10, same_cell_only: bool = False,
-) -> str:
+def _pq_oracle(topk: int = 10, same_cell_only: bool = False) -> str:
     """Unrolled product-quantization fit + encode + ADC search as pure
     DuckDB SQL (operators/pq.py semantics, same rounding discipline as
     _ivf_build_oracle): per subspace, k-means init = subvectors of the k
-    lowest ids, `iters` assign/update rounds (means rounded away-from-
+    lowest ids, PQ_ITERS assign/update rounds (means rounded away-from-
     zero at 12 dp, empty codes keep the previous centroid via coalesce),
     then argmin encoding and the LUT distance sum — every float passes
     an explicit round before any argmin/rank, so the replay is exact."""
-    sub = dim // m
+    from uc_historic_data_importer_spark.operators import pq
+
+    m, k, iters, query_id = pq.PQ_M, pq.PQ_K, pq.PQ_ITERS, pq.QUERY_ID
+    sub = 64 // m  # the embeddings table's dim
     ip = "list_inner_product"
 
     def l2(a: str, b: str) -> str:
@@ -2432,7 +2388,7 @@ def _pq_oracle(
 
 @register(
     "ann_pq_topk",
-    _pq_oracle(m=4, k=4, iters=1, dim=64, query_id=0, topk=10),
+    _pq_oracle(topk=10),
     doc="product quantization ADC search (operators/pq.py, Jégou et al. "
     "2011 / FAISS IVF-PQ layout): per-subspace deterministic L2 k-means "
     "codebooks (m=4, k=4, 1 round), map-only argmin encoding to m small "
@@ -2445,15 +2401,13 @@ def ann_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings")
-    books = _memo(
-        ("pq_fit", sf_dir, 4, 4, 1), lambda: pq.pq_fit(emb, m=4, k=4, iters=1)
-    )
+    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
     q_row = _memo(
         ("qrow", sf_dir, 0),
         lambda: emb.filter(F.col("vec_id") == 0).first(),
     )
     qv = [float(x) for x in q_row["embedding"]]
-    return pq.pq_topk(emb, books, qv, k=10, exclude_id=0)
+    return pq.pq_topk(emb, books, qv, k=10)
 
 
 @register(
@@ -2463,7 +2417,7 @@ def ann_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, source, n_chars,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {sampling.weighted_key_sql('doc_id', 'n_chars')} DESC,
+               ORDER BY {sampling.weighted_key_sql()} DESC,
                         doc_id) AS rk
       FROM documents WHERE n_chars > 0
     ) WHERE rk <= 5
@@ -2478,16 +2432,12 @@ def ann_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def weighted_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.weighted_sample(
         t(spark, sf_dir, "documents"),
-        id_col="doc_id",
-        weight_col="n_chars",
-        n_per_group=5,
-        group_col="source",
     ).select("doc_id", "source", "n_chars")
 
 
 @register(
     "ann_ivfpq_topk",
-    _pq_oracle(m=4, k=4, iters=1, dim=64, query_id=0, topk=10,
+    _pq_oracle(topk=10,
                same_cell_only=True),
     doc="the full IVF-PQ search layout (FAISS IndexIVFPQ): the coarse "
     "quantizer (here the pretrained `label` cell, as in ann_ivf_topk) "
@@ -2501,9 +2451,7 @@ def ann_ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings")
-    books = _memo(
-        ("pq_fit", sf_dir, 4, 4, 1), lambda: pq.pq_fit(emb, m=4, k=4, iters=1)
-    )
+    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
     q_row = _memo(
         ("qrow", sf_dir, 0),
         lambda: emb.filter(F.col("vec_id") == 0).first(),
@@ -2511,7 +2459,7 @@ def ann_ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = [float(x) for x in q_row["embedding"]]
     cell = q_row["label"]
     candidates = emb.filter(F.col("label") == cell)
-    return pq.pq_topk(candidates, books, qv, k=10, exclude_id=0)
+    return pq.pq_topk(candidates, books, qv, k=10)
 
 
 @register(
@@ -2607,9 +2555,7 @@ def profile_orders_columns_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def k_anonymity_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import audit
 
-    return audit.k_anonymity_audit(
-        t(spark, sf_dir, "customer"), ["c_nationkey", "c_mktsegment"], k=8
-    )
+    return audit.k_anonymity_audit(t(spark, sf_dir, "customer"))
 
 
 def _incremental_lsh_oracle() -> str:
@@ -2655,9 +2601,7 @@ def dedup_incremental_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     incoming = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    return dedup.lsh_join_incremental(
-        incoming, corpus, num_perms=_NUM_PERMS, bands=_BANDS
-    )
+    return dedup.lsh_join_incremental(incoming, corpus)
 
 
 @register(
@@ -2703,7 +2647,7 @@ def media_wav_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             scale = 100 + (i % 10) * 50
             reps = 50 + i % 20
             samples = [((j % p) - p // 2) * scale for j in range(p * reps)]
-            return ac.encode_wav(8000, samples)
+            return ac.encode_wav(samples)
 
         return ids.map(build)
 
@@ -2749,7 +2693,6 @@ def media_mp4_meta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 320 + (i % 8) * 80,
                 240 + (i % 6) * 60,
                 1000 + (i % 100) * 250,
-                timescale=600,
             )
 
         return ids.map(build)
@@ -2825,9 +2768,7 @@ def curriculum_order_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the same (doc_id, component) assignment.",
 )
 def dedup_components_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), num_perms=_NUM_PERMS, bands=_BANDS
-    )
+    pairs = dedup.minhash_lsh_pairs(t(spark, sf_dir, "documents"))
     return dedup.connected_components_star(pairs)
 
 
@@ -2863,7 +2804,7 @@ def _dedup_apply_oracle() -> str:
 )
 def dedup_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, num_perms=_NUM_PERMS, bands=_BANDS)
+    pairs = dedup.minhash_lsh_pairs(docs)
     comp = dedup.connected_components(pairs)
     losers = comp.filter(F.col("component") != F.col("doc_id")).select("doc_id")
     return docs.join(losers, "doc_id", "left_anti").select(
@@ -2888,7 +2829,7 @@ def dedup_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
            CAST(cum_tokens AS BIGINT) AS cum_tokens
-    FROM cum WHERE cum_tokens <= 900
+    FROM cum WHERE cum_tokens <= {sampling.TOKEN_BUDGET}
     """,
     doc="per-domain token quota (operators/sampling.py::"
     "token_budget_sample): keep each source's hash-ordered document "
@@ -2902,9 +2843,7 @@ def token_budget_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFra
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", "source", F.size(tokens_col(F.col("text"))).alias("n_tokens")
     )
-    out = sampling.token_budget_sample(
-        docs, budget_tokens=900, n_tokens_col="n_tokens"
-    )
+    out = sampling.token_budget_sample(docs)
     return out.select(
         "doc_id", "source",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -2982,7 +2921,7 @@ def media_perceptual_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
           ORDER BY {md5_i64_sql("CAST(doc_id AS VARCHAR)")}, doc_id
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
         FROM uniq
-      ) WHERE cum <= 900
+      ) WHERE cum <= {sampling.TOKEN_BUDGET}
     )
     SELECT f.source,
            count(*) AS n_docs,
@@ -3024,9 +2963,7 @@ def curation_funnel_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rk") == 1)
         .drop("_rk")
     )
-    budgeted = sampling.token_budget_sample(
-        uniq, budget_tokens=900, n_tokens_col="n_tokens"
-    )
+    budgeted = sampling.token_budget_sample(uniq)
     q_ids = quality.select("doc_id", F.lit(1).alias("_q"))
     u_ids = uniq.select("doc_id", F.lit(1).alias("_u"))
     b_ids = budgeted.select(
@@ -3051,9 +2988,10 @@ def curation_funnel_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _source_overlap_oracle(num_perms: int = 16) -> str:
+def _source_overlap_oracle() -> str:
     """Per-source MinHash signatures -> pairwise agreement counts, with
     the exact perm constants operators/dedup.py uses."""
+    num_perms = dedup.NUM_PERMS
     consts = perm_constants(num_perms)
     mins = ",\n             ".join(
         f"min((h * {a} + {b}) % {MERSENNE_61}) AS mh{j}"
@@ -3094,7 +3032,7 @@ def _source_overlap_oracle(num_perms: int = 16) -> str:
 
 @register(
     "source_overlap_matrix",
-    _source_overlap_oracle(_NUM_PERMS),
+    _source_overlap_oracle(),
     doc="cross-source overlap matrix (operators/dedup.py::"
     "source_minhash_overlap): estimated shingle-set Jaccard between "
     "every source pair from per-source MinHash signatures — the "
@@ -3107,13 +3045,11 @@ def _source_overlap_oracle(num_perms: int = 16) -> str:
     "MinHash dedup, sharing its engine-portable perm constants.",
 )
 def source_overlap_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.source_minhash_overlap(
-        t(spark, sf_dir, "documents"), num_perms=_NUM_PERMS
-    )
+    return dedup.source_minhash_overlap(t(spark, sf_dir, "documents"))
 
 
 def _recall_audit_oracle() -> str:
-    pq_sql = _pq_oracle(m=4, k=4, iters=1, dim=64, query_id=0, topk=10)
+    pq_sql = _pq_oracle(topk=10)
     return f"""
     WITH bf AS (
       SELECT b.vec_id AS neighbor_id
@@ -3151,15 +3087,13 @@ def ann_recall_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings")
-    books = _memo(
-        ("pq_fit", sf_dir, 4, 4, 1), lambda: pq.pq_fit(emb, m=4, k=4, iters=1)
-    )
+    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
     q_row = _memo(
         ("qrow", sf_dir, 0),
         lambda: emb.filter(F.col("vec_id") == 0).first(),
     )
     qv = [float(x) for x in q_row["embedding"]]
-    approx = pq.pq_topk(emb, books, qv, k=10, exclude_id=0).select(
+    approx = pq.pq_topk(emb, books, qv, k=10).select(
         "neighbor_id"
     )
     exact = similarity.cosine_topk(
@@ -3216,7 +3150,7 @@ seg AS (
     "without newline structure.",
 )
 def segment_dup_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.segment_dup_stats(t(spark, sf_dir, "documents"), k=_SEG_K)
+    return text.segment_dup_stats(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3234,9 +3168,7 @@ def segment_dup_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "against.",
 )
 def boilerplate_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.boilerplate_segments(
-        t(spark, sf_dir, "documents"), k=_SEG_K, min_docs=3
-    )
+    return text.boilerplate_segments(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3292,9 +3224,7 @@ def dedup_best_representative_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "heterogeneous sources.",
 )
 def relative_quality_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.relative_quality_filter(
-        t(spark, sf_dir, "documents"), drop_frac=0.25
-    )
+    return text.relative_quality_filter(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3358,7 +3288,7 @@ def curation_pipeline_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = t(spark, sf_dir, "documents")
-    segstat = text.segment_dup_stats(docs, k=_SEG_K).select(
+    segstat = text.segment_dup_stats(docs).select(
         "doc_id", "dup_ratio_bp"
     )
     base = text.with_tokens(docs).withColumn(
@@ -3443,7 +3373,7 @@ def dedup_apply_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, num_perms=_NUM_PERMS, bands=_BANDS)
+    pairs = dedup.minhash_lsh_pairs(docs)
     comp = dedup.connected_components(pairs)
     lab = docs.join(comp, "doc_id", "left").withColumn(
         "comp", F.coalesce(F.col("component"), F.col("doc_id"))
@@ -3502,12 +3432,10 @@ def segment_cleaned_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("boilerplate", sf_dir, _SEG_K, 3, 5000),
         lambda: [
             r["segment"]
-            for r in text.boilerplate_segments(
-                docs, k=_SEG_K, min_docs=3, top_n=5000
-            ).collect()
+            for r in text.boilerplate_segments(docs, top_n=5000).collect()
         ],
     )
-    cleaned = text.segment_clean_docs(docs, bp, k=_SEG_K)
+    cleaned = text.segment_clean_docs(docs, bp)
     return cleaned.select(
         "doc_id",
         F.col("n_segments").cast("long").alias("n_segments"),
@@ -3517,7 +3445,9 @@ def segment_cleaned_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _profile_drift_oracle() -> str:
-    cols = ["o_orderstatus", "o_custkey", "o_totalprice"]
+    from uc_historic_data_importer_spark.operators import audit
+
+    cols = audit.DRIFT_COLS
     sides = {"o": "o_orderdate < TIMESTAMP '1998-01-01'",
              "n": "o_orderdate >= TIMESTAMP '1998-01-01'"}
     ctes = []
@@ -3565,13 +3495,12 @@ def profile_drift_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audit.profile_drift(
         orders.filter(F.col("o_orderdate") < cut),
         orders.filter(F.col("o_orderdate") >= cut),
-        ["o_orderstatus", "o_custkey", "o_totalprice"],
     )
 
 
 # --- exact substring-level dedup (Lee et al. ExactSubstr) -------------------
 
-_SUBSTR_K = 8
+_SUBSTR_K = text.SPAN_K
 
 _SUBSTR_SPAN_CTE = f"""
 toks AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents),
@@ -3621,7 +3550,7 @@ spans AS (
     "dedup at k-token resolution.",
 )
 def substring_dup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.duplicate_spans(t(spark, sf_dir, "documents"), k=_SUBSTR_K)
+    return text.duplicate_spans(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3664,11 +3593,11 @@ def substring_dup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kept_tokens == n_tokens - dup_tokens, pinned in pytest.",
 )
 def substring_dedup_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.remove_duplicate_spans(t(spark, sf_dir, "documents"), k=_SUBSTR_K)
+    return text.remove_duplicate_spans(t(spark, sf_dir, "documents"))
 
 
-_SHARD_TARGET = 2000
-_SHARD_BUCKETS = 256
+_SHARD_TARGET = packing.SHARD_TARGET
+_SHARD_BUCKETS = packing.SHARD_BUCKETS
 
 
 @register(
@@ -3701,14 +3630,10 @@ _SHARD_BUCKETS = 256
     "spec, proving the hierarchical plan computes the same line.",
 )
 def shard_assign_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from uc_historic_data_importer_spark.operators import packing
-
     docs = text.with_tokens(t(spark, sf_dir, "documents")).select(
         "doc_id", "n_tokens"
     )
-    return packing.shard_assign_by_tokens(
-        docs, target_tokens=_SHARD_TARGET, n_buckets=_SHARD_BUCKETS
-    )
+    return packing.shard_assign_by_tokens(docs)
 
 
 @register(
@@ -3740,7 +3665,7 @@ def semantic_decontamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     test = emb.filter(F.col("vec_id") % 20 == 0)
     train = emb.filter(F.col("vec_id") % 20 != 0)
-    return similarity.semantic_decontamination(train, test, threshold=0.5)
+    return similarity.semantic_decontamination(train, test)
 
 
 _BM25_TERMS = ("customer", "vector", "merge")
@@ -3858,9 +3783,7 @@ def streaming_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_intersection_users",
-    sketches.hll_intersection_sql(
-        "CAST(user_id AS VARCHAR)", "events", "event_type"
-    ),
+    sketches.hll_intersection_sql(),
     doc="sketch-algebra distinct intersection (sketches.hll_pairwise_"
     "intersection): per event-type pair, |A∩B| distinct users via "
     "inclusion–exclusion over deterministic HLL registers — union "
@@ -3870,9 +3793,7 @@ def streaming_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "artifacts; per-set estimates broadcast.",
 )
 def hll_intersection_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sketches.hll_pairwise_intersection(
-        t(spark, sf_dir, "events"), "user_id", "event_type"
-    )
+    return sketches.hll_pairwise_intersection(t(spark, sf_dir, "events"))
 
 
 @register(
@@ -3904,9 +3825,7 @@ def hll_intersection_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "document complement is segment_dup_stats/boilerplate_segments.",
 )
 def indoc_segment_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.dedup_segments_within_doc(
-        t(spark, sf_dir, "documents"), k=_SEG_K
-    )
+    return text.dedup_segments_within_doc(t(spark, sf_dir, "documents"))
 
 
 _CDC_K, _CDC_DIV = 3, 8
@@ -4410,9 +4329,6 @@ def streaming_gap_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         stream = session_counts_stream(
             _parsed_event_stream(spark, in_dir),
-            gap="30 minutes",
-            key_col="user_id",
-            ts_col="event_time",
         )
         qn = _run_stream_to_memory(
             spark, stream, "gapsess_stream_", sf_dir, work, "complete"
@@ -4486,13 +4402,7 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         joined = interval_join_stream(
             left,
-            right,
-            lower_ms=1,
-            upper_ms=86400000,
-            left_ts="l_ts",
-            right_ts="r_ts",
-            equi_keys=("user_id",),
-            watermark_delay="25 hours",  # must cover the band for state
+            right,  # must cover the band for state
         )
         out = joined.select(
             F.col("l.user_id").alias("user_id"),
@@ -4558,7 +4468,7 @@ def _semdedup_oracle() -> str:
 def semdedup_embeddings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, cents = _ivf_fit(spark, sf_dir)
     return similarity.semdedup(
-        emb, cents, threshold=_SEMDEDUP_T,
+        emb, cents,
         n_rows=_table_n_rows(sf_dir, "embeddings"),
     )
 
@@ -4624,8 +4534,6 @@ def fuzzy_match_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return text.fuzzy_match_pairs(
         keys,
-        key_col="head",
-        id_col="doc_id",
         max_dist=_FUZZY_D,
         q=_FUZZY_Q,
         max_gram_df=_FUZZY_DF,
@@ -4636,7 +4544,7 @@ def fuzzy_match_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 additions
 # ---------------------------------------------------------------------------
 
-_KMV_K = 64
+_KMV_K = sketches.KMV_K
 
 
 @register(
@@ -4673,9 +4581,6 @@ _KMV_K = 64
 def kmv_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.kmv_distinct(
         t(spark, sf_dir, "events"),
-        value_col="user_id",
-        group_cols=("event_type",),
-        k=_KMV_K,
     )
 
 
@@ -4757,7 +4662,7 @@ def unigram_logprob_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order by (count desc, gram).",
 )
 def token_ngram_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.token_ngram_topk(t(spark, sf_dir, "documents"), n=2, topk=20)
+    return text.token_ngram_topk(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4792,7 +4697,7 @@ def token_ngram_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "for the log-histogram quantile sketch behind the same contract.",
 )
 def doc_length_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.length_outliers(t(spark, sf_dir, "documents"), z_cut=1.5)
+    return text.length_outliers(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4867,9 +4772,7 @@ def doc_length_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value itself. Deterministic bucket rule -> DuckDB replays it.",
 )
 def doc_length_outliers_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.length_outliers(
-        t(spark, sf_dir, "documents"), z_cut=1.5, exact=False
-    )
+    return text.length_outliers(t(spark, sf_dir, "documents"), exact=False)
 
 
 @register(
@@ -4890,7 +4793,7 @@ def doc_length_outliers_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stratified_kfold_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.kfold_assign(
-        t(spark, sf_dir, "documents"), n_folds=5
+        t(spark, sf_dir, "documents")
     ).select("doc_id", "source", "fold")
 
 
@@ -4924,9 +4827,7 @@ def l_diversity_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer").withColumn(
         "bal_band", F.floor(F.col("c_acctbal") / 1000).cast("long")
     )
-    return audit.l_diversity_audit(
-        cust, ["c_nationkey", "c_mktsegment"], "bal_band", l=8
-    )
+    return audit.l_diversity_audit(cust)
 
 
 def _mh_matches_sql() -> str:
@@ -4958,9 +4859,7 @@ def _mh_matches_sql() -> str:
     "basis points.",
 )
 def minhash_jaccard_estimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_jaccard_estimates(
-        t(spark, sf_dir, "documents"), num_perms=_NUM_PERMS, bands=_BANDS
-    )
+    return dedup.minhash_jaccard_estimates(t(spark, sf_dir, "documents"))
 
 
 _RERANK_CAND, _RERANK_K = 50, 10
@@ -4973,7 +4872,7 @@ _RERANK_CAND, _RERANK_K = 50, 10
     q AS (SELECT v FROM e WHERE vec_id = 0),
     cand AS (
       SELECT neighbor_id FROM (
-        {_pq_oracle(m=4, k=4, iters=1, dim=64, query_id=0, topk=_RERANK_CAND)}
+        {_pq_oracle(topk=_RERANK_CAND)}
       )
     ),
     exact AS (
@@ -5001,17 +4900,13 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings")
-    books = _memo(
-        ("pq_fit", sf_dir, 4, 4, 1), lambda: pq.pq_fit(emb, m=4, k=4, iters=1)
-    )
+    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
     q_row = _memo(
         ("qrow", sf_dir, 0),
         lambda: emb.filter(F.col("vec_id") == 0).first(),
     )
     qv = [float(x) for x in q_row["embedding"]]
-    cand = pq.pq_topk(
-        emb, books, qv, k=_RERANK_CAND, exclude_id=0
-    ).select("neighbor_id")
+    cand = pq.pq_topk(emb, books, qv, k=_RERANK_CAND).select("neighbor_id")
     restricted = emb.join(
         cand.withColumnRenamed("neighbor_id", "vec_id"), "vec_id"
     )
@@ -5068,7 +4963,7 @@ def media_wav_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             scale = 100 + (i % 10) * 50
             reps = 50 + i % 20
             samples = [((j % p) - p // 2) * scale for j in range(p * reps)]
-            return ac.encode_wav(8000, samples)
+            return ac.encode_wav(samples)
 
         return ids.map(build)
 
@@ -5077,7 +4972,7 @@ def media_wav_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("audio").alias("kind"),
         mk_wav(F.col("doc_id")).alias("payload"),
     )
-    out = multimodal.audio_window_features(media, window=80)
+    out = multimodal.audio_window_features(media)
     return out.select(
         "media_id", "win_idx",
         F.round("win_rms", 6).alias("win_rms"),
@@ -5408,9 +5303,7 @@ def entry_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    latest = latest_per_key_window(
-        norm.filter(F.col("valid")), key_cols=("table", "key_hex")
-    )
+    latest = latest_per_key_window(norm.filter(F.col("valid")))
     return latest.groupBy("collection").agg(
         F.count(F.lit(1)).alias("n_current_keys"),
         F.max("version").alias("max_version"),
@@ -5446,7 +5339,7 @@ def fk_orphans_lineitem_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     parents = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 != 0)
-    return audit.referential_orphans(li, parents, "l_orderkey", "o_orderkey")
+    return audit.referential_orphans(li, parents)
 
 
 @register(
@@ -5467,4 +5360,4 @@ def fk_orphans_lineitem_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "observable (the short-doc twin of jaccard_dropped_shingles).",
 )
 def shingle_coverage_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.shingle_coverage_stats(t(spark, sf_dir, "documents"), n=3)
+    return dedup.shingle_coverage_stats(t(spark, sf_dir, "documents"))

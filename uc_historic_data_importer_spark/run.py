@@ -10,10 +10,11 @@ the Spark pipeline:
     run mode (import/...)       --run-mode
     skip.earlier.than           --skip-earlier-than
     skip.later.than             --skip-later-than
-    skip.existing.records       --skip-existing / --existing-kv
+    skip.existing.records       --existing-kv (the KV snapshot; given = on)
     perform.size.filtering      --max-object-size (0 = off)
     thread.count                --parallelism (cluster-wide, not a pool)
     data.key.service.url        --dks-url (omit -> sidecar plaintext key)
+    (T8 re-encryption)          --data-key (base64 AES key; given = on)
     (output)                    --kv-path, --manifest-dir
 
 Prints a run report (per-file F5 counters + totals, HBaseWriter.kt:309-317)
@@ -48,17 +49,18 @@ def build_parser() -> argparse.ArgumentParser:
                    choices=["import", "manifest", "import_and_manifest"])
     p.add_argument("--skip-earlier-than", default=None)
     p.add_argument("--skip-later-than", default=None)
-    p.add_argument("--skip-existing", action="store_true", default=False)
     p.add_argument("--existing-kv", default=None,
-                   help="path of the KV snapshot for the exists anti-join")
+                   help="path of the KV snapshot; given, records already "
+                        "in it are skipped (the F4 exists anti-join)")
     p.add_argument("--max-object-size", type=int, default=2_200_000_000,
                    help="0 disables size filtering")
     p.add_argument("--parallelism", type=int, default=None)
     p.add_argument("--dks-url", default=None,
                    help="HTTP data-key service; omit to use the sidecar "
                         "plaintextDatakey (test env)")
-    p.add_argument("--encrypt-output", action="store_true")
-    p.add_argument("--data-key", default=None, help="base64 AES key for T8")
+    p.add_argument("--data-key", default=None,
+                   help="base64 AES key; given, each record is "
+                        "re-encrypted with it (T8)")
     p.add_argument("--key-encryption-key-id", default="",
                    help="KEK id recorded in the envelope encryption "
                         "block when re-encrypting (the DKS id that "
@@ -191,8 +193,8 @@ def main(argv: list[str] | None = None) -> int:
         run_mode=args.run_mode,
         skip_earlier_than=args.skip_earlier_than,
         skip_later_than=args.skip_later_than,
-        skip_existing=args.skip_existing,
-        encrypt=args.encrypt_output,
+        skip_existing=args.existing_kv is not None,
+        encrypt=args.data_key is not None,
         data_key_b64=args.data_key,
         key_encryption_key_id=args.key_encryption_key_id,
         encrypted_encryption_key=args.encrypted_data_key,
@@ -204,7 +206,7 @@ def main(argv: list[str] | None = None) -> int:
         ),
     )
     existing = None
-    if args.skip_existing and args.existing_kv:
+    if args.existing_kv:
         existing = spark.read.parquet(args.existing_kv)
 
     result = run(

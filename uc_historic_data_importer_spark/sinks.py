@@ -146,6 +146,70 @@ def manifest_lines(df: DataFrame) -> DataFrame:
     )
 
 
+def _clean_owned_dir(out_dir: str, suffix: str) -> None:
+    """Owned-directory pre-clean for a file sink: delete every final
+    ``*<suffix>`` file and every attempt temp under ``out_dir``. File
+    names are input- or partition-derived, so a re-run that writes
+    fewer files would otherwise return (and upload or bulk-load) a
+    previous run's leftovers as current output."""
+    for dirpath, _dirs, files in os.walk(out_dir):
+        for f in files:
+            if f.endswith(suffix) or f"{suffix}.tmp-" in f:
+                os.remove(os.path.join(dirpath, f))
+
+
+def _owned_files(out_dir: str, suffix: str) -> list[str]:
+    return sorted(
+        os.path.join(dirpath, f)
+        for dirpath, _dirs, files in os.walk(out_dir)
+        for f in files
+        if f.endswith(suffix)
+    )
+
+
+@contextlib.contextmanager
+def _task_outputs(open_output):
+    """The task-safe file protocol of both file sinks. The yielded
+    ``output(final)`` returns the objects ``open_output(tmp)`` opened
+    for ``final``, opening it under an ATTEMPT-UNIQUE temp name on first
+    use (task retries and speculative attempts never share a file). On
+    exit every returned object is closed, in order, even if one close
+    raises (ENOSPC on flush) — a first-failure abort would leak the
+    rest of the fds for the executor's lifetime — and the first close
+    error is raised only when the body succeeded, never masking the
+    body's own exception. Only a fully written attempt reaches the
+    ``os.replace`` renames; a crashed one leaves temp orphans that
+    ``_clean_owned_dir`` removes on the next run."""
+    import uuid
+
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    attempt = str(ctx.taskAttemptId()) if ctx is not None else uuid.uuid4().hex
+    outputs: dict[str, tuple[str, tuple]] = {}  # final -> (temp, objects)
+
+    def output(final: str) -> tuple:
+        if final not in outputs:
+            tmp = f"{final}.tmp-{attempt}"
+            outputs[final] = (tmp, open_output(tmp))
+        return outputs[final][1]
+
+    try:
+        yield output
+    finally:
+        errs = []
+        for _tmp, objects in outputs.values():
+            for obj in objects:
+                try:
+                    obj.close()
+                except Exception as e:  # noqa: BLE001 — re-raised below
+                    errs.append(e)
+        if errs and sys.exc_info()[0] is None:
+            raise errs[0]
+    for final, (tmp, _objects) in outputs.items():
+        os.replace(tmp, final)
+
+
 def manifest_sink(df: DataFrame, out_dir: str) -> list[str]:
     """W5/W6: write one CSV per (db, uncoalesced collection, file number),
     named `db.<db>.<collection>-%06d.csv`.
@@ -167,7 +231,7 @@ def manifest_sink(df: DataFrame, out_dir: str) -> list[str]:
     sortWithinPartitions — so winner identity is irrelevant). A killed
     attempt leaves only a `.tmp-*` orphan, which the final listing
     ignores and which the NEXT run into the same out_dir deletes up
-    front (same owned-directory pre-clean as write_hfiles — without it
+    front (``_clean_owned_dir``, shared with write_hfiles — without it
     zombie-attempt orphans accumulate forever). CONTRACT: out_dir must
     be a filesystem visible to both the
     driver and the executors (local mode, NFS, or a fuse mount) — the
@@ -175,54 +239,14 @@ def manifest_sink(df: DataFrame, out_dir: str) -> list[str]:
     production S3 manifest store routes through df.write.csv instead
     (see the module docstring's W6 note)."""
     os.makedirs(out_dir, exist_ok=True)
-    # owned-directory pre-clean, final CSVs INCLUDED (same contract as
-    # write_hfiles): file names are input-derived, so a re-run that
-    # processes fewer inputs would otherwise return — and upload — a
-    # previous run's leftover manifests as if they were current output
-    for f in os.listdir(out_dir):
-        if f.endswith(".csv") or ".csv.tmp-" in f:
-            os.remove(os.path.join(out_dir, f))
+    _clean_owned_dir(out_dir, ".csv")
     rows = manifest_lines(df)
 
     def _write(partition_rows):
-        import uuid
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        attempt = (
-            str(ctx.taskAttemptId()) if ctx is not None else uuid.uuid4().hex
-        )
-        # final path -> (temp path, handle)
-        handles: dict[str, tuple[str, object]] = {}
-        try:
+        with _task_outputs(lambda tmp: (open(tmp, "w", encoding="utf-8"),)) as output:
             for r in partition_rows:
                 name = f"db.{r['_db']}.{r['_uncoalesced_collection']}-{int(r['_file_number']):06d}.csv"
-                path = os.path.join(out_dir, name)
-                ent = handles.get(path)
-                if ent is None:
-                    tmp = f"{path}.tmp-{attempt}"
-                    ent = (tmp, open(tmp, "w", encoding="utf-8"))
-                    handles[path] = ent
-                ent[1].write(r["line"] + "\n")
-        finally:
-            # close EVERY handle even if one close raises (ENOSPC on
-            # flush): a first-failure-aborts loop would leak the
-            # remaining fds for the executor's lifetime
-            errs = []
-            for _, fh in handles.values():
-                try:
-                    fh.close()
-                except Exception as e:  # noqa: BLE001 — re-raised below
-                    errs.append(e)
-            if errs and sys.exc_info()[0] is None:
-                # raise ONLY when the body succeeded — raising while an
-                # exception is already propagating would mask it
-                raise errs[0]
-        # only a fully-written attempt reaches the renames; a crashed
-        # attempt's temp files are orphaned, never visible
-        for path, (tmp, _) in handles.items():
-            os.replace(tmp, path)
+                output(os.path.join(out_dir, name))[0].write(r["line"] + "\n")
         return iter(())
 
     (
@@ -235,16 +259,12 @@ def manifest_sink(df: DataFrame, out_dir: str) -> list[str]:
         .rdd.mapPartitions(_write)
         .count()
     )
-    return sorted(
-        os.path.join(out_dir, f) for f in os.listdir(out_dir) if f.endswith(".csv")
-    )
+    return _owned_files(out_dir, ".csv")
 
 
 def hbase_bulkload_layout(
     df: DataFrame,
     n_regions: int = 32,
-    family: str = "cf",
-    qualifier: str = "record",
     region_split_keys: list[bytes] | None = None,
     table: str | None = None,
 ) -> DataFrame:
@@ -265,46 +285,42 @@ def hbase_bulkload_layout(
       n_regions) on the row key — Spark SAMPLES split points, giving
       contiguous, balanced key ranges. Right for a fresh/empty table
       (create it pre-split at these boundaries).
-    - ``region_split_keys=[...]`` — the EXISTING table's region start
-      keys (what `RegionLocator.getStartKeys()[1:]` returns, sorted,
-      first region's implicit empty start key excluded). Each row's
-      region id is the count of split keys <= its key — a pure
-      size(filter(literal array)) expression, no join, no UDF — and the
-      shuffle targets exactly one partition per region. This is the
-      LoadIncrementalHFiles contract: a file crossing a region boundary
-      triggers the load-time split slow path; aligned files are pure
-      renames. At 100 TB the split-key list is region-count-sized
-      (thousands) — a broadcast-literal, not a data-sized structure.
-      Region boundaries are PER TABLE: a multi-table frame must pass a
-      ``dict`` of ``table -> split keys`` (one CASE branch per table in
-      the plan); a bare list with more than one table present raises,
-      because bucketing table B by table A's boundaries silently
-      produces boundary-crossing files — exactly the load-time split
-      slow path this mode exists to avoid. With a bare list, pass
-      ``table=`` to make that single-table check a lazy plan-side
-      raise_error guard; without it the check is an eager probe that
-      executes the upstream lineage once at plan-construction time.
+    - ``region_split_keys=[...]`` with ``table=`` — the EXISTING
+      table's region start keys (what `RegionLocator.getStartKeys()[1:]`
+      returns, sorted, first region's implicit empty start key
+      excluded). Each row's region id is the count of split keys <= its
+      key, and the shuffle targets exactly one partition per region.
+      This is the LoadIncrementalHFiles contract: a file crossing a
+      region boundary triggers the load-time split slow path; aligned
+      files are pure renames. Region boundaries are PER TABLE, so the
+      split list needs ``table=``: bucketing table B by table A's
+      boundaries would silently produce boundary-crossing files.
 
-    sortWithinPartitions orders cells within each prospective HFile.
-    Family/qualifier mirror Config.kt:10-11. Feed the result to
-    ``write_hfiles`` (pure-Python HFile v3 container) or to any
-    connector that wants region-sorted cells."""
+    ``table=`` declares "this frame holds exactly this one table": a
+    lazy raise_error guard on the table column fails the job on any
+    other table name. sortWithinPartitions orders cells within each
+    prospective HFile. Family ``cf`` and qualifier ``record`` mirror
+    Config.kt:10-11. Feed the result to ``write_hfiles`` (pure-Python
+    HFile v3 container) or to any connector that wants region-sorted
+    cells."""
+    if region_split_keys is not None and table is None:
+        raise ValueError(
+            "region_split_keys are one table's region boundaries; pass "
+            "table= with them"
+        )
     cells = df.select(
         F.col("key"),
-        F.lit(family).alias("family"),
-        F.lit(qualifier).alias("qualifier"),
+        F.lit("cf").alias("family"),
+        F.lit("record").alias("qualifier"),
         F.col("version"),
         F.col("envelope").alias("body"),
         F.col("table"),
     )
     if table is not None:
-        # `table=` declares "this frame holds exactly this one table" in
-        # EVERY mode (previously it was silently ignored unless
-        # region_split_keys was a bare list): a lazy map-side
-        # raise_error branch on the table column itself — no eager
-        # probe, nothing executes at plan time, and every downstream
-        # consumer of `table` (partitioning, sort, write_hfiles dirs)
-        # flows through the guard.
+        # a lazy map-side raise_error branch on the table column itself:
+        # nothing executes at plan time, and every downstream consumer
+        # of `table` (partitioning, sort, write_hfiles dirs) flows
+        # through the guard.
         cells = cells.withColumn(
             "table",
             F.when(F.col("table") == F.lit(table), F.col("table")).otherwise(
@@ -325,95 +341,31 @@ def hbase_bulkload_layout(
     # LoadIncrementalHFiles directory in write_hfiles). With a
     # single-table layout the leading constant changes nothing.
     if region_split_keys is not None:
+        # Region id = count of split keys <= row key, as a BALANCED
+        # binary-search CASE tree: O(log n) byte comparisons per row (a
+        # real 100 TB table has THOUSANDS of regions; HBase's own
+        # getStartKeys() lookup is a binary search for the same reason).
+        # key == split counts; NULL/empty keys land in region 0; parity
+        # with the filter-count is property-pinned in tests/test_hfile.py.
+        splits = sorted(region_split_keys)
 
-        def rid_for(splits: list[bytes]):
-            """Region id = count of split keys <= row key, as a BALANCED
-            binary-search CASE tree: O(log n) byte comparisons per row.
-            The previous size(filter(literal array)) form was O(n) per
-            row — immaterial at 32 regions, but a real 100 TB table has
-            THOUSANDS of regions and that put thousands of byte
-            comparisons on every cell's map path (HBase's own
-            getStartKeys() lookup is a binary search for the same
-            reason). Semantics identical to the filter-count, including
-            key == split (counts) and NULL/empty keys (region 0);
-            parity is property-pinned in tests/test_hfile.py."""
-            srt = sorted(splits)
+        def tree(lo: int, hi: int) -> F.Column:
+            # invariant: splits[:lo] <= key, splits[hi:] > key
+            if lo == hi:
+                return F.lit(lo)
+            mid = (lo + hi) // 2
+            return F.when(
+                F.lit(splits[mid]) <= F.col("key"), tree(mid + 1, hi)
+            ).otherwise(tree(lo, mid))
 
-            def tree(lo: int, hi: int) -> F.Column:
-                # invariant: splits[:lo] <= key, splits[hi:] > key
-                if lo == hi:
-                    return F.lit(lo)
-                mid = (lo + hi) // 2
-                return F.when(
-                    F.lit(srt[mid]) <= F.col("key"), tree(mid + 1, hi)
-                ).otherwise(tree(lo, mid))
-
-            return tree(0, len(srt))
-
-        if isinstance(region_split_keys, dict):
-            if not region_split_keys:
-                # an empty dict would leave the CASE expression with no
-                # branches (region_id None -> AttributeError) and pass
-                # repartition(0); fail with the actual misuse instead
-                raise ValueError(
-                    "region_split_keys dict must be non-empty; pass "
-                    "None to let repartitionByRange sample split points"
-                )
-            region_id = None
-            n_parts = 0
-            for tbl, splits in sorted(region_split_keys.items()):
-                branch = rid_for(list(splits))
-                cond = F.col("table") == F.lit(tbl)
-                region_id = (
-                    F.when(cond, branch)
-                    if region_id is None
-                    else region_id.when(cond, branch)
-                )
-                n_parts += len(splits) + 1
-            # a table absent from the dict has no known boundaries —
-            # fail the job rather than guess (raise_error surfaces the
-            # first offending table name)
-            region_id = region_id.otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("no region_split_keys entry for table "),
-                        F.col("table"),
-                    )
-                ).cast("int")
-            )
-        else:
-            splits = sorted(region_split_keys)
-            if table is not None:
-                # single-table already guaranteed by the lazy table
-                # guard above (raise_error on any other table name)
-                region_id = rid_for(splits)
-            else:
-                # no declared table: the single-table check needs an
-                # EAGER probe that executes the full (typically
-                # unpersisted) upstream lineage once — including the
-                # normalization UDF — just to validate. Fine for tests
-                # and small frames; at scale pass ``table=`` (lazy
-                # branch above) or persist upstream first.
-                tables = [
-                    r["table"]
-                    for r in cells.select("table").distinct().limit(2).collect()
-                ]
-                if len(tables) > 1:
-                    raise ValueError(
-                        "a bare region_split_keys list is single-table "
-                        "(region boundaries are per table); pass a dict "
-                        "of table -> split keys for a multi-table frame"
-                    )
-                region_id = rid_for(splits)
-            n_parts = len(splits) + 1
         return (
-            cells.withColumn("_region_id", region_id)
+            cells.withColumn("_region_id", tree(0, len(splits)))
             # hash-partition on (table, region id): every row of a
-            # table's region lands in ONE partition (n_partitions ==
-            # n_regions keeps ids collision-free in expectation;
-            # collisions only co-locate two regions in one task, never
-            # split one — write_hfiles splits files per (table, region))
-            .repartition(n_parts, "table", "_region_id")
+            # region lands in ONE partition (n_partitions == n_regions
+            # keeps ids collision-free in expectation; collisions only
+            # co-locate two regions in one task, never split one —
+            # write_hfiles splits files per (table, region))
+            .repartition(len(splits) + 1, "table", "_region_id")
             .sortWithinPartitions(
                 "table", "key", "family", "qualifier", F.desc("version")
             )
@@ -496,25 +448,23 @@ def write_hfiles(
     written file paths."""
     from uc_historic_data_importer_spark.hfile import COMPRESSION_GZ, HFileWriter
 
-    if os.path.isdir(out_dir):
-        for dirpath, _dirs, files in os.walk(out_dir):
-            for f in files:
-                if f.endswith(".hfile") or ".hfile.tmp-" in f:
-                    os.remove(os.path.join(dirpath, f))
+    _clean_owned_dir(out_dir, ".hfile")
     has_region = "_region_id" in layout.columns
 
-    def _write(partition_rows):
-        import uuid
+    def open_hfile(tmp: str) -> tuple:
+        fh = open(tmp, "wb")
+        # writer first: HFileWriter.close writes the index and trailer
+        return HFileWriter(
+                        fh, compression=COMPRESSION_GZ
+                    ), fh
 
+    def _write(partition_rows):
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         part = ctx.partitionId() if ctx is not None else 0
-        attempt = (
-            str(ctx.taskAttemptId()) if ctx is not None else uuid.uuid4().hex
-        )
-        writers: dict[tuple, tuple[str, str, object, HFileWriter]] = {}
-        try:
+        writers: dict[tuple, HFileWriter] = {}
+        with _task_outputs(open_hfile) as output:
             for r in partition_rows:
                 fam = r["family"]
                 tbl = r["table"]
@@ -523,8 +473,8 @@ def write_hfiles(
                 # regions in one task — a file must never span a region
                 # boundary (LoadIncrementalHFiles' split slow path)
                 region = r["_region_id"] if has_region else None
-                ent = writers.get((tbl, fam, region))
-                if ent is None:
+                w = writers.get((tbl, fam, region))
+                if w is None:
                     stem = (
                         f"part-{part:05d}"
                         if region is None
@@ -535,14 +485,9 @@ def write_hfiles(
                     # distinct() over the table/family columns would
                     # execute the entire upstream plan a second time
                     os.makedirs(fam_dir, exist_ok=True)
-                    final = os.path.join(fam_dir, f"{stem}.hfile")
-                    tmp = f"{final}.tmp-{attempt}"
-                    fh = open(tmp, "wb")
-                    ent = (tmp, final, fh, HFileWriter(
-                        fh, compression=COMPRESSION_GZ
-                    ))
-                    writers[(tbl, fam, region)] = ent
-                ent[3].append_keyvalue(
+                    w = output(os.path.join(fam_dir, f"{stem}.hfile"))[0]
+                    writers[(tbl, fam, region)] = w
+                w.append_keyvalue(
                     keyvalue_bytes(
                         bytes(r["key"]),
                         r["family"].encode(),
@@ -553,37 +498,10 @@ def write_hfiles(
                         else bytes(r["body"]),
                     )
                 )
-        finally:
-            # close EVERY writer+handle even if one close raises
-            # (HFileWriter.close writes index/trailer and can hit
-            # ENOSPC): aborting on the first failure would leak the
-            # remaining open fds in the executor
-            errs = []
-            for _tmp, _final, fh, w in writers.values():
-                try:
-                    w.close()
-                except Exception as e:  # noqa: BLE001 — re-raised below
-                    errs.append(e)
-                finally:
-                    try:
-                        fh.close()
-                    except Exception as e:  # noqa: BLE001
-                        errs.append(e)
-            if errs and sys.exc_info()[0] is None:
-                # raise ONLY when the body succeeded — raising while an
-                # exception is already propagating would mask it
-                raise errs[0]
-        for tmp, final, _fh, _w in writers.values():
-            os.replace(tmp, final)
         return iter(())
 
     layout.rdd.mapPartitions(_write).count()
-    return sorted(
-        os.path.join(dirpath, f)
-        for dirpath, _dirs, files in os.walk(out_dir)
-        for f in files
-        if f.endswith(".hfile")
-    )
+    return _owned_files(out_dir, ".hfile")
 
 
 # StreamingManifestWriter.kt:14-49 upload policy

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 # capture groups of a PLAIN dump filename `<db>.<collection>.<NNNN>.json`
-# (FILENAME_GROUPS in listing.py is the encrypted `.json.gz.enc` twin).
+# (listing.py's _FILENAME matches the encrypted objects and sidecars).
 # ONE definition shared by the batch source and the streaming source —
 # a format change updated in only one of them would silently break
 # batch/stream parity via regexp_extract's empty-string no-match.

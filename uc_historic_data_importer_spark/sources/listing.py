@@ -24,21 +24,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-# S3Reader.kt:30-37 defaults
-FILENAME_FORMAT = r"[\w-]+\.[\w-]+\.[0-9]+\.json"
-DATA_SUFFIX = r"\.gz\.enc$"
-METADATA_SUFFIX = r"\.encryption\.json$"
-# ANCHORED whole-filename contracts: a name must be EXACTLY
-# <stem>.json.gz.enc / <stem>.json.encryption.json to classify. A
-# suffix-only check would admit e.g. db.c.0001.json.old.gz.enc (the
-# embedded stem matches unanchored, the suffix matches) and then
-# FILENAME_GROUPS extraction yields ''/NULL metadata that crashes the
-# decrypt stage — the reference instead drops unmatched names with a
-# warning (KeyPairGenerator.kt:29-37), which is what `neither` does.
-DATA_FULL_RE = rf"^{FILENAME_FORMAT}\.gz\.enc$"
-META_FULL_RE = rf"^{FILENAME_FORMAT}\.encryption\.json$"
-# HBaseWriter.kt:86-88: db/collection/filenumber capture
-FILENAME_GROUPS = r"([\w-]+)\.([\w-]+)\.([0-9]+)\.json\.gz\.enc$"
+# The dump filename, matched against the WHOLE name: <stem> is
+# <db>.<collection>.<NNNN>.json (S3Reader.kt:30-37, KeyPairGenerator.kt:23,
+# the HBaseWriter.kt:86-88 captures), followed by .gz.enc for a data
+# object (group `data`) or .encryption.json for its sidecar. \w is
+# ASCII-only, as in the reference's Java patterns. A name with anything
+# else (db.c.0001.json.old.gz.enc, a non-ASCII db) is dropped, as the
+# reference drops unmatched names with a warning (KeyPairGenerator.kt:29-37)
+# instead of importing it with missing metadata.
+_FILENAME = re.compile(
+    r"(?P<stem>(?P<db>[\w-]+)\.(?P<collection>[\w-]+)\.(?P<number>[0-9]+)\.json)"
+    r"(?:(?P<data>\.gz\.enc)|\.encryption\.json)",
+    re.ASCII,
+)
 
 LISTING_SCHEMA = T.StructType(
     [
@@ -61,14 +59,6 @@ PAIRS_SCHEMA = T.StructType(
     ]
 )
 
-# The patterns above are Java regexes; Java's \w is ASCII-only, so the
-# Python twins are compiled with re.ASCII to classify the same names
-_DATA_NAME = re.compile(DATA_FULL_RE, re.ASCII)
-_META_NAME = re.compile(META_FULL_RE, re.ASCII)
-_STEM = re.compile(FILENAME_FORMAT, re.ASCII)
-_DATA_SUFFIX = re.compile(DATA_SUFFIX)
-_META_SUFFIX = re.compile(METADATA_SUFFIX)
-_NAME_GROUPS = re.compile(FILENAME_GROUPS, re.ASCII)
 _INT_MAX = 2**31 - 1
 
 
@@ -238,8 +228,8 @@ def list_local_objects(spark: SparkSession, root: str, prefixes: list[str] | Non
 def pair_files(listing: DataFrame) -> DataFrame:
     """S2: group keys into (data, metadata) pairs.
 
-    - a file classifies ONLY on an anchored whole-filename match
-      (DATA_FULL_RE / META_FULL_RE): names with extra components (e.g.
+    - a file classifies ONLY on a whole-filename match of _FILENAME:
+      names with extra components (e.g.
       `db.c.0001.json.old.gz.enc`) are dropped, exactly as the
       reference drops unmatched names with a warning
       (KeyPairGenerator.kt:29-37) — a suffix-only check would pass them
@@ -259,27 +249,26 @@ def pair_files(listing: DataFrame) -> DataFrame:
     local frame) and paired in one driver loop. Returns (pair_stem,
     stem, data_path, data_size, meta_path, meta_size, db, collection,
     file_number) as a local frame sorted by data_path."""
-    data: dict[str, tuple[str, int]] = {}
-    meta: dict[str, tuple[str, int]] = {}
+    data: dict[str, tuple] = {}  # pair stem -> (path, size, name match)
+    meta: dict[str, tuple] = {}
     for path, size in listing.select("path", "size").collect():
         name = path.rsplit("/", 1)[-1]
-        if _DATA_NAME.search(name):
-            data.setdefault(_DATA_SUFFIX.sub("", path), (path, size))
-        elif _META_NAME.search(name):
-            meta.setdefault(_META_SUFFIX.sub("", path), (path, size))
+        m = _FILENAME.fullmatch(name)
+        if m:
+            pair_stem = path[: len(path) - len(name) + m.end("stem")]
+            (data if m["data"] else meta).setdefault(pair_stem, (path, size, m))
     bad = sorted(stem for stem in data if stem not in meta)
     if bad:
         raise MissingMetadataError(f"data objects without metadata: {bad[:5]}")
     rows = []
-    for pair_stem, (data_path, data_size) in sorted(data.items(), key=lambda kv: kv[1][0]):
-        meta_path, meta_size = meta[pair_stem]
-        db, collection, number = _NAME_GROUPS.search(data_path).groups()
-        file_number = int(number)
+    for pair_stem, (data_path, data_size, m) in sorted(data.items(), key=lambda kv: kv[1][0]):
+        meta_path, meta_size, _ = meta[pair_stem]
+        file_number = int(m["number"])
         if file_number > _INT_MAX:
-            raise ValueError(f"file number {number} of {data_path!r} overflows int")
-        stem = _STEM.search(data_path.rsplit("/", 1)[-1]).group()
+            raise ValueError(f"file number {m['number']} of {data_path!r} overflows int")
         rows.append(
-            (pair_stem, stem, data_path, data_size, meta_path, meta_size, db, collection, file_number)
+            (pair_stem, m["stem"], data_path, data_size, meta_path, meta_size,
+             m["db"], m["collection"], file_number)
         )
     columns = list(zip(*rows)) if rows else [[]] * len(PAIRS_SCHEMA)
     table = pa.table(columns, schema=to_arrow_schema(PAIRS_SCHEMA))

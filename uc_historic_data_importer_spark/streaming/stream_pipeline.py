@@ -202,51 +202,17 @@ _LATEST_TTL_OUT_SCHEMA = T.StructType(
     + [T.StructField("final", T.BooleanType())]
 )
 
-_DURATION_UNITS_MS = {
-    "millisecond": 1,
-    "second": 1000,
-    "minute": 60_000,
-    "hour": 3_600_000,
-    "day": 86_400_000,
-}
-
-
-def _duration_ms(spec: str | int) -> int:
-    """'30 minutes' / '1 hour' -> millis (the subset of Spark's
-    CalendarInterval grammar the streaming ops use)."""
-    if isinstance(spec, int):
-        ms = spec
-    else:
-        parts = spec.strip().split()
-        if len(parts) != 2:
-            raise ValueError(f"duration must be '<n> <unit>': {spec!r}")
-        n, unit = int(parts[0]), parts[1].rstrip("s").lower()
-        if unit not in _DURATION_UNITS_MS:
-            raise ValueError(f"unknown duration unit: {spec!r}")
-        ms = n * _DURATION_UNITS_MS[unit]
-    if ms < 1:
-        # a non-positive TTL would clamp every key's timeout to
-        # watermark+1 — immediate-eviction churn masquerading as
-        # configuration (ADVICE r10); make it an explicit error
-        raise ValueError(f"duration must be >= 1 ms: {spec!r}")
-    return ms
-
-
-def latest_per_key_stream_ttl(
-    norm: DataFrame,
-    ttl: str | int = "1 hour",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
+def latest_per_key_stream_ttl(norm: DataFrame) -> DataFrame:
     """latest_per_key_stream with a state-EVICTION contract for
     unbounded key spaces (r9 verdict caveat #2).
 
     Each key's state carries an event-time timeout at
-    ``last_version + ttl`` (business time — versions are epoch millis).
-    When the watermark (max seen event time minus ``watermark_delay``)
+    ``last_version + 6 hours`` (the TTL, in business time — versions are
+    epoch millis). When the watermark (max seen event time minus 1 hour)
     passes that horizon, the key times out: its final (version, body)
     row is emitted once with ``final = true`` and the state row is
     REMOVED — so executor state holds only keys updated within the
-    last ``ttl`` of business time, regardless of total key cardinality.
+    last TTL of business time, regardless of total key cardinality.
     Downstream, final=true rows are complete: a key's current value is
     its last emission, final or not (the eviction re-emits, it never
     invents), so a consumer maintaining a compacted table can treat
@@ -258,12 +224,11 @@ def latest_per_key_stream_ttl(
     than the evicted version — the one reachable divergence vs batch —
     while a record newer than the watermark starts fresh state and is
     necessarily newer than the evicted version (at eviction the
-    watermark already exceeded version + ttl), so it converges with
-    batch. Pick watermark_delay to cover the business-time disorder of
-    the source (for ordered CDC feeds that is the out-of-orderness
-    bound, for unordered historic dumps prefer the batch/CDC route, as
-    the base operator's contract says)."""
-    ttl_ms = _duration_ms(ttl)
+    watermark already exceeded version + TTL), so it converges with
+    batch. The watermark delay covers the business-time disorder of an
+    ordered CDC feed; for unordered historic dumps prefer the batch/CDC
+    route, as the base operator's contract says."""
+    ttl_ms = 6 * 3_600_000
 
     def fn(key, pdfs, state):
         if state.hasTimedOut:
@@ -320,7 +285,7 @@ def latest_per_key_stream_ttl(
         "event_time", F.timestamp_millis(F.col("version"))
     )
     return (
-        with_event_time.withWatermark("event_time", watermark_delay)
+        with_event_time.withWatermark("event_time", "1 hour")
         .groupBy("table", "key_hex")
         .applyInPandasWithState(
             fn,
@@ -332,37 +297,27 @@ def latest_per_key_stream_ttl(
     )
 
 
-def session_counts_stream(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    key_col: str = "user_id",
-    ts_col: str = "event_time",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Gap-based sessions over a stream via the native session_window.
+def session_counts_stream(events: DataFrame) -> DataFrame:
+    """Gap-based sessions of ``user_id`` over a stream via the native
+    session_window on ``event_time``.
 
     The streaming twin of ``operators/sessions.py`` (which derives the
     same sessions with a lag-window in batch): events of one key merge
-    into a session while consecutive gaps stay within ``gap``; the
-    watermark closes sessions and evicts their state, bounding memory to
+    into a session while consecutive gaps stay within 30 minutes; the
+    watermark (1 hour behind) closes sessions and evicts their state, bounding memory to
     open sessions only. Used with output mode ``complete`` in tests so
     unclosed trailing sessions are visible for the batch-convergence
     check; production append-mode emits each session once, on close.
     """
-    # r14 review batch 9: session_window with a zero/negative gap
-    # SILENTLY DROPS EVERY EVENT (probed: 0 sessions out, no error) —
-    # the streaming twin of the r13 sessionize gap_ms guard. Parse the
-    # gap up front so a degenerate spec raises at plan-build time.
-    _duration_ms(gap)
     return (
-        events.withWatermark(ts_col, watermark_delay)
+        events.withWatermark("event_time", "1 hour")
         .groupBy(
-            F.col(key_col),
-            F.session_window(F.col(ts_col), gap).alias("sw"),
+            F.col("user_id"),
+            F.session_window(F.col("event_time"), "30 minutes").alias("sw"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            key_col,
+            "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",
@@ -387,8 +342,6 @@ def run_changelog_merge_sink(
     snapshot_base: str,
     checkpoint_dir: str,
     key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ):
     """Streaming CDC apply: maintain a compacted current-state snapshot
     under ``snapshot_base/v=N`` by folding each micro-batch of put/delete
@@ -418,9 +371,7 @@ def run_changelog_merge_sink(
     keys = list(key_cols)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changelog_batch(
-            batch_df, batch_id, snapshot_base, keys, seq_col, op_col
-        )
+        apply_changelog_batch(batch_df, batch_id, snapshot_base, keys)
 
     return (
         changes.writeStream.foreachBatch(apply_batch)
@@ -468,18 +419,9 @@ def latest_snapshot_version(spark: SparkSession, snapshot_base: str) -> int | No
     return max(_snapshot_versions(spark, snapshot_base), default=None)
 
 
-def interval_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    lower_ms: int,
-    upper_ms: int,
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    equi_keys: Sequence[str] = ("user_id",),
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join: pair (l, r) where r's event time is
-    inside [l.ts + lower_ms, l.ts + upper_ms], with equi keys — the
+def interval_join_stream(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Stream-stream interval join: pair (l, r) where r.r_ts is inside
+    [l.l_ts + 1 ms, l.l_ts + 24 h] and l.user_id = r.user_id — the
     streaming twin of ``operators/range_join.py::interval_join``.
 
     Under streaming, Spark's native stream-stream join handles the time
@@ -494,25 +436,15 @@ def interval_join_stream(
 
     Batch parity: run both sides through the batch ``interval_join`` and
     the joined sets converge (pinned in tests with availableNow)."""
-    if upper_ms < lower_ms:
-        # same guard as the batch twin: an inverted band builds an
-        # unsatisfiable predicate that would run forever emitting
-        # nothing instead of failing fast
-        raise ValueError("upper_ms must be >= lower_ms")
-    lw = left.withWatermark(left_ts, watermark_delay)
-    rw = right.withWatermark(right_ts, watermark_delay)
-    cond = F.lit(True)
-    for k in equi_keys:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
+    lw = left.withWatermark("l_ts", "25 hours")
+    rw = right.withWatermark("r_ts", "25 hours")
     cond = (
-        cond
+        F.lit(True)
+        & (F.col("l.user_id") == F.col("r.user_id"))
+        & (F.col("r.r_ts") >= F.col("l.l_ts") + F.expr("INTERVAL 1 MILLISECONDS"))
         & (
-            F.col(f"r.{right_ts}")
-            >= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {lower_ms} MILLISECONDS")
-        )
-        & (
-            F.col(f"r.{right_ts}")
-            <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {upper_ms} MILLISECONDS")
+            F.col("r.r_ts")
+            <= F.col("l.l_ts") + F.expr("INTERVAL 86400000 MILLISECONDS")
         )
     )
     return lw.alias("l").join(rw.alias("r"), cond, "inner")
@@ -523,8 +455,6 @@ def apply_changelog_batch(
     batch_id: int,
     snapshot_base: str,
     key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> None:
     """One CDC fold: read the newest ``v < batch_id`` snapshot, merge
     this batch's changes, (over)write ``v=batch_id``. IDEMPOTENT under
@@ -555,10 +485,10 @@ def apply_changelog_batch(
         )
     below = [v for v in versions if v < batch_id]
     prev = max(below) if below else None
-    payload = [c for c in batch_df.columns if c not in (seq_col, op_col)]
+    payload = [c for c in batch_df.columns if c not in ("seq", "op")]
     if prev is None:
         snap = spark.createDataFrame([], batch_df.select(*payload).schema)
     else:
         snap = spark.read.parquet(f"{snapshot_base}/v={prev}")
-    merged = cdc.merge_changelog(snap, batch_df, keys, seq_col, op_col)
+    merged = cdc.merge_changelog(snap, batch_df, keys)
     merged.write.mode("overwrite").parquet(f"{snapshot_base}/v={batch_id}")
