@@ -39,7 +39,15 @@ skipped. Anything else fails unless ``ALLOWED_PARAMS`` names it, with
 one of three reasons: a deployment setting or seam, a fake a test
 substitutes, or a size threshold that tests lower to reach a branch
 production only reaches at scale — or it is set by the benchmark
-harness, which changes only with the benchmark."""
+harness, which changes only with the benchmark.
+
+The fourth audit checks copies, over the package and ``tools/``
+(``perfbench/`` is frozen with the benchmark, ``tests/`` is left out).
+It fails when two function definitions, at any nesting depth and under
+any names, have the same arguments and body (``ast.dump``, docstring
+dropped), or when two string or f-string literals of 5 or more source
+lines (docstrings excepted) are AST-identical. It has no allowlist: a
+copy becomes one definition both sites call or read."""
 
 from __future__ import annotations
 
@@ -321,9 +329,30 @@ def _literal(node, consts: dict, local=frozenset()):
         return _VARIED
 
 
+def _bindings(target: ast.AST, value: ast.AST):
+    """(name node, value node or None) for every name an assignment
+    binds; ``a, b = 1, 2`` pairs element by element, any other unpacking
+    leaves the value unknown."""
+    if isinstance(target, ast.Name):
+        yield target, value
+    elif (
+        isinstance(target, (ast.Tuple, ast.List))
+        and isinstance(value, (ast.Tuple, ast.List))
+        and len(target.elts) == len(value.elts)
+        and not any(isinstance(e, ast.Starred) for e in target.elts)
+    ):
+        for t, v in zip(target.elts, value.elts):
+            yield from _bindings(t, v)
+    else:
+        for n in ast.walk(target):
+            if isinstance(n, ast.Name):
+                yield n, None
+
+
 def _module_consts(tree: ast.Module, consts: dict | None = None) -> dict:
     """name -> literal repr (or ``_VARIED``) for every module-level
-    binding; a name bound twice to different values is ``_VARIED``."""
+    binding, tuple-unpacked ones element by element; a name bound twice
+    to different values is ``_VARIED``."""
     out = {}
     for stmt in tree.body:
         if isinstance(stmt, ast.Assign):
@@ -333,10 +362,9 @@ def _module_consts(tree: ast.Module, consts: dict | None = None) -> dict:
         else:
             continue
         for t in targets:
-            lit = _literal(value, consts or {}) if isinstance(t, ast.Name) else _VARIED
-            for n in ast.walk(t):
-                if isinstance(n, ast.Name):
-                    out[n.id] = lit if out.get(n.id, lit) == lit else _VARIED
+            for n, v in _bindings(t, value):
+                lit = _VARIED if v is None else _literal(v, consts or {})
+                out[n.id] = lit if out.get(n.id, lit) == lit else _VARIED
     return out
 
 
@@ -558,3 +586,49 @@ def test_allowed_params_stay_unset():
     """An ALLOWED_PARAMS entry whose parameter was deleted, or which a
     non-test caller now sets to more than one value, is stale."""
     assert set(ALLOWED_PARAMS) <= set(fixed_parameters())
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def duplicate_definitions() -> list[list[str]]:
+    """``path:line name`` groups of function definitions with the same
+    arguments and body, and of multi-line literals with the same AST."""
+    seen: dict[tuple, list[str]] = {}
+    for path in [*_py_files(PKG), *_py_files(os.path.join(REPO, "tools"))]:
+        rel = os.path.relpath(path, REPO)
+        tree = _parse(path)
+        skip = {  # docstrings, and the constant parts of f-strings
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, *_FUNCS))
+            and ast.get_docstring(n, clean=False) is not None
+        } | {
+            id(v)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.JoinedStr)
+            for v in n.values
+        }
+        for n in ast.walk(tree):
+            if isinstance(n, _FUNCS):
+                body = n.body
+                if ast.get_docstring(n, clean=False) is not None:
+                    body = body[1:]
+                key = ("def", ast.dump(n.args), *map(ast.dump, body))
+                seen.setdefault(key, []).append(f"{rel}:{n.lineno} {n.name}")
+            elif (
+                isinstance(n, ast.JoinedStr)
+                or (isinstance(n, ast.Constant) and isinstance(n.value, str))
+            ) and id(n) not in skip and n.end_lineno - n.lineno >= 4:
+                key = ("literal", ast.dump(n))
+                seen.setdefault(key, []).append(f"{rel}:{n.lineno} literal")
+    return [sites for sites in seen.values() if len(sites) > 1]
+
+
+def test_package_defines_each_piece_once():
+    dups = duplicate_definitions()
+    assert not dups, (
+        f"{len(dups)} groups of copied function definitions or multi-line "
+        f"literals (give each one definition that every site calls or "
+        f"reads): {dups}"
+    )

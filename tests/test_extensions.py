@@ -178,16 +178,16 @@ class TestDedup:
         import re
 
         from pyspark.sql import functions as F
-        from uc_historic_data_importer_spark.operators.dedup import (
-            _ensure_parallel,
-            tokens_col,
+        from uc_historic_data_importer_spark.operators.dedup import tokens_col
+        from uc_historic_data_importer_spark.operators.frames import (
+            ensure_parallel,
         )
 
         rows = [(1, "alpha beta gamma delta"), (2, "alpha alpha beta"),
                 (3, "zz yy"), (4, "solo")]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         bits = 32
-        tok = _ensure_parallel(df).select(
+        tok = ensure_parallel(df).select(
             F.col("doc_id").alias("doc_id"),
             F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("w"),
         ).select("doc_id", dedup.md5_i64(F.col("w")).alias("h"))
@@ -2184,7 +2184,7 @@ class TestBm25:
         return spark.createDataFrame(rows, ["doc_id", "text", "lang", "source"])
 
     def test_ranking_and_exclusion(self, corpus):
-        out = text.bm25_topk(corpus, ["spark"], topk=10).collect()
+        out = text.bm25_topk(corpus, ["spark"]).collect()
         ids = [r["doc_id"] for r in out]
         # only docs containing the term score > 0
         assert set(ids) == {1, 2}
@@ -2194,9 +2194,9 @@ class TestBm25:
 
     def test_multi_term_additivity(self, corpus):
         single = {r["doc_id"]: r["bm25"]
-                  for r in text.bm25_topk(corpus, ["engine"], topk=10).collect()}
+                  for r in text.bm25_topk(corpus, ["engine"]).collect()}
         multi = {r["doc_id"]: r["bm25"]
-                 for r in text.bm25_topk(corpus, ["spark", "engine"], topk=10).collect()}
+                 for r in text.bm25_topk(corpus, ["spark", "engine"]).collect()}
         # doc 3 matches only 'engine'; its score must carry over
         assert 3 in single and 3 in multi
         # doc 2 matches both terms: strictly higher than either alone
@@ -2207,12 +2207,15 @@ class TestBm25:
         rows.append((9, "common rare filler words", "en", "s"))
         df = spark.createDataFrame(rows, ["doc_id", "text", "lang", "source"])
         out = {r["doc_id"]: r["bm25"]
-               for r in text.bm25_topk(df, ["rare", "common"], topk=20).collect()}
+               for r in text.bm25_topk(df, ["rare", "common"]).collect()}
         # the idf of 'rare' (df=1) dominates 'common' (df=9)
         assert out[9] == max(out.values())
 
-    def test_topk_and_empty_query(self, corpus):
-        assert len(text.bm25_topk(corpus, ["engine"], topk=1).collect()) == 1
+    def test_topk_and_empty_query(self, spark, corpus):
+        # 12 matching docs, BM25_TOPK (10) returned
+        rows = [(i, "engine " * i + "pad", "en", "s") for i in range(1, 13)]
+        df = spark.createDataFrame(rows, ["doc_id", "text", "lang", "source"])
+        assert len(text.bm25_topk(df, ["engine"]).collect()) == text.BM25_TOPK
         with pytest.raises(ValueError):
             text.bm25_topk(corpus, [])
 
@@ -2316,7 +2319,7 @@ class TestContentDefinedChunks:
             ["doc_id", "text", "lang", "source"],
         )
         out = {}
-        for r in packing.content_defined_chunks(df, k=3, divisor=4).collect():
+        for r in packing.content_defined_chunks(df).collect():
             out.setdefault(r["doc_id"], []).append(r)
         for v in out.values():
             v.sort(key=lambda r: r["chunk_no"])
@@ -2386,7 +2389,7 @@ class TestWinnowing:
             ],
             ["doc_id", "text", "lang", "source"],
         )
-        out = text.winnowing_fingerprints(df, k=4, w=5).collect()
+        out = text.winnowing_fingerprints(df).collect()
         fps = {}
         for r in out:
             fps.setdefault(r["doc_id"], set()).add(r["fingerprint"])
@@ -2398,7 +2401,7 @@ class TestWinnowing:
         toks = " ".join(f"t{i}" for i in range(100))
         df = spark.createDataFrame([(1, toks, "en", "s")],
                                    ["doc_id", "text", "lang", "source"])
-        rows = text.winnowing_fingerprints(df, k=4, w=5).collect()
+        rows = text.winnowing_fingerprints(df).collect()
         m = 100 - 4 + 1
         assert 0 < len(rows) <= m
         assert all(0 <= r["pos"] < m for r in rows)
@@ -2409,12 +2412,12 @@ class TestWinnowing:
         # 5 tokens, k=4 -> 2 grams < w: exactly one window, one fingerprint
         df = spark.createDataFrame([(1, "a b c d e", "en", "s")],
                                    ["doc_id", "text", "lang", "source"])
-        rows = text.winnowing_fingerprints(df, k=4, w=5).collect()
+        rows = text.winnowing_fingerprints(df).collect()
         assert len(rows) == 1
         # sub-k docs emit nothing
         df2 = spark.createDataFrame([(1, "a b", "en", "s")],
                                     ["doc_id", "text", "lang", "source"])
-        assert text.winnowing_fingerprints(df2, k=4, w=5).count() == 0
+        assert text.winnowing_fingerprints(df2).count() == 0
 
 
 class TestWindowedOpsPythonReference:
@@ -2487,13 +2490,13 @@ class TestWindowedOpsPythonReference:
     def test_content_defined_chunks_reference(self, spark):
         from uc_historic_data_importer_spark.operators import packing
 
-        k, d = 3, 4
+        k, d = packing.CDC_K, packing.CDC_DIV
         df = spark.createDataFrame(
             [(i, t, "en", "s") for i, t in self.CORPUS],
             ["doc_id", "text", "lang", "source"],
         )
         got = {}
-        for r in packing.content_defined_chunks(df, k=k, divisor=d).collect():
+        for r in packing.content_defined_chunks(df).collect():
             got.setdefault(r["doc_id"], []).append(
                 (r["chunk_no"], r["start_tok"], r["end_tok"], r["chunk_hash"])
             )
@@ -2517,13 +2520,13 @@ class TestWindowedOpsPythonReference:
         assert got == want
 
     def test_winnowing_reference(self, spark):
-        k, w = 3, 4
+        k, w = text.WINNOW_K, text.WINNOW_W
         df = spark.createDataFrame(
             [(i, t, "en", "s") for i, t in self.CORPUS],
             ["doc_id", "text", "lang", "source"],
         )
         got = {}
-        for r in text.winnowing_fingerprints(df, k=k, w=w).collect():
+        for r in text.winnowing_fingerprints(df).collect():
             got.setdefault(r["doc_id"], set()).add(
                 (r["pos"], r["fingerprint"])
             )
@@ -2557,7 +2560,7 @@ class TestChunkDupRatio:
             ["doc_id", "text", "lang", "source"],
         )
         out = {r["doc_id"]: r for r in
-               packing.chunk_dup_stats(df, k=3, divisor=4).collect()}
+               packing.chunk_dup_stats(df).collect()}
         # the shifted copy shares interior chunks with the original
         # (fixed-stride segmentation would miss ALL of them)
         assert out[1]["dup_chunks"] > 0
@@ -2582,9 +2585,7 @@ class TestFuzzyMatch:
         )
         out = {
             (r["id_a"], r["id_b"]): r["dist"]
-            for r in text.fuzzy_match_pairs(
-                df, max_dist=3, q=3
-            ).collect()
+            for r in text.fuzzy_match_pairs(df).collect()
         }
         assert out[(1, 2)] == 1
         assert out[(1, 3)] == 0  # identical keys, distance 0
@@ -2612,32 +2613,28 @@ class TestFuzzyMatch:
         df = spark.createDataFrame(rows, ["doc_id", "head"])
         got = {
             (r["id_a"], r["id_b"]): r["dist"]
-            for r in text.fuzzy_match_pairs(
-                df, max_dist=2, q=3
-            ).collect()
+            for r in text.fuzzy_match_pairs(df).collect()
         }
         # q-gram blocking only guarantees a shared gram when
-        # min_len >= q + q*max_dist (= 9 here); 'short'/'shirt' (len 5)
+        # min_len >= q + q*max_dist (= 12 here); 'short'/'shirt' (len 5)
         # are outside the guarantee and legitimately missed
+        q, d = text.FUZZY_Q, text.FUZZY_MAX_DIST
         want = {
             (i, j): lev(keys[i], keys[j])
             for i, j in itertools.combinations(range(len(keys)), 2)
-            if lev(keys[i], keys[j]) <= 2
-            and min(len(keys[i]), len(keys[j])) >= 3 + 3 * 2
+            if lev(keys[i], keys[j]) <= d
+            and min(len(keys[i]), len(keys[j])) >= q + q * d
         }
         assert got == want
 
     def test_df_cut_is_the_only_approximation(self, spark):
-        # with a tiny max_gram_df, hot grams are dropped and pairs whose
-        # every shared gram is hot are missed — the documented df-cut
-        df = spark.createDataFrame(
-            [(1, "aaaaaaaaaaaa"), (2, "aaaaaaaaaaab")], ["doc_id", "head"]
-        )
-        out = text.fuzzy_match_pairs(
-            df, max_dist=2, q=3,
-            max_gram_df=1,
-        ).collect()
-        assert out == []
+        # FUZZY_MAX_GRAM_DF + 1 keys carry the gram 'aaa': it is hot and
+        # dropped, and pairs whose every shared gram is hot are missed —
+        # the documented df-cut (even exact duplicates here)
+        n = text.FUZZY_MAX_GRAM_DF + 1
+        rows = [(i, "a" * 12) for i in range(1, n)] + [(n, "a" * 11 + "b")]
+        df = spark.createDataFrame(rows, ["doc_id", "head"])
+        assert text.fuzzy_match_pairs(df).collect() == []
 
 
 class TestPqNullCodes:
@@ -2788,18 +2785,19 @@ class TestRound5Operators:
         # KMV relative error ~ 1/sqrt(k-1) ~ 12.6%; allow 3 sigma
         assert abs(row["kmv_estimate"] - n) / n < 0.4
 
-    def test_temperature_mixture_tau_zero_is_uniform_by_domain(self, spark):
+    def test_temperature_mixture_upsamples_tail_domain(self, spark):
         from uc_historic_data_importer_spark.operators import sampling
 
         rows = [(i, "big" if i < 900 else "small") for i in range(1000)]
         df = spark.createDataFrame(rows, ["doc_id", "source"])
-        out = sampling.temperature_mixture_sample(df, target_total=200, tau=0.0)
+        out = sampling.temperature_mixture_sample(df)
         got = {r["source"]: r["n"] for r in
                out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-        # tau=0: each domain gets mass 1/2 -> 100 docs each; the small
-        # domain (100 docs) saturates at rate 1.0 -> all 100 kept
-        assert got["small"] == 100
-        assert 70 <= got["big"] <= 130  # hash-thresholded ~100
+        # tau=0.5: masses sqrt(900):sqrt(100) = 3:1 of the 200-row
+        # target -> ~150 big, ~50 small; raw proportions would keep 20
+        assert (sampling.TEMP_TARGET, sampling.TEMP_TAU) == (200, 0.5)
+        assert 35 <= got["small"] <= 65  # hash-thresholded ~50
+        assert 120 <= got["big"] <= 180  # hash-thresholded ~150
 
     def test_temperature_mixture_null_domain_is_a_domain(self, spark):
         """NULL-domain rows are counted, rated, and KEPT at their rate —
@@ -2813,9 +2811,11 @@ class TestRound5Operators:
 
         rows = [(i, None if i < 100 else "a") for i in range(200)]
         df = spark.createDataFrame(rows, "doc_id long, source string")
-        # tau=1, target == corpus size: every domain's rate saturates at
-        # 1.0, so EVERY row must come back — including the NULL domain
-        out = sampling.temperature_mixture_sample(df, target_total=200, tau=1.0)
+        # two equal domains, target == corpus size: every domain's rate
+        # saturates at 1.0, so EVERY row must come back — including the
+        # NULL domain
+        assert sampling.TEMP_TARGET == 200
+        out = sampling.temperature_mixture_sample(df)
         assert out.count() == 200
         assert out.filter(F.col("source").isNull()).count() == 100
         con = duckdb.connect()
@@ -2826,7 +2826,7 @@ class TestRound5Operators:
             r[0]
             for r in con.execute(
                 "SELECT doc_id FROM ("
-                + sampling.temperature_mixture_sql(200, 1.0)
+                + sampling.temperature_mixture_sql()
                 + ")"
             ).fetchall()
         )
@@ -2845,12 +2845,12 @@ class TestRound5Operators:
             [(1, "a", 0)], "doc_id long, source string, _dom int"
         )
         with pytest.raises(ValueError, match="_dom"):
-            sampling.temperature_mixture_sample(df, target_total=10)
+            sampling.temperature_mixture_sample(df)
         df2 = spark.createDataFrame(
             [(1, "a", 0)], "doc_id long, source string, _thresh int"
         )
         with pytest.raises(ValueError, match="_thresh"):
-            sampling.temperature_mixture_sample(df2, target_total=10)
+            sampling.temperature_mixture_sample(df2)
 
     def test_kfold_balanced_within_stratum(self, spark):
         from uc_historic_data_importer_spark.operators import sampling
@@ -4774,23 +4774,11 @@ class TestRound13ReviewBatch7:
         # all-negative range — the documented, semantically-right case
         assert 40 in {r["doc_id"] for r in top.collect()}
 
-    def test_temperature_mixture_degenerate_params_raise(self, spark):
-        from uc_historic_data_importer_spark.operators import sampling
-
-        docs = self._docs(spark)
-        with pytest.raises(ValueError, match="target_total"):
-            sampling.temperature_mixture_sample(docs, target_total=0)
-        with pytest.raises(ValueError, match="target_total"):
-            sampling.temperature_mixture_sample(docs, target_total=-5)
-        with pytest.raises(ValueError, match="tau"):
-            sampling.temperature_mixture_sample(
-                docs, target_total=10, tau=float("nan")
-            )
-
     def test_temperature_mixture_valid_unchanged(self, spark):
         from uc_historic_data_importer_spark.operators import sampling
 
         docs = self._docs(spark)
-        # large target keeps everything: every rate clamps to 1.0
-        out = sampling.temperature_mixture_sample(docs, target_total=100)
+        # a target above the corpus size keeps everything: every rate
+        # clamps to 1.0
+        out = sampling.temperature_mixture_sample(docs)
         assert out.count() == 4

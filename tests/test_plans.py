@@ -248,7 +248,6 @@ def test_session_scale_confs_pinned(spark):
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",
         "spark.sql.session.timeZone": "UTC",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     }
     for k, v in want.items():
@@ -328,8 +327,8 @@ def test_maponly_text_ops_have_no_shuffle(spark):
     pure per-row array-HOF work + a local explode: their plans must
     contain NO data-dependent exchange — the property that makes them
     streaming-safe and free at 100 TB. winnowing (r12) additionally
-    carries dedup.py's single-file-corpus guard, which plans ONE
-    round-robin repartition at test scale (input partitions <
+    carries the single-file-input guard (frames.ensure_parallel), which
+    plans ONE round-robin repartition at test scale (input partitions <
     defaultParallelism) and is a no-op on a real corpus's thousands of
     splits — so for it the lint forbids hash/range/single-partition
     exchanges specifically, not the guard."""

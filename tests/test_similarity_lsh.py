@@ -12,12 +12,12 @@ plane/bucket regression (e.g. a seed change) fails loudly.
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.operators.similarity import (
+    SDL_THRESHOLD as THRESHOLD,
     semantic_decontamination,
     semantic_decontamination_lsh,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-THRESHOLD = 0.3
 
 
 def _split(spark):
@@ -35,9 +35,7 @@ def test_lsh_is_exact_lower_bound_and_no_false_positives(spark):
     }
     lsh = {
         r["vec_id"]: r
-        for r in semantic_decontamination_lsh(
-            train, test, threshold=THRESHOLD
-        ).collect()
+        for r in semantic_decontamination_lsh(train, test).collect()
     }
     assert set(lsh) == set(exact)  # every train row present on both paths
     # the exact path flags at its fixed 0.5; its max_test_sim is
@@ -68,7 +66,7 @@ def test_lsh_is_exact_lower_bound_and_no_false_positives(spark):
 
 def test_lsh_never_candidate_rows_survive(spark):
     train, test = _split(spark)
-    out = semantic_decontamination_lsh(train, test, threshold=THRESHOLD)
+    out = semantic_decontamination_lsh(train, test)
     n_train = train.count()
     assert out.count() == n_train
     # never-candidate rows carry NULL max_cand_sim and contaminated=0
@@ -91,7 +89,7 @@ def test_lsh_empty_train_guard(spark):
     # frame, not crash on first() -> None while probing the vector dim
     train, test = _split(spark)
     empty = train.filter(F.lit(False))
-    out = semantic_decontamination_lsh(empty, test, threshold=THRESHOLD)
+    out = semantic_decontamination_lsh(empty, test)
     assert out.columns == ["vec_id", "max_cand_sim", "contaminated"]
     # dtypes must match the normal path (int flag, not boolean) so the
     # two branches union/append cleanly

@@ -66,7 +66,7 @@ assert crow["parse_errors"] == 1, crow
 assert crow["blank_ids"] == 1, crow
 assert crow["put_count"] == 4, crow
 
-kv = sinks.read_kv(spark, kv_path)
+kv = spark.read.parquet(kv_path)
 n_kv = kv.count()
 print("kv rows:", n_kv)
 assert n_kv == 4, n_kv  # 2 versions of id1 + id2 + oid3

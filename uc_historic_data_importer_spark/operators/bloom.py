@@ -239,6 +239,11 @@ def bloom_anti_join(
     exists for (guide §3.2). Both routes return the same rows (Bloom
     filters have no false negatives and the branch union IS the
     anti-join); pinned by the dispatch-equality test.
+
+    ``n_existing`` is an upper bound on the existing side's key count,
+    not an exact count: a caller may pass the row count of the table
+    before its filters. An over-count can only route a broadcast-sized
+    side to the Bloom path, never broadcast more keys than declared.
     """
     rt = records.schema["l_orderkey"].dataType
     et = existing.schema["o_orderkey"].dataType

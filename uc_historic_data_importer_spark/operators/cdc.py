@@ -34,14 +34,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from uc_historic_data_importer_spark.operators.frames import qcol
+
 OP_PUT = "P"
 OP_DELETE = "D"
-
-
-def _qcol(name: str) -> Column:
-    """Column reference by EXACT name (backtick-quoted) — '.'/'`' in a
-    column name must not parse as nested-field access."""
-    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def latest_changes(
@@ -64,7 +60,7 @@ def latest_changes(
         # every change would target the same single row)
         raise ValueError("key_cols must be non-empty")
     payload = [c for c in changes.columns if c not in (*keys, "seq", "op")]
-    # _qcol/getField throughout (r10 review — the latest_per_key rule):
+    # qcol/getField throughout (r10 review — the latest_per_key rule):
     # dotted/backticked column names must resolve as FLAT columns, not
     # nested-field paths, both when packing the struct and when
     # unpacking it; and a key column literally named _w would
@@ -76,14 +72,14 @@ def latest_changes(
         )
     packed = F.max(
         F.struct(
-            _qcol("seq").alias("seq"),
-            _qcol("op").alias("op"),
-            *[_qcol(c).alias(c) for c in payload],
+            qcol("seq").alias("seq"),
+            qcol("op").alias("op"),
+            *[qcol(c).alias(c) for c in payload],
         )
     ).alias("_w")
     w = F.col("_w")
-    return changes.groupBy(*[_qcol(k) for k in keys]).agg(packed).select(
-        *[_qcol(k) for k in keys],
+    return changes.groupBy(*[qcol(k) for k in keys]).agg(packed).select(
+        *[qcol(k) for k in keys],
         w.getField("seq").alias("seq"),
         w.getField("op").alias("op"),
         *[w.getField(c).alias(c) for c in payload],
@@ -125,17 +121,17 @@ def merge_changelog(
     # check is one CASE expression over the compacted winners (cheap;
     # never touches the raw log) and raises at execution time like the
     # envelope NULL-body guard.
-    op_ok = _qcol("op").isin(OP_PUT, OP_DELETE)  # NULL -> NULL -> raise
+    op_ok = qcol("op").isin(OP_PUT, OP_DELETE)  # NULL -> NULL -> raise
     latest = latest.withColumn(
         "op",
-        F.when(op_ok, _qcol("op")).otherwise(
+        F.when(op_ok, qcol("op")).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(
                         "merge_changelog: op must be "
                         f"'{OP_PUT}' or '{OP_DELETE}', got "
                     ),
-                    F.coalesce(_qcol("op"), F.lit("NULL")),
+                    F.coalesce(qcol("op"), F.lit("NULL")),
                 )
             )
         ),
@@ -152,7 +148,7 @@ def merge_changelog(
     out = []
     for c in snapshot.columns:
         if c in keys:
-            out.append(_qcol(c))
+            out.append(qcol(c))
         elif c in change_payload:
             out.append(
                 F.when(side("c", "op").isNotNull(), side("c", c))

@@ -31,6 +31,7 @@ from uc_historic_data_importer_spark.functions.hashes import (
     perm_constants,
     perm_hash_sql,
 )
+from uc_historic_data_importer_spark.operators.frames import ensure_parallel
 from uc_historic_data_importer_spark.operators.text import tokens_col
 
 # MinHash permutations and LSH bands (rows per band = 16 / 4)
@@ -106,23 +107,11 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.element_at(bound, 1))
 
 
-def _ensure_parallel(df: DataFrame) -> DataFrame:
-    """Shingling/hashing parallelism equals input partitions; a compact
-    source (single small parquet file) would serialize the CPU-heavy
-    higher-order-function stages onto one core. Round-robin repartition
-    when under the session's default parallelism — a no-op at real scale
-    where the input already has thousands of splits."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
-
-
 def doc_shingle_hashes(
     df: DataFrame, n: int = 3
 ) -> DataFrame:
     """(doc_id, shingle_hash) exploded pairs, distinct per doc."""
-    return _ensure_parallel(df).select(
+    return ensure_parallel(df).select(
         F.col("doc_id").alias("doc_id"),
         F.explode(shingles_col(F.col("text"), n)).alias("shingle"),
     ).select("doc_id", md5_i64(F.col("shingle")).alias("h"))
@@ -370,7 +359,7 @@ def simhash(df: DataFrame) -> DataFrame:
     ints/doc). The token hash is the shared md5_i64 (60 usable bits).
     Returns (doc_id, simhash)."""
     bits = SIMHASH_BITS
-    tok = _ensure_parallel(df).select(
+    tok = ensure_parallel(df).select(
         F.col("doc_id").alias("doc_id"),
         F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("w"),
     ).select("doc_id", md5_i64(F.col("w")).alias("h"))
@@ -665,7 +654,7 @@ def source_minhash_overlap(df: DataFrame) -> DataFrame:
     source_a < source_b; jaccard_e4 is the integer-scaled estimate
     (exact, as NUM_PERMS divides 10000)."""
     num_perms = NUM_PERMS
-    sh = _ensure_parallel(df).select(
+    sh = ensure_parallel(df).select(
         F.col("source").alias("grp"),
         F.explode(shingles_col(F.col("text"), 3)).alias("shingle"),
     ).select("grp", md5_i64(F.col("shingle")).alias("h"))

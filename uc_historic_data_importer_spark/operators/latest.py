@@ -14,28 +14,10 @@ CRC-prefixed) key followed by a per-partition top-1:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _qcol(name: str) -> Column:
-    """Column reference by EXACT name: backtick-quoted so '.'/'`' in a
-    column name are not parsed as nested-field access."""
-    return F.col("`" + name.replace("`", "``") + "`")
-
-
-def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
-    """skew.py-style reserved-name guard (r9 review class): withColumn /
-    an agg alias would SILENTLY capture an input column named like an
-    internal temp — latest_per_key_window(df_with_a_'_rn'_column) would
-    overwrite and then DROP the user's column. Raise with a rename
-    hint instead."""
-    taken = reserved & set(df.columns)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
-        )
+from uc_historic_data_importer_spark.operators.frames import check_reserved, qcol
 
 
 # the row key of a normalized record: (table, key_hex)
@@ -50,14 +32,14 @@ def latest_per_key(df: DataFrame) -> DataFrame:
     (HBase cells at the same timestamp overwrite each other — same
     semantics)."""
     picked = F.max_by(
-        F.struct(_qcol("record_json").alias("record_json")), _qcol("version")
+        F.struct(qcol("record_json").alias("record_json")), qcol("version")
     ).alias("_picked")
-    agg = df.groupBy(*[_qcol(c) for c in KEY_COLS]).agg(
-        F.max(_qcol("version")).alias("version"), picked
+    agg = df.groupBy(*[qcol(c) for c in KEY_COLS]).agg(
+        F.max(qcol("version")).alias("version"), picked
     )
     return agg.select(
-        *[_qcol(c) for c in KEY_COLS],
-        _qcol("version"),
+        *[qcol(c) for c in KEY_COLS],
+        qcol("version"),
         F.col("_picked").getField("record_json").alias("record_json"),
     )
 
@@ -67,9 +49,9 @@ def latest_per_key_window(df: DataFrame) -> DataFrame:
 
     Ties on version pick an arbitrary row; AQE handles key skew
     (not expected here thanks to the CRC prefix)."""
-    _check_reserved(df, {"_rn"}, "latest_per_key_window")
-    w = Window.partitionBy(*[_qcol(c) for c in KEY_COLS]).orderBy(
-        _qcol("version").desc()
+    check_reserved(df.columns, {"_rn"}, "latest_per_key_window")
+    w = Window.partitionBy(*[qcol(c) for c in KEY_COLS]).orderBy(
+        qcol("version").desc()
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -103,22 +85,24 @@ def scd2_intervals(df: DataFrame) -> DataFrame:
     # valid_to / is_current are OUTPUT columns: an input column with
     # either name (e.g. re-running scd2 over its own output) would be
     # silently overwritten, not extended
-    _check_reserved(df, {"_dup", "valid_to", "is_current"}, "scd2_intervals")
+    check_reserved(
+        df.columns, {"_dup", "valid_to", "is_current"}, "scd2_intervals"
+    )
     payload = [c for c in df.columns if c not in ("user_id", "version")]
-    # _qcol throughout: dotted/backticked column names must resolve as
+    # qcol throughout: dotted/backticked column names must resolve as
     # flat columns here exactly as they do in latest_per_key
-    dup_w = Window.partitionBy(_qcol("user_id"), _qcol("version")).orderBy(
-        *([_qcol(c).desc() for c in payload] or [F.lit(1)])
+    dup_w = Window.partitionBy(qcol("user_id"), qcol("version")).orderBy(
+        *([qcol(c).desc() for c in payload] or [F.lit(1)])
     )
     d = (
         df.withColumn("_dup", F.row_number().over(dup_w))
         .filter(F.col("_dup") == 1)
         .drop("_dup")
     )
-    w = Window.partitionBy(_qcol("user_id")).orderBy(
-        _qcol("version").asc()
+    w = Window.partitionBy(qcol("user_id")).orderBy(
+        qcol("version").asc()
     )
-    nxt = F.lead(_qcol("version")).over(w)
+    nxt = F.lead(qcol("version")).over(w)
     return d.withColumn(
         "valid_to",
         F.coalesce(nxt, F.lit(None).cast("long")),

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.hashes import md5_i64, md5_i64_sql
+from uc_historic_data_importer_spark.operators.frames import check_reserved
 from uc_historic_data_importer_spark.operators.text import TOKENS_SQL, tokens_col
 
 # each operator and its DuckDB oracle read the same constants:
@@ -33,8 +34,10 @@ from uc_historic_data_importer_spark.operators.text import TOKENS_SQL, tokens_co
 PACK_BUDGET, PACK_SHARDS = 128, 8
 # RAG chunk window and stride (tokens),
 CHUNK_SIZE, CHUNK_STRIDE = 48, 24
-# and the training-shard size (tokens) and prefix-sum bucket count
+# the training-shard size (tokens) and prefix-sum bucket count,
 SHARD_TARGET, SHARD_BUCKETS = 2000, 256
+# and the content-defined chunker's gram width (tokens) and cut divisor
+CDC_K, CDC_DIV = 3, 8
 
 
 def pack_concat_chunks(df: DataFrame, encode=None) -> DataFrame:
@@ -217,18 +220,13 @@ def shard_assign_by_tokens(df: DataFrame) -> DataFrame:
     cumsum), while every data-scale stage stays hash-partitioned. At
     100 TB, size SHARD_BUCKETS ~ executor count.
     """
-    reserved = {"_hkey", "_bucket", "_btot", "_boff", "_cum",
-                "global_start", "shard_id"}
-    taken = reserved & set(df.columns)
-    if taken:
-        # the skew.py reserved-name class (r11 review batch):
-        # withColumn would silently overwrite, and the offsets
-        # broadcast-join would become ambiguous
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with "
-            "shard_assign_by_tokens's internal temp names; rename them "
-            "first"
-        )
+    # withColumn would silently overwrite, and the offsets
+    # broadcast-join would become ambiguous
+    check_reserved(
+        df.columns,
+        {"_hkey", "_bucket", "_btot", "_boff", "_cum", "global_start", "shard_id"},
+        "shard_assign_by_tokens",
+    )
     d = df.withColumn(
         "_hkey", md5_i64(F.col("doc_id").cast("string"))
     ).withColumn("_bucket", F.pmod(F.col("_hkey"), F.lit(SHARD_BUCKETS)))
@@ -256,17 +254,14 @@ def shard_assign_by_tokens(df: DataFrame) -> DataFrame:
     )
 
 
-def content_defined_chunks(
-    df: DataFrame,
-    k: int = 3,
-    divisor: int = 8,
-) -> DataFrame:
+def content_defined_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking (the LBFS/rsync boundary rule applied to
     token streams): cut BEFORE token position i whenever the hash of the
-    k-token gram starting at i satisfies h % divisor == 0. Unlike
-    fixed-stride `chunk_spans`, boundaries depend only on LOCAL content,
-    so inserting or deleting text resynchronizes after one boundary and
-    every later chunk hashes identically — the property that makes
+    k-token gram starting at i satisfies h % divisor == 0 (k = CDC_K,
+    divisor = CDC_DIV). Unlike fixed-stride `chunk_spans`, boundaries
+    depend only on LOCAL content, so inserting or deleting text
+    resynchronizes after one boundary and every later chunk hashes
+    identically — the property that makes
     chunk-hash dedup robust to edits (pinned in tests). Mean chunk
     length ~ divisor tokens.
 
@@ -276,8 +271,7 @@ def content_defined_chunks(
     assembly are array HOFs on the row; the fan-out is the posexplode
     of per-doc spans), so no shuffle and it runs unchanged under
     Structured Streaming."""
-    if k <= 0 or divisor <= 0:
-        raise ValueError("k and divisor must be positive")
+    k = CDC_K
     toks = tokens_col(F.col("text"))
     base = df.select(
         F.col("doc_id").alias("doc_id"),
@@ -296,7 +290,7 @@ def content_defined_chunks(
         F.col("n_tokens") >= F.lit(k + 1),
         F.filter(
             F.sequence(F.lit(1), F.col("n_tokens") - F.lit(k)),
-            lambda i: gram_hash(i) % F.lit(divisor) == 0,
+            lambda i: gram_hash(i) % F.lit(CDC_DIV) == 0,
         ),
     ).otherwise(F.expr("CAST(array() AS ARRAY<INT>)"))
     bounds = F.when(
@@ -336,11 +330,7 @@ def content_defined_chunks(
     )
 
 
-def chunk_dup_stats(
-    df: DataFrame,
-    k: int = 3,
-    divisor: int = 8,
-) -> DataFrame:
+def chunk_dup_stats(df: DataFrame) -> DataFrame:
     """Cross-document duplication at content-defined chunk granularity:
     per document, how many of its chunks (by content hash) also appear
     in at least one OTHER document — the edit-robust complement of
@@ -362,9 +352,7 @@ def chunk_dup_stats(
     is a content hash; nothing is all-pairs."""
     from pyspark.sql import Window
 
-    chunks = content_defined_chunks(
-        df, k=k, divisor=divisor
-    )
+    chunks = content_defined_chunks(df)
     per_pair = chunks.groupBy("chunk_hash", "doc_id").agg(
         F.count(F.lit(1)).alias("_n_occ")
     )

@@ -37,10 +37,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from uc_historic_data_importer_spark.operators.similarity import (
-    _ensure_parallel,
-    _round_away,
-)
+from uc_historic_data_importer_spark.operators.frames import ensure_parallel
+from uc_historic_data_importer_spark.operators.similarity import _round_away
 
 # m subspaces, k codes per subspace, k-means rounds; the DuckDB oracle
 # replays the fit with the same values
@@ -177,7 +175,7 @@ def pq_fit(corpus: DataFrame) -> list[list[list[float]]]:
     ]
     # single-file corpora scan as ONE partition; the iteration's
     # explode+aggregate is CPU-bound and must parallelize
-    corpus = _ensure_parallel(corpus)
+    corpus = ensure_parallel(corpus)
     for _ in range(PQ_ITERS):
         # ONE corpus scan + ONE shuffle per iteration for all m
         # subspaces: the per-subspace argmin codes ride along as an
@@ -224,7 +222,7 @@ def pq_encode(corpus: DataFrame, codebooks: list[list[list[float]]]) -> DataFram
     """(vec_id, code_0..code_{m-1}): the persisted compact index — pure
     map over the corpus, no shuffle."""
     sub_dim = len(codebooks[0][0])
-    base = _with_vec_ref(_ensure_parallel(corpus), F.col("vec_id").alias("vec_id"))
+    base = _with_vec_ref(ensure_parallel(corpus), F.col("vec_id").alias("vec_id"))
     return base.select(
         "vec_id",
         *[

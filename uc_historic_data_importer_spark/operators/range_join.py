@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from uc_historic_data_importer_spark.operators.frames import check_reserved
+
 
 # the band: right.ts within [left.ts + 1 ms, left.ts + 60 s]
 LOWER_MS = 1
@@ -46,13 +48,10 @@ def interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     (the rename would create the same name on both sides and any later
     select of it would be ambiguous). Both collisions raise up front.
     """
-    reserved = {"_ms_l", "_ms_r", "_bucket"}
-    taken = reserved & (set(left.columns) | set(right.columns))
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with interval_join's "
-            "internal temp names; rename them first"
-        )
+    check_reserved(
+        [*left.columns, *right.columns], {"_ms_l", "_ms_r", "_bucket"},
+        "interval_join",
+    )
     width = UPPER_MS - LOWER_MS
     l_ms = F.unix_millis(F.col("ts"))
 

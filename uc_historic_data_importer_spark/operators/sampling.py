@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.hashes import md5_i64
+from uc_historic_data_importer_spark.operators.frames import check_reserved
 
 # hash buckets for fraction selection: p is quantized to 1/DENOM steps
 DENOM = 1_000_000
@@ -46,7 +47,8 @@ WEIGHTED_KEY_DP = 8
 # hash_sample's fraction, split_assign's val/test fractions, the domain
 # weights of mixture_sample, per-group picks of stratified_sample (per
 # lang) and weighted_sample (per source), token_budget_sample's budget
-# per source and kfold_assign's fold count
+# per source, kfold_assign's fold count, and the total draw and the
+# temperature of temperature_mixture_sample
 SAMPLE_FRACTION = 0.1
 VAL_FRACTION = TEST_FRACTION = 0.05
 MIXTURE_WEIGHTS = {"src0": 2.5, "src1": 0.25, "src2": 0.0}
@@ -54,18 +56,7 @@ STRATUM_N = 20
 WEIGHTED_N = 5
 TOKEN_BUDGET = 900
 N_FOLDS = 5
-
-
-def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
-    """skew.py-style reserved-name guard (r11 review batch): withColumn
-    silently OVERWRITES an input column named like an internal temp (or
-    a documented output) — raise with a rename hint instead."""
-    taken = reserved & set(df.columns)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
-        )
+TEMP_TARGET, TEMP_TAU = 200, 0.5
 
 
 def _bucket():
@@ -96,7 +87,7 @@ def split_assign(df: DataFrame) -> DataFrame:
     rows never moves a document across the val/test boundary (the
     train-test contamination guarantee a growing corpus needs).
     """
-    _check_reserved(df, {"split"}, "split_assign")
+    check_reserved(df.columns, {"split"}, "split_assign")
     b = _bucket()
     val_hi = int(VAL_FRACTION * DENOM)
     test_hi = val_hi + int(TEST_FRACTION * DENOM)
@@ -118,7 +109,7 @@ def stratified_sample(df: DataFrame) -> DataFrame:
     skewed strata are bounded by the same salting approach as
     operators/skew.py if a stratum outgrows an executor.
     """
-    _check_reserved(df, {"_rk"}, "stratified_sample")
+    check_reserved(df.columns, {"_rk"}, "stratified_sample")
     w = Window.partitionBy("lang").orderBy(
         md5_i64(F.col("doc_id").cast("string")), F.col("doc_id")
     )
@@ -166,7 +157,9 @@ def mixture_sample(df: DataFrame) -> DataFrame:
     thresholds at plan build — no float comparison at runtime (float to
     int casts round in some engines and truncate in others).
     """
-    _check_reserved(df, {"_n_full", "_thresh", "copy_idx"}, "mixture_sample")
+    check_reserved(
+        df.columns, {"_n_full", "_thresh", "copy_idx"}, "mixture_sample"
+    )
 
     levels = _mixture_levels
 
@@ -273,7 +266,7 @@ def weighted_sample(df: DataFrame) -> DataFrame:
     legitimate top of the all-negative key range (P proportional to
     an infinite weight SHOULD always win).
     """
-    _check_reserved(df, {"_wkey", "_rk"}, "weighted_sample")
+    check_reserved(df.columns, {"_wkey", "_rk"}, "weighted_sample")
     u = (_bucket() + 1).cast("double") / F.lit(float(DENOM + 1))
     wcol = F.col("n_chars").cast("double")
     key = F.round(F.log(u) / wcol, WEIGHTED_KEY_DP)
@@ -314,7 +307,7 @@ def token_budget_sample(df: DataFrame) -> DataFrame:
     'how many tokens did each domain actually get'), so it is exposed
     under the documented ``cum_tokens`` name — unlike the sibling
     samplers' `_wkey`/`_rk`, which are internal ranks and are dropped."""
-    _check_reserved(df, {"cum_tokens"}, "token_budget_sample")
+    check_reserved(df.columns, {"cum_tokens"}, "token_budget_sample")
     w = (
         Window.partitionBy("source")
         .orderBy(md5_i64(F.col("doc_id").cast("string")), F.col("doc_id"))
@@ -326,18 +319,14 @@ def token_budget_sample(df: DataFrame) -> DataFrame:
     )
 
 
-def temperature_mixture_sample(
-    df: DataFrame,
-    target_total: int,
-    tau: float = 0.5,
-) -> DataFrame:
+def temperature_mixture_sample(df: DataFrame) -> DataFrame:
     """Temperature-scaled domain mixture (the multilingual-LM sampling
     rule, Conneau & Lample style): domain s gets probability mass
     p_s = n_s^tau / sum(n^tau) — tau < 1 UP-samples the tail domains
     relative to raw proportions, tau = 1 is proportional, tau = 0 is
-    uniform-by-domain. Per-row accept rate = min(1, target_total * p_s
-    / n_s), hash-thresholded like every sampler here (rerun-stable,
-    map-only after one tiny per-domain aggregate).
+    uniform-by-domain; tau is TEMP_TAU. Per-row accept rate = min(1,
+    TEMP_TARGET * p_s / n_s), hash-thresholded like every sampler here
+    (rerun-stable, map-only after one tiny per-domain aggregate).
 
     The rate is rounded to ``TEMPERATURE_RATE_DP`` before quantization to the
     1/DENOM integer threshold so libm pow() ulp noise can never flip a
@@ -350,30 +339,15 @@ def temperature_mixture_sample(
     are kept at that rate (null-safe join — a plain equi-join would
     silently drop NULL-domain rows while still deflating every other
     domain's rate through the denominator)."""
-    if not math.isfinite(tau) or tau < 0:
-        # NaN slipped the old `tau < 0` check (NaN comparisons are
-        # False) and pow(n, NaN) poisoned every rate — probed r13: the
-        # sampler silently kept EVERY row
-        raise ValueError(f"tau must be finite and >= 0 (got {tau})")
-    if target_total < 1:
-        # 0 or negative made every threshold <= 0 — probed r13: the
-        # result was silently EMPTY (the relative_quality_filter
-        # drop_frac class)
-        raise ValueError(f"target_total must be >= 1 (got {target_total})")
-    # mirror interval_join's reserved-name guard: an input frame already
-    # carrying one of the internal temp columns would otherwise fail
-    # with an opaque ambiguous-reference AnalysisException (or worse,
-    # the final drop would remove the USER's column)
-    reserved = {"_dom", "_thresh", "_n"}
-    taken = reserved & set(df.columns)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with "
-            "temperature_mixture_sample's internal temp names; rename "
-            "them first"
-        )
+    # an input frame already carrying one of the internal temp columns
+    # would otherwise fail with an opaque ambiguous-reference
+    # AnalysisException (or worse, the final drop would remove the
+    # USER's column)
+    check_reserved(
+        df.columns, {"_dom", "_thresh", "_n"}, "temperature_mixture_sample"
+    )
     counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("_n"))
-    denom = F.sum(F.pow(F.col("_n").cast("double"), F.lit(tau))).over(
+    denom = F.sum(F.pow(F.col("_n").cast("double"), F.lit(TEMP_TAU))).over(
         Window.partitionBy()
     )
     rates = counts.select(
@@ -382,8 +356,8 @@ def temperature_mixture_sample(
             F.round(
                 F.least(
                     F.lit(1.0),
-                    F.lit(float(target_total))
-                    * F.pow(F.col("_n").cast("double"), F.lit(tau))
+                    F.lit(float(TEMP_TARGET))
+                    * F.pow(F.col("_n").cast("double"), F.lit(TEMP_TAU))
                     / denom
                     / F.col("_n").cast("double"),
                 ),
@@ -403,10 +377,7 @@ def temperature_mixture_sample(
     )
 
 
-def temperature_mixture_sql(
-    target_total: int,
-    tau: float = 0.5,
-) -> str:
+def temperature_mixture_sql() -> str:
     """DuckDB query reproducing temperature_mixture_sample over
     `documents`."""
     from uc_historic_data_importer_spark.functions.hashes import md5_i64_sql
@@ -419,8 +390,8 @@ def temperature_mixture_sql(
       rates AS (
         SELECT source,
                CAST(floor(round(least(1.0,
-                 {float(target_total)} * pow(n::DOUBLE, {tau})
-                 / (sum(pow(n::DOUBLE, {tau})) OVER ())
+                 {float(TEMP_TARGET)} * pow(n::DOUBLE, {TEMP_TAU})
+                 / (sum(pow(n::DOUBLE, {TEMP_TAU})) OVER ())
                  / n::DOUBLE), {TEMPERATURE_RATE_DP}) * {DENOM}) AS BIGINT) AS thresh
         FROM counts
       )
@@ -439,7 +410,7 @@ def kfold_assign(df: DataFrame) -> DataFrame:
     row depends on the stratum's membership (by construction — balance
     requires it), so use split_assign when growth-stability matters
     more than balance. The stratum is ``source``, the id ``doc_id``."""
-    _check_reserved(df, {"fold"}, "kfold_assign")
+    check_reserved(df.columns, {"fold"}, "kfold_assign")
     w = Window.partitionBy("source").orderBy(
         md5_i64(F.col("doc_id").cast("string")), F.col("doc_id")
     )

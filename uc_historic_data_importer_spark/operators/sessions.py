@@ -22,21 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from uc_historic_data_importer_spark.operators.frames import check_reserved
+
 DEFAULT_GAP_MS = 30 * 60 * 1000  # the classic 30-minute web-session gap
-
-
-def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
-    """skew.py-style reserved-name guard (r9 review class): withColumn
-    would SILENTLY OVERWRITE an input column named like an internal
-    temp or output column — sessionize(df_with_a_'session_idx'_column)
-    would replace the user's data, funnel_counts would fold a user '_ts'
-    into its own step logic. Raise with a rename hint instead."""
-    taken = reserved & set(df.columns)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
-        )
 
 
 def sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
@@ -60,7 +48,7 @@ def sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
         # session (probed) — counts inflated with no error. gap_ms = 0
         # stays legal: "split on any strictly positive gap".
         raise ValueError(f"gap_ms must be >= 0 (got {gap_ms})")
-    _check_reserved(events, {"session_idx"}, "sessionize")
+    check_reserved(events.columns, {"session_idx"}, "sessionize")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ts_ms = F.unix_millis(F.col("ts"))
     prev = F.lag(ts_ms).over(w)
@@ -109,8 +97,8 @@ def funnel_counts(events: DataFrame) -> DataFrame:
     sort, and all i levels share the one exchange on the key; the final
     count is a scalar agg. Per-key state is i timestamps — skew-proof."""
     steps = FUNNEL_STEPS
-    _check_reserved(
-        events,
+    check_reserved(
+        events.columns,
         {"_ts"} | {f"_t{i}" for i in range(len(steps))},
         "funnel_counts",
     )

@@ -20,11 +20,14 @@ list_inner_product over DOUBLE[]).
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from uc_historic_data_importer_spark.operators.frames import ensure_parallel
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -49,16 +52,6 @@ def safe_norm_col(a: Column) -> Column:
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
 
-def _ensure_parallel(df: DataFrame) -> DataFrame:
-    """Similarity parallelism equals corpus partitions; a single-file
-    corpus would serialize the dot-product stage onto one core. No-op at
-    real scale (inputs already have many splits)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -77,7 +70,7 @@ def cosine_topk(
             norm_col(F.col("embedding")).alias("q_norm"),
         )
     )
-    c = _ensure_parallel(corpus).select(
+    c = ensure_parallel(corpus).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_vec"),
         norm_col(F.col("embedding")).alias("c_norm"),
@@ -130,7 +123,7 @@ def _ivf_topk_arrow(
 
     kk, dp = 1, 6
     sel = (
-        _ensure_parallel(corpus)
+        ensure_parallel(corpus)
         .select(
             F.col("vec_id").alias("vec_id"),
             F.col("embedding").cast("array<double>").alias("_v"),
@@ -263,7 +256,7 @@ def ivf_topk(
     )
     if n > exact_max_rows:
         return _ivf_topk_arrow(corpus, cell_col)
-    corpus = _ensure_parallel(corpus)
+    corpus = ensure_parallel(corpus)
     a = corpus.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
@@ -299,6 +292,20 @@ def ivf_topk(
 LSH_PLANES = 8
 
 
+def _md5_coeff(key: str) -> float:
+    """((md5 of key) % 1000)/1000 - 0.5: a deterministic plane
+    coefficient in [-0.5, 0.5); the DuckDB oracles interpolate the same
+    floats as literals."""
+    h = int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
+    return (h % 1000) / 1000.0 - 0.5
+
+
+def hyperplane_coeffs(dim: int) -> list[list[float]]:
+    """hyperplane_lsh_buckets' LSH_PLANES planes over ``dim``
+    elements: coeff(p, i) = _md5_coeff("p:i")."""
+    return [[_md5_coeff(f"{p}:{i}") for i in range(dim)] for p in range(LSH_PLANES)]
+
+
 def hyperplane_lsh_buckets(corpus: DataFrame) -> DataFrame:
     """Sign-LSH bucket id per vector: bit p = (dot(v, plane_p) > 0) for
     LSH_PLANES planes.
@@ -307,8 +314,6 @@ def hyperplane_lsh_buckets(corpus: DataFrame) -> DataFrame:
     values in [-0.5, 0.5): coeff(p, i) = ((md5_i64 of "p:i") % 1000)/1000
     - 0.5 — reproducible in any engine, no RNG state to ship. Vectors in
     the same bucket are near-duplicate candidates (cos-LSH property)."""
-    import hashlib
-
     dim_probe = corpus.select(F.size(F.col("embedding")).alias("d")).first()
     if dim_probe is None:
         # r9 review: an empty corpus crashed with TypeError int(None);
@@ -323,13 +328,7 @@ def hyperplane_lsh_buckets(corpus: DataFrame) -> DataFrame:
             "hyperplane_lsh_buckets: cannot infer embedding dim from "
             "'embedding' (NULL first embedding)"
         )
-    dim = int(dim_probe["d"])
-
-    def coeff(p: int, i: int) -> float:
-        h = int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:15], 16)
-        return (h % 1000) / 1000.0 - 0.5
-
-    planes = [[coeff(p, i) for i in range(dim)] for p in range(LSH_PLANES)]
+    planes = hyperplane_coeffs(int(dim_probe["d"]))
     # SQL-text bucket expression over a pre-cast alias — one parse
     # instead of LSH_PLANES * dim Column operators (see _plane_dot_sql)
     return corpus.select(
@@ -720,7 +719,7 @@ def kmeans_fit(
     centroids = [_unit(c) for c in first]
     # a single-file corpus scans as ONE partition; the per-iteration
     # explode+aggregate is CPU-bound and must parallelize
-    corpus = _ensure_parallel(corpus)
+    corpus = ensure_parallel(corpus)
     # past-oracle-scale seam (cosine_neardup_pairs doctrine): when the
     # caller declares the corpus size and it exceeds exact_max_rows,
     # each iteration's partials come from one Arrow-batched matmul
@@ -731,14 +730,7 @@ def kmeans_fit(
     # round-half-away at 6/12 dp collapses exactly as it
     # already must for Spark's own nondeterministic partial-agg order
     # (TestKmeansNpSeam pins centroid equality on the fixtures).
-    use_np = False
-    if n_rows is not None and n_rows > exact_max_rows:
-        try:
-            import numpy  # noqa: F401
-
-            use_np = True
-        except ImportError:
-            pass
+    use_np = n_rows is not None and n_rows > exact_max_rows
     for _ in range(iters):
         if use_np:
             sums = (
@@ -914,7 +906,7 @@ def ivf2_fit(
         assigned = assign_cells(
             corpus, coarse_centroids, keep_cols=("embedding",), n_rows=n_rows,
         )
-    assigned = _ensure_parallel(assigned)
+    assigned = ensure_parallel(assigned)
 
     def unit_arr(c: Column) -> Column:
         n = F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x))
@@ -1199,7 +1191,7 @@ def semantic_decontamination(
         # caller keeping contaminated == 0 rows would silently drop the
         # whole corpus. (Cheap: isEmpty is a limit-1 probe on the
         # benchmark-sized eval side, not the train scan.)
-        return _ensure_parallel(train).select(
+        return ensure_parallel(train).select(
             F.col("vec_id"),
             F.lit(None).cast("double").alias("max_test_sim"),
             F.lit(0).alias("contaminated"),
@@ -1210,7 +1202,7 @@ def semantic_decontamination(
             norm_col(F.col("embedding")).alias("t_norm"),
         )
     )
-    c = _ensure_parallel(train).select(
+    c = ensure_parallel(train).select(
         F.col("vec_id"),
         F.col("embedding").alias("c_vec"),
         norm_col(F.col("embedding")).alias("c_norm"),
@@ -1240,21 +1232,21 @@ def semantic_decontamination(
     )
 
 
-def lsh_plane_coeffs(
-    n_planes: int, dim: int, seed: int
-) -> list[list[float]]:
+# the LSH decontamination route: flag threshold, sign planes per table
+# and independent tables; the DuckDB oracle replays the same values
+SDL_THRESHOLD, SDL_PLANES, SDL_TABLES = 0.3, 4, 4
+
+
+def lsh_plane_coeffs(dim: int, seed: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplane coefficients for one LSH
-    table: coeff(p, i) = ((md5 of "seed:p:i") % 1000)/1000 - 0.5, values
-    in [-0.5, 0.5). Engine-portable (no RNG state): the DuckDB oracle
+    table of SDL_PLANES planes: coeff(p, i) = _md5_coeff("seed:p:i"),
+    values in [-0.5, 0.5). Engine-portable (no RNG state): the DuckDB oracle
     interpolates the SAME floats as literals, so both engines compute
     identical buckets. Seed separates independent tables."""
-    import hashlib
-
-    def coeff(p: int, i: int) -> float:
-        h = int(hashlib.md5(f"{seed}:{p}:{i}".encode()).hexdigest()[:15], 16)
-        return (h % 1000) / 1000.0 - 0.5
-
-    return [[coeff(p, i) for i in range(dim)] for p in range(n_planes)]
+    return [
+        [_md5_coeff(f"{seed}:{p}:{i}") for i in range(dim)]
+        for p in range(SDL_PLANES)
+    ]
 
 
 def _plane_dot_sql(plane: list[float]) -> str:
@@ -1296,13 +1288,7 @@ def _lsh_bucket_expr(planes: list[list[float]]) -> Column:
     return F.expr(f"(CAST(0 AS BIGINT){bits})")
 
 
-def semantic_decontamination_lsh(
-    train: DataFrame,
-    test: DataFrame,
-    threshold: float = 0.3,
-    n_planes: int = 4,
-    n_tables: int = 4,
-) -> DataFrame:
+def semantic_decontamination_lsh(train: DataFrame, test: DataFrame) -> DataFrame:
     """LSH-bucketed semantic decontamination — the LARGE-eval-set route
     promised by semantic_decontamination's docstring: when the eval set
     is too big to broadcast as raw vectors, candidate pairs come from an
@@ -1312,14 +1298,14 @@ def semantic_decontamination_lsh(
     Returns (id, max_cand_sim, contaminated) for EVERY train row:
     max_cand_sim is the max exact similarity over LSH candidates (a
     lower bound of the true max — NULL when a row had no candidate in
-    any table) and contaminated flags max_cand_sim >= threshold. No
+    any table) and contaminated flags max_cand_sim >= SDL_THRESHOLD. No
     false positives relative to the exact path (candidate sims ARE
     exact); recall is the standard sign-LSH tradeoff, boosted by
-    n_tables independent tables (miss prob per pair = prod over tables
-    of 1 - p^n_planes, p = 1 - angle/pi).
+    SDL_TABLES independent tables (miss prob per pair = prod over
+    tables of 1 - p^SDL_PLANES, p = 1 - angle/pi).
 
     Scale shape: each side is scanned once — norms computed per row,
-    then a map-only x n_tables posexplode of bucket ids; the candidate
+    then a map-only x SDL_TABLES posexplode of bucket ids; the candidate
     join is a plain equi-join on (table, bucket) that AQE broadcasts
     when the eval side happens to be small and shuffles (hash-partition
     on near-uniform sign buckets) when it is not — the whole point of
@@ -1336,7 +1322,7 @@ def semantic_decontamination_lsh(
             F.lit(0).cast("int").alias("contaminated"),
         )
     dim = int(first["d"])
-    tables = [lsh_plane_coeffs(n_planes, dim, l) for l in range(n_tables)]
+    tables = [lsh_plane_coeffs(dim, l) for l in range(SDL_TABLES)]
     # bucket expressions reference a short pre-cast alias so the
     # generated SQL text stays small (parse cost scales with length)
     buckets = F.array(*[_lsh_bucket_expr(pl) for pl in tables])
@@ -1352,10 +1338,10 @@ def semantic_decontamination_lsh(
         # compile — see _cell_expr's codegen matrix), and the explode
         # is the OUTER variant: a non-outer Generate makes the
         # optimizer infer `size(_buckets) > 0` and clone the whole
-        # n_tables x n_planes x dim bucket tree into a scan-side
+        # SDL_TABLES x SDL_PLANES x dim bucket tree into a scan-side
         # Filter, where it re-evaluates per row interpreted (measured:
         # the clone tripled this operator's wall time). The array is a
-        # literal n_tables-element CreateArray — never NULL, never
+        # literal SDL_TABLES-element CreateArray — never NULL, never
         # empty — so outer vs inner emit identical rows and the
         # inference simply disappears.
         withb = pre.select(
@@ -1371,7 +1357,7 @@ def semantic_decontamination_lsh(
             F.posexplode_outer(F.col("_buckets")).alias("tbl", "bucket"),
         )
 
-    c = side(_ensure_parallel(train), "c")
+    c = side(ensure_parallel(train), "c")
     q = side(test, "t").withColumnsRenamed(
         {"tbl": "t_tbl", "bucket": "t_bucket"}
     )
@@ -1397,7 +1383,7 @@ def semantic_decontamination_lsh(
             "vec_id",
             "max_cand_sim",
             (
-                F.coalesce(F.col("max_cand_sim"), F.lit(-1.0)) >= threshold
+                F.coalesce(F.col("max_cand_sim"), F.lit(-1.0)) >= SDL_THRESHOLD
             ).cast("int").alias("contaminated"),
         )
     )
@@ -1496,7 +1482,7 @@ def semdedup(
     # barrier's cost: Generate can't split the expression, so this
     # branch evaluates the argmax interpreted at every size (see
     # _cell_expr) — bounded by exact_max_rows, where it's milliseconds
-    v = _ensure_parallel(df).select(
+    v = ensure_parallel(df).select(
         F.col("vec_id").alias("vec_id"),
         F.col("embedding").alias("vec"),
         safe_norm_col(F.col("embedding")).alias("nrm"),

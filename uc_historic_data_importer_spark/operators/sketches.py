@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.hashes import md5_i64, md5_i64_sql
+from uc_historic_data_importer_spark.operators.frames import check_reserved
 
 HASH_BITS = 60
 # HLL: 2^HLL_P registers, estimates rounded at HLL_ROUND_DP decimals.
@@ -43,29 +44,6 @@ _CMS_BITS = (CMS_W - 1).bit_length()
 # quantiles rounded at HIST_ROUND_DP decimals
 HIST_SCALE = 100
 HIST_ROUND_DP = 4
-
-
-def _check_reserved(cols, reserved: set[str], op: str) -> None:
-    """skew.py-style reserved-name guard (r11 review batch): an input /
-    group column literally named like an internal sketch column would be
-    silently shadowed by the select (worst case a group column named
-    `bucket` groups by the REGISTER index instead of the user's data).
-    Raise with a rename hint.
-
-    Deliberately ASYMMETRIC (ADVICE r11): only group/candidate columns
-    are checked, not value_col. A value_col named 'bucket'/'rho'/'_h'
-    is safe here because every sketch select computes its temps FROM
-    the input row before projecting — the value column is consumed by
-    name inside an expression (md5_i64(col(value_col))), never carried
-    alongside the temps, so a collision cannot shadow or corrupt it.
-    Group columns DO ride next to the temps through groupBy/select,
-    which is where shadowing bites."""
-    taken = reserved & set(cols)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
-        )
 
 
 def _alpha(m: int) -> float:
@@ -101,8 +79,8 @@ def hll_registers(
 
     This is the sketch you persist / union / re-aggregate: merging two
     register tables is groupBy(bucket).max(rho) again."""
-    _check_reserved(group_cols, {"_h", "bucket", "rho", "max_rho"},
-                    "hll_registers")
+    check_reserved(group_cols, {"_h", "bucket", "rho", "max_rho"},
+                   "hll_registers")
     rem_bits = HASH_BITS - HLL_P
     # NULL values must not sketch: md5_i64(NULL) is NULL, and the
     # (bucket=NULL, rho=rem_bits+1) phantom register it would create
@@ -141,8 +119,8 @@ def hll_estimate(
     correction: raw = alpha * m^2 / sum(2^-M_j) (empty registers
     contribute 2^0 = 1); if raw <= 2.5m and V empty registers remain,
     estimate = m * ln(m / V)."""
-    _check_reserved(group_cols, {"_present_pow", "_nonempty", "hll_distinct"},
-                    "hll_estimate")
+    check_reserved(group_cols, {"_present_pow", "_nonempty", "hll_distinct"},
+                   "hll_estimate")
     m = 1 << HLL_P
     agg = regs.groupBy(*group_cols).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("_present_pow"),
@@ -264,9 +242,9 @@ def cms_estimate(counters: DataFrame, candidates: DataFrame) -> DataFrame:
     `candidates` is small by construction (the values you suspect are
     heavy), so the join broadcasts it against the d*w counter table.
     CMS guarantees cms_n >= true count (collisions only inflate)."""
-    _check_reserved(candidates.columns,
-                    {"_h", "e", "row_idx", "bucket", "cnt", "cms_n"},
-                    "cms_estimate")
+    check_reserved(candidates.columns,
+                   {"_h", "e", "row_idx", "bucket", "cnt", "cms_n"},
+                   "cms_estimate")
     hashed = candidates.withColumn("_h", md5_i64(F.col("user_val").cast("string")))
     entries = F.array(*_cms_bucket_structs(F.col("_h")))
     keep = [c for c in candidates.columns]
@@ -386,7 +364,7 @@ def hist_counts(
     streaming micro-batches. DDSketch's bucket rule, kept to pure
     ln/floor so any engine reproduces it bit-for-bit.
     """
-    _check_reserved(group_cols, {"bucket", "cnt"}, "hist_counts")
+    check_reserved(group_cols, {"bucket", "cnt"}, "hist_counts")
     bucket = log_bucket(F.col(value_col)).alias("bucket")
     # a NULL bucket (NULL value, or value <= -1 outside ln's domain)
     # must not become sketch state: Spark's cumulative window sorts
@@ -418,7 +396,7 @@ def hist_quantiles(
     be ulp-fragile."""
     from pyspark.sql import Window
 
-    _check_reserved(
+    check_reserved(
         group_cols,
         {"bucket", "cnt", "cum", "total"}
         | {f"_b{i}" for i in range(len(qs))},

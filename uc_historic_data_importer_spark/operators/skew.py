@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from uc_historic_data_importer_spark.operators.frames import check_reserved
+
 
 def _contains_map(dt: T.DataType) -> bool:
     if isinstance(dt, T.MapType):
@@ -40,19 +42,6 @@ def _row_salt_hash(df: DataFrame) -> F.Column:
     return F.xxhash64(F.spark_partition_id(), *hashable)
 
 
-def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
-    """interval_join-style reserved-name guard: withColumn would
-    SILENTLY OVERWRITE an input column named like an internal temp —
-    worst case an aggs source column named `_salt` aggregates the salt
-    values instead of the user's data. Raise with a rename hint."""
-    taken = reserved & set(df.columns)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
-        )
-
-
 def salted_agg(df: DataFrame) -> DataFrame:
     """Two-phase salted aggregation per ``event_type``: ``n`` (rows),
     ``total_value`` (sum of value) and ``max_value`` (max of value) —
@@ -77,8 +66,8 @@ def salted_agg(df: DataFrame) -> DataFrame:
     keeps identical duplicate rows spread across (at worst) their map
     partitions, so an undeduplicated hot key still fans out.
     """
-    _check_reserved(
-        df, {"_salt", "_p_n", "_p_total_value", "_p_max_value"}, "salted_agg"
+    check_reserved(
+        df.columns, {"_salt", "_p_n", "_p_total_value", "_p_max_value"}, "salted_agg"
     )
     salt = F.pmod(_row_salt_hash(df), F.lit(16))
     phase1 = df.withColumn("_salt", salt).groupBy("event_type", "_salt").agg(
@@ -103,7 +92,7 @@ def salted_distinct_count(df: DataFrame) -> DataFrame:
     semantics (and the paired SQL oracle) ignore NULLs, but the
     (key, salt, NULL) group would otherwise survive dropDuplicates and
     count(lit(1)) would count it as a distinct value."""
-    _check_reserved(df, {"_salt", "_n"}, "salted_distinct_count")
+    check_reserved(df.columns, {"_salt", "_n"}, "salted_distinct_count")
     salt = F.pmod(F.hash(F.col("user_id")), F.lit(16))
     per_bucket = (
         df.filter(F.col("user_id").isNotNull())
@@ -137,8 +126,8 @@ def salted_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
     explicit form is for when you must pin the strategy (e.g. a skewed
     key feeding a downstream co-partitioned stage).
     """
-    _check_reserved(fact, {"_salt"}, "salted_join")
-    _check_reserved(dim, {"_salt"}, "salted_join")
+    check_reserved(fact.columns, {"_salt"}, "salted_join")
+    check_reserved(dim.columns, {"_salt"}, "salted_join")
     f = fact.withColumn("_salt", F.pmod(_row_salt_hash(fact), F.lit(8)))
     d = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(7))))
     return f.join(d, ["k", "_salt"]).drop("_salt")

@@ -16,6 +16,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.hashes import md5_i64
+from uc_historic_data_importer_spark.operators.frames import (
+    check_reserved,
+    ensure_parallel,
+)
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -29,40 +33,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "de", "que", "los"),
     "fr": ("le", "la", "et", "les", "des"),
 }
-
-
-def _check_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
-    """skew.py-style reserved-name guard (r12 review batch 4): a
-    withColumn over an input column named like an internal temp would
-    SILENTLY replace it — segment_clean_docs(df_with_a_'_segs'_column)
-    emitted the internal segment array under the user's column name
-    (probed r12). Guards cover the LOSS cases (collisions that corrupt
-    an emitted column or a computation input); temps that are computed
-    and dropped without touching output values are not guarded, same
-    asymmetry as sketches.py's value_col note."""
-    taken = reserved & set(df.columns)
-    if taken:
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
-        )
-
-
-def _ensure_parallel(df: DataFrame) -> DataFrame:
-    """dedup.py's single-file-corpus guard, applied to the CPU-heavy
-    text operators whose plans already shuffle downstream (r12: the
-    sf1 documents table scans as ONE partition, so winnowing's entire
-    map phase ran on one core — 13.1 s -> 3.0 s repartitioned). A
-    round-robin repartition when under the session's default
-    parallelism; a no-op at real scale where the input already has
-    thousands of splits. NOT applied to the map-only contract
-    operators (pii_scrub, repetition/quality scores, the segment
-    cleaners): their zero-Exchange plans are a pinned 100 TB property
-    (tests/test_plans.py) and a streaming-safety feature."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
 
 
 def tokens_col(text: Column) -> Column:
@@ -80,6 +50,13 @@ TOKENS_SQL = (
 # stride-1 window width of exact substring dedup
 SEGMENT_K = 10
 SPAN_K = 8
+# read by each operator and its DuckDB oracle: bm25_topk's term
+# saturation k1, length normalization b and result count;
+# fuzzy_match_pairs' Levenshtein bound, gram width and gram df-cut;
+# winnowing_fingerprints' gram width (tokens) and window (hashes)
+BM25_K1, BM25_B, BM25_TOPK = 1.2, 0.75, 10
+FUZZY_MAX_DIST, FUZZY_Q, FUZZY_MAX_GRAM_DF = 3, 3, 200
+WINNOW_K, WINNOW_W = 4, 5
 
 
 def with_tokens(df: DataFrame) -> DataFrame:
@@ -95,7 +72,7 @@ def with_tokens(df: DataFrame) -> DataFrame:
     "collides with internal names" mean two different things across the
     text operators, and a caller whose tokens column came from ANOTHER
     tokenizer would be silently re-tokenized instead of told."""
-    _check_reserved(df, {"tokens", "n_tokens"}, "with_tokens")
+    check_reserved(df.columns, {"tokens", "n_tokens"}, "with_tokens")
     return df.withColumn("tokens", tokens_col(F.col("text"))).withColumn(
         "n_tokens", F.size("tokens")
     )
@@ -171,7 +148,7 @@ def tf_idf_top_terms(df: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    toks = with_tokens(_ensure_parallel(df))
+    toks = with_tokens(ensure_parallel(df))
     tf = (
         toks.select("doc_id", F.explode("tokens").alias("token"))
         .groupBy("doc_id", "token")
@@ -232,8 +209,8 @@ def pii_scrub(df: DataFrame) -> DataFrame:
     DuckDB oracle reproduces counts and redacted text byte-for-byte.
     Adds n_<kind> count columns and a `redacted` column; original text
     column is preserved for audit."""
-    _check_reserved(
-        df, {f"n_{k}" for k in PII_ORDER} | {"redacted"}, "pii_scrub"
+    check_reserved(
+        df.columns, {f"n_{k}" for k in PII_ORDER} | {"redacted"}, "pii_scrub"
     )
     out = df
     red = F.col("text")
@@ -494,7 +471,7 @@ def relative_quality_filter(df: DataFrame) -> DataFrame:
     source shard, not the document."""
     from pyspark.sql import Window
 
-    _check_reserved(df, {"pr"}, "relative_quality_filter")
+    check_reserved(df.columns, {"pr"}, "relative_quality_filter")
     d = with_tokens(df)
     w = Window.partitionBy("source").orderBy(F.col("n_tokens"), F.col("doc_id"))
     ranked = d.withColumn("pr", F.percent_rank().over(w))
@@ -541,7 +518,7 @@ def segment_clean_docs(df: DataFrame, boilerplate: list[str]) -> DataFrame:
     anti-join above remains the real upgrade."""
     # the output re-selects *df.columns, so a collision here EMITS the
     # internal temp under the user's column name (probed r12)
-    _check_reserved(df, {"_segs", "_kept"}, "segment_clean_docs")
+    check_reserved(df.columns, {"_segs", "_kept"}, "segment_clean_docs")
     toks = with_tokens(df)
     if len(set(boilerplate)) > 64:
         bset = frozenset(boilerplate)
@@ -578,7 +555,7 @@ def sliding_windows(df: DataFrame) -> DataFrame:
     k joined tokens, kept as text so external oracles replay exact
     semantics."""
     k = SPAN_K
-    toks = with_tokens(_ensure_parallel(df))
+    toks = with_tokens(ensure_parallel(df))
     nwin = F.col("n_tokens") - F.lit(k) + 1
 
     def gram_of(i):
@@ -667,8 +644,8 @@ def remove_duplicate_spans(df: DataFrame) -> DataFrame:
     by n_tokens/k), so the reconstruction is an array-HOF filter over
     token positions — pure codegen, no Python, no extra shuffle beyond
     the span aggregation's doc_id exchange (reused by the join)."""
-    _check_reserved(
-        df, {"_spans", "_dup", "_kept_idx"}, "remove_duplicate_spans"
+    check_reserved(
+        df.columns, {"_spans", "_dup", "_kept_idx"}, "remove_duplicate_spans"
     )
     spans = duplicate_spans(df)
     agg = spans.groupBy("doc_id").agg(
@@ -703,17 +680,11 @@ def remove_duplicate_spans(df: DataFrame) -> DataFrame:
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    topk: int = 10,
-) -> DataFrame:
+def bm25_topk(df: DataFrame, query_terms: list[str]) -> DataFrame:
     """BM25 ranked keyword retrieval (Robertson/Sparck Jones; the Lucene
     scoring shape): score(d) = sum_t idf(t) * tf*(k1+1) / (tf + k1*((1-b)
     + b*dl/avgdl)), idf = ln((N - df + 0.5)/(df + 0.5) + 1). Returns the
-    top-k (id, bm25) with score rounded to 6 dp BEFORE ranking (ties
+    top BM25_TOPK (id, bm25) with score rounded to 6 dp BEFORE ranking (ties
     break on id) so libm ln() ulp noise cannot flip ranks cross-engine.
 
     Plan shape: corpus statistics (N, avgdl, per-term df) are ONE
@@ -734,7 +705,7 @@ def bm25_topk(
         raise ValueError(
             f"query terms must match [a-z0-9]+ (tokenizer output form): {bad}"
         )
-    toks = with_tokens(_ensure_parallel(df))
+    toks = with_tokens(ensure_parallel(df))
     aggs = [
         F.count(F.lit(1)).cast("double").alias("_N"),
         F.avg("n_tokens").alias("_avgdl"),
@@ -756,16 +727,17 @@ def bm25_topk(
         idf = F.log(
             (F.col("_N") - dfi + F.lit(0.5)) / (dfi + F.lit(0.5)) + F.lit(1.0)
         )
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b) + (F.lit(b) * F.col("n_tokens")) / F.col("_avgdl")
+        denom = tf + F.lit(BM25_K1) * (
+            F.lit(1.0 - BM25_B)
+            + (F.lit(BM25_B) * F.col("n_tokens")) / F.col("_avgdl")
         )
-        s = idf * tf * F.lit(k1 + 1.0) / denom
+        s = idf * tf * F.lit(BM25_K1 + 1.0) / denom
         score = s if score is None else score + s
     out = j.select("doc_id", F.round(score, 6).alias("bm25"))
     return (
         out.filter(F.col("bm25") > 0)
         .orderBy(F.desc("bm25"), F.col("doc_id"))
-        .limit(topk)
+        .limit(BM25_TOPK)
     )
 
 
@@ -798,15 +770,12 @@ def dedup_segments_within_doc(df: DataFrame) -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    k: int = 4,
-    w: int = 5,
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): hash every k-token gram, slide a
-    w-hash window, select each window's minimum hash (leftmost position
-    on ties — a fixed rule so engines agree), and emit the DISTINCT
+    SIGMOD'03 — the MOSS algorithm): hash every k-token gram (k =
+    WINNOW_K), slide a w-hash window (w = WINNOW_W), select each
+    window's minimum hash (leftmost position on ties — a fixed rule so
+    engines agree), and emit the DISTINCT
     (position, fingerprint) pairs per document. Guarantee: any match of
     length >= w + k - 1 tokens between two documents shares at least
     one fingerprint — the bounded-density local sampling that beats
@@ -819,9 +788,8 @@ def winnowing_fingerprints(
     dedup are array HOFs on the row; the only fan-out is the final
     posexplode (<= one row per gram, typically ~2/w of that). Downstream
     groupBy(fingerprint) is the plagiarism/overlap join key."""
-    if k <= 0 or w <= 0:
-        raise ValueError("k and w must be positive")
-    toks = with_tokens(_ensure_parallel(df))
+    k, w = WINNOW_K, WINNOW_W
+    toks = with_tokens(ensure_parallel(df))
     m = F.col("n_tokens") - F.lit(k) + 1  # gram count
     grams = F.when(
         m > 0,
@@ -898,16 +866,11 @@ def winnowing_fingerprints(
     )
 
 
-def fuzzy_match_pairs(
-    df: DataFrame,
-    max_dist: int = 3,
-    q: int = 3,
-    max_gram_df: int | None = None,
-) -> DataFrame:
+def fuzzy_match_pairs(df: DataFrame) -> DataFrame:
     """String-similarity (fuzzy entity-matching) self-join: all
     ``doc_id`` pairs whose ``head`` keys are within Levenshtein distance
-    ``max_dist``, via q-gram
-    blocking — the classic ED-Join/PassJoin-family shape, composed from
+    max_dist = FUZZY_MAX_DIST, via q-gram blocking (q = FUZZY_Q) — the
+    classic ED-Join/PassJoin-family shape, composed from
     DataFrame ops:
 
     1. BLOCK: explode each key's distinct q-grams (with their positional
@@ -928,17 +891,18 @@ def fuzzy_match_pairs(
     3. VERIFY: exact levenshtein() (JVM-side, same classic DP both
        engines) on the surviving candidates only.
 
-    ``max_gram_df`` drops grams occurring in more than that many keys
-    before the join — the df-cut that bounds hot-gram fan-out at scale
-    (same pattern as dedup_ngram_jaccard): candidate cost becomes
+    The df-cut drops grams occurring in more than FUZZY_MAX_GRAM_DF
+    keys before the join; it bounds hot-gram fan-out at scale (same
+    pattern as dedup_ngram_jaccard): candidate cost becomes
     sum(df^2) over SURVIVING grams. Pairs whose every shared gram is
     hot are missed — a documented approximation, mirrored exactly in
     the oracle. Keys shorter than q block on the whole key.
 
     Output: (id_a, id_b, dist), id_a < id_b, dist <= max_dist."""
-    if max_dist < 0 or q <= 0:
-        raise ValueError("max_dist must be >= 0 and q positive")
-    keys = _ensure_parallel(df).select(
+    from pyspark.sql.window import Window
+
+    q, max_dist = FUZZY_Q, FUZZY_MAX_DIST
+    keys = ensure_parallel(df).select(
         F.col("doc_id").alias("_id"),
         F.col("head").alias("_k"),
         F.length("head").alias("_len"),
@@ -971,13 +935,10 @@ def fuzzy_match_pairs(
     g = keys.select(
         "_id", "_len", F.explode(gram_counts).alias("_g")
     ).select("_id", "_len", F.col("_g.gram").alias("gram"), F.col("_g.cnt").alias("cnt"))
-    if max_gram_df is not None:
-        from pyspark.sql.window import Window
-
-        gram_df = F.count(F.lit(1)).over(Window.partitionBy("gram"))
-        g = g.withColumn("_df", gram_df).filter(
-            F.col("_df") <= max_gram_df
-        ).drop("_df")
+    gram_df = F.count(F.lit(1)).over(Window.partitionBy("gram"))
+    g = g.withColumn("_df", gram_df).filter(
+        F.col("_df") <= FUZZY_MAX_GRAM_DF
+    ).drop("_df")
     a = g.select(
         F.col("_id").alias("id_a"),
         F.col("_len").alias("len_a"),
@@ -1047,7 +1008,7 @@ def unigram_logprob_scores(
     "almost" is not a contract). One double division at the end.
 
     Output: (doc_id, n_tokens, avg_logprob)."""
-    toks = _ensure_parallel(df).select(
+    toks = ensure_parallel(df).select(
         F.col("doc_id").alias("doc_id"),
         F.explode(tokens_col(F.col("text"))).alias("tok"),
     )
@@ -1091,7 +1052,7 @@ def token_ngram_topk(df: DataFrame) -> DataFrame:
     regex work per doc that profiled at 7 s where the materialized
     form runs in well under 1 s at bench scale."""
     n = 2
-    df = _ensure_parallel(df)
+    df = ensure_parallel(df)
     toks = F.col("_toks")
     idx = F.when(
         F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
@@ -1146,8 +1107,8 @@ def length_outliers(df: DataFrame, exact: bool = True) -> DataFrame:
     preserved, NULL in degenerate groups."""
     from uc_historic_data_importer_spark.operators import sketches
 
-    _check_reserved(
-        df,
+    check_reserved(
+        df.columns,
         {"_med", "_mad", "_adev", "robust_z", "_med_bucket"},
         "length_outliers",
     )

@@ -42,19 +42,6 @@ class QuerySpec:
     doc: str = ""
 
 
-# Legacy testdata snapshots carried parquet TIMESTAMP(NANOS), read as
-# nanos-longs (nanosAsLong) and converted here (integer div — double
-# division would lose microsecond precision on 1.7e18 values). Current
-# snapshots carry naive TIMESTAMP(MICROS), which prepare_session's
-# inferTimestampNTZ=false maps straight to TIMESTAMP — convert_ts then
-# no-ops. Both representations yield identical UTC instants.
-_TS_COLS = {
-    "events": ("ts",),
-    "lineitem": ("l_shipdate",),
-    "orders": ("o_orderdate",),
-}
-
-
 # Schema memo (r15 opt round): spark.read.parquet() infers the schema
 # from file footers on EVERY call — measured ~140 ms of driver/py4j
 # time per t() at steady state, paid inside every timed query build.
@@ -69,13 +56,10 @@ _TS_COLS = {
 _SCHEMA_MEMO: dict = {}
 
 
-def t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Raw scan: timestamp columns stay as nanos-longs. Filters written
-    against the raw long column push down to the parquet scan, which the
-    converted form (timestamp_micros(x div 1000)) never can — use this +
-    `ns()` thresholds for scan-heavy time-filtered queries.
-
-    Requires session.prepare_session confs (nanosAsLong, UTC); query
+def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan of the test table ``name`` under ``sf_dir``. Its naive
+    TIMESTAMP(MICROS) columns read as TIMESTAMP under
+    session.prepare_session's confs (inferTimestampNTZ off, UTC); query
     functions themselves are side-effect-free — sessions built by
     get_spark are prepared already, and the driver-contract wrapper in
     __spark_entry__ prepares external sessions once."""
@@ -86,25 +70,6 @@ def t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _SCHEMA_MEMO[(sf_dir, name)] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
-
-
-def convert_ts(df: DataFrame, name: str, schema=None) -> DataFrame:
-    if name not in _TS_COLS:
-        return df
-    dtypes = (
-        {f.name: f.dataType.simpleString() for f in schema.fields}
-        if schema is not None
-        else dict(df.dtypes)
-    )
-    for c in _TS_COLS.get(name, ()):
-        if dtypes.get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
-
-
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = t_raw(spark, sf_dir, name)
-    return convert_ts(df, name, schema=_SCHEMA_MEMO.get((sf_dir, name)))
 
 
 QUERIES: dict[str, QuerySpec] = {}

@@ -24,6 +24,7 @@ from uc_historic_data_importer_spark.functions.hashes import (
 from uc_historic_data_importer_spark.operators import (
     bloom,
     dedup,
+    frames,
     sampling,
     similarity,
     sketches,
@@ -260,9 +261,10 @@ def _memo(key: tuple, thunk):
 _ROWS = _NUM_PERMS // _BANDS
 
 
-def _minhash_pairs_ctes() -> str:
-    """CTE chain ending in `pairs(doc_a, doc_b)` — shared by the pair
-    query and the connected-components oracle."""
+def _banded_ctes() -> str:
+    """CTE chain ending in `banded(doc_id, band_idx, band_sig)`: the
+    MinHash signature of every document and its LSH band keys, with the
+    perm constants operators/dedup.py uses."""
     consts = perm_constants(_NUM_PERMS)
     mins = ", ".join(
         f"min((h * {a} + {b}) % {MERSENNE_61}) AS mh{j}"
@@ -279,7 +281,13 @@ def _minhash_pairs_ctes() -> str:
     banded = " UNION ALL ".join(bands)
     return f"""{_SHINGLE_CTE},
     sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    banded AS ({banded}),
+    banded AS ({banded})"""
+
+
+def _minhash_pairs_ctes() -> str:
+    """CTE chain ending in `pairs(doc_a, doc_b)` — shared by the pair
+    query and the connected-components oracle."""
+    return f"""{_banded_ctes()},
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a
@@ -368,7 +376,10 @@ def bloom_anti_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         cache_key=f"{sf_dir}/orders:o_orderstatus=F",
         # size dispatch (guide §3.1): below broadcast scale the exact
         # broadcast anti-join wins (one records scan, zero shuffle);
-        # the Bloom two-branch route engages past broadcast_max_existing
+        # the Bloom two-branch route engages past broadcast_max_existing.
+        # The unfiltered orders count bounds the 'F' keys from above, so
+        # the choice errs toward the Bloom path and never broadcasts
+        # more than declared.
         n_existing=_table_n_rows(sf_dir, "orders"),
     )
     return new_rows.groupBy("l_returnflag").agg(
@@ -487,9 +498,9 @@ def hist_quantile_prices_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.hist_quantiles(counts, group_cols=("l_returnflag",))
 
 
-@register(
-    "corpus_curation",
-    f"""
+# the curation oracles' per-doc features: whitespace tokens, the
+# stopword ratio and the canonical fingerprint
+_CURATION_FEAT_CTE = f"""
     WITH tok AS (
       SELECT doc_id, source, {_TOKENS_SQL} AS w FROM documents
     ),
@@ -499,7 +510,12 @@ def hist_quantile_prices_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                / greatest(len(w), 1) AS stop_ratio,
              md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fp
       FROM tok
-    ),
+    )"""
+
+
+@register(
+    "corpus_curation",
+    f"""{_CURATION_FEAT_CTE},
     kept AS (
       SELECT * FROM feat WHERE n_tokens >= 5 AND stop_ratio <= 0.5
     ),
@@ -655,16 +671,13 @@ def split_decontamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def salted_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import skew
-    from uc_historic_data_importer_spark.operators.dedup import (
-        _ensure_parallel,
-    )
 
-    # dedup.py's single-file-corpus guard on the fact side (r14 opt
-    # round): the sf0.1 lineitem parquet is ONE row group, so the
-    # salt-hash + join + partial-agg stage otherwise runs on one core
-    # (profiled 1.70 s -> 1.39 s with the guard). No-op at real scale
-    # where the fact table already has thousands of splits.
-    li = _ensure_parallel(
+    # the single-file-input guard on the fact side (r14 opt round):
+    # the sf0.1 lineitem parquet is ONE row group, so the salt-hash +
+    # join + partial-agg stage otherwise runs on one core (profiled
+    # 1.70 s -> 1.39 s with the guard). No-op at real scale where the
+    # fact table already has thousands of splits.
+    li = frames.ensure_parallel(
         t(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("k"),
             "l_extendedprice",
@@ -1276,6 +1289,21 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
     return emb, cents
 
 
+def _safe_norm_sql(e: str) -> str:
+    """|e| with a zero norm read as 1 (similarity.safe_norm_col's rule)."""
+    ip = "list_inner_product"
+    return (
+        f"(CASE WHEN sqrt({ip}({e}, {e})) = 0 THEN 1.0 "
+        f"ELSE sqrt({ip}({e}, {e})) END)"
+    )
+
+
+def _unit_sql(e: str) -> str:
+    """DuckDB twin of similarity._unit: ``e`` scaled to unit length,
+    a zero vector left as is."""
+    return f"list_transform({e}, x -> x / {_safe_norm_sql(e)})"
+
+
 def _ivf_build_oracle(k: int | str = 4, iters: int = 2) -> str:
     """Unrolled deterministic spherical k-means (init = k lowest ids,
     `iters` fixed rounds) as pure DuckDB SQL — the fit is iterative but
@@ -1284,18 +1312,8 @@ def _ivf_build_oracle(k: int | str = 4, iters: int = 2) -> str:
     rather than rows-only."""
     ip = "list_inner_product"
 
-    def unit(e: str) -> str:
-        n = (
-            f"(CASE WHEN sqrt({ip}({e}, {e})) = 0 THEN 1.0 "
-            f"ELSE sqrt({ip}({e}, {e})) END)"
-        )
-        return f"list_transform({e}, x -> x / {n})"
-
     def assign(cent: str, out: str) -> str:
-        cn = (
-            f"(CASE WHEN sqrt({ip}(c.c, c.c)) = 0 THEN 1.0 "
-            f"ELSE sqrt({ip}(c.c, c.c)) END)"
-        )
+        cn = _safe_norm_sql("c.c")
         # key = dot / |c| only: |v| is constant per vec and dropped on
         # BOTH engines (see similarity._cell_expr)
         return f"""{out} AS (
@@ -1322,7 +1340,7 @@ def _ivf_build_oracle(k: int | str = 4, iters: int = 2) -> str:
       SELECT p.cell,
              CASE WHEN m.l IS NULL
                     OR len(list_filter(m.l, x -> x != 0)) = 0
-                  THEN p.c ELSE {unit('m.l')} END AS c
+                  THEN p.c ELSE {_unit_sql('m.l')} END AS c
       FROM {prev_cent} p LEFT JOIN {out}_l m USING (cell)
     )"""
 
@@ -1332,7 +1350,7 @@ def _ivf_build_oracle(k: int | str = 4, iters: int = 2) -> str:
     ),
     c0 AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell,
-             {unit('v')} AS c
+             {_unit_sql('v')} AS c
       FROM (SELECT vec_id, v FROM v ORDER BY vec_id LIMIT {k})
     )"""
     ]
@@ -1434,17 +1452,7 @@ def _ivf2_topk_oracle() -> str:
     k1, k2, coarse_iters, fine_iters = _IVF2_K1_SQL, _IVF2_TOPK_K2, 1, 1
     ip = "list_inner_product"
 
-    def unit(e: str) -> str:
-        n = (
-            f"(CASE WHEN sqrt({ip}({e}, {e})) = 0 THEN 1.0 "
-            f"ELSE sqrt({ip}({e}, {e})) END)"
-        )
-        return f"list_transform({e}, x -> x / {n})"
-
-    cn = (
-        f"(CASE WHEN sqrt({ip}(c.c, c.c)) = 0 THEN 1.0 "
-        f"ELSE sqrt({ip}(c.c, c.c)) END)"
-    )
+    cn = _safe_norm_sql("c.c")
 
     def assign_fine(cent: str, out: str) -> str:
         return f"""{out} AS (
@@ -1471,7 +1479,7 @@ def _ivf2_topk_oracle() -> str:
       SELECT p.cell, p.fine,
              CASE WHEN m.l IS NULL
                     OR len(list_filter(m.l, x -> x != 0)) = 0
-                  THEN p.c ELSE {unit('m.l')} END AS c
+                  THEN p.c ELSE {_unit_sql('m.l')} END AS c
       FROM {prev_cent} p LEFT JOIN {out}_l m USING (cell, fine)
     )"""
 
@@ -1481,7 +1489,7 @@ def _ivf2_topk_oracle() -> str:
       FROM af JOIN v USING (vec_id)
     ),
     f0 AS (
-      SELECT cell, CAST(rn - 1 AS INT) AS fine, {unit('v')} AS c
+      SELECT cell, CAST(rn - 1 AS INT) AS fine, {_unit_sql('v')} AS c
       FROM (
         SELECT cell, vec_id, v, row_number() OVER (
           PARTITION BY cell ORDER BY vec_id) AS rn
@@ -2008,18 +2016,10 @@ def embedding_quantize_int8_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_oracle() -> str:
-    import hashlib
-
-    def coeff(p: int, i: int) -> float:
-        h = int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:15], 16)
-        return (h % 1000) / 1000.0 - 0.5
-
     bits = []
-    for p in range(similarity.LSH_PLANES):
-        # the embeddings fixture carries 64-dim vectors
-        terms = " + ".join(
-            f"e[{i + 1}] * {coeff(p, i)!r}" for i in range(64)
-        )
+    # the embeddings fixture carries 64-dim vectors
+    for p, plane in enumerate(similarity.hyperplane_coeffs(64)):
+        terms = " + ".join(f"e[{i + 1}] * {c!r}" for i, c in enumerate(plane))
         bits.append(f"(CASE WHEN ({terms}) > 0 THEN {1 << p} ELSE 0 END)")
     bucket = " + ".join(bits)
     return f"""
@@ -2251,9 +2251,9 @@ def zorder_stats_lineitem_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "bpe_token_stats",
-    f"""
+# per-source BPE piece / whitespace token totals; bpe_token_stats and
+# token_counts_seam reach the same answer by different routes
+_BPE_STATS_SQL = f"""
     WITH pieces AS (
       SELECT source,
              len(list_filter(
@@ -2270,7 +2270,12 @@ def zorder_stats_lineitem_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                           THEN n_bpe::DOUBLE / n_ws END) * 10000)
                 AS BIGINT) AS avg_fertility_e4
     FROM pieces GROUP BY source
-    """,
+    """
+
+
+@register(
+    "bpe_token_stats",
+    _BPE_STATS_SQL,
     doc="BPE-ish token counting (operators/text.py::bpe_token_stats): "
     "GPT-2-style pretokenizer pieces (contraction suffixes, space-"
     "prefixed letter/digit/punct runs) via one codegen regexp_extract_all "
@@ -2386,6 +2391,21 @@ def _pq_oracle(topk: int = 10, same_cell_only: bool = False) -> str:
     """
 
 
+def _pq_inputs(spark: SparkSession, sf_dir: str):
+    """The PQ queries' shared inputs: the embeddings table, its PQ
+    codebooks and the query row (vec_id 0) with its vector; the fit and
+    the row are memoized per sf_dir."""
+    from uc_historic_data_importer_spark.operators import pq
+
+    emb = t(spark, sf_dir, "embeddings")
+    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
+    q_row = _memo(
+        ("qrow", sf_dir, 0),
+        lambda: emb.filter(F.col("vec_id") == 0).first(),
+    )
+    return emb, books, q_row, [float(x) for x in q_row["embedding"]]
+
+
 @register(
     "ann_pq_topk",
     _pq_oracle(topk=10),
@@ -2400,13 +2420,7 @@ def _pq_oracle(topk: int = 10, same_cell_only: bool = False) -> str:
 def ann_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
-    emb = t(spark, sf_dir, "embeddings")
-    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
-    q_row = _memo(
-        ("qrow", sf_dir, 0),
-        lambda: emb.filter(F.col("vec_id") == 0).first(),
-    )
-    qv = [float(x) for x in q_row["embedding"]]
+    emb, books, _, qv = _pq_inputs(spark, sf_dir)
     return pq.pq_topk(emb, books, qv, k=10)
 
 
@@ -2450,13 +2464,7 @@ def weighted_sample_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
-    emb = t(spark, sf_dir, "embeddings")
-    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
-    q_row = _memo(
-        ("qrow", sf_dir, 0),
-        lambda: emb.filter(F.col("vec_id") == 0).first(),
-    )
-    qv = [float(x) for x in q_row["embedding"]]
+    emb, books, q_row, qv = _pq_inputs(spark, sf_dir)
     cell = q_row["label"]
     candidates = emb.filter(F.col("label") == cell)
     return pq.pq_topk(candidates, books, qv, k=10)
@@ -2561,24 +2569,8 @@ def k_anonymity_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_lsh_oracle() -> str:
     """Bands of incoming (doc_id % 10 = 0) vs corpus (rest), equi-joined
     — shares the exact signature/band CTEs of dedup_minhash_lsh."""
-    consts = perm_constants(_NUM_PERMS)
-    mins = ", ".join(
-        f"min((h * {a} + {b}) % {MERSENNE_61}) AS mh{j}"
-        for j, (a, b) in enumerate(consts)
-    )
-    bands = []
-    for bi in range(_BANDS):
-        cols = " || ',' || ".join(
-            f"CAST(mh{bi * _ROWS + r} AS VARCHAR)" for r in range(_ROWS)
-        )
-        bands.append(
-            f"SELECT doc_id, {bi} AS band_idx, md5({cols}) AS band_sig FROM sig"
-        )
-    banded = " UNION ALL ".join(bands)
     return f"""
-    WITH {_SHINGLE_CTE},
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    banded AS ({banded})
+    WITH {_banded_ctes()}
     SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
     FROM banded n
     JOIN banded c ON n.band_idx = c.band_idx AND n.band_sig = c.band_sig
@@ -2604,16 +2596,36 @@ def dedup_incremental_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.lsh_join_incremental(incoming, corpus)
 
 
-@register(
-    "media_wav_decode",
-    """
+# the media_wav_* fixtures: doc_id -> a PCM16 sawtooth of period p,
+# amplitude step `scale`, `reps` periods at 8 kHz; _WAV_PARAMS_CTE is the
+# oracles' copy of the same three numbers
+_WAV_PARAMS_CTE = """
     WITH params AS (
       SELECT doc_id,
              (2 + doc_id % 6) AS p,
              (100 + (doc_id % 10) * 50) AS scale,
              (50 + doc_id % 20) AS reps
       FROM documents
-    )
+    )"""
+
+
+@F.pandas_udf(T.BinaryType())
+def mk_wav(ids: pd.Series) -> pd.Series:
+    from uc_historic_data_importer_spark.functions import audiocodec as ac
+
+    def build(i: int) -> bytes:
+        p = 2 + i % 6
+        scale = 100 + (i % 10) * 50
+        reps = 50 + i % 20
+        samples = [((j % p) - p // 2) * scale for j in range(p * reps)]
+        return ac.encode_wav(samples)
+
+    return ids.map(build)
+
+
+@register(
+    "media_wav_decode",
+    f"""{_WAV_PARAMS_CTE}
     SELECT doc_id AS media_id,
            CAST(8000 AS INT) AS sample_rate,
            CAST(p * reps AS INT) AS n_samples,
@@ -2637,19 +2649,6 @@ def dedup_incremental_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def media_wav_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import multimodal
-
-    @F.pandas_udf(T.BinaryType())
-    def mk_wav(ids: pd.Series) -> pd.Series:
-        from uc_historic_data_importer_spark.functions import audiocodec as ac
-
-        def build(i: int) -> bytes:
-            p = 2 + i % 6
-            scale = 100 + (i % 10) * 50
-            reps = 50 + i % 20
-            samples = [((j % p) - p // 2) * scale for j in range(p * reps)]
-            return ac.encode_wav(samples)
-
-        return ids.map(build)
 
     media = t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"),
@@ -2894,17 +2893,7 @@ def media_perceptual_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_funnel_report",
-    f"""
-    WITH tok AS (
-      SELECT doc_id, source, {_TOKENS_SQL} AS w FROM documents
-    ),
-    feat AS (
-      SELECT doc_id, source, len(w) AS n_tokens,
-             len(list_filter(w, x -> list_contains({_STOP_SQL}, x)))
-               / greatest(len(w), 1) AS stop_ratio,
-             md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fp
-      FROM tok
-    ),
+    f"""{_CURATION_FEAT_CTE},
     quality AS (
       SELECT * FROM feat WHERE n_tokens >= 5 AND stop_ratio <= 0.5
     ),
@@ -3086,13 +3075,7 @@ def _recall_audit_oracle() -> str:
 def ann_recall_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
-    emb = t(spark, sf_dir, "embeddings")
-    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
-    q_row = _memo(
-        ("qrow", sf_dir, 0),
-        lambda: emb.filter(F.col("vec_id") == 0).first(),
-    )
-    qv = [float(x) for x in q_row["embedding"]]
+    emb, books, _, qv = _pq_inputs(spark, sf_dir)
     approx = pq.pq_topk(emb, books, qv, k=10).select(
         "neighbor_id"
     )
@@ -3669,14 +3652,13 @@ def semantic_decontamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BM25_TERMS = ("customer", "vector", "merge")
-_BM25_K1, _BM25_B, _BM25_TOPK = 1.2, 0.75, 10
 
 
 def _bm25_oracle() -> str:
     """BM25 replay with constants emitted via repr() so both engines
     parse bit-identical doubles; arithmetic association mirrors
     text.bm25_topk exactly (idf*tf*(k1+1)/denom, left-assoc sum)."""
-    k1, b = _BM25_K1, _BM25_B
+    k1, b = text.BM25_K1, text.BM25_B
     terms = list(dict.fromkeys(_BM25_TERMS))
     # Same validation as text.bm25_topk: terms are interpolated into SQL
     # string literals below, so restrict to tokenizer-form [a-z0-9]+ —
@@ -3709,7 +3691,7 @@ def _bm25_oracle() -> str:
     SELECT doc_id, bm25 FROM (
       SELECT doc_id, round({score}, 6) AS bm25 FROM toks, stats
     ) WHERE bm25 > 0
-    ORDER BY bm25 DESC, doc_id LIMIT {_BM25_TOPK}
+    ORDER BY bm25 DESC, doc_id LIMIT {text.BM25_TOPK}
     """
 
 
@@ -3725,13 +3707,7 @@ def _bm25_oracle() -> str:
     "cross-engine. Two scans total regardless of query length.",
 )
 def bm25_retrieval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.bm25_topk(
-        t(spark, sf_dir, "documents"),
-        list(_BM25_TERMS),
-        k1=_BM25_K1,
-        b=_BM25_B,
-        topk=_BM25_TOPK,
-    )
+    return text.bm25_topk(t(spark, sf_dir, "documents"), list(_BM25_TERMS))
 
 
 @register(
@@ -3828,12 +3804,9 @@ def indoc_segment_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.dedup_segments_within_doc(t(spark, sf_dir, "documents"))
 
 
-_CDC_K, _CDC_DIV = 3, 8
-
-
-@register(
-    "content_defined_chunks",
-    f"""
+# the content-defined chunk boundaries of every document (packing.
+# content_defined_chunks' cut rule), shared by the chunk oracles
+_CDC_BOUNDS_CTE = f"""
     WITH toks AS (
       SELECT doc_id, {_TOKENS_SQL} AS w, len({_TOKENS_SQL}) AS n
       FROM documents
@@ -3842,12 +3815,17 @@ _CDC_K, _CDC_DIV = 3, 8
       SELECT doc_id, w, n,
              list_concat(
                list_concat([0], list_filter(
-                 range(1, greatest(n - {_CDC_K} + 1, 1)),
-                 i -> {md5_i64_sql(f"array_to_string(w[i+1:i+{_CDC_K}], ' ')")}
-                        % {_CDC_DIV} = 0)),
+                 range(1, greatest(n - {packing.CDC_K} + 1, 1)),
+                 i -> {md5_i64_sql(f"array_to_string(w[i+1:i+{packing.CDC_K}], ' ')")}
+                        % {packing.CDC_DIV} = 0)),
                [n]) AS bounds
       FROM toks WHERE n > 0
-    ),
+    )"""
+
+
+@register(
+    "content_defined_chunks",
+    f"""{_CDC_BOUNDS_CTE},
     spans AS (
       SELECT doc_id, w, j - 1 AS chunk_no,
              bounds[j] AS start_tok, bounds[j + 1] AS end_tok
@@ -3867,14 +3845,7 @@ _CDC_K, _CDC_DIV = 3, 8
     "dedup key producer. Entirely map-only array HOFs; no shuffle.",
 )
 def content_defined_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from uc_historic_data_importer_spark.operators import packing
-
-    return packing.content_defined_chunks(
-        t(spark, sf_dir, "documents"), k=_CDC_K, divisor=_CDC_DIV
-    )
-
-
-_WIN_K, _WIN_W = 4, 5
+    return packing.content_defined_chunks(t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3882,13 +3853,13 @@ _WIN_K, _WIN_W = 4, 5
     f"""
     WITH toks AS (
       SELECT doc_id, {_TOKENS_SQL} AS t,
-             len({_TOKENS_SQL}) - {_WIN_K} + 1 AS m
+             len({_TOKENS_SQL}) - {text.WINNOW_K} + 1 AS m
       FROM documents
     ),
     g AS (
       SELECT doc_id,
              list_transform(range(m),
-               i -> {{'fp': {md5_i64_sql(f"array_to_string(t[i+1:i+{_WIN_K}], ' ')")},
+               i -> {{'fp': {md5_i64_sql(f"array_to_string(t[i+1:i+{text.WINNOW_K}], ' ')")},
                       'pos': i}})
                AS hp
       FROM toks WHERE m > 0
@@ -3896,8 +3867,8 @@ _WIN_K, _WIN_W = 4, 5
     sel AS (
       SELECT doc_id,
              list_transform(
-               range(greatest(len(hp) - {_WIN_W}, 0) + 1),
-               j -> list_min(hp[j+1:j+{_WIN_W}])) AS fps
+               range(greatest(len(hp) - {text.WINNOW_W}, 0) + 1),
+               j -> list_min(hp[j+1:j+{text.WINNOW_W}])) AS fps
       FROM g
     )
     SELECT DISTINCT doc_id, CAST(u.f['pos'] AS INT) AS pos,
@@ -3913,28 +3884,12 @@ _WIN_K, _WIN_W = 4, 5
     "key.",
 )
 def winnowing_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.winnowing_fingerprints(
-        t(spark, sf_dir, "documents"), k=_WIN_K, w=_WIN_W
-    )
+    return text.winnowing_fingerprints(t(spark, sf_dir, "documents"))
 
 
 @register(
     "chunk_dup_ratio",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKENS_SQL} AS w, len({_TOKENS_SQL}) AS n
-      FROM documents
-    ),
-    b AS (
-      SELECT doc_id, w, n,
-             list_concat(
-               list_concat([0], list_filter(
-                 range(1, greatest(n - {_CDC_K} + 1, 1)),
-                 i -> {md5_i64_sql(f"array_to_string(w[i+1:i+{_CDC_K}], ' ')")}
-                        % {_CDC_DIV} = 0)),
-               [n]) AS bounds
-      FROM toks WHERE n > 0
-    ),
+    f"""{_CDC_BOUNDS_CTE},
     chunks AS (
       SELECT doc_id,
              {md5_i64_sql("array_to_string(w[bounds[j]+1:bounds[j+1]], ' ')")}
@@ -3965,8 +3920,6 @@ def winnowing_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Nothing all-pairs.",
 )
 def chunk_dup_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from uc_historic_data_importer_spark.operators import packing
-
     # single-split scan guard at the QUERY level (r14 opt round): the
     # CPU-heavy chunk-hash map stage ran as ONE task (0.87 s JVM CPU)
     # on the one-split documents parquet, and this plan shuffles
@@ -3974,13 +3927,8 @@ def chunk_dup_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # content_defined_chunks declares a zero-shuffle streaming-safe
     # plan (and .rdd would crash a streaming frame).
     return packing.chunk_dup_stats(
-        dedup._ensure_parallel(t(spark, sf_dir, "documents")),
-        k=_CDC_K,
-        divisor=_CDC_DIV,
+        frames.ensure_parallel(t(spark, sf_dir, "documents"))
     )
-
-
-_SDL_THRESHOLD, _SDL_PLANES, _SDL_TABLES, _SDL_DIM = 0.3, 4, 4, 64
 
 
 def _semantic_decontamination_lsh_oracle() -> str:
@@ -3990,6 +3938,8 @@ def _semantic_decontamination_lsh_oracle() -> str:
     bucket) equi-join, exact cosine on candidates, per-train max with a
     left join restoring never-candidate rows."""
     from uc_historic_data_importer_spark.operators.similarity import (
+        SDL_TABLES,
+        SDL_THRESHOLD,
         lsh_plane_coeffs,
     )
 
@@ -4005,11 +3955,12 @@ def _semantic_decontamination_lsh_oracle() -> str:
 
     sides = []
     for name, src in (("trn_b", "trn"), ("tst_b", "tst")):
+        # 64: the embeddings table's dim
         parts = [
             f"SELECT vec_id, v, {l} AS tbl, "
-            f"({bucket_sql(lsh_plane_coeffs(_SDL_PLANES, _SDL_DIM, l))}) "
+            f"({bucket_sql(lsh_plane_coeffs(64, l))}) "
             f"AS bucket FROM {src}"
-            for l in range(_SDL_TABLES)
+            for l in range(SDL_TABLES)
         ]
         sides.append(f"{name} AS (" + " UNION ALL ".join(parts) + ")")
     return f"""
@@ -4027,7 +3978,7 @@ def _semantic_decontamination_lsh_oracle() -> str:
         ON tb.tbl = qb.tbl AND tb.bucket = qb.bucket
     )
     SELECT trn.vec_id, max(s.sim) AS max_cand_sim,
-           CAST(coalesce(max(s.sim), -1) >= {_SDL_THRESHOLD!r} AS INT)
+           CAST(coalesce(max(s.sim), -1) >= {SDL_THRESHOLD!r} AS INT)
              AS contaminated
     FROM trn LEFT JOIN sims s ON trn.vec_id = s.vec_id
     GROUP BY trn.vec_id
@@ -4040,7 +3991,8 @@ def _semantic_decontamination_lsh_oracle() -> str:
     doc="LSH-bucketed semantic decontamination (similarity.semantic_"
     "decontamination_lsh) — the tested fallback for eval sets too large "
     "to broadcast: candidate pairs from a (table, sign-LSH bucket) "
-    f"equi-join ({_SDL_TABLES} tables x {_SDL_PLANES} planes, "
+    f"equi-join ({similarity.SDL_TABLES} tables x "
+    f"{similarity.SDL_PLANES} planes, "
     "deterministic md5-derived coefficients both engines replay as "
     "literals), exact cosine only on candidates, per-train-id max "
     "absorbing cross-table duplicate pairs without a dedup shuffle, "
@@ -4053,13 +4005,7 @@ def semantic_decontamination_lsh_q(
     emb = t(spark, sf_dir, "embeddings")
     test = emb.filter(F.col("vec_id") % 20 == 0)
     train = emb.filter(F.col("vec_id") % 20 != 0)
-    return similarity.semantic_decontamination_lsh(
-        train,
-        test,
-        threshold=_SDL_THRESHOLD,
-        n_planes=_SDL_PLANES,
-        n_tables=_SDL_TABLES,
-    )
+    return similarity.semantic_decontamination_lsh(train, test)
 
 
 _JPEG_Q00 = 16  # STD_LUM_QT[0], the only coefficient a uniform image hits
@@ -4122,7 +4068,7 @@ def media_jpeg_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Guard sits on the SCAN so the exchange lands BELOW the payload
     # projection — repartitioning `media` itself would still encode
     # every payload single-task. No-op at real scale.
-    media = dedup._ensure_parallel(t(spark, sf_dir, "documents")).select(
+    media = frames.ensure_parallel(t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
         mk_jpeg(F.col("doc_id")).alias("payload"),
@@ -4429,10 +4375,7 @@ def _semdedup_oracle() -> str:
     tail = "\n    SELECT vec_id, CAST(cell AS INT) AS cell FROM af"
     assert base.endswith(tail)
     ip = "list_inner_product"
-    nrm = (
-        f"(CASE WHEN sqrt({ip}(t.v, t.v)) = 0 THEN 1.0 "
-        f"ELSE sqrt({ip}(t.v, t.v)) END)"
-    )
+    nrm = _safe_norm_sql("t.v")
     return base[: -len(tail)] + f""",
     vv AS (
       SELECT a.vec_id, CAST(a.cell AS INT) AS cell, t.v, {nrm} AS nrm
@@ -4473,7 +4416,7 @@ def semdedup_embeddings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FUZZY_D, _FUZZY_Q, _FUZZY_DF, _FUZZY_HEAD = 3, 3, 200, 24
+_FUZZY_HEAD = 24
 
 
 @register(
@@ -4489,8 +4432,8 @@ _FUZZY_D, _FUZZY_Q, _FUZZY_DF, _FUZZY_HEAD = 3, 3, 200, 24
       FROM (
         SELECT id, s, l,
                unnest(list_transform(
-                 range(greatest(l - {_FUZZY_Q} + 1, 1)),
-                 i -> substr(s, i + 1, {_FUZZY_Q}))) AS gram
+                 range(greatest(l - {text.FUZZY_Q} + 1, 1)),
+                 i -> substr(s, i + 1, {text.FUZZY_Q}))) AS gram
         FROM k
       )
       GROUP BY id, s, l, gram
@@ -4498,7 +4441,7 @@ _FUZZY_D, _FUZZY_Q, _FUZZY_DF, _FUZZY_HEAD = 3, 3, 200, 24
     g AS (
       SELECT id, s, l, gram, cnt FROM (
         SELECT g0.*, count(*) OVER (PARTITION BY gram) AS df FROM g0
-      ) WHERE df <= {_FUZZY_DF}
+      ) WHERE df <= {text.FUZZY_MAX_GRAM_DF}
     ),
     cand AS (
       SELECT a.id AS id_a, b.id AS id_b,
@@ -4506,21 +4449,21 @@ _FUZZY_D, _FUZZY_Q, _FUZZY_DF, _FUZZY_HEAD = 3, 3, 200, 24
              any_value(a.l) AS la, any_value(b.l) AS lb,
              sum(least(a.cnt, b.cnt)) AS shared
       FROM g a JOIN g b ON a.gram = b.gram AND a.id < b.id
-         AND abs(a.l - b.l) <= {_FUZZY_D}
+         AND abs(a.l - b.l) <= {text.FUZZY_MAX_DIST}
       GROUP BY a.id, b.id
     )
     SELECT id_a, id_b, CAST(levenshtein(ka, kb) AS INT) AS dist
     FROM cand
-    WHERE shared >= greatest(least(la, lb) - {_FUZZY_Q} + 1
-                             - {_FUZZY_Q} * {_FUZZY_D}, 1)
-      AND levenshtein(ka, kb) <= {_FUZZY_D}
+    WHERE shared >= greatest(least(la, lb) - {text.FUZZY_Q} + 1
+                             - {text.FUZZY_Q} * {text.FUZZY_MAX_DIST}, 1)
+      AND levenshtein(ka, kb) <= {text.FUZZY_MAX_DIST}
     """,
     doc="fuzzy entity-matching self-join (text.fuzzy_match_pairs; "
     "ED-Join/PassJoin-family q-gram blocking): all document pairs "
     f"whose lowercased {_FUZZY_HEAD}-char text heads are within "
-    f"Levenshtein distance {_FUZZY_D}. Block on shared distinct "
-    f"{_FUZZY_Q}-grams (equi-join, never all-pairs) with a df-cut at "
-    f"{_FUZZY_DF} bounding hot-gram fan-out, prune by the POSITIONAL "
+    f"Levenshtein distance {text.FUZZY_MAX_DIST}. Block on shared distinct "
+    f"{text.FUZZY_Q}-grams (equi-join, never all-pairs) with a df-cut at "
+    f"{text.FUZZY_MAX_GRAM_DF} bounding hot-gram fan-out, prune by the POSITIONAL "
     "pigeonhole count (q-gram bag intersection sum(min(cnt_a, cnt_b)) "
     "— distinct-gram counting would wrongly prune repeated-character "
     "keys) and the length band, verify survivors with "
@@ -4532,12 +4475,7 @@ def fuzzy_match_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.lower(F.substring("text", 1, _FUZZY_HEAD)).alias("head"),
     )
-    return text.fuzzy_match_pairs(
-        keys,
-        max_dist=_FUZZY_D,
-        q=_FUZZY_Q,
-        max_gram_df=_FUZZY_DF,
-    )
+    return text.fuzzy_match_pairs(keys)
 
 
 # ---------------------------------------------------------------------------
@@ -4584,19 +4522,16 @@ def kmv_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TEMP_TARGET, _TEMP_TAU = 200, 0.5
-
-
 @register(
     "temperature_mixture_sample",
     f"""
     SELECT doc_id, source FROM (
-      {sampling.temperature_mixture_sql(_TEMP_TARGET, _TEMP_TAU)}
+      {sampling.temperature_mixture_sql()}
     )
     """,
     doc="temperature-scaled domain mixture sampling "
-    f"(sampling.temperature_mixture_sample, tau={_TEMP_TAU}, target "
-    f"{_TEMP_TARGET}): domain mass n^tau / sum(n^tau) — the "
+    f"(sampling.temperature_mixture_sample, tau={sampling.TEMP_TAU}, "
+    f"target {sampling.TEMP_TARGET}): domain mass n^tau / sum(n^tau) — the "
     "multilingual-LM rule that up-samples tail domains; accept rates "
     "are hash-thresholded integers (rounded at 9 dp before "
     "quantization so libm pow ulp noise cannot flip a row). One tiny "
@@ -4604,9 +4539,7 @@ _TEMP_TARGET, _TEMP_TAU = 200, 0.5
 )
 def temperature_mixture_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.temperature_mixture_sample(
-        t(spark, sf_dir, "documents"),
-        target_total=_TEMP_TARGET,
-        tau=_TEMP_TAU,
+        t(spark, sf_dir, "documents")
     ).select("doc_id", "source")
 
 
@@ -4899,13 +4832,7 @@ _RERANK_CAND, _RERANK_K = 50, 10
 def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import pq
 
-    emb = t(spark, sf_dir, "embeddings")
-    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
-    q_row = _memo(
-        ("qrow", sf_dir, 0),
-        lambda: emb.filter(F.col("vec_id") == 0).first(),
-    )
-    qv = [float(x) for x in q_row["embedding"]]
+    emb, books, _, qv = _pq_inputs(spark, sf_dir)
     cand = pq.pq_topk(emb, books, qv, k=_RERANK_CAND).select("neighbor_id")
     restricted = emb.join(
         cand.withColumnRenamed("neighbor_id", "vec_id"), "vec_id"
@@ -4917,14 +4844,7 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_wav_features",
-    """
-    WITH params AS (
-      SELECT doc_id,
-             (2 + doc_id % 6) AS p,
-             (100 + (doc_id % 10) * 50) AS scale,
-             (50 + doc_id % 20) AS reps
-      FROM documents
-    ),
+    f"""{_WAV_PARAMS_CTE},
     wins AS (
       SELECT doc_id, p, scale, unnest(range((p * reps) // 80)) AS w
       FROM params
@@ -4953,19 +4873,6 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def media_wav_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uc_historic_data_importer_spark.operators import multimodal
-
-    @F.pandas_udf(T.BinaryType())
-    def mk_wav(ids: pd.Series) -> pd.Series:
-        from uc_historic_data_importer_spark.functions import audiocodec as ac
-
-        def build(i: int) -> bytes:
-            p = 2 + i % 6
-            scale = 100 + (i % 10) * 50
-            reps = 50 + i % 20
-            samples = [((j % p) - p // 2) * scale for j in range(p * reps)]
-            return ac.encode_wav(samples)
-
-        return ids.map(build)
 
     media = t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"),
@@ -5001,24 +4908,7 @@ def _seam_fake_encode(t: str) -> list[int]:
 
 @register(
     "token_counts_seam",
-    f"""
-    WITH pieces AS (
-      SELECT source,
-             len(list_filter(
-                 regexp_extract_all(text,
-                   '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+|\\s+'),
-                 x -> NOT regexp_matches(x, '^\\s*$'))) AS n_bpe,
-             len({_TOKENS_SQL}) AS n_ws
-      FROM documents
-    )
-    SELECT source,
-           CAST(sum(n_bpe) AS BIGINT) AS total_bpe_tokens,
-           CAST(sum(n_ws) AS BIGINT) AS total_ws_tokens,
-           CAST(round(avg(CASE WHEN n_ws > 0
-                          THEN n_bpe::DOUBLE / n_ws END) * 10000)
-                AS BIGINT) AS avg_fertility_e4
-    FROM pieces GROUP BY source
-    """,
+    _BPE_STATS_SQL,
     doc="REAL-tokenizer injection seam under the value-hash oracle "
     "(text.encoded_ids_udf / bpe_token_stats(encode=...)): token stats "
     "computed through the Arrow-batched encode seam with a "
@@ -5038,7 +4928,7 @@ def token_counts_seam_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the plain bpe_token_stats query keeps the cheap unguarded scan
     # (its codegen pretokenizer measured under the exchange cost).
     return text_ops.bpe_token_stats(
-        dedup._ensure_parallel(t(spark, sf_dir, "documents")),
+        frames.ensure_parallel(t(spark, sf_dir, "documents")),
         encode=_seam_fake_encode,
     )
 

@@ -76,9 +76,6 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     side-effect-free (round-1 advice: no spark.conf.set inside catalog
     code).
 
-    - nanosAsLong: legacy testdata snapshots carried parquet
-      TIMESTAMP(NANOS), which Spark otherwise refuses; scans read them
-      as longs and convert via timestamp_micros (catalog.convert_ts).
     - inferTimestampNTZ off: current testdata carries naive
       TIMESTAMP(MICROS) (isAdjustedToUTC=false). Spark 3.4+ would map
       those to TIMESTAMP_NTZ, which unix_millis/window/to_utc_timestamp
@@ -88,7 +85,6 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     - UTC session timezone: reference timestamp parity
       (HBaseWriter.kt:598-600) and naive-UTC DuckDB oracle alignment.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark

@@ -43,10 +43,6 @@ def kv_sink(df: DataFrame, path: str) -> None:
     )
 
 
-def read_kv(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def compact_kv(
     spark,
     path: str,

@@ -119,19 +119,17 @@ _LATEST_OUT_SCHEMA = T.StructType(
 )
 
 
-def _latest_state_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Keep exactly one (version, body) per key; emit ONLY when it
-    advances.
+def _advance_latest(
+    pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> tuple[int, str | None, bool]:
+    """Fold a batch's rows for one key into its single (version, body)
+    state and store it; returns (version, body, advanced).
 
     No-state is represented by the absence of state, never a -1
     sentinel: versions are epoch millis, and pre-1970 timestamps are
     legitimately NEGATIVE (the 1980-epoch fallback guards absent dates,
     not early ones), so a -1 sentinel would silently swallow any key
-    whose records are all pre-1970. A batch that touches a key without
-    advancing it emits nothing — downstream update-mode consumers see
-    one emission per actual state change, not per touching batch.
+    whose records are all pre-1970.
 
     Version ties break on the body lexicographically (max record_json
     among max-version rows — the same struct-max rule as
@@ -158,6 +156,17 @@ def _latest_state_fn(
             cur_body = body
             advanced = True
     state.update((cur_version, cur_body))
+    return cur_version, cur_body, advanced
+
+
+def _latest_state_fn(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    """Keep exactly one (version, body) per key; emit ONLY when it
+    advances. A batch that touches a key without advancing it emits
+    nothing — downstream update-mode consumers see one emission per
+    actual state change, not per touching batch."""
+    cur_version, cur_body, advanced = _advance_latest(pdfs, state)
     if advanced:
         yield pd.DataFrame(
             {
@@ -244,25 +253,7 @@ def latest_per_key_stream_ttl(norm: DataFrame) -> DataFrame:
                 }
             )
             return
-        cur_version: int | None
-        if state.exists:
-            (cur_version, cur_body) = state.get
-        else:
-            cur_version, cur_body = None, None
-        advanced = False
-        for pdf in pdfs:
-            vmax = int(pdf["version"].max())
-            bodies = pdf.loc[pdf["version"] == vmax, "record_json"]
-            body = max((b for b in bodies if b is not None), default=None)
-            if (
-                cur_version is None
-                or vmax > cur_version
-                or (vmax == cur_version and (body or "") > (cur_body or ""))
-            ):
-                cur_version = vmax
-                cur_body = body
-                advanced = True
-        state.update((cur_version, cur_body))
+        cur_version, cur_body, advanced = _advance_latest(pdfs, state)
         # horizon = business-time TTL past the newest record; clamp above
         # the current watermark (Spark rejects a timeout already in the
         # past — a key whose records arrive later than its own horizon
