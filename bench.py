@@ -191,6 +191,7 @@ def main() -> None:
     # flagship end-to-end pipeline (normalize UDF included), as a function of
     # scale dir so the warm-up pass compiles/forks the same UDF stage
     from pyspark.sql import functions as F
+    from uc_historic_data_importer_spark.operators.frames import ensure_parallel
     from uc_historic_data_importer_spark.operators.keying import flatten_normalized
     from uc_historic_data_importer_spark.operators.latest import latest_per_key
     from uc_historic_data_importer_spark.operators.naming import with_table_names
@@ -216,7 +217,7 @@ def main() -> None:
             ).alias("raw_json"),
         )
         norm = with_table_names(
-            flatten_normalized(normalize_records(raw, min_partitions=int(CPUS)))
+            flatten_normalized(normalize_records(ensure_parallel(raw)))
         )
         return latest_per_key(
             norm.filter(F.col("valid")),

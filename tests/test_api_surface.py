@@ -277,8 +277,6 @@ ALLOWED_PARAMS = {
     + "multi-level data index",
     ("hfile.py", "HFileWriter.__init__", "bloom_block_size"): _SIZE
     + "multi-chunk bloom",
-    ("operators/bloom.py", "bloom_anti_join", "broadcast_max_existing"):
-    _SIZE + "two-branch Bloom route",
     ("streaming/stream_pipeline.py", "read_jsonl_stream",
      "max_files_per_trigger"): _SIZE + "multi-batch streams",
     ("hfile.py", "HFileWriter.__init__", "compression"): _SEAM

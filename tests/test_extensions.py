@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.operators import (
-    bloom,
     dedup,
     multimodal,
     similarity,
@@ -676,126 +675,6 @@ class TestSketches:
             .collect()
         }
         assert merged == whole
-
-
-class TestBloom:
-    def test_no_false_negatives(self, spark):
-        existing = spark.range(0, 500).select(F.col("id").alias("o_orderkey"))
-        words = bloom.bloom_build(existing)
-        probe = existing.withColumn(
-            "maybe", bloom.maybe_contains(F.col("o_orderkey"), words)
-        )
-        assert probe.filter(~F.col("maybe")).count() == 0
-
-    def test_false_positive_rate_sane(self, spark):
-        existing = spark.range(0, 2000).select(F.col("id").alias("o_orderkey"))
-        words = bloom.bloom_build(existing)
-        # disjoint probe domain: ids that were never inserted
-        probe = spark.range(1_000_000, 1_010_000).select(
-            bloom.maybe_contains(F.col("id"), words).alias("maybe")
-        )
-        fp = probe.filter(F.col("maybe")).count()
-        # n=2000, m=65536, k=3 -> theoretical fpr ~0.07%; allow 10x slack
-        assert fp / 10_000 < 0.007, fp
-
-    def test_anti_join_equals_plain(self, spark):
-        records = spark.range(0, 3000).select(
-            (F.col("id") % 700).alias("l_orderkey"), F.col("id").alias("payload")
-        )
-        existing = spark.range(0, 400).select(
-            (F.col("id") * 2).alias("o_orderkey")
-        )
-        got = sorted(
-            (r["l_orderkey"], r["payload"])
-            for r in bloom.bloom_anti_join(records, existing).collect()
-        )
-        want = sorted(
-            (r["l_orderkey"], r["payload"])
-            for r in records.join(
-                existing.select(F.col("o_orderkey").alias("l_orderkey")),
-                "l_orderkey",
-                "left_anti",
-            ).collect()
-        )
-        assert got == want and len(want) > 0
-
-    def test_bloom_anti_join_dispatch_branches_agree(self, spark):
-        """r15 opt round: with n_existing at-or-below
-        broadcast_max_existing the operator returns a broadcast
-        anti-join (no Bloom, one records scan); past it, the Bloom
-        two-branch route. Both must return identical rows — including
-        NULL record keys, which neither an equi-anti-join nor the
-        probe+anti union can drop."""
-        records = spark.createDataFrame(
-            [(0, 10), (2, 11), (5, 12), (None, 13), (7, 14)],
-            "l_orderkey long, payload long",
-        )
-        existing = spark.range(0, 4).select((F.col("id") * 2).alias("o_orderkey"))
-
-        def run(n_existing, cap):
-            return sorted(
-                (
-                    (r["l_orderkey"], r["payload"])
-                    for r in bloom.bloom_anti_join(
-                        records, existing,
-                        n_existing=n_existing, broadcast_max_existing=cap,
-                    ).collect()
-                ),
-                key=lambda t: (t[0] is None, t[0], t[1]),
-            )
-
-        bcast = run(n_existing=4, cap=100)
-        bloom_route = run(n_existing=4, cap=1)  # past cap -> Bloom route
-        default = run(n_existing=None, cap=100)  # no hint -> Bloom route
-        assert bcast == bloom_route == default
-        assert (None, 13) in bcast and (5, 12) in bcast and (7, 14) in bcast
-        # the dispatch really is a broadcast anti-join (no Bloom probe)
-        plan = bloom.bloom_anti_join(
-            records, existing, n_existing=4
-        )._jdf.queryExecution().toString()
-        assert "LeftAnti" in plan and "xxhash64" not in plan
-
-    def test_build_cache_detects_grown_snapshot(self, spark, tmp_path):
-        # same cache_key, but the snapshot under the path gained files:
-        # the fingerprint must re-key so new keys don't pass as
-        # definitely-new (ADVICE r1 staleness hazard)
-        p = str(tmp_path / "snap")
-        spark.range(0, 100).select(F.col("id").alias("o_orderkey")).write.parquet(p)
-        snap1 = spark.read.parquet(p)
-        w1 = bloom.bloom_build_cached(snap1, cache_key=p)
-        spark.range(100, 200).select(F.col("id").alias("o_orderkey")).write.mode(
-            "append"
-        ).parquet(p)
-        snap2 = spark.read.parquet(p)
-        w2 = bloom.bloom_build_cached(snap2, cache_key=p)
-        assert w1 != w2  # stale filter NOT served
-        probe = snap2.withColumn(
-            "maybe", bloom.maybe_contains(F.col("o_orderkey"), w2)
-        )
-        assert probe.filter(~F.col("maybe")).count() == 0
-
-    def test_build_cache_bounded(self, spark):
-        bloom._BUILD_CACHE.clear()
-        df = spark.range(0, 10).select(F.col("id").alias("o_orderkey"))
-        for i in range(bloom._BUILD_CACHE_MAX + 5):
-            bloom.bloom_build_cached(df, cache_key=f"snap-{i}")
-        assert len(bloom._BUILD_CACHE) <= bloom._BUILD_CACHE_MAX
-
-    def test_probe_plan_is_map_only(self, spark):
-        existing = spark.range(0, 100).select(F.col("id").alias("o_orderkey"))
-        words = bloom.bloom_build(existing)
-        probe = spark.range(0, 1000).filter(
-            ~bloom.maybe_contains(F.col("id"), words)
-        )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-
-    def test_word_merge(self, spark):
-        df = spark.range(0, 1000).select(F.col("id").alias("o_orderkey"))
-        whole = bloom.bloom_build(df)
-        lo = bloom.bloom_build(df.filter("o_orderkey < 500"))
-        hi = bloom.bloom_build(df.filter("o_orderkey >= 500"))
-        assert [a | b for a, b in zip(lo, hi)] == whole
 
 
 class TestSampling:
@@ -3516,24 +3395,8 @@ class TestSketchNullHardening:
 
 
 class TestReviewFixesRound5:
-    """Round-6 fifth review pass: bloom guards, salted determinism/NULL
-    semantics, zorder SQL cast."""
-
-    def test_bloom_word_count_mismatch_raises(self, spark):
-        from uc_historic_data_importer_spark.operators import bloom
-
-        ex = spark.createDataFrame([("k1",), ("k2",)], "o_orderkey string")
-        words = bloom.bloom_build(ex)
-        with pytest.raises(ValueError, match="build and probe must share m"):
-            bloom.maybe_contains(F.col("key"), words[:128])
-
-    def test_bloom_anti_join_rejects_mismatched_key_types(self, spark):
-        from uc_historic_data_importer_spark.operators import bloom
-
-        recs = spark.createDataFrame([(1,)], "l_orderkey bigint")
-        ex = spark.createDataFrame([("1",)], "o_orderkey string")
-        with pytest.raises(ValueError, match="key types must match"):
-            bloom.bloom_anti_join(recs, ex)
+    """Round-6 fifth review pass: salted determinism/NULL semantics,
+    zorder SQL cast."""
 
     def test_salted_distinct_count_ignores_nulls(self, spark):
         from uc_historic_data_importer_spark.operators import skew
@@ -3804,7 +3667,7 @@ class TestDispatchCountElision:
         def boom(self):
             raise AssertionError(
                 "df.count() fired during catalog query build — "
-                "dispatch must use _table_n_rows footer metadata"
+                "dispatch must use _embeddings_n_rows footer metadata"
             )
 
         with monkeypatch.context() as m:
@@ -3817,14 +3680,12 @@ class TestDispatchCountElision:
 
     def test_footer_metadata_matches_spark_count(self, spark):
         from uc_historic_data_importer_spark.plans.catalog_ext import (
-            _table_n_rows,
+            _embeddings_n_rows,
         )
 
         sf_dir = "/root/testdata/sf0.001"
-        for tbl in ("embeddings", "documents"):
-            n_meta = _table_n_rows(sf_dir, tbl)
-            n_spark = spark.read.parquet(f"{sf_dir}/{tbl}.parquet").count()
-            assert n_meta == n_spark, tbl
+        n_spark = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+        assert _embeddings_n_rows(sf_dir) == n_spark
 
 
 class TestSegmentCleanMembershipDispatch:
@@ -4105,7 +3966,7 @@ class TestRound11Guards:
         """the guards are behavior-neutral for clean inputs: spot-check
         one operator per module against its pre-guard semantics."""
         from uc_historic_data_importer_spark.operators import (
-            bloom, packing, sampling, sketches,
+            packing, sampling, sketches,
         )
 
         df = spark.createDataFrame(
@@ -4119,9 +3980,6 @@ class TestRound11Guards:
         assert sampling.stratified_sample(df).count() == 2 * sampling.STRATUM_N
         out = packing.shard_assign_by_tokens(df)
         assert out.count() == 50
-        words = bloom.bloom_build(df.select(F.col("doc_id").alias("o_orderkey")))
-        probe = bloom.maybe_contains(F.lit(1).cast("long"), words)
-        assert spark.range(1).select(probe.alias("hit")).first()["hit"]
 
 
 

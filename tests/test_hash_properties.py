@@ -21,7 +21,6 @@ from uc_historic_data_importer_spark.functions.hashes import (
     perm_constants,
     perm_hash_sql,
 )
-from uc_historic_data_importer_spark.operators import bloom
 from uc_historic_data_importer_spark.operators.sketches import HASH_BITS
 
 
@@ -76,22 +75,3 @@ def test_hll_bucket_rho_slicing_matches_python(h):
     w = h & mask
     assert bucket == h >> rem_bits
     assert rho == (rem_bits - w.bit_length() + 1 if w else rem_bits + 1)
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    words=st.lists(
-        st.integers(min_value=-(2**31), max_value=2**31 - 1),
-        min_size=1,
-        max_size=8,
-    ),
-    bit=st.integers(min_value=0, max_value=255),
-)
-def test_pack_bitmap_bit_addressing(words, bit):
-    """Global bit b of the packed bytes == bit (b % 32) of word b // 32."""
-    bit = bit % (len(words) * 32)
-    bm = bloom.pack_bitmap(words)
-    byte_val = bm[bit >> 3]
-    got = (byte_val >> (bit & 7)) & 1
-    want = ((words[bit // 32] & 0xFFFFFFFF) >> (bit % 32)) & 1
-    assert got == want

@@ -2,6 +2,8 @@
 survive future changes. Each assertion is a scale property — losing it
 would be invisible at test scale and disastrous at 100 TB."""
 
+import re
+
 import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401 - registers queries
 import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401 - registers queries
 from uc_historic_data_importer_spark.plans.catalog import QUERIES
@@ -50,6 +52,20 @@ def test_normalize_udf_evaluated_once(spark):
 def test_anti_join_stays_anti(spark):
     plan = plan_of(spark, "anti_join_existing")
     assert "LeftAnti" in plan
+
+
+def test_exists_filter_broadcasts_key_side(spark):
+    """bloom_anti_join_lineitem carries no broadcast hint: the finished-
+    order key side is broadcast because it fits the session's
+    autoBroadcastJoinThreshold. A conf change that loses the broadcast
+    would plan a sort-merge anti-join that shuffles every lineitem row
+    (at sf0.1 the broadcast plan ran in 0.40 s, a shuffled anti-join
+    plan in 1.16 s)."""
+    plan = plan_of(spark, "bloom_anti_join_lineitem")
+    assert len(re.findall(r"BroadcastHashJoin .*LeftAnti", plan)) == 1, plan
+    assert plan.count("SortMergeJoin") == 0, plan
+    assert plan.count("Scan parquet") == 2, plan
+    assert not re.search(r"ArrowEvalPython|BatchEvalPython|MapInPandas", plan), plan
 
 
 def test_sessionization_single_shuffle(spark):
@@ -380,7 +396,6 @@ def test_plan_report_covers_live_catalog():
     catalog, so the positive-evidence artifact can never silently miss
     a query again. Regenerate with `python tools/plan_report.py`."""
     import os
-    import re
 
     path = os.path.join(os.path.dirname(__file__), "..", "PLAN_REPORT.md")
     rows = set()

@@ -926,8 +926,8 @@ class _MarkerInData(Exception):
 # fast-table memo: baseline JPEG tables repeat across a corpus (most
 # encoders ship the Annex K tables), so the 2^16-entry expansion is
 # built once per distinct (bits, vals) pair, not once per image.
-# FIFO-bounded like bloom._BUILD_CACHE so adversarial inputs with
-# per-image tables cannot grow it without bound.
+# FIFO-bounded so adversarial inputs with per-image tables cannot grow
+# it without bound.
 _HUFF_FAST_CACHE: dict[tuple[bytes, bytes], list[int]] = {}
 _HUFF_FAST_CACHE_MAX = 64
 

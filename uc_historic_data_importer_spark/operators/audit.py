@@ -94,9 +94,8 @@ def column_profile(df: DataFrame, cols: list[str]) -> DataFrame:
 def referential_orphans(child: DataFrame, parent: DataFrame) -> DataFrame:
     """Child rows whose NON-NULL ``l_orderkey`` has no parent
     ``o_orderkey`` — foreign-key audit
-    as a left_anti join (same scale shape as the F4 exists filter;
-    bloom-prefilter via operators/bloom.py when the parent side is
-    huge). SQL FK semantics: a NULL foreign key SATISFIES the
+    as a left_anti join (same scale shape as the F4 exists filter).
+    SQL FK semantics: a NULL foreign key SATISFIES the
     constraint (there is nothing to reference), so NULL-keyed child
     rows are excluded up front — an unfiltered anti join would flag
     every one of them, failing the audit gate on legitimately nullable

@@ -34,7 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from uc_historic_data_importer_spark.operators.frames import qcol
+from uc_historic_data_importer_spark.operators.frames import check_reserved, qcol
 
 OP_PUT = "P"
 OP_DELETE = "D"
@@ -65,11 +65,7 @@ def latest_changes(
     # nested-field paths, both when packing the struct and when
     # unpacking it; and a key column literally named _w would
     # alias-clash with the internal aggregate
-    if "_w" in keys:
-        raise ValueError(
-            "key column '_w' collides with latest_changes' internal "
-            "aggregate name; rename it first"
-        )
+    check_reserved(keys, {"_w"}, "latest_changes")
     packed = F.max(
         F.struct(
             qcol("seq").alias("seq"),

@@ -31,6 +31,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from uc_historic_data_importer_spark.operators.frames import check_reserved
+
 
 @dataclass(frozen=True)
 class RunContext:
@@ -153,14 +155,9 @@ def encrypt_body(df: DataFrame, data_key_b64: str) -> DataFrame:
     literal: an F.lit'd key appears verbatim in explain() output, the
     Spark UI SQL tab, and persisted event logs — handing the run's
     decryption key to anyone with UI or history-server access."""
-    if "_enc" in df.columns:
-        # skew.py-style reserved-name guard (r12 review batch 4): the
-        # withColumn below would silently REPLACE a user column named
-        # _enc and then DROP it
-        raise ValueError(
-            "input column '_enc' collides with encrypt_body's internal "
-            "temp name; rename it first"
-        )
+    # the withColumn below would silently REPLACE a user column named
+    # _enc and then DROP it
+    check_reserved(df.columns, {"_enc"}, "encrypt_body")
 
     @F.arrow_udf("struct<db_object:string,iv:string>")
     def _udf(body: pa.Array) -> pa.Array:
@@ -224,14 +221,9 @@ def with_envelope(
     against a body ciphered under a DIFFERENT key would make the data
     undecryptable by its own metadata — an empty block (key not
     recorded) is recoverable, a wrong one is not."""
-    if "envelope" in df.columns:
-        # r14 review batch 10 (with_table_names class): the envelope is
-        # derived exactly once; an input already carrying one means a
-        # caller bug and withColumn would silently REPLACE it
-        raise ValueError(
-            "input column 'envelope' collides with with_envelope's "
-            "output column; rename it first"
-        )
+    # the envelope is derived exactly once; an input already carrying
+    # one means a caller bug and withColumn would silently REPLACE it
+    check_reserved(df.columns, {"envelope"}, "with_envelope")
 
     def pick(run_value: str, source_col: str) -> Column:
         if run_value:

@@ -31,7 +31,7 @@ def check_reserved(cols: Iterable[str], reserved: set[str], op: str) -> None:
     if taken:
         raise ValueError(
             f"input columns {sorted(taken)} collide with {op}'s internal "
-            "temp names; rename them first"
+            "temp names or output columns; rename them first"
         )
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uc_historic_data_importer_spark.functions.keys import row_key_col, row_key_hex
+from uc_historic_data_importer_spark.operators.frames import check_reserved
 
 
 def with_row_key(df: DataFrame) -> DataFrame:
@@ -22,16 +23,10 @@ def with_row_key(df: DataFrame) -> DataFrame:
     reference relies on for HBase region spread gives us skew-free
     shuffle partitioning on `key` at scale.
     """
-    taken = {"key", "key_hex"} & set(df.columns)
-    if taken:
-        # r14 review batch 10 (the with_table_names r12 class): the
-        # pipeline derives these exactly once; an input frame already
-        # carrying them means a caller bug, and withColumn would
-        # silently REPLACE the existing values
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with with_row_key's "
-            "output columns; rename them first"
-        )
+    # the pipeline derives these exactly once; an input frame already
+    # carrying them means a caller bug, and withColumn would silently
+    # REPLACE the existing values
+    check_reserved(df.columns, {"key", "key_hex"}, "with_row_key")
     c = F.col("canonical_id")
     return df.withColumn("key", row_key_col(c)).withColumn("key_hex", row_key_hex(c))
 

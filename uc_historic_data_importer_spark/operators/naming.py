@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from uc_historic_data_importer_spark.operators.frames import check_reserved
+
 # HBaseWriter.kt:601 — COALESCED_COLLECTION regex, verbatim alternation
 COALESCED_SUFFIX = (
     "-(archived|eight|eighteen|eleven|fifteen|five|four|fourteen|nine|"
@@ -63,15 +65,10 @@ def with_table_names(df: DataFrame) -> DataFrame:
     ROW uses the coalesced one. Archive detection tests the map
     directly on the shared base expression — not a re-derived copy
     compared for inequality."""
-    taken = {"table", "collection_out"} & set(df.columns)
-    if taken:
-        # r12 review batch 4: the pipeline derives these exactly once;
-        # an input frame already carrying them means a caller bug, and
-        # withColumn would silently REPLACE the existing values
-        raise ValueError(
-            f"input columns {sorted(taken)} collide with "
-            "with_table_names's output columns; rename them first"
-        )
+    # the pipeline derives these exactly once; an input frame already
+    # carrying them means a caller bug, and withColumn would silently
+    # REPLACE the existing values
+    check_reserved(df.columns, {"table", "collection_out"}, "with_table_names")
     base = _base_table(F.col("db"), F.col("collection"))
     tbl = base
     archived = F.lit(False)

@@ -434,7 +434,7 @@ def boilerplate_segments(df: DataFrame, top_n: int | None = None) -> DataFrame:
     ``top_n`` caps the list at the N most widespread segments
     (n_docs DESC, n_occurrences DESC, segment ASC — deterministic), via
     TakeOrdered, no global sort. Callers that COLLECT the list (to
-    inline it as a literal, Bloom-words style) must pass it: an
+    inline it as a literal) must pass it: an
     absolute distinct-document threshold is unbounded on a high-duplication
     corpus (a 90%-duplicate corpus makes nearly every segment
     'boilerplate'), and the sf1 soak showed exactly that blow-up.
@@ -487,8 +487,8 @@ def segment_clean_docs(df: DataFrame, boilerplate: list[str]) -> DataFrame:
     """Remove boilerplate SEGMENT_K-token segments from each document and
     reassemble the cleaned text — MAP-ONLY, so it runs unchanged under
     Structured Streaming (no stateful agg, no watermark: the removal
-    list is a build-time artifact like a Bloom filter or PQ codebook,
-    inlined as a literal array the same way the 8 KB Bloom words are).
+    list is a build-time artifact like a PQ codebook, inlined as a
+    literal array).
 
     For removal lists too large to inline (>~10^5 segments at 100 TB),
     the batch shape is explode -> broadcast anti-join -> re-agg; the
@@ -693,7 +693,7 @@ def bm25_topk(df: DataFrame, query_terms: list[str]) -> DataFrame:
     explode, no shuffle); the final top-k is TakeOrderedAndProject. Two
     scans total regardless of query length; at 100 TB the stats frame
     is the per-query bounded artifact (|terms|+2 numbers), the same
-    pattern as the Bloom words and PQ codebooks."""
+    pattern as the PQ codebooks."""
     terms = list(dict.fromkeys(query_terms))
     if not terms:
         raise ValueError("query_terms must be non-empty")

@@ -443,7 +443,6 @@ def normalize_batch(lines: list[str | None], data_key_b64: str | None = None) ->
 
 def normalize_records(
     df: DataFrame,
-    min_partitions: int | None = None,
     data_key_b64: str | None = None,
 ) -> DataFrame:
     """Apply the full T1-T7/T10/K1/K3 normalization to a lines DataFrame.
@@ -461,15 +460,9 @@ def normalize_records(
     that UDF is non-deterministic for a second reason: its IVs are
     random, so a re-evaluation would yield different ciphertext.
 
-    `min_partitions`: the UDF's parallelism equals the input partition
-    count; a compact upstream source (one small parquet file, one
-    decrypted dump) serializes the whole CPU-bound stage onto one core.
-    When set, inputs with fewer partitions are round-robin repartitioned
-    first — the shuffle is cheap relative to per-record Python. At real
-    scale the input splits already provide parallelism and this is a
-    no-op."""
-    if min_partitions is not None and df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
+    The UDF's parallelism equals the input partition count: batch callers
+    with a compact source pass ``frames.ensure_parallel(df)``. The call
+    stays with them because a streaming frame has no ``.rdd``."""
     schema = NORMALIZED_SCHEMA if data_key_b64 is None else KEYED_NORMALIZED_SCHEMA
 
     @F.arrow_udf(schema)

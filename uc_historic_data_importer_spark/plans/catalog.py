@@ -427,6 +427,7 @@ def rowkey_crc32_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the oracle reproduces every output column independently in SQL.",
 )
 def normalize_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from uc_historic_data_importer_spark.operators.frames import ensure_parallel
     from uc_historic_data_importer_spark.operators.keying import flatten_normalized
     from uc_historic_data_importer_spark.operators.transforms import (
         normalize_records,
@@ -489,15 +490,11 @@ def normalize_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.alias("raw_json"),
     )
     # UDF parallelism derived from the session's core count, not a
-    # constant (r14 opt round): min_partitions=8 capped the CPU-bound
-    # Arrow normalize stage at 8 tasks on a 32-core session (and
-    # over-split a 4-core one). Still a no-op at real scale where the
-    # input has many splits.
-    norm = flatten_normalized(
-        normalize_records(
-            lines, min_partitions=spark.sparkContext.defaultParallelism
-        )
-    )
+    # constant (r14 opt round): a fixed 8 capped the CPU-bound Arrow
+    # normalize stage at 8 tasks on a 32-core session (and over-split a
+    # 4-core one). Still a no-op at real scale where the input has many
+    # splits.
+    norm = flatten_normalized(normalize_records(ensure_parallel(lines)))
     return norm.filter(F.col("valid")).select(
         "event_id",
         "inner_type",

@@ -22,7 +22,6 @@ from uc_historic_data_importer_spark.functions.hashes import (
     perm_constants,
 )
 from uc_historic_data_importer_spark.operators import (
-    bloom,
     dedup,
     frames,
     sampling,
@@ -355,33 +354,20 @@ def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY l_returnflag
     """,
-    doc="exists-filter scale path (F4): Bloom-prefiltered anti-join. The "
-    "8 KB filter over finished-order keys is inlined in the plan, so "
-    "definitely-new lineitems pass MAP-SIDE; only the maybe sliver pays "
-    "the exact anti-join shuffle. The oracle is a plain SQL anti-join — "
-    "hash-equality proves the Bloom stage introduces no false negatives.",
+    doc="exists filter (F4) over TPC-H: lineitems whose order is not "
+    "finished, as a left-anti join against the distinct 'F' order keys. "
+    "The key side fits spark.sql.autoBroadcastJoinThreshold, so Spark "
+    "plans a broadcast anti-join: one lineitem scan, no shuffle of it "
+    "(pinned by tests/test_plans.py).",
 )
 def bloom_anti_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    existing = (
+    finished = (
         t(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey")
+        .select(F.col("o_orderkey").alias("l_orderkey"))
+        .distinct()
     )
-    new_rows = bloom.bloom_anti_join(
-        li,
-        existing,
-        # one filter per existing-keys snapshot, reused across runs —
-        # production cost model (the build scan amortizes over imports)
-        cache_key=f"{sf_dir}/orders:o_orderstatus=F",
-        # size dispatch (guide §3.1): below broadcast scale the exact
-        # broadcast anti-join wins (one records scan, zero shuffle);
-        # the Bloom two-branch route engages past broadcast_max_existing.
-        # The unfiltered orders count bounds the 'F' keys from above, so
-        # the choice errs toward the Bloom path and never broadcasts
-        # more than declared.
-        n_existing=_table_n_rows(sf_dir, "orders"),
-    )
+    new_rows = t(spark, sf_dir, "lineitem").join(finished, "l_orderkey", "left_anti")
     return new_rows.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -1243,25 +1229,24 @@ def _ivf_cells_for(n: int) -> int:
     return max(4, -(-n // _IVF_OCC))
 
 
-_N_ROWS_CACHE: dict[tuple[str, str], int] = {}
+_N_ROWS_CACHE: dict[str, int] = {}
 
 
-def _table_n_rows(sf_dir: str, name: str) -> int:
-    """Row count of a source parquet table from the FOOTER metadata
+def _embeddings_n_rows(sf_dir: str) -> int:
+    """Row count of the embeddings table from the parquet FOOTER metadata
     (pyarrow, driver-side, zero Spark jobs) — the r6-verdict fix for
     dispatch counts: semdedup/cosine_neardup_pairs' ``n_rows``
     short-circuit and _ivf_cells_for's k selection need only the
     corpus size, and a ``df.count()`` there executes the uncached
     upstream plan once per call just to pick a branch. Memoized per
-    (sf_dir, table); at 100 TB this is exactly the statistic the
-    table catalog (metastore/Delta log) hands out for free."""
-    key = (sf_dir, name)
-    if key not in _N_ROWS_CACHE:
+    sf_dir; at 100 TB this is exactly the statistic the table catalog
+    (metastore/Delta log) hands out for free."""
+    if sf_dir not in _N_ROWS_CACHE:
         import os
 
         import pyarrow.parquet as pq
 
-        path = os.path.join(sf_dir, f"{name}.parquet")
+        path = os.path.join(sf_dir, "embeddings.parquet")
         if os.path.isdir(path):
             n = sum(
                 pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
@@ -1271,8 +1256,8 @@ def _table_n_rows(sf_dir: str, name: str) -> int:
             )
         else:
             n = pq.ParquetFile(path).metadata.num_rows
-        _N_ROWS_CACHE[key] = n
-    return _N_ROWS_CACHE[key]
+        _N_ROWS_CACHE[sf_dir] = n
+    return _N_ROWS_CACHE[sf_dir]
 
 
 def _ivf_fit(spark: SparkSession, sf_dir: str):
@@ -1280,7 +1265,7 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
     ann_ivf_topk — at 100 TB the fit is a once-per-corpus build
     artifact, so the pair must not refit per query."""
     emb = t(spark, sf_dir, "embeddings")
-    n = _table_n_rows(sf_dir, "embeddings")
+    n = _embeddings_n_rows(sf_dir)
     k_cells = _ivf_cells_for(n)
     cents = _memo(
         ("kmeans_fit", sf_dir, k_cells, 2),
@@ -1401,7 +1386,7 @@ _IVF2_K2 = 8
 )
 def ann_ivf2_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    n = _table_n_rows(sf_dir, "embeddings")
+    n = _embeddings_n_rows(sf_dir)
     coarse = _memo(
         ("kmeans_fit_k1", sf_dir),
         lambda: similarity.kmeans_fit(emb, k=1, iters=0),
@@ -1548,7 +1533,7 @@ def _ivf2_topk_oracle() -> str:
 )
 def ann_ivf2_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    n = _table_n_rows(sf_dir, "embeddings")
+    n = _embeddings_n_rows(sf_dir)
     k1 = _ivf2_k1_for(n)
     coarse = _memo(
         ("kmeans_fit_ivf2_topk", sf_dir, k1),
@@ -1622,7 +1607,7 @@ def ann_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codegen budget and its plan shape is lint-pinned
     return similarity.ivf_topk(
         assigned, cell_col="cell",
-        n_rows=_table_n_rows(sf_dir, "embeddings"),
+        n_rows=_embeddings_n_rows(sf_dir),
     )
 
 
@@ -1661,7 +1646,7 @@ def embedding_cosine_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pair dots) collapses to one BLAS call per cell
     return similarity.cosine_neardup_pairs(
         t(spark, sf_dir, "embeddings"),
-        n_rows=_table_n_rows(sf_dir, "embeddings"),
+        n_rows=_embeddings_n_rows(sf_dir),
     )
 
 
@@ -3402,8 +3387,8 @@ def dedup_apply_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="boilerplate removal APPLIED: clean every document against the "
     "mined removal list and report per-doc segment/removal counts and "
     "cleaned length. The list is a bounded build artifact collected once "
-    "per (sf_dir, params) — same pattern as the in-plan Bloom words — "
-    "and BOUNDED BY CONSTRUCTION via the top-5000 cap (n_docs DESC "
+    "per (sf_dir, params) and inlined as a literal (the PQ-codebook "
+    "pattern); it is BOUNDED BY CONSTRUCTION via the top-5000 cap (n_docs DESC "
     "deterministic order): an uncapped min_docs>=3 list is unbounded on "
     "a high-duplication corpus (the sf1 soak's 98x blow-up). The "
     "cleaning pass itself is map-only and runs unchanged under "
@@ -4412,7 +4397,7 @@ def semdedup_embeddings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, cents = _ivf_fit(spark, sf_dir)
     return similarity.semdedup(
         emb, cents,
-        n_rows=_table_n_rows(sf_dir, "embeddings"),
+        n_rows=_embeddings_n_rows(sf_dir),
     )
 
 
@@ -5187,11 +5172,7 @@ def entry_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-derived UDF parallelism, not a constant — see
     # normalize_pipeline_q (r14 opt round)
     norm = with_table_names(
-        flatten_normalized(
-            normalize_records(
-                raw, min_partitions=spark.sparkContext.defaultParallelism
-            )
-        )
+        flatten_normalized(normalize_records(frames.ensure_parallel(raw)))
     )
     latest = latest_per_key_window(norm.filter(F.col("valid")))
     return latest.groupBy("collection").agg(

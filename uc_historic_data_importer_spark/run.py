@@ -36,6 +36,8 @@ from datetime import datetime, timezone
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from uc_historic_data_importer_spark.sources.listing import MAX_OBJECT_SIZE
+
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--input-dir")
     p.add_argument("--prefix", action="append", default=None,
@@ -52,7 +54,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--existing-kv", default=None,
                    help="path of the KV snapshot; given, records already "
                         "in it are skipped (the F4 exists anti-join)")
-    p.add_argument("--max-object-size", type=int, default=2_200_000_000,
+    p.add_argument("--max-object-size", type=int, default=MAX_OBJECT_SIZE,
                    help="0 disables size filtering")
     p.add_argument("--parallelism", type=int, default=None)
     p.add_argument("--dks-url", default=None,

@@ -280,6 +280,11 @@ def drop_zero_byte_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.filter(~((F.col("data_size") == 0) & (F.col("meta_size") == 0)))
 
 
-def filter_oversized(pairs: DataFrame, max_size: int = 2_200_000_000) -> DataFrame:
+# S4 default cap in bytes (ObjectSizeFilter.kt:12-21); run.py's
+# --max-object-size defaults to it
+MAX_OBJECT_SIZE = 2_200_000_000
+
+
+def filter_oversized(pairs: DataFrame, max_size: int = MAX_OBJECT_SIZE) -> DataFrame:
     """S4 (ObjectSizeFilter.kt:12-21): optional, config-driven."""
     return pairs.filter(F.col("data_size") <= F.lit(max_size))
