@@ -489,11 +489,10 @@ def normalize_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").cast("int").alias("line_no"),
         raw.alias("raw_json"),
     )
-    # UDF parallelism derived from the session's core count, not a
-    # constant (r14 opt round): a fixed 8 capped the CPU-bound Arrow
-    # normalize stage at 8 tasks on a 32-core session (and over-split a
-    # 4-core one). Still a no-op at real scale where the input has many
-    # splits.
+    # UDF parallelism follows the session's core count: a fixed task
+    # count caps the CPU-bound Arrow normalize stage on a large session
+    # and over-splits a small one. A no-op at real scale, where the
+    # input has many splits.
     norm = flatten_normalized(normalize_records(ensure_parallel(lines)))
     return norm.filter(F.col("valid")).select(
         "event_id",

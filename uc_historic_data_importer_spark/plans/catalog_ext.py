@@ -3388,9 +3388,9 @@ def dedup_apply_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mined removal list and report per-doc segment/removal counts and "
     "cleaned length. The list is a bounded build artifact collected once "
     "per (sf_dir, params) and inlined as a literal (the PQ-codebook "
-    "pattern); it is BOUNDED BY CONSTRUCTION via the top-5000 cap (n_docs DESC "
-    "deterministic order): an uncapped min_docs>=3 list is unbounded on "
-    "a high-duplication corpus (the sf1 soak's 98x blow-up). The "
+    "pattern); it is BOUNDED BY CONSTRUCTION via the top-5000 cap "
+    "(n_docs DESC deterministic order): an uncapped min_docs>=3 list is "
+    "unbounded on a high-duplication corpus (the sf1 soak's 98x blow-up). The "
     "cleaning pass itself is map-only and runs unchanged under "
     "Structured Streaming.",
 )
