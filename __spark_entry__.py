@@ -60,7 +60,8 @@ _MAX_STALENESS_ROUNDS = 3
 #     multimodal.audio_window_features dedup.shingle_coverage_stats \
 #     skew.salted_agg skew.salted_join \
 #     stream_pipeline.read_jsonl_stream stream_pipeline.session_counts_stream \
-#     stream_pipeline.windowed_counts keying.with_row_key
+#     stream_pipeline.windowed_counts keying.with_row_key \
+#     catalog_ext.bloom_anti_join_q
 # minus normalize_pipeline, which the staleness rule already sorts first.
 _MODIFIED_SINCE_RECORD = (
     "entry_counts",
@@ -76,6 +77,7 @@ _MODIFIED_SINCE_RECORD = (
     "streaming_latest_per_key",
     "streaming_latest_per_key_ttl",
     "streaming_windowed_counts",
+    "bloom_anti_join_lineitem",
 )
 
 

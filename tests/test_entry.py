@@ -79,3 +79,22 @@ def test_query_matches_oracle_at_sf0001(spark, duck, name):
         return sorted(out)
 
     assert norm([tuple(r) for r in srows], sdf.columns) == norm(orows, ocols), name
+
+
+def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
+    """catalog.t() memoizes each table's inferred schema. A table
+    rewritten under the same sf_dir with another column must be read
+    with the new schema, not through the memoized old one (which would
+    drop the new column from every scan)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from uc_historic_data_importer_spark.plans.catalog import t
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"event_id": [1, 2]}), path)
+    assert t(spark, str(tmp_path), "events").columns == ["event_id"]
+    pq.write_table(pa.table({"event_id": [1, 2], "user_id": [7, 8]}), path)
+    df = t(spark, str(tmp_path), "events")
+    assert df.columns == ["event_id", "user_id"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 7), (2, 8)]

@@ -90,3 +90,46 @@ def test_arrow_seam_queries_match_oracles_past_dispatch_threshold(spark):
         quiet=True,
     )
     assert not failures, f"arrow-seam oracle regressions: {failures}"
+
+
+def test_bloom_anti_join_oracle_agrees_with_spark_on_null_keys(spark, tmp_path):
+    """bloom_anti_join_lineitem's Spark side is a left_anti join (NOT
+    EXISTS semantics): a lineitem with a NULL l_orderkey matches no
+    order and is kept, and a finished order with a NULL o_orderkey
+    matches no lineitem. The testdata has no NULL order keys, so this
+    table set adds one of each; the oracle must hash equal to Spark.
+    (A NOT IN oracle drops the NULL-keyed lineitem, and with a NULL in
+    its subquery returns no row at all.)"""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from check_oracle import value_hash
+
+    name = "bloom_anti_join_lineitem"
+    oracle = entry_mod.oracle_sql()[name]
+    con = duckdb.connect()
+    for tbl in ("lineitem", "orders"):
+        con.execute(
+            f"CREATE VIEW {tbl} AS SELECT * FROM read_parquet('{SF_DIR}/{tbl}.parquet')"
+        )
+    n_base = sum(r[1] for r in con.execute(oracle).fetchall())
+    for tbl, null_key in (
+        ("lineitem", "NULL AS l_orderkey"),
+        ("orders", "NULL AS o_orderkey, 'F' AS o_orderstatus"),
+    ):
+        out = f"{tmp_path}/{tbl}.parquet"
+        con.execute(
+            f"COPY (SELECT * FROM {tbl} UNION ALL "
+            f"SELECT * REPLACE ({null_key}) FROM (SELECT * FROM {tbl} LIMIT 1)) "
+            f"TO '{out}' (FORMAT parquet)"
+        )
+        con.execute(f"CREATE OR REPLACE VIEW {tbl} AS SELECT * FROM read_parquet('{out}')")
+
+    cur = con.execute(oracle)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    sdf = entry_mod.queries()[name](spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    assert value_hash(srows, sdf.columns) == value_hash(orows, ocols)
+    # the NULL-keyed lineitem is the one row the table set adds to the result
+    assert sum(r[1] for r in orows) == n_base + 1

@@ -4,6 +4,8 @@ would be invisible at test scale and disastrous at 100 TB."""
 
 import re
 
+import pytest
+
 import uc_historic_data_importer_spark.plans.catalog_classic  # noqa: F401 - registers queries
 import uc_historic_data_importer_spark.plans.catalog_ext  # noqa: F401 - registers queries
 from uc_historic_data_importer_spark.plans.catalog import QUERIES
@@ -14,6 +16,13 @@ SF_DIR = "/root/testdata/sf0.001"
 def plan_of(spark, name: str) -> str:
     df = QUERIES[name].fn(spark, SF_DIR)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def catalog_plans(spark) -> dict[str, str]:
+    """Executed plan of every registered query, built once for the
+    catalog-wide lint and the PLAN_REPORT.md check."""
+    return {name: plan_of(spark, name) for name in QUERIES}
 
 
 def test_pricing_summary_pushdown_and_pruning(spark):
@@ -113,14 +122,13 @@ def test_tfidf_single_corpus_scan(spark):
     assert plan.count("ReadSchema: struct<doc_id:bigint,text:string>") == 1
 
 
-def test_no_query_plans_scale_antipatterns(spark):
+def test_no_query_plans_scale_antipatterns(catalog_plans):
     """Catalog-wide plan lint: NO query may plan a cartesian product, a
     row-at-a-time Python UDF, or a nested-loop join. These are the three
     silent 100 TB killers — invisible at test scale, each turns a
     linear job quadratic or single-threaded."""
     offenders = {}
-    for name, spec in QUERIES.items():
-        plan = plan_of(spark, name)
+    for name, plan in catalog_plans.items():
         bad = [
             marker
             for marker in (
@@ -389,23 +397,72 @@ def test_entry_counts_single_python_stage(spark):
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 1
 
 
-def test_plan_report_covers_live_catalog():
-    """Freshness assert (r13 verdict item: the r13 report lagged the
-    catalog by exactly the two queries registered after its last
-    regeneration). PLAN_REPORT.md's row set must equal the live
-    catalog, so the positive-evidence artifact can never silently miss
-    a query again. Regenerate with `python tools/plan_report.py`."""
+def test_plan_report_covers_live_catalog(catalog_plans):
+    """PLAN_REPORT.md must hold exactly the live catalog's queries, each
+    with the figures its live plan has now: a stale row (a query whose
+    scans or joins changed since the last regeneration) fails here, not
+    only a missing one. The tool and this test compute rows with the
+    same function. Regenerate with `python tools/plan_report.py`."""
     import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from plan_report import plan_row
 
     path = os.path.join(os.path.dirname(__file__), "..", "PLAN_REPORT.md")
-    rows = set()
+    committed = {}
     with open(path) as f:
         for line in f:
-            m = re.match(r"\| (\w+) \|", line)
-            if m and m.group(1) != "query":
-                rows.add(m.group(1))
+            if re.match(r"\| \w+ \|", line) and not line.startswith("| query |"):
+                cells = tuple(c.strip() for c in line.strip().strip("|").split("|"))
+                committed[cells[0]] = cells
     live = set(QUERIES)
-    assert rows == live, (
-        f"PLAN_REPORT.md is stale: missing {sorted(live - rows)}, "
-        f"extra {sorted(rows - live)} — rerun python tools/plan_report.py"
+    assert set(committed) == live, (
+        f"PLAN_REPORT.md is stale: missing {sorted(live - set(committed))}, "
+        f"extra {sorted(set(committed) - live)} — rerun python tools/plan_report.py"
     )
+    stale = {
+        name: (committed[name], row)
+        for name, plan in sorted(catalog_plans.items())
+        if (row := plan_row(name, plan)) != committed[name]
+    }
+    assert stale == {}, (
+        f"PLAN_REPORT.md rows differ from the live plans (committed, live): {stale}"
+        " — rerun python tools/plan_report.py"
+    )
+
+
+# The ten queries of perfbench's catalog_mix workload, in its order.
+CATALOG_MIX = (
+    "latest_per_key",
+    "anti_join_existing",
+    "revenue_by_nation",
+    "normalize_pipeline",
+    "dedup_minhash_lsh",
+    "dedup_apply",
+    "semantic_decontamination_lsh",
+    "ann_ivf2_build",
+    "text_language_id",
+    "bloom_anti_join_lineitem",
+)
+
+
+def test_warm_catalog_mix_compiles_no_class(spark):
+    """Spark compiles each whole-stage and projection class with Janino
+    and keeps it in an LRU cache. One pass over the mix needs about 224
+    classes, and the queries repeat in the same order, so a cache smaller
+    than that (Spark's default is 100) evicts every class before its next
+    use and a warm pass recompiles all of them. session.get_spark sizes
+    the cache to the whole catalog: after two passes (the first also fills
+    the ANN fit memo) a third compiles nothing."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_mix():
+        for name in CATALOG_MIX:
+            QUERIES[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    run_mix()
+    run_mix()
+    before = metric.getCount()
+    run_mix()
+    assert metric.getCount() - before == 0

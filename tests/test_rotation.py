@@ -25,7 +25,7 @@ REPO = os.path.join(os.path.dirname(__file__), "..")
 # sha256 of "\n".join(queries() names) for round 14. Re-pin it only when
 # the round advances or the modified tuple changes.
 ORDER_SHA256 = (
-    "7a5b745bdc16001254ff08e315b8ca22a7a14f1b70617e968487482269c23ad9"
+    "9c0415539cd0f64080f6b1fe3c94d149fe59bf0b7f6ecdece1e91e3306b6f630"
 )
 
 

@@ -17,6 +17,30 @@ import sys
 sys.path.insert(0, ".")
 
 
+def plan_row(name: str, plan: str) -> tuple[str, ...]:
+    """The report row of catalog query ``name`` from its executed plan
+    string: (query, exchanges, parquet scans, joins, Python stages).
+    tests/test_plans.py checks every committed row with this function."""
+    if name == "streaming_latest_per_key":
+        return (name, "— (streaming; see test_streaming)", "", "", "")
+    n_exch = len(re.findall(r"Exchange hashpartitioning", plan))
+    n_range = len(re.findall(r"Exchange rangepartitioning", plan))
+    n_single = len(re.findall(r"Exchange SinglePartition", plan))
+    exch = f"{n_exch}h"
+    if n_range:
+        exch += f"+{n_range}r"
+    if n_single:
+        exch += f"+{n_single}s"
+    scans = len(re.findall(r"Scan parquet", plan))
+    joins = "+".join(
+        f"{len(re.findall(j, plan))}{j[0]}"
+        for j in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin")
+        if re.findall(j, plan)
+    ) or "0"
+    py = len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan))
+    return (name, exch, str(scans), joins, str(py))
+
+
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "PLAN_REPORT.md"
 
@@ -32,9 +56,6 @@ def main() -> None:
 
     rows = []
     for name in sorted(QUERIES):
-        if name == "streaming_latest_per_key":
-            rows.append((name, "— (streaming; see test_streaming)", "", "", ""))
-            continue
         try:
             plan = (
                 QUERIES[name]
@@ -46,22 +67,7 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover — report, don't die
             rows.append((name, f"ERROR {type(exc).__name__}", "", "", ""))
             continue
-        n_exch = len(re.findall(r"Exchange hashpartitioning", plan))
-        n_range = len(re.findall(r"Exchange rangepartitioning", plan))
-        n_single = len(re.findall(r"Exchange SinglePartition", plan))
-        exch = f"{n_exch}h"
-        if n_range:
-            exch += f"+{n_range}r"
-        if n_single:
-            exch += f"+{n_single}s"
-        scans = len(re.findall(r"Scan parquet", plan))
-        joins = "+".join(
-            f"{len(re.findall(j, plan))}{j[0]}"
-            for j in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin")
-            if re.findall(j, plan)
-        ) or "0"
-        py = len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan))
-        rows.append((name, exch, str(scans), joins, str(py)))
+        rows.append(plan_row(name, plan))
 
     with open(out_path, "w") as f:
         f.write(

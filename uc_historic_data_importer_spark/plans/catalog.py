@@ -20,6 +20,7 @@ type discriminator, props ~ dynamic JSON payload.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable
 
@@ -49,10 +50,11 @@ class QuerySpec:
 # metastore) whose stored schema makes per-query inference a lookup;
 # this memo is that lookup. It caches ONLY the StructType (immutable
 # metadata, no data, no plan), so every call still constructs a fresh
-# scan over the parquet files. Keyed on (sf_dir, name): the schema is a
-# physical fact of the files (current snapshots carry TIMESTAMP(MICROS),
-# inferred identically under any session conf), and test data is
-# immutable per scale dir.
+# scan over the parquet files. The schema is a physical fact of the files
+# (current snapshots carry TIMESTAMP(MICROS), inferred identically under
+# any session conf), so the key is the table path plus its st_mtime_ns
+# and st_size: a table rewritten in place under the same sf_dir is
+# inferred again instead of being read through its old schema.
 _SCHEMA_MEMO: dict = {}
 
 
@@ -64,10 +66,12 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     get_spark are prepared already, and the driver-contract wrapper in
     __spark_entry__ prepares external sessions once."""
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_MEMO.get((sf_dir, name))
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_MEMO[(sf_dir, name)] = df.schema
+        _SCHEMA_MEMO[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 

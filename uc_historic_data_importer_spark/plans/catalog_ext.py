@@ -348,9 +348,10 @@ def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag,
            count(*) AS n_rows,
            round(sum(l_quantity), 2) AS sum_qty
-    FROM lineitem
-    WHERE l_orderkey NOT IN (
-      SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F'
+    FROM lineitem l
+    WHERE NOT EXISTS (
+      SELECT 1 FROM orders o
+      WHERE o.o_orderstatus = 'F' AND o.o_orderkey = l.l_orderkey
     )
     GROUP BY l_returnflag
     """,
