@@ -45,13 +45,17 @@ The fourth audit checks copies, over the package and ``tools/``
 (``perfbench/`` is frozen with the benchmark, ``tests/`` is left out).
 It fails when two function definitions, at any nesting depth and under
 any names, have the same arguments and body (``ast.dump``, docstring
-dropped), or when two string or f-string literals of 5 or more source
-lines (docstrings excepted) are AST-identical. It has no allowlist: a
-copy becomes one definition both sites call or read."""
+dropped), when two string or f-string literals of 5 or more source
+lines (docstrings excepted) are AST-identical, or when two runs of 3 or
+more consecutive statements (in any block, 120 or more AST nodes) are
+identical after renaming the enclosing function's locals and every
+lambda or nested-function argument by order of first use. It has no
+allowlist: a copy becomes one definition both sites call or read."""
 
 from __future__ import annotations
 
 import ast
+import copy
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -257,18 +261,8 @@ ALLOWED_PARAMS = {
     "stdlib decoder",
     ("operators/packing.py", "pack_concat_chunks", "encode"): _FAKE
     + "tokenizer (a real BPE encoder in production)",
-    ("operators/similarity.py", "_cell_column", "exact_max_rows"): _SIZE
-    + "Arrow matmul cell assignment",
-    ("operators/similarity.py", "cosine_neardup_pairs", "exact_max_rows"):
-    _SIZE + "per-cell numpy pair scan",
-    ("operators/similarity.py", "ivf_topk", "exact_max_rows"): _SIZE
-    + "per-cell numpy top-k",
-    ("operators/similarity.py", "kmeans_fit", "exact_max_rows"): _SIZE
-    + "Arrow matmul assignment",
     ("operators/similarity.py", "kmeans_fit", "max_driver_floats"): _SIZE
     + "distributed centroid path",
-    ("operators/similarity.py", "semdedup", "exact_max_rows"): _SIZE
-    + "per-cell numpy pair scan",
     ("hfile.py", "HFileWriter.__init__", "block_size"): _SIZE
     + "multi-block files",
     ("hfile.py", "HFileWriter.__init__", "max_chunk_size"): _SIZE
@@ -589,10 +583,67 @@ def test_allowed_params_stay_unset():
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
+# a copied run of statements: at least this many, of at least this many
+# AST nodes (ast.walk's count, expression contexts included)
+_RUN_STMTS, _RUN_NODES = 3, 120
+
+
+def _stmt_lists(tree: ast.Module):
+    """(statements, locals, owner) for every statement list in the tree
+    (bodies, else and finally blocks, handlers), leading docstrings
+    dropped; ``locals`` are the names the enclosing function ``owner``
+    binds (none at module or class level)."""
+
+    def visit(node, local, owner):
+        if isinstance(node, _FUNCS):
+            local, owner = _local_names(node), node.name
+        for field in ("body", "orelse", "finalbody"):
+            stmts = getattr(node, field, None)
+            if isinstance(stmts, list) and stmts and isinstance(stmts[0], ast.stmt):
+                if (
+                    isinstance(node, (ast.Module, ast.ClassDef, *_FUNCS))
+                    and ast.get_docstring(node, clean=False) is not None
+                ):
+                    stmts = stmts[1:]
+                yield stmts, local, owner
+        for child in ast.iter_child_nodes(node):
+            yield from visit(child, local, owner)
+
+    yield from visit(tree, frozenset(), "<module>")
+
+
+def _renamed_dump(stmts: list, local) -> str:
+    """ast.dump of ``stmts`` with every local name (and every lambda or
+    nested-function argument) renamed by order of first use."""
+    names: dict[str, str] = {}
+
+    def rename(name):
+        return names.setdefault(name, f"_{len(names)}")
+
+    out = []
+    for stmt in stmts:
+        stmt = copy.deepcopy(stmt)
+        for n in ast.walk(stmt):
+            if isinstance(n, ast.Name) and n.id in local:
+                n.id = rename(n.id)
+            elif isinstance(n, ast.arg):
+                n.arg = rename(n.arg)
+            elif isinstance(n, (*_FUNCS, ast.ClassDef)) and n.name in local:
+                n.name = rename(n.name)
+        out.append(ast.dump(stmt))
+    return "\n".join(out)
+
+
+def _size(stmt: ast.stmt) -> int:
+    return sum(1 for _ in ast.walk(stmt))
+
+
 def duplicate_definitions() -> list[list[str]]:
     """``path:line name`` groups of function definitions with the same
-    arguments and body, and of multi-line literals with the same AST."""
+    arguments and body, of multi-line literals with the same AST, and of
+    statement runs that are the same after renaming locals."""
     seen: dict[tuple, list[str]] = {}
+    runs: dict[str, list[tuple]] = {}
     for path in [*_py_files(PKG), *_py_files(os.path.join(REPO, "tools"))]:
         rel = os.path.relpath(path, REPO)
         tree = _parse(path)
@@ -620,7 +671,28 @@ def duplicate_definitions() -> list[list[str]]:
             ) and id(n) not in skip and n.end_lineno - n.lineno >= 4:
                 key = ("literal", ast.dump(n))
                 seen.setdefault(key, []).append(f"{rel}:{n.lineno} literal")
-    return [sites for sites in seen.values() if len(sites) > 1]
+        # the shortest run of >= _RUN_STMTS statements and >= _RUN_NODES
+        # nodes from each start: a longer copied run has it as a prefix
+        for stmts, local, owner in _stmt_lists(tree):
+            sizes = [_size(s) for s in stmts]
+            for i in range(len(stmts)):
+                j, nodes = i, 0
+                while j < len(stmts) and (j - i < _RUN_STMTS or nodes < _RUN_NODES):
+                    nodes += sizes[j]
+                    j += 1
+                if j - i >= _RUN_STMTS and nodes >= _RUN_NODES:
+                    key = _renamed_dump(stmts[i:j], local)
+                    runs.setdefault(key, []).append(
+                        (f"{rel}:{stmts[i].lineno} statements", (rel, owner))
+                    )
+    dups = [sites for sites in seen.values() if len(sites) > 1]
+    reported = set()  # one report per copied pair of functions
+    for sites in runs.values():
+        owners = frozenset(o for _, o in sites)
+        if len(sites) > 1 and owners not in reported:
+            reported.add(owners)
+            dups.append([site for site, _ in sites])
+    return dups
 
 
 def test_package_defines_each_piece_once():

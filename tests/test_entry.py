@@ -98,3 +98,36 @@ def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
     df = t(spark, str(tmp_path), "events")
     assert df.columns == ["event_id", "user_id"]
     assert sorted(tuple(r) for r in df.collect()) == [(1, 7), (2, 8)]
+
+
+def test_embeddings_rewritten_in_place_refresh_size_and_fit(spark, tmp_path):
+    """The embeddings memos (the footer row count that picks a similarity
+    operator's dispatch branch, and the quantizer fit) are keyed on the
+    table file like catalog.t()'s schema memo: an embeddings table
+    rewritten under the same sf_dir with another row count must not be
+    read through the old count or the old fit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from uc_historic_data_importer_spark.plans import catalog_ext as ce
+
+    path = str(tmp_path / "embeddings.parquet")
+
+    def write(vecs):
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+            }),
+            path,
+        )
+        return ce._embeddings_n_rows(str(tmp_path)), ce._ivf_fit(
+            spark, str(tmp_path)
+        )[1]
+
+    n1, fit1 = write([[1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [1.0, -1.0]])
+    n2, fit2 = write([[0.0, 1.0], [1.0, 0.0], [-1.0, 1.0], [1.0, 1.0],
+                      [2.0, 1.0], [1.0, 2.0]])
+    assert (n1, n2) == (4, 6)
+    assert fit2 != fit1
+    assert fit2[:2] == [[0.0, 1.0], [1.0, 0.0]]

@@ -3065,13 +3065,13 @@ class TestNeardupDispatch:
         exact = {
             (r["vec_a"], r["vec_b"]): r["cos_sim"]
             for r in sim.cosine_neardup_pairs(
-                emb, exact_max_rows=10**9
+                emb
             ).collect()
         }
         fast = {
             (r["vec_a"], r["vec_b"]): r["cos_sim"]
             for r in sim.cosine_neardup_pairs(
-                emb, exact_max_rows=0
+                emb, n_rows=10**9
             ).collect()
         }
         assert set(exact) == set(fast)
@@ -3093,12 +3093,12 @@ class TestIvfTopkDispatch:
         ).localCheckpoint()
         exact = sorted(
             map(tuple, sim.ivf_topk(
-                assigned, cell_col="cell", exact_max_rows=10**9
+                assigned, cell_col="cell"
             ).collect())
         )
         fast = sorted(
             map(tuple, sim.ivf_topk(
-                assigned, cell_col="cell", exact_max_rows=0
+                assigned, cell_col="cell", n_rows=10**9
             ).collect())
         )
         assert exact == fast and exact
@@ -3122,12 +3122,12 @@ class TestIvfTopkDispatch:
         )
         exact = sorted(
             map(tuple, sim.ivf_topk(
-                df, cell_col="cell", exact_max_rows=10**9
+                df, cell_col="cell"
             ).collect())
         )
         fast = sorted(
             map(tuple, sim.ivf_topk(
-                df, cell_col="cell", exact_max_rows=0
+                df, cell_col="cell", n_rows=10**9
             ).collect())
         )
         assert exact == fast and exact
@@ -3140,11 +3140,10 @@ class TestSemdedupDispatch:
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         cents = sim.kmeans_fit(emb, k=10, iters=2)
         exact = {r["vec_id"]: (r["cell"], r["kept"])
-                 for r in sim.semdedup(emb, cents,
-                                       exact_max_rows=10**9).collect()}
+                 for r in sim.semdedup(emb, cents).collect()}
         fast = {r["vec_id"]: (r["cell"], r["kept"])
                 for r in sim.semdedup(emb, cents,
-                                      exact_max_rows=0).collect()}
+                                      n_rows=10**9).collect()}
         assert exact == fast
 
 
@@ -3163,14 +3162,14 @@ class TestReviewFixes:
         # force the matmul paths
         sd = {r["vec_id"]: r["kept"]
               for r in sim.semdedup(df, cents,
-                                    exact_max_rows=0).collect()}
+                                    n_rows=10**9).collect()}
         assert sd[3] == 1 and sd[4] == 1  # malformed rows stay kept
         assert sd[0] == 1 and sd[1] == 0  # real dup still dropped
         df2 = df.withColumn("cell", F.lit(0))
         nd = {(r["vec_a"], r["vec_b"])
               for r in sim.cosine_neardup_pairs(
                   df2.withColumnRenamed("cell", "label"),
-                  exact_max_rows=0
+                  n_rows=10**9
               ).collect()}
         assert nd == {(0, 1)}  # malformed rows emit no pairs, no crash
 
@@ -3196,8 +3195,8 @@ class TestReviewFixesRound2:
     degenerate inputs."""
 
     def test_ragged_smallest_id_does_not_poison_cell(self, spark):
-        # modal-dim inference: a short vector at the SMALLEST id must
-        # not disqualify the valid vectors in its cell
+        # one matmul per vector length: a short vector at the SMALLEST
+        # id must not disqualify the valid vectors in its cell
         import uc_historic_data_importer_spark.operators.similarity as sim
 
         rows = [(0, [0.5]), (1, [1.0, 0.0]), (2, [1.0, 0.0])]
@@ -3207,7 +3206,7 @@ class TestReviewFixesRound2:
         out = {(r["vec_a"], r["vec_b"])
                for r in sim.cosine_neardup_pairs(
                    df.withColumnRenamed("cell", "label"),
-                   exact_max_rows=0
+                   n_rows=10**9
                ).collect()}
         assert out == {(1, 2)}
 
@@ -3218,13 +3217,13 @@ class TestReviewFixesRound2:
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>"
         ).withColumn("cell", F.lit(0))
-        for cap in (10**9, 0):  # exact path, then matmul path
+        for n_rows in (None, 10**9):  # exact path, then matmul path
             got = {(r["vec_a"], r["vec_b"]): r["cos_sim"]
                    for r in sim.cosine_neardup_pairs(
                        df.withColumnRenamed("cell", "label"),
-                       exact_max_rows=cap).collect()}
+                       n_rows=n_rows).collect()}
             # the zero vector's cos is 0 (guarded), never NaN >= thr
-            assert set(got) == {(1, 2)}, cap
+            assert set(got) == {(1, 2)}, n_rows
 
     def test_null_cell_rows_pair_with_nothing_on_either_branch(self, spark):
         import uc_historic_data_importer_spark.operators.similarity as sim
@@ -3234,12 +3233,12 @@ class TestReviewFixesRound2:
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>, cell int"
         )
-        for cap in (10**9, 0):
+        for n_rows in (None, 10**9):
             got = {(r["vec_a"], r["vec_b"])
                    for r in sim.cosine_neardup_pairs(
                        df.withColumnRenamed("cell", "label"),
-                       exact_max_rows=cap).collect()}
-            assert got == {(2, 3)}, cap
+                       n_rows=n_rows).collect()}
+            assert got == {(2, 3)}, n_rows
 
     def test_empty_vectors_pair_identically_on_both_branches(self, spark):
         """Catalyst scores empty-vs-empty as cos 0.0 (the aggregate's
@@ -3252,12 +3251,12 @@ class TestReviewFixesRound2:
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>"
         ).withColumn("cell", F.lit(0))
-        for cap in (10**9, 0):
+        for n_rows in (None, 10**9):
             got = {(r["vec_a"], r["vec_b"])
                    for r in sim.cosine_neardup_pairs(
                        df.withColumnRenamed("cell", "label"),
-                       exact_max_rows=cap).collect()}
-            assert got == {(2, 3)}, cap
+                       n_rows=n_rows).collect()}
+            assert got == {(2, 3)}, n_rows
 
     def test_semdedup_malformed_parity_across_branches(self, spark):
         import uc_historic_data_importer_spark.operators.similarity as sim
@@ -3267,11 +3266,10 @@ class TestReviewFixesRound2:
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         cents = [[1.0, 0.0], [0.0, 1.0]]
         exact = {r["vec_id"]: r["kept"]
-                 for r in sim.semdedup(df, cents,
-                                       exact_max_rows=10**9).collect()}
+                 for r in sim.semdedup(df, cents).collect()}
         fast = {r["vec_id"]: r["kept"]
                 for r in sim.semdedup(df, cents,
-                                      exact_max_rows=0).collect()}
+                                      n_rows=10**9).collect()}
         assert exact == fast
         # malformed (wrong-dim) rows all stay kept on both branches
         assert exact[0] == exact[1] == exact[2] == 1
@@ -4008,7 +4006,7 @@ class TestKmeansNpSeam:
         corpus = self._corpus(spark)
         exact = similarity.kmeans_fit(corpus, k=3, iters=2)
         via_np = similarity.kmeans_fit(
-            corpus, k=3, iters=2, n_rows=60, exact_max_rows=0
+            corpus, k=3, iters=2, n_rows=10**9
         )
         assert via_np == exact
 
@@ -4027,7 +4025,7 @@ class TestKmeansNpSeam:
         clean = corpus.filter(F.col("embedding").isNotNull())
         exact = similarity.kmeans_fit(clean, k=3, iters=1)
         via_np = similarity.kmeans_fit(
-            clean, k=3, iters=1, n_rows=60, exact_max_rows=0
+            clean, k=3, iters=1, n_rows=10**9
         )
         assert via_np == exact
 
@@ -4043,7 +4041,7 @@ class TestKmeansNpSeam:
         b = similarity.assign_cells(
             corpus,
             similarity.kmeans_fit(
-                corpus, k=3, iters=2, n_rows=90, exact_max_rows=0
+                corpus, k=3, iters=2, n_rows=10**9
             ),
         )
         am = {r["vec_id"]: r["cell"] for r in a.collect()}
@@ -4200,7 +4198,7 @@ class TestAssignSeamParity:
         corpus = self._corpus(spark)
         cents = similarity.kmeans_fit(corpus, k=3, iters=1)
         exact = similarity.assign_cells(corpus, cents)
-        # n_rows past the exact_max_rows threshold forces the Arrow route
+        # n_rows past EXACT_MAX_ROWS forces the Arrow route
         seam = similarity.assign_cells(corpus, cents, n_rows=10**9)
         em = {r["vec_id"]: r["cell"] for r in exact.collect()}
         sm = {r["vec_id"]: r["cell"] for r in seam.collect()}
@@ -4546,7 +4544,7 @@ class TestCellAssignRandomizedParity:
         seam = corpus.select(
             "vec_id",
             similarity._cell_column(
-                centroids, n_rows=n, exact_max_rows=100
+                centroids, n_rows=10**9
             ).alias("cell"),
         )
         e = {r["vec_id"]: r["cell"] for r in exact.collect()}

@@ -669,10 +669,16 @@ def encode_jpeg_gray(width: int, height: int, pixels: bytes) -> bytes:
     )
 
 
+# blocks per FDCT + quantize pass of encode_jpeg_gray_batch: the
+# large-batch _fdct_blocks path is fastest when its (nb,8,8) temporaries
+# stay cache-resident (measured 10.8 us/block at 512 vs 71 at 4096)
+_FDCT_CHUNK = 512
+
+
 def encode_jpeg_gray_batch(items) -> list[bytes]:
     """encode_jpeg_gray over many (width, height, pixels) images in one
-    call, with ONE FDCT + quantize pass over the concatenated blocks of
-    the whole batch (r15 opt round): at the media fixtures' tiny dims
+    call, with one FDCT + quantize pass over the concatenated blocks of
+    many images (r15 opt round): at the media fixtures' tiny dims
     (<= 4 blocks/image) the per-image cost was numpy DISPATCH — ~80
     small-array ops inside _fdct_blocks plus np.pad staging — not
     arithmetic. Batching amortizes those dispatches across every image
@@ -681,9 +687,15 @@ def encode_jpeg_gray_batch(items) -> list[bytes]:
     np.pad(mode='edge') applies, _fdct_blocks is per-block independent
     (its all-zero shortcut only skips ±0.0 additions), and quantize is
     elementwise — so block values cannot depend on which images share a
-    batch or where the _IDCT_CHUNK boundaries fall. Entropy coding
-    stays per image (DC prediction resets per scan). Parity is pinned
-    in tests/test_imagecodec.py."""
+    batch or where the chunk boundaries fall. Entropy coding stays per
+    image (DC prediction resets per scan). Parity is pinned in
+    tests/test_imagecodec.py.
+
+    Memory: images are staged in passes of at most _FDCT_CHUNK blocks
+    (an image with more blocks is a pass of its own), and each pass's
+    quantized blocks are entropy-coded before the next is staged, so the
+    peak is one pass — about 2 KB of Python ints per block — not the
+    whole batch."""
     items = list(items)
     for width, height, pixels in items:
         if width <= 0 or height <= 0 or len(pixels) != width * height:
@@ -697,8 +709,27 @@ def encode_jpeg_gray_batch(items) -> list[bytes]:
             )
             for w, h, p in items
         ]
-    n_blocks: list[int] = []
-    staged: list = []
+    qtv = _np.asarray(qt, dtype=_np.float64)
+    out: list[bytes] = []
+    group: list = []  # (width, height, uint8 blocks) of the next pass
+
+    def flush() -> None:
+        cat = _np.concatenate([bl for _, _, bl in group])
+        q: list[list[int]] = []
+        for i in range(0, cat.shape[0], _FDCT_CHUNK):
+            blocks = cat[i : i + _FDCT_CHUNK].astype(_np.float64) - 128.0
+            coefs = _fdct_blocks(blocks)
+            q.extend(
+                _np.floor(coefs / qtv[None, :] + 0.5).astype(_np.int64).tolist()
+            )
+        pos = 0
+        for width, height, bl in group:
+            nb = bl.shape[0]
+            out.append(_wrap_gray_scan(width, height, q[pos : pos + nb], qt_zz))
+            pos += nb
+        group.clear()
+
+    staged = 0
     for width, height, pixels in items:
         img = _np.frombuffer(pixels, dtype=_np.uint8).reshape(height, width)
         if height % 8 or width % 8:
@@ -714,25 +745,12 @@ def encode_jpeg_gray_batch(items) -> list[bytes]:
             .transpose(0, 2, 1, 3)
             .reshape(-1, 64)
         )
-        n_blocks.append(bl.shape[0])
-        staged.append(bl)
-    cat = _np.concatenate(staged) if len(staged) > 1 else staged[0]
-    qtv = _np.asarray(qt, dtype=_np.float64)
-    q_all: list[list[int]] = []
-    # 512-block chunks: the large-batch _fdct_blocks path is fastest
-    # when its (nb,8,8) temporaries stay cache-resident (measured 10.8
-    # us/block at 512 vs 71 at 4096)
-    for i in range(0, cat.shape[0], 512):
-        blocks = cat[i : i + 512].astype(_np.float64) - 128.0
-        coefs = _fdct_blocks(blocks)
-        q_all.extend(
-            _np.floor(coefs / qtv[None, :] + 0.5).astype(_np.int64).tolist()
-        )
-    out: list[bytes] = []
-    pos = 0
-    for (width, height, _), nb in zip(items, n_blocks):
-        out.append(_wrap_gray_scan(width, height, q_all[pos : pos + nb], qt_zz))
-        pos += nb
+        if group and staged + bl.shape[0] > _FDCT_CHUNK:
+            flush()
+            staged = 0
+        group.append((width, height, bl))
+        staged += bl.shape[0]
+    flush()
     return out
 
 
@@ -1097,6 +1115,51 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     raise UnsupportedImageError("no scan found")
 
 
+def _decode_block(
+    br: "_BitReader",
+    dc_t: "_HuffTable",
+    ac_t: "_HuffTable",
+    qt: list[int],
+    preds: list[int],
+    ci: int,
+    out,
+) -> None:
+    """Entropy-decode one 8x8 block of scan component ``ci`` into
+    ``out`` (64 zeroed slots, a list or an array row, natural order):
+    the DC difference updates the component's predictor ``preds[ci]``
+    and every coefficient is dequantized by ``qt``. read_code is called
+    directly and EXTEND inlined: this loop runs twice per coefficient
+    and the wrapper/call overhead measurably dominates."""
+    try:
+        cat = br.read_code(dc_t)
+        if cat:
+            v = br.bits(cat)
+            diff = v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
+        else:
+            diff = 0
+        preds[ci] += diff
+        out[0] = preds[ci] * qt[0]
+        k = 1
+        while k <= 63:
+            rs = br.read_code(ac_t)
+            r, s = rs >> 4, rs & 15
+            if s == 0:
+                if r == 15:
+                    k += 16
+                    continue
+                break  # EOB
+            k += r
+            if k > 63:
+                raise UnsupportedImageError("AC index overflow")
+            v = br.bits(s)
+            out[_ZIGZAG[k]] = (
+                v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+            ) * qt[_ZIGZAG[k]]
+            k += 1
+    except _MarkerInData:
+        raise UnsupportedImageError("marker inside MCU")
+
+
 def _decode_scan(
     data: bytes,
     pos: int,
@@ -1123,37 +1186,7 @@ def _decode_scan(
                 preds = [0] * nc
             for ci, (_cid, dc_t, ac_t, qt) in enumerate(scan):
                 coef = [0.0] * 64
-                try:
-                    # read_code called directly and EXTEND inlined:
-                    # this loop runs twice per coefficient and the
-                    # wrapper/call overhead measurably dominates
-                    cat = br.read_code(dc_t)
-                    if cat:
-                        v = br.bits(cat)
-                        diff = v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
-                    else:
-                        diff = 0
-                    preds[ci] += diff
-                    coef[0] = preds[ci] * qt[0]
-                    k = 1
-                    while k <= 63:
-                        rs = br.read_code(ac_t)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            raise UnsupportedImageError("AC index overflow")
-                        v = br.bits(s)
-                        coef[_ZIGZAG[k]] = (
-                            v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                        ) * qt[_ZIGZAG[k]]
-                        k += 1
-                except _MarkerInData:
-                    raise UnsupportedImageError("marker inside MCU")
+                _decode_block(br, dc_t, ac_t, qt, preds, ci, coef)
                 px = _idct(coef)
                 plane = planes[ci]
                 base_y, base_x = my * 8, mx * 8
@@ -1208,8 +1241,9 @@ def _decode_scan_np(
     dri: int,
 ) -> tuple[int, int, int, bytes]:
     """Numpy twin of the scalar scan decode. The Huffman/DPCM entropy
-    loop is unchanged (serial by construction — each code's length is
-    only known after decoding it); dequantized coefficients accumulate
+    loop is the scalar path's _decode_block (serial by construction —
+    each code's length is only known after decoding it); dequantized
+    coefficients accumulate
     into a chunk buffer and the IDCT + level shift + clamp + YCbCr
     conversion run batched. Bit-identical to the scalar path: integer
     coefficients are exact in float64, _idct_blocks preserves the
@@ -1252,36 +1286,7 @@ def _decode_scan_np(
             rst_n = (rst_n + 1) & 7
             preds = [0] * nc
         for ci, (_cid, dc_t, ac_t, qt) in enumerate(scan):
-            row = coefs[ci, fill]
-            try:
-                # read_code direct + EXTEND inlined (see scalar twin)
-                cat = br.read_code(dc_t)
-                if cat:
-                    v = br.bits(cat)
-                    diff = v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
-                else:
-                    diff = 0
-                preds[ci] += diff
-                row[0] = preds[ci] * qt[0]
-                k = 1
-                while k <= 63:
-                    rs = br.read_code(ac_t)
-                    r, s = rs >> 4, rs & 15
-                    if s == 0:
-                        if r == 15:
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += r
-                    if k > 63:
-                        raise UnsupportedImageError("AC index overflow")
-                    v = br.bits(s)
-                    row[_ZIGZAG[k]] = (
-                        v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                    ) * qt[_ZIGZAG[k]]
-                    k += 1
-            except _MarkerInData:
-                raise UnsupportedImageError("marker inside MCU")
+            _decode_block(br, dc_t, ac_t, qt, preds, ci, coefs[ci, fill])
         fill += 1
         if fill == chunk:
             flush()

@@ -16,6 +16,29 @@
 Dot products run through `F.aggregate`/`zip_with` on DOUBLE — JVM-side,
 sequential summation (bit-identical to the DuckDB oracle's
 list_inner_product over DOUBLE[]).
+
+Size dispatch. Seven operators keep a numpy "matmul seam" beside their
+exact Catalyst path: the cell assignment (`_cell_column`), `kmeans_fit`,
+`ivf2_fit` and `ivf2_assign` (which share one), `ivf_topk`, `semdedup`
+and `cosine_neardup_pairs`. One rule picks the path (`_past_oracle`): the
+seam runs only when the caller passes ``n_rows`` and it exceeds
+EXACT_MAX_ROWS. An undeclared size takes the exact path; no operator
+counts its input to decide. The exact path is the one the DuckDB
+oracles check at sf0.001/sf0.01; the seams are checked against the
+oracles at sf0.1 and against the exact path by parity tests. At those
+scales the per-pair HOF dot re-enters the interpreter per element,
+while a seam scores a whole cell or batch in one BLAS call.
+
+The seams share one numpy kernel: valid rows stacked per vector length
+(`_stack_valid`, `_by_length` — a cross-length pair has a NULL dot on
+the Catalyst path, because zip_with pads the shorter side), the
+|0| -> 1 norm guard (`_safe_norms`, safe_norm_col's rule) and
+round-half-away-from-zero at 6 dp (`_round6`, F.round's rule). What
+still separates them from Catalyst is measure-zero on real corpora:
+BLAS sums in a different order (last ulp, collapsed by the rounding
+unless it lands on a tie), `_round6` rounds the binary double where
+F.round rounds its shortest decimal repr, a NaN score crosses Arrow as
+NULL and a NULL vector element reads as NaN.
 """
 
 from __future__ import annotations
@@ -46,10 +69,71 @@ def safe_norm_col(a: Column) -> Column:
     """norm with the |0| -> 1 guard (cos vs a zero vector = 0, never
     0/0 = NaN — Spark orders NaN greatest, so an unguarded NaN
     similarity would PASS any >= threshold filter). Matches
-    _unit_rows' guard and the oracles' CASE WHEN sqrt(..) = 0
+    _safe_norms' guard and the oracles' CASE WHEN sqrt(..) = 0
     convention."""
     n = norm_col(a)
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
+
+
+# corpus rows past which a size-dispatched operator takes its numpy seam
+EXACT_MAX_ROWS = 1000
+
+
+def _past_oracle(n_rows: int | None) -> bool:
+    """The one dispatch rule (module docstring): the seam runs only for
+    a declared corpus larger than EXACT_MAX_ROWS."""
+    return n_rows is not None and n_rows > EXACT_MAX_ROWS
+
+
+def _stack_valid(vals: list, dim: int):
+    """(positions, V): the rows of ``vals`` that are vectors of length
+    ``dim``, stacked as float64. NULL and other-length rows are left
+    out; the Catalyst paths give them the -1 cell or a NULL similarity.
+    V is None when no row qualifies."""
+    import numpy as np
+
+    ok = np.flatnonzero([v is not None and len(v) == dim for v in vals])
+    if not len(ok):
+        return ok, None
+    return ok, np.asarray([np.asarray(vals[i], dtype=np.float64) for i in ok])
+
+
+def _by_length(vals: list):
+    """_stack_valid for each distinct length of the non-NULL vectors,
+    shortest first: one matmul per length."""
+    for d in sorted({len(v) for v in vals if v is not None}):
+        yield _stack_valid(vals, d)
+
+
+def _safe_norms(M):
+    """Row norms of M with the |0| -> 1 guard."""
+    import numpy as np
+
+    n = np.sqrt((M * M).sum(axis=1))
+    n[n == 0.0] = 1.0
+    return n
+
+
+def _round6(a):
+    """_round_away's rule at 6 dp over a numpy array: ties go away from
+    zero, as in F.round and DuckDB's round (numpy's own rounding goes to
+    the even digit)."""
+    import numpy as np
+
+    return np.copysign(np.floor(np.abs(a) * 1e6 + 0.5), a) / 1e6
+
+
+def _cell_keys(V, C):
+    """_cell_expr's key of every (row of V, centroid of C) pair:
+    round6(dot(v, c) / |c|) with the |0| -> 1 guard."""
+    return _round6((V @ C.T) / _safe_norms(C))
+
+
+def _unit_gram(V):
+    """Every pairwise cosine of V's rows, unrounded: one matmul of the
+    guarded unit rows."""
+    U = V / _safe_norms(V)[:, None]
+    return U @ U.T
 
 
 def cosine_topk(
@@ -101,27 +185,21 @@ def _ivf_topk_arrow(
     corpus: DataFrame,
     cell_col: str,
 ) -> DataFrame:
-    """Per-cell numpy top-k — ivf_topk's past-oracle-scale branch (the
-    cosine_neardup_pairs matmul seam applied to search): one
-    applyInPandas group per cell computes every within-cell cosine as
-    one BLAS matmul and ranks in-process, instead of a pair-join whose
-    per-pair HOF dot re-enters the interpreter per element (profiled:
-    10+ CPU-seconds per sf0.1 search).
+    """ivf_topk's seam: one applyInPandas group per cell scores every
+    within-cell cosine with one matmul per vector length and ranks
+    in-process (profiled: the pair-join's HOF dot cost 10+ CPU-seconds
+    per sf0.1 search).
 
     Rank semantics replicate the exact path: cos desc with NaN FIRST
-    (Spark orders NaN greatest), NULL sims (cross-length or NULL-vector
-    pairs — zip_with's both-lengths contract) LAST, ties by neighbor id
-    ascending, row_number <= k. Known seam caveats (same class as
-    _cell_udf_column, measure-zero on real corpora and absent from
-    every driver-checked scale, which stays on the exact path):
-    np.round ties half-even; BLAS summation order differs in the last
-    ulp; a NaN cos_sim VALUE crosses Arrow as NULL (its rank, computed
-    in-process, is still the exact path's); a NULL vector ELEMENT is
-    indistinguishable from NaN after Arrow transfer."""
+    (Spark orders NaN greatest), NULL sims (a NULL, empty or
+    other-length vector on either side) LAST, ties by neighbor id
+    ascending, rank 1 only. Unlike the other seams the cosine divides by
+    the raw norms, as the exact path does: where that path divides by a
+    zero norm, this one scores NaN. A NaN cos_sim value crosses Arrow as
+    NULL; its rank is still the exact path's."""
     import numpy as np
     import pandas as pd
 
-    kk, dp = 1, 6
     sel = (
         ensure_parallel(corpus)
         .select(
@@ -144,85 +222,37 @@ def _ivf_topk_arrow(
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         m = len(pdf)
-        empty = pd.DataFrame(
-            {"query_id": [], "cell": [], "neighbor_id": [],
-             "cos_sim": [], "rank": []}
-        )
-        if m < 2 or kk < 1:
-            return empty
-        cell = pdf["cell"].iloc[0]
+        if m < 2:
+            return pd.DataFrame(
+                {"query_id": [], "cell": [], "neighbor_id": [],
+                 "cos_sim": [], "rank": []}
+            )
+        # id order makes argmax's first max the lowest neighbor id
+        pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
-        vals = list(pdf["_v"])
-        lens = np.array([-1 if v is None else len(v) for v in vals])
-        rows: list[tuple] = []
-        if (lens == lens[0]).all() and lens[0] > 0:
-            # uniform-dim cell (every real corpus): one matmul
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in vals])
-            norms = np.sqrt((V * V).sum(axis=1))
-            S = np.round((V @ V.T) / np.outer(norms, norms), dp)
-            # ordering key: NaN ranks FIRST under desc — map to +inf
-            K = np.where(np.isnan(S), np.inf, S)
-            np.fill_diagonal(K, -np.inf)  # self-pair excluded
-            for i in range(m):
-                order = np.lexsort((ids, -K[i]))
-                take = [j for j in order[: kk + 1] if j != i][:kk]
-                for r, j in enumerate(take):
-                    s = S[i, j]
-                    rows.append(
-                        (ids[i], cell, ids[j],
-                         None if np.isnan(s) else float(s), r + 1)
-                    )
-        else:
-            # ragged/NULL vectors: per-pair replication of the
-            # zip_with contract (equal lengths -> real dot, otherwise
-            # NULL), ordered NaN-first / NULL-last / neighbor-asc
-            arrs = [
-                None if v is None else np.asarray(v, dtype=np.float64)
-                for v in vals
-            ]
-            nrm = [
-                None if a is None else float(np.sqrt((a * a).sum()))
-                for a in arrs
-            ]
-            for i in range(m):
-                cand = []
-                for j in range(m):
-                    if j == i:
-                        continue
-                    if (
-                        lens[i] > 0
-                        and lens[i] == lens[j]
-                    ):
-                        s = float(
-                            np.round(
-                                float(arrs[i] @ arrs[j])
-                                / (nrm[i] * nrm[j]),
-                                dp,
-                            )
-                        )
-                    else:
-                        s = None
-                    if s is not None and np.isnan(s):
-                        key = (0, 0.0, ids[j])
-                    elif s is not None:
-                        key = (1, -s, ids[j])
-                    else:
-                        key = (2, 0.0, ids[j])
-                    cand.append((key, ids[j], s))
-                cand.sort(key=lambda c: c[0])
-                for r, (_, nid, s) in enumerate(cand[:kk]):
-                    rows.append(
-                        (ids[i], cell, nid,
-                         None if (s is not None and np.isnan(s)) else s,
-                         r + 1)
-                    )
-        if not rows:
-            return empty
-        out = pd.DataFrame(
-            rows,
-            columns=["query_id", "cell", "neighbor_id", "cos_sim", "rank"],
+        S = np.full((m, m), np.nan)  # NaN crosses Arrow as NULL
+        # ordering key under desc: a NaN cosine first, a NULL one last
+        K = np.full((m, m), -np.inf)
+        for ok, V in _by_length(list(pdf["_v"])):
+            if V.shape[1] == 0:
+                continue  # 0/0 on the exact path: a NULL similarity
+            n = np.sqrt((V * V).sum(axis=1))
+            s = _round6((V @ V.T) / np.outer(n, n))
+            S[np.ix_(ok, ok)] = s
+            K[np.ix_(ok, ok)] = np.where(np.isnan(s), np.inf, s)
+        np.fill_diagonal(K, -np.inf)  # self-pair excluded
+        best = K.argmax(axis=1)
+        if best[0] == 0:  # row 0 with only NULL candidates
+            best[0] = 1
+        return pd.DataFrame(
+            {
+                "query_id": ids,
+                "cell": pdf["cell"].iloc[0],
+                "neighbor_id": ids[best],
+                "cos_sim": S[np.arange(m), best],
+                "rank": 1,
+            }
         )
-        return out
 
     return sel.groupBy("cell").applyInPandas(per_cell, schema=schema)
 
@@ -230,7 +260,6 @@ def _ivf_topk_arrow(
 def ivf_topk(
     corpus: DataFrame,
     cell_col: str = "label",
-    exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
     """IVF search: each vector's nearest neighbor within its quantizer cell.
@@ -238,23 +267,9 @@ def ivf_topk(
     The equi-join on cell id replaces the cross join — each cell's
     candidate set is independent, so the shuffle is on the (uniform)
     cell id and partition pruning applies when the corpus is stored
-    partitioned by cell.
-
-    Size-dispatched like cosine_neardup_pairs: corpora past
-    ``exact_max_rows`` run each cell's candidate scoring as ONE numpy
-    matmul + in-process ranking (_ivf_topk_arrow) — the per-pair HOF
-    dot re-enters the interpreter per element and dominated the search
-    at bench scale. Every driver-checked scale stays on the bit-exact
-    Catalyst path below. ``n_rows`` short-circuits the dispatch count
-    (pass it when the input is an expensive uncached pipeline); without
-    it the probe is bounded at exact_max_rows+1 rows, so the dispatch
-    decision never materializes the full corpus."""
-    n = (
-        corpus.limit(int(exact_max_rows) + 1).count()
-        if n_rows is None
-        else int(n_rows)
-    )
-    if n > exact_max_rows:
+    partitioned by cell. Size-dispatched on ``n_rows`` (module
+    docstring); the seam is _ivf_topk_arrow."""
+    if _past_oracle(n_rows):
         return _ivf_topk_arrow(corpus, cell_col)
     corpus = ensure_parallel(corpus)
     a = corpus.select(
@@ -367,7 +382,7 @@ def _cell_expr(centroids: list[list[float]]) -> Column:
       so every size from 128 terms up falls back to interpreted
       evaluation. The barrier trades a compiled Project for an
       interpreted Generate; that trade is confined to dispatch paths
-      bounded at exact_max_rows/oracle scale, where interpreted eval
+      bounded at EXACT_MAX_ROWS, where interpreted eval
       of ~640 terms over <= 1k rows is milliseconds.
 
     The argmax is array_position(scores, array_max(scores)), NOT a
@@ -424,67 +439,26 @@ def _cell_expr(centroids: list[list[float]]) -> Column:
 _CELL_EXPR_MAX_TERMS = 1024
 
 
-def _stack_valid(vals: list, dim: int | None = None):
-    """(ok_positions, V) from a sequence of vectors: rows that are None
-    or disagree with the corpus dim are EXCLUDED — the numpy twin of
-    the Catalyst paths' tolerance (where a malformed vector yields the
-    -1 cell sentinel / a null similarity instead of a crash). When
-    ``dim`` is not supplied it is inferred as the MODAL length of the
-    non-null rows — not the first row's length, which would let one
-    ragged vector at the smallest id silently disqualify every valid
-    vector in its batch. Returns ([], None) when nothing is valid."""
-    import numpy as np
-
-    if dim is None:
-        lengths = [len(v) for v in vals if v is not None and len(v) > 0]
-        if lengths:
-            uniq, counts = np.unique(np.asarray(lengths), return_counts=True)
-            dim = int(uniq[counts.argmax()])
-    ok = [i for i, v in enumerate(vals) if v is not None and len(v) == dim]
-    if not ok:
-        return [], None
-    V = np.asarray([np.asarray(vals[i], dtype=np.float64) for i in ok])
-    return ok, V
-
-
-def _unit_rows(V):
-    """Row-normalize with the shared zero-norm guard (|0| -> 1)."""
-    import numpy as np
-
-    norms = np.linalg.norm(V, axis=1)
-    norms[norms == 0.0] = 1.0
-    return V / norms[:, None]
-
-
 def _cell_udf_column(centroids: list[list[float]]) -> Column:
     """Nearest-centroid assignment as an Arrow-batched numpy matmul —
     the LARGE-k scale path (FAISS's shape: scores = V @ C.T / |c|,
     argmax per row). One broadcast k x dim float64 matrix rides the
     cloudpickled UDF; per batch the whole assignment is one BLAS call,
-    so cost is linear in rows regardless of k.
-
-    Key rounding and first-max tie-break match _cell_expr, with one
-    documented difference: np.round ties half-EVEN where F.round ties
-    half-away — an exact .5 at round_dp on an irrational cosine key is
-    measure-zero, and the expression path remains the oracle path at
-    every driver-checked scale (the dispatch threshold keeps small-k
-    fits on it). Malformed (wrong-dim/null) vectors get the same -1
-    sentinel as assign_cells."""
+    so cost is linear in rows regardless of k. Key rounding and the
+    first-max tie-break are _cell_expr's; malformed (wrong-dim/null)
+    vectors get the same -1 sentinel as assign_cells."""
     import numpy as np
     import pandas as pd  # noqa: F401 — pandas_udf batch type
 
     C = np.asarray(centroids, dtype=np.float64)
-    norms = np.linalg.norm(C, axis=1)
-    norms[norms == 0.0] = 1.0
     dim = C.shape[1]
 
     @F.pandas_udf("int")
     def assign(vecs):  # pd.Series of list[float]
         out = np.full(len(vecs), -1, dtype=np.int32)
         ok, V = _stack_valid(list(vecs), dim)
-        if ok:
-            keys = np.round((V @ C.T) / norms, 6)
-            out[ok] = keys.argmax(axis=1)  # first max — same tie rule
+        if V is not None:
+            out[ok] = _cell_keys(V, C).argmax(axis=1)  # first max
         return pd.Series(out)
 
     return assign(F.col("embedding").cast("array<double>"))
@@ -493,28 +467,20 @@ def _cell_udf_column(centroids: list[list[float]]) -> Column:
 def _cell_column(
     centroids: list[list[float]],
     n_rows: int | None = None,
-    exact_max_rows: int = 1000,
 ) -> Column:
-    """Dispatch the cell assignment by expression size: unrolled
-    literal argmax (whole-stage codegen, oracle-exact) while k x dim
-    fits the codegen budget, Arrow matmul beyond it. Both are
-    non-nullable (-1 sentinel) so pushdown never clones the tree into
-    a Filter (see assign_cells).
+    """Dispatch the cell assignment: the unrolled literal argmax
+    (whole-stage codegen, oracle-exact) while k x dim fits the codegen
+    budget and the corpus is not declared past oracle scale, the Arrow
+    matmul otherwise. Both are non-nullable (-1 sentinel) so pushdown
+    never clones the tree into a Filter (see assign_cells).
 
-    ``n_rows`` is the kmeans_fit seam contract extended to assignment
-    (r11 verdict item 2 — the ivf2 build's cost was DRIVER ANALYSIS,
-    not evaluation: a k*dim literal argmax tree embedded in every join
-    branch of the fine fit re-analyzes per localCheckpoint; at
-    k1=10 x dim=64 that was ~10 s of the 15 s ann_ivf2_topk build).
-    When the caller declares the corpus is past oracle scale
-    (n_rows > exact_max_rows) the assignment routes to the Arrow
-    matmul even when k*dim fits the codegen budget — the UDF node is
-    O(1) tree size, so plan analysis stops scaling with k*dim. Oracle
-    scales (driver checks at sf<=0.01, n<=1000) keep the bit-exact
-    expression path."""
+    The size rule applies even when k x dim fits the budget because the
+    ivf2 build's cost was DRIVER ANALYSIS, not evaluation: a k*dim
+    literal argmax tree embedded in every join branch of the fine fit
+    re-analyzes per localCheckpoint (at k1=10 x dim=64, ~10 s of the
+    15 s ann_ivf2_topk build); the UDF node is O(1) tree size."""
     terms = len(centroids) * len(centroids[0])
-    past_oracle = n_rows is not None and n_rows > exact_max_rows
-    if terms <= _CELL_EXPR_MAX_TERMS and not past_oracle:
+    if terms <= _CELL_EXPR_MAX_TERMS and not _past_oracle(n_rows):
         return F.coalesce(_cell_expr(centroids), F.lit(-1))
     return F.coalesce(_cell_udf_column(centroids), F.lit(-1))
 
@@ -584,47 +550,28 @@ def _fit_partials_np(
     centroids: list[list[float]],
 ) -> DataFrame:
     """One fit iteration's (cell, dim, sx, n) partials via an
-    Arrow-batched mapInPandas matmul — the past-oracle-scale twin of
-    the _cell_column + posexplode shape (same dispatch doctrine as
-    cosine_neardup_pairs: bit-exact Catalyst at driver-oracle scales,
-    numpy beyond). Assignment parity with _cell_expr: score =
-    round-half-away(dot(v, c) / |c|, round_dp) with |0| -> 1, ties to
-    the LOWEST cell (np.argmax returns the first max, the
-    array_position rule), malformed rows (None / wrong dim) excluded —
-    they fold into the ignored -1 sentinel cell on the Catalyst side.
-    Per batch the emitted state is k x dim rows, so the downstream
-    groupBy moves partials, never the corpus; and no k*dim expression
-    tree ever reaches the analyzer (at k=400 x dim=64 the Catalyst
-    tree's per-job ANALYSIS, not evaluation, dominated the fit)."""
+    Arrow-batched mapInPandas matmul — kmeans_fit's seam, in place of
+    the _cell_column + posexplode shape. Assignment is _cell_keys'
+    argmax: ties to the LOWEST cell (the array_position rule), malformed
+    rows (None / wrong dim) excluded — they fold into the ignored -1
+    sentinel cell on the Catalyst side. Per batch the emitted state is
+    k x dim rows, so the downstream groupBy moves partials, never the
+    corpus; and no k*dim expression tree ever reaches the analyzer (at
+    k=400 x dim=64 the Catalyst tree's per-job ANALYSIS, not
+    evaluation, dominated the fit)."""
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
     k_n, dim = C.shape
-    cn = np.sqrt((C * C).sum(axis=1))
-    cn[cn == 0.0] = 1.0
-    m = 10.0**6
 
     def fn(batches):
         import pandas as pd
 
         for pdf in batches:
-            ok, V = _stack_valid(pdf["embedding"].tolist(), dim=dim)
+            _, V = _stack_valid(pdf["embedding"].tolist(), dim)
             if V is None:
                 continue
-            scores = (V @ C.T) / cn
-            # round-half-away on the BINARY double (matches _round_away,
-            # similarity.py:~940). Caveat (ADVICE r11): F.round is Java
-            # BigDecimal HALF_UP on the SHORTEST-DECIMAL repr, so a
-            # score whose decimal repr lands exactly on a half at
-            # round_dp but whose binary value sits just under it (e.g.
-            # 2.675 at dp=2 is 2.67499999... in binary: Spark -> 2.68,
-            # this form -> 2.67) can assign a boundary vector to a
-            # different cell than the Catalyst route. Accepted under
-            # the documented measure-zero doctrine (same as
-            # _cell_udf_column's half-even note); oracle-checked
-            # scales never dispatch here.
-            scores = np.copysign(np.floor(np.abs(scores) * m + 0.5), scores) / m
-            cells = scores.argmax(axis=1)
+            cells = _cell_keys(V, C).argmax(axis=1)
             sums = np.zeros((k_n, dim), dtype=np.float64)
             np.add.at(sums, cells, V)
             counts = np.bincount(cells, minlength=k_n)
@@ -649,7 +596,6 @@ def kmeans_fit(
     iters: int = 3,
     max_driver_floats: int = KMEANS_MAX_DRIVER_FLOATS,
     n_rows: int | None = None,
-    exact_max_rows: int = 1000,
 ) -> list[list[float]]:
     """Deterministic spherical k-means fit for the IVF quantizer.
 
@@ -669,7 +615,15 @@ def kmeans_fit(
     ``max_driver_floats`` raises rather than silently building an
     OOM-scale plan — use ivf2_fit (a small coarse kmeans_fit plus
     distributed fine centroids) for corpora that want more cells than
-    the budget allows."""
+    the budget allows.
+
+    Size-dispatched on ``n_rows`` (module docstring): past oracle scale
+    each round's partials come from _fit_partials_np instead of the
+    k*dim _cell_column tree, whose per-job ANALYSIS (k=400 x dim=64 =
+    25,600 terms, re-analyzed every round because the centroid literals
+    change) dominated the sf1 fit. The 12 dp rounding of the means
+    collapses the seam's different sum order, as it already must for
+    Spark's own partial-agg order."""
     # probe dim with a single take(1) and enforce the budget BEFORE
     # take(k) executes (ADVICE r10): in the exact regime the guard
     # targets (k*dim >> budget) the k-row collect itself is the OOM,
@@ -720,19 +674,8 @@ def kmeans_fit(
     # a single-file corpus scans as ONE partition; the per-iteration
     # explode+aggregate is CPU-bound and must parallelize
     corpus = ensure_parallel(corpus)
-    # past-oracle-scale seam (cosine_neardup_pairs doctrine): when the
-    # caller declares the corpus size and it exceeds exact_max_rows,
-    # each iteration's partials come from one Arrow-batched matmul
-    # instead of the k*dim _cell_column tree — the tree's per-job
-    # ANALYSIS cost (k=400 x dim=64 = 25,600 terms, re-analyzed every
-    # iteration because the centroid literals change) dominated the
-    # sf1 fit. Value-parity modulo float sum order, which the
-    # round-half-away at 6/12 dp collapses exactly as it
-    # already must for Spark's own nondeterministic partial-agg order
-    # (TestKmeansNpSeam pins centroid equality on the fixtures).
-    use_np = n_rows is not None and n_rows > exact_max_rows
     for _ in range(iters):
-        if use_np:
+        if _past_oracle(n_rows):
             sums = (
                 _fit_partials_np(corpus, centroids)
                 .groupBy("cell", "dim")
@@ -764,31 +707,23 @@ def kmeans_fit(
 
 def _fine_members_arrow(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     """assign_fine's winner selection as a per-cell cogrouped numpy
-    matmul — ivf2_fit's past-oracle-scale branch (r14 opt round; the
-    cosine_neardup_pairs/_ivf_topk_arrow seam applied to the fine
-    FIT). Scoring and tie semantics replicate the exact path:
-    key = round(dot(v, c) / |c|, round_dp) with the |c| = 0 -> 1
-    guard; winner = max key with ties to the LOWEST fine id (argmax's
-    first-max IS the fine-asc rule after sorting centroids by fine);
-    NaN keys rank greatest (Spark's NaN ordering, encoded as +inf);
-    invalid pairs (NULL vector / length mismatch -> NULL key on the
-    exact path) rank last (encoded as -inf, so an all-invalid row
-    takes the lowest fine — exactly where the exact path's all-NULL
-    desc ordering puts it). Output is (vec_id, cell, fine) ONLY — the
-    caller rejoins the member vectors JVM-side, because a vector
-    element routed back THROUGH Arrow loses NaN-vs-NULL identity
-    (pandas NaN-as-missing), which would silently clean the
-    NaN-poisoned means the exact path produces. Seam caveats (same
-    class as _ivf_topk_arrow, measure-zero and absent at
-    driver-checked scales, which stay on the exact path): np.round
-    ties half-even; BLAS summation order differs in the last ulp
-    under the pre-rank rounding; a true ±inf key is indistinguishable
-    from the NaN/invalid sentinels; scoring reads the vectors as
-    float64 with NULL elements arriving as NaN."""
+    matmul — the seam of ivf2_fit and ivf2_assign. Scoring and tie
+    semantics replicate the exact path: key = _cell_keys (one matmul
+    per centroid length); winner = max key with ties to the LOWEST fine
+    id (argmax's first max after sorting centroids by fine); NaN keys
+    rank greatest (Spark's NaN ordering, encoded as +inf); invalid pairs
+    (NULL vector or centroid, length mismatch -> NULL key on the exact
+    path) rank last (encoded as -inf, so an all-invalid row takes the
+    lowest fine — exactly where the exact path's all-NULL desc ordering
+    puts it). Output is (vec_id, cell, fine) ONLY — the caller rejoins
+    the member vectors JVM-side, because a vector element routed back
+    THROUGH Arrow loses NaN-vs-NULL identity (pandas NaN-as-missing),
+    which would silently clean the NaN-poisoned means the exact path
+    produces. A true ±inf key is indistinguishable from the NaN/invalid
+    sentinels."""
     import numpy as np
     import pandas as pd
 
-    dp = 6
     mem = assigned.select(
         "vec_id", "cell", F.col("embedding").cast("array<double>").alias("_v")
     )
@@ -803,45 +738,18 @@ def _fine_members_arrow(assigned: DataFrame, cents: DataFrame) -> DataFrame:
         if len(mdf) == 0 or len(cdf) == 0:
             return pd.DataFrame({"vec_id": [], "cell": [], "fine": []})
         cdf = cdf.sort_values("fine")
-        fine_ids = cdf["fine"].to_numpy()
-        cvals = list(cdf["_c"])
         mvals = list(mdf["_v"])
-        K = np.full((len(mvals), len(cvals)), -np.inf)
-        dims = {len(c) for c in cvals if c is not None}
-        if len(dims) == 1 and all(c is not None for c in cvals):
-            # uniform-dim centroid table (every real fit): one matmul
-            dim = dims.pop()
-            C = np.stack([np.asarray(c, dtype=np.float64) for c in cvals])
-            norms = np.linalg.norm(C, axis=1)
-            norms[norms == 0.0] = 1.0
-            ok = [
-                i for i, v in enumerate(mvals)
-                if v is not None and len(v) == dim
-            ]
-            if ok:
-                V = np.stack(
-                    [np.asarray(mvals[i], dtype=np.float64) for i in ok]
-                )
-                K[ok, :] = np.round((V @ C.T) / norms, dp)
-        else:
-            # ragged/NULL centroids — per-pair slow path, same key rule
-            for j, c in enumerate(cvals):
-                if c is None:
-                    continue
-                ca = np.asarray(c, dtype=np.float64)
-                nrm = float(np.sqrt((ca * ca).sum())) or 1.0
-                for i, v in enumerate(mvals):
-                    if v is None or len(v) != len(ca):
-                        continue
-                    va = np.asarray(v, dtype=np.float64)
-                    K[i, j] = np.round(float(va @ ca) / nrm, dp)
-        K = np.where(np.isnan(K), np.inf, K)
-        best = K.argmax(axis=1)
+        K = np.full((len(mvals), len(cdf)), -np.inf)
+        for cj, C in _by_length(list(cdf["_c"])):
+            mi, V = _stack_valid(mvals, C.shape[1])
+            if V is not None:
+                K[np.ix_(mi, cj)] = _cell_keys(V, C)
+        best = np.where(np.isnan(K), np.inf, K).argmax(axis=1)
         return pd.DataFrame(
             {
                 "vec_id": mdf["vec_id"].to_numpy(),
                 "cell": mdf["cell"].to_numpy(),
-                "fine": fine_ids[best].astype("int32"),
+                "fine": cdf["fine"].to_numpy()[best].astype("int32"),
             }
         )
 
@@ -949,19 +857,10 @@ def ivf2_fit(
             .select("vec_id", "cell", "fine", "embedding")
         )
 
-    # Past-oracle-scale dispatch (r14 opt round, the ivf_topk seam
-    # applied to the fit): the exact join+window path's per-pair HOF
-    # dot re-enters the interpreter per element — ~2M lambda
-    # re-entries per iteration at sf0.1 — so corpora the driver
-    # declares past oracle scale (n_rows > 1000, ivf_topk's
-    # exact_max_rows default) score each cell as one numpy matmul.
-    # Driver-checked scales (sf <= 0.01, n <= 1000) stay on the
-    # bit-exact Catalyst path; parity is pinned by
-    # TestIvf2::test_fit_arrow_seam_parity incl. NULL/short/NaN
-    # vector edges.
-    past_oracle = n_rows is not None and int(n_rows) > 1000
+    # size-dispatched (module docstring): the exact join+window path's
+    # per-pair HOF dot made ~2M lambda re-entries per round at sf0.1
     for _ in range(iters):
-        if past_oracle:
+        if _past_oracle(n_rows):
             # winners from the matmul seam, vectors rejoined JVM-side
             # (never routed through Arrow — see _fine_members_arrow)
             members = _fine_members_arrow(
@@ -1035,14 +934,12 @@ def ivf2_assign(
     # (the repo's standing crossJoin pattern) — NOT a global window,
     # which would funnel every row through one partition
     k2n = F.broadcast(fine.agg((F.max("fine") + 1).alias("_k2n")))
-    # Past-oracle-scale dispatch (r14 opt round, same seam as
-    # ivf2_fit): winners from the per-cell matmul, LEFT-rejoined from
-    # `assigned` so a vector whose coarse cell has no fine centroids
-    # keeps its row with the fine = -1 / bucket = -1 sentinel (the
-    # cogroup emits winners only for cells with centroids). Parity
-    # incl. the empty-cell sentinel is pinned by
-    # TestIvf2::test_assign_arrow_seam_parity.
-    if n_rows is not None and int(n_rows) > 1000:
+    # size-dispatched (module docstring): winners from the per-cell
+    # matmul, LEFT-rejoined from `assigned` so a vector whose coarse
+    # cell has no fine centroids keeps its row with the fine = -1 /
+    # bucket = -1 sentinel (the cogroup emits winners only for cells
+    # with centroids)
+    if _past_oracle(n_rows):
         winners = _fine_members_arrow(assigned, fine)
         return (
             assigned.join(winners.select("vec_id", "fine"), "vec_id", "left")
@@ -1392,7 +1289,6 @@ def semantic_decontamination_lsh(train: DataFrame, test: DataFrame) -> DataFrame
 def semdedup(
     df: DataFrame,
     centroids: list[list[float]],
-    exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv 2303.09540 — public technique):
@@ -1423,50 +1319,28 @@ def semdedup(
     never injects an isnotnull that would clone the argmax tree (see
     assign_cells).
 
-    Size-dispatched like cosine_neardup_pairs: corpora past
-    ``exact_max_rows`` run the within-cell pair scan as ONE numpy
-    matmul per cell (applyInPandas; same rounded-similarity >=
-    threshold rule, any-smaller-id reduction on the upper triangle) —
-    the interpreted per-pair HOF dot was 44 s at the sf1 soak. The
-    Catalyst path below stays the bit-exact oracle path at every
-    driver-checked scale.
-
-    ``n_rows`` short-circuits the dispatch count (same contract as
-    cosine_neardup_pairs): pass it when the input is an expensive
-    uncached pipeline so the upstream plan is not executed twice."""
-    n = df.count() if n_rows is None else int(n_rows)
-    if n > exact_max_rows:
+    Size-dispatched on ``n_rows`` (module docstring): the seam runs the
+    within-cell pair scan as one matmul per cell (applyInPandas; same
+    rounded-similarity >= threshold rule, any-smaller-id reduction on
+    the upper triangle) — the interpreted per-pair HOF dot was 44 s at
+    the sf1 soak."""
+    if _past_oracle(n_rows):
         import numpy as np
         import pandas as pd
 
-        thr = 0.4
-        dp = 6
-        vcc = "embedding"  # assign_cells renames the id column to vec_id
-
         def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf["vec_id"].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
+            pdf = pdf.sort_values("vec_id")
             # malformed (null/ragged) vectors can't be near-duplicates:
             # they stay kept=1, exactly like the Catalyst path (which
             # excludes the -1 sentinel cell from pairing)
-            kept = np.ones(len(ids), dtype=np.int32)
-            if pdf["cell"].iloc[0] == -1:
-                return pd.DataFrame(
-                    {"vec_id": ids, "cell": -1, "kept": kept}
-                )
-            ok, V = _stack_valid(list(pdf[vcc].iloc[order]), dim=len(centroids[0]))
-            if ok:
-                U = _unit_rows(V)
-                R = np.round(U @ U.T, dp)
-                dropped = np.triu(R >= thr, k=1).any(axis=0)
-                kept[np.asarray(ok)] = (~dropped).astype(np.int32)
+            kept = np.ones(len(pdf), dtype=np.int32)
+            cell = pdf["cell"].iloc[0]
+            ok, V = _stack_valid(list(pdf["embedding"]), len(centroids[0]))
+            if cell != -1 and V is not None:
+                near = np.triu(_round6(_unit_gram(V)) >= 0.4, k=1)
+                kept[ok] = ~near.any(axis=0)
             return pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "cell": pdf["cell"].iloc[0],
-                    "kept": kept,
-                }
+                {"vec_id": pdf["vec_id"].to_numpy(), "cell": cell, "kept": kept}
             )
 
         assigned = assign_cells(df, centroids,
@@ -1481,7 +1355,7 @@ def semdedup(
     # pathology test_cell_argmax_never_cloned_into_filters pins. The
     # barrier's cost: Generate can't split the expression, so this
     # branch evaluates the argmax interpreted at every size (see
-    # _cell_expr) — bounded by exact_max_rows, where it's milliseconds
+    # _cell_expr) — bounded by EXACT_MAX_ROWS, where it's milliseconds
     v = ensure_parallel(df).select(
         F.col("vec_id").alias("vec_id"),
         F.col("embedding").alias("vec"),
@@ -1535,49 +1409,37 @@ def semdedup(
 
 def cosine_neardup_pairs(
     df: DataFrame,
-    exact_max_rows: int = 1000,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Exact within-cell cosine near-duplicate pairs
     (vec_a < vec_b, cos >= 0.4) — the audit-path baseline whose
     scale companions are semdedup / LSH buckets / MinHash.
 
-    Size-dispatched like _cell_column:
+    Size-dispatched on ``n_rows`` (module docstring):
 
-    - corpus <= ``exact_max_rows``: the pure-Catalyst shape (norms per
-      side, per-pair HOF dot behind a single-element Generate barrier
-      so pushdown cannot clone the dot into the Filter). Bit-exact vs
-      the sequential-summation SQL oracle — the driver-checked path.
-    - larger: applyInPandas per cell — unit-normalize the cell's
-      matrix once, ONE numpy matmul (U @ U.T) produces every pairwise
-      cosine in the cell, upper-triangle mask + threshold, only
-      surviving pairs cross back over Arrow. The interpreted per-pair
-      HOF dot was the sf1 soak's worst constant (162 s for ~4M pairs);
-      the matmul computes the same pairs in one BLAS call per cell.
-      BLAS summation order differs from sequential in the last ulp;
-      outputs are rounded at 6 dp like the exact path (an
-      exact half-boundary at 6 dp is measure-zero), and path parity is
-      pinned in tests. Cell size must fit one task (c x dim floats +
-      c x c scores) — the quantizer occupancy bounds it by design.
+    - exact: the pure-Catalyst shape (norms per side, per-pair HOF dot
+      behind a single-element Generate barrier so pushdown cannot clone
+      the dot into the Filter). Bit-exact vs the sequential-summation
+      SQL oracle.
+    - seam: applyInPandas per cell — one matmul of the cell's guarded
+      unit rows (_unit_gram) produces every pairwise cosine, then the
+      upper-triangle mask and threshold, so only surviving pairs cross
+      back over Arrow. The interpreted per-pair HOF dot was the sf1
+      soak's worst constant (162 s for ~4M pairs). Cell size must fit
+      one task (c x dim floats + c x c scores) — the quantizer
+      occupancy bounds it by design.
 
     Degenerate inputs behave identically on BOTH branches: zero-norm
     vectors divide by the |0| -> 1 guard (cos 0, never NaN — Spark
     orders NaN greatest so an unguarded 0/0 would pass the threshold),
-    NULL-cell rows pair with nothing (the fast path filters them to
-    mirror the equi-join's null semantics), and RAGGED cells pair each
-    equal-length subgroup separately (zip_with pads the shorter vector
-    with NULL -> null dot -> the cross-length pair never passes the
-    Catalyst filter; the fast path runs one matmul per length group
-    instead of inferring a single modal dim, so off-modal equal-length
-    pairs survive on both sides of the dispatch boundary).
-
-    ``n_rows`` short-circuits the dispatch count: pass the known corpus
-    size when the input is an expensive uncached pipeline, otherwise
-    ``df.count()`` executes the whole upstream plan once just to pick a
-    branch and again for the result.
+    NULL-cell rows pair with nothing (the seam filters them to mirror
+    the equi-join's null semantics), and RAGGED cells pair each
+    equal-length subgroup separately (_by_length). EMPTY vectors are
+    their own length-0 subgroup: the Catalyst path scores empty-vs-empty
+    as cos 0.0 (zip_with over nothing -> the 0.0 aggregate seed, |0| ->
+    1 norm guard), and so does the (k, 0) matmul.
     """
-    n = df.count() if n_rows is None else int(n_rows)
-    if n <= exact_max_rows:
+    if not _past_oracle(n_rows):
         a = df.select(
             F.col("vec_id").alias("vec_a"),
             F.col("label").alias("_cell"),
@@ -1604,40 +1466,22 @@ def cosine_neardup_pairs(
     import numpy as np
     import pandas as pd
 
-    thr = 0.4
-    dp = 6
-
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vals = list(pdf["embedding"].iloc[order])
-        # one matmul per equal-length subgroup: cross-length pairs have
-        # a null dot on the Catalyst path (zip_with null padding), so
-        # only same-length pairs can ever match — null vectors produce
-        # no pairs at all. EMPTY vectors are their own length-0
-        # subgroup: the Catalyst path scores empty-vs-empty as cos 0.0
-        # (zip_with over nothing -> the 0.0 aggregate seed, |0| -> 1
-        # norm guard), so for threshold <= 0 they DO pair — the (k,0)
-        # matmul below yields the same zeros, keeping both dispatch
-        # branches identical on this degenerate shape too
-        lengths = sorted({len(v) for v in vals if v is not None})
         outs = []
-        for d in lengths:
-            ok, V = _stack_valid(vals, dim=d)
+        for ok, V in _by_length(list(pdf["embedding"])):
             if len(ok) < 2:
                 continue
-            gids = ids[np.asarray(ok)]
-            U = _unit_rows(V)
-            G = U @ U.T
-            iu, ju = np.triu_indices(len(gids), k=1)
-            keep = G[iu, ju] >= thr
+            iu, ju = np.triu_indices(len(ok), k=1)
+            g = _unit_gram(V)[iu, ju]
+            keep = g >= 0.4
             outs.append(
                 pd.DataFrame(
                     {
-                        "vec_a": gids[iu[keep]],
-                        "vec_b": gids[ju[keep]],
-                        "cos_sim": np.round(G[iu, ju][keep], dp),
+                        "vec_a": ids[ok[iu[keep]]],
+                        "vec_b": ids[ok[ju[keep]]],
+                        "cos_sim": _round6(g[keep]),
                     }
                 )
             )

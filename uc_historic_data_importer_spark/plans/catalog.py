@@ -58,6 +58,15 @@ class QuerySpec:
 _SCHEMA_MEMO: dict = {}
 
 
+def table_key(sf_dir: str, name: str) -> tuple:
+    """(path, st_mtime_ns, st_size) of the test table ``name``: the key
+    of every memo derived from one table, so a table rewritten in place
+    under the same sf_dir misses the memo instead of reading stale."""
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    return (path, st.st_mtime_ns, st.st_size)
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan of the test table ``name`` under ``sf_dir``. Its naive
     TIMESTAMP(MICROS) columns read as TIMESTAMP under
@@ -65,9 +74,8 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     functions themselves are side-effect-free — sessions built by
     get_spark are prepared already, and the driver-contract wrapper in
     __spark_entry__ prepares external sessions once."""
-    path = f"{sf_dir}/{name}.parquet"
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
+    key = table_key(sf_dir, name)
+    path = key[0]
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         df = spark.read.parquet(path)

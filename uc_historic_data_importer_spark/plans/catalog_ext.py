@@ -29,7 +29,7 @@ from uc_historic_data_importer_spark.operators import (
     sketches,
     text,
 )
-from uc_historic_data_importer_spark.plans.catalog import register, t
+from uc_historic_data_importer_spark.plans.catalog import register, t, table_key
 
 # shared DuckDB fragments ----------------------------------------------------
 
@@ -246,7 +246,7 @@ _NUM_PERMS, _BANDS = dedup.NUM_PERMS, dedup.BANDS
 # ANN index artifacts (k-means centroids, PQ codebooks, query rows) are
 # build-time products, not per-query work: at 100 TB the codebooks are
 # fit once and reused by every search. Mirror that here — memoize fits
-# per (sf_dir, params) for the session so ann_pq_topk / ann_ivfpq_topk /
+# per (table file, params) for the session so ann_pq_topk / ann_ivfpq_topk /
 # ann_ivf_build share one fit instead of refitting per call. The fits
 # are deterministic (RNG-free, rounded), so memoization cannot change
 # any oracle hash.
@@ -500,6 +500,32 @@ _CURATION_FEAT_CTE = f"""
     )"""
 
 
+def _curation_stages(spark: SparkSession, sf_dir: str):
+    """The curation queries' shared Spark stages (_CURATION_FEAT_CTE's
+    twin): every document's (doc_id, source, n_tokens, stop_ratio, fp),
+    the documents passing the quality gate, and of those the lowest
+    doc_id per fingerprint."""
+    from pyspark.sql import Window
+
+    d = text.with_tokens(t(spark, sf_dir, "documents"))
+    stop_arr = F.array(*[F.lit(s) for s in text.STOPWORDS])
+    n_stop = F.size(F.filter("tokens", lambda w: F.array_contains(stop_arr, w)))
+    stop_ratio = n_stop / F.greatest(F.col("n_tokens"), F.lit(1))
+    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(F.col("tokens")))))
+    feat = d.select(
+        "doc_id", "source", "n_tokens",
+        stop_ratio.alias("stop_ratio"), fp.alias("fp"),
+    )
+    quality = feat.filter((F.col("n_tokens") >= 5) & (F.col("stop_ratio") <= 0.5))
+    w = Window.partitionBy("fp").orderBy("doc_id")
+    uniq = (
+        quality.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .drop("_rk")
+    )
+    return feat, quality, uniq
+
+
 @register(
     "corpus_curation",
     f"""{_CURATION_FEAT_CTE},
@@ -525,27 +551,7 @@ _CURATION_FEAT_CTE = f"""
     "the only shuffles are the fingerprint rank and the final rollup.",
 )
 def corpus_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents")
-    d = text.with_tokens(docs)
-    stop_arr = F.array(*[F.lit(s) for s in text.STOPWORDS])
-    n_stop = F.size(
-        F.filter("tokens", lambda w: F.array_contains(stop_arr, w))
-    )
-    stop_ratio = n_stop / F.greatest(F.col("n_tokens"), F.lit(1))
-    fp = F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(F.col("tokens"))))
-    )
-    kept = d.filter(
-        (F.col("n_tokens") >= 5) & (stop_ratio <= 0.5)
-    ).withColumn("fp", fp)
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    deduped = (
-        kept.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    _, _, deduped = _curation_stages(spark, sf_dir)
     labeled = sampling.split_assign(deduped)
     return labeled.groupBy("split", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1230,24 +1236,25 @@ def _ivf_cells_for(n: int) -> int:
     return max(4, -(-n // _IVF_OCC))
 
 
-_N_ROWS_CACHE: dict[str, int] = {}
+_N_ROWS_CACHE: dict[tuple, int] = {}
 
 
 def _embeddings_n_rows(sf_dir: str) -> int:
     """Row count of the embeddings table from the parquet FOOTER metadata
     (pyarrow, driver-side, zero Spark jobs) — the r6-verdict fix for
-    dispatch counts: semdedup/cosine_neardup_pairs' ``n_rows``
-    short-circuit and _ivf_cells_for's k selection need only the
-    corpus size, and a ``df.count()`` there executes the uncached
-    upstream plan once per call just to pick a branch. Memoized per
-    sf_dir; at 100 TB this is exactly the statistic the table catalog
+    dispatch counts: the size-dispatched similarity operators' ``n_rows``
+    and _ivf_cells_for's k selection need only the corpus size, and a
+    ``df.count()`` there executes the uncached upstream plan once per
+    call just to pick a branch. Memoized per table file (table_key); at
+    100 TB this is exactly the statistic the table catalog
     (metastore/Delta log) hands out for free."""
-    if sf_dir not in _N_ROWS_CACHE:
+    key = table_key(sf_dir, "embeddings")
+    if key not in _N_ROWS_CACHE:
         import os
 
         import pyarrow.parquet as pq
 
-        path = os.path.join(sf_dir, "embeddings.parquet")
+        path = key[0]
         if os.path.isdir(path):
             n = sum(
                 pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
@@ -1257,8 +1264,8 @@ def _embeddings_n_rows(sf_dir: str) -> int:
             )
         else:
             n = pq.ParquetFile(path).metadata.num_rows
-        _N_ROWS_CACHE[sf_dir] = n
-    return _N_ROWS_CACHE[sf_dir]
+        _N_ROWS_CACHE[key] = n
+    return _N_ROWS_CACHE[key]
 
 
 def _ivf_fit(spark: SparkSession, sf_dir: str):
@@ -1269,7 +1276,7 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
     n = _embeddings_n_rows(sf_dir)
     k_cells = _ivf_cells_for(n)
     cents = _memo(
-        ("kmeans_fit", sf_dir, k_cells, 2),
+        ("kmeans_fit", table_key(sf_dir, "embeddings"), k_cells, 2),
         lambda: similarity.kmeans_fit(emb, k=k_cells, iters=2, n_rows=n),
     )
     return emb, cents
@@ -1389,7 +1396,7 @@ def ann_ivf2_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(sf_dir)
     coarse = _memo(
-        ("kmeans_fit_k1", sf_dir),
+        ("kmeans_fit_k1", table_key(sf_dir, "embeddings")),
         lambda: similarity.kmeans_fit(emb, k=1, iters=0),
     )
     # one shared coarse pass for fit + assign (ivf2_fit's ``assigned``
@@ -1397,7 +1404,7 @@ def ann_ivf2_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # references a LogicalRDD instead of re-analyzing the assignment
     # tree — at 100 TB this is the persisted coarse-assignment table
     assigned_coarse = _memo(
-        ("ivf2_coarse_assigned_k1", sf_dir),
+        ("ivf2_coarse_assigned_k1", table_key(sf_dir, "embeddings")),
         lambda: similarity.assign_cells(
             emb, coarse, keep_cols=("embedding",), n_rows=n
         ).localCheckpoint(eager=False),
@@ -1537,7 +1544,7 @@ def ann_ivf2_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _embeddings_n_rows(sf_dir)
     k1 = _ivf2_k1_for(n)
     coarse = _memo(
-        ("kmeans_fit_ivf2_topk", sf_dir, k1),
+        ("kmeans_fit_ivf2_topk", table_key(sf_dir, "embeddings"), k1),
         lambda: similarity.kmeans_fit(emb, k=k1, iters=1, n_rows=n),
     )
     # ONE coarse pass shared by the fine fit and the final assignment
@@ -1547,13 +1554,13 @@ def ann_ivf2_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # At 100 TB this is the persisted coarse-assignment table both
     # stages would read anyway.
     assigned_coarse = _memo(
-        ("ivf2_coarse_assigned_topk", sf_dir, k1),
+        ("ivf2_coarse_assigned_topk", table_key(sf_dir, "embeddings"), k1),
         lambda: similarity.assign_cells(
             emb, coarse, keep_cols=("embedding",), n_rows=n
         ).localCheckpoint(eager=False),
     )
     fine = _memo(
-        ("ivf2_fine_topk", sf_dir, k1),
+        ("ivf2_fine_topk", table_key(sf_dir, "embeddings"), k1),
         lambda: similarity.ivf2_fit(
             emb, coarse, k2=_IVF2_TOPK_K2, iters=1,
             assigned=assigned_coarse, n_rows=n,
@@ -2380,13 +2387,15 @@ def _pq_oracle(topk: int = 10, same_cell_only: bool = False) -> str:
 def _pq_inputs(spark: SparkSession, sf_dir: str):
     """The PQ queries' shared inputs: the embeddings table, its PQ
     codebooks and the query row (vec_id 0) with its vector; the fit and
-    the row are memoized per sf_dir."""
+    the row are memoized per table file."""
     from uc_historic_data_importer_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings")
-    books = _memo(("pq_fit", sf_dir), lambda: pq.pq_fit(emb))
+    books = _memo(
+        ("pq_fit", table_key(sf_dir, "embeddings")), lambda: pq.pq_fit(emb)
+    )
     q_row = _memo(
-        ("qrow", sf_dir, 0),
+        ("qrow", table_key(sf_dir, "embeddings"), 0),
         lambda: emb.filter(F.col("vec_id") == 0).first(),
     )
     return emb, books, q_row, [float(x) for x in q_row["embedding"]]
@@ -2919,25 +2928,7 @@ def media_perceptual_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "joins on the doc key, not re-scans.",
 )
 def curation_funnel_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents")
-    d = text.with_tokens(docs)
-    stop_arr = F.array(*[F.lit(s) for s in text.STOPWORDS])
-    n_stop = F.size(F.filter("tokens", lambda w: F.array_contains(stop_arr, w)))
-    stop_ratio = n_stop / F.greatest(F.col("n_tokens"), F.lit(1))
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(F.col("tokens")))))
-    feat = d.select(
-        "doc_id", "source", "n_tokens",
-        stop_ratio.alias("stop_ratio"), fp.alias("fp"),
-    )
-    quality = feat.filter((F.col("n_tokens") >= 5) & (F.col("stop_ratio") <= 0.5))
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    uniq = (
-        quality.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    feat, quality, uniq = _curation_stages(spark, sf_dir)
     budgeted = sampling.token_budget_sample(uniq)
     q_ids = quality.select("doc_id", F.lit(1).alias("_q"))
     u_ids = uniq.select("doc_id", F.lit(1).alias("_u"))
@@ -3398,7 +3389,7 @@ def dedup_apply_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def segment_cleaned_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     bp = _memo(
-        ("boilerplate", sf_dir, _SEG_K, 3, 5000),
+        ("boilerplate", table_key(sf_dir, "documents"), _SEG_K, 3, 5000),
         lambda: [
             r["segment"]
             for r in text.boilerplate_segments(docs, top_n=5000).collect()
