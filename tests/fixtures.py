@@ -8,6 +8,7 @@ import base64
 import gzip
 import json
 import os
+import uuid
 
 
 def base_record(k: int = 0, millis: int = 0) -> dict:
@@ -127,3 +128,17 @@ def write_encrypted_dump(directory: str, stem: str, lines: list[str], key: bytes
             "keyEncryptionKeyId": "kek", "encryptedEncryptionKey": "E",
             "initialisationVector": base64.b64encode(iv).decode(),
         }, fh)
+
+
+def count_jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran), counted by job group. The
+    enclosing group is restored afterwards, so counts nest: an outer count
+    leaves out the jobs of the counts inside it."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id") or ""
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(outer, "counted" if outer else "")

@@ -50,7 +50,15 @@ lines (docstrings excepted) are AST-identical, or when two runs of 3 or
 more consecutive statements (in any block, 120 or more AST nodes) are
 identical after renaming the enclosing function's locals and every
 lambda or nested-function argument by order of first use. It has no
-allowlist: a copy becomes one definition both sites call or read."""
+allowlist: a copy becomes one definition both sites call or read.
+
+The fifth audit checks the Python boundary: the package crosses into
+Python through Arrow (``mapInArrow``, Arrow UDFs) only. It fails on any
+``.rdd`` attribute in the package, which would pickle every row between
+the JVM and a Python worker, except the partition count
+``frames.ensure_parallel`` reads (``df.rdd.getNumPartitions()``, which
+moves no rows). A call ``.rdd()`` is a py4j method of a JVM object, not
+the DataFrame property, and is not counted."""
 
 from __future__ import annotations
 
@@ -701,4 +709,37 @@ def test_package_defines_each_piece_once():
         f"{len(dups)} groups of copied function definitions or multi-line "
         f"literals (give each one definition that every site calls or "
         f"reads): {dups}"
+    )
+
+
+def rdd_accesses() -> list[str]:
+    """``module:line`` of every ``.rdd`` attribute (not a call) in the
+    package other than ``frames.ensure_parallel``'s
+    ``.rdd.getNumPartitions()``."""
+    out = []
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, PKG)
+        tree = _parse(path)
+        allowed = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        allowed |= {
+            id(n.value)
+            for fn in tree.body
+            if rel == os.path.join("operators", "frames.py")
+            and isinstance(fn, ast.FunctionDef)
+            and fn.name == "ensure_parallel"
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Attribute) and n.attr == "getNumPartitions"
+        }
+        out += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr == "rdd" and id(n) not in allowed
+        ]
+    return out
+
+
+def test_package_crosses_into_python_through_arrow_only():
+    assert not rdd_accesses(), (
+        "row-pickling .rdd access (use mapInArrow, as sinks._write_partitions "
+        f"does): {rdd_accesses()}"
     )

@@ -100,6 +100,28 @@ def test_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
     assert sorted(tuple(r) for r in df.collect()) == [(1, 7), (2, 8)]
 
 
+def test_rewritten_table_releases_its_checkpointed_value(spark, tmp_path):
+    """A localCheckpointed frame memoized for a table (the IVF2 coarse
+    assignments are one) is released when a rewrite of the table
+    replaces it: a session that rewrites a table keeps one checkpoint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from uc_historic_data_importer_spark.plans.catalog import file_memo, t
+
+    sf_dir, path = str(tmp_path), str(tmp_path / "events.parquet")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    for n in (2, 3):
+        pq.write_table(pa.table({"event_id": list(range(n))}), path)
+        frame = file_memo(
+            sf_dir, "events", ("ids",),
+            lambda: t(spark, sf_dir, "events").localCheckpoint(eager=True),
+        )
+        assert frame.count() == n
+    assert cached().size() == before + 1
+
+
 def test_embeddings_rewritten_in_place_refresh_size_and_fit(spark, tmp_path):
     """The embeddings memos (the footer row count that picks a similarity
     operator's dispatch branch, and the quantizer fit) are keyed on the
@@ -109,6 +131,7 @@ def test_embeddings_rewritten_in_place_refresh_size_and_fit(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from uc_historic_data_importer_spark.plans import catalog
     from uc_historic_data_importer_spark.plans import catalog_ext as ce
 
     path = str(tmp_path / "embeddings.parquet")
@@ -131,3 +154,6 @@ def test_embeddings_rewritten_in_place_refresh_size_and_fit(spark, tmp_path):
     assert (n1, n2) == (4, 6)
     assert fit2 != fit1
     assert fit2[:2] == [[0.0, 1.0], [1.0, 0.0]]
+    # the rewrite replaced the table's entries instead of adding to them
+    held = [slot[1] for slot in catalog._FILE_MEMO if slot[0] == path]
+    assert sorted(held) == ["kmeans_fit", "n_rows", "schema"]

@@ -15,6 +15,7 @@ from tests.fixtures import (
     SKIP_EARLIER_THAN,
     SKIP_LATER_THAN,
     base_record,
+    count_jobs,
     variant_lines,
     write_dump_file,
     write_encrypted_dump,
@@ -288,6 +289,43 @@ def test_put_count_excludes_existing_and_reports_filtered_exists(spark):
     assert half.putable.count() == 3
 
 
+def test_mark_existing_null_keys_match_nothing(spark):
+    """F4 compares (table, key_hex, version) by SQL equality: a NULL on
+    either side matches nothing, duplicate snapshot cells mark a row
+    once, and only a DoNotFilter row becomes FilterExists."""
+    from uc_historic_data_importer_spark.operators import filters as Filt
+
+    keys = "table string, key_hex string, version long"
+    rows = [
+        ("t", "k1", 1, "DoNotFilter"),
+        ("t", "k1", 1, "FilterTooEarly"),
+        ("t", "k2", 2, "DoNotFilter"),
+        (None, "k3", 3, "DoNotFilter"),
+        ("t", None, 4, "DoNotFilter"),
+        ("t", "k5", None, "DoNotFilter"),
+        (None, None, None, "DoNotFilter"),
+    ]
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], f"id int, {keys}, filter_status string"
+    )
+    existing = spark.createDataFrame(
+        [("t", "k1", 1), ("t", "k1", 1), (None, "k3", 3), ("t", None, 4),
+         ("t", "k5", None), (None, None, None)],
+        keys,
+    )
+    out = Filt.mark_existing(df, existing)
+    assert sorted(out.columns) == sorted(df.columns)
+    assert sorted((r["id"], r["filter_status"]) for r in out.collect()) == [
+        (0, "FilterExists"),
+        (1, "FilterTooEarly"),
+        (2, "DoNotFilter"),
+        (3, "DoNotFilter"),
+        (4, "DoNotFilter"),
+        (5, "DoNotFilter"),
+        (6, "DoNotFilter"),
+    ]
+
+
 def test_unparseable_filter_bound_raises(spark):
     import pytest as _pytest
 
@@ -424,6 +462,8 @@ class TestPipelineSpineReviewFixes:
         result = P.process_lines(lines, P.PipelineConfig(), persist=True)
         plan = result.putable._jdf.queryExecution().toString()
         assert "InMemoryRelation" in plan  # the normalize UDF runs once
+        # nothing downstream reads the raw line, so the cache holds none
+        assert "raw_json" not in result.persisted.columns
         result.unpersist()
 
     def test_run_releases_persisted_frame(self, spark, tmp_path):
@@ -483,8 +523,13 @@ class TestPythonBoundaries:
         first.putable.select("table", "key_hex", "version").write.parquet(snap)
         existing = spark.read.parquet(snap)
         rerun = process_lines(lines, _cfg(), existing=existing)
-        assert re.findall(r"\w*Join\b", _physical_plan(first.counts)) == []
-        assert len(re.findall(r"\w*Join\b", _physical_plan(rerun.counts))) == 1
+        joins = lambda df: re.findall(r"^[\s:+-]*(\w*Join)\b", _physical_plan(df), re.M)  # noqa: E731
+        assert joins(first.counts) == []
+        assert joins(rerun.counts) == ["BroadcastHashJoin"]
+        # F4 is an existence join: each row comes out once, so the
+        # snapshot is not deduplicated by an aggregate first
+        plan = _physical_plan(rerun.counts)
+        assert "ExistenceJoin" in plan and plan.count("HashAggregate") == 2, plan
         totals = rerun.counts.agg(
             F.sum("put_count").alias("put"), F.sum("filtered_exists").alias("exists")
         ).first()
@@ -564,6 +609,43 @@ class TestPythonBoundaries:
             assert plan.count("MapInArrow") == 1, plan
             for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
                 assert node not in plan, plan
+
+    def test_run_jobs_per_sink(self, spark, enc_source, enc_snapshot, tmp_path, monkeypatch):
+        """One run() over encrypted dumps with a snapshot runs 7 Spark
+        jobs: 3 in the KV sink, 2 in the manifest sink (its shuffle and
+        its writer) and 2 for the counts. Neither the decrypt tasks nor
+        the exists check adds a job of its own."""
+        from uc_historic_data_importer_spark import sinks
+
+        jobs = {}
+
+        def counted(name):
+            sink = getattr(sinks, name)
+
+            def wrapper(*args):
+                out, jobs[name] = count_jobs(spark, lambda: sink(*args))
+                return out
+
+            return wrapper
+
+        for name in ("kv_sink", "manifest_sink"):
+            monkeypatch.setattr(sinks, name, counted(name))
+        _, jobs["counts"] = count_jobs(spark, lambda: run(
+            spark, enc_source, _cfg(encrypt=True, data_key_b64=KEY_B64),
+            kv_path=str(tmp_path / "kv"), manifest_dir=str(tmp_path / "mf"),
+            existing=enc_snapshot,
+        ))
+        assert jobs == {"kv_sink": 3, "manifest_sink": 2, "counts": 2}
+
+    def test_fused_stage_caches_no_raw_line(self, enc_source):
+        """The decrypt stage emits ``norm`` in place of the raw line, so
+        the persisted frame does not hold the decompressed dump."""
+        assert "raw_json" not in enc_source._normalized().columns
+        result = process_lines(enc_source, _cfg(), persist=True)
+        try:
+            assert "raw_json" not in result.persisted.columns
+        finally:
+            result.unpersist()
 
     def test_fused_source_matches_the_frame_path(self, spark, enc_source, enc_snapshot, tmp_path):
         """The source frame, normalized in its decrypt stage, and the same

@@ -10,7 +10,7 @@ import uuid
 
 import pytest
 
-from tests.fixtures import write_encrypted_dump
+from tests.fixtures import count_jobs as _jobs, write_encrypted_dump
 from uc_historic_data_importer_spark.sources import listing as L
 from uc_historic_data_importer_spark.sources import metadata as M
 from uc_historic_data_importer_spark.sources.crypto_source import (
@@ -33,17 +33,6 @@ def _drain(lines, via: str) -> None:
         from uc_historic_data_importer_spark.plans import pipeline as P
 
         P.process_lines(lines, P.PipelineConfig()).counts.collect()
-
-
-def _jobs(spark, fn):
-    """(fn(), the number of Spark jobs it ran), counted by job group."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup("", "")
 
 
 def _encrypt(data: bytes, key: bytes, iv: bytes) -> bytes:
@@ -515,6 +504,18 @@ class TestPythonBoundaries:
         tasks, per_file = self._tasks(lines)
         assert tasks == [["db.c.0001.json.gz.enc"], sorted(set(sizes) - {"db.c.0001.json.gz.enc"})]
         assert sorted(per_file.values()) == [5] * 6 + [2000]
+
+    def test_decrypt_tasks_need_no_shuffle(self, spark, tree):
+        """Each decrypt task is one id of spark.range, alone in its
+        partition, so no exchange places the tasks; with no file rows
+        the stage is an empty frame."""
+        pairs, keys = self._dumps(spark, tree, [5] * 8)
+        lines = read_encrypted_jsonl(pairs, keys)
+        for frame in (lines, lines._normalized()):
+            plan = frame._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+        empty = read_encrypted_jsonl(pairs.filter("false"), keys, n_files=0)
+        assert empty.collect() == [] and empty._normalized().collect() == []
 
     @pytest.mark.parametrize("layout", ["local", "rows", "shuffled", "one_partition"])
     def test_every_file_lands_in_one_task(self, spark, tree, layout):

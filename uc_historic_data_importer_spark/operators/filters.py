@@ -3,8 +3,8 @@ one join.
 
 The reference applies these per record / per batch with RPCs
 (FilterServiceImpl.kt:15-37, HbaseClient.kt:43-52); here they are
-declarative predicates Catalyst can push down, and the exists-check is a
-left join against the deduplicated sink snapshot that marks each row's
+declarative predicates Catalyst can push down, and the exists-check is an
+existence join against the sink snapshot that marks each row's
 status — the scalable form of the batched existsAll GETs (never per-row
 RPC; at 100 TB AQE picks broadcast vs shuffle side automatically).
 """
@@ -93,21 +93,24 @@ def mark_existing(df: DataFrame, existing: DataFrame) -> DataFrame:
     (only where the time-range filter passed them — the reference's
     exists check runs after the range gate, HBaseWriter.kt:549-552), so
     the F5 accounting can report filtered_exists and put_count matches
-    the rows actually delivered to the sink. The snapshot side IS
-    deduplicated here: a plain left join against duplicate keys would
-    multiply the left rows. Hash keys are uniformly distributed
-    (CRC-prefixed), so the join's shuffle is skew-free; when the
-    snapshot is small Catalyst broadcasts it."""
-    keys = ["table", "key_hex", "version"]
-    marker = (
-        existing.select(*keys).distinct().withColumn("_exists", F.lit(1))
-    )
-    out = df.join(marker, keys, "left")
+    the rows actually delivered to the sink. The check is one correlated
+    EXISTS, planned as an existence join: each row comes out once however
+    many snapshot cells match it, so the snapshot needs no dedup, and a
+    NULL key matches nothing. Hash keys are uniformly distributed
+    (CRC-prefixed), so a shuffled join is skew-free; when the snapshot is
+    small Catalyst broadcasts it. The aliases qualify the outer columns:
+    unqualified, ``Column.outer`` would resolve to the snapshot's own
+    same-named columns and mark every row."""
+    d, e = df.alias("_d"), existing.alias("_e")
+    exists = e.where(
+        (F.col("_e.table") == F.col("_d.table").outer())
+        & (F.col("_e.key_hex") == F.col("_d.key_hex").outer())
+        & (F.col("_e.version") == F.col("_d.version").outer())
+    ).exists()
     status = F.when(
-        (F.col("filter_status") == FILTER_NOT) & F.col("_exists").isNotNull(),
-        F.lit(FILTER_EXISTS),
+        (F.col("filter_status") == FILTER_NOT) & exists, F.lit(FILTER_EXISTS)
     ).otherwise(F.col("filter_status"))
-    return out.withColumn("filter_status", status).drop("_exists")
+    return d.withColumn("filter_status", status)
 
 
 def valid_records(df: DataFrame) -> DataFrame:

@@ -52,19 +52,34 @@ class QuerySpec:
 # metadata, no data, no plan), so every call still constructs a fresh
 # scan over the parquet files. The schema is a physical fact of the files
 # (current snapshots carry TIMESTAMP(MICROS), inferred identically under
-# any session conf), so the key is the table path plus its st_mtime_ns
-# and st_size: a table rewritten in place under the same sf_dir is
-# inferred again instead of being read through its old schema.
-_SCHEMA_MEMO: dict = {}
+# any session conf), so it is memoized per table file (file_memo), as
+# are catalog_ext's footer row count and build-time fits: a table
+# rewritten in place under the same sf_dir is inferred again instead of
+# being read through its old schema.
+_FILE_MEMO: dict[tuple, tuple] = {}
 
 
-def table_key(sf_dir: str, name: str) -> tuple:
-    """(path, st_mtime_ns, st_size) of the test table ``name``: the key
-    of every memo derived from one table, so a table rewritten in place
-    under the same sf_dir misses the memo instead of reading stale."""
+def file_memo(sf_dir: str, name: str, entry: tuple, build):
+    """``build()``'s value for ``entry`` over the test table ``name``,
+    memoized per table file. A table rewritten in place under the same
+    sf_dir misses the stamp instead of reading stale, and its new value
+    REPLACES the entry, so the memo holds one entry per (path, entry)
+    whatever the number of rewrites. A replaced localCheckpointed frame
+    is released: DataFrame.unpersist does not reach a checkpoint's
+    blocks, the RDD under its LogicalRDD does."""
     path = f"{sf_dir}/{name}.parquet"
     st = os.stat(path)
-    return (path, st.st_mtime_ns, st.st_size)
+    stamp, slot = (st.st_mtime_ns, st.st_size), (path, *entry)
+    held = _FILE_MEMO.get(slot)
+    if held is not None and held[0] == stamp:
+        return held[1]
+    if held is not None and isinstance(held[1], DataFrame):
+        plan = held[1]._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    value = build()
+    _FILE_MEMO[slot] = (stamp, value)
+    return value
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -74,13 +89,10 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     functions themselves are side-effect-free — sessions built by
     get_spark are prepared already, and the driver-contract wrapper in
     __spark_entry__ prepares external sessions once."""
-    key = table_key(sf_dir, name)
-    path = key[0]
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
+    path = f"{sf_dir}/{name}.parquet"
+    schema = file_memo(
+        sf_dir, name, ("schema",), lambda: spark.read.parquet(path).schema
+    )
     return spark.read.schema(schema).parquet(path)
 
 

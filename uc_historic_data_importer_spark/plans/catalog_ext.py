@@ -29,7 +29,7 @@ from uc_historic_data_importer_spark.operators import (
     sketches,
     text,
 )
-from uc_historic_data_importer_spark.plans.catalog import register, t, table_key
+from uc_historic_data_importer_spark.plans.catalog import file_memo, register, t
 
 # shared DuckDB fragments ----------------------------------------------------
 
@@ -249,14 +249,9 @@ _NUM_PERMS, _BANDS = dedup.NUM_PERMS, dedup.BANDS
 # per (table file, params) for the session so ann_pq_topk / ann_ivfpq_topk /
 # ann_ivf_build share one fit instead of refitting per call. The fits
 # are deterministic (RNG-free, rounded), so memoization cannot change
-# any oracle hash.
-_FIT_MEMO: dict[tuple, object] = {}
+# any oracle hash. catalog.file_memo holds them, and a rewritten table
+# replaces its fits.
 
-
-def _memo(key: tuple, thunk):
-    if key not in _FIT_MEMO:
-        _FIT_MEMO[key] = thunk()
-    return _FIT_MEMO[key]
 _ROWS = _NUM_PERMS // _BANDS
 
 
@@ -1236,36 +1231,31 @@ def _ivf_cells_for(n: int) -> int:
     return max(4, -(-n // _IVF_OCC))
 
 
-_N_ROWS_CACHE: dict[tuple, int] = {}
-
-
 def _embeddings_n_rows(sf_dir: str) -> int:
     """Row count of the embeddings table from the parquet FOOTER metadata
     (pyarrow, driver-side, zero Spark jobs) — the r6-verdict fix for
     dispatch counts: the size-dispatched similarity operators' ``n_rows``
     and _ivf_cells_for's k selection need only the corpus size, and a
     ``df.count()`` there executes the uncached upstream plan once per
-    call just to pick a branch. Memoized per table file (table_key); at
+    call just to pick a branch. Memoized per table file (file_memo); at
     100 TB this is exactly the statistic the table catalog
     (metastore/Delta log) hands out for free."""
-    key = table_key(sf_dir, "embeddings")
-    if key not in _N_ROWS_CACHE:
-        import os
+    import os
 
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        path = key[0]
+    def count() -> int:
+        path = f"{sf_dir}/embeddings.parquet"
         if os.path.isdir(path):
-            n = sum(
+            return sum(
                 pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
                 for dp, _dirs, files in os.walk(path)
                 for f in files
                 if f.endswith(".parquet")
             )
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
-        _N_ROWS_CACHE[key] = n
-    return _N_ROWS_CACHE[key]
+        return pq.ParquetFile(path).metadata.num_rows
+
+    return file_memo(sf_dir, "embeddings", ("n_rows",), count)
 
 
 def _ivf_fit(spark: SparkSession, sf_dir: str):
@@ -1275,8 +1265,8 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
     emb = t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(sf_dir)
     k_cells = _ivf_cells_for(n)
-    cents = _memo(
-        ("kmeans_fit", table_key(sf_dir, "embeddings"), k_cells, 2),
+    cents = file_memo(
+        sf_dir, "embeddings", ("kmeans_fit", k_cells, 2),
         lambda: similarity.kmeans_fit(emb, k=k_cells, iters=2, n_rows=n),
     )
     return emb, cents
@@ -1395,16 +1385,16 @@ _IVF2_K2 = 8
 def ann_ivf2_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(sf_dir)
-    coarse = _memo(
-        ("kmeans_fit_k1", table_key(sf_dir, "embeddings")),
+    coarse = file_memo(
+        sf_dir, "embeddings", ("kmeans_fit_k1",),
         lambda: similarity.kmeans_fit(emb, k=1, iters=0),
     )
     # one shared coarse pass for fit + assign (ivf2_fit's ``assigned``
     # contract); checkpointed so the fine fit's per-round planning
     # references a LogicalRDD instead of re-analyzing the assignment
     # tree — at 100 TB this is the persisted coarse-assignment table
-    assigned_coarse = _memo(
-        ("ivf2_coarse_assigned_k1", table_key(sf_dir, "embeddings")),
+    assigned_coarse = file_memo(
+        sf_dir, "embeddings", ("ivf2_coarse_assigned_k1",),
         lambda: similarity.assign_cells(
             emb, coarse, keep_cols=("embedding",), n_rows=n
         ).localCheckpoint(eager=False),
@@ -1543,8 +1533,8 @@ def ann_ivf2_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(sf_dir)
     k1 = _ivf2_k1_for(n)
-    coarse = _memo(
-        ("kmeans_fit_ivf2_topk", table_key(sf_dir, "embeddings"), k1),
+    coarse = file_memo(
+        sf_dir, "embeddings", ("kmeans_fit_ivf2_topk", k1),
         lambda: similarity.kmeans_fit(emb, k=k1, iters=1, n_rows=n),
     )
     # ONE coarse pass shared by the fine fit and the final assignment
@@ -1553,14 +1543,14 @@ def ann_ivf2_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in every stage; the checkpoint collapses it to a LogicalRDD).
     # At 100 TB this is the persisted coarse-assignment table both
     # stages would read anyway.
-    assigned_coarse = _memo(
-        ("ivf2_coarse_assigned_topk", table_key(sf_dir, "embeddings"), k1),
+    assigned_coarse = file_memo(
+        sf_dir, "embeddings", ("ivf2_coarse_assigned_topk", k1),
         lambda: similarity.assign_cells(
             emb, coarse, keep_cols=("embedding",), n_rows=n
         ).localCheckpoint(eager=False),
     )
-    fine = _memo(
-        ("ivf2_fine_topk", table_key(sf_dir, "embeddings"), k1),
+    fine = file_memo(
+        sf_dir, "embeddings", ("ivf2_fine_topk", k1),
         lambda: similarity.ivf2_fit(
             emb, coarse, k2=_IVF2_TOPK_K2, iters=1,
             assigned=assigned_coarse, n_rows=n,
@@ -2391,11 +2381,11 @@ def _pq_inputs(spark: SparkSession, sf_dir: str):
     from uc_historic_data_importer_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings")
-    books = _memo(
-        ("pq_fit", table_key(sf_dir, "embeddings")), lambda: pq.pq_fit(emb)
+    books = file_memo(
+        sf_dir, "embeddings", ("pq_fit",), lambda: pq.pq_fit(emb)
     )
-    q_row = _memo(
-        ("qrow", table_key(sf_dir, "embeddings"), 0),
+    q_row = file_memo(
+        sf_dir, "embeddings", ("qrow", 0),
         lambda: emb.filter(F.col("vec_id") == 0).first(),
     )
     return emb, books, q_row, [float(x) for x in q_row["embedding"]]
@@ -3388,8 +3378,8 @@ def dedup_apply_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def segment_cleaned_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    bp = _memo(
-        ("boilerplate", table_key(sf_dir, "documents"), _SEG_K, 3, 5000),
+    bp = file_memo(
+        sf_dir, "documents", ("boilerplate", _SEG_K, 3, 5000),
         lambda: [
             r["segment"]
             for r in text.boilerplate_segments(docs, top_n=5000).collect()

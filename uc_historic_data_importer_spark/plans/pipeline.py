@@ -3,18 +3,22 @@
 One declarative DAG per run:
 
     file pairs (S1-S4) -> metadata + keys (S6-S7)
-      -> decrypt/gunzip/split (S8-S10)  [or plain JSONL]
+      -> decrypt/gunzip/split (S8-S10), one task per packed group of
+         dumps over spark.range (no shuffle places them)  [or plain JSONL]
       -> normalize (T1-T7/T10/K1/K3) + body encrypt (T8), one Arrow
          pass; without encryption the body passes through
-      -> row key (K2) + table names (W4)
-      -> time-range status (F3) + exists status (F4) on every row
+      -> row key (K2) + table names (W4); the raw line is dropped
+      -> time-range status (F3) + exists status (F4, one existence
+         join against the snapshot, no dedup of it) on every row
       -> [persisted] -> envelope (T9) on the valid rows
-      -> KV sink (W2) + manifest sink (W5) + counts report (F5, one
-         aggregate over the persisted frame — no join-back)
+      -> KV sink (W2) + manifest sink (W5, its writer fed Arrow
+         batches) + counts report (F5, one aggregate over the
+         persisted frame — no join-back)
 
-For encrypted dumps Python runs once per record, one task per input
-file: the decrypt stage normalizes (and encrypts) each batch it emits.
-Any other lines frame goes through the normalize Arrow UDF.
+For encrypted dumps Python runs once per record, one task per packed
+group of input files: the decrypt stage normalizes (and encrypts) each
+batch it emits. Any other lines frame goes through the normalize Arrow
+UDF. Every Python boundary of the job is Arrow.
 
 Run modes (W7, HBaseWriter.kt:605-606): "import", "manifest",
 "import_and_manifest".
@@ -92,17 +96,17 @@ def process_lines(
     normalized inside its decrypt stage.
 
     ``persist=True`` caches the normalized frame (MEMORY_AND_DISK),
-    with its filter status and, under ``encrypt=True``, its ciphertext
-    and IVs: the per-record normalization UDF is the dominant pipeline
-    cost and every downstream branch (putable, manifest, counts)
-    derives from it — un-persisted, a run that materializes all of
-    them re-executes the UDF once per branch, and each re-execution
-    mints fresh IVs. The cached frame rides the result as
-    ``result.persisted``; whoever drives the actions owns calling
-    ``result.unpersist()`` when the last consumer has materialized
-    (run() does this in a finally — a library caller looping
-    process_lines(persist=True) must do the same or cached frames
-    accumulate until LRU eviction)."""
+    without the raw line, with its filter status and, under
+    ``encrypt=True``, its ciphertext and IVs: the per-record
+    normalization UDF is the dominant pipeline cost and every downstream
+    branch (putable, manifest, counts) derives from it — un-persisted, a
+    run that materializes all of them re-executes the UDF once per
+    branch, and each re-execution mints fresh IVs. The cached frame
+    rides the result as ``result.persisted``; whoever drives the actions
+    owns calling ``result.unpersist()`` when the last consumer has
+    materialized (run() does this in a finally — a library caller
+    looping process_lines(persist=True) must do the same or cached
+    frames accumulate until LRU eviction)."""
     if cfg.run_mode not in RUN_MODES:
         # same fail-loud stance as parse_filter_bound: a typo'd mode
         # ('manifests', 'Import') would otherwise silently behave as
@@ -119,7 +123,8 @@ def process_lines(
     key = cfg.data_key_b64 if cfg.encrypt else None
     fused = getattr(lines, "_normalized", None)
     norm = fused(key) if fused else normalize_records(lines, data_key_b64=key)
-    norm = with_table_names(flatten_normalized(norm))
+    # nothing downstream reads the raw line: keep it out of the cache
+    norm = with_table_names(flatten_normalized(norm)).drop("raw_json")
     # F3 + F4 as a status on EVERY row, so the F5 counts aggregate this
     # one frame. Invalid rows carry no version and no key, so they read
     # DoNotFilter and never match the snapshot; put_count also requires

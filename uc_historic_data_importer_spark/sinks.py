@@ -176,12 +176,9 @@ def _task_outputs(open_output):
     body's own exception. Only a fully written attempt reaches the
     ``os.replace`` renames; a crashed one leaves temp orphans that
     ``_clean_owned_dir`` removes on the next run."""
-    import uuid
-
     from pyspark import TaskContext
 
-    ctx = TaskContext.get()
-    attempt = str(ctx.taskAttemptId()) if ctx is not None else uuid.uuid4().hex
+    attempt = TaskContext.get().taskAttemptId()
     outputs: dict[str, tuple[str, tuple]] = {}  # final -> (temp, objects)
 
     def output(final: str) -> tuple:
@@ -206,13 +203,28 @@ def _task_outputs(open_output):
         os.replace(tmp, final)
 
 
+def _write_partitions(df: DataFrame, open_output, write) -> None:
+    """The one Python boundary of both file sinks: ``write(rows, output)``
+    runs once per partition of ``df`` under ``_task_outputs(open_output)``,
+    ``rows`` being the partition's rows as dicts read from mapInArrow's
+    Arrow batches (no row is pickled). The stage yields no rows."""
+
+    def task(batches):
+        with _task_outputs(open_output) as output:
+            write((r for b in batches for r in b.to_pylist()), output)
+        yield from ()
+
+    df.mapInArrow(task, "written boolean").collect()
+
+
 def manifest_sink(df: DataFrame, out_dir: str) -> list[str]:
     """W5/W6: write one CSV per (db, uncoalesced collection, file number),
     named `db.<db>.<collection>-%06d.csv`.
 
     At the reference's own scale (thousands of input files, each modest),
     a per-file single-writer is correct and parallel across files: we
-    repartition by the file identity so each task writes its own manifest.
+    repartition by the file identity so each task writes its own manifest
+    from the Arrow batches of its partition (``_write_partitions``).
     Returns written file paths.
 
     Each file is written to an ATTEMPT-UNIQUE temp name and atomically
@@ -236,24 +248,22 @@ def manifest_sink(df: DataFrame, out_dir: str) -> list[str]:
     (see the module docstring's W6 note)."""
     os.makedirs(out_dir, exist_ok=True)
     _clean_owned_dir(out_dir, ".csv")
-    rows = manifest_lines(df)
 
-    def _write(partition_rows):
-        with _task_outputs(lambda tmp: (open(tmp, "w", encoding="utf-8"),)) as output:
-            for r in partition_rows:
-                name = f"db.{r['_db']}.{r['_uncoalesced_collection']}-{int(r['_file_number']):06d}.csv"
-                output(os.path.join(out_dir, name))[0].write(r["line"] + "\n")
-        return iter(())
+    def _write(rows, output):
+        for r in rows:
+            name = f"db.{r['_db']}.{r['_uncoalesced_collection']}-{int(r['_file_number']):06d}.csv"
+            output(os.path.join(out_dir, name))[0].write(r["line"] + "\n")
 
-    (
-        rows.repartition("_db", "_uncoalesced_collection", "_file_number")
+    _write_partitions(
+        manifest_lines(df)
+        .repartition("_db", "_uncoalesced_collection", "_file_number")
         # line order within each file matches the reference's sequential
         # writer (rows appended as the stream is read)
         .sortWithinPartitions(
             "_db", "_uncoalesced_collection", "_file_number", "_line_no"
-        )
-        .rdd.mapPartitions(_write)
-        .count()
+        ),
+        lambda tmp: (open(tmp, "w", encoding="utf-8"),),
+        _write,
     )
     return _owned_files(out_dir, ".csv")
 
@@ -420,7 +430,8 @@ def write_hfiles(
     the cells are the byte-pinned KeyValue wire layout
     (tests/test_sinks.py::TestKeyValueWireParity vs HbaseClient.kt:25-41).
     Each task streams its partition's already-CellComparator-sorted
-    cells straight into one file at O(block) memory — a region's HFile
+    cells, read as Arrow batches (``_write_partitions``, shared with
+    manifest_sink), straight into one file at O(block) memory — a region's HFile
     costs one pass regardless of cell count, which is the property that
     makes this the 100 TB route (region servers never see the load; the
     reference's SKIP_WAL concession taken to its conclusion).
@@ -450,53 +461,44 @@ def write_hfiles(
     def open_hfile(tmp: str) -> tuple:
         fh = open(tmp, "wb")
         # writer first: HFileWriter.close writes the index and trailer
-        return HFileWriter(
-                        fh, compression=COMPRESSION_GZ
-                    ), fh
+        return HFileWriter(fh, compression=COMPRESSION_GZ), fh
 
-    def _write(partition_rows):
+    def _write(rows, output):
         from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        part = ctx.partitionId() if ctx is not None else 0
+        part = TaskContext.get().partitionId()
         writers: dict[tuple, HFileWriter] = {}
-        with _task_outputs(open_hfile) as output:
-            for r in partition_rows:
-                fam = r["family"]
-                tbl = r["table"]
-                # explicit-split layouts carry _region_id: one file PER
-                # REGION even when hash partitioning co-locates two
-                # regions in one task — a file must never span a region
-                # boundary (LoadIncrementalHFiles' split slow path)
-                region = r["_region_id"] if has_region else None
-                w = writers.get((tbl, fam, region))
-                if w is None:
-                    stem = (
-                        f"part-{part:05d}"
-                        if region is None
-                        else f"part-{part:05d}-r{int(region):05d}"
-                    )
-                    fam_dir = os.path.join(out_dir, tbl, fam)
-                    # executor-side mkdir at first use: a driver-side
-                    # distinct() over the table/family columns would
-                    # execute the entire upstream plan a second time
-                    os.makedirs(fam_dir, exist_ok=True)
-                    w = output(os.path.join(fam_dir, f"{stem}.hfile"))[0]
-                    writers[(tbl, fam, region)] = w
-                w.append_keyvalue(
-                    keyvalue_bytes(
-                        bytes(r["key"]),
-                        r["family"].encode(),
-                        r["qualifier"].encode(),
-                        int(r["version"]),
-                        r["body"].encode()
-                        if isinstance(r["body"], str)
-                        else bytes(r["body"]),
-                    )
+        for r in rows:
+            fam = r["family"]
+            tbl = r["table"]
+            # explicit-split layouts carry _region_id: one file PER
+            # REGION even when hash partitioning co-locates two
+            # regions in one task — a file must never span a region
+            # boundary (LoadIncrementalHFiles' split slow path)
+            region = r["_region_id"] if has_region else None
+            w = writers.get((tbl, fam, region))
+            if w is None:
+                stem = f"part-{part:05d}" + ("" if region is None else f"-r{int(region):05d}")
+                fam_dir = os.path.join(out_dir, tbl, fam)
+                # executor-side mkdir at first use: a driver-side
+                # distinct() over the table/family columns would
+                # execute the entire upstream plan a second time
+                os.makedirs(fam_dir, exist_ok=True)
+                w = output(os.path.join(fam_dir, f"{stem}.hfile"))[0]
+                writers[(tbl, fam, region)] = w
+            w.append_keyvalue(
+                keyvalue_bytes(
+                    bytes(r["key"]),
+                    fam.encode(),
+                    r["qualifier"].encode(),
+                    int(r["version"]),
+                    r["body"].encode()
+                    if isinstance(r["body"], str)
+                    else bytes(r["body"]),
                 )
-        return iter(())
+            )
 
-    layout.rdd.mapPartitions(_write).count()
+    _write_partitions(layout, open_hfile, _write)
     return _owned_files(out_dir, ".hfile")
 
 

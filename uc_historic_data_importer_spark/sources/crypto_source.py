@@ -3,8 +3,8 @@
 Reference pipeline per file (DecryptionProcessor.kt:26-44,
 DecompressionProcessor.kt:14-29, HBaseWriter line loop :127-286):
 AES/CTR/NoPadding decrypt -> gunzip -> line split, with line-resume on
-stream failure. In Spark this is ONE mapInArrow stage over the
-file-pair rows: each task decrypts + gunzips its files and emits
+stream failure. In Spark this is ONE mapInArrow stage, one task per
+group of files: each task decrypts + gunzips its files and emits
 (db, collection, file_number, line_no, raw_json) Arrow batches. Task
 retry makes the reference's line-resume machinery (S10) unnecessary — a
 failed task re-runs its whole file idempotently, and the sink dedups on
@@ -14,9 +14,9 @@ Files are packed into tasks the way Spark packs non-splittable files
 (FilePartition): a dump at least one split in size gets a task of its
 own, and small dumps share one, since every Python task pays a fixed
 start-up cost whatever it reads. Under the pipeline each task also
-normalizes its batches. Files are streamed in 64 KB chunks and emitted
-in batches of at most _EMIT_CHUNK lines — memory stays bounded
-regardless of file size.
+normalizes its batches and emits ``norm`` in place of the raw line.
+Files are streamed in 64 KB chunks and emitted in batches of at most
+_EMIT_CHUNK lines — memory stays bounded regardless of file size.
 """
 
 from __future__ import annotations
@@ -128,38 +128,36 @@ def _pack_files(sizes: list[int], max_partition_bytes: int, open_cost: int, para
     return tasks
 
 
-def _line_chunks(file_batches: Iterator[pa.RecordBatch], data_keys: dict, open_fn) -> Iterator:
-    """Decrypt -> gunzip -> split the object of each file row in the
-    batches' task rows, streamed as (file row, line_no of the first
-    line, up to _EMIT_CHUNK lines)."""
-    for batch in file_batches:
-        for row in batch.column("files").flatten().to_pylist():
-            path = row["data_path"]
-            kpair = (row["key_encryption_key_id"], row["encrypted_encryption_key"])
-            if kpair not in data_keys:
-                # a bare KeyError on the tuple would name no file
-                raise ValueError(
-                    f"no resolved data key for {path!r} (keyEncryptionKeyId={kpair[0]!r})"
-                    " — data_keys must come from resolve_data_keys on the SAME pairs frame"
-                )
-            try:
-                with open_fn(path) as fh:
-                    stream = decrypt_stream(fh, data_keys[kpair], row["initialisation_vector"])
-                    with gzip.open(stream, "rt", encoding="utf-8") as text:
-                        first, chunk = 1, []
-                        for line in text:
-                            chunk.append(line.rstrip("\n"))
-                            if len(chunk) == _EMIT_CHUNK:
-                                yield row, first, chunk
-                                first, chunk = first + _EMIT_CHUNK, []
-                        if chunk:
+def _line_chunks(files: Iterator[dict], data_keys: dict, open_fn) -> Iterator:
+    """Decrypt -> gunzip -> split the object of each file row, streamed
+    as (file row, line_no of the first line, up to _EMIT_CHUNK lines)."""
+    for row in files:
+        path = row["data_path"]
+        kpair = (row["key_encryption_key_id"], row["encrypted_encryption_key"])
+        if kpair not in data_keys:
+            # a bare KeyError on the tuple would name no file
+            raise ValueError(
+                f"no resolved data key for {path!r} (keyEncryptionKeyId={kpair[0]!r})"
+                " — data_keys must come from resolve_data_keys on the SAME pairs frame"
+            )
+        try:
+            with open_fn(path) as fh:
+                stream = decrypt_stream(fh, data_keys[kpair], row["initialisation_vector"])
+                with gzip.open(stream, "rt", encoding="utf-8") as text:
+                    first, chunk = 1, []
+                    for line in text:
+                        chunk.append(line.rstrip("\n"))
+                        if len(chunk) == _EMIT_CHUNK:
                             yield row, first, chunk
-            except _STREAM_ERRORS as exc:
-                # a truncated or corrupt object otherwise surfaces as a
-                # bare EOFError/zlib.error that names no file
-                raise ValueError(
-                    f"cannot read {path!r}: {type(exc).__name__}: {exc}"
-                ) from exc
+                            first, chunk = first + _EMIT_CHUNK, []
+                    if chunk:
+                        yield row, first, chunk
+        except _STREAM_ERRORS as exc:
+            # a truncated or corrupt object otherwise surfaces as a
+            # bare EOFError/zlib.error that names no file
+            raise ValueError(
+                f"cannot read {path!r}: {type(exc).__name__}: {exc}"
+            ) from exc
 
 
 def read_encrypted_jsonl(
@@ -182,13 +180,15 @@ def read_encrypted_jsonl(
     The file rows are read on the driver (no Spark job on
     parse_metadata's local frame) and packed into tasks by their
     ``data_size`` under the session's ``spark.sql.files.maxPartitionBytes``
-    and ``openCostInBytes`` (_pack_files). One row per task, holding
-    its files, goes through a range exchange on the task id, which
-    gives each task a partition of its own whatever the partitioning
-    of the file rows.
+    and ``openCostInBytes`` (_pack_files). The stage runs over
+    ``spark.range`` with one id per partition: task ``t`` reads the file
+    rows the stage closure holds for it, as it holds ``data_keys``
+    (PySpark broadcasts a closure above 1 MB). No shuffle places the
+    tasks, whatever the partitioning of the file rows.
 
-    The frame carries ``_normalized(data_key_b64)``, this stage plus a
-    ``norm`` column (transforms.normalize_batch), for process_lines."""
+    The frame carries ``_normalized(data_key_b64)``, this stage with a
+    ``norm`` column (transforms.normalize_batch) in place of
+    ``raw_json``, for process_lines."""
     open_fn = opener if opener is not None else _local_opener
     spark = pairs_with_meta.sparkSession
     cols = [
@@ -200,41 +200,31 @@ def read_encrypted_jsonl(
         "encrypted_encryption_key",
         "initialisation_vector",
     ]
-    selected = pairs_with_meta.select(*cols, "data_size")
-    rows = selected.collect()
+    rows = pairs_with_meta.select(*cols, "data_size").collect()
     if n_files is not None and n_files != len(rows):
         raise ValueError(f"n_files={n_files} but the pairs frame holds {len(rows)} files")
     conf = spark._jsparkSession.sessionState().conf()
-    tasks = _pack_files(
-        [r["data_size"] for r in rows],
-        conf.filesMaxPartitionBytes(),
-        conf.filesOpenCostInBytes(),
-        spark.sparkContext.defaultParallelism,
-    )
-    task_schema = T.StructType(
-        [
-            T.StructField("task", T.IntegerType()),
-            T.StructField("files", T.ArrayType(T.StructType(selected.schema.fields[:-1]))),
-        ]
-    )
-    table = pa.Table.from_pylist(
-        [
-            {"task": t, "files": [rows[i].asDict() for i in members]}
-            for t, members in enumerate(tasks)
-        ],
-        schema=to_arrow_schema(task_schema),
-    )
-    packed = spark.createDataFrame(table, task_schema).repartitionByRange(max(len(tasks), 1), "task")
+    tasks = [
+        [{c: rows[i][c] for c in cols} for i in members]
+        for members in _pack_files(
+            [r["data_size"] for r in rows],
+            conf.filesMaxPartitionBytes(),
+            conf.filesOpenCostInBytes(),
+            spark.sparkContext.defaultParallelism,
+        )
+    ]
 
     def stage(normalize: bool, data_key_b64: str | None = None) -> DataFrame:
         schema = LINES_SCHEMA
         if normalize:
             norm = KEYED_NORMALIZED_SCHEMA if data_key_b64 is not None else NORMALIZED_SCHEMA
-            schema = T.StructType(LINES_SCHEMA.fields + [T.StructField("norm", norm)])
+            fields = [f for f in LINES_SCHEMA.fields if f.name != "raw_json"]
+            schema = T.StructType(fields + [T.StructField("norm", norm)])
 
         def _expand(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             arrow_schema = to_arrow_schema(schema)
-            for row, first, chunk in _line_chunks(batches, data_keys, open_fn):
+            files = (f for b in batches for t in b.column("id").to_pylist() for f in tasks[t])
+            for row, first, chunk in _line_chunks(files, data_keys, open_fn):
                 n_lines = len(chunk)
                 per_line = {"line_no": range(first, first + n_lines), "raw_json": chunk}
                 arrays = [
@@ -249,7 +239,8 @@ def read_encrypted_jsonl(
                     arrays.append(normalize_batch(chunk, data_key_b64))
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-        return packed.mapInArrow(_expand, schema=schema)
+        # one task id per partition: task t reads tasks[t]
+        return spark.range(0, len(tasks), 1, max(len(tasks), 1)).mapInArrow(_expand, schema=schema)
 
     lines = stage(normalize=False)
     lines._normalized = lambda data_key_b64=None: stage(True, data_key_b64)
